@@ -430,14 +430,12 @@ class GeoFrame(val df: DataFrame, val meta: Option[LayerMeta] = None) {
     * right-side size (broadcast vs PBSM grid), see [[SpatialJoin.join]].
     * Column names come back prefixed l_/r_ (inner/outer; semi/anti return
     * the plain left schema). `joinType`: inner | left_outer | left_semi |
-    * left_anti — the layer's `id` column serves as the row tag for the
-    * left-preserving types, so nothing materializes.
+    * left_anti — the left-preserving types run in one pass, nothing
+    * materializes.
     */
   def spatialJoin(other: GeoFrame, predicate: String = "intersects",
-      cellSize: Double = 0.0, broadcastThreshold: Long = 10000L,
-      joinType: String = "inner"): DataFrame =
-    SpatialJoin.join(df, other.df, predicate, cellSize, broadcastThreshold,
-      joinType, if (df.columns.contains("id")) Some("id") else None)
+      cellSize: Double = 0.0, joinType: String = "inner"): DataFrame =
+    SpatialJoin.join(df, other.df, predicate, cellSize, joinType)
 
   /** Sort pipe: nulls first, like the reference (Sort.java:44-52). */
   def sortBy(property: String, asc: Boolean = true): GeoFrame =

@@ -115,7 +115,7 @@ object SpatialAggs {
       // arbitrarily many cells apart, so corner bucketing misses edges. Instead
       // replicate LEFT to every cell overlapped by its bbox expanded by
       // `density` and RIGHT to its plain bbox cells — any pair within density
-      // then shares ≥1 cell (like SpatialJoin.cellsOf). Rows whose bbox would
+      // then shares ≥1 cell (like SpatialJoin's grid). Rows whose bbox would
       // fan out past the cap pair via broadcast instead of exploding.
       val jdist = udf((a: Array[Byte], b: Array[Byte]) =>
         GeomCodec.fromWkb(a).distance(GeomCodec.fromWkb(b)))

@@ -1,152 +1,260 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftOuter, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, JoinHint}
 import org.apache.spark.sql.functions._
 
-import graft.geom.GeomCodec
+import graft.functions.st
 
 /** Distributed spatial join: `left JOIN right ON ST_pred(l.geometry, r.geometry)`.
   *
   * The reference only has the degenerate one-query-geometry case (every
   * start*Search factory) plus one true join exercised in tests
   * (reference: server-plugin test TestIntersectsPathQueries.java:65 —
-  * point-set vs route geometries). This generalizes both, Spark-first:
+  * point-set vs route geometries). This generalizes both, Spark-first, as
+  * ONE dataflow ([[build]]) behind both entry points: the DataFrame API
+  * below and the SQL rule [[graft.plans.StJoinRule]]. It joins a PRESERVED
+  * side with a PROBE side:
   *
-  *  - SMALL right side → broadcast hash join on the bbox conjunct, exact
-  *    JTS predicate refine. One scan, zero shuffle of the big side.
-  *  - BIG both sides → PBSM-style grid join: both sides replicate to the
+  *  - INNER with a small probe side → broadcast nested loop on precomputed
+  *    bboxes, the exact JTS predicate only on bbox survivors. One scan,
+  *    zero shuffle of the big side. "Small" is one decision for both entry
+  *    points: Catalyst's size estimate of the probe side (free — file
+  *    metadata for scans) is at most `spark.graft.sqlJoin.broadcastBytes`
+  *    (default 256 KiB; 0 pins the grid).
+  *  - otherwise INNER → PBSM-style grid join: both sides replicate to the
   *    grid cells their bbox overlaps, equi-shuffle on cell (co-located,
   *    bounded skew via cell sizing), candidate pairs deduplicated by the
   *    reference-point technique (a pair counts only in the cell containing
-  *    the top-left corner of the bbox intersection), then bbox + exact
-  *    refine. Scales linearly with data per cell — the standard 100 TB
-  *    spatial-join shape.
+  *    the min corner of the bbox intersection), then bbox + exact refine.
+  *    Scales linearly with data per cell — the standard 100 TB spatial-join
+  *    shape. Rows over [[MaxCellsPerRow]] cells are split off (see [[grid]]).
+  *  - LEFT OUTER / LEFT SEMI / LEFT ANTI → the same grid as a left-outer
+  *    cell join in ONE pass: a window over a per-row tag classifies each
+  *    preserved row as matched or unmatched and picks one representative
+  *    copy, so nothing is joined back and nothing materializes (reference
+  *    workflow analog: every removeNodes-style flow,
+  *    SpatialProcedures.java:679-718, is a spatial anti-join).
   *
-  * Geometry columns are WKB; both sides must carry the canonical `bbox`
-  * struct (cheap to derive via st.bboxOf otherwise).
+  * Geometry columns are WKB. API inputs must carry the canonical `bbox`
+  * struct (cheap to derive via st.bboxOf otherwise); the SQL rule derives
+  * it from the geometry.
   */
 object SpatialJoin {
 
-  private def exactPred(predicate: String): (Column, Column) => Column = {
-    val f = udf((a: Array[Byte], b: Array[Byte]) => {
-      val ga = GeomCodec.fromWkb(a); val gb = GeomCodec.fromWkb(b)
-      predicate match {
-        case "intersects" => ga.intersects(gb)
-        case "within"     => ga.within(gb)
-        case "contains"   => ga.contains(gb)
-        case "covers"     => ga.covers(gb)
-        case "coveredby"  => ga.coveredBy(gb)
-        case "touches"    => ga.touches(gb)
-        case "overlaps"   => ga.overlaps(gb)
-        case "crosses"    => ga.crosses(gb)
-        case other => throw new IllegalArgumentException(s"unknown predicate $other")
-      }
-    })
-    (a, b) => f(a, b)
+  /** One join input: its rows and its geometry's bbox struct. */
+  private[graft] final case class Side(df: DataFrame, bbox: Column)
+
+  /** The spatial-join dataflow both entry points share: `p` is preserved,
+    * `q` probed, `exact` is the predicate oriented (p, q). `dist` dilates
+    * q's bbox for a distance join; `rest` holds further ON-clause conjuncts
+    * (they decide matching). The result has p's columns then q's — p's
+    * only for semi/anti — in input order. `cellSize` is only read when
+    * gridding.
+    */
+  private[graft] def build(p: Side, q: Side, exact: Column, semantics: JoinType,
+      cellSize: => Double, dist: Option[Double] = None,
+      rest: Option[Column] = None): DataFrame = {
+    val bcastBytes = q.df.sparkSession.conf
+      .get("spark.graft.sqlJoin.broadcastBytes", (256L << 10).toString).toLong
+    val cond = rest.fold(exact)(exact && _)
+    if (semantics == Inner && q.df.queryExecution.analyzed.stats.sizeInBytes <= bcastBytes)
+      broadcastInner(p, q, cond, dist)
+    else grid(p, q, cond, semantics, cellSize, dist)
   }
 
-  private def prefixed(df: DataFrame, prefix: String): DataFrame =
-    df.columns.foldLeft(df)((d, c) => d.withColumnRenamed(c, prefix + c))
-
-  /** Broadcast strategy: right side collected small (dimension-table shape).
-    * `joinType` may be any left-preserving type too — with a broadcast
-    * right, Spark's nested-loop handles outer/semi/anti natively and the
-    * loop is over the small side only. Semi/anti results drop the l_
-    * prefix (they are just filtered left rows).
+  /** `joined` cut back to p's columns then q's (none when `qFrom` is
+    * None). Picked BY POSITION — a side frame is its input's columns then
+    * the dataflow's own, and in the SQL rule both sides may hold columns
+    * of the same name.
     */
-  def broadcastJoin(left: DataFrame, right: DataFrame,
-      predicate: String = "intersects", joinType: String = "inner"): DataFrame = {
-    val l = prefixed(left, "l_")
-    val r = prefixed(right, "r_")
-    val out = l.join(broadcast(r),
-      col("l_bbox")("minx") <= col("r_bbox")("maxx") &&
-      col("l_bbox")("maxx") >= col("r_bbox")("minx") &&
-      col("l_bbox")("miny") <= col("r_bbox")("maxy") &&
-      col("l_bbox")("maxy") >= col("r_bbox")("miny") &&
-      exactPred(predicate)(col("l_geometry"), col("r_geometry")),
-      joinType)
-    if (joinType == "left_semi" || joinType == "left_anti")
-      out.select(left.columns.map(c => col("l_" + c).as(c)).toIndexedSeq: _*)
-    else out
+  private def originals(joined: DataFrame, p: Side, q: Side, qFrom: Option[Int]): DataFrame = {
+    val o = joined.queryExecution.analyzed.output
+    val cols = o.take(p.df.columns.length) ++
+      qFrom.fold(Seq.empty[org.apache.spark.sql.catalyst.expressions.Attribute])(
+        i => o.slice(i, i + q.df.columns.length))
+    joined.select(cols.map(GraftColumnBridge.column): _*)
   }
 
-  /** Cells (cx, cy) overlapped by a bbox at the given cell size. Callers must
-    * pre-filter rows to fan-out ≤ MaxCellsPerRow (see gridJoin); this UDF
-    * only ever sees bounded replication.
+  /** `df` plus bbox `b` as column `name`, computed once per row and
+    * dilated by `dist` when given (a distance join: cell coverage, the bbox
+    * test and reference-point dedup then all see "bbox-distance ≤ d"
+    * pairs, a superset of the exact predicate). A one-row generator makes
+    * the column, not a projection: Catalyst pushes filters on a projected
+    * column below the projection by copying its expression — on the SQL
+    * path a geometry-decoding UDF — into every reference.
     */
-  private def cellsOf(bboxCol: Column, cellSize: Double): Column = {
-    val cells = udf((minx: Double, miny: Double, maxx: Double, maxy: Double) => {
-      val x0 = math.floor(minx / cellSize).toLong
-      val x1 = math.floor(maxx / cellSize).toLong
-      val y0 = math.floor(miny / cellSize).toLong
-      val y1 = math.floor(maxy / cellSize).toLong
-      val out = for (cx <- x0 to x1; cy <- y0 to y1) yield (cx, cy)
-      out.toArray
-    })
-    cells(bboxCol("minx"), bboxCol("miny"), bboxCol("maxx"), bboxCol("maxy"))
+  private def withBox(df: DataFrame, name: String, b: Column,
+      dist: Option[Double] = None): DataFrame = {
+    val boxed = df.withColumn(name, explode(array(b)))
+    val c = col(name)
+    dist.fold(boxed)(d => boxed.withColumn(name, struct(
+      (c("minx") - d).as("minx"), (c("miny") - d).as("miny"),
+      (c("maxx") + d).as("maxx"), (c("maxy") + d).as("maxy"))))
+  }
+
+  private val (lb, rb) = (col("__g_lb"), col("__g_rb"))
+
+  /** bbox overlap (short-circuit arithmetic on the precomputed boxes),
+    * then `cond` on the survivors only.
+    */
+  private def byBox(cond: Column): Column =
+    lb("minx") <= rb("maxx") && rb("minx") <= lb("maxx") &&
+    lb("miny") <= rb("maxy") && rb("miny") <= lb("maxy") && cond
+
+  /** `a` joined to `b` as a broadcast nested loop, `b` broadcast (`a` when
+    * `buildLeft`). The hint sits on the Join itself: a broadcast() hint
+    * node the SQL rule injected would come after hint elimination.
+    */
+  private def nestedLoop(a: DataFrame, b: DataFrame, cond: Column, how: JoinType,
+      buildLeft: Boolean = false): DataFrame = {
+    val bcast = Some(HintInfo(strategy = Some(BROADCAST)))
+    a.join(b, cond, how.sql.toLowerCase.replace(' ', '_')).queryExecution.analyzed match {
+      case j: Join => GraftColumnBridge.ofRows(a.sparkSession,
+        j.copy(hint = if (buildLeft) JoinHint(bcast, None) else JoinHint(None, bcast)))
+      case other => throw new IllegalStateException(s"expected a join, got ${other.nodeName}")
+    }
+  }
+
+  /** Broadcast branch: bboxes are PRE-COMPUTED row columns (one evaluation
+    * per row), so the nested-loop condition is pure short-circuit bbox
+    * arithmetic per pair, and `cond` runs only on bbox survivors.
+    */
+  private def broadcastInner(p: Side, q: Side, cond: Column, dist: Option[Double]): DataFrame = {
+    val pb = withBox(p.df, "__g_lb", p.bbox)
+    originals(nestedLoop(pb, withBox(q.df, "__g_rb", q.bbox, dist), byBox(cond), Inner),
+      p, q, Some(pb.columns.length))
   }
 
   /** Cap on grid-cell replication per row. A geometry whose bbox spans more
     * cells than this (relative to cellSize — auto-sizing uses the MEAN
     * extent, so a single continent-sized geometry can exceed it arbitrarily)
     * would explode unboundedly and OOM an executor; such rows are few by
-    * construction and instead join via broadcast.
+    * construction and join through broadcast nested loops instead.
     */
   val MaxCellsPerRow = 256L
 
-  private def fanout(bboxCol: Column, cellSize: Double): Column =
-    (floor(bboxCol("maxx") / cellSize) - floor(bboxCol("minx") / cellSize) + 1) *
-    (floor(bboxCol("maxy") / cellSize) - floor(bboxCol("miny") / cellSize) + 1)
+  /** True when bbox `b` covers more than MaxCellsPerRow cells (false for a
+    * null bbox). The span test comes first so the cell counts cannot
+    * overflow.
+    */
+  private def oversized(b: Column, cellSize: Double): Column = {
+    def cells(lo: String, hi: String) = floor(b(hi) / cellSize) - floor(b(lo) / cellSize) + 1
+    coalesce(greatest(b("maxx") - b("minx"), b("maxy") - b("miny")) / cellSize >= MaxCellsPerRow ||
+      cells("minx", "maxx") * cells("miny", "maxy") > MaxCellsPerRow, lit(false))
+  }
 
-  private def bboxOverlap: Column =
-    col("l_bbox")("minx") <= col("r_bbox")("maxx") &&
-    col("l_bbox")("maxx") >= col("r_bbox")("minx") &&
-    col("l_bbox")("miny") <= col("r_bbox")("maxy") &&
-    col("l_bbox")("maxy") >= col("r_bbox")("miny")
+  /** `df`, which carries its bbox as column `<s>b`, with one row per grid
+    * cell the bbox covers: columns `<s>cx`, `<s>cy`. Outer explodes keep a
+    * null-bbox row (it surfaces as unmatched).
+    */
+  private def cells(df: DataFrame, cellSize: Double, s: String, outer: Boolean): DataFrame = {
+    val gen: Column => Column = if (outer) explode_outer else explode
+    val b = col(s + "b")
+    def axis(lo: String, hi: String) = sequence(floor(b(lo) / cellSize), floor(b(hi) / cellSize))
+    df.withColumn(s + "cx", gen(axis("minx", "maxx"))).withColumn(s + "cy", gen(axis("miny", "maxy")))
+  }
 
-  /** PBSM grid strategy for two large sides. `cellSize` should be on the
+  /** Grid branch. Rows are routed by the cheap per-row `oversized` test:
+    * rows under the cap take the cell equi-join, every pair with an
+    * oversized row takes a broadcast nested loop with the oversized rows
+    * broadcast — oversized p rows against all of q, the other p rows
+    * against oversized q rows. With none over the cap (the usual case)
+    * those broadcasts are empty, and adaptive execution drops their joins
+    * before they run.
+    */
+  private def grid(p: Side, q: Side, cond: Column, semantics: JoinType, cellSize: Double,
+      dist: Option[Double]): DataFrame = {
+    val (pBox, qBox) = (withBox(p.df, "__g_lb", p.bbox), withBox(q.df, "__g_rb", q.bbox, dist))
+    val (pBig, qBig) = (oversized(lb, cellSize), oversized(rb, cellSize))
+    val (pN, qN, qB) = (pBox.filter(!pBig), qBox.filter(!qBig), qBox.filter(qBig))
+    val withQ = if (semantics == LeftSemi || semantics == LeftAnti) None else Some(pBox.columns.length)
+    val viaBigP = originals(
+      nestedLoop(pBox.filter(pBig), qBox, byBox(cond), semantics, buildLeft = true), p, q, withQ)
+    val qg = cells(qN, cellSize, "__g_r", outer = false).withColumn("__g_rhit", lit(1))
+    val matched = col("__g_lcx") === col("__g_rcx") && col("__g_lcy") === col("__g_rcy") &&
+      byBox(floor(greatest(lb("minx"), rb("minx")) / cellSize) === col("__g_lcx") &&
+        floor(greatest(lb("miny"), rb("miny")) / cellSize) === col("__g_lcy") && cond)
+    val viaCells = semantics match {
+      case Inner =>
+        val pg = cells(pN, cellSize, "__g_l", outer = false)
+        originals(pg.join(qg, matched), p, q, Some(pg.columns.length))
+          .union(originals(nestedLoop(pN, qB, byBox(cond), Inner), p, q, withQ))
+      case LeftOuter | LeftSemi | LeftAnti =>
+        // preserving types tag each preserved row so ONE dataflow can
+        // decide matched vs unmatched per row. The tag is used only WITHIN
+        // that single evaluation (explode → join → window over the tag),
+        // never joined back against a second evaluation of the side — so
+        // it only needs uniqueness, which monotonically_increasing_id
+        // guarantees, not replay-stability, which it does not. LEFT OUTER
+        // on the cell equi-key keeps every preserved cell-copy (every ON
+        // conjunct decides MATCHING here); the window then classifies rows
+        // (any copy matched?) and picks one representative copy each
+        import org.apache.spark.sql.expressions.Window
+        val pg = cells(pN.withColumn("__g_lid", monotonically_increasing_id()), cellSize, "__g_l",
+          outer = true)
+        val w = Window.partitionBy(col("__g_lid"))
+        val j0 = pg.join(qg, matched, "left_outer")
+          .withColumn("__g_hit", max(col("__g_rhit")).over(w))
+          .withColumn("__g_rn", row_number().over(w.orderBy(col("__g_rhit").desc_nulls_last)))
+        // one row per preserved row: its columns, its bbox, grid-matched?
+        val reps = j0.filter(col("__g_rn") === 1)
+        val repCols = reps.queryExecution.analyzed.output.take(p.df.columns.length)
+          .map(GraftColumnBridge.column) ++ Seq(lb, col("__g_hit"))
+        val unmatched = reps.filter(col("__g_hit").isNull).select(repCols: _*)
+        // then the pairs with oversized q rows, over the representatives.
+        // Where two branches read j0, each classifies within its own
+        // evaluation, so they agree without a stable tag
+        semantics match {
+          case LeftAnti => originals(nestedLoop(unmatched, qB, byBox(cond), LeftAnti), p, q, None)
+          case LeftSemi => originals(reps.filter(col("__g_hit") === 1), p, q, None)
+            .union(originals(nestedLoop(unmatched, qB, byBox(cond), LeftSemi), p, q, None))
+          case _ =>
+            val bigHits = nestedLoop(reps.select(repCols: _*), qB.withColumn("__g_bhit", lit(1)),
+              byBox(cond), LeftOuter)
+            originals(j0.filter(col("__g_rhit").isNotNull), p, q, Some(pg.columns.length))
+              .union(originals(bigHits.filter(col("__g_bhit").isNotNull || col("__g_hit").isNull),
+                p, q, Some(repCols.length)))
+        }
+      case other => throw new IllegalArgumentException(s"unsupported spatial join type $other")
+    }
+    viaCells.union(viaBigP)
+  }
+
+  private def prefixed(df: DataFrame, prefix: String): DataFrame =
+    df.columns.foldLeft(df)((d, c) => d.withColumnRenamed(c, prefix + c))
+
+  private val Predicates: Map[String, (Column, Column) => Column] = Map(
+    "intersects" -> st.intersects, "within" -> st.within, "contains" -> st.contains,
+    "covers" -> st.covers, "coveredby" -> st.coveredBy, "touches" -> st.touches,
+    "overlaps" -> st.overlaps, "crosses" -> st.crosses)
+
+  /** Runs `f` on the API's join inputs — both sides l_/r_ prefixed,
+    * their canonical geometry and bbox columns, the named exact predicate —
+    * and strips the l_ prefix again from semi/anti results (those are just
+    * filtered left rows).
+    */
+  private def api(left: DataFrame, right: DataFrame, predicate: String, semantics: JoinType)(
+      f: (Side, Side, Column) => DataFrame): DataFrame = {
+    val pred = Predicates.getOrElse(predicate,
+      throw new IllegalArgumentException(s"unknown predicate $predicate"))
+    val out = f(Side(prefixed(left, "l_"), col("l_bbox")), Side(prefixed(right, "r_"), col("r_bbox")),
+      pred(col("l_geometry"), col("r_geometry")))
+    if (semantics == LeftSemi || semantics == LeftAnti) out.toDF(left.columns.toSeq: _*) else out
+  }
+
+  /** Inner join through the broadcast branch, whatever the sizes. */
+  def broadcastJoin(left: DataFrame, right: DataFrame,
+      predicate: String = "intersects"): DataFrame =
+    api(left, right, predicate, Inner)((p, q, exact) => broadcastInner(p, q, exact, None))
+
+  /** Inner join through the grid branch at the given cell size — on the
     * order of the typical right-side bbox extent (a few rows per cell).
-    * Rows whose bbox would replicate to more than MaxCellsPerRow cells are
-    * split off and joined via broadcast (cheap: they're rare outliers), so
-    * per-row explode fan-out is bounded regardless of geometry size.
     */
   def gridJoin(left: DataFrame, right: DataFrame, cellSize: Double,
-      predicate: String = "intersects"): DataFrame = {
-    val l0 = prefixed(left, "l_")
-    val r0 = prefixed(right, "r_")
-    val exact = exactPred(predicate)(col("l_geometry"), col("r_geometry"))
-
-    // fan-out computed ONCE per side as a routing column (cheap floor
-    // arithmetic, evaluated before cellsOf so an oversized bbox never
-    // materializes a giant cell array), then both branches filter on it
-    val lF = l0.withColumn("__fo", fanout(col("l_bbox"), cellSize))
-    val rF = r0.withColumn("__fo", fanout(col("r_bbox"), cellSize))
-    val lNorm = lF.filter(col("__fo") <= MaxCellsPerRow).drop("__fo")
-    val lBig  = lF.filter(col("__fo") > MaxCellsPerRow).drop("__fo")
-    val rNorm = rF.filter(col("__fo") <= MaxCellsPerRow).drop("__fo")
-    val rBig  = rF.filter(col("__fo") > MaxCellsPerRow).drop("__fo")
-
-    val l = lNorm.withColumn("__cell", explode(cellsOf(col("l_bbox"), cellSize)))
-    val r = rNorm.withColumn("__cell", explode(cellsOf(col("r_bbox"), cellSize)))
-
-    val grid = l.join(r, l("__cell") === r("__cell"))
-      .filter(bboxOverlap)
-      // reference-point dedup: emit the pair only from the cell that contains
-      // the top-left corner of the bbox intersection (each pair has exactly
-      // one such cell, so replicated candidates collapse without a distinct)
-      .filter(
-        floor(greatest(col("l_bbox")("minx"), col("r_bbox")("minx")) / cellSize) === l("__cell")("_1") &&
-        floor(greatest(col("l_bbox")("miny"), col("r_bbox")("miny")) / cellSize) === l("__cell")("_2"))
-      .filter(exact)
-      .drop("__cell")
-
-    // oversized-left × all-right, and normal-left × oversized-right: covers
-    // every pair involving an oversized row exactly once
-    val viaBigL = r0.join(broadcast(lBig), bboxOverlap && exact)
-    val viaBigR = lNorm.join(broadcast(rBig), bboxOverlap && exact)
-    val cols = grid.columns.map(col).toSeq
-    grid.unionByName(viaBigL.select(cols: _*)).unionByName(viaBigR.select(cols: _*))
-  }
+      predicate: String = "intersects"): DataFrame =
+    api(left, right, predicate, Inner)((p, q, exact) => grid(p, q, exact, Inner, cellSize, None))
 
   /** Pick a grid cell size from bbox statistics: a cell should be on the
     * order of the larger of (a) the mean right-side bbox extent — so a
@@ -261,73 +369,16 @@ object SpatialJoin {
       .unionByName(res3.select(out: _*))
   }
 
-  /** Left-preserving spatial joins over the same grid plan: matched pairs
-    * come from [[gridJoin]], then the unmatched left rows are recovered /
-    * intersected / subtracted via an EQUI-join on a per-row tag (the
-    * reference workflow analog: every removeNodes-style flow,
-    * SpatialProcedures.java:679-718, is a spatial anti-join).
-    *
-    *  - `left_semi`: left rows with ≥1 spatial match — plain left schema.
-    *  - `left_anti`: left rows with NO spatial match — plain left schema.
-    *  - `left_outer`: every matched pair (l_/r_ prefixed, like gridJoin)
-    *    plus each unmatched left row once with null r_ columns.
-    *
-    * `leftIdCol` names a UNIQUE left row id (canonical layers have `id`) —
-    * the scale path: nothing materializes. Without one, rows are tagged
-    * with `monotonically_increasing_id` and the tagged left is
-    * localCheckpoint'ed so both uses (match + recover) see identical tags
-    * (a recomputed shuffle can reorder rows, so an unmaterialized tag is
-    * not replay-stable).
-    */
-  def gridJoinTyped(left: DataFrame, right: DataFrame, cellSize: Double,
-      predicate: String = "intersects", joinType: String = "left_outer",
-      leftIdCol: Option[String] = None): DataFrame = {
-    require(Set("left_outer", "left_semi", "left_anti")(joinType),
-      s"gridJoinTyped handles left-preserving types, got $joinType (use gridJoin for inner)")
-    val tagged = leftIdCol match {
-      case Some(c) => left.withColumn("__g_lid", col(c))
-      case None => left.withColumn("__g_lid", monotonically_increasing_id())
-        .localCheckpoint(true)
-    }
-    val pairs = gridJoin(tagged, right, cellSize, predicate)
-    val matchedIds = pairs.select(col("l___g_lid").as("__g_lid")).distinct()
-    joinType match {
-      case "left_semi" =>
-        tagged.join(matchedIds, Seq("__g_lid"), "left_semi").drop("__g_lid")
-      case "left_anti" =>
-        tagged.join(matchedIds, Seq("__g_lid"), "left_anti").drop("__g_lid")
-      case "left_outer" =>
-        val nullRight = right.schema.map(f =>
-          lit(null).cast(f.dataType).as("r_" + f.name))
-        val unmatched = tagged.join(matchedIds, Seq("__g_lid"), "left_anti")
-        val unmatchedShaped = unmatched.select(
-          left.columns.map(c => col(c).as("l_" + c)).toIndexedSeq ++
-          Seq(col("__g_lid").as("l___g_lid")) ++ nullRight: _*)
-        pairs.unionByName(unmatchedShaped).drop("l___g_lid")
-    }
-  }
-
-  /** Byte thresholds for the stats-based strategy pick. */
-  private val BroadcastBytes = BigInt(10L << 20)   // mirror Catalyst's default
-  private val DefinitelyBigBytes = BigInt(1L << 30)
-
-  /** Strategy pick, cheapest signal first: Catalyst's size-in-bytes estimate
-    * (free — file metadata for scans) decides clearly-small (broadcast) and
-    * clearly-large (grid) right sides without touching the data; only the
-    * in-between band pays a `count()` scan. Mirrors Catalyst's broadcast
-    * sizing decision. `cellSize <= 0` auto-sizes the grid from bbox stats.
+  /** Spatial join with the strategy picked by [[build]]. `joinType`:
+    * inner | left_outer | left_semi | left_anti. Columns come back l_/r_
+    * prefixed (inner/outer); semi/anti return the plain left schema.
+    * `cellSize <= 0` auto-sizes the grid from bbox stats (one small
+    * aggregate, paid only when the join grids).
     */
   def join(left: DataFrame, right: DataFrame, predicate: String = "intersects",
-      cellSize: Double = 0.0, broadcastThreshold: Long = 10000L,
-      joinType: String = "inner", leftIdCol: Option[String] = None): DataFrame = {
-    val sizeInBytes = right.queryExecution.optimizedPlan.stats.sizeInBytes
-    val small = sizeInBytes <= BroadcastBytes ||
-      (sizeInBytes < DefinitelyBigBytes && right.count() <= broadcastThreshold)
-    if (small) broadcastJoin(left, right, predicate, joinType)
-    else {
-      val cs = if (cellSize > 0) cellSize else suggestCellSize(left, right)
-      if (joinType == "inner") gridJoin(left, right, cs, predicate)
-      else gridJoinTyped(left, right, cs, predicate, joinType, leftIdCol)
-    }
+      cellSize: Double = 0.0, joinType: String = "inner"): DataFrame = {
+    val semantics = JoinType(joinType)
+    api(left, right, predicate, semantics)((p, q, exact) =>
+      build(p, q, exact, semantics, if (cellSize > 0) cellSize else suggestCellSize(left, right)))
   }
 }

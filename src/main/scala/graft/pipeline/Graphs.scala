@@ -33,8 +33,8 @@ object Graphs {
     * endpoint degrees, the wedge self-join on the apex, the closing-edge
     * semi-join on (v, w), and the final explode+count — each keyed on a
     * node or node pair, so the plan holds on graphs whose edge list is
-    * itself cluster-scale. When the oriented edge list is SMALL (the
-    * stats-first pick [[graft.engine.SpatialJoin.join]] also makes), the
+    * itself cluster-scale. When the oriented edge list is SMALL (a
+    * size-first broadcast pick, like [[graft.engine.SpatialJoin.join]]'s), the
     * wedge and closing probes broadcast it instead: the wedge stream —
     * O(m^{3/2}) rows, the dominant volume — then never shuffles at all,
     * it probes the edge map map-side. Above the threshold the pure-shuffle
@@ -132,8 +132,8 @@ object Graphs {
     val dirE0 = keyed.select(
       least(col("ka"), col("kb")).as("u"), greatest(col("ka"), col("kb")).as("w"))
       .persist()
-    // the persisted count is a cache scan — the same cheap signal
-    // SpatialJoin.join pays only in its in-between band; it also sizes the
+    // the persisted count is a cache scan (a cheap signal once persisted;
+    // SpatialJoin.join decides from plan stats alone); it also sizes the
     // O(m^{3/2}) wedge exchanges ∝ m (the round-7 INIT_PARTS lever, now in
     // the plan: 16 fixed partitions spill/hang past ~10× of sf0.1)
     val m = dirE0.count()

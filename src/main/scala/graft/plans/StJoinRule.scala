@@ -8,41 +8,39 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 
+import graft.engine.SpatialJoin
+import graft.functions.st
+
 /** Declarative SQL spatial joins, made scalable: Spark plans
   * `FROM a JOIN b ON st_intersects(a.geom, b.geom)` as a CARTESIAN product
   * (BroadcastNestedLoop at best) because the condition has no equi-join
   * key. This optimizer rule recognizes a join whose condition carries a
-  * cross-side `st_*` predicate and NO equi-conjunct, and rewrites it into
-  * the PBSM grid join: both sides explode to the grid cells their
-  * envelopes cover, the join becomes an EQUI-join on the cell,
-  * reference-point dedup collapses replicated candidates without a
-  * distinct, and the exact JTS predicate decides membership — the same
-  * plan [[graft.engine.SpatialJoin.gridJoin]] builds through the API, but
-  * reached from plain SQL. O(cells + candidate pairs) instead of O(|a|·|b|).
+  * cross-side `st_*` predicate and NO equi-conjunct, and hands it to the
+  * spatial-join dataflow the DataFrame API uses too
+  * ([[graft.engine.SpatialJoin.build]]: broadcast for a small INNER probe
+  * side, else the PBSM grid's cell EQUI-join, a single tagged pass for the
+  * left-preserving types). O(cells + candidate pairs) instead of
+  * O(|a|·|b|). The rule itself only matches the predicate, orients it,
+  * and composes the join types `build` lacks:
   *
-  * Join types: INNER, LEFT OUTER, LEFT SEMI, LEFT ANTI. The three
-  * left-preserving shapes (reference workflow analog: every
-  * removeNodes-style flow, SpatialProcedures.java:679-718, is an
-  * anti-join) run the same grid plan as a LEFT OUTER cell join inside ONE
-  * dataflow: a window over a per-row tag classifies each left row as
-  * matched/unmatched and picks a representative copy, so the preserved
-  * side is evaluated exactly once. RIGHT OUTER runs the same dataflow
-  * with the sides (and the predicate) transposed; FULL OUTER is the LEFT
-  * OUTER result unioned with the right side's unmatched rows (a
-  * right-preserved ANTI pass) null-extended on the left columns.
+  *  - INNER, LEFT OUTER, LEFT SEMI, LEFT ANTI go to `build` as they
+  *    are, the left side preserved;
+  *  - RIGHT OUTER runs LEFT OUTER with the sides (and the predicate)
+  *    transposed;
+  *  - FULL OUTER is the LEFT OUTER result unioned with the right side's
+  *    unmatched rows (a right-preserved ANTI pass) null-extended on the
+  *    left columns.
   *
   * Scope (documented, not silently wrong): the ST conjunct's arguments
-  * must be bare geometry columns, one from each side; remaining conjuncts
-  * are re-applied as a post-join filter (INNER) or folded into the match
-  * condition (left-preserving types, where ON-clause semantics differ
-  * from a post-filter). Joins that already have an equi-key are left
+  * must be bare geometry columns, one from each side (arriving as
+  * (right, left) transposes the predicate); remaining conjuncts join the
+  * match condition (for the left-preserving types ON-clause semantics
+  * differ from a post-filter). Joins that already have an equi-key are left
   * alone (Spark hashes those fine). Cell size comes from
   * `spark.graft.sqlJoin.cellSize` (degrees, default 10.0) — at 100 TB set
-  * it from bbox stats exactly like the API path's suggestCellSize. An
-  * INNER join whose probe side is estimated under
-  * `spark.graft.sqlJoin.broadcastBytes` (default 256 KiB) skips the grid
-  * for a broadcast + precomputed-bbox nested loop — the stats-first pick
-  * the API join makes; 0 pins the grid plan.
+  * it from bbox stats exactly like the API path's suggestCellSize; the
+  * broadcast cap is `build`'s `spark.graft.sqlJoin.broadcastBytes`
+  * (0 pins the grid plan).
   */
 class StJoinRule(sessionOpt: Option[SparkSession]) extends Rule[LogicalPlan] {
 
@@ -72,7 +70,12 @@ class StJoinRule(sessionOpt: Option[SparkSession]) extends Rule[LogicalPlan] {
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, jt, Some(cond), _) if Supported(jt) =>
+    // a join over `build`'s own `__g_` columns is this rule's output: its
+    // nested loops (the broadcast branch, the grid's joins for rows over
+    // the cell cap) carry the st_* predicate beside bbox conjuncts and no
+    // equi-key, and must not be rewritten a second time
+    case j @ Join(left, right, jt, Some(cond), _)
+        if Supported(jt) && !cond.references.exists(_.name.startsWith("__g_")) =>
       val cs = conjuncts(cond)
       val stMatch = cs.zipWithIndex.collectFirst {
         case (u: ScalaUDF, i) if u.udfName.exists(Transpose.contains) &&
@@ -117,177 +120,46 @@ class StJoinRule(sessionOpt: Option[SparkSession]) extends Rule[LogicalPlan] {
     // JVM never crosses sessions
     val spark = sessionOpt.getOrElse(SparkSession.active)
     val cell = conf.getConfString("spark.graft.sqlJoin.cellSize", "10.0").toDouble
-    // stats-first strategy pick, mirroring the API path (SpatialJoin.join):
-    // an INNER join whose probe side is estimated tiny skips the grid
-    // entirely — broadcast + per-ROW bbox columns + short-circuit exact
-    // predicate, zero exchange. Deliberately conservative default: the
-    // pair count is |p|·|q|, so only genuinely small builds qualify.
-    val bcastBytes = conf.getConfString("spark.graft.sqlJoin.broadcastBytes",
-      (256L * 1024L).toString).toLong
     val restCond = rest.reduceOption(And).map(GraftColumnBridge.column)
 
-    /** The grid dataflow with `p` as the PRESERVED side and `q` as the
-      * probe side; `pred` is oriented (pGeom, qGeom). `semantics` is one of
-      * Inner / LeftOuter / LeftSemi / LeftAnti over that preserved side;
-      * `out` is selected at the end BY ATTRIBUTE, so any output order
-      * works regardless of which original side is preserved.
+    /** `SpatialJoin.build` with `p` PRESERVED and `q` probed; `pred` is
+      * oriented (pGeom, qGeom). Output: p's columns, then q's unless
+      * semi/anti — positionally, as `build` returns them.
       */
-    def buildJoin(p: LogicalPlan, q: LogicalPlan, pred: String,
+    def join(p: LogicalPlan, q: LogicalPlan, pred: String,
         pGeom: AttributeReference, qGeom: AttributeReference,
-        semantics: JoinType, out: Seq[Attribute]): DataFrame = {
-      val pDf0 = GraftColumnBridge.ofRows(spark, p)
-      val qDf = GraftColumnBridge.ofRows(spark, q)
-      // Preserving types tag each preserved-side row so ONE dataflow can
-      // decide matched vs unmatched per row. The tag is used only WITHIN
-      // that single evaluation (explode → join → window over the tag),
-      // never joined back against a second evaluation of the side — so it
-      // only needs uniqueness, which monotonically_increasing_id
-      // guarantees, not replay-stability, which it does not (e.g.
-      // ConvertToLocalRelation can constant-fold the tag in one plan copy
-      // but not another).
-      val pDf =
-        if (semantics == Inner) pDf0
-        else pDf0.withColumn("__g_lid", monotonically_increasing_id())
-      val pg = GraftColumnBridge.column(pGeom)
-      val qg = GraftColumnBridge.column(qGeom)
-      // the preserved side uses outer explodes for preserving joins: a null
-      // geometry yields null cells, and the row must still surface as
-      // unmatched rather than vanish at the explode
-      def cellsP(f: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-          b: org.apache.spark.sql.Column) =
-        if (semantics == Inner) explode(f(b)) else explode_outer(f(b))
-      def seqX(b: org.apache.spark.sql.Column) = sequence(
-        floor(b("minx") / cell).cast("long"), floor(b("maxx") / cell).cast("long"))
-      def seqY(b: org.apache.spark.sql.Column) = sequence(
-        floor(b("miny") / cell).cast("long"), floor(b("maxy") / cell).cast("long"))
-      val pb = pDf.withColumn("__g_lb", graft.functions.st.bboxOf(pg))
-        .withColumn("__g_lcx", cellsP(seqX, col("__g_lb")))
-        .withColumn("__g_lcy", cellsP(seqY, col("__g_lb")))
-      // distance join: dilate the probe side's envelope by the radius —
-      // cell coverage, the bbox pre-filter, and reference-point dedup all
-      // then see "bbox-distance ≤ d" pairs, a conservative superset of the
-      // exact predicate (the standard ST_DWithin expansion)
-      val rBbox = {
-        val raw = graft.functions.st.bboxOf(qg)
-        dist.fold(raw)(d => struct(
-          (raw("minx") - d).as("minx"), (raw("miny") - d).as("miny"),
-          (raw("maxx") + d).as("maxx"), (raw("maxy") + d).as("maxy")))
-      }
-      val qb = qDf.withColumn("__g_rb", rBbox)
-        .withColumn("__g_rcx", explode(seqX(col("__g_rb"))))
-        .withColumn("__g_rcy", explode(seqY(col("__g_rb"))))
-        .withColumn("__g_rhit", lit(1))
-      val glb = col("__g_lb"); val grb = col("__g_rb")
-      val overlap =
-        glb("minx") <= grb("maxx") && grb("minx") <= glb("maxx") &&
-        glb("miny") <= grb("maxy") && grb("miny") <= glb("maxy")
-      // reference-point dedup: only the cell holding the intersection's
-      // min corner emits the pair
-      val refPoint =
-        floor(greatest(glb("minx"), grb("minx")) / cell).cast("long") === col("__g_lcx") &&
-        floor(greatest(glb("miny"), grb("miny")) / cell).cast("long") === col("__g_lcy")
-      val exactPred = dist.fold(call_udf(pred, pg, qg))(d => call_udf(pred, pg, qg, lit(d)))
-      val matchCond = {
-        val base = col("__g_lcx") === col("__g_rcx") && col("__g_lcy") === col("__g_rcy") &&
-          overlap && refPoint && exactPred
-        // for preserving joins every ON conjunct decides MATCHING (an
-        // unmatched preserved row survives regardless), so rest folds in
-        // here; for inner a post-filter is equivalent and keeps the join
-        // cheap
-        if (semantics != Inner) restCond.map(base && _).getOrElse(base) else base
-      }
-      semantics match {
-        case Inner =>
-          val joined = pb.join(qb, matchCond)
-            .select(out.map(a => GraftColumnBridge.column(a)): _*)
-          restCond.map(joined.filter).getOrElse(joined)
-        case _ =>
-          // single-dataflow preserving grid join: LEFT OUTER on the cell
-          // equi-key keeps every preserved cell-copy; a window over the
-          // per-row tag then classifies rows (any copy matched?) and picks
-          // one representative copy for the unmatched/semi outputs. One
-          // shuffle on the tag, no second evaluation of the preserved
-          // side, nothing materialized.
-          import org.apache.spark.sql.expressions.Window
-          val w = Window.partitionBy(col("__g_lid"))
-          val wOrd = Window.partitionBy(col("__g_lid"))
-            .orderBy(col("__g_rhit").desc_nulls_last)
-          val j0 = pb.join(qb, matchCond, "left_outer")
-            .withColumn("__g_hit", max(col("__g_rhit")).over(w))
-            .withColumn("__g_rn", row_number().over(wOrd))
-          val kept = semantics match {
-            case LeftSemi => j0.filter(col("__g_hit") === 1 && col("__g_rn") === 1)
-            case LeftAnti => j0.filter(col("__g_hit").isNull && col("__g_rn") === 1)
-            case LeftOuter => j0.filter(col("__g_rhit").isNotNull ||
-              (col("__g_hit").isNull && col("__g_rn") === 1))
-            case other => throw new IllegalStateException(s"unreachable semantics $other")
-          }
-          kept.select(out.map(a => GraftColumnBridge.column(a)): _*)
-      }
-    }
-
-    /** Broadcast dataflow for a tiny probe side: bboxes are PRE-COMPUTED
-      * row columns (one UDF eval per row), the nested-loop condition is
-      * then pure short-circuit bbox arithmetic per pair, with the exact
-      * JTS predicate only on bbox survivors — the same plan
-      * SpatialJoin.broadcastJoin builds through the API.
-      */
-    def buildBroadcast(p: LogicalPlan, q: LogicalPlan, pred: String,
-        pGeom: AttributeReference, qGeom: AttributeReference,
-        out: Seq[Attribute]): DataFrame = {
-      val pg = GraftColumnBridge.column(pGeom)
-      val qg = GraftColumnBridge.column(qGeom)
-      val pDf = GraftColumnBridge.ofRows(spark, p)
-        .withColumn("__g_lb", graft.functions.st.bboxOf(pg))
-      val qDf = GraftColumnBridge.ofRows(spark, q)
-        .withColumn("__g_rb", {
-          val raw = graft.functions.st.bboxOf(qg)
-          dist.fold(raw)(d => struct(
-            (raw("minx") - d).as("minx"), (raw("miny") - d).as("miny"),
-            (raw("maxx") + d).as("maxx"), (raw("maxy") + d).as("maxy")))
-        })
-      val glb = col("__g_lb"); val grb = col("__g_rb")
-      val overlap =
-        glb("minx") <= grb("maxx") && grb("minx") <= glb("maxx") &&
-        glb("miny") <= grb("maxy") && grb("miny") <= glb("maxy")
-      val exact = dist.fold(call_udf(pred, pg, qg))(d => call_udf(pred, pg, qg, lit(d)))
-      // the exact predicate goes in a POST-join filter, not the join
-      // condition: the emitted Join must carry no cross-side st_* UDF, or
-      // this rule would re-match its own output on the batch's next
-      // fixpoint iteration (the grid path's cell equi-conjunct stops the
-      // re-match there; bbox arithmetic plays that role here). No
-      // broadcast() hint — a ResolvedHint injected after the hint-
-      // elimination batch is an internal error; JoinSelection broadcasts
-      // the small side from its stats anyway (that's the premise here)
-      val joined = pDf.join(qDf, overlap).filter(exact)
-      restCond.map(joined.filter).getOrElse(joined)
-        .select(out.map(a => GraftColumnBridge.column(a)): _*)
+        semantics: JoinType): DataFrame = {
+      val (pg, qg) = (GraftColumnBridge.column(pGeom), GraftColumnBridge.column(qGeom))
+      SpatialJoin.build(
+        SpatialJoin.Side(GraftColumnBridge.ofRows(spark, p), st.bboxOf(pg)),
+        SpatialJoin.Side(GraftColumnBridge.ofRows(spark, q), st.bboxOf(qg)),
+        dist.fold(call_udf(pred, pg, qg))(d => call_udf(pred, pg, qg, lit(d))),
+        semantics, cell, dist, restCond)
     }
 
     val result: DataFrame = jt match {
-      case Inner if right.stats.sizeInBytes <= bcastBytes =>
-        buildBroadcast(left, right, pred, lGeom, rGeom, j.output)
       case Inner | LeftOuter | LeftSemi | LeftAnti =>
-        buildJoin(left, right, pred, lGeom, rGeom, jt, j.output)
+        join(left, right, pred, lGeom, rGeom, jt)
       case RightOuter =>
-        // same dataflow, sides and predicate transposed; the attribute
-        // select restores the original output order
-        buildJoin(right, left, Transpose(pred), rGeom, lGeom, LeftOuter, j.output)
+        // same dataflow, sides and predicate transposed; moving the right
+        // side's columns behind the left's restores the output order
+        val out = join(right, left, Transpose(pred), rGeom, lGeom, LeftOuter)
+        val cols = out.queryExecution.analyzed.output.map(GraftColumnBridge.column)
+        out.select(cols.drop(right.output.size) ++ cols.take(right.output.size): _*)
       case FullOuter =>
-        val leftPart = buildJoin(left, right, pred, lGeom, rGeom, LeftOuter, j.output)
+        val leftPart = join(left, right, pred, lGeom, rGeom, LeftOuter)
         // right rows with NO match, null-extended on the left columns —
-        // positional union against the left part (both in j.output order)
-        val rightAnti = buildJoin(right, left, Transpose(pred), rGeom, lGeom,
-          LeftAnti, right.output)
+        // positional union against the left part
+        val rightAnti = join(right, left, Transpose(pred), rGeom, lGeom, LeftAnti)
         val nullLeft = left.output.map(a => lit(null).cast(a.dataType).as(a.name))
-        leftPart.union(rightAnti.select(
-          nullLeft ++ right.output.map(a => GraftColumnBridge.column(a)): _*))
+        leftPart.union(rightAnti.select(nullLeft ++
+          rightAnti.queryExecution.analyzed.output.map(GraftColumnBridge.column): _*))
       case other => throw new IllegalStateException(s"unreachable join type $other")
     }
     val newPlan = result.queryExecution.analyzed
-    // output attributes are pass-through (no aliasing), so ExprIds already
-    // line up; a defensive projection restores them if an analyzer step
-    // re-aliased anything
+    // the result is in j.output order and its attributes pass through, so
+    // ExprIds already line up; a defensive projection restores them if an
+    // analyzer step re-aliased anything
     if (newPlan.output.map(_.exprId) == j.output.map(_.exprId)) newPlan
     else Project(j.output.zip(newPlan.output).map { case (o, n) =>
       Alias(n, o.name)(exprId = o.exprId)

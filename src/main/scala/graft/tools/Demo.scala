@@ -54,11 +54,23 @@ object Demo {
     val hits = proc.catalog.getLayer("hilbert_pts").intersectsWindow(-10, -10, 10, 10).count()
     println(s"[demo] hilbert-clustered layer window hits: $hits")
 
-    // auto-sized grid spatial join (broadcastThreshold=0 forces the grid path)
+    // auto-sized grid spatial join (broadcastBytes=0 pins the grid: a right
+    // side estimated under it would broadcast)
     val layerDf = proc.catalog.getLayer("hilbert_pts").df
     val autoCell = graft.engine.SpatialJoin.suggestCellSize(layerDf, layerDf)
-    val selfPairs = graft.engine.SpatialJoin.join(
-      layerDf, layerDf, "intersects", cellSize = 0.0, broadcastThreshold = 0L).count()
+    spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")
+    val selfJoin = graft.engine.SpatialJoin.join(layerDf, layerDf, "intersects")
+    val selfPairs = selfJoin.collect().length
+    // the plan that ran: the nested loops planned for rows over the cell
+    // cap are dropped at run time when no row is over it
+    val joinPlan = selfJoin.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan.toString
+      case other => other.toString
+    }
+    require("""(SortMergeJoin|HashJoin) \[[^\]]*__g_lcx""".r.findFirstIn(joinPlan).nonEmpty &&
+      !joinPlan.contains("BroadcastNestedLoop"),
+      s"auto grid join is not a cell equi-join:\n$joinPlan")
+    spark.conf.unset("spark.graft.sqlJoin.broadcastBytes")
     println(f"[demo] auto grid join: cell=$autoCell%.3f, coincident-point pairs=$selfPairs")
 
     // streaming ingest of the same points into a second layer

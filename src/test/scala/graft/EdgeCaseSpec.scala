@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.{GeoFrame, SpatialAggs, SpatialJoin}
@@ -124,17 +124,7 @@ class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("spark.sql.extensions registers BboxConjunctRule in a new session") {
-    val base = spark   // materialize the shared context first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // spark.sql.extensions is a static conf: getOrCreate reads it from the
-    // (already-running) SparkContext's conf, not the builder options
-    org.apache.spark.GraftTestConf.set(base.sparkContext,
-      "spark.sql.extensions", "graft.plans.GraftSparkExtensions")
-    try {
-      val s2 = SparkSession.builder().getOrCreate()
-      assert(s2 ne base)
-      graft.functions.SpatialFunctions.register(s2)
+    withExtensionsSession { s2 =>
       val pts = Seq((1, 1.0, 1.0), (2, 20.0, 20.0)).toDF("id", "x", "y")
         .withColumn("geometry", st.makePoint(col("x"), col("y")))
         .withColumn("bbox", st.bboxStruct(col("x"), col("y"), col("x"), col("y")))
@@ -148,10 +138,6 @@ class ExtensionsSpec extends SparkSpec {
       assert(optimized.contains("minx"),
         s"extensions-registered rule did not fire:\n$optimized")
       assert(q.select("id").collect().map(_.getInt(0)).toSet == Set(1))
-    } finally {
-      org.apache.spark.GraftTestConf.remove(base.sparkContext, "spark.sql.extensions")
-      SparkSession.setActiveSession(base)
-      SparkSession.setDefaultSession(base)
     }
   }
 

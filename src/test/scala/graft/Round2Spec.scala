@@ -72,6 +72,43 @@ class Round2Spec extends SparkSpec {
     val viaBroadcast = pairs(SpatialJoin.broadcastJoin(pts, boxes, "intersects"))
     assert(viaGrid == viaBroadcast)
     assert(viaGrid == Set(("p1", "huge"), ("p1", "tiny"), ("p2", "huge")))
+
+    // the same fixture through SQL at cell size 1, inner and left outer: the
+    // huge box would cover 341 × 161 cells uncapped; it joins through a
+    // nested loop instead, so no explode emits more rows than one row may
+    // cover
+    graft.plans.GraftOptimizations.install(spark)
+    pts.createOrReplaceTempView("cap_pts")
+    boxes.createOrReplaceTempView("cap_boxes")
+    spark.conf.set("spark.graft.sqlJoin.cellSize", "1.0")
+    spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")
+    try {
+      def viaSql(joinType: String) = {
+        val q = spark.sql(
+          s"""SELECT p.id, b.id FROM cap_pts p $joinType JOIN cap_boxes b
+             |ON st_intersects(p.geometry, b.geometry)""".stripMargin)
+        val rows = q.collect().map(r => (r.getString(0), r.getString(1))).toSet
+        val generated = planNodes(q.queryExecution.executedPlan).collect {
+          case g: org.apache.spark.sql.execution.GenerateExec => g.metrics("numOutputRows").value
+        }
+        assert(generated.nonEmpty && generated.max <= SpatialJoin.MaxCellsPerRow,
+          s"$joinType: an explode emitted ${generated.max} rows")
+        assert(planNodes(q.queryExecution.executedPlan)
+          .exists(_.nodeName.startsWith("BroadcastNestedLoopJoin")), s"$joinType: no nested loop ran")
+        rows
+      }
+      assert(viaSql("") == viaGrid)
+      assert(viaSql("LEFT") == viaGrid + (("p3", null)))
+    } finally {
+      spark.conf.unset("spark.graft.sqlJoin.cellSize")
+      spark.conf.unset("spark.graft.sqlJoin.broadcastBytes")
+    }
+  }
+
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => s +: planNodes(s.plan)
+    case o => o +: o.children.flatMap(planNodes)
   }
 
   // ----------------------------------- density islands on non-point layers

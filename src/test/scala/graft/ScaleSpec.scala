@@ -244,11 +244,76 @@ class ScaleSpec extends SparkSpec {
       .withColumn("bbox", st.bboxOf(col("geometry"))).drop("wkt")
     val cs = SpatialJoin.suggestCellSize(left, boxes)
     assert(cs > 0 && cs <= 100, s"cell size $cs out of range")
-    val auto = SpatialJoin.join(left, boxes, "intersects", broadcastThreshold = 0L)
-      .select("l_id", "r_id").as[(String, String)].collect().toSet
-    val bcast = SpatialJoin.broadcastJoin(left, boxes, "intersects")
-      .select("l_id", "r_id").as[(String, String)].collect().toSet
-    assert(auto == bcast)
+    // a right side this small broadcasts: pin the grid
+    spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")
+    try {
+      val autoDf = SpatialJoin.join(left, boxes, "intersects")
+      val auto = autoDf.collect().map(r => (r.getAs[String]("l_id"), r.getAs[String]("r_id"))).toSet
+      // the plan that ran: the grid's nested loops for rows over the cell
+      // cap are planned, and dropped at run time when no row is over it
+      val plan = autoDf.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan.toString
+        case other => other.toString
+      }
+      assert("""(SortMergeJoin|HashJoin) \[[^\]]*__g_lcx""".r.findFirstIn(plan).nonEmpty &&
+        !plan.contains("BroadcastNestedLoopJoin"), s"auto join is not the cell equi-join:\n$plan")
+      val bcast = SpatialJoin.broadcastJoin(left, boxes, "intersects")
+        .select("l_id", "r_id").as[(String, String)].collect().toSet
+      assert(auto.nonEmpty && auto == bcast)
+    } finally spark.conf.unset("spark.graft.sqlJoin.broadcastBytes")
+  }
+
+  test("grid join: one oversized row per side among many small ones stays a bounded join") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    val cell = 2.0
+    // 2000 half-unit boxes per side, plus one box covering them all
+    // (100 × 50 cells at this cell size, far over the cap)
+    def small(a: Int, b: Int) = (0 until 2000).map { i =>
+      val (x, y) = ((i * a % 200) * 0.9 - 90, (i * b % 100) * 0.9 - 45)
+      (s"s$i", x, y, x + 0.5, y + 0.5)
+    }
+    def layer(rows: Seq[(String, Double, Double, Double, Double)]) =
+      (rows :+ (("big", -100.0, -50.0, 100.0, 50.0))).toDF("id", "x0", "y0", "x1", "y1")
+        .withColumn("geometry", st.geomFromText(format_string(
+          "POLYGON ((%s %s, %s %s, %s %s, %s %s, %s %s))", col("x0"), col("y0"), col("x1"), col("y0"),
+          col("x1"), col("y1"), col("x0"), col("y1"), col("x0"), col("y0"))))
+        .withColumn("bbox", st.bboxOf(col("geometry"))).select("id", "geometry", "bbox")
+    val (ls, rs) = (small(37, 53), small(41, 29))
+    val grid = SpatialJoin.gridJoin(layer(ls), layer(rs), cell, "intersects")
+    val got = grid.collect().map(r => (r.getAs[String]("l_id"), r.getAs[String]("r_id")))
+    val want = SpatialJoin.broadcastJoin(layer(ls), layer(rs), "intersects")
+      .select("l_id", "r_id").as[(String, String)].collect()
+    assert(got.length == want.length && got.toSet == want.toSet)
+    assert(got.count(_._1 == "big") == 2001 && got.count(_._2 == "big") == 2001)
+
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r +: nodes(r.child)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    def rowsOut(p: SparkPlan) = nodes(p).collectFirst {
+      case n if n.metrics.contains("numOutputRows") => n.metrics("numOutputRows").value
+    }.getOrElse(fail(s"no row count under\n$p"))
+    val ran = nodes(grid.queryExecution.executedPlan)
+    // every small row is copied to the cells of its own box and nowhere
+    // else (an x explode, then a y explode per side), and the big rows
+    // never reach an explode...
+    def copies(rows: Seq[(String, Double, Double, Double, Double)]) = rows.map { case (_, x0, y0, x1, y1) =>
+      val nx = math.floor(x1 / cell).toLong - math.floor(x0 / cell).toLong + 1
+      nx + nx * (math.floor(y1 / cell).toLong - math.floor(y0 / cell).toLong + 1)
+    }.sum
+    val generated = ran.collect { case g: org.apache.spark.sql.execution.GenerateExec
+        if g.generatorOutput.exists(_.name.matches("__g_[lr]c[xy]")) => g.metrics("numOutputRows").value }
+    assert(generated.sum == copies(ls) + copies(rs), generated)
+    // ...they pair through two nested loops that broadcast only them, so
+    // the candidate pairs are the cell-sharing ones plus |L| + |R|
+    val loops = ran.collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(loops.size == 2 && loops.forall(j =>
+      rowsOut(if (j.buildSide == BuildLeft) j.left else j.right) == 1), loops)
   }
 
   test("updateWKT replaces a geometry in place") {

@@ -42,6 +42,30 @@ trait SparkSpec extends AnyFunSuite {
       }
     } finally { q.stop(); q.awaitTermination() }
 
+  /** Runs `f` in a fresh session whose rules come from
+    * `spark.sql.extensions=graft.plans.GraftSparkExtensions` alone (no
+    * GraftOptimizations.install), then restores the shared session.
+    */
+  def withExtensionsSession(f: SparkSession => Unit): Unit = {
+    val base = spark   // materialize the shared context first
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    // spark.sql.extensions is a static conf: getOrCreate reads it from the
+    // (already-running) SparkContext's conf, not the getOrCreate() options
+    org.apache.spark.GraftTestConf.set(base.sparkContext,
+      "spark.sql.extensions", "graft.plans.GraftSparkExtensions")
+    try {
+      val s2 = SparkSession.builder().getOrCreate()
+      assert(s2 ne base)
+      graft.functions.SpatialFunctions.register(s2)
+      f(s2)
+    } finally {
+      org.apache.spark.GraftTestConf.remove(base.sparkContext, "spark.sql.extensions")
+      SparkSession.setActiveSession(base)
+      SparkSession.setDefaultSession(base)
+    }
+  }
+
   /** Assert a streaming checkpoint retained only a handful of commit
     * epochs — a bounded AvailableNow replay writes one commit per staged
     * micro-batch (a few dozen at most); hundreds means a timeout spin

@@ -31,9 +31,7 @@ class StJoinRuleSpec extends SparkSpec {
       """SELECT p.pid, b.bid FROM sj_pts p JOIN sj_boxes b
         |ON st_intersects(p.geometry, b.geometry)""".stripMargin)
     val got = q.as[(Long, Long)].collect().toSet
-    val plan = q.queryExecution.executedPlan.toString()
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      s"SQL spatial join still plans as a product:\n$plan")
+    assertNoProduct(q)
     // ground truth via driver-side JTS over the same inputs
     val ps = ptsDf.select("pid", "x", "y").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
@@ -59,9 +57,7 @@ class StJoinRuleSpec extends SparkSpec {
     val q = spark.sql(
       """SELECT p.pid, b.bid FROM sj_pts p JOIN sj_boxes b
         |ON st_contains(b.geometry, p.geometry) AND p.pid % 2 = 0""".stripMargin)
-    val plan = q.queryExecution.executedPlan.toString()
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      s"transposed spatial join still a product:\n$plan")
+    assertNoProduct(q)
     val got = q.as[(Long, Long)].collect().toSet
     assert(got.nonEmpty && got.forall(_._1 % 2 == 0))
     // equi-joins are left alone (Spark already hashes them)
@@ -86,11 +82,24 @@ class StJoinRuleSpec extends SparkSpec {
     (pairs, ps.map(_._1).toSet)
   }
 
+  /** Runs `q`: no plan may hold a CartesianProduct, and the plan that ran
+    * no nested loop. The grid plans it for rows over the cell cap; with
+    * none in these fixtures, adaptive execution drops those joins.
+    */
   private def assertNoProduct(q: org.apache.spark.sql.DataFrame): Unit = {
     q.collect()
-    val plan = q.queryExecution.executedPlan.toString()
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      s"spatial join still plans as a product:\n$plan")
+    val plan = q.queryExecution.executedPlan
+    assert(!plan.toString.contains("CartesianProduct"), s"spatial join plans as a product:\n$plan")
+    def ran(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] =
+      p match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => ran(a.executedPlan)
+        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => s +: ran(s.plan)
+        case o => o +: o.children.flatMap(ran)
+      }
+    assert(!ran(plan).exists(_.nodeName.startsWith("BroadcastNestedLoopJoin")),
+      s"spatial join ran a nested loop:\n$plan")
+    assert(ran(plan).exists(n => n.nodeName.endsWith("Join") && n.simpleString(100).contains("__g_lcx")),
+      s"spatial join ran no cell equi-join:\n$plan")
   }
 
   test("LEFT OUTER st join: unmatched left rows kept with nulls, grid plan") {
@@ -184,24 +193,50 @@ class StJoinRuleSpec extends SparkSpec {
       "fixture should leave unmatched rows on both sides")
   }
 
-  test("API gridJoinTyped: outer/semi/anti against the inner grid join, with and without id column") {
+  test("API/SQL parity: inner, left outer, semi and anti agree with the rule and JTS") {
+    GraftOptimizations.install(spark)
+    spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")  // pin the grid plan
+    ptsDf.createOrReplaceTempView("sj_pts")
+    boxesDf.createOrReplaceTempView("sj_boxes")
     val (pairs, allPids) = truth
     val matchedPids = pairs.map(_._1)
     val l = ptsDf.withColumn("bbox", st.bboxOf(col("geometry")))
-      .withColumn("id", col("pid").cast("string"))
     val r = boxesDf.withColumn("bbox", st.bboxOf(col("geometry")))
-    for (idCol <- Seq(Some("id"), None)) {
-      val semi = graft.engine.SpatialJoin.gridJoinTyped(l, r, 30.0, "intersects", "left_semi", idCol)
-      assert(semi.select("pid").as[Long].collect().toSet == matchedPids)
-      assert(semi.columns.toSeq == l.columns.toSeq, "semi keeps the plain left schema")
-      val anti = graft.engine.SpatialJoin.gridJoinTyped(l, r, 30.0, "intersects", "left_anti", idCol)
-      assert(anti.select("pid").as[Long].collect().toSet == (allPids -- matchedPids))
-      val outer = graft.engine.SpatialJoin.gridJoinTyped(l, r, 30.0, "intersects", "left_outer", idCol)
-      val gotOuter = outer.select(col("l_pid"), col("r_bid")).collect()
-        .map(x => (x.getLong(0), if (x.isNullAt(1)) -1L else x.getLong(1))).toSet
-      val want = pairs ++ (allPids -- matchedPids).map(p => (p, -1L))
-      assert(gotOuter == want)
-    }
+    // the rule's default cell size, so both entry points build the same plan
+    def api(joinType: String) = graft.engine.SpatialJoin.join(l, r, "intersects",
+      cellSize = 10.0, joinType = joinType)
+    def sql(joinType: String, cols: String) = spark.sql(
+      s"""SELECT $cols FROM sj_pts p $joinType JOIN sj_boxes b
+         |ON st_intersects(p.geometry, b.geometry)""".stripMargin)
+    def pairRows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(x => (x.getLong(0), if (x.isNullAt(1)) -1L else x.getLong(1)))
+    def ids(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(_.getLong(0))
+
+    val inner = api("inner")
+    assert(inner.columns.toSeq == l.columns.map("l_" + _).toSeq ++ r.columns.map("r_" + _))
+    val innerRows = pairRows(inner.select("l_pid", "r_bid"))
+    assert(innerRows.toSet == pairs && innerRows.size == pairs.size)
+    assert(innerRows.sorted == pairRows(sql("", "p.pid, b.bid")).sorted)
+
+    val outer = api("left_outer")
+    assert(outer.columns.toSeq == inner.columns.toSeq)
+    val outerRows = pairRows(outer.select("l_pid", "r_bid"))
+    assert(outerRows.toSet == pairs ++ (allPids -- matchedPids).map(p => (p, -1L)))
+    assert(outerRows.sorted == pairRows(sql("LEFT", "p.pid, b.bid")).sorted)
+
+    val semi = api("left_semi")
+    assert(semi.columns.toSeq == l.columns.toSeq, "semi keeps the plain left schema")
+    val semiRows = ids(semi.select("pid"))
+    assert(semiRows.sorted == matchedPids.toSeq.sorted, "one row per matched left row")
+    assert(semiRows.sorted == ids(sql("LEFT SEMI", "p.pid")).sorted)
+
+    val anti = api("left_anti")
+    assert(anti.columns.toSeq == l.columns.toSeq, "anti keeps the plain left schema")
+    val antiRows = ids(anti.select("pid"))
+    assert(antiRows.sorted == (allPids -- matchedPids).toSeq.sorted)
+    assert(antiRows.sorted == ids(sql("LEFT ANTI", "p.pid")).sorted)
+
+    for (df <- Seq(inner, outer, semi, anti)) assertNoProduct(df)
   }
 
   test("ST_DWithin join: dilated-envelope grid plan, exact JTS answers") {
@@ -216,9 +251,7 @@ class StJoinRuleSpec extends SparkSpec {
     val q = spark.sql(
       """SELECT p.pid, b.bid FROM sj_pts p JOIN sj_boxes b
         |ON st_dwithin(p.geometry, b.geometry, 12.5)""".stripMargin)
-    val plan = q.queryExecution.executedPlan.toString()
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      s"SQL distance join still plans as a product:\n$plan")
+    assertNoProduct(q)
     val got = q.as[(Long, Long)].collect().toSet
     val ps = ptsDf.select("pid", "x", "y").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
@@ -252,7 +285,8 @@ class StJoinRuleSpec extends SparkSpec {
       val plan = q.queryExecution.executedPlan.toString()
       // the deliberate broadcast nested loop, with the bbox PRE-computed as
       // a per-row column (so the per-pair condition is pure arithmetic)
-      assert(plan.contains("BroadcastNestedLoop") && plan.contains("__g_lb"), plan)
+      assert(plan.contains("BroadcastNestedLoop") && plan.contains("__g_lb") &&
+        !plan.contains("__g_lcx"), plan)
       assert(!plan.contains("CartesianProduct"))
       val (pairs, _) = truth
       assert(q.as[(Long, Long)].collect().toSet == pairs)
@@ -262,6 +296,62 @@ class StJoinRuleSpec extends SparkSpec {
           |ON st_dwithin(p.geometry, b.geometry, 12.5)""".stripMargin)
       assert(d.queryExecution.executedPlan.toString().contains("BroadcastNestedLoop"))
       assert(pairs.subsetOf(d.as[(Long, Long)].collect().toSet))
-    } finally spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")
+      // the branch broadcasts whatever Spark's own size threshold says, on
+      // both entry points
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val viaApi = graft.engine.SpatialJoin.broadcastJoin(
+        ptsDf.withColumn("bbox", st.bboxOf(col("geometry"))),
+        boxesDf.withColumn("bbox", st.bboxOf(col("geometry")))).select("l_pid", "r_bid")
+      for (df <- Seq(viaApi, spark.sql(
+          """SELECT p.pid, b.bid FROM sj_pts p JOIN sj_boxes b
+            |ON st_intersects(p.geometry, b.geometry)""".stripMargin))) {
+        val plan = df.queryExecution.executedPlan.toString()
+        assert(plan.contains("BroadcastNestedLoop") && !plan.contains("CartesianProduct"), plan)
+        assert(df.as[(Long, Long)].collect().toSet == pairs)
+      }
+    } finally {
+      spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+    // file-backed canonical layers in a session that registers the rule the
+    // advertised way (spark.sql.extensions: it then runs inside Catalyst's
+    // operator-optimization batch, where the post-join exact filter is
+    // pushed back into the join condition) take the same branch. Triangles,
+    // not boxes: a bbox-only answer must differ from the exact one
+    val tris = (1 to 15).map { b =>
+      val (x0, y0) = (b * 20 - 170, b * 8 - 70)
+      (b.toLong, s"POLYGON (($x0 $y0, ${x0 + 30} $y0, $x0 ${y0 + 30}, $x0 $y0))")
+    }
+    val pairs = (for {
+      r <- ptsDf.select("pid", "x", "y").collect().toSeq
+      (bid, wkt) <- tris
+      if graft.geom.GeomCodec.fromWkt(wkt).intersects(graft.geom.GeomCodec.point(
+        r.getDouble(1), r.getDouble(2)))
+    } yield (r.getLong(0), bid)).toSet
+    val (boxPairs, _) = truth
+    assert(pairs.nonEmpty && pairs.size < boxPairs.size)
+    val dir = java.nio.file.Files.createTempDirectory("sj-parquet").toString
+    ptsDf.select(col("pid"), col("geometry"), st.bboxOf(col("geometry")).as("bbox"))
+      .write.parquet(s"$dir/pts")
+    tris.toDF("bid", "wkt").withColumn("geometry", st.geomFromText(col("wkt")))
+      .select(col("bid"), col("geometry"), st.bboxOf(col("geometry")).as("bbox"))
+      .write.parquet(s"$dir/boxes")
+    withExtensionsSession { s2 =>
+      s2.read.parquet(s"$dir/pts").createOrReplaceTempView("sj_pts_pq")
+      s2.read.parquet(s"$dir/boxes").createOrReplaceTempView("sj_boxes_pq")
+      val pq = s2.sql(
+        """SELECT p.pid, b.bid FROM sj_pts_pq p JOIN sj_boxes_pq b
+          |ON st_intersects(p.geometry, b.geometry)""".stripMargin)
+      assert(pq.queryExecution.executedPlan.toString().contains("BroadcastNestedLoop"))
+      assert(pq.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == pairs)
+      // only the right side's id survives the join: column pruning narrows
+      // both inputs before the rule sees them
+      val perBox = s2.sql(
+        """SELECT b.bid, count(*) AS n FROM sj_pts_pq p JOIN sj_boxes_pq b
+          |ON st_intersects(p.geometry, b.geometry) GROUP BY b.bid""".stripMargin)
+      assert(perBox.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
+        pairs.groupBy(_._2).map { case (b, ps) => b -> ps.size.toLong },
+        perBox.queryExecution.optimizedPlan.toString)
+    }
   }
 }
