@@ -19,8 +19,29 @@ object Verify {
     // SPARK_GRAFT_ONLY=name1,name2 restricts the dump (iteration aid; the
     // driver never sets it, so its runs always cover every query)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    def selected(name: String): Boolean = only.forall(_.contains(name))
+    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    // — a tab or CR in the oracle SQL would otherwise make a json.load of
+    // the file fail and silently zero the correctness check.
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    // the oracle file is written BEFORE the sweep: a query that throws, or
+    // a sweep cut short, leaves an oracle entry with no output beside it,
+    // which tools/crosscheck.py counts as failed instead of never seeing
+    // the name
+    val json = SparkEntry.oracleSql
+      .filter { case (name, _) => selected(name) }
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       // per-query wall-clock on stderr: when a driver gate run comes back
       // empty/partial, its own log shows how far the sweep got and which
@@ -51,21 +72,6 @@ object Verify {
         .foreach(_.unpersist(blocking = true))
       if (sys.env.get("SPARK_GRAFT_VERIFY_GC").contains("1")) System.gc()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
 }

@@ -19,7 +19,14 @@ import graft.geom.{GeomCodec, Orthodromic}
 class GeoFrame(val df: DataFrame, val meta: Option[LayerMeta] = None) {
 
   private def geom = col("geometry")
-  private def lift(d: DataFrame) = new GeoFrame(d, meta)
+
+  /** A frame derived from this one keeps the layer meta but not the
+    * recorded extent: that describes the layer as opened, and sizing a
+    * filtered (possibly empty) frame's k-NN window from it would cost extra
+    * doubling rounds where one aggregate does.
+    */
+  private[graft] def lift(d: DataFrame) =
+    new GeoFrame(d, meta.map(_.copy(extent = None)))
 
   def count(): Long = df.count()
 
@@ -176,40 +183,46 @@ class GeoFrame(val df: DataFrame, val meta: Option[LayerMeta] = None) {
     val w = Orthodromic.searchWindow(lon, lat, km)
     val pruned = df.filter(
       st.bboxIntersectsWrapped(col("bbox"), w.getMinX, w.getMinY, w.getMaxX, w.getMaxY))
-    val withDist =
-      if (df.columns.contains("x"))
-        // point layer: pure column arithmetic, no UDF, full codegen
-        pruned.withColumn("distance", st.orthodromicKm(lit(lon), lit(lat), col("x"), col("y")))
-      else
-        pruned.withColumn("distance", st.orthodromicDistanceKm(geom, lon, lat))
-    lift(withDist.filter(col("distance") <= km).orderBy(col("distance")))
+    lift(withDistance(pruned, lon, lat).filter(col("distance") <= km)
+      .orderBy(col("distance")))
   }
+
+  /** Side (degrees) of a square window expected to hold about 2k rows
+    * (reference window estimate: SpatialTopologyUtils.java:200-238). Taken
+    * from the layer's recorded extent and count when the frame carries them
+    * (no job), else from one extent/count aggregate; None when the
+    * aggregate finds the frame empty. A recorded extent may be stale: it
+    * only sizes a window, so callers must not read correctness into it.
+    */
+  private def densityWindowSide(k: Int): Option[Double] =
+    meta.flatMap(_.extent).orElse(LayerExtent.of(df)).map { e =>
+      val area = math.max((e.maxx - e.minx) * (e.maxy - e.miny), 1e-12)
+      math.max(1e-6, math.sqrt(2.0 * math.max(k, 1) * area / math.max(e.count, 1L)))
+    }
+
+  /** Orthodromic distance (km) from (lon, lat) as column `distance`: pure
+    * column arithmetic on point layers, the geometry UDF otherwise. */
+  private def withDistance(d: DataFrame, lon: Double, lat: Double): DataFrame =
+    if (d.columns.contains("x"))
+      d.withColumn("distance", st.orthodromicKm(lit(lon), lit(lat), col("x"), col("y")))
+    else d.withColumn("distance", st.orthodromicDistanceKm(geom, lon, lat))
 
   /** k-NN `findClosestPointsTo` — density-estimated window sized for ~2k
     * candidates, then exact distance sort + take(k)
-    * (reference: SimplePointLayer.java:61-77, LIMIT_RESULTS=100 at :34;
-    * window estimate SpatialTopologyUtils.java:200-238). The limit becomes a
-    * TakeOrdered physical op — no global sort materialization.
+    * (reference: SimplePointLayer.java:61-77, LIMIT_RESULTS=100 at :34).
+    * The limit becomes a TakeOrdered physical op — no global sort
+    * materialization. Approximate like the reference: rows outside the
+    * window are never considered ([[knnCandidates]] is the exact verb).
     */
-  def closestPoints(lon: Double, lat: Double, k: Int = 100): GeoFrame = {
-    val bb = boundingBox().head()
-    if (bb.isNullAt(0))   // empty layer: no extent, no neighbors
-      return lift(df.limit(0).withColumn("distance", lit(0.0)))
-    val (minx, miny, maxx, maxy) =
-      (bb.getDouble(0), bb.getDouble(1), bb.getDouble(2), bb.getDouble(3))
-    val total = math.max(df.count(), 1L)
-    val area = math.max((maxx - minx) * (maxy - miny), 1e-12)
-    // density estimate: window side so that ~2k points fall inside
-    val side = math.sqrt(2.0 * k * area / total)
-    val half = side / 2
-    val cand = df.filter(
-      st.bboxIntersects(col("bbox"), lon - half, lat - half, lon + half, lat + half))
-    val withDist =
-      if (df.columns.contains("x"))
-        cand.withColumn("distance", st.orthodromicKm(lit(lon), lit(lat), col("x"), col("y")))
-      else cand.withColumn("distance", st.orthodromicDistanceKm(geom, lon, lat))
-    lift(withDist.orderBy(col("distance")).limit(k))
-  }
+  def closestPoints(lon: Double, lat: Double, k: Int = 100): GeoFrame =
+    densityWindowSide(k) match {
+      case None => lift(df.limit(0).withColumn("distance", lit(0.0)))
+      case Some(side) =>
+        val half = side / 2
+        val cand = df.filter(
+          st.bboxIntersects(col("bbox"), lon - half, lat - half, lon + half, lat + half))
+        lift(withDistance(cand, lon, lat).orderBy(col("distance")).limit(k))
+    }
 
   /** PROVABLY-exact k-NN candidate set with window pruning: grow a
     * density-estimated degree window (×2 per round) until the k-th candidate
@@ -219,29 +232,25 @@ class GeoFrame(val df: DataFrame, val meta: Option[LayerMeta] = None) {
     * scan contains every row a FULL scan's top-k could select, including
     * under any ordering on a rounding of distance coarser than `slackKm`
     * (monotone rounding keeps the k-th rank; the slack absorbs round-ties at
-    * the boundary). Each round is one bbox-pruned scan + one k-row
-    * TakeOrdered; typical cost is a single round. This is the plan that
-    * survives 100×: the full-scan top-k only rides on TakeOrdered, while
-    * this also prunes the scan itself (reference window estimation:
-    * SpatialTopologyUtils.java:200-238).
+    * the boundary). This is the plan that survives 100×: the full-scan top-k
+    * only rides on TakeOrdered, while this also prunes the scan itself.
+    *
+    * Jobs: one per verification round (a bbox-pruned scan into a k-row
+    * TakeOrdered, collected), typically a single round. The first window
+    * comes from the recorded extent and count of a catalog layer, so no
+    * whole-layer job runs; other frames pay one extent/count aggregate.
     */
   def knnCandidates(lon: Double, lat: Double, k: Int, slackKm: Double = 0.001,
       initialSide: Double = 0.0): GeoFrame = {
-    // `initialSide` > 0 skips the size-estimation job entirely — the
-    // estimate only affects how many doubling rounds run, never correctness
-    // (the verification bound does that), so a rough caller hint is safe.
+    // `initialSide` > 0 skips the size estimate. It matters only for frames
+    // that do not come from the catalog (SparkEntry sp_knn, BenchScale):
+    // those would otherwise pay the extent/count aggregate. The estimate
+    // only affects how many doubling rounds run, never correctness (the
+    // verification bound does that), so a rough caller hint is safe.
     require(k >= 1, s"k must be >= 1 (got $k)")
-    var side = if (initialSide > 0) initialSide else {
-      val s = df.agg(
-        min(col("bbox")("minx")), min(col("bbox")("miny")),
-        max(col("bbox")("maxx")), max(col("bbox")("maxy")),
-        org.apache.spark.sql.functions.count(lit(1))).head()
-      if (s.isNullAt(0))   // empty layer: no extent, no neighbors
-        return lift(df.limit(0).withColumn("distance", lit(0.0)))
-      val area = math.max(
-        (s.getDouble(2) - s.getDouble(0)) * (s.getDouble(3) - s.getDouble(1)), 1e-12)
-      val total = math.max(s.getLong(4), 1L)
-      math.max(1e-6, math.sqrt(2.0 * math.max(k, 1) * area / total))
+    var side = if (initialSide > 0) initialSide else densityWindowSide(k) match {
+      case Some(s) => s
+      case None => return lift(df.limit(0).withColumn("distance", lit(0.0)))
     }
     var result: Option[DataFrame] = None
     var iters = 0
@@ -262,23 +271,21 @@ class GeoFrame(val df: DataFrame, val meta: Option[LayerMeta] = None) {
         if (lon - half < -180)
           Some(st.bboxIntersects(col("bbox"), lon - half + 360, lat - half, 180.0, lat + half))
         else None).flatten
-      val pruned = df.filter(wraps.foldLeft(rawWindow)(_ || _))
-      val withDist =
-        if (df.columns.contains("x"))
-          pruned.withColumn("distance", st.orthodromicKm(lit(lon), lit(lat), col("x"), col("y")))
-        else pruned.withColumn("distance", st.orthodromicDistanceKm(geom, lon, lat))
+      val withDist = withDistance(df.filter(wraps.foldLeft(rawWindow)(_ || _)), lon, lat)
       iters += 1
       if (iters >= 40) {
         // side has doubled past any earthly extent — the window holds
         // everything, trivially a superset (covers the total-rows < k case)
         result = Some(withDist)
       } else {
+        // a top-level TakeOrdered collect: one job; n and kth are read off
+        // the collected rows
+        // (nulls sort first, so the last row carries the largest distance)
         val top = withDist.select(col("distance")).orderBy(col("distance")).limit(k)
-          .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"),
-            max(col("distance")).as("kth")).head()
-        val n = top.getLong(0)
-        if (n >= k &&
-            top.getDouble(1) + slackKm <= Orthodromic.minDistanceOutsideWindowKm(lon, lat, half))
+          .collect()
+        if (top.length >= k && !top.last.isNullAt(0) &&
+            top.last.getDouble(0) + slackKm <=
+              Orthodromic.minDistanceOutsideWindowKm(lon, lat, half))
           result = Some(withDist)
         else side *= 2
       }
@@ -337,7 +344,7 @@ class GeoFrame(val df: DataFrame, val meta: Option[LayerMeta] = None) {
   def asDynamicLayer(viewName: String, sqlExpr: String): GeoFrame = {
     val v = df.filter(expr(sqlExpr))
     v.createOrReplaceTempView(viewName)
-    new GeoFrame(v, meta)
+    lift(v)
   }
 
   // --------------------------------------------------------- geometry ops

@@ -3,8 +3,9 @@ package graft.engine
 import java.nio.file.{Files, Paths, Path}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.functions.st
 
@@ -23,7 +24,35 @@ case class LayerMeta(
     // directory-bucket split width of a bucketed clustered layout
     // (__bucket = __sfc >> bucketShift); queries MUST use the write-time
     // value or bucket partition pruning silently drops rows
-    bucketShift: Int = graft.plans.SpatialLayout.BucketShift)
+    bucketShift: Int = graft.plans.SpatialLayout.BucketShift,
+    // the data schema as written: opening the layer reads with it instead
+    // of inferring it from the files (an inference read is a Spark job)
+    schema: Option[StructType] = None,
+    // extent and row count as of the last write that knew them — see
+    // [[LayerExtent]]; None for layers without a bbox, or empty at write
+    extent: Option[LayerExtent] = None)
+
+/** A layer's envelope and row count, recorded when the writer already knows
+  * them (the reference keeps the envelope in the R-tree root,
+  * RTreeIndex.java:739-741). Only an ESTIMATE: appends do not update it, so
+  * it sizes the first k-NN window ([[GeoFrame.knnCandidates]]) and never
+  * answers or prunes a query.
+  */
+case class LayerExtent(minx: Double, miny: Double, maxx: Double, maxy: Double,
+    count: Long)
+
+object LayerExtent {
+  /** Extent and row count of `df`'s `bbox` column in one aggregate (one
+    * job); None when `df` is empty. */
+  def of(df: DataFrame): Option[LayerExtent] = {
+    val s = df.agg(
+      min(col("bbox")("minx")), min(col("bbox")("miny")),
+      max(col("bbox")("maxx")), max(col("bbox")("maxy")), count(lit(1))).head()
+    if (s.isNullAt(0)) None
+    else Some(LayerExtent(s.getDouble(0), s.getDouble(1), s.getDouble(2),
+      s.getDouble(3), s.getLong(4)))
+  }
+}
 
 /** File-backed layer catalog: one parquet table + one JSON metadata file per
   * layer under `warehouseDir`. The Spark analog of the reference's
@@ -59,6 +88,13 @@ class SpatialCatalog(spark: SparkSession, warehouseDir: String) {
     node.put("bucketShift", m.bucketShift)
     val arr = node.putArray("attributes")
     m.attributes.foreach(arr.add)
+    m.schema.foreach(s =>
+      node.set[com.fasterxml.jackson.databind.JsonNode]("schema", om.readTree(s.json)))
+    m.extent.foreach { e =>
+      val x = node.putObject("extent")
+      x.put("minx", e.minx); x.put("miny", e.miny)
+      x.put("maxx", e.maxx); x.put("maxy", e.maxy); x.put("count", e.count)
+    }
     val tmp = dir(m.name).resolve(
       s"layer.json.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
     Files.writeString(tmp, om.writeValueAsString(node))
@@ -106,11 +142,23 @@ class SpatialCatalog(spark: SparkSession, warehouseDir: String) {
     def s(k: String): String = Option(n.get(k)).map(_.asText).getOrElse("")
     val attrs = Option(n.get("attributes")).toSeq
       .flatMap(_.elements.asScala.map(_.asText).toSeq)
+    // layer files written before schema/extent were recorded load with
+    // None for both: they fall back to an inferred schema and an aggregate
     LayerMeta(s("name"), Option(n.get("gtype")).map(_.asInt).getOrElse(0),
       s("crs"), s("encoder"), s("indexType"), attrs,
       Option(n.get("bucketShift")).map(_.asInt)
-        .getOrElse(graft.plans.SpatialLayout.BucketShift))
+        .getOrElse(graft.plans.SpatialLayout.BucketShift),
+      Option(n.get("schema")).map(j =>
+        DataType.fromJson(om.writeValueAsString(j)).asInstanceOf[StructType]),
+      Option(n.get("extent")).map(e => LayerExtent(e.get("minx").asDouble,
+        e.get("miny").asDouble, e.get("maxx").asDouble, e.get("maxy").asDouble,
+        e.get("count").asLong)))
   }
+
+  /** Parquet reader that takes the recorded schema when there is one, so
+    * no schema-inference job runs. */
+  private def reader(meta: LayerMeta): DataFrameReader =
+    meta.schema.fold(spark.read)(spark.read.schema(_))
 
   // ---------------------------------------------------------------- layers
 
@@ -129,13 +177,21 @@ class SpatialCatalog(spark: SparkSession, warehouseDir: String) {
     */
   def createLayer(name: String, df: DataFrame, meta: LayerMeta): GeoFrame = {
     require(!layerExists(name), s"layer $name already exists")
-    if (Set("hilbert", "zorder", "geohash").contains(meta.indexType)
-        && df.columns.contains("bbox"))
-      graft.plans.SpatialLayout.writeClustered(df, dataPath(name), meta.indexType)
-    else
-      df.write.mode("overwrite").parquet(dataPath(name))
-    writeMeta(meta.copy(name = name))
-    getLayer(name)
+    val written =
+      if (Set("hilbert", "zorder", "geohash").contains(meta.indexType)
+          && df.columns.contains("bbox"))
+        graft.plans.SpatialLayout.writeClustered(df, dataPath(name), meta.indexType)
+      else {
+        df.write.mode("overwrite").parquet(dataPath(name))
+        df.schema
+      }
+    val recorded = meta.copy(name = name, schema = Some(written))
+    val data = reader(recorded).parquet(dataPath(name))
+    // extent and count: one aggregate over the written bbox column
+    val full = recorded.copy(
+      extent = if (df.columns.contains("bbox")) LayerExtent.of(data) else None)
+    writeMeta(full)
+    new GeoFrame(data, Some(full))
   }
 
   /** Create a point layer from x/y columns — the `spatial.addPointLayerXY`
@@ -233,7 +289,7 @@ class SpatialCatalog(spark: SparkSession, warehouseDir: String) {
       throw new IllegalArgumentException(
         s"no such layer '$name' (available: ${listLayers().sorted.mkString(", ")})")
     val meta = readMeta(name)
-    new GeoFrame(spark.read.parquet(dataPath(name)), Some(meta))
+    new GeoFrame(reader(meta).parquet(dataPath(name)), Some(meta))
   }
 
   /** `spatial.removeLayer` (reference: SpatialProcedures.java:625). */
@@ -254,18 +310,31 @@ class SpatialCatalog(spark: SparkSession, warehouseDir: String) {
     withLayerLock(name) {
       require(layerExists(name), s"layer $name does not exist")
       df.write.mode("append").parquet(dataPath(name))
+      // the recorded extent and count go stale here on purpose (keeping
+      // them current would cost a job per append); columns the layer did
+      // not have yet join the recorded schema, so they stay readable
+      val meta = readMeta(name)
+      meta.schema.foreach { s =>
+        val added = df.schema.fields.filterNot(f => s.fieldNames.contains(f.name))
+        if (added.nonEmpty)
+          writeMeta(meta.copy(schema = Some(StructType(s.fields ++ added))))
+      }
     }
 
   /** Remove by id (anti-join delete), returning the index-count delta like
     * the reference's removeNodes (reference: SpatialProcedures.java:690-703).
+    * The recorded count becomes the remaining count; the recorded extent
+    * stays (it still covers every remaining row).
     */
   def removeFromLayer(name: String, ids: Seq[String]): Long = withLayerLock(name) {
-    val layer = getLayer(name).df
+    val current = getLayer(name)
+    val meta = current.meta.get
+    val layer = current.df
     val before = layer.count()
     val remaining = layer.filter(!col("id").isin(ids: _*))
     val tmp = dataPath(name) + "_tmp"
     remaining.write.mode("overwrite").parquet(tmp)
-    val after = spark.read.parquet(tmp).count()
+    val after = reader(meta).parquet(tmp).count()
     val target = Paths.get(dataPath(name))
     def rm(p: Path): Unit = {
       if (Files.isDirectory(p)) Files.list(p).iterator.asScala.foreach(rm)
@@ -273,6 +342,8 @@ class SpatialCatalog(spark: SparkSession, warehouseDir: String) {
     }
     rm(target)
     Files.move(Paths.get(tmp), target)
+    writeMeta(meta.copy(
+      extent = meta.extent.filter(_ => after > 0).map(_.copy(count = after))))
     before - after
   }
 }

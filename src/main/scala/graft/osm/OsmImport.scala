@@ -392,8 +392,8 @@ object OsmImport {
       json, layer.df.columns.toSet)
     val base = layer.df.filter(compiled.rowPredicate)
     compiled.chain match {
-      case None => new GeoFrame(base, layer.meta)
-      case Some(ch) if ch.dead => new GeoFrame(base.limit(0), layer.meta)
+      case None => layer.lift(base)
+      case Some(ch) if ch.dead => layer.lift(base.limit(0))
       case Some(ch) =>
         val nodeColOf = Map("node_osm_id" -> "node_id", "timestamp" -> "ts")
         var hits = st8.wayNds.filter(col("seq") === ch.seq)
@@ -409,9 +409,8 @@ object OsmImport {
           hits = hits.join(st8.nodes.filter(pred).select("node_id"),
             Seq("node_id"), "left_semi")
         }
-        new GeoFrame(
-          base.join(hits.select("way_id").distinct(), Seq("way_id"), "left_semi"),
-          layer.meta)
+        layer.lift(
+          base.join(hits.select("way_id").distinct(), Seq("way_id"), "left_semi"))
     }
   }
 

@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Storage-layout analog of the reference's spatial indexes (SURVEY §4):
   * instead of an in-graph R-tree / space-filling-curve b-tree, layers are
@@ -116,10 +117,11 @@ object SpatialLayout {
     * contiguous curve ranges to files, the within-partition sort tightens
     * parquet row-group min/max stats on bbox/x/y, so window queries prune at
     * the scan. This is the 100 TB path: curve-contiguous files ⟺ R-tree
-    * leaves.
+    * leaves. Returns the schema written: the input's, plus `__sfc` for a
+    * curve `indexType`.
     */
   def writeClustered(df: DataFrame, path: String,
-      indexType: String = "hilbert", numPartitions: Int = 0): Unit = {
+      indexType: String = "hilbert", numPartitions: Int = 0): StructType = {
     // point layers key on x/y; general layers key on the bbox center (the
     // same centroid-keyed curve the reference uses for non-point RTree leaves)
     val (kx, ky) =
@@ -142,6 +144,7 @@ object SpatialLayout {
     out.write.mode("overwrite").parquet(path)
     if (keyed.columns.contains("__sfc"))
       writeLayoutMeta(df.sparkSession, path, LayoutMeta(indexType, -1))
+    out.schema
   }
 
   // ------------------------------------------- incremental bucketed layout

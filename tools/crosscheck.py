@@ -21,7 +21,10 @@ for t in "region nation customer supplier part orders lineitem events documents 
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-names = sorted([os.path.basename(d) for d in glob.glob(f"{outdir}/*") if os.path.isdir(d)])
+# every oracle key AND every output dir: a query that threw before writing
+# has an oracle entry but no dir, and must count as NO OUTPUT, not vanish
+dirs = {os.path.basename(d) for d in glob.glob(f"{outdir}/*") if os.path.isdir(d)}
+names = sorted(dirs | set(oracle))
 
 n_ok = n_bad = 0
 for name in names:
