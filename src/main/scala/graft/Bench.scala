@@ -7,6 +7,8 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      // the same session time zone as graft.Verify and the tests
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Spark 4 defaults, pinned explicitly: AQE re-plans at runtime and its

@@ -178,26 +178,44 @@ class GeoFrame(val df: DataFrame, val meta: Option[LayerMeta] = None) {
     * orthodromic distance → filter → ascending sort
     * (reference: SpatialProcedures.java:864-880, GeoPipeline.java:304-311).
     * Adds column `distance` (km).
+    *
+    * Jobs: two per call under adaptive execution (the pruned scan into a
+    * one-partition exchange, then the sort), one layer scan. The sort runs
+    * in one partition (`sortedInOnePartition`), so no range-sampling job
+    * scans the layer a second time. The result stays lazy.
     */
   def withinDistanceKm(lon: Double, lat: Double, km: Double): GeoFrame = {
     val w = Orthodromic.searchWindow(lon, lat, km)
     val pruned = df.filter(
       st.bboxIntersectsWrapped(col("bbox"), w.getMinX, w.getMinY, w.getMaxX, w.getMaxY))
-    lift(withDistance(pruned, lon, lat).filter(col("distance") <= km)
-      .orderBy(col("distance")))
+    lift(sortedInOnePartition(
+      withDistance(pruned, lon, lat).filter(col("distance") <= km), col("distance")))
   }
 
-  /** Side (degrees) of a square window expected to hold about 2k rows
-    * (reference window estimate: SpatialTopologyUtils.java:200-238). Taken
-    * from the layer's recorded extent and count when the frame carries them
-    * (no job), else from one extent/count aggregate; None when the
-    * aggregate finds the frame empty. A recorded extent may be stale: it
-    * only sizes a window, so callers must not read correctness into it.
+  /** A total ascending order on `key` without a global sort: one
+    * single-partition exchange, then a local sort. A global `orderBy` would
+    * first run a range-sampling job over its input, which for a pruned
+    * lookup rescans the layer. The reference sorts these results in one
+    * in-memory pass too (GeoPipeline.java:304-311), so the single sorting
+    * task scales no worse than it does; the scan before it stays parallel.
     */
-  private def densityWindowSide(k: Int): Option[Double] =
+  private def sortedInOnePartition(d: DataFrame, key: Column): DataFrame =
+    d.repartition(1).sortWithinPartitions(key)
+
+  /** Side (degrees) of a square window expected to hold about
+    * `expectedRows` rows (reference window estimate:
+    * SpatialTopologyUtils.java:200-238). Taken from the layer's recorded
+    * extent and count when the frame carries them (no job), else from one
+    * extent/count aggregate; None when the aggregate finds the frame empty.
+    * The estimate assumes the layer's average density, so a caller that
+    * needs its window to be enough on the first try asks for more rows than
+    * it keeps. A recorded extent may be stale: it only sizes a window, so
+    * callers must not read correctness into it.
+    */
+  private def densityWindowSide(expectedRows: Long): Option[Double] =
     meta.flatMap(_.extent).orElse(LayerExtent.of(df)).map { e =>
       val area = math.max((e.maxx - e.minx) * (e.maxy - e.miny), 1e-12)
-      math.max(1e-6, math.sqrt(2.0 * math.max(k, 1) * area / math.max(e.count, 1L)))
+      math.max(1e-6, math.sqrt(math.max(expectedRows, 1L) * area / math.max(e.count, 1L)))
     }
 
   /** Orthodromic distance (km) from (lon, lat) as column `distance`: pure
@@ -215,7 +233,7 @@ class GeoFrame(val df: DataFrame, val meta: Option[LayerMeta] = None) {
     * window are never considered ([[knnCandidates]] is the exact verb).
     */
   def closestPoints(lon: Double, lat: Double, k: Int = 100): GeoFrame =
-    densityWindowSide(k) match {
+    densityWindowSide(2L * k) match {
       case None => lift(df.limit(0).withColumn("distance", lit(0.0)))
       case Some(side) =>
         val half = side / 2
@@ -235,10 +253,19 @@ class GeoFrame(val df: DataFrame, val meta: Option[LayerMeta] = None) {
     * the boundary). This is the plan that survives 100×: the full-scan top-k
     * only rides on TakeOrdered, while this also prunes the scan itself.
     *
-    * Jobs: one per verification round (a bbox-pruned scan into a k-row
-    * TakeOrdered, collected), typically a single round. The first window
-    * comes from the recorded extent and count of a catalog layer, so no
-    * whole-layer job runs; other frames pay one extent/count aggregate.
+    * Jobs: one per verification round (a bbox-pruned scan into a 2k-row
+    * TakeOrdered with every column, collected), typically a single round:
+    * the first window is sized for 16k rows at the layer's average density,
+    * which hot spots and sparse regions alike usually fill. The first
+    * window comes from the recorded extent and count of a catalog layer, so
+    * no whole-layer job runs; other frames pay one extent/count aggregate.
+    *
+    * Result: when the round that verifies also holds every candidate — fewer
+    * than 2k rows came back, or the last collected distance exceeds the
+    * k-th plus `slackKm` — the collected rows come back as a local frame,
+    * and the caller's top-k reads no file. Otherwise (more than k rows tied
+    * within the slack of the k-th) the result is the lazy window scan, as
+    * it is when the window grows past 40 rounds.
     */
   def knnCandidates(lon: Double, lat: Double, k: Int, slackKm: Double = 0.001,
       initialSide: Double = 0.0): GeoFrame = {
@@ -248,7 +275,7 @@ class GeoFrame(val df: DataFrame, val meta: Option[LayerMeta] = None) {
     // only affects how many doubling rounds run, never correctness (the
     // verification bound does that), so a rough caller hint is safe.
     require(k >= 1, s"k must be >= 1 (got $k)")
-    var side = if (initialSide > 0) initialSide else densityWindowSide(k) match {
+    var side = if (initialSide > 0) initialSide else densityWindowSide(16L * k) match {
       case Some(s) => s
       case None => return lift(df.limit(0).withColumn("distance", lit(0.0)))
     }
@@ -278,16 +305,22 @@ class GeoFrame(val df: DataFrame, val meta: Option[LayerMeta] = None) {
         // everything, trivially a superset (covers the total-rows < k case)
         result = Some(withDist)
       } else {
-        // a top-level TakeOrdered collect: one job; n and kth are read off
-        // the collected rows
-        // (nulls sort first, so the last row carries the largest distance)
-        val top = withDist.select(col("distance")).orderBy(col("distance")).limit(k)
-          .collect()
-        if (top.length >= k && !top.last.isNullAt(0) &&
-            top.last.getDouble(0) + slackKm <=
-              Orthodromic.minDistanceOutsideWindowKm(lon, lat, half))
-          result = Some(withDist)
-        else side *= 2
+        // a top-level TakeOrdered collect: one job; the bound is checked on
+        // row k-1 (nulls sort first, so a null there fails it)
+        val top = withDist.orderBy(col("distance")).limit(2 * k).collect()
+        val d = withDist.schema.fieldIndex("distance")
+        if (top.length >= k && !top(k - 1).isNullAt(d) &&
+            top(k - 1).getDouble(d) + slackKm <=
+              Orthodromic.minDistanceOutsideWindowKm(lon, lat, half)) {
+          // rows past the collected ones are at least as far as the last
+          // one: if that is beyond the k-th plus the slack, none of them
+          // can enter a top-k, and the collected rows are the whole answer
+          val complete = top.length < 2 * k ||
+            top.last.getDouble(d) > top(k - 1).getDouble(d) + slackKm
+          result = Some(if (complete)
+            df.sparkSession.createDataFrame(java.util.Arrays.asList(top: _*), withDist.schema)
+          else withDist)
+        } else side *= 2
       }
     }
     lift(result.get)
@@ -297,16 +330,16 @@ class GeoFrame(val df: DataFrame, val meta: Option[LayerMeta] = None) {
     * geometry within maxDistance (degrees), sorted by snap distance
     * (reference: SpatialProcedures.java:850-862 →
     * SpatialTopologyUtils.findClosestEdges:95-140).
+    * Jobs: two per call, one layer scan, as in [[withinDistanceKm]].
     */
   def closestEdges(lon: Double, lat: Double, maxDistance: Double): GeoFrame = {
     val pt = GeomCodec.point(lon, lat)
     val pruned = df.filter(st.bboxIntersects(col("bbox"),
       lon - maxDistance, lat - maxDistance, lon + maxDistance, lat + maxDistance))
-    lift(pruned
+    lift(sortedInOnePartition(pruned
       .withColumn("snapped", st.closestPointTo(geom, lon, lat))
       .withColumn("snap_distance", st.distance(col("snapped"), lit(GeomCodec.toWkb(pt))))
-      .filter(col("snap_distance") <= maxDistance)
-      .orderBy(col("snap_distance")))
+      .filter(col("snap_distance") <= maxDistance), col("snap_distance")))
   }
 
   // ------------------------------------------------ property/CQL filtering
@@ -458,8 +491,10 @@ object GeoFrame {
   /** Open a curve-clustered layer written by [[graft.plans.SpatialLayout]]
     * directly from its path, taking indexType AND bucketShift from the
     * layout sidecar the writer stamped — so [[GeoFrame.windowViaCurve]]
-    * always prunes with the write-time parameters, by construction. Layers
-    * predating the sidecar fall back to the given defaults.
+    * always prunes with the write-time parameters, by construction — and
+    * reading with the schema it records, so opening runs no job. Layers
+    * predating the sidecar fall back to the given defaults, and sidecars
+    * without a schema to an inferred one.
     */
   def openClustered(spark: org.apache.spark.sql.SparkSession, path: String,
       name: String = "layer", gtype: Int = 0,
@@ -469,6 +504,6 @@ object GeoFrame {
       indexType = layout.map(_.indexType).getOrElse("hilbert"),
       bucketShift = layout.map(_.bucketShift).filter(_ >= 0)
         .getOrElse(graft.plans.SpatialLayout.BucketShift))
-    new GeoFrame(spark.read.parquet(path), Some(meta))
+    new GeoFrame(graft.plans.SpatialLayout.readClustered(spark, path, layout), Some(meta))
   }
 }

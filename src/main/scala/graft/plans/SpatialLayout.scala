@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructField, StructType}
 
 /** Storage-layout analog of the reference's spatial indexes (SURVEY §4):
   * instead of an in-graph R-tree / space-filling-curve b-tree, layers are
@@ -143,7 +143,8 @@ object SpatialLayout {
     else keyed.repartition(parts)
     out.write.mode("overwrite").parquet(path)
     if (keyed.columns.contains("__sfc"))
-      writeLayoutMeta(df.sparkSession, path, LayoutMeta(indexType, -1))
+      writeLayoutMeta(df.sparkSession, path,
+        LayoutMeta(indexType, -1, Some(asRead(out.schema).asInstanceOf[StructType])))
     out.schema
   }
 
@@ -170,9 +171,37 @@ object SpatialLayout {
 
   /** Physical layout of a clustered layer: curve + bucket split width.
     * `bucketShift == -1` means the layer is range-clustered but NOT
-    * directory-bucketed ([[writeClustered]]).
+    * directory-bucketed ([[writeClustered]]). `schema` is the schema
+    * `spark.read.parquet(path)` would infer — the data columns, then the
+    * `__bucket` partition column of a bucketed layout — so readers open the
+    * layer without an inference job ([[readClustered]]); None in sidecars
+    * written before it was recorded, whose readers infer it.
     */
-  case class LayoutMeta(indexType: String, bucketShift: Int)
+  case class LayoutMeta(indexType: String, bucketShift: Int,
+      schema: Option[StructType] = None)
+
+  /** A written type as a parquet read reports it: every field, element and
+    * map value nullable. */
+  private def asRead(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asRead(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asRead(a.elementType), containsNull = true)
+    case m: MapType => MapType(asRead(m.keyType), asRead(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** The read schema of a bucketed layout written from `keyed` (a
+    * [[withCurveKeys]] frame): its data columns, then `__bucket`, which a
+    * partitioned read always lists last. */
+  private def bucketedSchema(keyed: StructType): StructType =
+    StructType(asRead(keyed).asInstanceOf[StructType].fields.filterNot(_.name == "__bucket") :+
+      StructField("__bucket", IntegerType, nullable = true))
+
+  /** Open a clustered layer with the schema its sidecar records, so no
+    * schema-inference job runs; without one, the schema is inferred. */
+  def readClustered(spark: org.apache.spark.sql.SparkSession, path: String,
+      layout: Option[LayoutMeta]): DataFrame =
+    layout.flatMap(_.schema).fold(spark.read)(spark.read.schema(_)).parquet(path)
 
   private def fsFor(spark: org.apache.spark.sql.SparkSession, path: String) =
     org.apache.hadoop.fs.FileSystem.get(
@@ -183,8 +212,9 @@ object SpatialLayout {
     val fs = fsFor(spark, path)
     val p = new org.apache.hadoop.fs.Path(path, LayoutSidecar)
     val out = fs.create(p, true)
+    val schema = m.schema.fold("")(s => s""","schema":${s.json}""")
     try out.write(
-      s"""{"indexType":"${m.indexType}","bucketShift":${m.bucketShift}}"""
+      s"""{"indexType":"${m.indexType}","bucketShift":${m.bucketShift}$schema}"""
         .getBytes("UTF-8"))
     finally out.close()
   }
@@ -206,7 +236,9 @@ object SpatialLayout {
       val node = new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(new String(bytes, "UTF-8"))
       Some(LayoutMeta(node.get("indexType").asText,
-        Option(node.get("bucketShift")).map(_.asInt).getOrElse(-1)))
+        Option(node.get("bucketShift")).map(_.asInt).getOrElse(-1),
+        Option(node.get("schema")).map(j =>
+          DataType.fromJson(j.toString).asInstanceOf[StructType])))
     }
   }
 
@@ -235,10 +267,11 @@ object SpatialLayout {
     */
   def writeClusteredBuckets(df: DataFrame, path: String,
       indexType: String = "hilbert", bucketShift: Int = BucketShift): Unit = {
-    withCurveKeys(df, indexType, bucketShift)
-      .repartition(col("__bucket")).sortWithinPartitions("__sfc")
+    val keyed = withCurveKeys(df, indexType, bucketShift)
+    keyed.repartition(col("__bucket")).sortWithinPartitions("__sfc")
       .write.mode("overwrite").partitionBy("__bucket").parquet(path)
-    writeLayoutMeta(df.sparkSession, path, LayoutMeta(indexType, bucketShift))
+    writeLayoutMeta(df.sparkSession, path,
+      LayoutMeta(indexType, bucketShift, Some(bucketedSchema(keyed.schema))))
   }
 
   /** Incremental insert into a bucketed clustered layer, with the
@@ -272,8 +305,9 @@ object SpatialLayout {
     val spark = newRows.sparkSession
     // the layer's recorded layout wins over the arguments (same reasoning
     // as appendClusteredBuckets: one directory tree, one keyspace)
-    val m = readLayoutMeta(spark, path).getOrElse(LayoutMeta(indexType, bucketShift))
-    val existing = spark.read.parquet(path)
+    val prior = readLayoutMeta(spark, path)
+    val m = prior.getOrElse(LayoutMeta(indexType, bucketShift))
+    val existing = readClustered(spark, path, prior)
     // UPSERT semantics: a batch row REPLACES any existing row with the same
     // `id` (the reference's rebuild path set-unions by node identity,
     // RTreeIndex.java:242-268 via LinkedHashSet), so re-upserting a batch is
@@ -360,7 +394,7 @@ object SpatialLayout {
     */
   def deleteFromClusteredBuckets(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: Seq[String]): Long = {
-    val existing = spark.read.parquet(path)
+    val existing = readClustered(spark, path, readLayoutMeta(spark, path))
     val touched = existing.select(col("id"), col("__bucket"))
       .filter(col("id").isin(ids: _*))
       .select("__bucket").distinct().collect().map(_.getInt(0)).toSeq
@@ -410,12 +444,22 @@ object SpatialLayout {
     // an existing layer's recorded layout WINS over the arguments: appending
     // with a different shift/curve than the layer was written with would mix
     // incompatible __bucket keyspaces in one directory tree
-    val m = readLayoutMeta(newRows.sparkSession, path)
-      .getOrElse(LayoutMeta(indexType, bucketShift))
-    withCurveKeys(newRows, m.indexType, m.bucketShift)
-      .repartition(col("__bucket")).sortWithinPartitions("__sfc")
+    val spark = newRows.sparkSession
+    val m = readLayoutMeta(spark, path).getOrElse(LayoutMeta(indexType, bucketShift))
+    val fresh = !fsFor(spark, path).exists(new org.apache.hadoop.fs.Path(path))
+    val keyed = withCurveKeys(newRows, m.indexType, m.bucketShift)
+    keyed.repartition(col("__bucket")).sortWithinPartitions("__sfc")
       .write.mode("append").partitionBy("__bucket").parquet(path)
-    writeLayoutMeta(newRows.sparkSession, path, m)
+    // the batch's schema describes the layer only when it started it; a
+    // recorded schema gains the batch's new columns (before `__bucket`);
+    // a layer whose schema was never recorded stays inferred
+    val batch = bucketedSchema(keyed.schema)
+    val schema = m.schema match {
+      case Some(s) => Some(bucketedSchema(
+        StructType(s.fields ++ batch.fields.filterNot(f => s.fieldNames.contains(f.name)))))
+      case None => if (fresh) Some(batch) else None
+    }
+    writeLayoutMeta(spark, path, m.copy(schema = schema))
   }
 
   /** Compact bucket directories fragmented by repeated small appends: any
@@ -437,7 +481,7 @@ object SpatialLayout {
       .map(_.getPath.getName.stripPrefix("__bucket=").toInt)
     if (frag.isEmpty) 0
     else {
-      val rows = spark.read.parquet(path)
+      val rows = readClustered(spark, path, readLayoutMeta(spark, path))
         .filter(col("__bucket").isin(frag: _*))
         .withColumn("__bucket", col("__bucket").cast("int"))
         .localCheckpoint(true)

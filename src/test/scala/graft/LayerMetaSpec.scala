@@ -13,12 +13,15 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.{GeoFrame, SpatialProcedures}
 import graft.functions.st
+import graft.geom.GeomCodec
+import graft.plans.SpatialLayout
 
 /** What the catalog records in `layer.json` (schema, extent, row count) and
-  * what it buys: opening a layer and sizing a k-NN window run no Spark job.
-  * The recorded extent is only an estimate, so layer files without it, and
-  * layers whose extent went stale through appends, must answer exactly as
-  * a full scan does.
+  * the layout sidecar records beside a clustered layer (schema), and what
+  * it buys: opening a layer and sizing a k-NN window run no Spark job, and
+  * each lookup scans the layer once. The recorded extent is only an
+  * estimate, so layer files without it, and layers whose extent went stale
+  * through appends, must answer exactly as a full scan does.
   */
 class LayerMetaSpec extends SparkSpec {
   import spark.implicits._
@@ -207,5 +210,133 @@ class LayerMetaSpec extends SparkSpec {
     assert(procs.removeNodes("grow", Seq("far0", "far1", "p0")) == 3L)
     assert(procs.getFeatureCount("grow") == 527L)
     assert(procs.layer("grow").meta.flatMap(_.extent).contains(recorded.copy(count = 527L)))
+  }
+
+  /** Exchanges that range-partition into more than one partition: each
+    * needs a sampling job over its input first. */
+  private def multiRangeExchanges(plan: String): Seq[String] =
+    """rangepartitioning\(.*?, (\d+)\)""".r.findAllMatchIn(plan)
+      .filter(_.group(1).toInt > 1).map(_.matched).toSeq
+
+  test("withinDistance and closest run two jobs, sort in one partition and match the full scan") {
+    val procs = hot
+    val layer = procs.layer("hot")
+    val (lon, lat) = (10.0, 20.0)
+    val (within, withinJobs) = jobsOf(procs.withinDistance("hot", lon, lat, 60.0)
+      .select("id", "distance").as[(String, Double)].collect().toSeq)
+    val wantWithin = layer.df
+      .withColumn("distance", st.orthodromicKm(lit(lon), lit(lat), col("x"), col("y")))
+      .filter(col("distance") <= 60.0).select("id", "distance").as[(String, Double)]
+      .collect().toSet
+    assert(within.nonEmpty && within.toSet == wantWithin && within.size == wantWithin.size)
+    assert(within.map(_._2) == within.map(_._2).sorted, "withinDistance rows out of order")
+    val (closest, closestJobs) = jobsOf(procs.closest("hot", lon, lat, 0.5)
+      .select("id", "snap_distance").as[(String, Double)].collect().toSeq)
+    val wantClosest = layer.df
+      .withColumn("snap_distance", st.distance(st.closestPointTo(col("geometry"), lon, lat),
+        lit(GeomCodec.toWkb(GeomCodec.point(lon, lat)))))
+      .filter(col("snap_distance") <= 0.5).select("id", "snap_distance")
+      .as[(String, Double)].collect().toSet
+    assert(closest.nonEmpty && closest.toSet == wantClosest && closest.size == wantClosest.size)
+    assert(closest.map(_._2) == closest.map(_._2).sorted, "closest rows out of order")
+    for ((what, jobs) <- Seq("withinDistance" -> withinJobs, "closest" -> closestJobs)) {
+      assert(jobs.size == 2, s"$what ran ${jobs.size} jobs")
+      jobs.foreach { case (_, plan) =>
+        assert(multiRangeExchanges(plan).isEmpty, s"$what samples ranges:\n$plan")
+      }
+    }
+  }
+
+  test("kNN verifies in one round at a hot spot and in the sparse background, and hands back its rows") {
+    val layer = hot.layer("hot")
+    for ((lon, lat) <- Seq((10.0, 20.0), (-30.0, -15.0))) {
+      val (knn, rounds) = jobsOf(hot.layer("hot").knnCandidates(lon, lat, 10))
+      assert(rounds.size == 1, s"($lon, $lat) took ${rounds.size} rounds")
+      val (top, consume) = jobsOf(knn.df.orderBy(col("distance"), col("id")).limit(10)
+        .select("id").as[String].collect().toSeq)
+      assert(top == fullScanTopK(layer.df, lon, lat, 10), s"($lon, $lat)")
+      assert(consume.size == 1, s"($lon, $lat) consumed in ${consume.size} jobs")
+      val plan = consume.head._2
+      assert(plan.contains("LocalTableScan") && !plan.toLowerCase.contains("parquet"), plan)
+    }
+  }
+
+  test("kNN stays exact when more than k rows tie within the slack of the k-th") {
+    val (procs, _) = freshProcs()
+    val k = 5
+    val slackKm = 0.001
+    // the k-1 nearest at distinct distances, 3k copies of one point at the
+    // k-th distance (11.11705 km), then points less than slackKm / 2 beyond
+    // it (0.1 m) whose ids sort first: rounded to metres they tie with the
+    // k-th, so an ordering on round(distance, 3) ranks them above the ties
+    val near = (1 until k).map(i => (s"n$i", 0.01 * i, 0.0))
+    val tied = (0 until 3 * k).map(i => (f"t$i%02d", 0.099978, 0.0))
+    val beyond = (0 until k).map(i => (s"b$i", 0.099979, 0.0))
+    val far = (0 until 40).map(i => (s"z$i", 1.0 + i * 0.1, 0.5))
+    procs.addPointLayerXY("ties", (near ++ tied ++ beyond ++ far).toDF("k", "lon", "lat"),
+      "k", "lon", "lat")
+    val layer = procs.layer("ties")
+    val knn = layer.knnCandidates(0.0, 0.0, k, slackKm)
+    assert(knn.df.inputFiles.nonEmpty, "the tie case must fall back to the lazy window scan")
+    assert(knnIds(layer, 0.0, 0.0, k) == fullScanTopK(layer.df, 0.0, 0.0, k))
+    def roundedTopK(d: DataFrame): Seq[(String, Double)] =
+      d.withColumn("dist_km", round(col("distance"), 3)).orderBy(col("dist_km"), col("id"))
+        .limit(k).select("id", "dist_km").as[(String, Double)].collect().toSeq
+    val rounded = roundedTopK(knn.df)
+    assert(rounded == roundedTopK(layer.df
+      .withColumn("distance", st.orthodromicKm(lit(0.0), lit(0.0), col("x"), col("y")))))
+    assert(rounded.exists(_._1.startsWith("b")),
+      s"fixture: the rounded top-k should pick a row past the ties, got $rounded")
+  }
+
+  test("every clustered-layout writer records the schema a read would infer") {
+    val dir = Files.createTempDirectory("graft-layout-schema").toString
+    val pts = hotPoints(2000).toDF("id", "x", "y")
+      .withColumn("v", expr("cast(substring(id, 2) as long)"))
+      .withColumn("geometry", st.makePoint(col("x"), col("y")))
+      .withColumn("bbox", st.bboxStruct(col("x"), col("y"), col("x"), col("y")))
+    def recordedIsInferred(p: String, after: String): Unit = {
+      val recorded = SpatialLayout.readLayoutMeta(spark, p).flatMap(_.schema)
+      assert(recorded.contains(spark.read.parquet(p).schema), s"after $after")
+    }
+    SpatialLayout.writeClustered(pts, s"$dir/ranged")
+    recordedIsInferred(s"$dir/ranged", "writeClustered")
+    val p = s"$dir/buckets"
+    SpatialLayout.writeClusteredBuckets(pts.filter(col("v") % 4 === 0), p)
+    recordedIsInferred(p, "writeClusteredBuckets")
+    SpatialLayout.appendClusteredBuckets(pts.filter(col("v") % 4 === 1), p)
+    recordedIsInferred(p, "appendClusteredBuckets")
+    SpatialLayout.appendClusteredBuckets(pts.filter(col("v") % 4 === 1), s"$dir/fresh")
+    recordedIsInferred(s"$dir/fresh", "appendClusteredBuckets into a new path")
+    assert(SpatialLayout.upsertClusteredBuckets(pts.filter(col("v") % 40 === 2), p) == "partial")
+    recordedIsInferred(p, "a partial upsert")
+    assert(SpatialLayout.compactBuckets(spark, p, maxFilesPerBucket = 1) > 0)
+    recordedIsInferred(p, "compactBuckets")
+    assert(SpatialLayout.deleteFromClusteredBuckets(spark, p, Seq("p0", "p4")) == 2L)
+    recordedIsInferred(p, "deleteFromClusteredBuckets")
+    assert(SpatialLayout.upsertClusteredBuckets(pts.filter(col("v") % 4 === 3), p) == "full")
+    recordedIsInferred(p, "a full upsert")
+  }
+
+  test("openClustered reads with the recorded schema: no inference job, same rows") {
+    val dir = Files.createTempDirectory("graft-open-clustered").toString
+    val pts = hotPoints(2000).toDF("id", "x", "y")
+      .withColumn("geometry", st.makePoint(col("x"), col("y")))
+      .withColumn("bbox", st.bboxStruct(col("x"), col("y"), col("x"), col("y")))
+    val p = s"$dir/pts"
+    SpatialLayout.writeClusteredBuckets(pts, p)
+    val (layer, open) = jobsOf(GeoFrame.openClustered(spark, p))
+    assert(open.isEmpty, s"opening the layer ran ${open.size} jobs")
+    assert(layer.df.schema == spark.read.parquet(p).schema)
+    def windowIds(l: GeoFrame) =
+      l.windowViaCurve(9, 19, 11, 21).df.select("id").as[String].collect().toSet
+    val want = pts.filter(col("x").between(9, 11) && col("y").between(19, 21))
+      .select("id").as[String].collect().toSet
+    assert(want.nonEmpty && windowIds(layer) == want)
+    // a sidecar without the schema falls back to inference, which is a job
+    SpatialLayout.writeLayoutMeta(spark, p, SpatialLayout.LayoutMeta("hilbert", 26))
+    val (inferred, inferJobs) = jobsOf(GeoFrame.openClustered(spark, p))
+    assert(inferJobs.nonEmpty, "schema inference ran no job; the check above proves nothing")
+    assert(inferred.df.schema == layer.df.schema && windowIds(inferred) == want)
   }
 }

@@ -540,7 +540,7 @@ class ScaleSpec extends SparkSpec {
     // the bucket partition filter would prune away in-window directories
     SpatialLayout.writeClusteredBuckets(pts, p, bucketShift = 22)
     val recorded = SpatialLayout.readLayoutMeta(spark, p)
-    assert(recorded.contains(SpatialLayout.LayoutMeta("hilbert", 22)))
+    assert(recorded.map(m => (m.indexType, m.bucketShift)).contains(("hilbert", 22)))
     val layer = GeoFrame.openClustered(spark, p)
     assert(layer.meta.get.bucketShift == 22)
     val got = layer.windowViaCurve(0.5, -10.5, 30.5, 40.5)
@@ -556,8 +556,8 @@ class ScaleSpec extends SparkSpec {
       .windowViaCurve(0.5, -10.5, 30.5, 40.5)
       .df.select("k").as[Long].collect().sorted.toSeq
     assert(again == want, "post-upsert window must still equal the plain filter")
-    assert(SpatialLayout.readLayoutMeta(spark, p)
-      .contains(SpatialLayout.LayoutMeta("hilbert", 22)), "upsert must preserve the recorded layout")
+    assert(SpatialLayout.readLayoutMeta(spark, p).map(m => (m.indexType, m.bucketShift))
+      .contains(("hilbert", 22)), "upsert must preserve the recorded layout")
   }
 
   test("append-then-compact: blind appends fragment, queries stay correct, compaction restores layout") {
