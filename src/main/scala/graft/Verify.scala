@@ -60,17 +60,15 @@ object Verify {
       // queries persist intermediates; clear between queries so 70+ dumps
       // don't accumulate into storage-eviction churn. clearCache misses
       // RDD-level persists (localCheckpoint loops) — unpersist those too.
-      // NO per-query System.gc() by default: 340 forced full-heap GCs on
+      // NO per-query System.gc(): 340 forced full-heap GCs on
       // the exact path whose time budget keeps blowing the driver's gate
       // (round-9 verdict; CORRECTNESS came back empty twice, and the gc
       // was added unmeasured). The blocking unpersist already frees the
       // block store between queries. A/B numbers for this sweep are in
-      // OPTIMIZATION_r10.md ("Verify budget A/B"). Re-enable ad hoc with
-      // SPARK_GRAFT_VERIFY_GC=1 for diagnosis.
+      // OPTIMIZATION_r10.md ("Verify budget A/B").
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
-      if (sys.env.get("SPARK_GRAFT_VERIFY_GC").contains("1")) System.gc()
     }
     spark.stop()
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.Geometry
 
 import graft.geom.GeomCodec
+import graft.pipeline.Groups
 
 /** Spatial aggregates (SURVEY §2.4). The folds are associative, so Spark's
   * partial aggregation (map-side combine) applies — each executor folds its
@@ -78,9 +79,9 @@ object SpatialAggs {
 
   /** Scalable DensityIslands: same single-link connectivity, but
     * order-independent and distributed. Points within `density` of each other
-    * land in the same island via grid-bucket join + iterative connected
-    * components (label propagation on the candidate-pair graph; converges in
-    * O(log n) rounds). Suitable at 100 TB where the greedy fold is not.
+    * land in the same island via grid-bucket join + connected components
+    * over the candidate-pair graph ([[Groups.ccLabels]]). Suitable at
+    * 100 TB where the greedy fold is not.
     * Island MEMBERSHIP matches the transitive closure of the reference's
     * merge relation; island ids/geometry unions are canonicalized by min id.
     */
@@ -157,71 +158,11 @@ object SpatialAggs {
         .distinct()
     }
 
-    // Connected components over the candidate-edge graph. The edge list is a
-    // derived, usually-tiny artifact (O(points · neighbors-within-density)),
-    // so below a threshold we union-find it on the driver in one pass —
-    // ~40 small Spark jobs of iterative label propagation collapse into one
-    // collect + one broadcast join. Past the threshold (genuinely dense
-    // clustering at 100 TB) the distributed hash-to-min + pointer-jumping
-    // loop below converges in O(log diameter) rounds.
-    val SmallEdgeLimit = 500000L
-    val edgeRows = edges.localCheckpoint(true)
-    val labels: DataFrame =
-      if (edgeRows.count() <= SmallEdgeLimit) {
-        val parent = scala.collection.mutable.HashMap.empty[String, String]
-        def find(x: String): String = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        edgeRows.collect().foreach { row =>
-          val (a, b) = (row.getString(0), row.getString(1))
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { // union by MIN id keeps the canonical label stable
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          }
-        }
-        val resolved = parent.keys.map(k => (k, find(k))).toSeq
-        val spark = df.sparkSession
-        import spark.implicits._
-        val lookup = broadcast(resolved.toDF("id", "__cc"))
-        // vertices untouched by any edge are their own singleton island
-        df.select(col("id").cast("string").as("id"))
-          .join(lookup, Seq("id"), "left")
-          .select(col("id"), coalesce(col("__cc"), col("id")).as("label"))
-      } else {
-        // pointer-jumping hash-to-min: each round a vertex takes the min of
-        // its label, neighbor labels, and label(label(v)); localCheckpoint
-        // truncates lineage per round
-        val sym = edgeRows.union(edgeRows.select(col("dst").as("src"), col("src").as("dst")))
-          .localCheckpoint(true)
-        var ls = df.select(col("id").cast("string").as("id"), col("id").cast("string").as("label"))
-          .localCheckpoint(true)
-        var checksum = -1L
-        var iter = 0
-        var converged = false
-        while (!converged && iter < maxIterations) {
-          val viaEdges = sym.join(ls, sym("dst") === ls("id"))
-            .select(sym("src").as("id"), col("label"))
-          val l1 = ls.select(col("id"), col("label"))
-          val l2 = ls.select(col("id").as("jid"), col("label").as("jlabel"))
-          val viaJump = l1.join(l2, l1("label") === l2("jid"))
-            .select(col("id"), col("jlabel").as("label"))
-          val next = l1.union(viaEdges).union(viaJump)
-            .groupBy("id").agg(min("label").as("label"))
-            .localCheckpoint(true)
-          // xor-fold checksum: order-independent, no ANSI long-overflow like sum
-          val nextSum = next.agg(coalesce(bit_xor(xxhash64(col("id"), col("label"))), lit(0L)))
-            .head().getLong(0)
-          ls = next
-          converged = nextSum == checksum
-          checksum = nextSum
-          iter += 1
-        }
-        ls
-      }
+    // Connected components over the candidate-edge graph (driver union-find
+    // below Groups.ccLabels' edge limit, distributed hash-to-min above it).
+    // String ids keep the island key the string-minimum member.
+    val labels = Groups.ccLabels(df.select(col("id").cast("string").as("id")), edges,
+      maxIterations = maxIterations)
     df.select(col("id").cast("string").as("id"), col("geometry"))
       .join(labels, "id")
       .groupBy(col("label").as("island_key"))

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.util.chaining._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -44,7 +46,7 @@ object Bpe {
     var syms = words
       .select(col("w"), col("freq"),
         expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("s"))
-      .localCheckpoint(true)
+      .pipe(Loop.materialize)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -63,8 +65,10 @@ object Bpe {
         val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((step, l, r, c))
         val mUdf = udf((ss: Seq[String]) => applyMerge(ss, l, r))
-        syms = syms.select(col("w"), col("freq"), mUdf(col("s")).as("s"))
-          .localCheckpoint(true)
+        val next = syms.select(col("w"), col("freq"), mUdf(col("s")).as("s"))
+          .pipe(Loop.materialize)
+        Loop.free(syms)
+        syms = next
         step += 1
       }
     }
@@ -77,8 +81,9 @@ object Bpe {
   def bpeMerges(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    trainSyms(df, textCol, numMerges)._1
-      .toDF("step", "lhs", "rhs", "pair_count").orderBy("step")
+    val (merges, syms) = trainSyms(df, textCol, numMerges)
+    Loop.free(syms) // the merge list is local; nothing reads the symbols
+    merges.toDF("step", "lhs", "rhs", "pair_count").orderBy("step")
   }
 
   /** The ENCODE side: train `numMerges` merges, then tokenize the corpus

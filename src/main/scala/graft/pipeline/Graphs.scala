@@ -206,18 +206,20 @@ object Graphs {
   def trussPeel(edges: DataFrame, k: Int, rounds: Int,
       broadcastLimit: Long = BroadcastEdges): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    // materializedBare per round, not persist: each support pass references
+    // Loop.materialize per round, not persist: each support pass references
     // the survivor frame ~5× (degree agg + two degree attaches + wedge +
     // closing probe), so raw lineage would nest ~5^rounds plan copies —
     // the driver dies in the analyzer long before any executor works. The
-    // bare LogicalRDD rewrap truncates both the plan tree and the
-    // checkpoint-carried stats (the gr_mst sizeInBytes-squaring pathology).
-    var e = normalized(edges).pipe(materializedBare)
+    // bare LogicalRDD truncates both the plan tree and the carried stats
+    // (the gr_mst sizeInBytes-squaring pathology).
+    var e = normalized(edges).pipe(Loop.materialize)
     for (_ <- 1 to rounds) {
-      e = edgeSupport(e, broadcastLimit)
+      val next = edgeSupport(e, broadcastLimit)
         .filter(col("support") >= k - 2)
         .select("a", "b")
-        .pipe(materializedBare)
+        .pipe(Loop.materialize)
+      Loop.free(e)
+      e = next
     }
     edgeSupport(e, broadcastLimit)
   }
@@ -315,15 +317,15 @@ e$i AS MATERIALIZED (SELECT a, b FROM sup$i WHERE s >= ${k - 2})""")
 
   def bfs(edges: DataFrame, seeds: DataFrame, maxHop: Int): DataFrame = {
     val e = sizedEdges(edges)
-    // every frontier is materializedBare (NOT just persisted): `dist` is a
-    // union over all of them, so they must stay resident to the caller's
-    // action — but a persisted frontier still EMBEDS the whole prefix
-    // chain in its logical plan, and the settled anti-join re-analyzes
-    // that growing tree every round (guide §5 driver cost). The bare
-    // rewrap keeps round plans constant-size; no frontier is freed (all
-    // are read by the result).
+    // every frontier goes through Loop.materialize (NOT just persisted):
+    // `dist` is a union over all of them, so they must stay resident to the
+    // caller's action — but a persisted frontier still EMBEDS the whole
+    // prefix chain in its logical plan, and the settled anti-join
+    // re-analyzes that growing tree every round (guide §5 driver cost).
+    // Materialized frontiers keep round plans constant-size; no frontier is
+    // freed (all are read by the result).
     var frontier = seeds.select(col("node").cast("long").as("node"))
-      .distinct().pipe(materializedBare)
+      .distinct().pipe(Loop.materialize)
     var dist = frontier.withColumn("hop", lit(0))
     var hop = 0
     var frontierEmpty = false
@@ -332,7 +334,7 @@ e$i AS MATERIALIZED (SELECT a, b FROM sup$i WHERE s >= ${k - 2})""")
       val next = frontier.join(e, frontier("node") === e("src"))
         .select(col("dst").as("node")).distinct()
         .join(dist.select("node"), Seq("node"), "left_anti")
-        .pipe(materializedBare)
+        .pipe(Loop.materialize)
       frontierEmpty = next.isEmpty
       dist = dist.union(next.withColumn("hop", lit(hop)))
       frontier = next
@@ -355,11 +357,11 @@ e$i AS MATERIALIZED (SELECT a, b FROM sup$i WHERE s >= ${k - 2})""")
     */
   def bfsPerSource(edges: DataFrame, seeds: DataFrame, maxHop: Int): DataFrame = {
     val e = sizedEdges(edges)
-    // same frontier discipline as [[bfs]]: materializedBare per round so
+    // same frontier discipline as [[bfs]]: Loop.materialize per round so
     // the settled anti-join's plan stays constant-size (guide §5); every
     // frontier stays resident (the result unions all of them)
     var frontier = seeds.select(col("node").cast("long").as("root"))
-      .distinct().withColumn("node", col("root")).pipe(materializedBare)
+      .distinct().withColumn("node", col("root")).pipe(Loop.materialize)
     var dist = frontier.withColumn("hop", lit(0))
     var hop = 0
     var frontierEmpty = false
@@ -368,7 +370,7 @@ e$i AS MATERIALIZED (SELECT a, b FROM sup$i WHERE s >= ${k - 2})""")
       val next = frontier.join(e, frontier("node") === e("src"))
         .select(col("root"), col("dst").as("node")).distinct()
         .join(dist.select("root", "node"), Seq("root", "node"), "left_anti")
-        .pipe(materializedBare)
+        .pipe(Loop.materialize)
       frontierEmpty = next.isEmpty
       dist = dist.union(next.withColumn("hop", lit(hop)))
       frontier = next
@@ -392,23 +394,23 @@ e$i AS MATERIALIZED (SELECT a, b FROM sup$i WHERE s >= ${k - 2})""")
     * (node, deg) of the surviving subgraph after `rounds` peels.
     */
   def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    // materializedBare per round, not persist: persist keeps the full
+    // Loop.materialize per round, not persist: persist keeps the full
     // unrolled logical plan (each round references e ~3×, so the analyzed
     // tree multiplied to 86k plan lines / 14k Exchanges by round 4 —
     // measured in plans/r09/scratch/gr_kcore.txt), and Catalyst re-walks
     // that whole text on every action — pure driver cost (guide §5) that
     // grows with rounds and was the suite's top run-to-run noise source.
-    // The bare rewrap keeps every round's plan constant-size; the
-    // superseded survivor frame is freed (the sccLabels discipline).
+    // Materializing keeps every round's plan constant-size; the superseded
+    // survivor frame is freed.
     var e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct().pipe(materializedBare)
+      col("dst").cast("long").as("dst")).distinct().pipe(Loop.materialize)
     for (_ <- 1 to rounds) {
       val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("n"))
       val next = e.join(keep.select(col("n").as("src")), Seq("src"))
         .join(keep.select(col("n").as("dst")), Seq("dst"))
-        .select("src", "dst").pipe(materializedBare)
-      freeCheckpoint(e) // superseded generation — release its blocks now
+        .select("src", "dst").pipe(Loop.materialize)
+      Loop.free(e) // superseded generation — release its blocks now
       e = next
     }
     e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
@@ -450,25 +452,24 @@ e$i AS (SELECT e.src, e.dst FROM e${i - 1} e
     * would re-run the whole prefix per action.
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
-    // materializedBare per round (not persist): keeps each round's plan
+    // Loop.materialize per round (not persist): keeps each round's plan
     // constant-size instead of embedding the whole prefix (guide §5 /
-    // §7.3 driver planning cost); superseded label generations are freed
-    // — the sccLabels checkpoint discipline.
+    // §7.3 driver planning cost); superseded label generations are freed.
     val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct().pipe(materializedBare)
+      col("dst").cast("long").as("dst")).distinct().pipe(Loop.materialize)
     var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")).pipe(materializedBare)
+      .withColumn("lbl", col("node")).pipe(Loop.materialize)
     for (_ <- 1 to rounds) {
       val next = e.join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
         .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
         .groupBy(col("src"))
         .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("src").as("node"), (-col("m.nl")).as("lbl"))
-        .pipe(materializedBare)
-      freeCheckpoint(labels) // superseded generation
+        .pipe(Loop.materialize)
+      Loop.free(labels) // superseded generation
       labels = next
     }
-    freeCheckpoint(e) // the result reads only the final (checkpointed) labels
+    Loop.free(e) // the result reads only the final (checkpointed) labels
     labels.orderBy(col("node"))
   }
 
@@ -505,30 +506,30 @@ l$i AS (SELECT src AS node, lbl FROM (
     * score, score = raw/max(side) rounded to 6.
     */
   def hits(edges: DataFrame, iters: Int, k: Int): DataFrame = {
-    // materializedBare per half-round (not persist) + free the superseded
+    // Loop.materialize per half-round (not persist) + free the superseded
     // generation: constant-size plans instead of a per-round unrolled tree
-    // (guide §5; the sccLabels checkpoint discipline).
+    // (guide §5).
     val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct().pipe(materializedBare)
+      col("dst").cast("long").as("dst")).distinct().pipe(Loop.materialize)
     var h = e.select(col("src").as("node")).distinct()
-      .withColumn("s", lit(1L)).pipe(materializedBare)
+      .withColumn("s", lit(1L)).pipe(Loop.materialize)
     var a: DataFrame = h.limit(0)
     for (i <- 1 to iters) {
       val aPrev = a
       val hPrev = h
       a = e.join(hPrev, e("src") === hPrev("node"))
         .groupBy(col("dst").as("anode")).agg(sum(col("s")).as("s"))
-        .select(col("anode").as("node"), col("s")).pipe(materializedBare)
+        .select(col("anode").as("node"), col("s")).pipe(Loop.materialize)
       // round 1's aPrev is h.limit(0) — a DERIVED frame over h's
       // checkpoint, so freeing it would free h's own blocks; skip it
-      if (i > 1) freeCheckpoint(aPrev)
+      if (i > 1) Loop.free(aPrev)
       h = e.join(a, e("dst") === a("node"))
         .groupBy(col("src").as("hnode")).agg(sum(col("s")).as("s"))
-        .select(col("hnode").as("node"), col("s")).pipe(materializedBare)
-      freeCheckpoint(hPrev)
+        .select(col("hnode").as("node"), col("s")).pipe(Loop.materialize)
+      Loop.free(hPrev)
     }
     // the result reads only the final (checkpointed) a and h
-    freeCheckpoint(e)
+    Loop.free(e)
     def top(side: String, df: DataFrame) = {
       val mx = df.agg(max(col("s")).as("mx"))
       df.crossJoin(mx)
@@ -576,32 +577,32 @@ l$i AS (SELECT src AS node, lbl FROM (
     * node-keyed aggregates; nothing is broadcast, state is (node, long).
     */
   def katz(edges: DataFrame, iters: Int, k: Int): DataFrame = {
-    // materializedBare per round (not persist) + free superseded frames:
+    // Loop.materialize per round (not persist) + free superseded frames:
     // the persisted version kept the full unrolled plan (37k lines / 5.9k
     // Exchanges by round 3 — plans/r09/scratch/gr_katz.txt) that Catalyst
     // re-analyzed per action, and it leaked both loop frames per round
     // (every generation of t and acc stayed persisted to query end).
-    // Guide §5; the sccLabels checkpoint discipline.
+    // Guide §5.
     val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct().pipe(materializedBare)
+      col("dst").cast("long").as("dst")).distinct().pipe(Loop.materialize)
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
-    var t = nodes.withColumn("s", lit(1L)).pipe(materializedBare)
+    var t = nodes.withColumn("s", lit(1L)).pipe(Loop.materialize)
     var acc = t
     for (_ <- 1 to iters) {
       val tPrev = t
       val accPrev = acc
       t = e.join(tPrev, e("src") === tPrev("node"))
         .groupBy(col("dst").as("n2")).agg(sum(col("s")).as("s"))
-        .select(col("n2").as("node"), col("s")).pipe(materializedBare)
+        .select(col("n2").as("node"), col("s")).pipe(Loop.materialize)
       acc = accPrev.select(col("node"), (col("s") * 4).as("s")).unionByName(t)
-        .groupBy("node").agg(sum(col("s")).as("s")).pipe(materializedBare)
-      freeCheckpoint(tPrev)
-      if (!(accPrev eq tPrev)) freeCheckpoint(accPrev)
+        .groupBy("node").agg(sum(col("s")).as("s")).pipe(Loop.materialize)
+      Loop.free(tPrev)
+      if (!(accPrev eq tPrev)) Loop.free(accPrev)
     }
     // the result reads only the final (checkpointed) acc
-    if (!(t eq acc)) freeCheckpoint(t)
-    freeCheckpoint(e)
+    if (!(t eq acc)) Loop.free(t)
+    Loop.free(e)
     val mx = acc.agg(max(col("s")).as("mx"))
     acc.crossJoin(mx)
       .select(col("node"), col("s").as("score_raw"),
@@ -645,12 +646,12 @@ l$i AS (SELECT src AS node, lbl FROM (
     * replay the oracle runs, so integer weights hash-match round for round.
     */
   def sssp(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
-    // materializedBare per round (dist BRANCHES into relax join + union,
+    // Loop.materialize per round (dist BRANCHES into relax join + union,
     // and a persisted chain still embeds the whole prefix plan — guide §5);
-    // superseded estimates are freed, the sccLabels discipline
+    // superseded estimates are freed
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-      .pipe(materializedBare)
+      .pipe(Loop.materialize)
     var dist = seeds.select(col("node").cast("long").as("node"), lit(0L).as("dist"))
     for (r <- 1 to rounds) {
       val prev = dist
@@ -658,11 +659,11 @@ l$i AS (SELECT src AS node, lbl FROM (
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
       dist = prev.union(relaxed)
         .groupBy("node").agg(min(col("dist")).as("dist"))
-        .pipe(materializedBare)
+        .pipe(Loop.materialize)
       // round 1's prev is the raw seed projection (no checkpoint to free)
-      if (r > 1) freeCheckpoint(prev)
+      if (r > 1) Loop.free(prev)
     }
-    freeCheckpoint(e) // result = final checkpointed dist (or raw seeds)
+    Loop.free(e) // result = final checkpointed dist (or raw seeds)
     dist
   }
 
@@ -691,19 +692,19 @@ l$i AS (SELECT src AS node, lbl FROM (
     */
   def brandesBetweenness(edges: DataFrame, seeds: DataFrame,
       maxHop: Int, k: Int): DataFrame = {
-    // materializedBare per level on BOTH passes (not persist): persisted
+    // Loop.materialize per level on BOTH passes (not persist): persisted
     // levels still embedded the whole prefix chain in each round's plan —
     // the forward anti-join and every backward contrib re-analyzed an
     // 86k-line / 12k-Exchange tree (plans/r09/scratch/gr_betweenness.txt),
-    // pure driver cost (guide §5). Bare rewraps keep every level's plan
-    // constant-size. Levels/deltas are all read by the result (acc unions
-    // the deltas, the backward pass reads every level), so only s0 — used
-    // by the forward pass alone — is freed.
+    // pure driver cost (guide §5). Materialized levels keep every level's
+    // plan constant-size. The result unions every delta, so the deltas stay;
+    // the levels and the edge list are freed once the backward pass has
+    // consumed them.
     val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct().pipe(materializedBare)
+      col("dst").cast("long").as("dst")).distinct().pipe(Loop.materialize)
     val s0 = seeds.select(col("node").cast("long").as("root"))
       .distinct().withColumn("node", col("root"))
-      .withColumn("sigma", lit(1L)).pipe(materializedBare)
+      .withColumn("sigma", lit(1L)).pipe(Loop.materialize)
     // forward: levels(h) = (root, node, sigma) settled exactly at hop h
     val levels = scala.collection.mutable.ArrayBuffer(s0)
     var settled = s0.select("root", "node")
@@ -713,7 +714,7 @@ l$i AS (SELECT src AS node, lbl FROM (
         .select(col("root"), col("dst").as("node"), col("sigma"))
         .join(settled, Seq("root", "node"), "left_anti")
         .groupBy("root", "node").agg(sum("sigma").as("sigma"))
-        .pipe(materializedBare)
+        .pipe(Loop.materialize)
       levels += next
       settled = settled.union(next.select("root", "node"))
     }
@@ -721,7 +722,7 @@ l$i AS (SELECT src AS node, lbl FROM (
     var delta = levels(maxHop)
       .select(col("root"), col("node"), col("sigma"),
         lit(0.0).as("delta"))
-      .pipe(materializedBare)
+      .pipe(Loop.materialize)
     var acc = delta.select(col("root"), col("node"), col("delta"))
     for (h <- (maxHop - 1) to 1 by -1) {
       val lvl = levels(h)
@@ -735,14 +736,14 @@ l$i AS (SELECT src AS node, lbl FROM (
       delta = lvl.join(contrib, Seq("root", "node"), "left")
         .select(lvl("root"), lvl("node"), col("sigma"),
           coalesce(col("delta"), lit(0.0)).as("delta"))
-        .pipe(materializedBare)
+        .pipe(Loop.materialize)
       acc = acc.union(delta.select(col("root"), col("node"), col("delta")))
     }
     // every delta is already (eagerly) checkpointed, so the levels and the
     // edge list are fully consumed — the result reads only acc's deltas.
     // Free them now instead of leaking rounds × frames to query end.
-    levels.foreach(freeCheckpoint)
-    freeCheckpoint(e)
+    levels.foreach(Loop.free)
+    Loop.free(e)
     acc.groupBy("node").agg(round(sum("delta"), 6).as("betweenness"))
       .orderBy(col("betweenness").desc, col("node")).limit(k)
   }
@@ -778,13 +779,13 @@ l$i AS (SELECT src AS node, lbl FROM (
       val h = (col("cur") * 1000003L + lit(t.toLong) * 101L +
         col("dst") * 7919L) % 1000000007L
       // each level is consumed twice (next step's input + the output
-      // union); materializedBare it — the bfs frontier discipline, with
+      // union); materialize it — the bfs frontier discipline, with
       // constant-size plans instead of a per-step unrolled tree (§5)
       cur = cur.join(e, col("cur") === col("src"))
         .groupBy(col("seed"))
         .agg(min(struct(h.as("h"), col("dst").as("d"))).as("m"))
         .select(col("seed"), col("m.d").cast("long").as("cur"))
-        .pipe(materializedBare)
+        .pipe(Loop.materialize)
       out = out.union(
         cur.select(col("seed"), lit(t.toLong).as("step"), col("cur").as("node")))
     }
@@ -883,54 +884,21 @@ l$i AS (SELECT src AS node, lbl FROM (
     * by the remaining diameter (the BFS/CC discipline); outer rounds by
     * the peeling depth of the SCC condensation (1 for most real graphs).
     */
-  /** Free the block-store blocks behind a SUPERSEDED localCheckpoint.
-    * Eager localCheckpoint persists its RDD (MEMORY_AND_DISK) and nothing
-    * ever unpersists it, so an iterative fixpoint accumulates one resident
-    * snapshot per iteration — harmless at small scale, but at the 100×
-    * rung the stale snapshots overflow the storage fraction and every
-    * later iteration pays eviction/spill (measured: gr_scc t60/t30 = 2.04
-    * ≈ linear, t100/t60 = 1.95 vs linear 1.67 — the break is storage
-    * pressure at the top rung, not an algorithmic term). Unpersist is
-    * idempotent and the superseded frame is never referenced again.
-    */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        // plain localCheckpoint frames carry the persisted RDD directly;
-        // materializedBare frames interpose two derived map steps
-        // (deserialize-to-Row + re-encode) between the LogicalRDD and the
-        // checkpoint-persisted ancestor, so unpersisting lr.rdd alone was
-        // a no-op for them (round-7 ADVICE). Walk narrow dependencies to
-        // the first persisted ancestor and free THAT; stop at the first
-        // hit (deeper persists belong to other still-live frames).
-        var frontier: Seq[org.apache.spark.rdd.RDD[_]] = Seq(lr.rdd)
-        var hops = 0
-        while (frontier.nonEmpty && hops < 8) {
-          val (hit, miss) = frontier.partition(
-            _.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-          hit.foreach(_.unpersist(blocking = false))
-          frontier =
-            if (hit.nonEmpty) Nil else miss.flatMap(_.dependencies.map(_.rdd))
-          hops += 1
-        }
-      case _ =>
-    }
-
   def sccLabels(vertices: DataFrame, edges: DataFrame,
       maxRounds: Int = 25, maxProp: Int = 64): DataFrame = {
     val spark = vertices.sparkSession
-    // EVERY loop-carried frame is localCheckpoint'ed (eager): each
+    // EVERY loop-carried frame goes through Loop.materialize: each
     // iteration's plan otherwise embeds the previous iteration's whole
     // tree (next = f(colors) joined back against colors), so lineage —
     // and with it analysis/cache-naming cost — grows EXPONENTIALLY per
     // fixpoint step (measured: a 7-node unit graph pinned 10 cores at
     // 47 GB building plan strings). Truncation keeps every step's plan
-    // constant-size; the pagerank/LPA rounds use the same discipline.
+    // constant-size.
     var remV = vertices.select(col("id").cast("long").as("id"))
-      .distinct().localCheckpoint()
+      .distinct().pipe(Loop.materialize)
     var remE = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+      .filter(col("src") =!= col("dst")).distinct().pipe(Loop.materialize)
     var out = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       new org.apache.spark.sql.types.StructType()
@@ -942,7 +910,7 @@ l$i AS (SELECT src AS node, lbl FROM (
       round += 1
       // (1) forward min-color fixpoint: color = min ancestor id
       var colors = remV.select(col("id"), col("id").as("color"))
-        .localCheckpoint()
+        .pipe(Loop.materialize)
       var changed = true
       var it = 0
       while (changed && it < maxProp) {
@@ -952,11 +920,11 @@ l$i AS (SELECT src AS node, lbl FROM (
         val next = colors.join(cand, Seq("id"), "left")
           .select(col("id"),
             least(col("color"), coalesce(col("cand"), col("color"))).as("color"))
-          .localCheckpoint()
+          .pipe(Loop.materialize)
         changed = next.withColumnRenamed("color", "nc")
           .join(colors, Seq("id"))
           .filter(col("nc") =!= col("color")).limit(1).count() > 0
-        freeCheckpoint(colors)   // superseded snapshot — release its blocks
+        Loop.free(colors)   // superseded snapshot — release its blocks
         colors = next
       }
       // a non-converged coloring would SPLIT an SCC across labels — fail
@@ -965,7 +933,7 @@ l$i AS (SELECT src AS node, lbl FROM (
         s"sccLabels: color fixpoint not converged after maxProp=$maxProp " +
           "iterations (graph ancestor-depth exceeds the bound) — raise maxProp")
       // (2)+(3) pivots grow backward within their color class
-      var inScc = colors.filter(col("id") === col("color")).localCheckpoint()
+      var inScc = colors.filter(col("id") === col("color")).pipe(Loop.materialize)
       var frontier = inScc
       var more = true
       var it2 = 0
@@ -979,14 +947,17 @@ l$i AS (SELECT src AS node, lbl FROM (
           .filter(col("mcolor") === col("color"))
           .select(col("id"), col("color"))
           .join(inScc.select("id"), Seq("id"), "left_anti")
-          .distinct().localCheckpoint()
+          .distinct().pipe(Loop.materialize)
         more = !add.isEmpty
+        // the previous frontier (an earlier `add`; the first one is inScc,
+        // freed below) is fully consumed once `add` is materialized
+        if (!(frontier eq inScc)) Loop.free(frontier)
         if (more) {
-          val grown = inScc.union(add).localCheckpoint()
-          freeCheckpoint(inScc)  // superseded by the checkpointed union
+          val grown = inScc.union(add).pipe(Loop.materialize)
+          Loop.free(inScc)  // superseded by the materialized union
           inScc = grown
           frontier = add
-        } else freeCheckpoint(add)
+        } else Loop.free(add)
       }
       // an unfinished backward growth leaves SCC members labeled as a
       // DIFFERENT (later) component — fail loudly
@@ -995,21 +966,21 @@ l$i AS (SELECT src AS node, lbl FROM (
           "iterations (SCC diameter exceeds the bound) — raise maxProp")
       // (4) label and peel
       val outGrown = out.union(inScc.select(col("id"), col("color").as("scc")))
-        .localCheckpoint()
-      freeCheckpoint(out)
+        .pipe(Loop.materialize)
+      Loop.free(out)
       out = outGrown
       val peeledIds = inScc.select("id")
-      val remVNext = remV.join(peeledIds, Seq("id"), "left_anti").localCheckpoint()
+      val remVNext = remV.join(peeledIds, Seq("id"), "left_anti").pipe(Loop.materialize)
       val remENext = remE
         .join(peeledIds.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
         .join(peeledIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-        .select("src", "dst").localCheckpoint()
-      freeCheckpoint(remV); freeCheckpoint(remE)
-      freeCheckpoint(inScc); freeCheckpoint(colors)
+        .select("src", "dst").pipe(Loop.materialize)
+      Loop.free(remV); Loop.free(remE)
+      Loop.free(inScc); Loop.free(colors)
       remV = remVNext; remE = remENext
       done = remV.isEmpty
     }
-    freeCheckpoint(remV); freeCheckpoint(remE)
+    Loop.free(remV); Loop.free(remE)
     // exhausted peel rounds with vertices remaining ⇒ those vertices would
     // be silently MISSING from the result — fail loudly instead
     if (!done) throw new IllegalStateException(
@@ -1039,28 +1010,11 @@ l$i AS (SELECT src AS node, lbl FROM (
     *
     * Scale shape: each round is two comp-keyed joins, one min-aggregate on
     * component keys, and jumps small self-joins on the (≤ #components)-row
-    * parent table; every loop-carried frame is localCheckpoint'ed with the
-    * superseded snapshot freed (the sccLabels discipline). Rounds halve the
+    * parent table; every loop-carried frame goes through
+    * [[Loop.materialize]] with the superseded snapshot freed. Rounds halve the
     * component count at minimum, so 8 rounds cover 2⁸ components per tree
     * and real graphs converge in 3-5.
     */
-  /** Materialize `df` (eager localCheckpoint) and rewrap the checkpointed
-    * RDD in a BARE LogicalRDD. The rewrap is what matters: a plain
-    * localCheckpoint CARRIES the origin plan's computed statistics, and in
-    * an iterative self-join loop those sizeInBytes estimates MULTIPLY —
-    * the pointer-doubling jumps square them every step, and by a few
-    * rounds the driver sits in million-digit BigInteger products inside
-    * SizeInBytesOnlyStatsPlanVisitor (observed: 22 min of driver CPU on a
-    * 160-node graph before the fix). The bare wrapper falls back to
-    * defaultSizeInBytes, keeping every product word-sized. Blocks are
-    * shared with the checkpoint, so [[freeCheckpoint]] on the returned
-    * frame frees them.
-    */
-  private def materializedBare(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint()
-    df.sparkSession.createDataFrame(ck.rdd, df.schema)
-  }
-
   def boruvkaMsf(edges: DataFrame, rounds: Int = 8, jumps: Int = 6): DataFrame = {
     val und = edges
       .select(least(col("src"), col("dst")).cast("long").as("a"),
@@ -1068,13 +1022,13 @@ l$i AS (SELECT src AS node, lbl FROM (
         col("w").cast("long").as("w"))
       .filter(col("a") =!= col("b"))
       .groupBy("a", "b").agg(min("w").as("w"))
-      .pipe(materializedBare)
+      .pipe(Loop.materialize)
     var comp = und.select(col("a").as("node"))
       .union(und.select(col("b").as("node"))).distinct()
-      .withColumn("comp", col("node")).pipe(materializedBare)
+      .withColumn("comp", col("node")).pipe(Loop.materialize)
     // lineage-free empty seed: deriving it from und (filter(false)) would
-    // let the round-1 freeCheckpoint(prevChosen) walk INTO und's checkpoint
-    // and free blocks the final result still reads
+    // put und's LogicalRDD in its plan, and the round-1 Loop.free(prevChosen)
+    // would free blocks the final result still reads
     var chosen = edges.sparkSession.createDataFrame(
       edges.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       new org.apache.spark.sql.types.StructType()
@@ -1088,8 +1042,8 @@ l$i AS (SELECT src AS node, lbl FROM (
         .join(comp.select(col("node").as("b"), col("comp").as("cb")), "b")
         .filter(col("ca") =!= col("cb"))
         .select(col("ca"), col("cb"), col("a"), col("b"), col("w"))
-        .pipe(materializedBare)
-      if (ec.isEmpty) { done = true; freeCheckpoint(ec) }
+        .pipe(Loop.materialize)
+      if (ec.isEmpty) { done = true; Loop.free(ec) }
       else {
         val inc = ec.select(col("ca").as("c"), col("cb").as("t"),
             col("a"), col("b"), col("w"))
@@ -1111,25 +1065,25 @@ l$i AS (SELECT src AS node, lbl FROM (
             min(struct(col("a"), col("b"), col("t"))).as("m"))
           .select(col("c"), col("m.t").as("t"), col("m.a").as("a"),
             col("m.b").as("b"))
-          .pipe(materializedBare)
+          .pipe(Loop.materialize)
         val prevChosen = chosen
-        chosen = materializedBare(
+        chosen = Loop.materialize(
           chosen.union(hook.select(col("a"), col("b"))).distinct())
-        freeCheckpoint(prevChosen)
+        Loop.free(prevChosen)
         // mutual 2-cycles break toward the smaller component id
         var par = hook
           .join(hook.select(col("c").as("t"), col("t").as("tt")), Seq("t"), "left")
           .select(col("c"),
             when(col("tt") === col("c"), least(col("c"), col("t")))
               .otherwise(col("t")).as("p"))
-          .pipe(materializedBare)
+          .pipe(Loop.materialize)
         (1 to jumps).foreach { _ =>
           val prev = par
           par = par
             .join(par.select(col("c").as("p"), col("p").as("pp")), Seq("p"), "left")
             .select(col("c"), coalesce(col("pp"), col("p")).as("p"))
-            .pipe(materializedBare)
-          freeCheckpoint(prev)
+            .pipe(Loop.materialize)
+          Loop.free(prev)
         }
         // the doubling depth must have flattened every chain
         val unstable = par
@@ -1141,11 +1095,11 @@ l$i AS (SELECT src AS node, lbl FROM (
         comp = comp
           .join(par.select(col("c").as("comp"), col("p")), Seq("comp"), "left")
           .select(col("node"), coalesce(col("p"), col("comp")).as("comp"))
-          .pipe(materializedBare)
-        freeCheckpoint(prevComp)
-        freeCheckpoint(ec)
-        freeCheckpoint(par)
-        freeCheckpoint(hook)
+          .pipe(Loop.materialize)
+        Loop.free(prevComp)
+        Loop.free(ec)
+        Loop.free(par)
+        Loop.free(hook)
       }
       r += 1
     }
@@ -1159,7 +1113,7 @@ l$i AS (SELECT src AS node, lbl FROM (
     }
     // the final labeling is not referenced by the result — free it now
     // (und and chosen stay persisted: the returned frame reads both)
-    freeCheckpoint(comp)
+    Loop.free(comp)
     und.join(chosen, Seq("a", "b"))
       .select(col("a"), col("b"), col("w"))
       .orderBy(col("w"), col("a"), col("b"))

@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import scala.util.chaining._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Near-duplicate GROUP assembly: pairs → connected components → one
   * canonical survivor per component. Production dedup pipelines consume
@@ -17,29 +21,39 @@ import org.apache.spark.sql.functions._
   */
 object Groups {
 
-  /** Connected-component labels over an undirected long-id edge list.
-    * Returns one (id, label) row per vertex of `vertices`; `label` is the
-    * MINIMUM id in the component (stable, order-independent canonical id).
+  /** Connected-component labels over an undirected edge list. Returns one
+    * (id, label) row per vertex of `vertices`; `label` is the MINIMUM id in
+    * the component (stable, order-independent canonical id). String ids
+    * stay strings, so the label is the string-minimum member (the spatial
+    * density islands key, engine/SpatialAggs.scala); every other id type is
+    * cast to long.
     *
-    * Scale split (same policy as the spatial density islands,
-    * engine/SpatialAggs.scala): the edge list of a near-dup graph is a
-    * small derived artifact (O(dup clusters), overwhelmingly smaller than
-    * the corpus), so below `smallEdgeLimit` edges a single collect feeds a
+    * Scale split: the edge list of a near-dup or density graph is a small
+    * derived artifact (O(dup clusters), overwhelmingly smaller than the
+    * corpus), so below `smallEdgeLimit` edges a single collect feeds a
     * driver union-find and one broadcast join — collapsing ~40 tiny
     * label-propagation jobs into two. Past the limit, distributed
     * hash-to-min with pointer jumping converges in O(log diameter) rounds;
-    * each round is one shuffle on the id key and lineage is truncated per
-    * round via localCheckpoint.
+    * each round is one shuffle on the id key, materialized through [[Loop]]
+    * with the superseded generation freed.
     */
   def ccLabels(vertices: DataFrame, edges: DataFrame,
       smallEdgeLimit: Long = 500000L, maxIterations: Int = 25): DataFrame = {
     val spark = vertices.sparkSession
-    import spark.implicits._
-    val edgeRows = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .localCheckpoint(true)
+    val keyType = vertices.schema("id").dataType match {
+      case StringType => StringType
+      case _ => LongType
+    }
+    def key(name: String) = col(name).cast(keyType).as(name)
+    val verts = vertices.select(key("id"))
+    val edgeRows = edges.select(key("src"), key("dst")).pipe(Loop.materialize)
     if (edgeRows.count() <= smallEdgeLimit) {
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
+      val ord = (keyType match {
+        case StringType => Ordering.String
+        case _ => Ordering.Long
+      }).asInstanceOf[Ordering[Any]]
+      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+      def find(x: Any): Any = {
         var r = x
         while (parent.getOrElse(r, r) != r) r = parent(r)
         var c = x
@@ -47,23 +61,23 @@ object Groups {
         r
       }
       edgeRows.collect().foreach { row =>
-        val (a, b) = (row.getLong(0), row.getLong(1))
-        val (ra, rb) = (find(a), find(b))
+        val (ra, rb) = (find(row.get(0)), find(row.get(1)))
         if (ra != rb) { // union by MIN id keeps the canonical label stable
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
+          if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
         }
       }
-      val resolved = parent.keys.map(k => (k, find(k))).toSeq
-      val lookup = broadcast(resolved.toDF("id", "__cc"))
-      vertices.select(col("id").cast("long").as("id"))
-        .join(lookup, Seq("id"), "left")
+      Loop.free(edgeRows)
+      val resolved = parent.keys.map(k => Row(k, find(k))).toSeq
+      val lookup = spark.createDataFrame(resolved.asJava,
+        StructType(Seq(StructField("id", keyType), StructField("__cc", keyType))))
+      verts.join(broadcast(lookup), Seq("id"), "left")
         .select(col("id"), coalesce(col("__cc"), col("id")).as("label"))
     } else {
       val sym = edgeRows
         .union(edgeRows.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(true)
-      var ls = vertices.select(col("id").cast("long").as("id"),
-        col("id").cast("long").as("label")).localCheckpoint(true)
+        .pipe(Loop.materialize)
+      Loop.free(edgeRows)
+      var ls = verts.select(col("id"), col("id").as("label")).pipe(Loop.materialize)
       var checksum = -1L
       var iter = 0
       var converged = false
@@ -76,7 +90,8 @@ object Groups {
           .select(col("id"), col("jlabel").as("label"))
         val next = l1.union(viaEdges).union(viaJump)
           .groupBy("id").agg(min("label").as("label"))
-          .localCheckpoint(true)
+          .pipe(Loop.materialize)
+        Loop.free(ls)
         // xor-fold checksum: order-independent, no ANSI overflow like sum
         val nextSum = next.agg(coalesce(bit_xor(xxhash64(col("id"), col("label"))), lit(0L)))
           .head().getLong(0)
@@ -85,6 +100,7 @@ object Groups {
         checksum = nextSum
         iter += 1
       }
+      Loop.free(sym)
       ls
     }
   }

@@ -1230,14 +1230,15 @@ object Similarity {
         .join(broadcast(cents), "cid")
         .select(col("id"), col(xCol), col("cid"), col("cv"))
     def train(vecs: DataFrame, xCol: String): (DataFrame, DataFrame) = {
-      // cents is materialized (eager localCheckpoint) each refinement:
-      // the codebook is nlist rows, but left LAZY its plan nests the whole
-      // previous iteration's corpus-wide assignment — and every
-      // broadcast(cents) consumer re-executed that chain from scratch
-      // (guide §5: materialise tiny reused intermediates). This is what
-      // made the 13k-line sim_rq plan and its repeated recenter passes.
-      var cents = vecs.filter(col("id") < nlist)
-        .select(col("id").as("cid"), col(xCol).as("cv")).localCheckpoint()
+      // cents is materialized (Loop.materialize) each refinement and the
+      // superseded codebook freed: the codebook is nlist rows, but left
+      // LAZY its plan nests the whole previous iteration's corpus-wide
+      // assignment — and every broadcast(cents) consumer re-executed that
+      // chain from scratch (guide §5: materialise tiny reused
+      // intermediates). This is what made the 13k-line sim_rq plan and its
+      // repeated recenter passes.
+      var cents = Loop.materialize(vecs.filter(col("id") < nlist)
+        .select(col("id").as("cid"), col(xCol).as("cv")))
       for (_ <- 1 to iters) {
         val assigned = assignTo(vecs, xCol, cents)
         val re = assigned
@@ -1246,9 +1247,10 @@ object Similarity {
           .groupBy("cid")
           .agg(transform(sort_array(collect_list(struct(col("pos"), col("mv")))),
             s => s.getField("mv")).as("cv2"))
-        cents = cents.as("p").join(re, Seq("cid"), "left")
-          .select(col("cid"), coalesce(col("cv2"), col("p.cv")).as("cv"))
-          .localCheckpoint()
+        val next = Loop.materialize(cents.as("p").join(re, Seq("cid"), "left")
+          .select(col("cid"), coalesce(col("cv2"), col("p.cv")).as("cv")))
+        Loop.free(cents)
+        cents = next
       }
       (assignTo(vecs, xCol, cents).persist(), cents)
     }

@@ -24,6 +24,28 @@ class GroupsSpec extends SparkSpec {
     assert(dist == expected)
   }
 
+  test("ccLabels keeps string ids as strings: the label is the string minimum") {
+    // one component {"10", "9", "100"}: its string minimum is "10", its
+    // numeric minimum 9; "7" stays a singleton
+    val edges = Seq(("9", "10"), ("100", "9")).toDF("src", "dst")
+    val verts = Seq("10", "9", "100", "7").toDF("id")
+    val want = Map("10" -> "10", "9" -> "10", "100" -> "10", "7" -> "7")
+    val fast = Groups.ccLabels(verts, edges).as[(String, String)].collect().toMap
+    val dist = Groups.ccLabels(verts, edges, smallEdgeLimit = 0L)
+      .as[(String, String)].collect().toMap
+    assert(fast == want)
+    assert(dist == want)
+    // the same graph over long ids labels the component 9
+    val longEdges = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val longVerts = verts.select(col("id").cast("long"))
+    val wantLong = Map(10L -> 9L, 9L -> 9L, 100L -> 9L, 7L -> 7L)
+    Seq(500000L, 0L).foreach { limit =>
+      val got = Groups.ccLabels(longVerts, longEdges, smallEdgeLimit = limit)
+        .as[(Long, Long)].collect().toMap
+      assert(got == wantLong, s"smallEdgeLimit = $limit")
+    }
+  }
+
   private def dupDocs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog again and again today"),
     (2L, "the quick brown fox jumps over the lazy dog again and again today"),

@@ -1,17 +1,21 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.storage.StorageLevel
 
-import graft.pipeline.Graphs
+import graft.pipeline.{Bpe, Graphs, Groups, Loop, Similarity}
 
-/** Round-10 optimization pins: the iterative graph loops (katz, hits,
-  * kcorePeel, labelPropagation, sssp, bfs/bfsPerSource, brandesBetweenness,
-  * hashWalks) now run the SCC/MST materializedBare + freeCheckpoint
-  * discipline — constant-size per-round plans instead of an unrolled
-  * lineage (37k–86k plan lines before), and superseded generations freed
-  * instead of leaking to query end. These tests pin the two new properties
-  * the oracle can't see: no block-store leak beyond the result-referenced
-  * frames, and a bounded plan for a representative loop's result.
+/** Loop-primitive pins: every iterative operator (the graph loops,
+  * Groups.ccLabels, Bpe training, the RQ codebook refinement) materializes
+  * its generations through [[Loop.materialize]] and frees the superseded
+  * ones with [[Loop.free]] — constant-size per-round plans instead of an
+  * unrolled lineage (37k–86k plan lines before), and no generation left
+  * resident to query end. These tests pin what the oracle can't see: the
+  * bare single-leaf plan and its one-step free, no block-store leak beyond
+  * the result-referenced frames, and a bounded plan for a representative
+  * loop's result.
   */
 class Round10Spec extends SparkSpec {
   import spark.implicits._
@@ -21,6 +25,26 @@ class Round10Spec extends SparkSpec {
     val raw = (0 until 300).map(i => (i.toLong % 30, (i * 7L + 1) % 30))
       .filter { case (a, b) => a != b }
     (raw ++ raw.map(_.swap)).toDF("src", "dst")
+  }
+
+  test("Loop.materialize is one bare LogicalRDD; Loop.free unpersists it") {
+    val src = symEdges.groupBy("src").agg(count(lit(1)).as("deg"))
+    val m = Loop.materialize(src)
+    val lr = m.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr
+      case p => fail(s"materialized plan is not a single LogicalRDD:\n${p.treeString}")
+    }
+    // no carried statistics: the size estimate is the session default
+    assert(lr.stats.sizeInBytes == BigInt(SQLConf.get.defaultSizeInBytes))
+    // fresh attribute ids, so self-joins against the source never collide
+    assert(lr.output.map(_.exprId).intersect(
+      src.queryExecution.analyzed.output.map(_.exprId)).isEmpty)
+    assert(lr.rdd.getStorageLevel != StorageLevel.NONE)
+    assert(m.count() == src.count())
+    // the checkpointed RDD sits directly under the LogicalRDD: freeing
+    // takes one step, no dependency walk
+    Loop.free(m)
+    assert(lr.rdd.getStorageLevel == StorageLevel.NONE)
   }
 
   test("iterative loops free superseded generations (no block-store leak)") {
@@ -55,6 +79,23 @@ class Round10Spec extends SparkSpec {
     leakOf("brandesBetweenness", 4)(
       Graphs.brandesBetweenness(symEdges, seeds, maxHop = 3, k = 10).count())
     leakOf("hashWalks", 5)(Graphs.hashWalks(symEdges, seeds, steps = 4).count())
+    val k6 = (for (a <- 0L until 6L; b <- a + 1 until 6L) yield (a, b)).toDF("src", "dst")
+    leakOf("trussPeel", 1)(Graphs.trussPeel(k6, k = 3, rounds = 3).count())
+    // the final labels / the final SCC union
+    val verts = (0L until 30L).toDF("id")
+    leakOf("ccLabels", 1)(
+      Groups.ccLabels(verts, symEdges, smallEdgeLimit = 0L).count())
+    leakOf("sccLabels", 1)(Graphs.sccLabels(verts, symEdges).count())
+    // the merge list is a local frame: no symbol generation stays
+    val docs = Seq("low lower lowest newer newest", "wider widest low new")
+      .toDF("text")
+    leakOf("bpeMerges", 0)(Bpe.bpeMerges(docs, "text", numMerges = 4).count())
+    // the cached base and two assignments, plus the two final codebooks
+    val vecs = (0 until 40).map { i =>
+      (i.toLong, Array.tabulate(64)(j => ((i % 5) * 3 + j % 7 + i * 0.01).toFloat))
+    }.toDF("vec_id", "embedding")
+    leakOf("rqTopK", 5)(Similarity.rqTopK(vecs, "vec_id", "embedding",
+      Array.tabulate(64)(j => (j % 7).toDouble), k = 5).count())
   }
 
   test("loop results read from constant-size plans (lineage truncated)") {

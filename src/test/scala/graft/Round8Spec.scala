@@ -6,7 +6,7 @@ import graft.pipeline.{Graphs, Similarity}
 
 /** Round-8 additions: the graph family's packed-key ceilings are gone
   * (struct-tuple orientation/argmin keys — ids and weights are arbitrary
-  * longs), freeCheckpoint actually frees materializedBare frames (the
+  * longs), boruvkaMsf frees its superseded materialized generations (the
   * round-7 ADVICE no-op), kmeansCentroids recenters through a
   * partial-combining Aggregator, and ivfFilteredTopK validates nprobe.
   * The second real image codec (pure-JVM truecolor PNG) is pinned by an
@@ -85,7 +85,7 @@ class Round8Spec extends SparkSpec {
     assert(t4 == k4Edges)
   }
 
-  test("freeCheckpoint frees materializedBare block-store snapshots") {
+  test("boruvkaMsf frees its superseded Loop generations") {
     val sc = spark.sparkContext
     def persisted = sc.getPersistentRDDs.size
     val before = persisted
@@ -100,8 +100,8 @@ class Round8Spec extends SparkSpec {
     // only the result-referenced frames (und, chosen) may remain
     val leaked = persisted - before
     assert(leaked <= 3,
-      s"boruvkaMsf leaked $leaked persisted RDD snapshots (freeCheckpoint " +
-        "is a no-op for materializedBare frames again?)")
+      s"boruvkaMsf leaked $leaked persisted RDD snapshots (Loop.free " +
+        "is a no-op for materialized frames again?)")
   }
 
   test("kmeansCentroids recenter runs as a partial aggregate, same result") {
