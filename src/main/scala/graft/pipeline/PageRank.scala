@@ -1,46 +1,65 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed PageRank over an edge table — the web-graph quality signal a
   * crawl-curation pipeline feeds into document weighting (rank-weighted
   * sampling of a 100 TB crawl is the canonical use).
   *
-  * Plan shape per iteration: contributions = edges ⋈ ranks on src (both
-  * sides sharded on the SAME node key — sort-merge equi-join, nothing
-  * broadcast), one `groupBy(dst).sum` (map-side combinable), then a left
-  * join back to the node list for dangling/unreferenced nodes. k iterations
-  * = k shuffles of the rank table (edge table partitioning is reusable);
-  * state per round is one (node, rank) row per node, never the edge list.
+  * Setup, once: the edge table `(src, dst, deg)` — each edge carries its
+  * source's out-degree (a count over a window on src, so the input is
+  * computed once and a duplicated edge counts twice), cached; the node
+  * list is derived from it.
+  *
+  * Plan shape per iteration (the Pregelix superstep: one join, one
+  * group-by): contributions = edges ⋈ ranks on src, projected to
+  * `(dst, rank / deg)`, unioned with one zero row per node, then one
+  * `groupBy(node).sum` (map-side combinable). The zero rows keep every
+  * node — dangling and unreferenced ones get sum 0 — so no join back to the
+  * node list is needed. k iterations = k shuffles of the rank table; state
+  * per round is one (node, rank) row per node, never the edge list.
   *
   * Determinism for the oracle: every iteration's rank is rounded to 12
   * decimals on both engines, so summation-order noise (~1e-16 relative)
-  * never survives a round — the chained-CTE DuckDB replay is bit-identical.
+  * never survives a round — the chained-CTE DuckDB replay, which still
+  * joins to the degree table and left-joins the node list, is bit-identical
+  * (adding the zero rows is exact).
   */
 object PageRank {
+
+  /** `(src, dst, deg)` with long ids, cached: each edge carries its
+    * source's out-degree.
+    */
+  private def edgeTable(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
+      .persist()
+
+  /** The distinct `(node)` list over both endpoints of an [[edgeTable]]. */
+  private def nodesOf(ed: DataFrame): DataFrame =
+    ed.select(col("src").as("node")).union(ed.select(col("dst").as("node"))).distinct()
+
+  /** One superstep's contributions: `(node = dst, c = rank / deg)`. */
+  private def contributions(ed: DataFrame, ranks: DataFrame): DataFrame =
+    ed.join(ranks, ed("src") === ranks("node"))
+      .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
 
   /** `edges` must have long columns (src, dst); the graph is used as given
     * (callers wanting symmetric flow pass both directions). Returns one row
     * per node with its rank after `iters` damped rounds.
     */
   def pageRank(edges: DataFrame, iters: Int = 3, damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
+    val ed = edgeTable(edges)
+    val nodes = nodesOf(ed).persist()
     val n = nodes.count()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+    val zeros = nodes.select(col("node"), lit(0.0).as("c"))
     var ranks = nodes.select(col("node"), lit(1.0 / n).as("rank"))
     for (_ <- 1 to iters) {
-      val contrib = e.join(ranks, e("src") === ranks("node"))
-        .join(outdeg, "src")
-        .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
-        .groupBy("node").agg(sum(col("c")).as("s"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          round(lit((1.0 - damping) / n) + lit(damping) * coalesce(col("s"), lit(0.0)), 12)
-            .as("rank"))
+      ranks = contributions(ed, ranks).union(zeros)
+        .groupBy("node")
+        .agg(round(lit((1.0 - damping) / n) + lit(damping) * sum(col("c")), 12).as("rank"))
     }
     ranks
   }
@@ -51,33 +70,30 @@ object PageRank {
     * recommendation / related-entities primitive; Haveliwala 2002's
     * topic-sensitive PageRank with a one-hot topic set).
     *
-    * Same per-iteration plan as [[pageRank]] (edge⋈rank sort-merge join,
-    * map-side-combinable sum, left join to the teleport table); the teleport
-    * vector is a (node, t) DataFrame built once — node-keyed, never
-    * broadcast, so any seed-set size scales. Dangling mass is dropped, the
-    * standard bounded-round treatment (the oracle replays identically).
+    * Same per-iteration plan as [[pageRank]] (edge⋈rank join, one
+    * map-side-combinable group-by): the teleport table `(node, t)` — every
+    * node of the graph, t = 1/|seeds| on seeds and 0 elsewhere — is built
+    * once, cached, and unioned each round as `(node, c = 0, t)` beside the
+    * contributions `(node, c, t = 0)`; the group-by sums both columns. A
+    * node's only possibly nonzero t is its teleport row's, so the teleport
+    * sum is exact. The teleport table is node-keyed, never broadcast, so
+    * any seed-set size scales. Dangling mass is dropped, the standard
+    * bounded-round treatment (the oracle replays identically).
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iters: Int = 3, damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
+    val ed = edgeTable(edges)
     val sd = seeds.select(col("node").cast("long").as("node")).distinct()
     val ns = sd.count()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val tele = nodes.join(sd.withColumn("t", lit(1.0 / ns)), Seq("node"), "left")
+    val tele = nodesOf(ed).join(sd.withColumn("t", lit(1.0 / ns)), Seq("node"), "left")
       .select(col("node"), coalesce(col("t"), lit(0.0)).as("t")).persist()
+    val teleRows = tele.select(col("node"), lit(0.0).as("c"), col("t"))
     var ranks = tele.select(col("node"), col("t").as("rank"))
     for (_ <- 1 to iters) {
-      val contrib = e.join(ranks, e("src") === ranks("node"))
-        .join(outdeg, "src")
-        .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
-        .groupBy("node").agg(sum(col("c")).as("s"))
-      ranks = tele.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          round(lit(1.0 - damping) * col("t")
-            + lit(damping) * coalesce(col("s"), lit(0.0)), 12).as("rank"))
+      ranks = contributions(ed, ranks).withColumn("t", lit(0.0)).union(teleRows)
+        .groupBy("node")
+        .agg(round(lit(1.0 - damping) * sum(col("t"))
+          + lit(damping) * sum(col("c")), 12).as("rank"))
     }
     ranks
   }
