@@ -11,6 +11,9 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the graft rules, BindConstants included (a built session takes no
+      // physical rule, so GraftOptimizations.install cannot add it)
+      .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
       // Spark 4 defaults, pinned explicitly: AQE re-plans at runtime and its
       // skew-join splitter keeps one hot grid cell (sp_join_grid) or one hot
       // shuffle key from serializing a stage on a single straggler task

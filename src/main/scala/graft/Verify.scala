@@ -13,6 +13,9 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the graft rules, BindConstants included (a built session takes no
+      // physical rule, so GraftOptimizations.install cannot add it)
+      .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -91,7 +91,7 @@ object Graphs {
 
   private def trianglesFromUnd(und: DataFrame,
       broadcastLimit: Long): DataFrame =
-    orientedTriples(und, broadcastLimit)
+    orientedTriples(und, broadcastLimit)._1
       .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
 
@@ -110,9 +110,12 @@ object Graphs {
     * native-struct key — there is still NO id ceiling (the round-8
     * contract); packing is a measured fast lane, not a bound. The bounds
     * probe is one tiny aggregate over the (node, deg) table.
+    *
+    * Also returns the persisted oriented edge list the triples read: a
+    * caller that materializes what it derives from them unpersists it.
     */
   private def orientedTriples(und: DataFrame,
-      broadcastLimit: Long): DataFrame = {
+      broadcastLimit: Long): (DataFrame, DataFrame) = {
     val deg = und.select(col("a").as("v")).union(und.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
       .persist() // consumed 3×: the bounds probe + both degree attaches
@@ -156,8 +159,8 @@ object Graphs {
         dirE0.select(col("u").as("v"), col("w")), n, col("v"), col("w"))
     val id = (c: org.apache.spark.sql.Column) =>
       if (packed) c % lit(1L << 31) else c.getField("id")
-    closable.join(probeSide, Seq("v", "w"))
-      .select(id(col("u")).as("u"), id(col("v")).as("v"), id(col("w")).as("w"))
+    (closable.join(probeSide, Seq("v", "w"))
+      .select(id(col("u")).as("u"), id(col("v")).as("v"), id(col("w")).as("w")), dirE0)
   }
 
   /** Per-edge triangle support over an undirected (a<b) edge list: one row
@@ -165,22 +168,24 @@ object Graphs {
     * oriented O(m^{3/2}) plan; ids are decoded from the orientation keys and
     * re-sorted so each triangle charges its three id-ordered edges — the
     * same (a, b) keys the input carries, whatever the degree orientation
-    * chose.
+    * chose. Also returns the persisted edge list ([[orientedTriples]]).
     */
-  private def edgeSupport(und: DataFrame, broadcastLimit: Long): DataFrame = {
-    val ids = orientedTriples(und, broadcastLimit).select(
+  private def edgeSupport(und: DataFrame,
+      broadcastLimit: Long): (DataFrame, DataFrame) = {
+    val (triples, dirE) = orientedTriples(und, broadcastLimit)
+    val ids = triples.select(
       col("u").as("x"), col("v").as("y"), col("w").as("z"))
     // id-sort the corners via array_sort — the old x+y+z−lo−hi midpoint
     // arithmetic overflows once ids use the full long range
     val srt = array_sort(array(col("x"), col("y"), col("z")))
     val tri = ids.select(srt.getItem(0).as("ta"),
       srt.getItem(1).as("tb"), srt.getItem(2).as("tc"))
-    tri.select(explode(array(
+    (tri.select(explode(array(
         struct(col("ta").as("a"), col("tb").as("b")),
         struct(col("ta").as("a"), col("tc").as("b")),
         struct(col("tb").as("a"), col("tc").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("support"))
+      .groupBy("a", "b").agg(count(lit(1)).as("support")), dirE)
   }
 
   /** k-truss peel (Cohen, "Trusses: cohesive subgraphs for social network
@@ -195,7 +200,7 @@ object Graphs {
     * the result is well-defined (and replayable) even when `rounds` stops
     * short of the fixpoint. Returns the surviving edges with their final
     * support — one more support pass after the last peel, again mirrored
-    * by the oracle.
+    * by the oracle — as a materialized frame.
     *
     * Scale shape per round: the O(m^{3/2}) wedge volume of the current
     * survivor set (shrinking every round), then a (a,b)-keyed count and a
@@ -212,16 +217,20 @@ object Graphs {
     // the driver dies in the analyzer long before any executor works. The
     // bare LogicalRDD truncates both the plan tree and the carried stats
     // (the gr_mst sizeInBytes-squaring pathology).
+    // Each support pass persists its oriented edge list: it is unpersisted,
+    // with the pass's input, once the survivors (or the result) are
+    // materialized, so only the returned frame stays resident.
     var e = normalized(edges).pipe(Loop.materialize)
-    for (_ <- 1 to rounds) {
-      val next = edgeSupport(e, broadcastLimit)
-        .filter(col("support") >= k - 2)
-        .select("a", "b")
-        .pipe(Loop.materialize)
+    def peel(f: DataFrame => DataFrame): DataFrame = {
+      val (support, dirE) = edgeSupport(e, broadcastLimit)
+      val out = Loop.materialize(f(support))
+      dirE.unpersist(blocking = false)
       Loop.free(e)
-      e = next
+      out
     }
-    edgeSupport(e, broadcastLimit)
+    for (_ <- 1 to rounds)
+      e = peel(_.filter(col("support") >= k - 2).select("a", "b"))
+    peel(identity)
   }
 
   /** DuckDB replay of [[trussPeel]]: `e0Ctes` is a CTE-list fragment whose

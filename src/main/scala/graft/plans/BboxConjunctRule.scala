@@ -4,6 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.types.{BinaryType, DoubleType, StructType}
 import org.locationtech.jts.geom.Envelope
 
@@ -172,11 +173,18 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     // session-bound instance: a multi-session JVM must not resolve
     // SparkSession.active inside the rewrite
     ext.injectOptimizerRule(s => new StJoinRule(Some(s)))
+    // a columnar rule runs on every plan before codegen stages collapse,
+    // adaptive or not: the one slot for a rewrite of the generated code
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = BindConstants
+    })
   }
 }
 
-/** Installer for already-built sessions (tests, notebooks):
-  * appends the rule to `spark.experimental.extraOptimizations`.
+/** Installer for already-built sessions (tests, notebooks): appends the
+  * LOGICAL rules to `spark.experimental.extraOptimizations`. A built session
+  * takes no new physical or columnar rule, so [[BindConstants]] runs only in
+  * sessions created with `spark.sql.extensions=graft.plans.GraftSparkExtensions`.
   */
 object GraftOptimizations {
   def install(spark: SparkSession): Unit = {

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
 
 /** Round-9 measurement harness (guide §1): for each named query, write the
   * `explain("formatted")` physical plan to `outDir/<name>.txt` and time the
@@ -23,6 +23,9 @@ object PlanDump {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the graft rules, BindConstants included (a built session takes no
+      // physical rule, so GraftOptimizations.install cannot add it)
+      .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .getOrCreate()
@@ -46,9 +49,13 @@ object PlanDump {
         System.gc()
         dt
       }
+      // the plan that ran: adaptive execution applies the columnar rules
+      // (BindConstants) and codegen stage by stage, which a plan that has
+      // not run does not show
+      val qe = fn(spark, sfDir).queryExecution
+      SQLExecution.withNewExecutionId(qe)(qe.toRdd.foreach(_ => ()))
       Files.writeString(Paths.get(s"$outDir/$name.txt"),
-        fn(spark, sfDir).queryExecution.explainString(
-          ExplainMode.fromString("formatted")))
+        qe.explainString(ExplainMode.fromString("formatted")))
       spark.catalog.clearCache()
       System.err.println(f"[plandump] $name rows=$nRows counts=" +
         times.map(t => f"$t%.2f").mkString(","))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftTestConf
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -49,13 +50,16 @@ class Round10Spec extends SparkSpec {
 
   test("iterative loops free superseded generations (no block-store leak)") {
     val sc = spark.sparkContext
-    def persisted = sc.getPersistentRDDs.size
     val seeds = Seq(1L, 2L).toDF("node")
 
+    // RDDs that gained blocks during `run` and still hold them; the paused
+    // cleaner keeps a GC from hiding one (GraftTestConf)
     def leakOf(label: String, allowed: Int)(run: => Long): Unit = {
-      val before = persisted
-      assert(run > 0, s"$label produced no rows")
-      val leaked = persisted - before
+      val leaked = GraftTestConf.withCleanerPaused(sc) {
+        val before = GraftTestConf.rddsWithBlocks(sc)
+        assert(run > 0, s"$label produced no rows")
+        (GraftTestConf.rddsWithBlocks(sc) -- before).size
+      }
       assert(leaked <= allowed,
         s"$label leaked $leaked persisted frames (allowed $allowed) — " +
           "superseded loop generations are no longer freed?")

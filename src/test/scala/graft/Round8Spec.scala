@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftTestConf
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{Graphs, Similarity}
@@ -87,18 +88,18 @@ class Round8Spec extends SparkSpec {
 
   test("boruvkaMsf frees its superseded Loop generations") {
     val sc = spark.sparkContext
-    def persisted = sc.getPersistentRDDs.size
-    val before = persisted
     val edges = (0 until 200).map { i =>
       (i.toLong % 40, (i * 7L + 1) % 40, (i * 13L) % 50)
     }.toDF("src", "dst", "w")
-    val msf = Graphs.boruvkaMsf(edges)
-    val n = msf.count()
-    assert(n > 0)
     // the run localCheckpoints one frame per round×(hook/par/comp/ec/chosen)
     // step (~30+ for this graph); all superseded snapshots must be freed —
-    // only the result-referenced frames (und, chosen) may remain
-    val leaked = persisted - before
+    // only the result-referenced frames (und, chosen) may remain. Counted
+    // as RDDs holding blocks, with the cleaner paused (GraftTestConf)
+    val leaked = GraftTestConf.withCleanerPaused(sc) {
+      val before = GraftTestConf.rddsWithBlocks(sc)
+      assert(Graphs.boruvkaMsf(edges).count() > 0)
+      (GraftTestConf.rddsWithBlocks(sc) -- before).size
+    }
     assert(leaked <= 3,
       s"boruvkaMsf leaked $leaked persisted RDD snapshots (Loop.free " +
         "is a no-op for materialized frames again?)")
