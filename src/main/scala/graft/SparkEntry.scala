@@ -944,7 +944,7 @@ object SparkEntry {
     // SEMI-JOIN chain — lineitem semi-joined against the name-filtered
     // part dim, the >50-qty qualifying pairs then semi-join the supplier
     // dim, region filter last; both semi-joins are real LeftSemi operators
-    // the planner must keep (pinned in ExplainAudit)
+    // the planner must keep (its PlanDump plan shows both)
     "q20_excess_stock" -> ((s, dir) => {
       val prt = T(s, dir, "part").filter(col("p_name").like("small%"))
         .select(col("p_partkey"))
@@ -5567,12 +5567,12 @@ object SparkEntry {
           "l_returnflag", "l_linestatus", "l_shipdate"))),
 
     // declarative SQL spatial join: plain `JOIN ON st_intersects(...)`
-    // (which vanilla Spark plans as a cartesian product) — StJoinRule
+    // (which vanilla Spark plans as a cartesian product) — StJoinRule, which
+    // the session's `spark.sql.extensions` registers (graft.Sessions),
     // rewrites it to the grid equi-join; results must equal the oracle's
     // interval containment (plan shape pinned by StJoinRuleSpec)
     "sp_sql_join" -> ((s, dir) => {
       graft.functions.SpatialFunctions.register(s)
-      graft.plans.GraftOptimizations.install(s)
       pointsDf(s, dir).select(col("ck"), col("geometry"))
         .createOrReplaceTempView("sqlj_pts")
       natBoxesDf(s, dir)
@@ -5592,7 +5592,6 @@ object SparkEntry {
     // shape (SpatialProcedures.java:679-718) expressed in SQL.
     "sp_sql_left_join" -> ((s, dir) => {
       graft.functions.SpatialFunctions.register(s)
-      graft.plans.GraftOptimizations.install(s)
       pointsDf(s, dir).select(col("ck"), col("geometry"))
         .createOrReplaceTempView("sqlj_pts")
       natBoxesDf(s, dir)
@@ -5610,7 +5609,6 @@ object SparkEntry {
     // workflow shape; counts pin both sides of the partition
     "sp_sql_anti_join" -> ((s, dir) => {
       graft.functions.SpatialFunctions.register(s)
-      graft.plans.GraftOptimizations.install(s)
       pointsDf(s, dir).select(col("ck"), col("geometry"))
         .createOrReplaceTempView("sqlj_pts")
       natBoxesDf(s, dir)
@@ -5633,7 +5631,6 @@ object SparkEntry {
     // half-integer lattice (dx, dy are integers ⇒ dx²+dy² ∈ ℤ vs 33.0625)
     "sp_sql_dwithin" -> ((s, dir) => {
       graft.functions.SpatialFunctions.register(s)
-      graft.plans.GraftOptimizations.install(s)
       pointsDf(s, dir).select(col("ck"), col("geometry"))
         .createOrReplaceTempView("sqlj_pts")
       natBoxesDf(s, dir)
@@ -5651,7 +5648,6 @@ object SparkEntry {
     // boxes thin the right, so both unmatched legs are exercised)
     "sp_sql_full_join" -> ((s, dir) => {
       graft.functions.SpatialFunctions.register(s)
-      graft.plans.GraftOptimizations.install(s)
       pointsDf(s, dir).filter(col("ck") % 3 === 0)
         .select(col("ck"), col("geometry"))
         .createOrReplaceTempView("sqlj_pts3")

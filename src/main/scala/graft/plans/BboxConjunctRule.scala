@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -35,8 +35,8 @@ import graft.geom.GeomCodec
   * Idempotent: a conjunct already present (semantically) is not re-added, so
   * the rule is safe under fix-point iteration.
   *
-  * Registration: `GraftSparkExtensions` for `spark.sql.extensions`, or
-  * [[GraftOptimizations.install]] on a live session.
+  * Registration: `GraftSparkExtensions` for `spark.sql.extensions`, which
+  * [[graft.Sessions.local]] sets.
   */
 object BboxConjunctRule extends Rule[LogicalPlan] {
 
@@ -172,27 +172,11 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => BboxConjunctRule)
     // session-bound instance: a multi-session JVM must not resolve
     // SparkSession.active inside the rewrite
-    ext.injectOptimizerRule(s => new StJoinRule(Some(s)))
+    ext.injectOptimizerRule(s => new StJoinRule(s))
     // a columnar rule runs on every plan before codegen stages collapse,
     // adaptive or not: the one slot for a rewrite of the generated code
     ext.injectColumnar(_ => new ColumnarRule {
       override def preColumnarTransitions: Rule[SparkPlan] = BindConstants
     })
-  }
-}
-
-/** Installer for already-built sessions (tests, notebooks): appends the
-  * LOGICAL rules to `spark.experimental.extraOptimizations`. A built session
-  * takes no new physical or columnar rule, so [[BindConstants]] runs only in
-  * sessions created with `spark.sql.extensions=graft.plans.GraftSparkExtensions`.
-  */
-object GraftOptimizations {
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(BboxConjunctRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ BboxConjunctRule
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[StJoinRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new StJoinRule(Some(spark))
   }
 }

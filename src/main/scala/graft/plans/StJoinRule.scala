@@ -42,7 +42,7 @@ import graft.functions.st
   * broadcast cap is `build`'s `spark.graft.sqlJoin.broadcastBytes`
   * (0 pins the grid plan).
   */
-class StJoinRule(sessionOpt: Option[SparkSession]) extends Rule[LogicalPlan] {
+class StJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** predicate → its transpose when the arguments arrive (right, left) */
   private val Transpose = Map(
@@ -115,10 +115,9 @@ class StJoinRule(sessionOpt: Option[SparkSession]) extends Rule[LogicalPlan] {
       rest: Seq[Expression], pred: String,
       lGeom: AttributeReference, rGeom: AttributeReference,
       dist: Option[Double]): LogicalPlan = {
-    // session threaded from the injection point; conf read through the
-    // rule's SQLConf (the session planning this query), so a multi-session
-    // JVM never crosses sessions
-    val spark = sessionOpt.getOrElse(SparkSession.active)
+    // `spark` is the session the rule was injected into; conf is read
+    // through the rule's SQLConf (the session planning this query), so a
+    // multi-session JVM never crosses sessions
     val cell = conf.getConfString("spark.graft.sqlJoin.cellSize", "10.0").toDouble
     val restCond = rest.reduceOption(And).map(GraftColumnBridge.column)
 
@@ -166,9 +165,3 @@ class StJoinRule(sessionOpt: Option[SparkSession]) extends Rule[LogicalPlan] {
     }, newPlan)
   }
 }
-
-/** Default instance for `extraOptimizations` installs (resolves the active
-  * session at rewrite time); [[GraftSparkExtensions]] builds a
-  * session-bound instance instead.
-  */
-object StJoinRule extends StJoinRule(None)

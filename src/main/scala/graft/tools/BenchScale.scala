@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.{SpatialAggs, SpatialJoin}
@@ -30,6 +30,8 @@ import graft.pipeline.{Dedup, Multimodal, Similarity}
   *  - points: a small per-copy coordinate shift.
   *
   * Usage: runMain graft.tools.BenchScale [sfDir] [outJson]
+  * (BENCH_scale.json is measured on 16 cores: tools/ladder.sh sets
+  * SPARK_GRAFT_CPUS=16)
   */
 object BenchScale {
 
@@ -42,18 +44,7 @@ object BenchScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outJson = args.lift(1).getOrElse("BENCH_scale.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // see Bench.scala: initialPartitionNum stays unset — it fixes the
-      // wedge-shuffle spill but regresses every iterative family
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     spark.range(1000).selectExpr("sum(id)").collect()   // session warm-up
     // SPARK_GRAFT_DEDUP_BCAST pins the dedup verify strategy for a rung
     // ladder (e.g. "0" = always the shuffle-join verify): the adaptive

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable end-to-end demo of the procedure surface: imports the OSM and
   * shapefile fixtures, runs searches, exports and re-imports a shapefile.
   * Usage: runMain graft.tools.Demo [osmPath shpPath]
@@ -10,13 +8,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val osmPath = args.lift(0).getOrElse("/root/reference/example-data/osm/example.osm")
     val shpPath = args.lift(1).getOrElse("/root/reference/example-data/shp/highway.shp")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
 
     val wh = java.nio.file.Files.createTempDirectory("graft-demo-wh").toString
     val proc = new graft.engine.SpatialProcedures(spark, wh)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -24,7 +24,8 @@ import org.apache.spark.sql.streaming.Trigger
   *    family that legitimately grows ~10×, bounded by the horizon, not
   *    the stream length
   *
-  * Usage: runMain graft.tools.StreamStateBench [sfDir] [outJson]
+  * Usage: SPARK_GRAFT_CPUS=16 runMain graft.tools.StreamStateBench [sfDir] [outJson]
+  * (16 cores: the core count of BENCH_scale.json)
   * Merges a "streaming_state" section into BENCH_scale.json when present.
   */
 object StreamStateBench {
@@ -35,14 +36,7 @@ object StreamStateBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outJson = args.lift(1).getOrElse("/tmp/stream_state.json")
     val mergeInto = args.lift(2).getOrElse("BENCH_scale.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     // normalizeEventTs absorbs the driver's per-generation ts precision
     // (TIMESTAMP(NANOS)-as-long vs TIMESTAMP_NTZ) into long nanos

@@ -12,20 +12,17 @@ import org.apache.spark.sql.types._
 import graft.engine.SpatialProcedures
 import graft.plans.{BindConstants, BoundConstant, InRanges}
 
-/** [[BindConstants]] in a session registered through `spark.sql.extensions`:
-  * lookups with new constants reuse the compiled classes, answer exactly as
-  * the shared session (no rule) does, and leave the scan's pushed filters
-  * alone; range membership equals the OR chain it replaces; literals in
-  * other positions are left as they are.
+/** [[BindConstants]] in the shared session, which registers it through
+  * `spark.sql.extensions`: lookups with new constants reuse the compiled
+  * classes, answer exactly as a session without the graft rules does, and
+  * leave the scan's pushed filters alone; range membership equals the OR
+  * chain it replaces; literals in other positions are left as they are.
   */
 class BindConstantsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** A point layer (hilbert curve, points on both sides of the
-    * antimeridian) and a polygon layer, written once by the shared session.
-    * That session gets the graft logical rules too, so it differs from the
-    * extensions session by [[BindConstants]] alone. */
+    * antimeridian) and a polygon layer, written once. */
   private lazy val warehouse: String = {
-    graft.plans.GraftOptimizations.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_bind").toString
     val r = new scala.util.Random(11)
     val pts = (0 until 3000).map { i =>
@@ -83,54 +80,54 @@ class BindConstantsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("a second lookup of each kind with new constants compiles no class") {
-    withExtensionsSession { s2 =>
-      lookups(s2, 0).foreach(_._2.collect())
-      val before = compilations
-      lookups(s2, 1).foreach(_._2.collect())
-      assert(compilations - before == 0,
-        "a lookup with new constants compiled classes under BindConstants")
-    }
-    // the shared session, without the rule, compiles again for new values:
-    // the counter sees what the rule saves
-    lookups(spark, 2).foreach(_._2.collect())
+    lookups(spark, 0).foreach(_._2.collect())
     val before = compilations
-    lookups(spark, 3).foreach(_._2.collect())
-    assert(compilations - before > 0)
+    lookups(spark, 1).foreach(_._2.collect())
+    assert(compilations - before == 0,
+      "a lookup with new constants compiled classes under BindConstants")
+    // a session without the rule compiles again for new values: the
+    // counter sees what the rule saves
+    withoutGraftRules { ref =>
+      lookups(ref, 2).foreach(_._2.collect())
+      val before = compilations
+      lookups(ref, 3).foreach(_._2.collect())
+      assert(compilations - before > 0)
+    }
   }
 
   test("every lookup kind returns the rows of the session without the rule") {
-    val procs = new SpatialProcedures(spark, warehouse)
-    def wrapped(p: SpatialProcedures) = Seq(
-      "dwithin across the antimeridian" -> p.withinDistance("pts", 179.6, 10.0, 400.0),
-      "knn across the antimeridian" -> p.layer("pts").knnCandidates(-179.9, 20.0, 9).df
-        .orderBy(col("distance"), col("id")).limit(9))
-    val want = (lookups(spark, 4) ++ wrapped(procs)).map { case (k, df) => k -> rows(df) }
-    withExtensionsSession { s2 =>
-      val got = (lookups(s2, 4) ++ wrapped(new SpatialProcedures(s2, warehouse)))
+    def kinds(s: SparkSession) = {
+      val p = new SpatialProcedures(s, warehouse)
+      (lookups(s, 4) ++ Seq(
+        "dwithin across the antimeridian" -> p.withinDistance("pts", 179.6, 10.0, 400.0),
+        "knn across the antimeridian" -> p.layer("pts").knnCandidates(-179.9, 20.0, 9).df
+          .orderBy(col("distance"), col("id")).limit(9)))
         .map { case (k, df) => k -> rows(df) }
-      got.zip(want).foreach { case ((k, g), (_, w)) =>
-        assert(w.nonEmpty, s"$k: the fixture gives no rows")
-        assert(g == w, s"$k differs under BindConstants")
-      }
+    }
+    val want = withoutGraftRules(kinds)
+    kinds(spark).zip(want).foreach { case ((k, g), (_, w)) =>
+      assert(w.nonEmpty, s"$k: the fixture gives no rows")
+      assert(g == w, s"$k differs under BindConstants")
     }
   }
 
   test("the scan's pushed filters are unchanged, the Filter holds bound constants") {
-    val want = lookups(spark, 5).map { case (k, df) => k -> scans(df).map(_.metadata("PushedFilters")) }
-    withExtensionsSession { s2 =>
-      val ran = lookups(s2, 5)
-      ran.zip(want).foreach { case ((k, df), (_, w)) =>
-        assert(scans(df).map(_.metadata("PushedFilters")) == w, s"$k: pushed filters changed")
+    val ran = lookups(spark, 5)
+    ran.foreach { case (k, df) =>
+      // the scan as planned, before the physical rules ran, and as it ran
+      val planned = df.queryExecution.sparkPlan.collect {
+        case s: FileSourceScanExec => s.metadata("PushedFilters")
       }
-      val exprs = ran.toMap.map { case (k, df) => k -> ranExpressions(df) }
-      assert(exprs("bbox").exists(_.exists(_.isInstanceOf[BoundConstant])))
-      assert(exprs("window").exists(_.exists(_.isInstanceOf[InRanges])))
-      // no literal is left as a comparison operand in the window filter
-      assert(!exprs("window").exists(_.exists {
-        case b: BinaryComparison => b.children.exists(_.isInstanceOf[Literal])
-        case _ => false
-      }))
+      assert(scans(df).map(_.metadata("PushedFilters")) == planned, s"$k: pushed filters changed")
     }
+    val exprs = ran.toMap.map { case (k, df) => k -> ranExpressions(df) }
+    assert(exprs("bbox").exists(_.exists(_.isInstanceOf[BoundConstant])))
+    assert(exprs("window").exists(_.exists(_.isInstanceOf[InRanges])))
+    // no literal is left as a comparison operand in the window filter
+    assert(!exprs("window").exists(_.exists {
+      case b: BinaryComparison => b.children.exists(_.isInstanceOf[Literal])
+      case _ => false
+    }))
   }
 
   test("range membership equals the OR of closed ranges") {
@@ -166,13 +163,11 @@ class BindConstantsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .union(s.sql("SELECT CAST(NULL AS BIGINT) AS v"))
       .select(col("v"), (col("v").between(50L, 60L) || col("v").between(1L, 10L) ||
         col("v").between(11L, 20L) || col("v").between(40L, 40L)).as("in"))
-    val want = q(spark).collect().map(_.toString).sorted.toSeq
-    withExtensionsSession { s2 =>
-      val df = q(s2)
-      assert(ranExpressions(df).exists(_.exists(_.isInstanceOf[InRanges])))
-      assert(df.collect().map(_.toString).sorted.toSeq == want)
-      assert(q(s2).filter(col("in")).count() == want.count(_.endsWith(",true]")))
-    }
+    val want = withoutGraftRules(q(_).collect().map(_.toString).sorted.toSeq)
+    val df = q(spark)
+    assert(ranExpressions(df).exists(_.exists(_.isInstanceOf[InRanges])))
+    assert(df.collect().map(_.toString).sorted.toSeq == want)
+    assert(q(spark).filter(col("in")).count() == want.count(_.endsWith(",true]")))
   }
 
   test("literals outside comparison and arithmetic operands are left alone") {
@@ -199,17 +194,15 @@ class BindConstantsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         substring(col("s"), 2, 3).as("sub"), (col("d") * lit(BigDecimal("1.5"))).as("dec"),
         (col("x") + lit(null).cast(DoubleType)).as("nul"))
       .filter(round(col("x"), 1) > 3.0)
-    val want = q(spark).collect().map(_.toString).sorted.toSeq
-    withExtensionsSession { s2 =>
-      val df = q(s2)
-      val exprs = ranExpressions(df)
-      // round keeps its literal scale, rand its literal seed
-      assert(exprs.exists(_.exists {
-        case Round(_, Literal(_, IntegerType), _) => true
-        case _ => false
-      }))
-      assert(exprs.exists(_.exists(_.isInstanceOf[BoundConstant])))
-      assert(df.collect().map(_.toString).sorted.toSeq == want)
-    }
+    val want = withoutGraftRules(q(_).collect().map(_.toString).sorted.toSeq)
+    val df = q(spark)
+    val exprs = ranExpressions(df)
+    // round keeps its literal scale, rand its literal seed
+    assert(exprs.exists(_.exists {
+      case Round(_, Literal(_, IntegerType), _) => true
+      case _ => false
+    }))
+    assert(exprs.exists(_.exists(_.isInstanceOf[BoundConstant])))
+    assert(df.collect().map(_.toString).sorted.toSeq == want)
   }
 }

@@ -115,30 +115,49 @@ class EdgeCaseSpec extends SparkSpec {
   }
 }
 
-/** The advertised `spark.sql.extensions=graft.plans.GraftSparkExtensions`
-  * registration path (README, BboxConjunctRule Scaladoc) — a fresh session
-  * built with only that config must get the envelope-conjunct rule, with no
-  * call to GraftOptimizations.install.
+/** The shared test session is the one every entry point runs
+  * ([[graft.Sessions.local]]): its rules come from
+  * `spark.sql.extensions=graft.plans.GraftSparkExtensions` alone.
   */
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("spark.sql.extensions registers BboxConjunctRule in a new session") {
-    withExtensionsSession { s2 =>
-      val pts = Seq((1, 1.0, 1.0), (2, 20.0, 20.0)).toDF("id", "x", "y")
-        .withColumn("geometry", st.makePoint(col("x"), col("y")))
-        .withColumn("bbox", st.bboxStruct(col("x"), col("y"), col("x"), col("y")))
-      val dir = java.nio.file.Files.createTempDirectory("extspec").toString
-      pts.write.mode("overwrite").parquet(dir)
-      val rect = graft.geom.GeomCodec.toWkb(graft.geom.GeomCodec.fromWkt(
-        "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"))
-      val q = s2.read.parquet(dir)
-        .filter(call_udf("st_intersects", col("geometry"), lit(rect)))
-      val optimized = q.queryExecution.optimizedPlan.toString()
-      assert(optimized.contains("minx"),
-        s"extensions-registered rule did not fire:\n$optimized")
-      assert(q.select("id").collect().map(_.getInt(0)).toSet == Set(1))
-    }
+  test("the shared session is the factory's, with every graft rule registered once") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(conf.get("spark.sql.extensions") == "graft.plans.GraftSparkExtensions")
+    assert(spark.sessionState.columnarRules
+      .exists(_.preColumnarTransitions eq graft.plans.BindConstants))
+
+    val pts = Seq((1, 1.0, 1.0), (2, 20.0, 20.0)).toDF("id", "x", "y")
+      .withColumn("geometry", st.makePoint(col("x"), col("y")))
+      .withColumn("bbox", st.bboxStruct(col("x"), col("y"), col("x"), col("y")))
+    val dir = java.nio.file.Files.createTempDirectory("extspec").toString
+    pts.write.mode("overwrite").parquet(dir)
+    val rect = graft.geom.GeomCodec.toWkb(graft.geom.GeomCodec.fromWkt(
+      "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"))
+    val q = spark.read.parquet(dir)
+      .filter(call_udf("st_intersects", col("geometry"), lit(rect)))
+    val optimized = q.queryExecution.optimizedPlan.toString()
+    assert(optimized.contains("minx"), s"BboxConjunctRule did not fire:\n$optimized")
+    assert(q.select("id").collect().map(_.getInt(0)).toSet == Set(1))
+
+    // the logical rules come from the extensions alone: a SQL spatial join
+    // registers no second copy
+    spark.read.parquet(dir).createOrReplaceTempView("ext_pts")
+    Seq((7, rect)).toDF("bid", "geometry").createOrReplaceTempView("ext_boxes")
+    assert(spark.sql("""SELECT p.id, b.bid FROM ext_pts p JOIN ext_boxes b
+        |ON st_intersects(p.geometry, b.geometry)""".stripMargin)
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq == Seq((1, 7)))
+    assert(spark.experimental.extraOptimizations.isEmpty)
+  }
+
+  test("every named query has an oracle, and every oracle a query") {
+    // tools/crosscheck.py checks a query without an oracle by its row count alone
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.oracleSql.collect { case (n, sql) if sql.isBlank => n }.isEmpty)
   }
 
   test("eleventh-session operators are empty/degenerate-input safe") {

@@ -77,7 +77,6 @@ class Round2Spec extends SparkSpec {
     // huge box would cover 341 × 161 cells uncapped; it joins through a
     // nested loop instead, so no explode emits more rows than one row may
     // cover
-    graft.plans.GraftOptimizations.install(spark)
     pts.createOrReplaceTempView("cap_pts")
     boxes.createOrReplaceTempView("cap_boxes")
     spark.conf.set("spark.graft.sqlJoin.cellSize", "1.0")
@@ -257,7 +256,6 @@ class Round2Spec extends SparkSpec {
   // ---------------------------------------- bbox-conjunct optimizer rule
 
   test("BboxConjunctRule injects an envelope pre-filter that reaches the scan") {
-    graft.plans.GraftOptimizations.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("bboxrule").toString
     val pts = (1 to 200).map { i =>
       val x = (i % 40).toDouble; val y = (i / 40).toDouble

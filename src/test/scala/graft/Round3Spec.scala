@@ -143,7 +143,6 @@ class Round3Spec extends SparkSpec {
 
   test("BboxConjunctRule injects conjuncts for named Column-API UDFs and STPredicate") {
     import graft.functions.st
-    graft.plans.GraftOptimizations.install(spark)
     // must be a file relation: ConvertToLocalRelation would otherwise fold
     // the whole filter away before the rule can be observed
     val dir = Files.createTempDirectory("bboxrule-r3").toString
@@ -182,7 +181,6 @@ class Round3Spec extends SparkSpec {
 
   test("BboxConjunctRule injects an expanded-envelope conjunct for distance ranges") {
     import graft.functions.st
-    graft.plans.GraftOptimizations.install(spark)
     graft.functions.SpatialFunctions.register(spark)
     val dir = Files.createTempDirectory("bboxrule-dist").toString
     (1 to 100).map { i =>

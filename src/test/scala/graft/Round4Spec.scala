@@ -37,7 +37,6 @@ class Round4Spec extends SparkSpec {
   test("BboxConjunctRule does not inject for derived geometries") {
     import java.nio.file.Files
     import graft.geom.GeomCodec
-    graft.plans.GraftOptimizations.install(spark)
     val dir = Files.createTempDirectory("bboxrule-derived").toString
     (1 to 100).map { i =>
       val x = (i % 20).toDouble; val y = (i / 20).toDouble

@@ -80,6 +80,11 @@ class ScaleSpec extends SparkSpec {
       // are skipped via parquet min/max stats on the sorted key)
       val rows = scannedRows(viaCurve.df)
       assert(rows > 0 && rows < 50000 / 2, s"$idx: expected pruned scan, read $rows of 50000 rows")
+
+      // a two-column projection reads only those two columns
+      val narrow = layer.df.select("id", "x").filter(col("x") > 100).queryExecution.sparkPlan
+      assert(narrow.collect { case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq } ==
+        Seq(Seq("id", "x")), s"$idx: scan not pruned to two columns:\n$narrow")
     }
   }
 

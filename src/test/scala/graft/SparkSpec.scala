@@ -42,25 +42,26 @@ trait SparkSpec extends AnyFunSuite {
       }
     } finally { q.stop(); q.awaitTermination() }
 
-  /** Runs `f` in a fresh session whose rules come from
-    * `spark.sql.extensions=graft.plans.GraftSparkExtensions` alone (no
-    * GraftOptimizations.install), then restores the shared session.
+  /** Runs `f` in a fresh session on the shared context without the graft
+    * rules: the reference a rule's results are compared against. Restores
+    * the shared session.
     */
-  def withExtensionsSession(f: SparkSession => Unit): Unit = {
+  def withoutGraftRules[T](f: SparkSession => T): T = {
     val base = spark   // materialize the shared context first
+    val sc = base.sparkContext
+    val extensions = sc.getConf.get("spark.sql.extensions")
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     // spark.sql.extensions is a static conf: getOrCreate reads it from the
     // (already-running) SparkContext's conf, not the getOrCreate() options
-    org.apache.spark.GraftTestConf.set(base.sparkContext,
-      "spark.sql.extensions", "graft.plans.GraftSparkExtensions")
+    org.apache.spark.GraftTestConf.remove(sc, "spark.sql.extensions")
     try {
       val s2 = SparkSession.builder().getOrCreate()
       assert(s2 ne base)
       graft.functions.SpatialFunctions.register(s2)
       f(s2)
     } finally {
-      org.apache.spark.GraftTestConf.remove(base.sparkContext, "spark.sql.extensions")
+      org.apache.spark.GraftTestConf.set(sc, "spark.sql.extensions", extensions)
       SparkSession.setActiveSession(base)
       SparkSession.setDefaultSession(base)
     }
@@ -83,18 +84,12 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // every deliberately-unpartitioned window site runs its
-      // BoundedWindow count guard under the test session
-      .config("spark.graft.assertBoundedWindows", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    // 4 cores whatever SPARK_GRAFT_CPUS says: the tests' partitioning
+    // does not follow the host
+    val s = Sessions.local(4)
+    // every deliberately-unpartitioned window site runs its
+    // BoundedWindow count guard under the test session
+    s.conf.set("spark.graft.assertBoundedWindows", "true")
     graft.functions.SpatialFunctions.register(s)
     s
   }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.st
-import graft.plans.GraftOptimizations
 
 /** Declarative SQL spatial joins: `JOIN ON st_intersects(a, b)` must plan
   * as a cell EQUI-join (the grid rewrite), not a cartesian product, and
@@ -23,7 +22,6 @@ class StJoinRuleSpec extends SparkSpec {
     .withColumn("geometry", st.geomFromText(col("wkt")))
 
   test("SQL st_intersects join: grid equi-join plan, naive-join answers") {
-    GraftOptimizations.install(spark)
     spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")  // pin the grid plan
     ptsDf.createOrReplaceTempView("sj_pts")
     boxesDf.createOrReplaceTempView("sj_boxes")
@@ -48,7 +46,6 @@ class StJoinRuleSpec extends SparkSpec {
   }
 
   test("reversed argument order transposes the predicate; extra conjuncts survive") {
-    GraftOptimizations.install(spark)
     spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")  // pin the grid plan
     ptsDf.createOrReplaceTempView("sj_pts")
     boxesDf.createOrReplaceTempView("sj_boxes")
@@ -103,7 +100,6 @@ class StJoinRuleSpec extends SparkSpec {
   }
 
   test("LEFT OUTER st join: unmatched left rows kept with nulls, grid plan") {
-    GraftOptimizations.install(spark)
     spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")  // pin the grid plan
     ptsDf.createOrReplaceTempView("sj_pts")
     boxesDf.createOrReplaceTempView("sj_boxes")
@@ -123,7 +119,6 @@ class StJoinRuleSpec extends SparkSpec {
   }
 
   test("LEFT SEMI / LEFT ANTI st joins: membership filters, grid plan, multiplicity kept") {
-    GraftOptimizations.install(spark)
     spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")  // pin the grid plan
     ptsDf.createOrReplaceTempView("sj_pts")
     boxesDf.createOrReplaceTempView("sj_boxes")
@@ -157,7 +152,6 @@ class StJoinRuleSpec extends SparkSpec {
   }
 
   test("RIGHT OUTER and FULL OUTER st joins: transposed / unioned dataflow, grid plan") {
-    GraftOptimizations.install(spark)
     spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")  // pin the grid plan
     ptsDf.createOrReplaceTempView("sj_pts")
     // every fixture box contains points, so add one box in the empty far
@@ -194,7 +188,6 @@ class StJoinRuleSpec extends SparkSpec {
   }
 
   test("API/SQL parity: inner, left outer, semi and anti agree with the rule and JTS") {
-    GraftOptimizations.install(spark)
     spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")  // pin the grid plan
     ptsDf.createOrReplaceTempView("sj_pts")
     boxesDf.createOrReplaceTempView("sj_boxes")
@@ -240,7 +233,6 @@ class StJoinRuleSpec extends SparkSpec {
   }
 
   test("ST_DWithin join: dilated-envelope grid plan, exact JTS answers") {
-    GraftOptimizations.install(spark)
     spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")  // pin the grid plan
     graft.functions.SpatialFunctions.register(spark)
     ptsDf.createOrReplaceTempView("sj_pts")
@@ -273,7 +265,6 @@ class StJoinRuleSpec extends SparkSpec {
   }
 
   test("stats-first pick: tiny probe side broadcasts instead of gridding") {
-    GraftOptimizations.install(spark)
     graft.functions.SpatialFunctions.register(spark)
     ptsDf.createOrReplaceTempView("sj_pts")
     boxesDf.createOrReplaceTempView("sj_boxes")
@@ -296,6 +287,42 @@ class StJoinRuleSpec extends SparkSpec {
           |ON st_dwithin(p.geometry, b.geometry, 12.5)""".stripMargin)
       assert(d.queryExecution.executedPlan.toString().contains("BroadcastNestedLoop"))
       assert(pairs.subsetOf(d.as[(Long, Long)].collect().toSet))
+      // file-backed canonical layers take the same branch (the rule runs
+      // inside Catalyst's operator-optimization batch, where the post-join
+      // exact filter is pushed back into the join condition). Triangles,
+      // not boxes: a bbox-only answer must differ from the exact one
+      val tris = (1 to 15).map { b =>
+        val (x0, y0) = (b * 20 - 170, b * 8 - 70)
+        (b.toLong, s"POLYGON (($x0 $y0, ${x0 + 30} $y0, $x0 ${y0 + 30}, $x0 $y0))")
+      }
+      val triPairs = (for {
+        r <- ptsDf.select("pid", "x", "y").collect().toSeq
+        (bid, wkt) <- tris
+        if graft.geom.GeomCodec.fromWkt(wkt).intersects(graft.geom.GeomCodec.point(
+          r.getDouble(1), r.getDouble(2)))
+      } yield (r.getLong(0), bid)).toSet
+      assert(triPairs.nonEmpty && triPairs.size < pairs.size)
+      val dir = java.nio.file.Files.createTempDirectory("sj-parquet").toString
+      ptsDf.select(col("pid"), col("geometry"), st.bboxOf(col("geometry")).as("bbox"))
+        .write.parquet(s"$dir/pts")
+      tris.toDF("bid", "wkt").withColumn("geometry", st.geomFromText(col("wkt")))
+        .select(col("bid"), col("geometry"), st.bboxOf(col("geometry")).as("bbox"))
+        .write.parquet(s"$dir/boxes")
+      spark.read.parquet(s"$dir/pts").createOrReplaceTempView("sj_pts_pq")
+      spark.read.parquet(s"$dir/boxes").createOrReplaceTempView("sj_boxes_pq")
+      val pq = spark.sql(
+        """SELECT p.pid, b.bid FROM sj_pts_pq p JOIN sj_boxes_pq b
+          |ON st_intersects(p.geometry, b.geometry)""".stripMargin)
+      assert(pq.queryExecution.executedPlan.toString().contains("BroadcastNestedLoop"))
+      assert(pq.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == triPairs)
+      // only the right side's id survives the join: column pruning narrows
+      // both inputs before the rule sees them
+      val perBox = spark.sql(
+        """SELECT b.bid, count(*) AS n FROM sj_pts_pq p JOIN sj_boxes_pq b
+          |ON st_intersects(p.geometry, b.geometry) GROUP BY b.bid""".stripMargin)
+      assert(perBox.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
+        triPairs.groupBy(_._2).map { case (b, ps) => b -> ps.size.toLong },
+        perBox.queryExecution.optimizedPlan.toString)
       // the branch broadcasts whatever Spark's own size threshold says, on
       // both entry points
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -312,46 +339,6 @@ class StJoinRuleSpec extends SparkSpec {
     } finally {
       spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
-    // file-backed canonical layers in a session that registers the rule the
-    // advertised way (spark.sql.extensions: it then runs inside Catalyst's
-    // operator-optimization batch, where the post-join exact filter is
-    // pushed back into the join condition) take the same branch. Triangles,
-    // not boxes: a bbox-only answer must differ from the exact one
-    val tris = (1 to 15).map { b =>
-      val (x0, y0) = (b * 20 - 170, b * 8 - 70)
-      (b.toLong, s"POLYGON (($x0 $y0, ${x0 + 30} $y0, $x0 ${y0 + 30}, $x0 $y0))")
-    }
-    val pairs = (for {
-      r <- ptsDf.select("pid", "x", "y").collect().toSeq
-      (bid, wkt) <- tris
-      if graft.geom.GeomCodec.fromWkt(wkt).intersects(graft.geom.GeomCodec.point(
-        r.getDouble(1), r.getDouble(2)))
-    } yield (r.getLong(0), bid)).toSet
-    val (boxPairs, _) = truth
-    assert(pairs.nonEmpty && pairs.size < boxPairs.size)
-    val dir = java.nio.file.Files.createTempDirectory("sj-parquet").toString
-    ptsDf.select(col("pid"), col("geometry"), st.bboxOf(col("geometry")).as("bbox"))
-      .write.parquet(s"$dir/pts")
-    tris.toDF("bid", "wkt").withColumn("geometry", st.geomFromText(col("wkt")))
-      .select(col("bid"), col("geometry"), st.bboxOf(col("geometry")).as("bbox"))
-      .write.parquet(s"$dir/boxes")
-    withExtensionsSession { s2 =>
-      s2.read.parquet(s"$dir/pts").createOrReplaceTempView("sj_pts_pq")
-      s2.read.parquet(s"$dir/boxes").createOrReplaceTempView("sj_boxes_pq")
-      val pq = s2.sql(
-        """SELECT p.pid, b.bid FROM sj_pts_pq p JOIN sj_boxes_pq b
-          |ON st_intersects(p.geometry, b.geometry)""".stripMargin)
-      assert(pq.queryExecution.executedPlan.toString().contains("BroadcastNestedLoop"))
-      assert(pq.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == pairs)
-      // only the right side's id survives the join: column pruning narrows
-      // both inputs before the rule sees them
-      val perBox = s2.sql(
-        """SELECT b.bid, count(*) AS n FROM sj_pts_pq p JOIN sj_boxes_pq b
-          |ON st_intersects(p.geometry, b.geometry) GROUP BY b.bid""".stripMargin)
-      assert(perBox.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
-        pairs.groupBy(_._2).map { case (b, ps) => b -> ps.size.toLong },
-        perBox.queryExecution.optimizedPlan.toString)
     }
   }
 }

@@ -13,9 +13,11 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# the ladder protocol runs on 16 cores unless SPARK_GRAFT_CPUS says otherwise
+# (graft.Sessions defaults to 4)
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}"
 SPARK_GRAFT_FAMILIES="$FAM" SPARK_GRAFT_RUNGS="$RUNGS" \
 java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-48g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CLS:/opt/spark/jars/*" graft.tools.BenchScale /root/testdata/sf0.1 "$OUT" \
   2>&1 | grep -E "^\[scale\]|Exception|Error" || true
 echo "--- fragment: $OUT"
