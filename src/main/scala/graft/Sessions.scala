@@ -11,7 +11,8 @@ object Sessions {
   /** A local session on `cpus` cores (`SPARK_GRAFT_CPUS`, default 4) with
     * the graft rules registered through `spark.sql.extensions`, the only
     * registration path: it adds the logical rules and [[graft.plans.BindConstants]],
-    * a physical rule that a built session cannot take.
+    * a physical rule that a built session cannot take. The `st_*` SQL
+    * functions are registered too.
     */
   def local(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt): SparkSession = {
     val s = SparkSession.builder()
@@ -37,14 +38,26 @@ object Sessions {
       // this constant, sets the floor
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    graft.functions.SpatialFunctions.register(s)
     s
   }
 
   /** Every query name in order, restricted by `SPARK_GRAFT_ONLY=a,b,...`
     * (an iteration aid: unset, a run covers every query). */
-  def selected: Seq[String] = {
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+  def selected: Seq[String] = selected(sys.env.get("SPARK_GRAFT_ONLY"))
+
+  /** The names of `only` (comma-separated) in order, or every name when
+    * `only` is None. A name that is no query fails the selection: dropping
+    * it would turn a typo into an empty sweep that reads as a clean one.
+    */
+  private[graft] def selected(only: Option[String]): Seq[String] = {
+    val all = SparkEntry.queries.keys.toSeq.sorted
+    only.map(_.split(",").toSet).fold(all) { names =>
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names no query: ${unknown.toSeq.sorted.mkString(", ")}")
+      all.filter(names)
+    }
   }
 
   /** Warms the session, then builds each named query and runs `action` on

@@ -1,282 +1,31 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
-import graft.engine.{GeoFrame, SpatialAggs, SpatialJoin}
-import graft.functions.{HexBin, st}
-import graft.geom.GeomCodec
-import graft.pipeline.{Bpe, Classify, Corpus, CountMin, Dedup, Events, Graphs, Groups, LanguageModel, Multimodal, Packing, PageRank, Similarity, TextAnalysis}
+import graft.queries._
+import graft.queries.Shared.pointsLayer
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Spatial queries run over a deterministic point layer derived from
-  * `customer` (FIXTURES.md §7): lattice coordinates
-  *   x = (c_custkey % 360) - 180 + 0.5
-  *   y = ((c_custkey * 7) % 180) - 90 + 0.5
-  * — integer+0.5 doubles, exact in both Spark and the DuckDB oracle, so
-  * hash-match comparisons are stable. Line layers per nation connect those
-  * points ordered by custkey.
+/** Driver contract — see SURVEY.md §7: the named queries (each family's
+  * list in `graft.queries`, every query beside its DuckDB oracle), keyed by
+  * name, and the flagship `entry`. The driver's correctness gate runs each
+  * query at sf0.01 and compares its rows with its oracle's.
   */
 object SparkEntry {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events") normalizeEventTs(df) else df
-  }
-
-  /** Normalize `events.ts` to LONG NANOS — the contract every event operator
-    * downstream assumes. Driver generations have shipped the column both as
-    * parquet TIMESTAMP(NANOS) (readable only as long via the legacy
-    * `nanosAsLong` conf, already long here) and as TIMESTAMP(MICROS)
-    * (arriving as TIMESTAMP_NTZ). The NTZ micros are extracted with
-    * `timestampdiff` against the epoch — pure integer arithmetic on the
-    * stored micros, no session-timezone math — so Spark's ns and the DuckDB
-    * oracle's `epoch_ns(ts)` see the identical naive instant.
+  /** Every named query, family by family. Building it builds no DataFrame
+    * and reads no file.
     */
-  private[graft] def normalizeEventTs(df: DataFrame): DataFrame =
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => df
-      case _: org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts",
-          expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts) * 1000"))
-      case _ => // TIMESTAMP (tz-adjusted read path): micros since epoch UTC
-        df.withColumn("ts", expr("unix_micros(ts) * 1000"))
-    }
+  private[graft] lazy val registry: Seq[QuerySpec] =
+    TpchQueries.all ++ SpQueries.all ++ EvQueries.all ++ TxQueries.all ++
+      GrQueries.all ++ SimQueries.all ++ DdQueries.all ++ StQueries.all ++
+      MmQueries.all ++ IoQueries.all
 
-  /** Ordered slab ids for streaming-gate file staging — ntile(n) bucket
-    * semantics (identical assignment via Events.ntileFromRank) over the
-    * distributed Events.globalRank instead of a single-partition
-    * `ntile().over(Window.orderBy(…))`: the same no-global-WindowExec
-    * discipline the production queries follow. Ties in `order` only ever
-    * move identical-timestamp/identical-key rows across a slab boundary,
-    * which the gates' watermark choreography is insensitive to.
-    */
-  private def slabify(df: DataFrame, order: Seq[org.apache.spark.sql.Column],
-      nSlabs: Int): DataFrame = {
-    val n = df.count()
-    Events.globalRank(df, order, "_slab_rank")
-      .withColumn("slab",
-        Events.ntileFromRank(col("_slab_rank"), lit(n), nSlabs).cast("int"))
-      .drop("_slab_rank")
-  }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
 
-  /** Write one parquet slab file per `slab` value under `src`, in slab
-    * order — the single micro-batch file-staging loop every streaming
-    * gate shares (maxFilesPerTrigger=1 then replays the files in this
-    * order). `slabs` must carry a `slab` column; it is dropped from the
-    * written rows.
-    */
-  private def writeSlabFiles(slabs: DataFrame, slabValues: Seq[Int],
-      src: String): Unit =
-    slabValues.foreach { i =>
-      slabs.filter(col("slab") === i).drop("slab")
-        .repartition(1).write.mode("append").parquet(src)
-    }
-
-  /** One-call gate staging: slabify `df` on `order` into `nSlabs` ordered
-    * micro-batch files under `src` (round-7 verdict task 9 — one staging
-    * implementation; the formerly ad-hoc `repartition(4)` gates now stage
-    * deterministic time/key-ordered slabs like every stateful gate, which
-    * only ever reorders rows their complete/update/distinct semantics are
-    * insensitive to).
-    */
-  private def stageSlabs(df: DataFrame, order: Seq[org.apache.spark.sql.Column],
-      nSlabs: Int, src: String): Long = {
-    // persist BEFORE the per-slab writes: slabify's count + two-pass
-    // globalRank would otherwise recompute once per slab (n× the whole
-    // staging plan — the round-8 2.9–9.8× streaming-gate regression).
-    // Same discipline the recover gate already applies to its slabs.
-    val slabs = slabify(df, order, nSlabs).persist()
-    try { writeSlabFiles(slabs, 1 to nSlabs, src); slabs.count() }
-    finally { slabs.unpersist(); () }
-  }
-
-  /** Start a streaming gate with the session shuffle width resized to a
-    * STATE-sized width for `rows` staged rows (one state partition per
-    * ~25k rows, ≥1, capped at the session default), then enforce the gate
-    * budget. Micro-batch overhead is ∝ state partitions × batches ×
-    * stateful operators — at the session's core-scaled width a 100k-row
-    * gate pays 32 state-store commits per stateful stage per batch, pure
-    * choreography (measured: st_stream_join 20→? s, guide §2.2's
-    * too-many-tiny-partitions tax in streaming form). The width derives
-    * from DATA SIZE, not core count: at cluster scale rows/25k exceeds any
-    * session width and the cap keeps the plan identical to today's, while
-    * small gates stop over-partitioning their state. Results are
-    * partitioning-invariant (every gate is oracle-pinned); the conf is
-    * restored before the gate's result frame is acted on, so only the
-    * stream's own micro-batches run at the resized width.
-    */
-  private def runGate(s: SparkSession, rows: Long, budgetMs: Long = 180000)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, math.max(1L, math.min(old.toLong, rows / 25000L + 1)).toString)
-    try {
-      val q = start
-      val finished =
-        try q.awaitTermination(budgetMs)
-        catch { case e: Throwable =>
-          // stop the stream before propagating: an orphaned query would
-          // keep consuming files/cores and pollute every later timing
-          try q.stop() catch { case _: Throwable => () }
-          throw e
-        }
-      if (!finished) try q.stop() catch { case _: Throwable => () }
-      require(finished,
-        "streaming gate exceeded its budget — refusing partial results")
-    } finally s.conf.set(key, old)
-  }
-
-  /** Streaming-MV sink shared by the mv/recover gates: PARTITION-SCOPED
-    * upsert of an update-mode (hour_start, event_type, n) delta into a
-    * delta-chained [[graft.plans.VersionedLayer]] store. Only the hour
-    * partitions the delta touches are read back (partition-pruned through
-    * the version chain's `_PARTS` manifests), merged key-level
-    * (old-rows anti-join delta ∪ delta), and rewritten — bytes per
-    * micro-batch ∝ the delta, never the store (previously each batch
-    * rewrote the FULL snapshot: O(store × batches) I/O, the round-8
-    * verdict's one real scale-killer finding). Replay-idempotent: update
-    * rows carry cumulative counts, so a crash-replayed batch rewrites the
-    * same partitions with the same merged content. The dirty-hour collect
-    * is bounded by the delta's distinct hours.
-    */
-  private def mvUpsert(batch: DataFrame, store: String): Unit = {
-    import graft.plans.VersionedLayer
-    val sp = batch.sparkSession
-    // store partition grain is the DAY, not the hour: an hourly MV
-    // partitioned by hour_start writes one directory PER DISTINCT HOUR
-    // per commit (~180 tiny dirs per micro-batch on a 720-hour corpus —
-    // a filesystem-metadata storm that dominated the gate's wall-clock);
-    // day grain bounds a commit at the delta's distinct DAYS while bytes
-    // stay ∝ delta. Rows remain keyed (hour_start, event_type) — the
-    // partition column only scopes which directories a commit rewrites.
-    val delta = batch
-      .withColumn("day_start", expr("(hour_start div 86400) * 86400"))
-      .persist()
-    try {
-      val dirty = delta.select(col("day_start").cast("string").as("d"))
-        .distinct().collect().map(_.getString(0)).toSeq
-      val content =
-        VersionedLayer.readPartitions(sp, store, "day_start", dirty) match {
-          case None => delta
-          case Some(base) => base
-            .join(delta.select("hour_start", "event_type"),
-              Seq("hour_start", "event_type"), "left_anti")
-            .unionByName(delta)
-        }
-      VersionedLayer.commitDelta(content, store, "day_start")
-    } finally delta.unpersist()
-    ()
-  }
-
-  /** Deterministic customer point layer in canonical schema (SURVEY §1.3). */
-  private def pointsDf(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "customer").select(
-        col("c_custkey").as("ck"), col("c_nationkey"), col("c_acctbal"),
-        ((col("c_custkey") % 360) - 180 + 0.5).cast("double").as("x"),
-        (((col("c_custkey") * 7) % 180) - 90 + 0.5).cast("double").as("y"))
-      .withColumn("id", col("ck").cast("string"))
-      .withColumn("geometry", st.makePoint(col("x"), col("y")))
-      .withColumn("gtype", lit(GeomCodec.GTYPE_POINT))
-      .withColumn("bbox", st.bboxStruct(col("x"), col("y"), col("x"), col("y")))
-
-  private def pointsLayer(s: SparkSession, dir: String): GeoFrame =
-    new GeoFrame(pointsDf(s, dir))
-
-  /** Shared oracle CTE for the point layer (must mirror pointsDf exactly). */
-  /** Shared IVF-eval oracle CTEs (through `approx` ranked ≤5 and `exact`
-    * top-5): the DuckDB replay of the flat IVF index + probe protocol used
-    * by sim_recall and sim_ndcg.
-    */
-  private val IvfEvalCtes =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-      |sims AS (
-      |  SELECT e.vec_id AS id, e.v, c.cid, list_cosine_similarity(e.v, c.cv) AS s
-      |  FROM e CROSS JOIN c
-      |), assign AS (
-      |  SELECT id, v, cid FROM (
-      |    SELECT id, v, cid, row_number() OVER (PARTITION BY id ORDER BY s DESC, cid) AS rn
-      |    FROM sims) WHERE rn = 1
-      |), q AS (
-      |  SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id % 50 = 0
-      |), probes AS (
-      |  SELECT qid, cid FROM (
-      |    SELECT q.qid, c.cid,
-      |           row_number() OVER (PARTITION BY q.qid
-      |             ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid) AS rn
-      |    FROM q CROSS JOIN c) WHERE rn <= 2
-      |), cand AS (
-      |  SELECT q.qid, a.id AS nid, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
-      |  FROM q JOIN probes p ON q.qid = p.qid JOIN assign a ON a.cid = p.cid
-      |  WHERE a.id <> q.qid
-      |), approx AS (
-      |  SELECT qid, nid, rank FROM (
-      |    SELECT qid, nid,
-      |           row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
-      |    FROM cand) WHERE rank <= 5
-      |), exact AS (
-      |  SELECT qid, nid FROM (
-      |    SELECT q.qid, e.vec_id AS nid,
-      |           row_number() OVER (PARTITION BY q.qid
-      |             ORDER BY round(list_cosine_similarity(q.qv, e.v), 6) DESC, e.vec_id) AS rank
-      |    FROM q CROSS JOIN e WHERE e.vec_id <> q.qid) WHERE rank <= 5
-      |)""".stripMargin
-
-  private val PtsCte =
-    """WITH pts AS (
-      |  SELECT c_custkey AS ck, c_nationkey, c_acctbal,
-      |         CAST((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS x,
-      |         CAST(((c_custkey * 7) % 180) - 90 + 0.5 AS DOUBLE) AS y
-      |  FROM customer
-      |)""".stripMargin
-
-  /** Per-nation LineString layer: customer points connected in custkey order
-    * (used by length / extract / closest-edge queries).
-    */
-  private def linesLayer(s: SparkSession, dir: String): GeoFrame = {
-    val mkLine = udf((xs: Seq[Double], ys: Seq[Double]) => {
-      val coords = xs.indices.map(i =>
-        new org.locationtech.jts.geom.Coordinate(xs(i), ys(i))).toArray
-      val g: org.locationtech.jts.geom.Geometry =
-        if (coords.length < 2) GeomCodec.factory.createPoint(coords.head)
-        else GeomCodec.factory.createLineString(coords)
-      GeomCodec.toWkb(g)
-    })
-    val df = pointsDf(s, dir)
-      .groupBy(col("c_nationkey"))
-      .agg(sort_array(collect_list(struct(col("ck"), col("x"), col("y")))).as("cs"))
-      .withColumn("geometry", mkLine(expr("transform(cs, c -> c.x)"), expr("transform(cs, c -> c.y)")))
-      .withColumn("id", col("c_nationkey").cast("string"))
-      .withColumn("gtype", st.gtype(col("geometry")))
-      .withColumn("bbox", st.bboxOf(col("geometry")))
-      .drop("cs")
-    new GeoFrame(df)
-  }
-
-  /** Per-nation supplier envelope polygons joined against customer points
-    * (intersects ⇒ envelope boundary inclusive, matching SQL BETWEEN).
-    */
-  private def spatialJoinQuery(s: SparkSession, dir: String, useGrid: Boolean): DataFrame = {
-    import graft.engine.{SpatialAggs, SpatialJoin}
-    val supPolys = T(s, dir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey"),
-        ((col("s_suppkey") % 360) - 180 + 0.5).cast("double").as("x"),
-        (((col("s_suppkey") * 7) % 180) - 90 + 0.5).cast("double").as("y"))
-      .withColumn("geometry", st.makePoint(col("x"), col("y")))
-      .groupBy(col("s_nationkey"))
-      .agg(SpatialAggs.unionAgg(col("geometry")).as("g"))
-      .select(col("s_nationkey").as("id"), st.envelope(col("g")).as("geometry"))
-      .withColumn("bbox", st.bboxOf(col("geometry")))
-    val pts = pointsDf(s, dir).select(col("ck").as("id"), col("geometry"), col("bbox"))
-    val joined =
-      if (useGrid) SpatialJoin.gridJoin(pts, supPolys, cellSize = 30.0, "intersects")
-      else SpatialJoin.broadcastJoin(pts, supPolys, "intersects")
-    joined.groupBy(col("r_id").cast("int").as("s_nationkey"))
-      .agg(count(lit(1)).as("n_pts"))
-      .orderBy(col("s_nationkey"))
-  }
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracleSql).toMap
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * `spatial.withinDistance` over the customer point layer.
@@ -285,10298 +34,4 @@ object SparkEntry {
     pointsLayer(spark, "/root/testdata/sf0.001")
       .withinDistanceKm(10.5, 20.5, 3000.0)
       .df.select(col("ck").as("id"), col("x"), col("y"), col("distance"))
-
-  // one reusable temp path per JVM for each ingest fixture (overwritten per
-  // invocation, cleaned at exit) — repeated bench/verify runs must not leak
-  // a new driver temp file per query invocation
-  private lazy val osmIngestTmp: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempFile("graft-osm-ingest", ".osm")
-    p.toFile.deleteOnExit()
-    p
-  }
-  private lazy val pbfIngestTmp: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempFile("graft-pbf-ingest", ".osm.pbf")
-    p.toFile.deleteOnExit()
-    p
-  }
-  private lazy val warcIngestTmp: java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory("graft-warc-ingest")
-    (0 until 4).foreach { f =>
-      val ext = if (f < 2) "warc" else "warc.gz"
-      d.resolve(s"shard-$f.$ext").toFile.deleteOnExit()
-    }
-    d.toFile.deleteOnExit()
-    d
-  }
-
-  /** Stage the 4-shard WARC fixture for the current sf dir (fixture
-    * generation only — bounded by the documents table; files are
-    * overwritten per call so SF switches see fresh content). Shards 0-1
-    * are plain `.warc`, shards 2-3 record-per-gzip-member `.warc.gz`.
-    */
-  private def stageWarcFixture(s: SparkSession, dir: String): String = {
-    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-    val rows = T(s, dir, "documents").select(col("doc_id"), col("text"))
-      .orderBy("doc_id").collect()  // fixture generation only
-    val shards = Array.fill(4)(new java.io.ByteArrayOutputStream())
-    def record(warcType: String, url: Option[String], ct: String,
-        payload: Array[Byte]): Array[Byte] = {
-      val b = new java.io.ByteArrayOutputStream()
-      graft.sources.Warc.writeRecord(b, warcType, url, ct, payload)
-      b.toByteArray
-    }
-    def emit(f: Int, bytes: Array[Byte]): Unit =
-      if (f < 2) shards(f).write(bytes)
-      else shards(f).write(graft.sources.Warc.gzipMember(bytes))
-    (0 until 4).foreach(f => emit(f, record("warcinfo", None,
-      "application/warc-fields", graft.sources.Warc.InfoPayload)))
-    rows.foreach { r =>
-      val d = r.getLong(0); val text = r.getString(1)
-      val p = d / 2
-      val host = s"www.host${p % 5}.example"
-      val raw =
-        if (d % 2 == 0)
-          s"https://WWW.Host${p % 5}.EXAMPLE/doc/$p?utm_source=feed&x=1#top"
-        else s"https://www.host${p % 5}.example:443/doc/$p?x=1"
-      val f = (d % 4).toInt
-      val body =
-        if (d % 10 == 7) "not found".getBytes(UTF_8) else text.getBytes(UTF_8)
-      val status = if (d % 10 == 7) "404 Not Found" else "200 OK"
-      val http = (s"HTTP/1.1 $status\r\n" +
-        "Content-Type: text/plain; charset=utf-8\r\n" +
-        s"Content-Length: ${body.length}\r\n\r\n").getBytes(ISO_8859_1) ++ body
-      emit(f, record("response", Some(raw),
-        "application/http;msgtype=response", http))
-      if (d % 5 == 0)
-        emit(f, record("request", Some(raw),
-          "application/http;msgtype=request",
-          s"GET /doc/$p?x=1 HTTP/1.1\r\nHost: $host\r\n\r\n".getBytes(ISO_8859_1)))
-    }
-    (0 until 4).foreach { f =>
-      val ext = if (f < 2) "warc" else "warc.gz"
-      java.nio.file.Files.write(warcIngestTmp.resolve(s"shard-$f.$ext"),
-        shards(f).toByteArray)
-    }
-    warcIngestTmp.toString
-  }
-  private lazy val shpIngestBase: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-shp-ingest")
-    val base = d.resolve("nations")
-    for (ext <- Seq(".shp", ".shx", ".dbf"))
-      d.resolve("nations" + ext).toFile.deleteOnExit()
-    d.toFile.deleteOnExit()   // registered after children: deletion runs LIFO
-    base.toString
-  }
-
-  // curve-clustered copy of the point layer, written once per JVM per
-  // (SF dir, layout) — the stored-__sfc read path (windowViaCurve) must be
-  // exercised against the SAME durable layout a real layer write produces
-  private val curveLayerCache = scala.collection.concurrent.TrieMap.empty[(String, String), String]
-  private def curveLayerPath(s: SparkSession, dir: String, indexType: String): String =
-    curveLayerCache.getOrElseUpdate((dir, indexType), {
-      val d = java.nio.file.Files.createTempDirectory("graft-curve-layer")
-      d.toFile.deleteOnExit()
-      val p = d.resolve("pts").toString
-      graft.plans.SpatialLayout.writeClustered(pointsDf(s, dir), p, indexType)
-      p
-    })
-
-  /** Window query through the stored curve key of the given layout; the
-    * range/prefix predicates only PRUNE the scan — the exact window filter
-    * decides membership, so results equal the plain window filter for every
-    * layout (the property each sp_window_* oracle asserts).
-    */
-  private def curveWindowQuery(s: SparkSession, dir: String, indexType: String,
-      minx: Double, miny: Double, maxx: Double, maxy: Double): DataFrame =
-    new GeoFrame(s.read.parquet(curveLayerPath(s, dir, indexType)),
-        Some(graft.engine.LayerMeta("curve_pts", GeomCodec.GTYPE_POINT,
-          encoder = "point-xy", indexType = indexType)))
-      .windowViaCurve(minx, miny, maxx, maxy)
-      .df.select(col("ck").as("id"), col("x"), col("y")).orderBy(col("id"))
-
-  // per-JVM per-SF-dir procedures facade over a temp warehouse: the catalog
-  // surface (create/append/remove/list + count/bbox metadata) under the
-  // oracle; layers are created exactly once, stats are re-derived per call
-  private val catalogCache = scala.collection.concurrent.TrieMap.empty[String, graft.engine.SpatialProcedures]
-  private def catalogProcs(s: SparkSession, dir: String): graft.engine.SpatialProcedures =
-    catalogCache.getOrElseUpdate(dir, {
-      val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
-      wh.toFile.deleteOnExit()
-      val procs = new graft.engine.SpatialProcedures(s, wh.toString)
-      val src = pointsDf(s, dir).select(col("ck"), col("x"), col("y"))
-      // addPointLayerXY (bbox layout) + preset path (hilbert layout)
-      procs.addPointLayerXY("cust_pts", src, "ck", "x", "y")
-      // the preset path on a ck%5 subset: cheaper clustered write AND a
-      // distinct stats row (not a duplicate of cust_pts)
-      procs.addLayer("cust_hilbert", "Hilbert", src.filter(col("ck") % 5 === 0), "ck", "x:y")
-      procs.addWKTLayer("nation_boxes", natBoxesDf(s, dir), "n_nationkey", "wkt")
-      // mutation path: three literal boxes extend the layer bbox on all sides
-      procs.addWKTs("nation_boxes", AppendedBoxes)
-      // removeLayer: a scratch layer must vanish from the listing (the
-      // 3-row oracle result implicitly asserts it)
-      procs.addWKTLayer("scratch", natBoxesDf(s, dir), "n_nationkey", "wkt")
-      procs.removeLayer("scratch")
-      procs
-    })
-
-  /** Per-nation lattice boxes as WKT (exact integer+0.5 corners):
-    * [3k−39.5, 3k−34.5] × [2k−29.5, 2k−25.5].
-    */
-  private def natBoxesDf(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "nation").select(col("n_nationkey"),
-      concat(lit("POLYGON (("),
-        col("n_nationkey") * 3 - lit(39.5), lit(" "), col("n_nationkey") * 2 - lit(29.5), lit(", "),
-        col("n_nationkey") * 3 - lit(34.5), lit(" "), col("n_nationkey") * 2 - lit(29.5), lit(", "),
-        col("n_nationkey") * 3 - lit(34.5), lit(" "), col("n_nationkey") * 2 - lit(25.5), lit(", "),
-        col("n_nationkey") * 3 - lit(39.5), lit(" "), col("n_nationkey") * 2 - lit(25.5), lit(", "),
-        col("n_nationkey") * 3 - lit(39.5), lit(" "), col("n_nationkey") * 2 - lit(29.5),
-        lit("))")).as("wkt"))
-
-  private val AppendedBoxes = Seq(
-    "POLYGON ((200 40, 202 40, 202 42, 200 42, 200 40))",
-    "POLYGON ((-220 -85, -218 -85, -218 -83, -220 -83, -220 -85))",
-    "POLYGON ((10 88, 12 88, 12 89.5, 10 89.5, 10 88))")
-
-  // separate warehouse for the edit-sequence fixture so the catalog-stats
-  // listing stays at exactly 3 layers; the sequence (append → updateWKT →
-  // removeNodes) runs once per JVM, the query reads the final state
-  private val editsCache = scala.collection.concurrent.TrieMap.empty[String, graft.engine.SpatialProcedures]
-  private def editsProcs(s: SparkSession, dir: String): graft.engine.SpatialProcedures =
-    editsCache.getOrElseUpdate(dir, {
-      val wh = java.nio.file.Files.createTempDirectory("graft-edits-wh")
-      wh.toFile.deleteOnExit()
-      val procs = new graft.engine.SpatialProcedures(s, wh.toString)
-      procs.addWKTLayer("edits", natBoxesDf(s, dir), "n_nationkey", "wkt")
-      // ids continue from the existing count: the three boxes get 25,26,27
-      procs.addWKTs("edits", AppendedBoxes)
-      // copy-on-write geometry replacement by id
-      procs.updateWKT("edits", "3", "POLYGON ((50 50, 54 50, 54 53, 50 53, 50 50))")
-      // anti-join delete: one original row, one appended row
-      procs.removeNodes("edits", Seq("7", "26"))
-      procs
-    })
-
-  // =====================================================================
-  // queries + oracleSql — the driver's correctness gate (sf0.01 vs DuckDB)
-  // =====================================================================
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---------------- relational core (Catalyst pushdown/join/agg parity)
-    "q1_agg" -> ((s, dir) =>
-      T(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity")).as("sum_qty"),
-          min(col("l_shipdate")).as("min_ship"),
-          max(col("l_shipdate")).as("max_ship"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))),
-
-    "q2_top_orders" -> ((s, dir) => {
-      val o = T(s, dir, "orders")
-      val c = T(s, dir, "customer")
-      o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .filter(col("c_mktsegment") === "BUILDING")
-        .select(col("o_orderkey"), col("o_totalprice"), col("c_name"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(10)
-    }),
-
-    "q3_nation_volume" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-      val sup = T(s, dir, "supplier")
-      val nat = T(s, dir, "nation")
-      li.join(broadcast(sup), li("l_suppkey") === sup("s_suppkey"))
-        .join(broadcast(nat), sup("s_nationkey") === nat("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(count(lit(1)).as("n_items"), sum(col("l_quantity")).as("sum_qty"))
-        .orderBy(col("n_name"))
-    }),
-
-    // TPC-H Q8 shape (national market share): the 5-way star join whose
-    // ordering Catalyst + AQE pick — the two fact tables shuffle on the
-    // orderkey, every dimension broadcasts. Volumes are EXACT integer
-    // cent×pct products so the per-year sums hash regardless of
-    // aggregation order; only the final share is a (single) division
-    "q8_market_share" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"),
-        (round(col("l_extendedprice") * 100).cast("long") *
-          (lit(100L) - round(col("l_discount") * 100).cast("long"))).as("vol"))
-      val ord = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-        year(col("o_orderdate")).cast("long").as("yr"))
-      val cust = T(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-      val natR0 = T(s, dir, "nation").filter(col("n_regionkey") === 0)
-        .select(col("n_nationkey"))
-      val sup = T(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust.join(broadcast(natR0),
-          col("c_nationkey") === col("n_nationkey"))),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("yr"))
-        .agg(sum(when(col("s_nationkey") === 7, col("vol")).otherwise(0L)).as("nation_vol"),
-          sum(col("vol")).as("total_vol"))
-        .select(col("yr"), col("nation_vol"), col("total_vol"),
-          round(col("nation_vol").cast("double") / col("total_vol").cast("double"), 6)
-            .as("share"))
-        .orderBy(col("yr"))
-    }),
-
-    // TPC-H Q5 (local supplier volume): the 6-table star with the
-    // customer-nation = supplier-nation "local" condition carried on the
-    // join itself; year filter pushes to the orders scan, region filter
-    // prunes nation before anything joins, dimensions broadcast, the two
-    // fact tables shuffle on orderkey/custkey — revenue as exact
-    // cents×pct integers so the sum is merge-order independent
-    "q5_local_volume" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"),
-        (round(col("l_extendedprice") * 100).cast("long") *
-          (lit(100L) - round(col("l_discount") * 100).cast("long"))).as("vol"))
-      val ord = T(s, dir, "orders").filter(year(col("o_orderdate")) === 1997)
-        .select(col("o_orderkey"), col("o_custkey"))
-      val cust = T(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-      val sup = T(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      val nat = T(s, dir, "nation").filter(col("n_regionkey") === 1)
-        .select(col("n_nationkey"), col("n_name"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey")
-          && col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(col("vol")).as("revenue_scaled"))
-        .orderBy(col("revenue_scaled").desc, col("n_name"))
-    }),
-
-    // TPC-H Q13 (customer order distribution): the LEFT OUTER join that
-    // keeps zero-order customers — count(o_orderkey) counts non-nulls, so
-    // the distribution's c_count=0 bucket falls out of the null rows; the
-    // priority exclusion rides the orders scan as a pushed filter
-    "q13_cust_dist" -> ((s, dir) => {
-      val cust = T(s, dir, "customer").select(col("c_custkey"))
-      val ord = T(s, dir, "orders")
-        .filter(col("o_orderpriority") =!= "1-URGENT")
-        .select(col("o_orderkey"), col("o_custkey"))
-      cust.join(ord, col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey")).agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count")).agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-
-    // TPC-H Q18 (large-volume orders): the group-then-having shape — the
-    // quantity rollup is one map-side-combinable aggregate whose >300
-    // filter survives as a post-agg predicate, then a keyed join back to
-    // orders; top-20 is a TakeOrdered, never a global sort
-    "q18_large_orders" -> ((s, dir) => {
-      val big = T(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity")).cast("long").as("total_qty"))
-        .filter(col("total_qty") > 300)
-      val ord = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("price_cents"))
-      big.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey"), col("l_orderkey").as("orderkey"),
-          col("price_cents"), col("total_qty"))
-        .orderBy(col("price_cents").desc, col("orderkey")).limit(20)
-    }),
-
-    // TPC-H Q3 shipping priority: both date filters push to the parquet
-    // scans, the segment filter prunes customer before the join, and the
-    // revenue is summed as exact integers (cents × discount-percent) so the
-    // aggregate is merge-order independent — no explicit broadcast; at these
-    // SFs AQE promotes the filtered customer side from runtime stats, at
-    // 100 TB all three sides shuffle on their join keys
-    "q3_shipping" -> ((s, dir) => {
-      val cut = to_timestamp(lit("1998-06-01"))
-      val cust = T(s, dir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-      val ord = T(s, dir, "orders").filter(col("o_orderdate") < cut)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-          col("o_orderpriority"))
-      val li = T(s, dir, "lineitem").filter(col("l_shipdate") > cut)
-        .select(col("l_orderkey"),
-          (round(col("l_extendedprice") * 100).cast("long") *
-            (lit(100L) - round(col("l_discount") * 100).cast("long"))).as("vol"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(sum(col("vol")).as("revenue_scaled"))
-        .select(col("l_orderkey"), col("revenue_scaled"), col("o_orderdate"),
-          col("o_orderpriority"))
-        .orderBy(col("revenue_scaled").desc, col("l_orderkey")).limit(10)
-    }),
-
-    // TPC-H Q19 (discounted revenue, disjunctive predicate): three
-    // brand/size/quantity OR-branches — the shape that tests whether the
-    // engine pushes a disjunction to the dimension scan and keeps the
-    // fact-side quantity bounds (l_quantity ≤ 36 covers all branches)
-    // sargable; part broadcast, exact cents×pct revenue
-    "q19_disjunct" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_partkey"),
-        col("l_quantity"),
-        (round(col("l_extendedprice") * 100).cast("long") *
-          (lit(100L) - round(col("l_discount") * 100).cast("long"))).as("vol"))
-      val part = T(s, dir, "part")
-        .select(col("p_partkey"), col("p_brand"), col("p_size"))
-      val cond =
-        (col("p_brand") === "Brand#1" && col("p_size").between(1, 15) &&
-          col("l_quantity").between(1, 12)) ||
-        (col("p_brand") === "Brand#2" && col("p_size").between(10, 25) &&
-          col("l_quantity").between(10, 24)) ||
-        (col("p_brand") === "Brand#3" && col("p_size").between(20, 40) &&
-          col("l_quantity").between(24, 36))
-      li.join(broadcast(part), col("l_partkey") === col("p_partkey"))
-        .filter(cond)
-        .agg(count(lit(1)).as("n_lines"), sum("vol").as("revenue_scaled"))
-    }),
-
-    // TPC-H Q22 (global sales opportunity): customers above the global
-    // positive-balance average who never ordered — the scalar-subquery
-    // threshold (a 1-row broadcast) plus LEFT ANTI join on the fact table,
-    // grouped by nation; counts and cent sums exact
-    "q22_idle_rich" -> ((s, dir) => {
-      val cust = T(s, dir, "customer").select(col("c_custkey"),
-        col("c_nationkey").cast("long").as("nk"),
-        round(col("c_acctbal") * 100).cast("long").as("cents"))
-      val thr = cust.filter(col("cents") > 0)
-        .agg((sum("cents").cast("double") / count(lit(1)).cast("double"))
-          .as("thr"))
-      val ordered = T(s, dir, "orders").select(col("o_custkey")).distinct()
-      cust.crossJoin(thr)
-        .filter(col("cents").cast("double") > col("thr"))
-        .join(ordered, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy("nk")
-        .agg(count(lit(1)).as("n_cust"), sum("cents").as("cents"))
-        .orderBy("nk")
-    }),
-
-    // TPC-H Q14 (promotion effect): promo share of one month's revenue —
-    // date window pushed to the lineitem scan, part dim broadcast, both
-    // revenue masses exact scaled integers, one closing division
-    "q14_promo" -> ((s, dir) => {
-      val lo = to_timestamp(lit("1997-03-01"))
-      val hi = to_timestamp(lit("1997-04-01"))
-      val li = T(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lo && col("l_shipdate") < hi)
-        .select(col("l_partkey"),
-          (round(col("l_extendedprice") * 100).cast("long") *
-            (lit(100L) - round(col("l_discount") * 100).cast("long"))).as("vol"))
-      val part = T(s, dir, "part").select(col("p_partkey"), col("p_type"))
-      li.join(broadcast(part), col("l_partkey") === col("p_partkey"))
-        .agg(sum(when(col("p_type") === "PROMO", col("vol")).otherwise(0L))
-            .as("promo_scaled"),
-          sum(col("vol")).as("total_scaled"))
-        .select(col("promo_scaled"), col("total_scaled"),
-          round(lit(100.0) * col("promo_scaled").cast("double") /
-            col("total_scaled").cast("double"), 6).as("promo_pct"))
-    }),
-
-    // TPC-H Q10 (returned-item revenue): who returned the most value in a
-    // quarter — returnflag filter and the date window both pushed to the
-    // scans, the two facts shuffle on orderkey, nation broadcast, exact
-    // integer cents×pct revenue, top-20 as a TakeOrdered (no global sort)
-    "q10_returns" -> ((s, dir) => {
-      val lo = to_timestamp(lit("1996-01-01"))
-      val hi = to_timestamp(lit("1996-04-01"))
-      val li = T(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey"),
-          (round(col("l_extendedprice") * 100).cast("long") *
-            (lit(100L) - round(col("l_discount") * 100).cast("long"))).as("vol"))
-      val ord = T(s, dir, "orders")
-        .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi)
-        .select(col("o_orderkey"), col("o_custkey"))
-      val cust = T(s, dir, "customer").select(col("c_custkey"), col("c_name"),
-        col("c_nationkey").cast("long").as("cnk"),
-        round(col("c_acctbal") * 100).cast("long").as("acctbal_cents"))
-      val nat = T(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("nnk"), col("n_name"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nat), col("cnk") === col("nnk"))
-        .groupBy(col("c_custkey"), col("c_name"), col("acctbal_cents"),
-          col("n_name"))
-        .agg(sum("vol").as("revenue_scaled"))
-        .select(col("c_custkey"), col("c_name"), col("n_name"),
-          col("acctbal_cents"), col("revenue_scaled"))
-        .orderBy(col("revenue_scaled").desc, col("c_custkey")).limit(20)
-    }),
-
-    // TPC-H Q17 (small-quantity-order revenue): per-part average quantity
-    // as a correlated threshold. The avg comparison is cross-multiplied to
-    // exact integers (qty·5·cnt < sum_qty ⟺ qty < 0.2·avg), revenue stays
-    // in integer cents; the lineitem self-join is co-partitioned on
-    // l_partkey (the aggregate's exchange is reused), the part dim is
-    // broadcast — the plan a 100 TB fact table needs
-    "q17_small_qty" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_partkey"),
-        col("l_quantity").cast("long").as("qty"),
-        round(col("l_extendedprice") * 100).cast("long").as("cents"))
-      val perPart = li.groupBy(col("l_partkey"))
-        .agg(sum(col("qty")).as("sq"), count(lit(1)).as("cq"))
-      val pa = T(s, dir, "part").filter(col("p_size") <= 10)
-        .select(col("p_partkey"), col("p_brand"))
-      li.join(perPart, "l_partkey")
-        .filter(col("qty") * 5L * col("cq") < col("sq"))
-        .join(broadcast(pa), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(sum(col("cents")).as("rev_cents"), count(lit(1)).as("n_li"))
-        .withColumn("avg_yearly", round(col("rev_cents") / 700.0, 4))
-        .orderBy(col("p_brand"))
-    }),
-
-    // TPC-H Q21 shape (no receipt/commit dates in this corpus, so "kept the
-    // order waiting" = shipped the order's LAST line while other suppliers
-    // were done): finished orders with >1 supplier where EXACTLY ONE
-    // supplier ships the max shipdate — the EXISTS/NOT-EXISTS pair as one
-    // orderkey-grouped pass (no correlated subquery, no second lineitem
-    // scan), then a per-supplier count. Counts are exact integers
-    "q21_waiting" -> ((s, dir) => {
-      val f = T(s, dir, "orders").filter(col("o_orderstatus") === "F")
-        .select(col("o_orderkey"))
-      val l = T(s, dir, "lineitem")
-        .join(f, col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"),
-          col("l_shipdate").as("sd"))
-      val per = l.groupBy("ok")
-        .agg(max(col("sd")).as("mx"), countDistinct(col("sk")).as("nsupp"))
-      val lastShip = l.join(per, "ok")
-        .filter(col("sd") === col("mx") && col("nsupp") > 1)
-        .select(col("ok"), col("sk")).distinct()
-      val lone = lastShip.groupBy("ok")
-        .agg(min(col("sk")).as("sk"), count(lit(1)).as("nlast"))
-        .filter(col("nlast") === 1)
-      lone.join(broadcast(T(s, dir, "supplier")),
-          col("sk") === col("s_suppkey"))
-        .groupBy(col("s_name")).agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name")).limit(20)
-    }),
-
-    // TPC-H Q4 (order priority checking, adapted: a line shipped >30 days
-    // after the order stands in for the absent commit<receipt pair): the
-    // EXISTS shape as one real LeftSemi — orders semi-joined against late
-    // lineitems, then the priority distribution; with Q4 and Q7 the full
-    // 22-query TPC-H shape set is covered
-    "q4_priority" -> ((s, dir) => {
-      val ord = T(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp")
-          && col("o_orderdate") < lit("1997-04-01").cast("timestamp"))
-        .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      val late = T(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_shipdate"))
-      ord.join(late,
-          col("o_orderkey") === col("l_orderkey")
-            && col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 30 DAYS"),
-          "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // TPC-H Q7 (volume shipping): the two-nation flow — supplier nation and
-    // customer nation threaded through both fact joins, the symmetric
-    // (7,8)/(8,7) pair filter carried on the broadcast dims, revenue per
-    // (supp_nation, cust_nation, year) in exact cent-pct integers
-    "q7_volume" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"),
-        year(col("l_shipdate")).cast("long").as("l_year"),
-        (round(col("l_extendedprice") * 100).cast("long") *
-          (lit(100L) - round(col("l_discount") * 100).cast("long"))).as("vol"))
-      val sup = T(s, dir, "supplier").select(col("s_suppkey"),
-        col("s_nationkey").as("supp_nk"))
-      val ord = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val cust = T(s, dir, "customer").select(col("c_custkey"),
-        col("c_nationkey").as("cust_nk"))
-      val nat = T(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-      li.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .filter((col("supp_nk") === 7 && col("cust_nk") === 8)
-          || (col("supp_nk") === 8 && col("cust_nk") === 7))
-        .join(broadcast(nat.select(col("n_nationkey").as("snk"),
-          col("n_name").as("supp_nation"))), col("supp_nk") === col("snk"))
-        .join(broadcast(nat.select(col("n_nationkey").as("cnk"),
-          col("n_name").as("cust_nation"))), col("cust_nk") === col("cnk"))
-        .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-        .agg(sum(col("vol")).as("revenue_scaled"))
-        .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-    }),
-
-    // TPC-H Q6 (forecast revenue change): the pure scan-aggregate — every
-    // predicate (shipdate range, discount band, quantity cap) pushes to the
-    // parquet scan, no join, no shuffle beyond the single partial-agg
-    // exchange; revenue as exact cents×pct integers
-    "q6_forecast" -> ((s, dir) =>
-      T(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp")
-          && col("l_shipdate") < lit("1998-01-01").cast("timestamp")
-          && col("l_quantity") < 24)
-        .select((round(col("l_extendedprice") * 100).cast("long") *
-          round(col("l_discount") * 100).cast("long")).as("disc_rev"),
-          round(col("l_discount") * 100).cast("long").as("pct"))
-        .filter(col("pct") >= 5 && col("pct") <= 7)
-        .agg(sum(col("disc_rev")).as("revenue_scaled"),
-          count(lit(1)).as("n_items"))),
-
-    // TPC-H Q9 (product-type profit, adapted: the dataset has no partsupp,
-    // so supply cost is the synthetic 60%-of-retail — the JOIN SHAPE is the
-    // point): the one multi-fact star nothing else exercises — lineitem
-    // drives, the name-filtered part and the supplier×nation dimensions
-    // broadcast, orders joins on the orderkey shuffle for the year axis;
-    // profit per (nation, year) in exact cent×pct integers
-    "q9_profit" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_partkey"), col("l_suppkey"),
-        (round(col("l_extendedprice") * 100).cast("long") *
-          (lit(100L) - round(col("l_discount") * 100).cast("long"))).as("vol"),
-        col("l_quantity").cast("long").as("qty"))
-      val prt = T(s, dir, "part").filter(col("p_name").like("large%"))
-        .select(col("p_partkey"),
-          round(col("p_retailprice") * 100).cast("long").as("retail_cents"))
-      val sup = T(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      val nat = T(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-      val ord = T(s, dir, "orders").select(col("o_orderkey"),
-        year(col("o_orderdate")).cast("long").as("yr"))
-      li.join(broadcast(prt), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(sup.join(broadcast(nat),
-          col("s_nationkey") === col("n_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("n_name"), col("yr"))
-        .agg(sum(col("vol") - col("retail_cents") * 60L * col("qty"))
-          .as("profit_scaled"))
-        .orderBy(col("n_name"), col("yr").desc)
-    }),
-
-    // TPC-H Q11 (important stock, adapted to the lineitem-derived holdings):
-    // per-part value from region-0 suppliers, kept when value exceeds
-    // 0.5% of the total — the aggregate-vs-global-scalar-threshold shape;
-    // the scalar total broadcasts (1 row), and the comparison stays in
-    // exact integers (value·1000 > 5·total)
-    "q11_important_parts" -> ((s, dir) => {
-      val natR0 = T(s, dir, "nation").filter(col("n_regionkey") === 0)
-        .select(col("n_nationkey"))
-      val sup = T(s, dir, "supplier")
-        .join(broadcast(natR0), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"))
-      val li = T(s, dir, "lineitem")
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .select(col("l_partkey"),
-          (round(col("l_extendedprice") * 100).cast("long") *
-            (lit(100L) - round(col("l_discount") * 100).cast("long"))).as("vol"))
-      val perPart = li.groupBy(col("l_partkey"))
-        .agg(sum(col("vol")).as("value_scaled"))
-      val total = perPart.agg(sum(col("value_scaled")).as("tv"))
-      perPart.crossJoin(total) // 1-row scalar, broadcast
-        .filter(col("value_scaled") * 1000L > lit(5L) * col("tv"))
-        .select(col("l_partkey").as("partkey"), col("value_scaled"))
-        .orderBy(col("value_scaled").desc, col("partkey"))
-    }),
-
-    // TPC-H Q12 (shipmode lateness, adapted: returnflag stands in for the
-    // absent shipmode, ship>order+60d for the absent receipt/commit pair):
-    // the fact-fact orderkey join + CASE-split counts; the shipdate range
-    // rides the lineitem scan
-    "q12_late_priority" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp")
-          && col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-        .select(col("l_orderkey"), col("l_returnflag"), col("l_shipdate"))
-      val ord = T(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-        .groupBy(col("l_returnflag"))
-        .agg(sum(when(col("o_orderpriority") === "1-URGENT"
-            || col("o_orderpriority") === "2-HIGH", 1L).otherwise(0L))
-          .as("high_line_count"),
-          sum(when(col("o_orderpriority") =!= "1-URGENT"
-            && col("o_orderpriority") =!= "2-HIGH", 1L).otherwise(0L))
-          .as("low_line_count"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // TPC-H Q15 (top supplier): the revenue "view" + max-scalar + equality
-    // join-back shape — revenue per supplier over one half-year, the 1-row
-    // max broadcasts, winners join the supplier dim; ties all surface
-    // (order by suppkey), exactly as the spec's view formulation does
-    "q15_top_supplier" -> ((s, dir) => {
-      val rev = T(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp")
-          && col("l_shipdate") < lit("1997-07-01").cast("timestamp"))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(round(col("l_extendedprice") * 100).cast("long") *
-          (lit(100L) - round(col("l_discount") * 100).cast("long")))
-          .as("total_revenue_scaled"))
-      val mx = rev.agg(max(col("total_revenue_scaled")).as("mx"))
-      rev.crossJoin(mx) // 1-row scalar, broadcast
-        .filter(col("total_revenue_scaled") === col("mx"))
-        .join(broadcast(T(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("total_revenue_scaled"))
-        .orderBy(col("s_suppkey"))
-    }),
-
-    // TPC-H Q16 (supplier count, adapted: distinct lineitem (part,supplier)
-    // pairs stand in for partsupp, a negative-balance supplier set for the
-    // complaints subquery): the ANTI-join exclusion + count-distinct
-    // rollup; brand/type exclusions and the size IN-list prune the part
-    // dim before it broadcasts
-    "q16_supplier_cnt" -> ((s, dir) => {
-      val pairs = T(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-      val prt = T(s, dir, "part")
-        .filter(col("p_brand") =!= "Brand#13" && col("p_type") =!= "PROMO"
-          && col("p_size").isin(1, 4, 9, 14, 19, 24, 29, 34))
-        .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))
-      val badSup = T(s, dir, "supplier").filter(col("s_acctbal") < 1000.0)
-        .select(col("s_suppkey"))
-      pairs
-        .join(broadcast(badSup), col("l_suppkey") === col("s_suppkey"),
-          "left_anti")
-        .join(broadcast(prt), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
-          col("p_size"))
-    }),
-
-    // TPC-H Q20 (excess stock, adapted: the year's shipped quantity per
-    // (part, supplier) stands in for partsupp availqty): the nested
-    // SEMI-JOIN chain — lineitem semi-joined against the name-filtered
-    // part dim, the >50-qty qualifying pairs then semi-join the supplier
-    // dim, region filter last; both semi-joins are real LeftSemi operators
-    // the planner must keep (its PlanDump plan shows both)
-    "q20_excess_stock" -> ((s, dir) => {
-      val prt = T(s, dir, "part").filter(col("p_name").like("small%"))
-        .select(col("p_partkey"))
-      val qual = T(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp")
-          && col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-        .join(broadcast(prt), col("l_partkey") === col("p_partkey"),
-          "left_semi")
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(sum(col("l_quantity").cast("long")).as("qty"))
-        .filter(col("qty") > 50L)
-        .select(col("l_suppkey")).distinct()
-      val natR1 = T(s, dir, "nation").filter(col("n_regionkey") === 1)
-        .select(col("n_nationkey"))
-      T(s, dir, "supplier")
-        .join(qual, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .join(broadcast(natR1), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("s_name"))
-        .orderBy(col("s_name"))
-    }),
-
-    // max concurrent sessions per hour: sweep line as a distributed
-    // two-level prefix sum (per-hour offsets + within-hour running sum) —
-    // no global-order window anywhere in the plan
-    "ev_concurrency" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
-        expr("ts div 1000").as("tsn"), col("value"))
-      Events.maxConcurrency(Events.sessionize(ev, 4L * 3600L * 1000000L))
-    }),
-
-    // dense hourly grid + LOCF forward fill per user: grid generated from
-    // per-user extents (output-proportional, no calendar cross join), one
-    // user shuffle serves the join and the carry-forward window
-    "ev_gapfill" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = T(s, dir, "events").filter(col("user_id") % 50 === 0)
-        .select(col("user_id"), expr("ts div 1000").as("tsn"), col("value"))
-      Events.gapFillLocf(ev)
-    }),
-
-    "ev_top_users" -> ((s, dir) => {
-      // events.ts is parquet TIMESTAMP(NANOS) which Spark 4 rejects by
-      // default; read it as long nanos (we don't use ts here)
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      T(s, dir, "events").groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("user_id"))
-        .limit(20)
-    }),
-
-    // multi-dimensional OLAP cube over (event_type, JSON-extracted k band):
-    // one shuffle produces all 4 grouping sets (Spark expands cube in the
-    // aggregate, partial-aggregated map-side); grouping_id() disambiguates
-    // subtotal NULLs; DuckDB replays with GROUP BY CUBE + GROUPING()
-    "ev_cube" -> ((s, dir) =>
-      T(s, dir, "events")
-        .withColumn("band", (get_json_object(col("props"), "$.k").cast("long") / 10)
-          .cast("long"))
-        .cube(col("event_type"), col("band"))
-        // value is 2-decimal: summing exact cents keeps the aggregate
-        // integer (merge-order-independent), unlike a raw double sum
-        .agg(grouping_id().as("gid"), count(lit(1)).as("n"),
-          sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-        .orderBy(col("gid"), coalesce(col("event_type"), lit("")),
-          coalesce(col("band"), lit(-1L)))
-        .select(col("gid"), col("event_type"), col("band"), col("n"), col("sum_cents"))),
-
-    "ev_hourly" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ts arrives as long nanos (see ev_top_users); integer `div` keeps the
-      // bucket arithmetic exact (a double division would lose precision at
-      // 1e18-scale nanos)
-      T(s, dir, "events")
-        .withColumn("hour_idx", expr("ts div 3600000000000"))
-        .groupBy(col("hour_idx"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          min(col("event_id")).as("min_ev"), max(col("event_id")).as("max_ev"))
-        .orderBy(col("hour_idx"), col("event_type"))
-    }),
-
-    // gap sessionization (4 h): one shuffle on user_id, windows + session
-    // aggregate all inside that partitioning — see Events.sessionize
-    "ev_sessions" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // µs granularity (`div 1000`): DuckDB truncates the NANOS timestamp
-      // to TIMESTAMP (µs) on read, so the oracle can only see epoch_us
-      val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
-        expr("ts div 1000").as("tsn"), col("value"))
-      Events.sessionize(ev, 4L * 3600L * 1000000L)
-        .orderBy(col("user_id"), col("sess_seq"))
-    }),
-
-    // as-of join: each purchase ← latest strictly-prior click of the same
-    // user, as ONE window over the union (no join) — see Events.asofJoin
-    "ev_asof" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // µs granularity — see ev_sessions
-      val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
-        expr("ts div 1000").as("tsn"), col("event_type"), col("value"))
-      Events.asofJoin(ev, "purchase", "click").orderBy(col("event_id"))
-    }),
-
-    // A/B experiment readout: deterministic variant split (user_id parity —
-    // any keyed hash works identically), conversion = heavy buyer (≥16
-    // purchases; every user in this corpus purchases at least once, so the
-    // raw did-purchase rate saturates at 1.0), per-variant exposure /
-    // conversion / revenue as exact integers, and the two-proportion pooled
-    // z-score as the ONLY float (closed form over the four integer counts,
-    // so both engines compute bit-identical doubles; NULL when the pooled
-    // rate degenerates to 0 or 1). One user rollup, one tiny agg
-    "ev_ab_test" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = T(s, dir, "events").select(col("user_id"), col("event_type"),
-        round(col("value") * 100).cast("long").as("cents"))
-      val users = ev.groupBy("user_id").agg(
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("np"),
-          sum(when(col("event_type") === "purchase", col("cents"))
-            .otherwise(0L)).as("rev"))
-        .withColumn("c", when(col("np") >= 16, 1L).otherwise(0L))
-        .withColumn("v", (col("user_id") % 2).cast("long"))
-      val pool = (col("conv_a") + col("conv_b")).cast("double") /
-        (col("n_a") + col("n_b")).cast("double")
-      users.agg(
-          sum(when(col("v") === 0, 1L).otherwise(0L)).as("n_a"),
-          sum(when(col("v") === 0, col("c")).otherwise(0L)).as("conv_a"),
-          sum(when(col("v") === 0, col("rev")).otherwise(0L)).as("rev_a"),
-          sum(when(col("v") === 1, 1L).otherwise(0L)).as("n_b"),
-          sum(when(col("v") === 1, col("c")).otherwise(0L)).as("conv_b"),
-          sum(when(col("v") === 1, col("rev")).otherwise(0L)).as("rev_b"))
-        .withColumn("z", when(
-          col("conv_a") + col("conv_b") > 0 &&
-            col("conv_a") + col("conv_b") < col("n_a") + col("n_b"),
-          round(
-            (col("conv_a").cast("double") / col("n_a").cast("double") -
-              col("conv_b").cast("double") / col("n_b").cast("double")) /
-              sqrt(pool * (lit(1.0) - pool) *
-                (lit(1.0) / col("n_a").cast("double") +
-                  lit(1.0) / col("n_b").cast("double"))), 6)))
-    }),
-
-    // nonparametric A/B readout beside ev_ab_test's z-test: Mann-Whitney U
-    // on per-user purchase cents (variant = user_id parity). Rank algebra
-    // is exact through ties — the value-group table prefix-sums group
-    // sizes via the distributed two-pass scan (Events.prefixSum, never a
-    // global window), 2·R_A and 2·U_A stay integers, and the tie-corrected
-    // z is one closed form over them (bit-identical cross-engine)
-    "ev_mannwhitney" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val perUser = T(s, dir, "events")
-        .select(col("user_id"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .groupBy("user_id").agg(
-          sum(when(col("event_type") === "purchase", col("cents"))
-            .otherwise(0L)).as("m"))
-        .withColumn("variant", (col("user_id") % 2).cast("long"))
-      Events.mannWhitney(perUser, "m", "variant")
-    }),
-
-    // two-sample Kolmogorov–Smirnov on per-user TOTAL activity cents —
-    // the distribution-shift guard beside ev_mannwhitney's location test;
-    // the CDF gap is maximised as an exact integer cross-product over one
-    // multi-column prefix-sum pass (never a global window)
-    "ev_ks" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val perUser = T(s, dir, "events")
-        .select(col("user_id"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .groupBy("user_id").agg(sum(col("cents")).as("m"))
-        .withColumn("variant", (col("user_id") % 2).cast("long"))
-      Events.ksTest(perUser, "m", "variant")
-    }),
-
-    // deterministic Poisson-bootstrap 95% CI for the A/B difference in
-    // mean purchase cents — 200 hash-replayable resamples, map-side
-    // combinable flat-map expansion, distributed rank for the percentile
-    // bounds; the interval the ev_ab_test point estimate ships with
-    "ev_bootstrap" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val perUser = T(s, dir, "events")
-        .select(col("user_id"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .groupBy("user_id").agg(
-          sum(when(col("event_type") === "purchase", col("cents"))
-            .otherwise(0L)).as("m"))
-        .withColumn("variant", (col("user_id") % 2).cast("long"))
-      Events.bootstrapDiff(perUser, "user_id", "m", "variant", reps = 200)
-    }),
-
-    // always-valid sequential testing (mSPRT): the per-day log mixture
-    // likelihood ratio over cumulative purchase cents, pre-registered
-    // σ² = 1e9 / τ² = 1e6 — the "safe to peek daily" readout a metrics
-    // platform ships beside the fixed-horizon ev_ab_test; day-level
-    // aggregate first, running sums only over the bounded day table
-    "ev_msprt" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val obs = T(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(expr("(ts div 1000) div 86400000000").as("day"),
-          (col("user_id") % 2).cast("long").as("variant"),
-          round(col("value") * 100).cast("long").as("x"))
-      Events.msprtDaily(obs, "day", "variant", "x",
-        sigma2 = 1.0e9, tau2 = 1.0e6)
-    }),
-
-    // quantile treatment effects: the A/B readout at the p25/p50/p75/p90
-    // of per-user purchase cents — where in the distribution the treatment
-    // moved mass, not just the mean (exact percentile over the per-user
-    // table, the same interpolation contract ev_quantiles pinned)
-    "ev_qte" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val users = T(s, dir, "events")
-        .select(col("user_id"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .groupBy("user_id").agg(
-          sum(when(col("event_type") === "purchase", col("cents"))
-            .otherwise(0L)).as("m"))
-        .withColumn("v", (col("user_id") % 2).cast("long"))
-      val q = users.groupBy("v")
-        .agg(expr("percentile(m, array(0.25D, 0.5D, 0.75D, 0.9D))").as("q"))
-      val lbl = array(lit("p25"), lit("p50"), lit("p75"), lit("p90"))
-      q.select(col("v"), posexplode(col("q")))
-        .toDF("v", "i", "qv")
-        .groupBy("i").agg(
-          max(when(col("v") === 0, col("qv"))).as("qa"),
-          max(when(col("v") === 1, col("qv"))).as("qb"))
-        .select(element_at(lbl, col("i") + 1).as("q_label"),
-          round(col("qa"), 6).as("q_a"), round(col("qb"), 6).as("q_b"),
-          round(col("qb") - col("qa"), 6).as("qte"))
-        .orderBy("q_label")
-    }),
-
-    // multiple-testing control: per-event-type Welch z on event cents
-    // (user-parity arms) + Benjamini–Hochberg step-up FDR across the
-    // metric family — the guardrail a platform applies when one experiment
-    // reads out many metrics; p via the A&S erfc polynomial, identical
-    // text in both engines (Events.welchBh)
-    "ev_bh" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val obs = T(s, dir, "events")
-        .select(col("event_type"), (col("user_id") % 2).cast("long").as("v"),
-          round(col("value") * 100).cast("long").as("x"))
-      Events.welchBh(obs, "event_type", "v", "x", alpha = 0.1)
-    }),
-
-    // robust A/B means: winsorized (5%) and trimmed per-variant means of
-    // per-user purchase cents beside the raw mean — the outlier-robust
-    // readout; rank-based order statistics (integer cents, exact sums),
-    // distributed ranks, no per-variant global window
-    "ev_winsor" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val users = T(s, dir, "events")
-        .select(col("user_id"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .groupBy("user_id").agg(
-          sum(when(col("event_type") === "purchase", col("cents"))
-            .otherwise(0L)).as("m"))
-        .withColumn("v", (col("user_id") % 2).cast("long"))
-      Events.winsorMeans(users, "user_id", "m", "v", frac = 0.05)
-    }),
-
-    // cohort lifetime value: purchase cents per (first-active-day cohort,
-    // age-in-days), plus the running LTV curve — integer cumsum per cohort,
-    // one user shuffle for the cohort min then day-level aggregates only
-    "ev_ltv" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = T(s, dir, "events").select(col("user_id"),
-        expr("(ts div 1000) div 86400000000").as("day"), col("event_type"),
-        round(col("value") * 100).cast("long").as("cents"))
-      val cohort = ev.groupBy("user_id").agg(min(col("day")).as("cohort_day"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("cohort_day").orderBy("age")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      ev.filter(col("event_type") === "purchase")
-        .join(cohort, "user_id")
-        .withColumn("age", col("day") - col("cohort_day"))
-        .groupBy("cohort_day", "age")
-        .agg(sum(col("cents")).as("cents"))
-        .withColumn("cum_cents", sum(col("cents")).over(w))
-        .orderBy(col("cohort_day"), col("age"))
-    }),
-
-    // per-event ML feature engineering: previous spend, trailing-5-event
-    // spend and trailing-1-hour activity count per user, emitted for the
-    // purchase rows — three window frames (ROWS lag, ROWS rolling, RANGE
-    // time window) over ONE user-keyed shuffle, exact integer cents; this is
-    // the training-feature extraction pass of a behavioral model pipeline
-    "ev_lag_features" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
-        expr("ts div 1000").as("tsn"), col("event_type"),
-        round(col("value") * 100).cast("long").as("cents"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("tsn"), col("event_id"))
-      val wr = w.rowsBetween(-4, 0)
-      val wt = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("tsn"))
-        .rangeBetween(-3600000000L, 0)
-      ev
-        .withColumn("prev_cents", lag(col("cents"), 1).over(w))
-        .withColumn("roll5_cents", sum(col("cents")).over(wr))
-        .withColumn("n_1h", count(lit(1)).over(wt))
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("prev_cents"),
-          col("roll5_cents"), col("n_1h"))
-        .orderBy(col("event_id"))
-    }),
-
-    // last-touch attribution report: purchase revenue rolled up to the
-    // epoch-day of the latest preceding click within a 7-day lookback
-    // (-1 = unattributed) — the classic marketing-attribution rollup as one
-    // user-keyed window pass, exact integer cents (Events.lastTouchAttribution)
-    "ev_attribution" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
-        expr("ts div 1000").as("tsn"), col("event_type"), col("value"))
-      Events.lastTouchAttribution(ev)
-    }),
-
-    // linear multi-touch attribution with exact largest-remainder cent
-    // splits (no float credit): per-user band join pairs clicks with
-    // purchases in the 7-day lookback; every aggregate stays integer
-    "ev_multitouch" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
-        expr("ts div 1000").as("tsn"), col("event_type"), col("value"))
-      Events.multiTouchAttribution(ev)
-    }),
-
-    // robust MAD anomalies (Iglewicz-Hoaglin modified z): exact
-    // interpolated medians of integers, so both engines agree bit-for-bit
-    // on the flag boundary — the outlier rule z-scores get wrong when the
-    // outliers inflate the sd
-    "ev_mad" -> ((s, dir) =>
-      Events.madAnomalies(T(s, dir, "events"))),
-
-    // exact Gini of per-user purchase revenue: two order-free integer
-    // moments + one division; the rank runs on the user rollup
-    "ev_gini" -> ((s, dir) =>
-      Events.giniRevenue(T(s, dir, "events"))),
-
-    // hopping 3h/1h windows (the batch twin of Flink HOP): 3-element
-    // generator in the scan projection, one aggregate, exact integers
-    "ev_hop" -> ((s, dir) =>
-      Events.hoppingCounts(T(s, dir, "events"))),
-
-    // DAU/MAU stickiness with EXACT trailing-30-day distincts: the event
-    // volume collapses to deduped (user, day) before the 30× fan-out
-    "ev_stickiness" -> ((s, dir) =>
-      Events.stickiness(T(s, dir, "events"))),
-
-    // RFM segmentation: per-user recency/frequency/monetary quintiles under
-    // a deterministic ntile total order, then segment populations — the
-    // windows run over the USER rollup (events-volume never re-shuffles)
-    "ev_rfm" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
-        expr("ts div 1000").as("tsn"), col("event_type"), col("value"))
-      Events.rfmSegments(ev)
-    }),
-
-    // cross-user temporal co-occurrence: every click within ±60 s of each
-    // purchase, ANY user — a non-equi join stock Spark would plan as a
-    // cartesian product; Events.intervalJoin runs it as the 1-D grid plan
-    // (cell equi-join, ≤3-cell fan-out). Cent-sums keep the aggregate exact
-    "ev_interval_join" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = T(s, dir, "events").select(col("event_id"),
-        expr("ts div 1000").as("tsn"), col("event_type"), col("value"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("tsn").as("p_ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("tsn").as("c_ts"), col("value"))
-      Events.intervalJoin(purchases, clicks, "p_ts", "c_ts", deltaUs = 60000000L)
-        .groupBy(col("p_id").as("event_id"))
-        .agg(count(lit(1)).as("n_clicks"),
-          sum(round(col("value") * 100).cast("long")).as("cents"))
-        .orderBy(col("event_id"))
-    }),
-
-    // deterministic HyperLogLog distinct sketch (p=8) per event_type, both
-    // grains (150 distinct users → linear-counting branch; ~2k event ids →
-    // raw-estimate branch), exact counts beside for the error story
-    // NINTH streaming CORRECTNESS gate — streaming KMV distinct sketch
-    // through flatMapGroupsWithState: state is EXACTLY the k smallest
-    // distinct hashes per group (k longs — bounded for any stream length).
-    // Bottom-k merge is a semilattice, so the streamed final sketch equals
-    // the batch sketch for ANY slab split or arrival order — the gate
-    // reuses the BATCH oracle verbatim (Events.kmvDistinctDuckSql)
-    "st_stream_kmv" -> ((s, dir) => {
-      import s.implicits._
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-kmv")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val ev = T(s, dir, "events")
-        .select(col("event_type").as("g"),
-          Events.kmvHash(col("user_id")).as("h"))
-      val staged0 = stageSlabs(ev, Seq(col("g"), col("h")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val k = 256
-      runGate(s, staged0) {
-        graft.streaming.StreamSketch.kmvStream(
-            stream.as[graft.streaming.StreamSketch.KmvRow], k)
-          .toDF()
-          .writeStream.format("memory").queryName("st_stream_kmv_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table("st_stream_kmv_mem")
-        .groupBy(col("g"))
-        .agg(max(struct(col("ver"), col("n_kept"), col("hk"))).as("m"))
-        .select(col("g").as("event_type"),
-          col("m.n_kept").as("n_kept"),
-          round(when(col("m.n_kept") < k, col("m.n_kept").cast("double"))
-            .otherwise(lit((k - 1).toDouble) /
-              (col("m.hk").cast("double") / lit(Events.KmvM.toDouble))), 3)
-            .as("est_distinct"))
-        .orderBy(col("event_type"))
-    }),
-
-    // KMV / bottom-k Theta distinct sketch per event type — the
-    // set-algebra-capable sibling of ev_hll (HLL unions but cannot
-    // intersect); rank-cut window = WindowGroupLimit per-partition top-k
-    "ev_kmv" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      Events.kmvDistinct(T(s, dir, "events"))
-    }),
-
-    // KMV set algebra: union/intersection/Jaccard estimates between the
-    // view and click user sets from the two k-row sketches (the merge
-    // input is 2k constant rows — bounded at any corpus size)
-    "ev_kmv_ops" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      Events.kmvSetOps(T(s, dir, "events"), "view", "click")
-    }),
-
-    "ev_hll" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val fnv = udf((x: Long) => TextAnalysis.fnv1a64(x.toString))
-      val ev = T(s, dir, "events")
-      def sketch(c: String, metric: String) =
-        Events.hllEstimate(ev.select(col("event_type").as("g"), fnv(col(c)).as("h")))
-          .withColumn("metric", lit(metric))
-      def exact(c: String, metric: String) =
-        ev.groupBy(col("event_type").as("g"))
-          .agg(countDistinct(col(c)).as("n_exact")).withColumn("metric", lit(metric))
-      sketch("user_id", "users").unionByName(sketch("event_id", "events"))
-        .join(exact("user_id", "users").unionByName(exact("event_id", "events")),
-          Seq("g", "metric"))
-        .select(col("g").as("event_type"), col("metric"), col("n_exact"),
-          col("v_zero"), col("est"))
-        .orderBy(col("event_type"), col("metric"))
-    }),
-
-    // sketch SET ALGEBRA: distinct-user overlap of two event types from
-    // the stored per-type register maxima alone — union = max per register
-    // (associative merge, identical to sketching the concatenated stream),
-    // intersection by inclusion-exclusion; the exact overlap count rides
-    // beside for the error story. 2×256 longs of state answer all three
-    // questions — the mergeable-sketch reason HLL is the 100 TB shape
-    "ev_hll_intersect" -> ((s, dir) => {
-      import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val fnv = udf((x: Long) => TextAnalysis.fnv1a64(x.toString))
-      val ev = T(s, dir, "events").filter(col("event_type").isin("click", "view"))
-      val hashed = ev.select(col("event_type").as("g"), fnv(col("user_id")).as("h"))
-      val maxr = hashed
-        .select(col("g"), Events.hllRegCol.as("reg"), Events.hllRankCol.as("rank"))
-        .groupBy("g", "reg").agg(max(col("rank")).as("m")).persist()
-      val merged = maxr.groupBy("reg").agg(max(col("m")).as("m"))
-        .withColumn("g", lit("both"))
-      val ests = Events.hllFinalize(
-        maxr.unionByName(merged.select(col("g"), col("reg"), col("m"))),
-        Seq("click", "view", "both").toDF("g"))
-      val exact = ev.groupBy(col("user_id"))
-        .agg(countDistinct(col("event_type")).as("nt"))
-        .filter(col("nt") === 2).agg(count(lit(1)).as("n_exact"))
-      val one = ests.agg(
-        sum(when(col("g") === "click", col("est"))).as("est_click"),
-        sum(when(col("g") === "view", col("est"))).as("est_view"),
-        sum(when(col("g") === "both", col("est"))).as("est_union"))
-      exact.crossJoin(one)
-        .select(col("n_exact"), col("est_click"), col("est_view"), col("est_union"),
-          round(col("est_click") + col("est_view") - col("est_union"), 4).as("est_inter"))
-    }),
-
-    // exact interpolated percentiles of the event value per type — the
-    // oracle-checkable variant; at 100 TB swap in approx_percentile (KLL
-    // sketch, same call shape) since exact percentile buffers each group
-    "ev_quantiles" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      T(s, dir, "events").groupBy(col("event_type"))
-        .agg(expr("percentile(value, array(0.5D, 0.9D, 0.99D))").as("q"))
-        .select(col("event_type"),
-          round(col("q")(0), 6).as("p50"), round(col("q")(1), 6).as("p90"),
-          round(col("q")(2), 6).as("p99"))
-        .orderBy(col("event_type"))
-    }),
-
-    // PageRank over the customer↔supplier trade graph (distinct pairs from
-    // lineitem⋈orders, both directions, parity-disambiguated node ids) —
-    // see pipeline/PageRank.scala for the per-iteration plan shape
-    "gr_pagerank" -> ((s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      PageRank.pageRank(edges, iters = 3, damping = 0.85)
-        .orderBy(col("rank").desc, col("node")).limit(25)
-    }),
-
-    // bounded-round k-core peeling over the trade graph: 4 synchronous
-    // drop-degree-<25 rounds, surviving (node, degree) pairs — the dense-core
-    // extraction every community/influence pipeline starts from
-    // synchronous label propagation over the customer–supplier trade graph:
-    // 3 rounds, frequency argmax with min-label ties — exact integer state
-    "gr_lpa" -> ((s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      Graphs.labelPropagation(edges, rounds = 3)
-    }),
-
-    "gr_kcore" -> ((s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      Graphs.kcorePeel(edges, k = 25, rounds = 4)
-        .orderBy(col("node"))
-    }),
-
-    // personalized PageRank from the nation-0 customer seed set: uniform
-    // teleport over the seeds only (topic-sensitive PageRank, Haveliwala
-    // 2002) — proximity-to-community scores, positive ranks top-25
-    "gr_ppr" -> ((s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-        .select((col("c_custkey") * 2).as("node"))
-      PageRank.personalizedPageRank(edges, seeds, iters = 3, damping = 0.85)
-        .filter(col("rank") > 0)
-        .orderBy(col("rank").desc, col("node")).limit(25)
-    }),
-
-    // rolling 7-day active users (the WAU primitive): stored daily HLL
-    // sketches + ONE window-max register merge per day — sliding-window
-    // sketch algebra with fixed-size state; only full windows emit
-    "ev_wau" -> ((s, dir) => {
-      val fnv = udf((x: Long) => TextAnalysis.fnv1a64(x.toString))
-      Events.rollingDistinct(T(s, dir, "events").select(
-          expr("ts div 86400000000000").as("day"), fnv(col("user_id")).as("h")),
-          window = 7)
-        .orderBy(col("day"))
-    }),
-
-    // 3-step behavioral sequences: per-user event-type trigrams by event
-    // time (lead window over ONE user shuffle), top-25 — the order-3
-    // extension of ev_markov's transition matrix
-    "ev_trigrams" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      T(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        .withColumn("e2", lead(col("event_type"), 1).over(w))
-        .withColumn("e3", lead(col("event_type"), 2).over(w))
-        .filter(col("e3").isNotNull)
-        .groupBy(col("event_type").as("s1"), col("e2").as("s2"), col("e3").as("s3"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("s1"), col("s2"), col("s3"))
-        .limit(25)
-    }),
-
-    // trailing-window changepoints: hours breaking ±ratio bounds vs the
-    // mean of the previous 6 observed hours of the same type — the
-    // sequential/local sibling of ev_anomaly's global z-score
-    "ev_changepoint" -> ((s, dir) =>
-      Events.changepoints(T(s, dir, "events"), window = 6, up = 1.5, down = 0.5)
-        .orderBy(col("event_type"), col("hour_idx"))),
-
-    // Holt double exponential smoothing per event_type daily series —
-    // α=β=0.5 dyadic so the fold is bit-reproducible; the sequential
-    // recurrence runs as one codegen aggregate-HOF over the day-sorted
-    // count array (state bounded by |days|, never event volume)
-    "ev_forecast" -> ((s, dir) =>
-      Events.holtForecast(T(s, dir, "events"))),
-
-    // Holt-Winters triple exponential smoothing: level + trend + the
-    // 7-slot weekday seasonal state, one codegen aggregate-HOF fold whose
-    // expression tree the recursive-CTE oracle replays node for node
-    "ev_holt_winters" -> ((s, dir) =>
-      Events.holtWinters(T(s, dir, "events"))),
-
-    // AR(1) fit per event_type: OLS of y_t on y_{t-1} over consecutive-day
-    // pairs — every moment an exact long, the four outputs fixed trees over
-    // those integers; degenerate series excluded on both sides
-    "ev_arima" -> ((s, dir) =>
-      Events.arFit(T(s, dir, "events"))),
-
-    // log₂-binned events-per-user activity histogram — the whale-vs-lurker
-    // distribution readout (the user-graph sibling of gr_degree_hist);
-    // exact integer CASE-ladder bins, two tiny aggregates
-    "ev_user_hist" -> ((s, dir) => {
-      val perUser = T(s, dir, "events").groupBy("user_id")
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("value") * 100).cast("long")).as("cents"))
-      val bin = (0 until 20).foldRight(lit(20L)) { (k, els) =>
-        when(col("n") < (1L << (k + 1)), k.toLong).otherwise(els)
-      }
-      perUser.withColumn("bin", bin)
-        .groupBy("bin")
-        .agg(count(lit(1)).as("users"), sum("n").as("events"),
-          sum("cents").as("cents"),
-          min("n").as("min_n"), max("n").as("max_n"))
-        .orderBy("bin")
-    }),
-
-    // lead–lag cross-correlation screen between event-type daily series,
-    // lags 0..3 — exact integer moments per (a, b, lag), one fixed r tree
-    "ev_lag_corr" -> ((s, dir) =>
-      Events.lagCorrelation(T(s, dir, "events"))),
-
-    // CUPED variance-reduced A/B readout: pooled θ from exact integer
-    // moments, per-arm raw vs adjusted mean and variance
-    "ev_cuped" -> ((s, dir) =>
-      Events.cuped(T(s, dir, "events"))),
-
-    // event-study curve: per-day treated-minus-control gap re-centered
-    // by the pre-period baseline — the parallel-trends diagnostic
-    "ev_event_study" -> ((s, dir) =>
-      Events.eventStudy(T(s, dir, "events"))),
-
-    // offline bandit replay: daily-epoch greedy policy over cumulative
-    // arm means, credited with the logged pulls it would have made
-    "ev_bandit" -> ((s, dir) =>
-      Events.banditReplay(T(s, dir, "events"))),
-
-    // sample-ratio-mismatch guard: chi-square (1 df) on the arm split
-    "ev_srm" -> ((s, dir) =>
-      Events.srmCheck(T(s, dir, "events"))),
-
-    // pre-experiment power analysis: required per-arm n for a 5% MDE on
-    // per-user cents, exact moments + pinned z literals
-    "ev_power" -> ((s, dir) =>
-      Events.abPower(T(s, dir, "events"))),
-
-    // difference-in-differences on the same arm/mid-split: 2x2 cells +
-    // the parallel-trends estimate, exact cents moments end-to-end
-    "ev_did" -> ((s, dir) =>
-      Events.did(T(s, dir, "events"))),
-
-    // walk-forward one-step Holt backtest: MAE/worst error per series,
-    // error sum folded inside the same sequential HOF as the state
-    "ev_backtest" -> ((s, dir) =>
-      Events.holtBacktest(T(s, dir, "events"))),
-
-    // time-to-convert histogram: per user, days from first signup to first
-    // subsequent purchase (conversions only — censoring lives in
-    // ev_survival); exact day-diff buckets from two min() rollups
-    "ev_ttc" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-        .withColumn("day", expr("ts div 86400000000000"))
-      val su = ev.filter(col("event_type") === "signup")
-        .groupBy("user_id").agg(min("day").as("d_signup"))
-      val pu = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id").agg(min("day").as("d_purchase"))
-      su.join(pu, "user_id")
-        .filter(col("d_purchase") >= col("d_signup"))
-        .withColumn("days_to_convert", col("d_purchase") - col("d_signup"))
-        .groupBy("days_to_convert")
-        .agg(count(lit(1)).as("users"))
-        .orderBy("days_to_convert")
-    }),
-
-    // daily new-vs-returning split — the growth-accounting readout: a
-    // user's first-seen day marks them new for that day only; one user
-    // min-day rollup joined back on user (never a self-join of the log)
-    "ev_new_returning" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-        .withColumn("day", expr("ts div 86400000000000"))
-      val first = ev.groupBy("user_id").agg(min("day").as("d0"))
-      ev.join(first, "user_id")
-        .withColumn("is_new", (col("day") === col("d0")).cast("long"))
-        .groupBy("day")
-        .agg(countDistinct(when(col("is_new") === 1, col("user_id"))).as("new_users"),
-          countDistinct(when(col("is_new") === 0, col("user_id"))).as("ret_users"),
-          sum(col("is_new")).as("new_events"),
-          sum(lit(1L) - col("is_new")).as("ret_events"))
-        .orderBy("day")
-    }),
-
-    // Pareto concentration deciles: exact per-decile event/cent sums and
-    // shares — the distributional readout beside the single-number Gini
-    "ev_pareto" -> ((s, dir) =>
-      Events.paretoDeciles(T(s, dir, "events"))),
-
-    // two-sided CUSUM control chart per event_type: exact-moment μ/σ
-    // constants, the max(0, ·) recurrence as one aggregate-HOF fold,
-    // replayed step-for-step by the oracle's recursive CTE
-    "ev_cusum" -> ((s, dir) =>
-      Events.cusum(T(s, dir, "events"))),
-
-    // STL-lite weekday decomposition: centered 7-row MA trend, per-weekday
-    // seasonal index + residual variance from EXACT ×7-scaled integer
-    // moments — only the closing divisions are float
-    "ev_seasonal" -> ((s, dir) =>
-      Events.seasonalDecompose(T(s, dir, "events"))),
-
-    // Kaplan-Meier churn survival: lifetime = first→last event days,
-    // 7-day right-censor window at the corpus end; Ŝ(t) as an ordered
-    // ln/exp running fold both engines execute in the identical order
-    "ev_survival" -> ((s, dir) =>
-      Events.kaplanMeier(T(s, dir, "events"), censorDays = 7)),
-
-    // HITS hubs/authorities on the DIRECTED trade graph (customer→supplier):
-    // 2 exact-integer power-iteration rounds, top-20 per side with a final
-    // display-only max ratio — big buyers = hubs, widely-bought-from
-    // suppliers = authorities
-    "gr_hits" -> ((s, dir) => {
-      val e = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      Graphs.hits(e, iters = 2, k = 20)
-        .orderBy(col("side"), col("score_raw").desc, col("node"))
-    }),
-
-    // Katz centrality over the UNDIRECTED trade graph (both directions of
-    // the cust-supp edge list): exact integer truncated walk sums with
-    // beta=1/4 scaled by 4^3 — the walk-count centrality beside PageRank
-    // (random-walk) and HITS (mutual reinforcement)
-    "gr_katz" -> ((s, dir) => {
-      val pairs = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val e = pairs.unionByName(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
-      Graphs.katz(e, iters = 3, k = 25)
-        .orderBy(col("score_raw").desc, col("node"))
-    }),
-
-    // degree assortativity of the trade graph: Pearson correlation of
-    // endpoint degrees over the symmetric edge list, computed from six
-    // EXACT integer moments (one aggregate) with the closed-form correlation
-    // as the only float math — the classic "do hubs link to hubs" network
-    // statistic (strongly negative on a bipartite hub-spoke graph)
-    "gr_assortativity" -> ((s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-        .persist()
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      val ed = edges
-        .join(deg.select(col("src"), col("deg").as("dx")), "src")
-        .join(deg.select(col("src").as("dst"), col("deg").as("dy")), "dst")
-      val m = ed.agg(count(lit(1)).as("n"),
-        sum(col("dx")).as("sx"), sum(col("dy")).as("sy"),
-        sum(col("dx") * col("dx")).as("sxx"),
-        sum(col("dy") * col("dy")).as("syy"),
-        sum(col("dx") * col("dy")).as("sxy"))
-      def d(c: String) = col(c).cast("double")
-      m.select(col("n"),
-        round((d("n") * d("sxy") - d("sx") * d("sy"))
-          / (sqrt(d("n") * d("sxx") - d("sx") * d("sx"))
-            * sqrt(d("n") * d("syy") - d("sy") * d("sy"))), 6).as("assortativity"))
-    }),
-
-    // multi-source BFS over the same trade graph: min hop from any nation-0
-    // customer, 3 frontier rounds (customer→supplier→customer→supplier on
-    // the bipartite graph) — Graphs.bfs, the Pregel-shaped frontier plan
-    // rich-club coefficient (Zhou & Mondragón 2004): do the top-50 highest-
-    // degree nodes preferentially connect to EACH OTHER? φ = edges inside
-    // the club / C(k,2) — exact integers (degree ties broken by node id);
-    // the club is a 50-row broadcast, the edge probe two semi-joins
-    "gr_rich_club" -> ((s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      val club = deg
-        .orderBy(col("deg").desc, col("node")).limit(50)
-        .select(col("node"))
-      val inClub = eraw
-        .join(broadcast(club.select(col("node").as("src"))), Seq("src"), "left_semi")
-        .join(broadcast(club.select(col("node").as("dst"))), Seq("dst"), "left_semi")
-      inClub.agg(count(lit(1)).as("club_edges"))
-        .select(lit(50L).as("k"), col("club_edges"),
-          round(col("club_edges").cast("double") /
-            lit((50L * 49L / 2).toDouble), 6).as("phi"))
-    }),
-
-    // log₂-binned degree distribution over the bipartite order graph — the
-    // power-law sanity check (straight line on log-log ⇒ scale-free) every
-    // graph pipeline runs before trusting sampled algorithms; bins via an
-    // exact integer CASE ladder (no float log at bin edges), one degree
-    // aggregate + one tiny bin aggregate
-    "gr_degree_hist" -> ((s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      val bin = (0 until 20).foldRight(lit(20L)) { (k, els) =>
-        when(col("deg") < (1L << (k + 1)), k.toLong).otherwise(els)
-      }
-      deg.withColumn("bin", bin)
-        .groupBy("bin")
-        .agg(count(lit(1)).as("nodes"), sum("deg").as("deg_sum"),
-          min("deg").as("min_deg"), max("deg").as("max_deg"))
-        .orderBy("bin")
-    }),
-
-    // deterministic hash-guided walks over the bipartite order graph — the
-    // DeepWalk corpus-prep step with a hash argmin standing in for the RNG
-    // draw, so the walk corpus is bit-reproducible across engines and runs
-    "gr_walks" -> ((s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-        .select((col("c_custkey") * 2).as("node"))
-      Graphs.hashWalks(edges, seeds, steps = 4)
-    }),
-
-    "gr_bfs" -> ((s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-        .select((col("c_custkey") * 2).as("node"))
-      Graphs.bfs(edges, seeds, maxHop = 3)
-        .select(col("node"), col("hop").cast("long").as("hop"))
-        .orderBy(col("node"))
-    }),
-
-    // harmonic closeness centrality from a landmark batch: per-source
-    // bounded BFS (Graphs.bfsPerSource — one (root,node,hop) row per settled
-    // pair), then harmonic = Σ 1/hop computed from the EXACT integer
-    // per-hop counts, so the only float ops are two divisions and two adds
-    // replayed identically by the oracle
-    "gr_closeness" -> ((s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_custkey") % 500 === 1)
-        .select((col("c_custkey") * 2).as("node"))
-      def nh(h: Int) = sum(when(col("hop") === h, 1L).otherwise(0L)).as(s"n$h")
-      Graphs.bfsPerSource(edges, seeds, maxHop = 3)
-        .filter(col("hop") > 0)
-        .groupBy("root").agg(nh(1), nh(2), nh(3))
-        .select(col("root"), col("n1"), col("n2"), col("n3"),
-          round(col("n1") + col("n2") / lit(2.0) + col("n3") / lit(3.0), 6)
-            .as("harmonic"))
-        .orderBy(col("root"))
-    }),
-
-    // bounded-horizon effective diameter (the HyperANF d90 readout) from
-    // the same landmark batch: per-hop settled-pair counts are exact
-    // integers, d90 interpolates inside the first hop whose cumulative
-    // count crosses 0.9·total — the 3-row window after the BFS is the
-    // only non-distributed step
-    "gr_effdiam" -> ((s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_custkey") % 500 === 1)
-        .select((col("c_custkey") * 2).as("node"))
-      val W = org.apache.spark.sql.expressions.Window
-      val hist = Graphs.bfsPerSource(edges, seeds, maxHop = 3)
-        .filter(col("hop") > 0)
-        .groupBy("hop").agg(count(lit(1)).as("nh"))
-      hist
-        .withColumn("cum", sum("nh").over(
-          W.orderBy("hop").rowsBetween(W.unboundedPreceding, W.currentRow)))
-        .withColumn("total", sum("nh").over(
-          W.orderBy("hop").rowsBetween(W.unboundedPreceding, W.unboundedFollowing)))
-        .withColumn("target", lit(0.9) * col("total"))
-        .filter(col("cum") >= col("target"))
-        .orderBy("hop").limit(1)
-        .select(col("total").as("n_pairs"), col("hop").cast("long").as("h90"),
-          round(col("hop") - lit(1.0)
-            + (col("target") - (col("cum") - col("nh"))) / col("nh"), 6).as("d90"))
-    }),
-
-    // bounded-depth Brandes betweenness from the same landmark batch:
-    // forward BFS accumulates EXACT integer shortest-path counts σ per
-    // (root, node), the backward pass walks the BFS DAG with
-    // δ(v) = Σ σv/σw·(1+δw) — nothing broadcast, state ≤ |seeds|·|V| rows
-    "gr_betweenness" -> ((s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_custkey") % 500 === 1)
-        .select((col("c_custkey") * 2).as("node"))
-      Graphs.brandesBetweenness(edges, seeds, maxHop = 3, k = 30)
-    }),
-
-    // partition quality: Newman modularity of the NATION partition over the
-    // trade graph, per community — Q_c = e_c/m − (d_c/2m)², every input an
-    // exact integer count so the two divisions and one square are the only
-    // float ops (bit-identical in the replay). Two node-keyed joins + two
-    // count aggregates — the evaluation half of any community-detection
-    // loop, as a standalone oracle-gated operator
-    "gr_modularity" -> ((s, dir) => {
-      val e = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val com = T(s, dir, "customer")
-        .select((col("c_custkey") * 2).as("node"), col("c_nationkey").cast("long").as("com"))
-        .unionByName(T(s, dir, "supplier")
-          .select((col("s_suppkey") * 2 + 1).as("node"), col("s_nationkey").cast("long").as("com")))
-      val ed = e
-        .join(com.select(col("node").as("src"), col("com").as("sc")), "src")
-        .join(com.select(col("node").as("dst"), col("com").as("dc")), "dst")
-        .persist()
-      val mrow = ed.agg(count(lit(1)).cast("double").as("m2"))
-      val deg = ed.select(col("sc").as("com")).unionAll(ed.select(col("dc").as("com")))
-        .groupBy("com").agg(count(lit(1)).as("d_sum"))
-      val intra = ed.filter(col("sc") === col("dc"))
-        .groupBy(col("sc").as("com")).agg(count(lit(1)).as("e_in"))
-      deg.join(intra, Seq("com"), "left")
-        .select(col("com"), col("d_sum"), coalesce(col("e_in"), lit(0L)).as("e_in"))
-        .crossJoin(mrow)
-        .select(col("com"), col("d_sum"), col("e_in"),
-          round(col("e_in").cast("double") / col("m2")
-            - (col("d_sum").cast("double") / (lit(2.0) * col("m2")))
-              * (col("d_sum").cast("double") / (lit(2.0) * col("m2"))), 6).as("q_c"))
-        .orderBy(col("com"))
-    }),
-
-    // weighted sibling: bounded Bellman-Ford over the trade graph, edge
-    // weight = min quantity ever shipped on the (customer, supplier) pair
-    // (integral doubles → exact long arithmetic round for round)
-    "gr_sssp" -> ((s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .agg(min(col("l_quantity")).cast("long").as("w"))
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      val seeds = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-        .select((col("c_custkey") * 2).as("node"))
-      Graphs.sssp(edges, seeds, rounds = 3)
-        .orderBy(col("node"))
-    }),
-
-    // Borůvka minimum spanning forest over the customer↔supplier trade
-    // graph: min-quantity edge weights made DISTINCT by the composite
-    // (w, a, b) key, so the forest is unique and the fixed rounds×jumps
-    // hook/pointer-double schedule replays verbatim in the oracle
-    "gr_mst" -> ((s, dir) => {
-      val edges = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"),
-          col("l_quantity").cast("long").as("w"))
-      Graphs.boruvkaMsf(edges)
-    }),
-
-    // ordered funnel view → click → purchase within 48 h of the first
-    // view — chained running-min windows, one shuffle (Events.funnel)
-    "ev_funnel" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
-        expr("ts div 1000").as("tsn"), col("event_type"))
-      Events.funnel(ev, Seq("view", "click", "purchase"), 48L * 3600L * 1000000L)
-        .orderBy(col("stage"))
-    }),
-
-    // cohort retention: first-active-day cohorts × day offset — the
-    // user-growth matrix every analytics stack reports (Events.retention)
-    "ev_retention" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = T(s, dir, "events").select(col("user_id"),
-        expr("ts div 1000").as("tsn"))
-      Events.retention(ev).orderBy(col("cohort_day"), col("day_offset"))
-    }),
-
-    // Count-Min frequency sketch vs exact counts: per-user event counts
-    // estimated from a fixed 4×512 counter grid (est ≥ exact always; the
-    // sketch build is map-side combinable — the 100 TB frequency story)
-    "ev_cms" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = T(s, dir, "events")
-      val sk = CountMin.sketch(ev, "user_id")
-      val exact = ev.groupBy("user_id").agg(count(lit(1)).as("n_exact"))
-      CountMin.estimate(exact.select("user_id"), "user_id", sk)
-        .join(exact, "user_id")
-        .select(col("user_id"), col("n_exact"), col("cms_est"))
-        .orderBy(col("n_exact").desc, col("user_id")).limit(20)
-    }),
-
-    // triangle counts over the part co-order graph (parts appearing in the
-    // same order) via degree-ordered orientation — see pipeline/Graphs
-    "gr_triangles" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-      Graphs.triangleCounts(edges)
-        .orderBy(col("n_tri").desc, col("node")).limit(25)
-    }),
-
-    // DOULION edge-sampled triangle estimate (round-6 verdict task 8): the
-    // PRODUCTION sibling of gr_triangles at scale — hash-coin keeps ~p of
-    // the edges, exact count on the sample, 1/p³ unbiased scale-up. The
-    // replayable coin makes the sampled subgraph (and thus the estimate)
-    // oracle-checkable; wedge work drops ∝ p² vs the exact count
-    "gr_triangles_approx" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-      Graphs.triangleCountApprox(edges, p = 0.2)
-    }),
-
-    // k-truss of the co-order graph restricted to every-4th part (keeps the
-    // per-round triangle re-enumeration oracle-sized): peel edges on < k−2
-    // triangles to the fixpoint subgraph — the edge-wise k-core
-    // strengthening; surviving edges reported with their final support
-    "gr_ktruss" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-      Graphs.trussPeel(edges, k = 5, rounds = 7)
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // local clustering coefficients over the same co-order graph: exact
-    // triangles + degrees, one IEEE division of exact ints per node
-    "gr_clustering" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-      Graphs.clusteringCoefficients(edges)
-        .orderBy(col("coeff").desc, col("node")).limit(25)
-    }),
-
-    // --------------------------------------------------- spatial searches
-    // spatial.bbox quirk: WITHIN semantics (SpatialProcedures.java:822-836)
-    "sp_bbox_within" -> ((s, dir) =>
-      pointsLayer(s, dir).bboxSearch(0.25, -10.25, 30.25, 40.25)
-        .df.select(col("ck").as("id"), col("x"), col("y")).orderBy(col("id"))),
-
-    // window INTERSECTS semantics incl. boundary lattice points
-    "sp_bbox_intersects" -> ((s, dir) =>
-      pointsLayer(s, dir).intersectsWindow(0.5, -10.5, 30.5, 40.5)
-        .df.select(col("ck").as("id"), col("x"), col("y")).orderBy(col("id"))),
-
-    // the space-filling-curve READ paths under the oracle: window → __sfc
-    // range/prefix predicates over a curve-clustered stored layer (the
-    // driver's analog of the reference's curve-index range scan,
-    // LayerSpaceFillingCurvePointIndex.java:110-124 and geohash prefix
-    // search, LayerGeohashPointIndex.java:86-107); results must equal the
-    // plain window filter the oracle replays — one query per layout
-    "sp_window_curve" -> ((s, dir) =>
-      curveWindowQuery(s, dir, "hilbert", 0.5, -10.5, 30.5, 40.5)),
-
-    // incremental bucketed layer: write the even-custkey half, PARTIAL-upsert
-    // a 5% slice (only the touched curve-bucket directories are rewritten —
-    // the distributed analog of the reference's incremental R-tree insert
-    // policy, RTreeIndex.java:242-268), then window-read through the
-    // curve-range + bucket-partition pruned path; results must equal the
-    // plain filter over the union (the oracle)
-    "sp_layer_upsert" -> ((s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-upsert-layer")
-      d.toFile.deleteOnExit()
-      val p = d.resolve("pts").toString
-      val pts = pointsDf(s, dir)
-      graft.plans.SpatialLayout.writeClusteredBuckets(
-        pts.filter(col("ck") % 2 === 0), p)
-      val mode = graft.plans.SpatialLayout.upsertClusteredBuckets(
-        pts.filter(col("ck") % 20 === 1), p)
-      require(mode == "partial", s"expected a partial upsert, got $mode")
-      // open through the layout sidecar: indexType + bucketShift come from
-      // what the writer recorded, never a caller guess
-      GeoFrame.openClustered(s, p, "upsert_pts", GeomCodec.GTYPE_POINT)
-        .windowViaCurve(0.5, -10.5, 30.5, 40.5)
-        .df.select(col("ck").as("id"), col("x"), col("y")).orderBy(col("id"))
-    }),
-
-    // distributed connected components (hash-to-min + pointer jumping,
-    // smallEdgeLimit=0 forces the SCALE path — the driver union-find
-    // shortcut is oracle-covered via dd_neardup_groups) over path graphs
-    // whose component structure is known by construction: consecutive
-    // customers within a (nation, acctbal-band) group are chained, so the
-    // true label is min(custkey) per group while the engine must DISCOVER
-    // it by propagation
-    "gr_cc" -> ((s, dir) => {
-      val grouped = T(s, dir, "customer").select(
-        col("c_custkey").cast("long").as("v"),
-        col("c_nationkey"), floor(col("c_acctbal") / 1000).as("band"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("c_nationkey", "band").orderBy("v")
-      val edges = grouped.withColumn("prev", lag(col("v"), 1).over(w))
-        .filter(col("prev").isNotNull)
-        .select(col("prev").as("src"), col("v").as("dst"))
-      Groups.ccLabels(grouped.select(col("v").as("id")), edges,
-          smallEdgeLimit = 0L)
-        .orderBy(col("id"))
-    }),
-
-    // DIRECTED strongly connected components (the directed sibling of
-    // gr_cc): min-ancestor coloring + in-color backward containment over
-    // the nation-level trade digraph (supplier nation → customer nation,
-    // deterministically sparsified so the condensation has real structure);
-    // the oracle replays mutual reachability from the recursive transitive
-    // closure — feasible because the GATE graph is nation-sized while the
-    // Spark plan is the frontier-parallel peeling that runs at any |V|
-    "gr_scc" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val sup = T(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      val ord = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val cust = T(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-      val edges = li.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .filter(col("s_nationkey") =!= col("c_nationkey"))
-        .select(col("s_nationkey").cast("long").as("src"),
-          col("c_nationkey").cast("long").as("dst")).distinct()
-        .filter((col("src") * 31 + col("dst") * 17) % 3 === 0)
-      val verts = T(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("id"))
-      Graphs.sccLabels(verts, edges)
-        .groupBy(col("scc"))
-        .agg(count(lit(1)).as("n_nodes"),
-          min(col("id")).as("min_id"), max(col("id")).as("max_id"))
-        .orderBy(col("scc"))
-    }),
-    "sp_window_zorder" -> ((s, dir) =>
-      curveWindowQuery(s, dir, "zorder", -60.5, -30.5, -10.5, 20.5)),
-    "sp_window_geohash" -> ((s, dir) =>
-      curveWindowQuery(s, dir, "geohash", 100.5, 10.5, 150.5, 60.5)),
-
-    // catalog/procedure surface under the oracle: per-layer feature count +
-    // bounding box after create (XY + preset + WKT), addWKTs append, and a
-    // removeLayer (the 3-row listing asserts the dropped layer is gone) —
-    // reference: SpatialProcedures.java:303,509,537,767,589,598,625
-    "sp_catalog_stats" -> ((s, dir) => {
-      val procs = catalogProcs(s, dir)
-      val parts = procs.catalog.listLayers().map { name =>
-        // count + extent in ONE aggregate per layer (getFeatureCount +
-        // getLayerBoundingBox would run two jobs over the same scan)
-        procs.layer(name).df.agg(
-            count(lit(1)).as("n"),
-            min(col("bbox")("minx")).as("minx"), min(col("bbox")("miny")).as("miny"),
-            max(col("bbox")("maxx")).as("maxx"), max(col("bbox")("maxy")).as("maxy"))
-          .withColumn("layer", lit(name))
-      }
-      parts.reduce(_ unionByName _)
-        .select(col("layer"), col("n"), col("minx"), col("miny"), col("maxx"), col("maxy"))
-        .orderBy(col("layer"))
-    }),
-
-    // coordinate POLYMORPHISM under the oracle (was unit-only): the same
-    // customer points added through all three reference shapes — lon/lat
-    // pair, WKT literal, geometry column (SpatialApiBase.java:63-140) —
-    // must produce byte-equivalent layers: identical counts, exact
-    // coordinate sums, identical extents
-    "sp_add_polymorph" -> ((s, dir) => {
-      val wh = java.nio.file.Files.createTempDirectory("graft-wh-poly")
-      wh.toFile.deleteOnExit()
-      val procs = new graft.engine.SpatialProcedures(s, wh.toString)
-      val src = pointsDf(s, dir).select(col("ck"), col("x"), col("y"))
-      procs.addPointLayerXY("pm_xy", src, "ck", "x", "y")
-      procs.addWKTLayer("pm_wkt", src.withColumn("wkt",
-        concat(lit("POINT ("), col("x"), lit(" "), col("y"), lit(")"))),
-        "ck", "wkt")
-      procs.addPointLayerGeom("pm_geom",
-        src.withColumn("g", st.makePoint(col("x"), col("y"))), "ck", "g")
-      Seq("pm_geom", "pm_wkt", "pm_xy").map { name =>
-        procs.layer(name).df.agg(
-            count(lit(1)).as("n"),
-            sum(round(st.x(col("geometry")) * 2).cast("long")).as("sx2"),
-            sum(round(st.y(col("geometry")) * 2).cast("long")).as("sy2"),
-            min(col("bbox")("minx")).as("minx"), min(col("bbox")("miny")).as("miny"),
-            max(col("bbox")("maxx")).as("maxx"), max(col("bbox")("maxy")).as("maxy"))
-          .withColumn("layer", lit(name))
-      }.reduce(_ unionByName _)
-        .select(col("layer"), col("n"), col("sx2"), col("sy2"),
-          col("minx"), col("miny"), col("maxx"), col("maxy"))
-        .orderBy(col("layer"))
-    }),
-
-    // setFeatureAttributes / getFeatureAttributes under the oracle (was
-    // unit-only): discovery lists the non-core columns; the whitelist
-    // persists through the catalog meta (reference: SpatialProcedures
-    // setFeatureAttributes :568, getFeatureAttributes :578)
-    "sp_feature_attrs" -> ((s, dir) => {
-      import s.implicits._
-      val wh = java.nio.file.Files.createTempDirectory("graft-wh-attrs")
-      wh.toFile.deleteOnExit()
-      val procs = new graft.engine.SpatialProcedures(s, wh.toString)
-      procs.addPointLayerXY("attrs_demo",
-        pointsDf(s, dir).select(col("ck"), col("x"), col("y"),
-          col("c_acctbal"), col("c_nationkey")),
-        "ck", "x", "y")
-      val discovered = procs.getFeatureAttributes("attrs_demo").sorted.mkString(",")
-      val restricted = procs.setFeatureAttributes("attrs_demo",
-        Seq("c_acctbal")).sorted.mkString(",")
-      // re-open THROUGH the catalog: the whitelist must have persisted
-      val persisted = procs.catalog.getLayer("attrs_demo")
-        .meta.map(_.attributes.sorted.mkString(",")).getOrElse("")
-      Seq(("discovered", discovered), ("persisted", persisted),
-        ("restricted", restricted)).toDF("phase", "attrs").orderBy("phase")
-    }),
-
-    // OSM → shapefile export helper under the oracle (was unit-only; the
-    // cli-tools OSMLayerToShapefileExporter surface): tag-filtered ways
-    // export to .shp/.dbf/.shx, re-import through the reader, and the
-    // roundtripped per-way vertex counts must replay from the fixture
-    // congruence (one way per nation, n_pts = customers in the nation)
-    "osm_shp_export" -> ((s, dir) => {
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
-      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
-      rows.foreach { r =>
-        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}' version='1'/>\n"
-      }
-      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
-        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
-        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
-        sb ++= "    <tag k='highway' v='residential'/>\n"
-        sb ++= "  </way>\n"
-      }
-      sb ++= "</osm>\n"
-      val tmp = java.nio.file.Files.createTempFile("graft-osm-exp", ".osm")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.writeString(tmp, sb.toString)
-      val d = java.nio.file.Files.createTempDirectory("graft-shpexp")
-      d.toFile.deleteOnExit()
-      val out = d.resolve("roads").toString
-      val wh = java.nio.file.Files.createTempDirectory("graft-wh-exp")
-      wh.toFile.deleteOnExit()
-      val procs = new graft.engine.SpatialProcedures(s, wh.toString)
-      procs.exportOsmToShapefile(tmp.toString, "highway", "residential", out)
-      graft.sources.Shapefile.importShapefile(s, out + ".shp").df
-        .agg(count(lit(1)).as("n_ways"),
-          sum(st.numPoints(col("geometry")).cast("long")).as("sum_pts"),
-          min(st.numPoints(col("geometry")).cast("long")).as("min_pts"),
-          max(st.numPoints(col("geometry")).cast("long")).as("max_pts"))
-    }),
-
-    // SearchEqualEnvelopes under the oracle: rows whose envelope EQUALS the
-    // query point's degenerate envelope — exact double equality on the bbox
-    // struct, no JTS (reference: rtree/filter/SearchEqualEnvelopes.java:28-38).
-    // Lattice coords collide iff ck ≡ 42 (mod 360), so the result is the
-    // deterministic stride {42, 402, 762, ...}
-    "sp_equal_env" -> ((s, dir) => {
-      val qx = (42 % 360) - 180 + 0.5
-      val qy = ((42 * 7) % 180) - 90 + 0.5
-      pointsLayer(s, dir)
-        .equalEnvelopes(GeomCodec.factory.createPoint(
-          new org.locationtech.jts.geom.Coordinate(qx, qy)))
-        .df.select(col("ck").as("id"), col("x"), col("y")).orderBy(col("id"))
-    }),
-
-    // z coordinates through the WKB codec under the oracle: st_pointz packs
-    // (x, y, z), st_z unpacks the identical double (reference carries z via
-    // the point encoder's zMask, Neo4jPointEncoder)
-    "sp_pointz" -> ((s, dir) => {
-      graft.functions.SpatialFunctions.register(s)
-      pointsDf(s, dir)
-        .selectExpr("ck AS id", "st_z(st_pointz(x, y, c_acctbal)) AS z",
-          "st_x(st_pointz(x, y, c_acctbal)) AS px")
-        .orderBy(col("id"))
-    }),
-
-    // spatial.layerTypes listing (the preset table IS the contract —
-    // reference: SpatialLayerTypePresets.java:39-73)
-    "sp_layer_types" -> ((s, dir) =>
-      catalogProcs(s, dir).layerTypesDf().orderBy(col("name"))),
-
-    // the full edit sequence (addWKTLayer → addWKTs → updateWKT →
-    // removeNodes) under the oracle: the final layer state replays the edit
-    // history in SQL — reference: SpatialProcedures.java:747 (updateWKT
-    // copy-on-write), :690-718 (removeNodes anti-join delete)
-    "sp_layer_edits" -> ((s, dir) =>
-      editsProcs(s, dir).layer("edits").df
-        .select(col("id").cast("int").as("id"),
-          col("bbox")("minx").as("minx"), col("bbox")("miny").as("miny"),
-          col("bbox")("maxx").as("maxx"), col("bbox")("maxy").as("maxy"))
-        .orderBy(col("id"))),
-
-    "sp_within_distance" -> ((s, dir) =>
-      pointsLayer(s, dir).withinDistanceKm(10.5, 20.5, 1500.0)
-        .df.select(col("ck").as("id"), round(col("distance"), 3).as("dist_km"))
-        .orderBy(col("dist_km"), col("id"))),
-
-    // window-pruned EXACT k-NN (GeoFrame.knnCandidates proves the pruned
-    // scan contains the full-scan top-k incl. round-ties) — the oracle stays
-    // a full scan; results are provably identical
-    "sp_knn" -> ((s, dir) =>
-      pointsLayer(s, dir).knnCandidates(-100.5, 30.5, 25, initialSide = 60.0)
-        .df.withColumn("dist_km", round(col("distance"), 3))
-        .select(col("ck").as("id"), col("dist_km"))
-        .orderBy(col("dist_km"), col("id"))
-        .limit(25)),
-
-    // distributed EXACT kNN join (grid + ring expansion): every nation-0
-    // customer's 5 nearest other customers by planar distance. Lattice
-    // spacing 1 makes every d2 integer-valued — exact in any engine; the
-    // oracle is the all-pairs formulation (valid because knnJoin is exact).
-    // cellSize 8 ≈ sqrt(2k·area/n) at sf0.01 — a 3×3 block holds ≳ 2k pts
-    // Clark–Evans nearest-neighbor index per nation (Clark & Evans 1954):
-    // R = observed mean NN distance / expected 0.5/√(global density) —
-    // R < 1 clustered, ≈ 1 Poisson, > 1 dispersed; completes the
-    // point-pattern family beside Ripley's K (global) and Gi* (local).
-    // NN distances come from the exact ring-expansion knn join (k=1, no
-    // cross join); per-nation means fold in ordered windows so the sqrt
-    // sums are bit-reproducible; density is the global-lattice convention
-    // (documented — per-nation area would need a boundary model)
-    "sp_clark_evans" -> ((s, dir) => {
-      val base = pointsDf(s, dir)
-      val pts = base.select(col("ck").as("id"), col("x"), col("y"))
-      val nn = SpatialJoin.knnJoin(pts, pts, k = 1, cellSize = 8.0,
-          excludeSelf = true)
-        .select(col("qid"), sqrt(col("d2")).as("dist"))
-      val tot = base.agg(count(lit(1)).as("nt"))
-      val wo = org.apache.spark.sql.expressions.Window
-        .partitionBy("nk").orderBy("qid")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
-      val wAll = org.apache.spark.sql.expressions.Window.partitionBy("nk")
-      base.select(col("ck").as("qid"), col("c_nationkey").cast("long").as("nk"))
-        .join(nn, "qid").crossJoin(tot)
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("nk").orderBy("qid")))
-        .withColumn("np", count(lit(1)).over(wAll))
-        .withColumn("sd", sum("dist").over(wo))
-        .filter(col("rn") === col("np"))
-        .withColumn("mean_nn", col("sd") / col("np").cast("double"))
-        .select(col("nk"), col("np").cast("long").as("n_pts"),
-          round(col("mean_nn"), 6).as("mean_nn"),
-          round(col("mean_nn") * 2.0 *
-            sqrt(col("nt").cast("double") / 64800.0), 6).as("r_index"))
-        .orderBy("nk")
-    }),
-
-    "sp_knn_join" -> ((s, dir) => {
-      val base = pointsDf(s, dir)
-      val pts = base.select(col("ck").as("id"), col("x"), col("y"))
-      SpatialJoin.knnJoin(
-          base.filter(col("c_nationkey") === 0).select(col("ck").as("id"), col("x"), col("y")),
-          pts, k = 5, cellSize = 8.0, excludeSelf = true)
-        .orderBy(col("qid"), col("rk"))
-    }),
-
-    // directed Hausdorff distance between two point sets (nation 0 → 1):
-    // max over A of the nearest-B distance, composed on the exact grid kNN
-    // join with k=1 — per-point work stays ring-local, so the metric costs
-    // one knn join + one max instead of the |A|·|B| cross product the
-    // textbook definition (and the oracle) spells out
-    "sp_hausdorff" -> ((s, dir) => {
-      val base = pointsDf(s, dir)
-      val a = base.filter(col("c_nationkey") === 0)
-        .select(col("ck").as("id"), col("x"), col("y"))
-      val b = base.filter(col("c_nationkey") === 1)
-        .select(col("ck").as("id"), col("x"), col("y"))
-      SpatialJoin.knnJoin(a, b, k = 1, cellSize = 8.0, excludeSelf = false)
-        .agg(count(lit(1)).as("n_a"),
-          round(max(sqrt(col("d2"))), 6).as("hausdorff"))
-    }),
-
-    // k-NN classification composed on the distributed exact knn join:
-    // majority nation label of the 5 nearest neighbors per query point
-    // (tie-break: smallest label) — the label join is keyed on neighbor id,
-    // the vote a two-level aggregate + WindowGroupLimit top-1; nothing new
-    // crosses the wire beyond the knn output itself
-    "sp_knn_class" -> ((s, dir) => {
-      val base = pointsDf(s, dir)
-      val pts = base.select(col("ck").as("id"), col("x"), col("y"))
-      val knn = SpatialJoin.knnJoin(
-        base.filter(col("c_nationkey") === 0).select(col("ck").as("id"), col("x"), col("y")),
-        pts, k = 5, cellSize = 8.0, excludeSelf = true)
-      val labels = base.select(col("ck").as("pid"),
-        col("c_nationkey").cast("long").as("label"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("votes").desc, col("label"))
-      knn.join(labels, "pid")
-        .groupBy(col("qid"), col("label")).agg(count(lit(1)).as("votes"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("qid"), col("label").as("pred"), col("votes"))
-        .orderBy(col("qid"))
-    }),
-
-    // STR bulk-load packing (Leutenegger ICDE'97), the distributed analog of
-    // the reference's sorted bulk R-tree build (RTreeIndex.java:533-605):
-    // one row per leaf page (capacity 64) with its count + MBR. The oracle
-    // replays the same deterministic rank arithmetic with window functions;
-    // the Spark plan's global rank is range-sort + zipWithIndex, never a
-    // single-partition window (plans/SpatialLayout.strPack).
-    "sp_str_pack" -> ((s, dir) =>
-      graft.plans.SpatialLayout.strPack(
-        pointsDf(s, dir).select(col("ck").cast("string").as("id"), col("x"), col("y")),
-        capacity = 64)),
-
-    "sp_layer_bbox" -> ((s, dir) => pointsLayer(s, dir).boundingBox()),
-
-    // ------------------------------------------------- spatial aggregates
-    "sp_centroid_nation" -> ((s, dir) =>
-      pointsLayer(s, dir).df
-        .groupBy(col("c_nationkey"))
-        .agg(SpatialAggs.unionAgg(col("geometry")).as("g"))
-        .select(col("c_nationkey"),
-          st.x(st.centroid(col("g"))).as("cx"),
-          st.y(st.centroid(col("g"))).as("cy"))
-        .orderBy(col("c_nationkey"))),
-
-    "sp_envelope_area" -> ((s, dir) =>
-      pointsLayer(s, dir).df
-        .groupBy(col("c_nationkey"))
-        .agg(SpatialAggs.unionAgg(col("geometry")).as("g"))
-        .select(col("c_nationkey"), st.area(st.envelope(col("g"))).as("env_area"))
-        .orderBy(col("c_nationkey"))),
-
-    "sp_union_npoints" -> ((s, dir) =>
-      pointsLayer(s, dir).df
-        .groupBy(col("c_nationkey"))
-        .agg(SpatialAggs.unionAgg(col("geometry")).as("g"))
-        .select(col("c_nationkey"), st.numGeometries(col("g")).cast("long").as("n_pts"))
-        .orderBy(col("c_nationkey"))),
-
-    "sp_line_length" -> ((s, dir) =>
-      linesLayer(s, dir).df
-        .select(col("c_nationkey"), round(st.length(col("geometry")), 6).as("len"))
-        .orderBy(col("c_nationkey"))),
-
-    "sp_extract_points" -> ((s, dir) =>
-      linesLayer(s, dir).extractPoints
-        .df.groupBy(col("c_nationkey")).agg(count(lit(1)).as("n"))
-        .orderBy(col("c_nationkey"))),
-
-    // Min/Max keep-ties semantics (Min.java:30-72) — per-nation grouped verb
-    "sp_max_acctbal_ties" -> ((s, dir) =>
-      pointsLayer(s, dir).maxOfGrouped("c_acctbal", "c_nationkey")
-        .df.select(col("c_nationkey"), col("ck").as("id"), col("c_acctbal"))
-        .orderBy(col("c_nationkey"), col("id"))),
-
-    // ------------------------------------------------------- dedup / text
-    "dd_exact_groups" -> ((s, dir) =>
-      Dedup.exactGroups(T(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("text_hash"))),
-
-    "tx_tokens" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("n_split"),
-          TextAnalysis.tokenCountBpe(col("text")).cast("long").as("n_bpe"),
-          length(col("text")).cast("long").as("n_chars"))
-        .orderBy(col("doc_id"))),
-
-    // the full quality-scoring struct (length/tokens/punct/digit/upper/
-    // stopword features), every field oracle-checked
-    "tx_quality" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.textQuality(col("text")).as("q"))
-        .select(col("doc_id"),
-          col("q.n_chars").as("n_chars"),
-          col("q.n_tokens").as("n_tokens"),
-          round(col("q.mean_token_len"), 6).as("mean_token_len"),
-          round(col("q.punct_ratio"), 6).as("punct_ratio"),
-          round(col("q.digit_ratio"), 6).as("digit_ratio"),
-          round(col("q.upper_ratio"), 6).as("upper_ratio"),
-          round(col("q.stopword_ratio"), 6).as("stopword_ratio"))
-        .orderBy(col("doc_id"))),
-
-    // Unicode crawl-text cleanup as a two-engine differential: the corpus
-    // text is pure ASCII, so both sides first inject deterministic noise
-    // (decomposed e+U+0301 / zero-width space by doc_id%3, trailing
-    // double-space + TAB/CR/LF + decomposed o+U+0308), then NFC-compose,
-    // strip controls+ZWSP, collapse spaces, trim — java.text.Normalizer vs
-    // DuckDB nfc_normalize (utf8proc) must agree byte-for-byte (md5 of the
-    // cleaned UTF-8)
-    // encoding-damage repair (the ftfy web-scrape cleaning step): docs with
-    // doc_id ≡ 2 (mod 5) are PLANTED with UTF-8-read-as-CP1252 mojibake
-    // (" the " → " thÃ© ", " row " → " rowâ€™s "), docs ≡ 4 (mod 5) get the
-    // CLEAN accented forms (the repair must not touch them — they emit no
-    // row), everything else passes through. The operator counts + repairs
-    // via chained codegen'd replace expressions (Corpus.MojibakeMap); the
-    // oracle replays planting, counting, and repair with chr()-built
-    // literals and md5-matches the repaired text
-    // Flesch reading-ease profile of the corpus: per-document sentence /
-    // word / syllable counts → FRE = 206.835 − 1.015·(w/s) − 84.6·(syl/w)
-    // (Flesch 1948), histogrammed by (lang, 10-point bucket). Syllables
-    // use the vowel-group heuristic counted once over the whole document
-    // (maximal [aeiouy]+ runs never cross a word boundary, so the doc-level
-    // count equals the per-word sum — THREE text-level regex passes total,
-    // no per-word lambda). Counts are exact integers; the ONLY doubles are
-    // the per-doc FRE (identical formula text in both engines) surfaced as
-    // min/max per bucket — order-free, so FP summation order never enters
-    "tx_readability" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .withColumn("ns",
-          expr("CAST(greatest(size(regexp_extract_all(text, '[.!?]+', 0)), 1) AS BIGINT)"))
-        .withColumn("nw",
-          expr("CAST(greatest(size(regexp_extract_all(lower(text), '[a-z]+', 0)), 1) AS BIGINT)"))
-        .withColumn("nsyl",
-          expr("CAST(greatest(size(regexp_extract_all(lower(text), '[aeiouy]+', 0)), 1) AS BIGINT)"))
-        .withColumn("fre", expr(
-          "206.835 - 1.015 * (CAST(nw AS DOUBLE) / ns) - 84.6 * (CAST(nsyl AS DOUBLE) / nw)"))
-        .withColumn("bucket", expr("CAST(floor(fre / 10) AS BIGINT)"))
-        .groupBy("lang", "bucket").agg(
-          count(lit(1)).as("n_docs"), sum("nw").as("words"),
-          sum("ns").as("sents"), sum("nsyl").as("sylls"),
-          round(min("fre"), 4).as("fre_min"), round(max("fre"), 4).as("fre_max"))
-        .orderBy("lang", "bucket")),
-
-    // one-pass corpus "data card": the governance profile (counts,
-    // cardinalities, length distribution) a dataset release ships with —
-    // single aggregate, metrics unpivoted through an ordered map explode
-    "tx_datacard" -> ((s, dir) =>
-      T(s, dir, "documents").agg(
-          count(lit(1)).cast("double").as("n_docs"),
-          countDistinct(col("lang")).cast("double").as("n_langs"),
-          countDistinct(col("source")).cast("double").as("n_sources"),
-          sum(col("n_chars")).cast("double").as("total_chars"),
-          max(col("n_chars")).cast("double").as("max_chars"),
-          expr("percentile(n_chars, array(0.5D, 0.9D))").as("q"))
-        .select(explode(map(
-          lit("avg_chars"), round(col("total_chars") / col("n_docs"), 4),
-          lit("max_chars"), col("max_chars"),
-          lit("n_docs"), col("n_docs"),
-          lit("n_langs"), col("n_langs"),
-          lit("n_sources"), col("n_sources"),
-          lit("p50_chars"), round(col("q")(0), 4),
-          lit("p90_chars"), round(col("q")(1), 4),
-          lit("total_chars"), col("total_chars"))).as(Seq("metric", "value")))
-        .orderBy("metric")),
-
-    "tx_mojibake" -> ((s, dir) => {
-      val planted = when(col("doc_id") % 5 === 2,
-          replace(replace(col("text"), lit(" the "), lit(" th\u00C3\u00A9 ")),
-            lit(" row "), lit(" row\u00E2\u20AC\u2122s ")))
-        .when(col("doc_id") % 5 === 4,
-          replace(col("text"), lit(" the "), lit(" th\u00E9 ")))
-        .otherwise(col("text"))
-      graft.pipeline.Corpus.fixMojibake(
-          T(s, dir, "documents").select(col("doc_id"), planted.as("t")),
-          "doc_id", "t")
-        .orderBy(col("id"))
-    }),
-
-    // boilerplate-aware HTML text extraction (the first transform of a
-    // web-crawl pipeline): the page is constructed deterministically
-    // around each document (title/script/style/nav/footer chrome), then
-    // script+style blocks drop, tags strip, entities decode, whitespace
-    // collapses, and the link-density boilerplate signal is emitted —
-    // all codegen'd per-row string built-ins, shuffle-free
-    "tx_html_extract" -> ((s, dir) =>
-      graft.pipeline.Corpus.htmlExtract(T(s, dir, "documents"),
-        "doc_id", "text", "lang", "source")),
-
-    "tx_normalize" -> ((s, dir) => {
-      val noisy = concat(
-        when(col("doc_id") % 3 === 0, lit("e\u0301 "))
-          .when(col("doc_id") % 3 === 1, lit("\u200B"))
-          .otherwise(lit("")),
-        col("text"), lit("  \t\r\no\u0308"))
-      val clean = graft.pipeline.Corpus.normalizeText(col("noisy"))
-      T(s, dir, "documents")
-        .withColumn("noisy", noisy)
-        .select(col("doc_id"),
-          length(col("noisy")).cast("long").as("n_raw"),
-          length(clean).cast("long").as("n_clean"),
-          md5(to_binary(clean, lit("utf-8"))).as("h"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // vocabulary growth curve (the Heaps-law diagnostic): corpus split
-    // into 10 doc-id deciles, each word attributed to the decile of its
-    // FIRST occurrence (one min aggregate on the vocab key), cumulative
-    // vocabulary via a 10-row window — exact integers end to end
-    "tx_vocab_growth" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val per = maxId / 10 + 1
-      val firstSeen = docs
-        .select((col("doc_id") / per).cast("long").as("bucket"),
-          explode(split(lower(col("text")), "\\s+")).as("w"))
-        .filter(length(col("w")) > 0)
-        .groupBy("w").agg(min(col("bucket")).as("bucket"))
-      val W = org.apache.spark.sql.expressions.Window
-      val w = W.orderBy("bucket").rowsBetween(W.unboundedPreceding, 0)
-      firstSeen.groupBy("bucket").agg(count(lit(1)).as("new_words"))
-        .withColumn("cum_vocab", sum(col("new_words")).over(w))
-        .orderBy(col("bucket"))
-    }),
-
-    // corpus-level RAKE keyphrases (Rose et al. 2010): stopword/punct
-    // phrase breaks, deg/freq word scores, top-25 phrases
-    "tx_rake" -> ((s, dir) =>
-      TextAnalysis.rakeKeyphrases(T(s, dir, "documents"), "text", k = 25)),
-
-    // the published Gopher rule set (Rae et al. 2021 App. A1.1) as one
-    // tokenize-once column pipeline — word-count / mean-word-length /
-    // symbol-ratio / alpha-word-fraction / stopword-presence signals plus
-    // the combined pass flag, every field oracle-replayed
-    "tx_gopher" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.gopherRules(col("text")).as("g"))
-        .select(col("doc_id"),
-          col("g.n_words").as("n_words"),
-          round(col("g.mean_word_len"), 6).as("mean_word_len"),
-          round(col("g.symbol_ratio"), 6).as("symbol_ratio"),
-          round(col("g.alpha_frac"), 6).as("alpha_frac"),
-          col("g.stop_hits").as("stop_hits"),
-          col("g.pass").as("pass"))
-        .orderBy(col("doc_id"))),
-
-    // ------------------------------------------------------- similarity
-    "sim_cosine_topk" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 50)
-        .select(col("id"), round(col("cosine"), 6).as("cosine"))
-        .orderBy(col("cosine").desc, col("id"))
-    }),
-
-    // Matryoshka retrieval: 16-of-64-dim prefix shortlist (the scan reads
-    // a quarter of the vector bytes) + exact full-dim re-rank — the
-    // dimension-truncation sibling of IVF/PQ shortlisting
-    "sim_mrl_topk" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      Similarity.mrlTopK(emb, "vec_id", "embedding", q,
-          prefixDim = 16, shortlist = 200, k = 20)
-        .orderBy(col("cosine").desc, col("id"))
-    }),
-
-    // SQ8 scalar-quantization retrieval: 8-bit levels from per-dim corpus
-    // min/max, asymmetric-estimator shortlist, exact full-precision re-rank
-    "sim_sq8" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      Similarity.sq8TopK(emb, "vec_id", "embedding", q, shortlist = 200, k = 20)
-        .orderBy(col("cosine").desc, col("id"))
-    }),
-
-    // link prediction over the trade graph (nation-0 slice): common
-    // suppliers + neighborhood Jaccard per customer pair — integer counts
-    // and one division, replayed exactly
-    "gr_linkpred" -> ((s, dir) => {
-      val cust0 = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-        .select(col("c_custkey"))
-      val e = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(cust0, col("o_custkey") === col("c_custkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
-        .distinct().persist()
-      val deg = e.groupBy("c").agg(count(lit(1)).as("deg"))
-      val wedges = e.as("a").join(e.as("b"),
-          col("a.sup") === col("b.sup") && col("a.c") < col("b.c"))
-        .groupBy(col("a.c").as("c1"), col("b.c").as("c2"))
-        .agg(count(lit(1)).as("common"))
-      wedges
-        .join(deg.select(col("c").as("c1"), col("deg").as("d1")), "c1")
-        .join(deg.select(col("c").as("c2"), col("deg").as("d2")), "c2")
-        .select(col("c1"), col("c2"), col("common"),
-          round(col("common").cast("double")
-            / (col("d1") + col("d2") - col("common")).cast("double"), 6).as("jaccard"))
-        .orderBy(col("jaccard").desc, col("c1"), col("c2")).limit(25)
-    }),
-
-    // Adamic–Adar link prediction on the same bipartite projection: shared
-    // neighbors weighted by 1/ln(degree) — rare shared suppliers count
-    // more than hubs (Adamic & Adar 2003); ordering on the ROUNDED score
-    // so both engines agree at the top-k boundary
-    "gr_adamic" -> ((s, dir) => {
-      val cust0 = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-        .select(col("c_custkey"))
-      val e = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(cust0, col("o_custkey") === col("c_custkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
-        .distinct().persist()
-      val sdeg = e.groupBy("sup").agg(count(lit(1)).as("d"))
-        .withColumnRenamed("sup", "s2")
-      e.as("a").join(e.as("b"),
-          col("a.sup") === col("b.sup") && col("a.c") < col("b.c"))
-        .join(sdeg, col("a.sup") === col("s2"))
-        .groupBy(col("a.c").as("c1"), col("b.c").as("c2"))
-        .agg(count(lit(1)).as("common"),
-          sum(lit(1.0) / log(col("d"))).as("aa"))
-        .select(col("c1"), col("c2"), col("common"),
-          round(col("aa"), 6).as("adamic_adar"))
-        .orderBy(col("adamic_adar").desc, col("c1"), col("c2")).limit(25)
-    }),
-
-    // -------------------------------------------- distributed spatial join
-    // customer points vs per-nation supplier envelope polygons — the
-    // TestIntersectsPathQueries-style genuine spatial join (SURVEY §2.5),
-    // run through BOTH strategies against one oracle
-    "sp_join_broadcast" -> ((s, dir) => spatialJoinQuery(s, dir, useGrid = false)),
-    "sp_join_grid" -> ((s, dir) => spatialJoinQuery(s, dir, useGrid = true)),
-
-    // =================================================== no-oracle (rows-only)
-    // rectangle query geometry ⇒ intersects ⟺ closed-bounds window (oracle!)
-    "sp_intersects_poly" -> ((s, dir) =>
-      pointsLayer(s, dir)
-        .intersects(RectWkt)
-        .df.select(col("ck").as("id"), col("x"), col("y")).orderBy(col("id"))),
-
-    "sp_closest_edge" -> ((s, dir) =>
-      linesLayer(s, dir).closestEdges(10.5, 20.5, 50.0)
-        .df.select(col("c_nationkey"), round(col("snap_distance"), 6).as("snap_dist"))
-        .orderBy(col("snap_dist"), col("c_nationkey"))),
-
-    // Disc buffers on the lattice are pairwise DISJOINT (spacing 1 > 2r), so
-    // union area = n_distinct · one-disc area and n_parts = n_distinct; the
-    // oracle embeds JTS's exact 32-gon disc area as a literal. round(4)
-    // absorbs the ~1e-13 translation noise of buffering at each center.
-    "sp_buffer_union_area" -> ((s, dir) =>
-      pointsLayer(s, dir).df
-        .filter(col("c_nationkey") === 0)
-        .withColumn("geometry", st.buffer(col("geometry"), lit(0.45)))
-        .agg(SpatialAggs.unionAgg(col("geometry")).as("g"))
-        .select(round(st.area(col("g")), 4).as("area"),
-          st.numGeometries(col("g")).cast("long").as("n_parts"))),
-
-    "sp_convexhull" -> ((s, dir) =>
-      pointsLayer(s, dir).df
-        .groupBy(col("c_nationkey"))
-        .agg(SpatialAggs.unionAgg(col("geometry")).as("g"))
-        .select(col("c_nationkey"),
-          round(st.area(st.convexHull(col("g"))), 6).as("hull_area"),
-          st.numPoints(st.convexHull(col("g"))).cast("long").as("hull_pts"))
-        .orderBy(col("c_nationkey"))),
-
-    // versioned layer store under the oracle: commit v1 (even-keyed
-    // points), commit v2 (all points), then aggregate EVERY version through
-    // the manifest/time-travel reader — snapshot isolation for rebuilds on
-    // any filesystem (the manifest-commit upgrade of the rename swap)
-    "sp_layer_versions" -> ((s, dir) => {
-      import graft.plans.VersionedLayer
-      val d = java.nio.file.Files.createTempDirectory("graft-vlayer")
-      d.toFile.deleteOnExit()
-      val p = d.resolve("layer").toString
-      val pts = pointsDf(s, dir).select(col("ck"), col("x"), col("y"), col("c_acctbal"))
-      VersionedLayer.commit(pts.filter(col("ck") % 2 === 0), p)
-      VersionedLayer.commit(pts, p)
-      VersionedLayer.versions(s, p).map { v =>
-        VersionedLayer.read(s, p, Some(v))
-          .agg(count(lit(1)).as("n"),
-            sum(round(col("c_acctbal") * 100).cast("long")).as("cents"))
-          .select(lit(v.toLong).as("version"), col("n"), col("cents"))
-      }.reduce(_ unionByName _).orderBy(col("version"))
-    }),
-
-    // forward-geodesic projection (ST_Project): every customer point moved
-    // (ck%7+1)·250 km along bearing ck%360 on the R=6371 sphere — the
-    // inverse problem of sp_bearing + orthodromic distance, pure codegen
-    // trig replayed formula-for-formula
-    "sp_project" -> ((s, dir) =>
-      pointsDf(s, dir)
-        .select(col("ck"),
-          st.projectPoint(col("x"), col("y"),
-            (col("ck") % 360).cast("double"),
-            ((col("ck") % 7 + 1) * 250).cast("double")).as("p"))
-        .select(col("ck"), round(col("p.lon"), 6).as("lon2"),
-          round(col("p.lat"), 6).as("lat2"))
-        .orderBy(col("ck"))),
-
-    // hex polyfill: enumerate the axial cells whose CENTER falls inside
-    // each nation envelope (generator + filter, all integer cell ranges
-    // from closed-form ceil/floor bounds) — the tile-covering primitive a
-    // tessellated spatial join feeds its build side with
-    "sp_polyfill" -> ((s, dir) => {
-      val size = 5.0
-      val rowH = 1.5 * size            // center spacing in y
-      val colW = size * math.sqrt(3.0) // center spacing in x
-      val env = pointsDf(s, dir).groupBy("c_nationkey")
-        .agg(min("x").as("minx"), max("x").as("maxx"),
-          min("y").as("miny"), max("y").as("maxy"))
-      val rlo = ceil(col("miny") / rowH).cast("long")
-      val rhi = floor(col("maxy") / rowH).cast("long")
-      val withR = env.select(col("c_nationkey"), col("minx"), col("maxx"),
-        explode(when(rhi >= rlo, sequence(rlo, rhi))
-          .otherwise(expr("array()").cast("array<long>"))).as("r"))
-      val qlo = ceil(col("minx") / colW - col("r") / 2.0).cast("long")
-      val qhi = floor(col("maxx") / colW - col("r") / 2.0).cast("long")
-      withR.select(col("c_nationkey"), col("r"),
-          explode(when(qhi >= qlo, sequence(qlo, qhi))
-            .otherwise(expr("array()").cast("array<long>"))).as("q"))
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_cells"), min("q").as("min_q"),
-          max("q").as("max_q"), min("r").as("min_r"), max("r").as("max_r"))
-        .orderBy("c_nationkey")
-    }),
-
-    // hexagonal tessellation aggregate: pointy-top axial cells via
-    // cube-rounding (functions/HexBin) — all-codegen binning feeding one
-    // map-side-combinable integer-key aggregate, the hex sibling of the
-    // square density grid
-    "sp_hexbin" -> ((s, dir) =>
-      pointsDf(s, dir)
-        .select(HexBin.cell(col("x"), col("y"), 5.0).as("h"), col("c_acctbal"))
-        .groupBy(col("h.q").as("hex_q"), col("h.r").as("hex_r"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("c_acctbal") * 100).cast("long")).as("cents"))
-        .orderBy(col("hex_q"), col("hex_r"))),
-
-    "sp_density_islands" -> ((s, dir) => {
-      val pts = pointsLayer(s, dir).df.filter(col("c_nationkey") === 0)
-      SpatialAggs.densityIslandsScalable(pts, 25.0)
-        .select(col("island_key"), col("n_members"))
-        .orderBy(col("island_key"))
-    }),
-
-    // serializer fidelity: write GeoJSON + WKT, parse BACK, count coordinates
-    // — parse-back point counts are oracle-checkable (= rows per nation)
-    "sp_geojson_roundtrip" -> ((s, dir) =>
-      linesLayer(s, dir).df
-        .select(col("c_nationkey"),
-          st.numPoints(st.geomFromGeoJson(st.asGeoJson(col("geometry")))).cast("long").as("gj_pts"),
-          st.numPoints(st.geomFromText(st.asText(col("geometry")))).cast("long").as("wkt_pts"))
-        .orderBy(col("c_nationkey"))),
-
-    // edit-distance dedup (levenshtein <= 4): positional q-gram banded
-    // candidates with guaranteed recall (Gravano count filter, >=1-gram
-    // form) + codegen levenshtein verify — the edit-distance member of the
-    // dedup family beside Jaccard, SimHash, and winnowing
-    "dd_edit_pairs" -> ((s, dir) =>
-      Dedup.editDistancePairs(T(s, dir, "documents"), "doc_id", "text",
-          k = 4, q = 12)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // stored-index incremental dedup: bootstrap the band/set index from
-    // two-thirds of the corpus, then ingest the rest as "the nightly
-    // batch" — new docs pair against the STORE (bipartite band join) and
-    // themselves, never re-pairing history; pairs materialize before the
-    // append grows the index
-    "dd_incremental" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val d = java.nio.file.Files.createTempDirectory("graft-mh-index")
-      d.toFile.deleteOnExit()
-      val p = d.resolve("mh").toString
-      Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 =!= 0),
-        "doc_id", "text", p)
-      Dedup.appendMinhashIndex(s, p, docs.filter(col("doc_id") % 3 === 0),
-          "doc_id", "text", threshold = 0.2)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // LSH band-geometry planner: theoretical τ ≈ (1/b)^(1/r) beside the
-    // MEASURED candidate-pair count each (b × r) factorization of the
-    // 128-perm signature would emit on this corpus — run before committing
-    // a dedup threshold; each plan costs one banded self-join, the same
-    // shape production banding pays
-    "dd_lsh_plan" -> ((s, dir) =>
-      Dedup.lshPlan(T(s, dir, "documents"), "doc_id", "text",
-        Seq((8, 16), (16, 8), (32, 4), (64, 2)))),
-
-    "dd_minhash_pairs" -> ((s, dir) =>
-      Dedup.minhashNearDupPairs(T(s, dir, "documents"), "doc_id", "text", threshold = 0.2)
-        .orderBy(col("id_a"), col("id_b"))
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))),
-
-    // SQL-expressible 24-bit simhash: banding guarantees recall for Hamming≤3
-    // (maxHamming+1 chunks), exact Hamming verify — DuckDB computes the very
-    // same signature, so this is a full hash-match check
-    "dd_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashPolyPairs(T(s, dir, "documents"), "doc_id", "text",
-          bits = 24, maxHamming = 3)
-        .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-        .orderBy(col("id_a"), col("id_b"))),
-
-    "tx_langid" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.languageIdExpr(col("text")).as("lang_guess"),
-          TextAnalysis.polyFingerprint(col("text")).as("fingerprint"))
-        .orderBy(col("doc_id"))),
-
-    // language-ID confusion matrix vs the gold labels — the eval readout
-    // that decides whether the n-gram heuristic is good enough to gate on;
-    // pure integer counts, one (truth, guess) aggregate
-    "tx_langid_conf" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("lang"), TextAnalysis.languageIdExpr(col("text")).as("guess"))
-        .groupBy("lang", "guess").agg(count(lit(1)).as("n"))
-        .orderBy("lang", "guess")),
-
-    "sim_srp_topk" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      Similarity.srpTopK(emb, "vec_id", "embedding", q, 20, dim = 64)
-        .select(col("id"), round(col("cosine"), 6).as("cosine"))
-    }),
-
-    // binary quantization ANN: 1 bit/dim signature (8 bytes/vector), Hamming
-    // shortlist via xor+popcount in codegen, exact cosine re-rank of the
-    // shortlist only — the rescored-BQ shape modern vector stores ship
-    "sim_bq_topk" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      Similarity.bqTopK(emb, "vec_id", "embedding", q, k = 15, dim = 64,
-        shortlist = 60)
-    }),
-
-    // two-level residual quantization (the additive-quantization member
-    // beside PQ subspaces, SQ8 affine, MRL truncation, BQ sign bits):
-    // coarse k-means + residual k-means, retrieval by the broadcast
-    // 64-entry decode table joined BY CODE, exact re-rank of the shortlist
-    "sim_rq" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      Similarity.rqTopK(emb, "vec_id", "embedding", q, k = 15)
-    }),
-
-    // hard-negative triplet mining (FaceNet-style): per anchor the best
-    // same-label positive and best different-label negative — anchors
-    // broadcast, corpus scanned once, both argmaxes map-side struct-max
-    "sim_hard_negatives" -> ((s, dir) =>
-      Similarity.hardNegatives(T(s, dir, "embeddings"), "vec_id", "embedding",
-        "label", nAnchors = 20)),
-
-    // MMR diversified rerank (Carbonell-Goldstein): λ=0.7 greedy over a
-    // 40-candidate cosine shortlist — the corpus-sized work is the
-    // TakeOrdered shortlist + s² pairwise sims; the greedy state is
-    // shortlist-bounded, never corpus-bounded
-    "sim_mmr" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      Similarity.mmrTopK(emb, "vec_id", "embedding", q, k = 10,
-        lambda = 0.7, shortlist = 40)
-    }),
-
-    // exact media dedup by CONTENT hash — the first pass of any multimodal
-    // dedup stack: group on md5(bytes) (a 16-byte shuffle key, never the
-    // payload), emit per-group representative/size/kind-spread. Duplicates
-    // are PLANTED via seedOf (i ≡ 5 mod 9 reuses the bytes of i−4, a
-    // different kind since 5 ≢ 1 mod 3) — with the full-width generator,
-    // bytes equal ⟺ seed equal, so the oracle replays the groups as pure
-    // seed arithmetic against the real hash-dedup plan
-    "mm_exact_dedup" -> ((s, dir) => {
-      // image rows carry GENUINE PNG bytes (round-9 codec promotion);
-      // audio/video keep the synthetic stream — the md5 grouping is
-      // format-blind, and the planted dup pair is audio↔video, so the
-      // oracle's seed/kind structure is untouched
-      val media = Multimodal.syntheticMedia(s, 600,
-        seedOf = i => if (i % 9 == 5) i - 4 else i, realImagePng = true)
-      media.groupBy(md5(col("bytes")).as("h"))
-        .agg(min("media_id").as("rep"), count(lit(1)).as("n"),
-          countDistinct("kind").as("kinds"))
-        .select(col("rep"), col("n"), col("kinds"))
-        .orderBy("rep")
-    }),
-
-    // production decode entry over REAL 8×8 PNGs (round-9 promotion) —
-    // native-dims decode, lossless pattern replayed by the oracle
-    "mm_decode" -> ((s, dir) => {
-      val media = Multimodal.syntheticImagePng(s, 300)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val decoded =
-        try Multimodal.decodeAndFeaturize(media, 8, 8)
-        finally s.conf.set("spark.graft.mm.codec", prev)
-      decoded.select(col("media_id"),
-          round(aggregate(col("pixels"), lit(0.0d), (a, v) => a + v.cast("double")), 4).as("pixel_sum"))
-        .orderBy(col("media_id"))
-    }),
-
-    // REAL image decode (round-7 verdict task 6): 40 deterministic 15×12
-    // RGB patterns are ENCODED as genuine uncompressed 24-bit BMP byte
-    // streams (odd ids top-down/negative-height, even ids bottom-up, row
-    // stride 4-byte padded — all three layout quirks exercised), then
-    // DECODED back through the pure-JVM BMP codec selected by
-    // spark.graft.mm.codec=bmp. Pixel luma is integer arithmetic
-    // end-to-end, so the oracle replays the exact per-image luma sums
-    // WITHOUT parsing bytes — equality proves encode→decode is the
-    // identity on the pattern, i.e. the decoder really reads BMP
-    "mm_decode_bmp" -> ((s, dir) => {
-      import s.implicits._
-      val enc = udf((i: Long) => {
-        val w = 15; val h = 12
-        val rgb = new Array[Int](w * h * 3)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val o = (y * w + x) * 3
-            rgb(o) = ((x * 3 + i) % 256).toInt
-            rgb(o + 1) = (y * 5) % 256
-            rgb(o + 2) = ((x + y + i) % 256).toInt
-            x += 1
-          }
-          y += 1
-        }
-        graft.pipeline.ImageCodec.encodeBmp(w, h, rgb, topDown = i % 2 == 1)
-      })
-      val media = s.range(0, 40).select(col("id").as("media_id"),
-        enc(col("id")).as("bytes"))
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "bmp")
-      // the codec choice is captured at plan build — restore right after
-      val decoded =
-        try Multimodal.decodeAndFeaturize(media, 15, 12)
-        finally s.conf.set("spark.graft.mm.codec", prev)
-      decoded.select(col("media_id"), size(col("pixels")).cast("long").as("n_px"),
-          aggregate(col("pixels"), lit(0L),
-            (a, v) => a + round(v.cast("double") * 255).cast("long")).as("px_sum"))
-        .orderBy(col("media_id"))
-    }),
-
-    // REAL PNG decode (the second real format behind the codec seam): 40
-    // deterministic 15×12 RGB patterns ENCODED as genuine zlib-deflated
-    // truecolor PNGs — row filter i%5 (all five unfilter paths exercised),
-    // odd ids RGBA color type 6 / even ids RGB color type 2 — then DECODED
-    // through the pure-JVM PNG codec (spark.graft.mm.codec=png). Integer
-    // luma end-to-end, so the oracle replays per-image sums from the
-    // pattern formula without parsing bytes; equality proves the inflate +
-    // unfilter + luma path really reads PNG
-    "mm_decode_png" -> ((s, dir) => {
-      val enc = udf((i: Long) => {
-        val w = 15; val h = 12
-        val rgb = new Array[Int](w * h * 3)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val o = (y * w + x) * 3
-            rgb(o) = ((x * 7 + i) % 256).toInt
-            rgb(o + 1) = (y * 11) % 256
-            rgb(o + 2) = ((x * y + i) % 256).toInt
-            x += 1
-          }
-          y += 1
-        }
-        graft.pipeline.ImageCodec.encodePng(w, h, rgb,
-          filterType = (i % 5).toInt, alpha = i % 2 == 1)
-      })
-      val media = s.range(0, 40).select(col("id").as("media_id"),
-        enc(col("id")).as("bytes"))
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      // the codec choice is captured at plan build — restore right after
-      val decoded =
-        try Multimodal.decodeAndFeaturize(media, 15, 12)
-        finally s.conf.set("spark.graft.mm.codec", prev)
-      decoded.select(col("media_id"), size(col("pixels")).cast("long").as("n_px"),
-          aggregate(col("pixels"), lit(0L),
-            (a, v) => a + round(v.cast("double") * 255).cast("long")).as("px_sum"))
-        .orderBy(col("media_id"))
-    }),
-
-    // REAL baseline-JPEG decode (the third real format — the one a web
-    // crawl actually meets): 40 deterministic 20×12 grayscale patterns,
-    // CONSTANT per 8×8 block with EVEN values — DC-only blocks whose
-    // coefficient 8·(v−128) the Annex-K quantizer (q₀₀=16) divides
-    // exactly, so the lossy pipeline is the identity BY CONSTRUCTION and
-    // the oracle replays per-image sums in pure integer SQL. Odd ids are
-    // encoded with a restart interval (DRI + RSTn + DC-predictor resets on
-    // the decode path); 20×12 exercises edge-replicated partial blocks +
-    // crop. The full huffman+IDCT path on non-constant images is pinned by
-    // the two-engine javax.imageio differential in Round9Spec.
-    "mm_decode_jpeg" -> ((s, dir) => {
-      val enc = udf((i: Long) => {
-        val w = 20; val h = 12
-        val luma = new Array[Int](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            luma(y * w + x) =
-              (2 * ((x / 8 * 31 + y / 8 * 17 + i * 7) % 128)).toInt
-            x += 1
-          }
-          y += 1
-        }
-        graft.pipeline.JpegCodec.encodeJpegGray(w, h, luma,
-          restartInterval = if (i % 2 == 1) 2 else 0)
-      })
-      val media = s.range(0, 40).select(col("id").as("media_id"),
-        enc(col("id")).as("bytes"))
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "jpeg")
-      // the codec choice is captured at plan build — restore right after
-      val decoded =
-        try Multimodal.decodeAndFeaturize(media, 20, 12)
-        finally s.conf.set("spark.graft.mm.codec", prev)
-      decoded.select(col("media_id"), size(col("pixels")).cast("long").as("n_px"),
-          aggregate(col("pixels"), lit(0L),
-            (a, v) => a + round(v.cast("double") * 255).cast("long")).as("px_sum"))
-        .orderBy(col("media_id"))
-    }),
-
-    // image near-dup dedup via pHash banding; every 9th id reuses the bytes
-    // of id−3, so exact-dup images exist under distinct ids (with the FNV
-    // stub decode only byte-identical media collide — see phash64 scaladoc)
-    // video-level near-dup: frame-feature SET Jaccard; seedOf plants
-    // video-kind duplicates (i ≡ 8 mod 9 shares the seed of i-6, both
-    // video-kind since 8 ≡ 2 ≡ (8-6) mod 3)
-    "mm_video_dedup" -> ((s, dir) => {
-      // REAL frame decode by default (round-9 promotion): videos are
-      // length-prefixed containers of genuine 16×16 PNG frames; the
-      // planted duplicates (i ≡ 8 mod 9 share i−6's seed) have
-      // byte-different per-frame encodings (filter keyed on the id) of
-      // identical pixels — frame-set Jaccard 1 only under a real decode
-      val media = Multimodal.syntheticVideoPng(s, 300,
-        i => if (i % 9 == 8) i - 6 else i, frames = 8)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val frames =
-        try Multimodal.sampleFrames(media, n = 8, w = 16, h = 16)
-        finally s.conf.set("spark.graft.mm.codec", prev)
-      Multimodal.videoNearDupPairs(frames, threshold = 0.5)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "mm_phash" -> ((s, dir) => {
-      // REAL decode by default (round-9 promotion): genuine 8×8 PNGs, the
-      // planted duplicates (i ≡ 3 mod 9 → i−3) are byte-DIFFERENT
-      // encodings (row filter keyed on the original id) of IDENTICAL
-      // pixels — only a real decode collides them; the retired FNV stub
-      // could not (it avalanches on bytes)
-      val media = Multimodal.syntheticImagePng(s, 300,
-        i => if (i % 9 == 3) i - 3 else i)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val pairs =
-        try Multimodal.phashNearDupPairs(media, maxHamming = 3)
-        finally s.conf.set("spark.graft.mm.codec", prev)
-      pairs.orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // ====================================== §2 operator-coverage additions
-    // ApplyAffineTransformation (ApplyAffineTransformation.java:30-55):
-    // scale+translate on exact lattice coords — exact double arithmetic
-    "sp_affine_scale" -> ((s, dir) =>
-      pointsLayer(s, dir).df
-        .withColumn("t", st.affine(col("geometry"), 2.0, 0.0, 10.0, 0.0, 0.5, -5.0))
-        .select(col("ck").as("id"), st.x(col("t")).as("ax"), st.y(col("t")).as("ay"))
-        .orderBy(col("id"))),
-
-    // FilterInRelation DE-9IM (FilterInRelation.java:30-49): full relate
-    // matrix, point strictly inside rectangle ⟺ '0FFFFF212'
-    "sp_relate_within" -> ((s, dir) =>
-      pointsLayer(s, dir).df
-        .withColumn("rel", st.relate(col("geometry"), lit(GeomCodec.toWkb(GeomCodec.fromWkt(RectWkt)))))
-        .filter(col("rel") === "0FFFFF212")
-        .select(col("ck").as("id"), col("rel"))
-        .orderBy(col("id"))),
-
-    // GeometryType/Dimension/NumPoints/Boundary pipes (processing/*.java:29)
-    "sp_line_meta" -> ((s, dir) =>
-      linesLayer(s, dir).df
-        .select(col("c_nationkey"),
-          st.geometryType(col("geometry")).as("gt"),
-          st.dimension(col("geometry")).cast("long").as("dim"),
-          st.numPoints(col("geometry")).cast("long").as("n_pts"),
-          st.numPoints(st.boundary(col("geometry"))).cast("long").as("n_boundary"))
-        .orderBy(col("c_nationkey"))),
-
-    // StartPoint/EndPoint pipes (StartPoint.java:30, EndPoint.java:31)
-    "sp_start_end" -> ((s, dir) =>
-      linesLayer(s, dir).df
-        .select(col("c_nationkey"),
-          st.x(st.startPoint(col("geometry"))).as("sx"),
-          st.y(st.startPoint(col("geometry"))).as("sy"),
-          st.x(st.endPoint(col("geometry"))).as("ex"),
-          st.y(st.endPoint(col("geometry"))).as("ey"))
-        .orderBy(col("c_nationkey"))),
-
-    // Intersection/Difference/SymDifference + FilterEmpty pipes per row
-    "sp_set_ops" -> ((s, dir) => {
-      val rect = lit(GeomCodec.toWkb(GeomCodec.fromWkt(RectWkt)))
-      pointsLayer(s, dir).df
-        .groupBy(col("c_nationkey"))
-        .agg(
-          count(when(!st.isEmpty(st.intersection(col("geometry"), rect)), 1)).as("n_in"),
-          count(when(st.isEmpty(st.difference(col("geometry"), rect)), 1)).as("n_diff_empty"),
-          count(when(st.numGeometries(st.symDifference(col("geometry"), rect)) === 2, 1)).as("n_sym2"))
-        .orderBy(col("c_nationkey"))
-    }),
-
-    // Sort + RangeFilterPipe positional slice (Sort.java:33, RangeFilterPipe.java:32)
-    "sp_sort_slice" -> ((s, dir) =>
-      new GeoFrame(pointsDf(s, dir).orderBy(col("c_acctbal").desc, col("ck")))
-        .range(10, 29)
-        .df.select(col("ck").as("id"), col("c_acctbal"))),
-
-    // DynamicLayer = named filtered view with pushdown (DynamicLayer.java:56-217)
-    "sp_dynamic_cql" -> ((s, dir) =>
-      pointsLayer(s, dir).asDynamicLayer("rich_points", "c_acctbal > 5000.0")
-        .df.groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n"), max(col("c_acctbal")).as("max_bal"))
-        .orderBy(col("c_nationkey"))),
-
-    // STREAMING under the DuckDB oracle: the customer points replay as 4
-    // file-source microbatches through a streamed per-cell aggregate
-    // (complete mode, AvailableNow); the final state must equal the batch
-    // aggregate the oracle computes — the microbatch-convergence contract
-    // the differential specs pin, promoted to a CORRECTNESS row
-    // streamed sliding-window counts through Spark's native window(width,
-    // slide) operator: events staged to files, one micro-batch per file so
-    // the windowed state actually merges across batches, complete-mode
-    // memory sink — hash-matched against the batch hop oracle, promoting
-    // the event-time sliding window from differential-only to a
-    // CORRECTNESS row (the streamed twin of ev_hop)
-    "st_stream_hop" -> ((s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-hop")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val ev = T(s, dir, "events").select(col("event_type"),
-        timestamp_micros(expr("ts div 1000")).as("ets"))
-      val staged0 = stageSlabs(ev, Seq(col("ets"), col("event_type")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val agg = stream
-        .groupBy(col("event_type"),
-          window(col("ets"), "3 hours", "1 hour").as("w"))
-        .agg(count(lit(1)).as("n"))
-      runGate(s, staged0) {
-        agg.writeStream
-          .format("memory").queryName("st_stream_hop_mem")
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table("st_stream_hop_mem")
-        .select(col("event_type"),
-          expr("unix_timestamp(w.start) div 3600").as("win_start"), col("n"))
-        .orderBy(col("event_type"), col("win_start"))
-    }),
-
-    "st_stream_cells" -> ((s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-cells")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val pts = pointsDf(s, dir).select(col("ck"), col("x"), col("y"), col("c_acctbal"))
-      val staged0 = stageSlabs(pts, Seq(col("ck")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val agg = stream
-        .groupBy(floor(col("x") / 10.0).cast("int").as("cell_x"),
-          floor(col("y") / 10.0).cast("int").as("cell_y"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("c_acctbal") * 100).cast("long")).as("cents"))
-      runGate(s, staged0) {
-        agg.writeStream
-          .format("memory").queryName("st_stream_cells_mem")
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table("st_stream_cells_mem")
-        .orderBy(col("cell_x"), col("cell_y"))
-    }),
-
-    // second streaming CORRECTNESS row: exact-dedup group state built from 4
-    // file-source microbatches (streamed hash-keyed aggregate, complete
-    // mode, AvailableNow) must equal the batch dd_exact_groups oracle —
-    // min(doc_id) and count are merge-order independent, so the microbatch
-    // partial states converge to the batch answer by construction
-    "st_stream_dedup" -> ((s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-dedup")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val staged0 = stageSlabs(T(s, dir, "documents").select(col("doc_id"), col("text")),
-        Seq(col("doc_id")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val agg = stream
-        .groupBy(md5(col("text")).as("text_hash"))
-        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_dups"))
-      runGate(s, staged0) {
-        agg.writeStream
-          .format("memory").queryName("st_stream_dedup_mem")
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table("st_stream_dedup_mem").orderBy(col("text_hash"))
-    }),
-
-    // fourth streaming CORRECTNESS row — the STREAM-STREAM temporal join:
-    // purchases joined to same-user clicks within a trailing 10-minute band,
-    // both sides watermarked file streams (4 microbatches each, append mode,
-    // AvailableNow). The watermark delay (40 days) exceeds the corpus span so
-    // no state is ever evicted and the streamed pair set must equal the batch
-    // band join the oracle computes; the production configuration tightens
-    // the delay to bound state (that path is differential-tested in
-    // StreamJoinSpec) — same plan, smaller retention
-    "st_stream_join" -> ((s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-join")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val staged0 = stageSlabs(T(s, dir, "events")
-          .select(timestamp_micros(expr("ts div 1000")).as("tev"),
-            col("user_id"), col("event_id"), col("event_type")),
-        Seq(col("tev"), col("event_id")), 4, src)
-      val staged = s.read.parquet(src)
-      def side(tpe: String, pre: String) =
-        s.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .filter(col("event_type") === tpe)
-          .select(col("user_id").as(s"${pre}_user"),
-            col("event_id").as(s"${pre}_id"), col("tev").as(s"${pre}_tev"))
-          .withWatermark(s"${pre}_tev", "40 days")
-      val joined = side("purchase", "p").join(side("click", "c"),
-        expr("c_user = p_user AND " +
-          "c_tev BETWEEN p_tev - INTERVAL 10 MINUTES AND p_tev"))
-      runGate(s, staged0) {
-        joined.writeStream
-          .format("memory").queryName("st_stream_join_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table("st_stream_join_mem")
-        .select(col("p_id"), col("c_id"),
-          (unix_micros(col("p_tev")) - unix_micros(col("c_tev"))).as("dt_us"))
-        .orderBy(col("p_id"), col("c_id"))
-    }),
-
-    // fifteenth streaming CORRECTNESS gate — stream-stream LEFT OUTER join
-    // with watermark-driven null emission: every purchase keeps a row even
-    // when no same-user click precedes it within the 10-minute band. Outer
-    // results only materialize once the watermark PROVES no match can still
-    // arrive, so this gate exercises the state-eviction semantics the inner
-    // gate's 40-day no-eviction delay deliberately avoids. Two staging
-    // obligations make it deterministic: (a) slabs are time-SORTED, so
-    // eviction can never outrun a possible match (every future row ≥ the
-    // running max ≥ watermark); (b) a final sentinel slab (one purchase +
-    // one click at 2100-01-01, user −1, filtered from the output) pushes
-    // BOTH sides' watermarks past every real row, flushing the pending
-    // null-side state through the end-of-stream no-data batch.
-    "st_stream_outer" -> ((s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-outer")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val base = T(s, dir, "events")
-        .select(timestamp_micros(expr("ts div 1000")).as("tev"),
-          col("user_id"), col("event_id"), col("event_type"))
-      val sentinels = s.range(0, 2).select(
-        timestamp_micros(lit(4102444800000000L)).as("tev"), // 2100-01-01 UTC
-        lit(-1L).as("user_id"), (col("id") - 2).as("event_id"),
-        when(col("id") === 0, "purchase").otherwise("click").as("event_type"))
-      val staged0 = stageSlabs(base.unionByName(sentinels),
-        Seq(col("tev"), col("event_id")), 5, src)
-      val staged = s.read.parquet(src)
-      def side(tpe: String, pre: String) =
-        s.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .filter(col("event_type") === tpe)
-          .select(col("user_id").as(s"${pre}_user"),
-            col("event_id").as(s"${pre}_id"), col("tev").as(s"${pre}_tev"))
-          .withWatermark(s"${pre}_tev", "10 minutes")
-      val joined = side("purchase", "p").join(side("click", "c"),
-        expr("c_user = p_user AND " +
-          "c_tev BETWEEN p_tev - INTERVAL 10 MINUTES AND p_tev"),
-        "leftOuter")
-      runGate(s, staged0) {
-        joined.writeStream
-          .format("memory").queryName("st_stream_outer_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table("st_stream_outer_mem")
-        .filter(col("p_user") >= 0) // drop the sentinel pair
-        .select(col("p_id"), col("c_id"),
-          (unix_micros(col("p_tev")) - unix_micros(col("c_tev"))).as("dt_us"))
-        .orderBy(col("p_id"), col("c_id"))
-    }),
-
-    // eleventh streaming CORRECTNESS gate — the PRODUCTION streaming-dedup
-    // API dropDuplicatesWithinWatermark: per-user dedup with bounded,
-    // watermark-evicted state. Semantics pinned EMPIRICALLY this round
-    // (two probe harnesses + a 1000-row model fit with zero misses):
-    // (a) a duplicate NEVER extends the stored expiry — expiry is the
-    // emitted row's event time + delay; (b) eviction runs at the END of
-    // batch b with that batch's watermark W_b = max(event time of batches
-    // < b) − delay, so a key is alive DURING batch b iff expiry ≥ W_{b−1}
-    // — one extra batch of watermark lag. The staging reduces to one row
-    // per (key, slab) (min ets), which makes the per-key 4-step state
-    // cascade — and therefore the full emitted set — deterministic; event
-    // times are minute-quantized against an odd 7199999999 µs delay so no
-    // comparison can land on a boundary.
-    "st_stream_dedupw" -> ((s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-ddw")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val ev = T(s, dir, "events").select(col("user_id").as("k"),
-        col("event_id"), col("ts"),
-        timestamp_micros(
-          (expr("ts div 1000") - expr("ts div 1000") % 60000000L)).as("ets"))
-      // persist before the per-slab writes — same stageSlabs discipline
-      // (slabify's count + two-pass rank would recompute once per slab)
-      val slabs = slabify(ev, Seq(col("ts"), col("event_id")), 4)
-        .groupBy(col("k"), col("slab")).agg(min(col("ets")).as("ets"))
-        .select("k", "ets", "slab")
-        .persist()
-      val staged0 =
-        try { writeSlabFiles(slabs, 1 to 4, src); slabs.count() }
-        finally { slabs.unpersist(); () }
-      val staged = s.read.parquet(src)
-      runGate(s, staged0) {
-        s.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .withWatermark("ets", "7199999999 microseconds")
-          .dropDuplicatesWithinWatermark("k")
-          .writeStream.format("memory").queryName("st_stream_dedupw_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table("st_stream_dedupw_mem")
-        .select(col("k").as("user_id"), unix_micros(col("ets")).as("ets_us"))
-        .orderBy(col("user_id"), col("ets_us"))
-    }),
-
-    // third streaming CORRECTNESS row, this one through the EVENT-TIME
-    // window operator: hourly tumbling-window counts per event type from 4
-    // microbatches (complete mode, AvailableNow) must equal the batch
-    // hourly rollup the oracle computes — window(start) is exposed as epoch
-    // seconds so the integer hour arithmetic replays exactly
-    // eighth streaming CORRECTNESS gate — streaming ANN retrieval: query
-    // vectors arrive as micro-batches, retrieve against the STATIC IVF
-    // index (stateless stream-static list_id join; only the windowed
-    // top-k aggregate is state), and the emitted per-window shortlist must
-    // equal the batch ivfKnnJoin replay (the shared IvfEvalCtes oracle).
-    // All queries carry one fixed event time, a far-future sentinel closes
-    // the window
-    "st_stream_ann" -> ((s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-ann")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val emb = T(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id"), col("embedding"),
-          to_timestamp(lit("2026-01-01 00:00:00")).as("ets"))
-      val staged0 = stageSlabs(qs, Seq(col("vec_id")), 2, src)
-      emb.limit(1).select(lit(-1L).as("vec_id"), col("embedding"),
-          to_timestamp(lit("2026-01-03 00:00:00")).as("ets"))
-        .repartition(1).write.mode("append").parquet(src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      runGate(s, staged0) {
-        graft.streaming.StreamAnn
-          .annEnrichStream(stream, emb, "vec_id", "embedding", "ets",
-            k = 5, nlist = 16, nprobe = 2)
-          .writeStream.format("memory").queryName("st_stream_ann_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table("st_stream_ann_mem")
-        .filter(col("qid") >= 0)
-        .select(col("qid"), col("rank"), col("nid"), col("cosine"))
-        .orderBy("qid", "rank")
-    }),
-
-    // seventh streaming CORRECTNESS gate — the first through
-    // flatMapGroupsWithState (custom state): greedy simhash near-dup
-    // admission per pigeonhole band. Documents stage as id-ordered slabs
-    // (one micro-batch each) and groups process id-sorted within a batch,
-    // so streamed admission equals a single global greedy pass in id order
-    // — which the oracle replays with a recursive CTE carrying each band's
-    // admitted-signature LIST. Output: per-doc admission count across its
-    // 4 bands (4 ⇒ global survivor)
-    "st_stream_simdedup" -> ((s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-simdedup")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      // every-5th-doc subset: the gate checks stateful admission SEMANTICS,
-      // and the oracle's sequential greedy walk (a recursive CTE carrying
-      // each band's admitted list) is O(band depth²) — the subset keeps the
-      // sf0.1 replay inside the crosscheck budget
-      val docs = T(s, dir, "documents")
-        .filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("text"))
-      val staged0 = stageSlabs(docs, Seq(col("doc_id")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val banded = graft.streaming.StreamDedup
-        .bandedDocs(stream, "doc_id", "text", maxHamming = 3)
-      // idleTimeoutMs = 0 ⇒ NoTimeout: a registered processing-time
-      // timeout would keep this AvailableNow replay spinning empty
-      // timeout batches forever (see StreamDedup.simhashDedupStream)
-      runGate(s, staged0) {
-        graft.streaming.StreamDedup
-          .simhashDedupStream(banded, maxHamming = 3, idleTimeoutMs = 0)
-          .toDF()
-          .writeStream.format("memory").queryName("st_stream_simdedup_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table("st_stream_simdedup_mem")
-        .groupBy(col("id")).agg(count(lit(1)).as("n_adm"))
-        .orderBy("id")
-    }),
-
-    // sixth streaming CORRECTNESS gate — and the first through the native
-    // session_window state store (append mode: each session emits exactly
-    // once, CLOSED, when the watermark passes its end). Events stage as
-    // four time-ordered slabs (one micro-batch each, so nothing arrives
-    // behind the watermark) plus a far-future sentinel file whose sole job
-    // is to advance the final watermark past every real session; values are
-    // integer cents in a double so the state-store sums stay exact
-    "st_stream_sessions" -> ((s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-sess")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val ev = T(s, dir, "events").select(col("user_id"),
-        timestamp_micros(expr("ts div 1000")).as("ets"),
-        round(col("value") * 100).cast("double").as("value"))
-      val staged0 = stageSlabs(ev, Seq(col("ets")), 4, src)
-      val sentinel = ev.agg(max("ets").as("m"))
-        .select(lit(-1L).as("user_id"),
-          (col("m") + expr("INTERVAL 2 DAYS")).as("ets"), lit(0.0).as("value"))
-      sentinel.repartition(1).write.mode("append").parquet(src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      runGate(s, staged0) {
-        graft.streaming.StreamSessions
-          .sessionStream(stream, "user_id", "ets")
-          .writeStream.format("memory").queryName("st_stream_sessions_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table("st_stream_sessions_mem")
-        .filter(col("user_id") >= 0)
-        .select(col("user_id"), unix_micros(col("t_start")).as("t_start_us"),
-          unix_micros(col("t_end")).as("t_end_us"), col("n_events"),
-          col("sum_value").cast("long").as("cents"))
-        .orderBy(col("user_id"), col("t_start_us"))
-    }),
-
-    "st_stream_hourly" -> ((s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-hourly")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val staged0 = stageSlabs(T(s, dir, "events")
-          .select(timestamp_micros(expr("ts div 1000")).as("tev"),
-            col("event_type")),
-        Seq(col("tev"), col("event_type")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val agg = stream
-        .groupBy(window(col("tev"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").cast("long").as("hour_start"),
-          col("event_type"), col("n"))
-      runGate(s, staged0) {
-        agg.writeStream
-          .format("memory").queryName("st_stream_hourly_mem")
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table("st_stream_hourly_mem").orderBy(col("event_type"), col("hour_start"))
-    }),
-
-    // twelfth streaming gate — STREAM-STATIC enrichment join, the one
-    // micro-batch execution path no other gate covers: every batch of the
-    // event stream hash-joins a parquet-backed dimension (customer →
-    // market segment keyed by user id; at cluster scale the static side is
-    // broadcast once, not shuffled per batch), then rolls into hourly
-    // per-segment counts. Inner join ∧ complete mode ⇒ the batch oracle is
-    // the verbatim join + rollup — no watermark bookkeeping to replay.
-    "st_stream_enrich" -> ((s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-enrich")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val staged0 = stageSlabs(T(s, dir, "events")
-          .select(timestamp_micros(expr("ts div 1000")).as("tev"),
-            col("user_id")),
-        Seq(col("tev"), col("user_id")), 4, src)
-      val staged = s.read.parquet(src)
-      val dim = T(s, dir, "customer")
-        .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val agg = stream.join(broadcast(dim), Seq("user_id"))
-        .groupBy(window(col("tev"), "1 hour"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").cast("long").as("hour_start"),
-          col("c_mktsegment"), col("n"))
-      runGate(s, staged0) {
-        agg.writeStream
-          .format("memory").queryName("st_stream_enrich_mem")
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table("st_stream_enrich_mem")
-        .orderBy(col("c_mktsegment"), col("hour_start"))
-    }),
-
-    // thirteenth streaming gate — UPDATE-mode aggregation through a
-    // foreachBatch UPSERT into the versioned layer store: the
-    // exactly-once-sink pattern every production pipeline needs (memory/
-    // complete gates re-emit the world; real sinks take per-batch deltas).
-    // Each micro-batch emits only the (hour, type) rows whose cumulative
-    // count changed; the sink merges them into ONLY the dirty hour
-    // partitions and commits a partition-scoped delta version through the
-    // manifest protocol (mvUpsert) — crash-safe versions, bytes per batch
-    // ∝ delta, replay-idempotent because update rows carry cumulative
-    // counts. The final snapshot must equal the batch rollup verbatim.
-    "st_stream_mv" -> ((s, dir) => {
-      import graft.plans.VersionedLayer
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-mv")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val store = d.resolve("store").toString
-      val staged0 = stageSlabs(T(s, dir, "events")
-          .select(timestamp_micros(expr("ts div 1000")).as("tev"),
-            col("event_type")),
-        Seq(col("tev"), col("event_type")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val agg = stream
-        .groupBy(window(col("tev"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").cast("long").as("hour_start"),
-          col("event_type"), col("n"))
-      runGate(s, staged0) {
-        agg.writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            mvUpsert(batch, store)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      VersionedLayer.read(s, store, None)
-        .select(col("hour_start"), col("event_type"), col("n"))
-        .orderBy(col("event_type"), col("hour_start"))
-    }),
-
-    // fourteenth streaming gate — CRASH RECOVERY / exactly-once across a
-    // restart (round-7 verdict task 4): the hourly stateful rollup runs
-    // over the first 3 of 6 time-ordered slabs, then the newest commit
-    // marker is DELETED from the checkpoint (simulating the crash window
-    // between a micro-batch's state/offset write and its commit), the
-    // remaining slabs are staged, and the query RESTARTS from the same
-    // checkpoint: Structured Streaming re-executes the uncommitted batch
-    // from its logged offsets against the rolled-back state-store version,
-    // then drains the new slabs. The foreachBatch upsert is key-idempotent
-    // so the replayed delta overwrites itself, and the final snapshot must
-    // equal the batch rollup of ALL events. The restart boundary is
-    // asserted to fall MID-WINDOW (the hour containing the phase-2 head
-    // also holds phase-1 rows), so the post-restart value of that window
-    // can only come from checkpointed state — not a recount.
-    "st_stream_recover" -> ((s, dir) => {
-      import graft.plans.VersionedLayer
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-rec")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val store = d.resolve("store").toString
-      val ev = T(s, dir, "events")
-        .select(expr("ts div 1000").as("tus"), col("event_type"), col("event_id"))
-      val slabs = slabify(ev, Seq(col("tus"), col("event_id")), 6)
-        .select(col("tus"), col("event_type"), col("slab")).persist()
-      val evRows = slabs.count()
-      // restart cut chosen ADAPTIVELY: first k whose k|k+1 slab boundary
-      // falls mid-hour (slab k+1's first hour also holds slab ≤ k rows) —
-      // a fixed 3|4 cut lands exactly on an hour edge at some corpus
-      // sizes (observed at sf0.001) and would not exercise cross-restart
-      // state; the final snapshot equals the batch rollup for ANY cut
-      val cut = (3 to 5).find { k =>
-        // nullable read: on very small corpora a 6-way ntile can leave
-        // slab k+1 empty — min() is then NULL and the candidate simply
-        // fails (letting the require below fire with its diagnostic)
-        // rather than NPE-ing in getLong
-        val cutHour = slabs.filter(col("slab") === k + 1)
-          .agg(min(expr("tus div 3600000000"))).head()
-          .getAs[java.lang.Long](0)
-        cutHour != null && slabs.filter(col("slab") <= k &&
-          expr("tus div 3600000000") === cutHour.longValue()).limit(1)
-          .count() > 0
-      }
-      require(cut.isDefined, "st_stream_recover: every candidate restart " +
-        "boundary fell on an hour edge — the gate would not exercise " +
-        "cross-restart state")
-      def stage(range: Range): Unit =
-        writeSlabFiles(slabs.select("tus", "event_type", "slab"), range, src)
-      def run(): Unit = {
-        val staged = s.read.parquet(src)
-        val stream = s.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-        val agg = stream
-          .groupBy(window(timestamp_micros(col("tus")), "1 hour"),
-            col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(col("window.start").cast("long").as("hour_start"),
-            col("event_type"), col("n"))
-        // both phases resize identically (state width is pinned in the
-        // checkpoint at first start; recover must restart at the same one)
-        var q0: org.apache.spark.sql.streaming.StreamingQuery = null
-        runGate(s, evRows) {
-          q0 = agg.writeStream
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              mvUpsert(batch, store)
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q0
-        }
-        // deregister fully before the restart run re-opens the checkpoint
-        q0.stop(); q0.awaitTermination()
-      }
-      stage(1 to cut.get)
-      run()
-      // crash simulation: drop the NEWEST commit marker — the batch's
-      // offsets and state survive, its commit does not, so the restart
-      // MUST replay it (the recovery path a clean stop never exercises)
-      val commits = new java.io.File(s"$ckpt/commits").listFiles()
-        .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
-      require(commits.nonEmpty, "st_stream_recover: no commits after phase 1")
-      require(commits.last.delete(),
-        "st_stream_recover: could not remove the newest commit marker")
-      // the local checksum FS keeps a hidden .N.crc sidecar per marker —
-      // leave it behind and the replayed batch's commit RENAME collides
-      // (FileAlreadyExistsException surfaced as "Multiple streaming
-      // queries are concurrently using")
-      val crc = new java.io.File(s"$ckpt/commits/.${commits.last.getName}.crc")
-      if (crc.exists()) require(crc.delete(),
-        "st_stream_recover: could not remove the commit crc sidecar")
-      stage(cut.get + 1 to 6)
-      run()
-      slabs.unpersist()
-      VersionedLayer.read(s, store, None)
-        .select(col("hour_start"), col("event_type"), col("n"))
-        .orderBy(col("event_type"), col("hour_start"))
-    }),
-
-    // tenth streaming gate — LATE / OUT-OF-ORDER arrivals under a REAL
-    // watermark (round-6 verdict task 6; every other gate replays
-    // time-ordered slabs). The corpus is cut into 6 time blocks staged as
-    // ordered micro-batches, then deliberately disordered: rows in the
-    // last 10 minutes of their block slip ONE slab later (out-of-order but
-    // provably inside the 2-hour watermark tolerance — accepted), and rows
-    // in the first 10 minutes of a block whose hour-window closed more
-    // than 2h+1min before the global max are planted in the FINAL slab
-    // (provably beyond the watermark — dropped). Append-mode hourly counts
-    // must equal the batch rollup MINUS exactly the planted-late rows —
-    // the watermark contract, replayed row-for-row by the oracle. A
-    // far-future sentinel in the final slab flushes the last windows.
-    "st_stream_late" -> ((s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-late")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val ev = T(s, dir, "events")
-        .select(expr("ts div 1000").as("tus"), col("event_type"))
-      val mm = ev.agg(min("tus"), max("tus")).head()
-      val gmin = mm.getLong(0); val gmax = mm.getLong(1)
-      val blen = math.max((gmax - gmin) / 6L, 1L)
-      val tenMin = 600000000L; val twoH = 7200000000L; val oneMin = 60000000L
-      val classified = ev
-        .withColumn("blk", least(expr(s"(tus - ${gmin}L) div ${blen}L"), lit(5L)))
-        .withColumn("hour_end", expr("((tus div 3600000000) + 1) * 3600000000"))
-        .withColumn("late_planted",
-          col("tus") - (lit(gmin) + col("blk") * blen) < tenMin &&
-            col("hour_end") < gmax - twoH - oneMin)
-        .withColumn("late_ok", !col("late_planted") &&
-          when(col("blk") === 5, lit(gmax)).otherwise(
-            lit(gmin) + (col("blk") + 1) * blen) - col("tus") < tenMin)
-        .withColumn("slab", when(col("late_planted"), lit(7L))
-          .otherwise(col("blk") + when(col("late_ok"), lit(1L)).otherwise(lit(0L))))
-        .persist()
-      writeSlabFiles(classified.select("tus", "event_type", "slab"), 0 to 6, src)
-      classified.filter(col("slab") === 7).select("tus", "event_type")
-        .unionByName(s.range(1).select(lit(gmax + 36000000000L).as("tus"),
-          lit("__sentinel").as("event_type")))
-        .repartition(1).write.mode("append").parquet(src)
-      val staged0 = classified.count()
-      classified.unpersist()
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .select(timestamp_micros(col("tus")).as("tev"), col("event_type"))
-        .withWatermark("tev", "2 hours")
-      val agg = stream
-        .groupBy(window(col("tev"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").cast("long").as("hour_start"),
-          col("event_type"), col("n"))
-      runGate(s, staged0, budgetMs = 240000) {
-        agg.writeStream
-          .format("memory").queryName("st_stream_late_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      s.table("st_stream_late_mem")
-        .filter(col("event_type") =!= "__sentinel")
-        .orderBy(col("event_type"), col("hour_start"))
-    }),
-
-    // ECQL front-end leg: a stored-ECQL-style string (the reference feeds
-    // these verbatim to GeoTools, SearchCQL.java:27-60) parsed by the
-    // graft.functions.Ecql translator — BBOX + BETWEEN + geometryType +
-    // NOT over the point layer, aggregated under the oracle
-    "sp_ecql" -> ((s, dir) =>
-      new GeoFrame(pointsDf(s, dir))
-        .filterEcql("BBOX(the_geom, -60.5, -40.5, 60.5, 40.5) AND " +
-          "c_acctbal BETWEEN 1000.0 AND 8000.0 AND " +
-          "geometryType(the_geom) = 'Point' AND NOT c_nationkey = 7")
-        .df.groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("c_acctbal") * 100).cast("long")).as("cents"))
-        .orderBy(col("c_nationkey"))),
-
-    // the procedures listing under the oracle (round-6 verdict task 9):
-    // the static registered surface — the reference's spatial.procedures
-    // returns its @Procedure/@UserFunction registry, here with the engine
-    // entry point serving each name
-    "sp_procedures" -> ((s, dir) => {
-      import s.implicits._
-      graft.engine.SpatialProcedures.registry
-        .toDF("name", "kind", "entry_point").orderBy("name")
-    }),
-
-    // fn spatial.asMap under the oracle (round-6 verdict task 9): the
-    // map-shaped geometry rendering round-trips WKB → JTS → {type,
-    // coordinates}; the oracle replays the coordinates from the fixture
-    "sp_asmap" -> ((s, dir) => {
-      val f = udf((wkb: Array[Byte]) => {
-        val m = graft.engine.SpatialProcedures.asMap(wkb)
-        val c = m("coordinates").asInstanceOf[Seq[Double]]
-        (m("type").toString, c(0), c(1))
-      })
-      pointsDf(s, dir).select(col("ck"), f(col("geometry")).as("m"))
-        .select(col("ck"), col("m._1").as("gname"),
-          col("m._2").as("cx"), col("m._3").as("cy"))
-        .orderBy(col("ck"))
-    }),
-
-    // GeoTools-parity ECQL grammar beyond the reference's own generated
-    // strings (round-6 verdict Missing #3): LIKE / NOT LIKE / IN and
-    // arithmetic inside comparisons — constructs a user migrating stored
-    // CQL from a real deployment hits first. All compile to native
-    // Columns (like/isin/arithmetic), so pushdown is unchanged
-    "sp_ecql_like" -> ((s, dir) =>
-      new GeoFrame(pointsDf(s, dir)
-          .join(T(s, dir, "customer").select(col("c_custkey").as("ck"),
-            col("c_mktsegment"), col("c_name")), Seq("ck")))
-        .filterEcql("c_mktsegment LIKE 'BUIL%' AND " +
-          "c_nationkey IN (1, 3, 5, 7, 9, 11) AND " +
-          "c_acctbal * 2 - 500 > 3000 AND " +
-          "c_name NOT LIKE '%19%'")
-        .df.groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("c_acctbal") * 100).cast("long")).as("cents"))
-        .orderBy(col("c_nationkey"))),
-
-    // ECQL long-tail parity (round-7 verdict task 8): the ID filter (bare
-    // IN over feature ids), the RELATE DE-9IM pattern predicate (exact,
-    // no bbox prune — a pattern can demand disjointness), and the
-    // GeoTools filter-function library's most-used names
-    // (strToLowerCase, abs, floor) — all through the same Column compiler
-    "sp_ecql_fn" -> ((s, dir) =>
-      new GeoFrame(pointsDf(s, dir)
-          .join(T(s, dir, "customer").select(col("c_custkey").as("ck"),
-            col("c_mktsegment"), col("c_name")), Seq("ck")))
-        .filterEcql("(IN ('11', '22', '33') OR " +
-          "(strToLowerCase(c_mktsegment) = 'building' AND " +
-          "abs(c_acctbal - 5000) <= 2000 AND " +
-          "floor(c_acctbal / 1000) IN (3, 4, 5, 6)) OR " +
-          // round-9 filter-function tail: substring/index/match/minmax/
-          // round/pow/pi through the same FunctionFinder-style registry
-          "(strEndsWith(c_name, '1') = TRUE AND " +
-          "strSubstring(c_mktsegment, 0, 4) = 'AUTO' AND " +
-          "round(min(c_acctbal, 2000.0)) >= 1999 AND " +
-          "strIndexOf(strToUpperCase(c_name), 'CUSTOMER') = 0 AND " +
-          "pow(2, 3) + pi() > 11)) AND " +
-          "RELATE(the_geom, " +
-          "POLYGON ((-90 -45, 90 -45, 90 45, -90 45, -90 -45)), " +
-          "'T********')")
-        .df.select(col("ck"), col("x"), col("y")).orderBy(col("ck"))),
-
-    // FES temporal predicates through the stored-CQL surface: AFTER an
-    // instant and BEFORE OR DURING a period over a per-customer derived
-    // first-order timestamp — the GeoTools compilation (< / <= period end)
-    // replayed by the oracle as plain timestamp comparisons
-    "sp_ecql_temporal" -> ((s, dir) =>
-      new GeoFrame(pointsDf(s, dir)
-          .join(T(s, dir, "orders").groupBy(col("o_custkey").as("ck"))
-            .agg(min(col("o_orderdate")).as("first_order")), Seq("ck")))
-        .filterEcql("first_order AFTER 1992-12-31T23:59:59Z AND " +
-          "first_order BEFORE OR DURING " +
-          "1995-01-01T00:00:00Z/1995-12-31T00:00:00Z")
-        .df.groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("c_acctbal") * 100).cast("long")).as("cents"))
-        .orderBy(col("c_nationkey"))),
-
-    // ECQL DWITHIN with METRIC units (round-5 verdict Missing #3): the
-    // units token routes through the geodesic tier — exact orthodromic
-    // distance, latitude-aware search-window prune — so a stored GeoTools
-    // filter with meters means meters; hash-matched against the
-    // withinDistanceKm oracle (1 500 000 m = the same 1500 km ball)
-    "sp_ecql_dwithin" -> ((s, dir) =>
-      new GeoFrame(pointsDf(s, dir))
-        .filterEcql("DWITHIN(the_geom, POINT (10.5 20.5), 1500000, meters)")
-        .df.select(col("ck").as("id"),
-          round(st.orthodromicKm(lit(10.5), lit(20.5), col("x"), col("y")), 3)
-            .as("dist_km"))
-        .orderBy(col("dist_km"), col("id"))),
-
-    // FilterPropertyNull / FilterPropertyNotNull pipes (reference:
-    // FilterPropertyNull.java:28, FilterPropertyNotNull.java:29) — a
-    // nullable derived property filtered both ways through the layer's
-    // filterExpr surface; balances summed as exact integer cents
-    "sp_prop_null" -> ((s, dir) => {
-      val layer = new GeoFrame(pointsDf(s, dir)
-        .withColumn("nbal", when(col("c_acctbal") < 0, lit(null)).otherwise(col("c_acctbal"))))
-      val nulls = layer.filterExpr("nbal IS NULL").df
-        .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_null"))
-      val notNulls = layer.filterExpr("nbal IS NOT NULL").df
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n_notnull"),
-          sum(round(col("nbal") * 100).cast("long")).as("cents"))
-      nulls.join(notNulls, Seq("c_nationkey"), "full")
-        .select(col("c_nationkey"),
-          coalesce(col("n_null"), lit(0L)).as("n_null"),
-          coalesce(col("n_notnull"), lit(0L)).as("n_notnull"),
-          col("cents"))
-        .orderBy(col("c_nationkey"))
-    }),
-
-    // Densify pipe (Densify.java:31): JTS splits each segment into
-    // floor(len/tol)+1 pieces — closed-form point count per nation line
-    "sp_densify_npoints" -> ((s, dir) =>
-      linesLayer(s, dir).df
-        .select(col("c_nationkey"),
-          st.numPoints(st.densify(col("geometry"), lit(0.7))).cast("long").as("n_dense"))
-        .orderBy(col("c_nationkey"))),
-
-    // OrthodromicLength pipe (OrthodromicLength.java:34-74): spherical
-    // segment-sum over each nation polyline
-    "sp_ortho_length" -> ((s, dir) =>
-      linesLayer(s, dir).df
-        .select(col("c_nationkey"),
-          round(st.orthodromicLengthKm(col("geometry")), 3).as("len_km"))
-        .orderBy(col("c_nationkey"))),
-
-    // geodesic polygon area (Chamberlain-Duquette spherical formula, the
-    // turf.js/JPL discrete form) beside the planar degree² contrast
-    "sp_geodesic_area" -> ((s, dir) =>
-      natBoxesDf(s, dir)
-        .withColumn("geometry", st.geomFromText(col("wkt")))
-        .select(col("n_nationkey").cast("long").as("n_nationkey"),
-          round(st.geodesicAreaKm2(col("geometry")), 3).as("area_km2"),
-          round(st.area(col("geometry")), 6).as("planar_deg2"))
-        .orderBy(col("n_nationkey"))),
-
-    // linear referencing: the point at fraction f of each nation polyline's
-    // planar length (ST_LineInterpolatePoint), as a pure-codegen window
-    // plan — segment lead/lag, ONE sequential running-sum pass for the
-    // cumulative length (cumBefore = lag(cum), never cum−seglen: fp
-    // subtraction would diverge from the oracle's running value), segment
-    // located by cumBefore ≤ f·total < cum, then one lerp. No geometry
-    // object is ever materialized, so a 100 TB line table interpolates in
-    // one windowed scan + a 3-row broadcast of the fraction table
-    "sp_line_interpolate" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("nk").orderBy("ck")
-      val seg = pointsDf(s, dir)
-        .select(col("c_nationkey").as("nk"), col("ck"), col("x"), col("y"))
-        .withColumn("x2", lead("x", 1).over(w))
-        .withColumn("y2", lead("y", 1).over(w))
-        .filter(col("x2").isNotNull)
-        .withColumn("seglen",
-          sqrt((col("x2") - col("x")) * (col("x2") - col("x"))
-            + (col("y2") - col("y")) * (col("y2") - col("y"))))
-        .withColumn("cum", sum("seglen").over(
-          w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)))
-        .withColumn("cumb", lag("cum", 1, 0.0).over(w))
-        .withColumn("total", max("cum").over(
-          org.apache.spark.sql.expressions.Window.partitionBy("nk")))
-      val fr = s.range(1, 4).select((col("id") * 0.25).as("frac"))
-      seg.join(fr)
-        .filter(col("cumb") <= col("frac") * col("total")
-          && col("frac") * col("total") < col("cum"))
-        .select(col("nk"), col("frac"),
-          round(col("x") + (col("x2") - col("x"))
-            * ((col("frac") * col("total") - col("cumb")) / col("seglen")), 6).as("px"),
-          round(col("y") + (col("y2") - col("y"))
-            * ((col("frac") * col("total") - col("cumb")) / col("seglen")), 6).as("py"))
-        .orderBy(col("nk"), col("frac"))
-    }),
-
-    // ST_LineSubstring's shape on the same one-window-pass machinery:
-    // the [0.2, 0.8] sub-polyline per nation — interior vertex count from
-    // EXACT comparisons on the shared running sum (f1·total < cum < f2·total)
-    // plus the two interpolated cut points, pivoted by conditional max
-    // (each guard selects exactly one row, so the aggregate is order-free)
-    "sp_line_substring" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("nk").orderBy("ck")
-      val seg = pointsDf(s, dir)
-        .select(col("c_nationkey").as("nk"), col("ck"), col("x"), col("y"))
-        .withColumn("x2", lead("x", 1).over(w))
-        .withColumn("y2", lead("y", 1).over(w))
-        .filter(col("x2").isNotNull)
-        .withColumn("seglen",
-          sqrt((col("x2") - col("x")) * (col("x2") - col("x"))
-            + (col("y2") - col("y")) * (col("y2") - col("y"))))
-        .withColumn("cum", sum("seglen").over(
-          w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)))
-        .withColumn("cumb", lag("cum", 1, 0.0).over(w))
-        .withColumn("total", max("cum").over(
-          org.apache.spark.sql.expressions.Window.partitionBy("nk")))
-      val interior = seg
-        .filter(lit(0.2) * col("total") < col("cum")
-          && col("cum") < lit(0.8) * col("total"))
-        .groupBy("nk").agg(count(lit(1)).as("n_interior"))
-      val fr = s.range(1, 5, 3).select((col("id") * 0.2).as("frac"))
-      val cuts = seg.join(fr)
-        .filter(col("cumb") <= col("frac") * col("total")
-          && col("frac") * col("total") < col("cum"))
-        .select(col("nk"), col("frac"),
-          round(col("x") + (col("x2") - col("x"))
-            * ((col("frac") * col("total") - col("cumb")) / col("seglen")), 6).as("px"),
-          round(col("y") + (col("y2") - col("y"))
-            * ((col("frac") * col("total") - col("cumb")) / col("seglen")), 6).as("py"))
-        .groupBy("nk").agg(
-          max(when(col("frac") < 0.5, col("px"))).as("sx"),
-          max(when(col("frac") < 0.5, col("py"))).as("sy"),
-          max(when(col("frac") > 0.5, col("px"))).as("ex"),
-          max(when(col("frac") > 0.5, col("py"))).as("ey"))
-      cuts.join(interior, Seq("nk"), "left")
-        .select(col("nk"),
-          (coalesce(col("n_interior"), lit(0L)) + 2L).as("n_points"),
-          col("sx"), col("sy"), col("ex"), col("ey"))
-        .orderBy(col("nk"))
-    }),
-
-    // IDW spatial interpolation (Shepard 1968, power 2): account balance
-    // surface sampled at each nation's centroid from its k=8 nearest
-    // customer points. Exactness chain: point coords are halves (sums are
-    // exact in any order), the centroid is one division of exact values,
-    // d² is the identical expression tree, the rank window tie-breaks on
-    // (d2, ck), and the 8 weight/contribution terms are pivoted into
-    // explicit columns and added in ONE fixed textual order — so the
-    // doubles match the oracle bit-for-bit before the final round. The
-    // rank filter plans as WindowGroupLimit (per-partition heaps); the
-    // 25-row centroid table broadcasts against the point scan.
-    // quadrat-count χ² test of complete spatial randomness over the FULL
-    // 36×18 10° lattice (empty quadrats count): χ² = Σ(nᵢ−μ)²/μ expanded
-    // to Σn² − 2μΣn + Qμ² over exact integer moments (only the occupied
-    // cells are ever materialized — the (Q−k)·μ² empty mass is algebra)
-    "sp_quadrat" -> ((s, dir) => {
-      val cells = pointsDf(s, dir).groupBy(
-          floor((col("x") + 180.0) / 10.0).cast("long").as("cx"),
-          floor((col("y") + 90.0) / 10.0).cast("long").as("cy"))
-        .agg(count(lit(1)).as("n"))
-      val q = 36L * 18L
-      cells.agg(count(lit(1)).as("k"), sum("n").as("s1"),
-          sum(col("n") * col("n")).as("s2"))
-        .withColumn("mu", col("s1").cast("double") / lit(q.toDouble))
-        .select(lit(q).as("quadrats"), col("k").as("occupied"),
-          col("s1").as("n_points"), round(col("mu"), 6).as("mu"),
-          round((col("s2").cast("double") -
-            lit(2.0) * col("mu") * col("s1").cast("double") +
-            lit(q.toDouble) * col("mu") * col("mu")) / col("mu"), 6)
-            .as("chi2"))
-    }),
-
-    // spatial Gini over 10° grid-cell populations — "how concentrated is
-    // the point mass": the exact rank formula (2Σ i·xᵢ − (n+1)Σx)/(nΣx)
-    // over ascending cell counts, both moments exact integers (the
-    // ev_gini discipline applied to the spatial lattice)
-    "sp_gini" -> ((s, dir) => {
-      val cells = pointsDf(s, dir).groupBy(
-          floor((col("x") + 180.0) / 10.0).cast("long").as("cx"),
-          floor((col("y") + 90.0) / 10.0).cast("long").as("cy"))
-        .agg(count(lit(1)).as("n"))
-      val ranked = cells.withColumn("i",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("n"), col("cx"), col("cy"))).cast("long"))
-      ranked.agg(count(lit(1)).as("m"), sum("n").as("sx"),
-          sum(col("i") * col("n")).as("sixi"))
-        .select(col("m").as("n_cells"), col("sx").as("n_points"),
-          round((lit(2L) * col("sixi") - (col("m") + lit(1L)) * col("sx"))
-            / (col("m") * col("sx")), 6).as("gini"))
-    }),
-
-    // Ripley's K point-pattern statistic (Ripley 1977) at r = 1,2,4,8°:
-    // exact unordered pair counts within each radius — candidates from an
-    // 8°-cell 3×3 grid self-join (cell width = max radius ⇒ adjacency is
-    // provably sufficient: |Δ| ≤ width ⇒ floor-cell diff ≤ 1), never the
-    // n² cross join the oracle replays; K̂(r) = 2·pairs·A/(n(n−1)) with
-    // A = 64800 deg². Clustered patterns push K̂ above πr². Caveat: pair
-    // volume is quadratic within the densest cell — at survey scale Ripley
-    // runs on a uniform point sample (the estimator is sample-consistent),
-    // exactly as the literature prescribes
-    "sp_ripley" -> ((s, dir) => {
-      val pts = pointsDf(s, dir).select(col("ck"), col("x"), col("y"))
-        .withColumn("cellx", floor((col("x") + 180.0) / 8.0).cast("long"))
-        .withColumn("celly", floor((col("y") + 90.0) / 8.0).cast("long"))
-      val tot = pts.agg(count(lit(1)).as("np"))
-      val offs = for { dx <- Seq(-1L, 0L, 1L); dy <- Seq(-1L, 0L, 1L) }
-        yield (dx, dy)
-      val probe = pts.select(col("ck").as("cka"), col("x").as("xa"),
-          col("y").as("ya"),
-          explode(array(offs.map { case (dx, dy) =>
-            struct(lit(dx).as("dx"), lit(dy).as("dy")) }: _*)).as("o"),
-          col("cellx"), col("celly"))
-        .select(col("cka"), col("xa"), col("ya"),
-          (col("cellx") + col("o.dx")).as("cellx"),
-          (col("celly") + col("o.dy")).as("celly"))
-      val cnts = probe.join(pts.select(col("ck").as("ckb"), col("x").as("xb"),
-          col("y").as("yb"), col("cellx"), col("celly")), Seq("cellx", "celly"))
-        .filter(col("cka") < col("ckb"))
-        .withColumn("d2", (col("xa") - col("xb")) * (col("xa") - col("xb")) +
-          (col("ya") - col("yb")) * (col("ya") - col("yb")))
-        .agg(sum(when(col("d2") <= 1.0, 1L).otherwise(0L)).as("p1"),
-          sum(when(col("d2") <= 4.0, 1L).otherwise(0L)).as("p2"),
-          sum(when(col("d2") <= 16.0, 1L).otherwise(0L)).as("p4"),
-          sum(when(col("d2") <= 64.0, 1L).otherwise(0L)).as("p8"))
-      cnts.crossJoin(tot)
-        .select(explode(array(
-          struct(lit(1L).as("r"), col("p1").as("pairs")),
-          struct(lit(2L).as("r"), col("p2").as("pairs")),
-          struct(lit(4L).as("r"), col("p4").as("pairs")),
-          struct(lit(8L).as("r"), col("p8").as("pairs")))).as("e"), col("np"))
-        .select(col("e.r").as("r"), col("e.pairs").as("pairs"),
-          round(col("e.pairs").cast("double") * 2.0 * 64800.0 /
-            (col("np").cast("double") * (col("np") - 1).cast("double")), 6)
-            .as("k_est"))
-        .orderBy("r")
-    }),
-
-    // global Moran's I spatial autocorrelation (Moran 1950) over the 10°
-    // grid with 8-neighbor (queen) weights on non-empty cells: the
-    // cross-product Σ wij·(xi−x̄)(xj−x̄) is EXPANDED into the exact integer
-    // moments P=Σ xi·xj, Q=Σ (xi+xj), W=|pairs| so no float accumulates in
-    // any order-dependent sum — I = (N/W)·(P − x̄Q + x̄²W)/(S2 − N·x̄²).
-    // One 8-offset keyed self-join, one scalar row out (I and E[I])
-    "sp_moran" -> ((s, dir) => {
-      val cells = pointsDf(s, dir).groupBy(
-          floor((col("x") + 180.0) / 10.0).cast("long").as("cx"),
-          floor((col("y") + 90.0) / 10.0).cast("long").as("cy"))
-        .agg(count(lit(1)).as("n"))
-      val gs = cells.agg(count(lit(1)).as("nn"),
-        sum("n").as("s1"), sum(col("n") * col("n")).as("s2"))
-      val offs = for { dx <- Seq(-1L, 0L, 1L); dy <- Seq(-1L, 0L, 1L)
-        if !(dx == 0 && dy == 0) } yield (dx, dy)
-      val nbr = cells.select(col("cx"), col("cy"), col("n"),
-          explode(array(offs.map { case (dx, dy) =>
-            struct(lit(dx).as("dx"), lit(dy).as("dy")) }: _*)).as("o"))
-        .select((col("cx") + col("o.dx")).as("jcx"),
-          (col("cy") + col("o.dy")).as("jcy"), col("n").as("ni"))
-      val pairs = nbr.join(cells.select(col("cx").as("jcx"),
-          col("cy").as("jcy"), col("n").as("nj")), Seq("jcx", "jcy"))
-        .agg(sum(col("ni") * col("nj")).as("p"),
-          sum(col("ni") + col("nj")).as("q"), count(lit(1)).as("w"))
-      val nd = col("nn").cast("double")
-      val xbar = col("s1").cast("double") / nd
-      pairs.crossJoin(gs)
-        .select(col("nn").as("n_cells"), col("w").as("n_pairs"),
-          round((nd / col("w").cast("double")) *
-            (col("p").cast("double") - xbar * col("q").cast("double") +
-              xbar * xbar * col("w").cast("double")) /
-            (col("s2").cast("double") - nd * xbar * xbar), 6).as("moran_i"),
-          round(lit(-1.0) / (nd - 1), 6).as("e_i"))
-    }),
-
-    // Getis–Ord Gi* hot-spot statistic over the 10° point grid (Getis &
-    // Ord, Geo. Analysis 1992): z-score of each cell's 3×3-neighborhood
-    // mass against the lattice mean — the spatial-statistics "where are
-    // the significant clusters" readout beside the raw density islands.
-    // Lattice = non-empty cells (documented); S_i/W_i/moments are exact
-    // integers, z is a fixed tree over them. Plan: cell counts map-side
-    // combine, the neighborhood sum is a 9-way offset explode + keyed
-    // self-join (never a spatial cross join), top-15 is a TakeOrdered
-    "sp_hotspot" -> ((s, dir) => {
-      val cells = pointsDf(s, dir).groupBy(
-          floor((col("x") + 180.0) / 10.0).cast("long").as("cx"),
-          floor((col("y") + 90.0) / 10.0).cast("long").as("cy"))
-        .agg(count(lit(1)).as("n"))
-      val glob = cells.agg(count(lit(1)).as("nn"),
-        sum("n").as("s1"), sum(col("n") * col("n")).as("s2"))
-      val offs = Seq(-1L, 0L, 1L)
-      val contrib = cells.select(col("cx"), col("cy"), col("n"),
-          explode(array(offs.flatMap(dx => offs.map(dy =>
-            struct(lit(dx).as("dx"), lit(dy).as("dy")))): _*)).as("o"))
-        .select((col("cx") + col("o.dx")).as("ccx"),
-          (col("cy") + col("o.dy")).as("ccy"), col("n"))
-      val hood = contrib
-        .join(cells.select(col("cx").as("ccx"), col("cy").as("ccy")), Seq("ccx", "ccy"))
-        .groupBy(col("ccx").as("cx"), col("ccy").as("cy"))
-        .agg(sum("n").as("si"), count(lit(1)).as("wi"))
-      val nd = col("nn").cast("double")
-      val xbar = col("s1").cast("double") / nd
-      val sdev = sqrt(col("s2").cast("double") / nd - xbar * xbar)
-      val wid = col("wi").cast("double")
-      hood.crossJoin(glob)
-        .withColumn("z",
-          (col("si").cast("double") - xbar * wid) /
-            (sdev * sqrt((nd * wid - wid * wid) / (nd - 1))))
-        .select(col("cx"), col("cy"), col("si"), col("wi"),
-          round(col("z"), 6).as("gi_z"))
-        .orderBy(col("gi_z").desc, col("cx"), col("cy")).limit(15)
-    }),
-
-    // per-nation skyline (Pareto front) over (distance-to-centroid,
-    // account balance) — the classic spatial-DB preference query
-    // (Börzsönyi ICDE'01), as the sort-filter-skyline plan: one (nk, d2)
-    // group-max, one window over DISTINCT-d2 groups (rows-frame ⇒ strictly
-    // smaller d2), survive iff cents ≥ that running max. Strict dominance
-    // (both coordinates strictly better), so ties never dominate; all
-    // comparisons are on exact cents and bit-identical d2 doubles
-    "sp_skyline" -> ((s, dir) => {
-      val base = pointsDf(s, dir)
-      val pts = base.select(col("c_nationkey").cast("long").as("nk"), col("ck"),
-        round(col("c_acctbal") * 100).cast("long").as("cents"),
-        col("x"), col("y"))
-      val cen = base.groupBy(col("c_nationkey").cast("long").as("cnk"))
-        .agg((sum("x") / count(lit(1))).as("cx"),
-          (sum("y") / count(lit(1))).as("cy"))
-      val d = pts.join(broadcast(cen), col("nk") === col("cnk"))
-        .withColumn("d2",
-          (col("x") - col("cx")) * (col("x") - col("cx")) +
-            (col("y") - col("cy")) * (col("y") - col("cy")))
-      val g = d.groupBy("nk", "d2").agg(max("cents").as("gmax"))
-      val wg = org.apache.spark.sql.expressions.Window
-        .partitionBy("nk").orderBy("d2")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      val gp = g.withColumn("pmax", max("gmax").over(wg))
-        .select(col("nk"), col("d2"), col("pmax"))
-      d.join(gp, Seq("nk", "d2"))
-        .filter(col("pmax").isNull || col("cents") >= col("pmax"))
-        .select(col("nk"), col("ck"), col("cents"), round(col("d2"), 6).as("d2"))
-        .orderBy("nk", "d2", "ck")
-    }),
-
-    // discrete Voronoi partition: every customer point assigned to its
-    // nearest nation-centroid site (argmin over (d2, site) — site id breaks
-    // exact-distance ties, so the discrete decision is engine-independent),
-    // then per-cell exact-integer stats. Sites broadcast; the per-point
-    // argmin is a map-side-combinable struct-min, never a window over the
-    // fan-out — the 100 TB nearest-site plan. Centroids are exact: x/y are
-    // halves, so their double sums are exact before the one division.
-    "sp_voronoi" -> ((s, dir) => {
-      val base = pointsDf(s, dir)
-      val pts = base.select(col("ck"), col("x"), col("y"),
-        round(col("c_acctbal") * 100).cast("long").as("cents"))
-      val cen = base.groupBy(col("c_nationkey").as("site"))
-        .agg((sum("x") / count(lit(1))).as("cx"),
-          (sum("y") / count(lit(1))).as("cy"))
-      pts.crossJoin(broadcast(cen))
-        .withColumn("d2",
-          (col("x") - col("cx")) * (col("x") - col("cx")) +
-            (col("y") - col("cy")) * (col("y") - col("cy")))
-        .groupBy("ck", "x", "y", "cents")
-        .agg(min(struct(col("d2"), col("site"))).as("m"))
-        .select(col("ck"), col("x"), col("y"), col("cents"),
-          col("m.site").as("site"))
-        .groupBy("site")
-        .agg(count(lit(1)).as("n_pts"), sum("cents").as("cents"),
-          min("x").as("min_x"), max("x").as("max_x"),
-          min("y").as("min_y"), max("y").as("max_y"))
-        .orderBy("site")
-    }),
-
-    "sp_idw" -> ((s, dir) => {
-      val pts = pointsDf(s, dir).select(col("c_nationkey").as("nk"),
-        col("ck"), col("x"), col("y"),
-        round(col("c_acctbal") * 100).cast("long").as("cents"))
-      val cen = pts.groupBy(col("nk").as("cnk"))
-        .agg((sum("x") / count(lit(1))).as("cx"),
-          (sum("y") / count(lit(1))).as("cy"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("cnk").orderBy(col("d2"), col("ck"))
-      val ranked = pts.join(broadcast(cen), col("nk") === col("cnk"))
-        .withColumn("d2", greatest(
-          (col("x") - col("cx")) * (col("x") - col("cx"))
-            + (col("y") - col("cy")) * (col("y") - col("cy")), lit(1e-12)))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 8)
-        .withColumn("wt", lit(1.0) / col("d2"))
-        .withColumn("cw", col("wt") * col("cents"))
-      def term(c: String, i: Int) =
-        coalesce(max(when(col("rn") === i, col(c))), lit(0.0))
-      val sw = (1 to 8).map(term("wt", _)).reduce(_ + _)
-      val scw = (1 to 8).map(term("cw", _)).reduce(_ + _)
-      ranked.groupBy(col("cnk").as("nk"))
-        .agg(count(lit(1)).as("k"), round(scw / sw, 4).as("idw_cents"))
-        .orderBy("nk")
-    }),
-
-    // forward azimuths along each nation polyline: first / min / max
-    // bearing per nation (order-free exact aggregates of identical double
-    // sets), pure codegen Column arithmetic
-    "sp_bearing" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("c_nationkey").orderBy("ck")
-      pointsDf(s, dir)
-        .select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .withColumn("px", lag(col("x"), 1).over(w))
-        .withColumn("py", lag(col("y"), 1).over(w))
-        .filter(col("px").isNotNull)
-        .withColumn("b", st.bearingDeg(col("px"), col("py"), col("x"), col("y")))
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n_seg"),
-          round(expr("min_by(b, ck)"), 6).as("b_first"),
-          round(min(col("b")), 6).as("b_min"),
-          round(max(col("b")), 6).as("b_max"))
-        .orderBy(col("c_nationkey"))
-    }),
-
-    // Ellipsoidal sibling of sp_ortho_length: Andoyer-Lambert WGS84 geodesic
-    // segment-sum — closes the documented sphere-vs-ellipsoid ~0.3% gap
-    // (the reference's GeodeticCalculator path, OrthodromicLength.java:34-74)
-    "sp_geodesic_length" -> ((s, dir) =>
-      linesLayer(s, dir).df
-        .select(col("c_nationkey"),
-          round(st.geodesicLengthKm(col("geometry")), 3).as("len_km"))
-        .orderBy(col("c_nationkey"))),
-
-    // MVT tile bake: quantize points into the zoom-3 equirectangular
-    // pyramid (every quantized coordinate a small-denominator rational →
-    // bit-identical across engines), ENCODE each tile as a real Mapbox
-    // Vector Tile on executors (groupByKey(tile).mapGroups — the
-    // embarrassingly parallel bake), then DECODE the protobuf bytes back
-    // and aggregate — the oracle recomputes the same quantization
-    // relationally, so the roundtrip gates the whole codec
-    "sp_mvt_bake" -> ((s, dir) => {
-      import s.implicits._
-      import graft.sources.Mvt
-      val scale = (1 << 3) * Mvt.Extent   // zoom 3: 8 tiles per axis
-      val quant = pointsDf(s, dir)
-        .withColumn("fgx", floor((col("x") + 180.0) / 360.0 * scale))
-        .withColumn("fgy", floor((lit(90.0) - col("y")) / 180.0 * scale))
-        .select(col("ck"), col("c_nationkey"),
-          floor(col("fgx") / Mvt.Extent).cast("int").as("tx"),
-          floor(col("fgy") / Mvt.Extent).cast("int").as("ty"),
-          (col("fgx") - lit(Mvt.Extent) * floor(col("fgx") / Mvt.Extent)).cast("int").as("px"),
-          (col("fgy") - lit(Mvt.Extent) * floor(col("fgy") / Mvt.Extent)).cast("int").as("py"))
-      val tiles = quant.select(col("tx"), col("ty"), col("ck"), col("px"), col("py"),
-          col("c_nationkey"))
-        .as[(Int, Int, Long, Int, Int, Int)]
-        .groupByKey(r => (r._1, r._2))
-        .mapGroups { (key: (Int, Int), it: Iterator[(Int, Int, Long, Int, Int, Int)]) =>
-          val feats = it.map(r =>
-            Mvt.PointFeature(r._3, r._4, r._5, Seq("nk" -> r._6.toLong))).toSeq
-          (key._1, key._2, Mvt.encodeTile("customers", feats))
-        }
-      tiles.flatMap { case (tx, ty, bytes) =>
-          Mvt.decodeTile(bytes).flatMap { case (_, fs) =>
-            fs.map(f => (tx, ty, f.id, f.px, f.py, f.attrs.head._2)) }
-        }
-        .toDF("tx", "ty", "id", "px", "py", "nk")
-        .groupBy(col("tx").cast("long").as("tx"), col("ty").cast("long").as("ty"))
-        .agg(count(lit(1)).as("n_feat"),
-          sum(col("px")).as("sum_px"), sum(col("py")).as("sum_py"),
-          sum(col("id")).as("sum_id"), sum(col("nk")).as("sum_nk"))
-        .orderBy(col("tx"), col("ty"))
-    }),
-
-    // MVT LINESTRING bake on the true slippy Web-Mercator pyramid (zoom 2,
-    // ty from st.mercatorY): per-nation wandering polylines on a
-    // quarter-degree lattice are quantized to global pixels, split into
-    // per-tile vertex runs (vertex-partition clip: consecutive same-tile
-    // vertices form a sub-line; runs of 1 drop — no edge clipping, as
-    // documented), encoded as MoveTo+LineTo command streams with the
-    // cursor persisting across parts, then decode-roundtripped and
-    // aggregated per tile. Any zigzag/cursor/ClosePath bug breaks the sums.
-    // Nation centers stay within ±52°, so no mercator clip is needed and
-    // every quantized value is deterministic same-expression-tree float.
-    "sp_mvt_lines" -> ((s, dir) => {
-      import s.implicits._
-      import graft.sources.Mvt
-      val z = 2
-      val scale = (1 << z) * Mvt.Extent      // 16384 global pixels per axis
-      val radius = graft.geom.Mercator.RadiusM
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("nk").orderBy("ck")
-      val verts = T(s, dir, "customer").select(
-          col("c_custkey").as("ck"), col("c_nationkey").as("nk"))
-        .withColumn("x", (col("nk") % 8).cast("double") * 45.0 - 180.0 + 22.5
-          + ((col("ck") % 16).cast("double") - 7.5) * 0.25)
-        .withColumn("y", ((col("nk") * 7) % 6).cast("double") * 20.0 - 60.0 + 10.0
-          + (((col("ck") * 3) % 12).cast("double") - 5.5) * 0.25)
-      val quant = verts
-        .withColumn("gx", floor((col("x") + 180.0) / 360.0 * scale))
-        .withColumn("yn", st.mercatorY(col("y")) / lit(radius) / lit(math.Pi))
-        .withColumn("gy", floor((lit(1.0) - col("yn")) / 2.0 * scale))
-        .select(col("ck"), col("nk"),
-          expr(s"gx DIV ${Mvt.Extent}").as("tx"),
-          expr(s"gy DIV ${Mvt.Extent}").as("ty"),
-          expr(s"gx % ${Mvt.Extent}").cast("int").as("px"),
-          expr(s"gy % ${Mvt.Extent}").cast("int").as("py"))
-      val runs = quant
-        .withColumn("ptx", lag(col("tx"), 1).over(w))
-        .withColumn("pty", lag(col("ty"), 1).over(w))
-        .withColumn("brk", when(col("ptx").isNull
-          || col("ptx") =!= col("tx") || col("pty") =!= col("ty"), 1L).otherwise(0L))
-        .withColumn("run", sum(col("brk")).over(
-          w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      val parts = runs
-        .groupBy(col("nk"), col("run"), col("tx"), col("ty"))
-        .agg(count(lit(1)).as("nv"),
-          sort_array(collect_list(struct(col("ck"), col("px"), col("py")))).as("vs"))
-        .filter(col("nv") >= 2)
-        .withColumn("fid", col("nk").cast("long") * 10000L + col("run"))
-      val tiles = parts
-        .select(col("tx"), col("ty"), col("fid"), col("nk"), col("vs"))
-        .as[(Long, Long, Long, Int, Seq[(Long, Int, Int)])]
-        .groupByKey(r => (r._1, r._2))
-        .mapGroups { (key: (Long, Long), it: Iterator[(Long, Long, Long, Int, Seq[(Long, Int, Int)])]) =>
-          val feats = it.map(r => Mvt.Feature(r._3, 2,
-            Seq(r._5.map(v => (v._2, v._3))), Seq("nk" -> r._4.toLong))).toSeq
-          (key._1, key._2, Mvt.encodeTileF("nations", feats))
-        }
-      val decoded = tiles.flatMap { case (tx, ty, bytes) =>
-          Mvt.decodeTileF(bytes).flatMap { case (_, fs) =>
-            fs.flatMap(f => f.parts.flatten.map(v =>
-              (tx, ty, f.id, v._1, v._2))) }
-        }.toDF("tx", "ty", "fid", "px", "py")
-      decoded
-        .groupBy(col("tx"), col("ty"), col("fid"))
-        .agg(count(lit(1)).as("nv"), sum(col("px")).as("spx"), sum(col("py")).as("spy"))
-        .groupBy(col("tx"), col("ty"))
-        .agg(count(lit(1)).as("n_feat"), sum(col("nv")).as("n_vert"),
-          sum(col("spx")).as("sum_px"), sum(col("spy")).as("sum_py"),
-          sum(col("fid")).as("sum_id"))
-        .orderBy(col("tx"), col("ty"))
-    }),
-
-    // MVT POLYGON bake at zoom 0 (the whole world is the one 0/0 tile —
-    // the single encode group is inherent to the zoom level, not the plan;
-    // deeper zooms group by tile exactly as sp_mvt_lines does): each
-    // nation's pixel bbox becomes a 4-corner CW exterior ring encoded with
-    // MoveTo+LineTo+ClosePath, and the decode side recovers vertex count,
-    // SIGNED shoelace area (proves ring order + implicit closure survived
-    // the codec), Manhattan perimeter and coordinate sums.
-    "sp_mvt_poly" -> ((s, dir) => {
-      import s.implicits._
-      import graft.sources.Mvt
-      val scale = Mvt.Extent
-      val radius = graft.geom.Mercator.RadiusM
-      val verts = T(s, dir, "customer").select(
-          col("c_custkey").as("ck"), col("c_nationkey").as("nk"))
-        .withColumn("x", (col("nk") % 8).cast("double") * 45.0 - 180.0 + 22.5
-          + ((col("ck") % 16).cast("double") - 7.5) * 0.25)
-        .withColumn("y", ((col("nk") * 7) % 6).cast("double") * 20.0 - 60.0 + 10.0
-          + (((col("ck") * 3) % 12).cast("double") - 5.5) * 0.25)
-      val quant = verts
-        .withColumn("gx", floor((col("x") + 180.0) / 360.0 * scale))
-        .withColumn("yn", st.mercatorY(col("y")) / lit(radius) / lit(math.Pi))
-        .withColumn("gy", floor((lit(1.0) - col("yn")) / 2.0 * scale))
-      val boxes = quant.groupBy(col("nk"))
-        .agg(min(col("gx")).as("x0"), max(col("gx")).as("x1"),
-          min(col("gy")).as("y0"), max(col("gy")).as("y1"))
-        .filter(col("x1") > col("x0") && col("y1") > col("y0"))
-      val tile = boxes
-        .select(col("nk"), col("x0").cast("int"), col("x1").cast("int"),
-          col("y0").cast("int"), col("y1").cast("int"))
-        .as[(Int, Int, Int, Int, Int)]
-        .groupByKey(_ => 0)
-        .mapGroups { (_: Int, it: Iterator[(Int, Int, Int, Int, Int)]) =>
-          val feats = it.map { case (nk, x0, x1, y0, y1) =>
-            Mvt.Feature(nk.toLong, 3,
-              Seq(Seq((x0, y0), (x1, y0), (x1, y1), (x0, y1))),
-              Seq("nk" -> nk.toLong))
-          }.toSeq
-          Mvt.encodeTileF("nation_boxes", feats)
-        }
-      tile.flatMap { bytes =>
-          Mvt.decodeTileF(bytes).flatMap { case (_, fs) =>
-            fs.map { f =>
-              val ring = f.parts.head
-              val n = ring.size
-              var area2 = 0L; var perim = 0L; var sx = 0L; var sy = 0L
-              var i = 0
-              while (i < n) {
-                val (xa, ya) = ring(i); val (xb, yb) = ring((i + 1) % n)
-                area2 += xa.toLong * yb - xb.toLong * ya
-                perim += math.abs(xb - xa).toLong + math.abs(yb - ya).toLong
-                sx += xa; sy += ya
-                i += 1
-              }
-              (f.id, n.toLong, area2 / 2L, perim, sx, sy)
-            } }
-        }
-        .toDF("nk", "n_vert", "area", "perim", "sum_px", "sum_py")
-        .orderBy(col("nk"))
-    }),
-
-    // Web-Mercator (EPSG:3857) reprojection — planar meter length of each
-    // nation polyline in projected space plus the forward/inverse roundtrip
-    // error, entirely HOT-tier Column arithmetic (no UDF: radians/ln/tan/
-    // atan/exp all codegen), mirroring the slippy-map CRS the tile pyramid
-    // assumes
-    "sp_mercator_length" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("c_nationkey").orderBy("ck")
-      pointsDf(s, dir)
-        .select(col("ck"), col("c_nationkey"), col("y"),
-          st.mercatorX(col("x")).as("mx"), st.mercatorY(col("y")).as("my"))
-        .withColumn("px", lag(col("mx"), 1).over(w))
-        .withColumn("py", lag(col("my"), 1).over(w))
-        .groupBy(col("c_nationkey"))
-        .agg(
-          round(sum(sqrt((col("mx") - col("px")) * (col("mx") - col("px")) +
-            (col("my") - col("py")) * (col("my") - col("py")))) / 1000.0, 2).as("len_km"),
-          round(max(abs(col("y") - st.mercatorLat(st.mercatorY(col("y"))))), 9)
-            .as("max_rt_err_deg"))
-        .orderBy(col("c_nationkey"))
-    }),
-
-    // Shazam-style constellation matching over REAL WAV audio (round-9
-    // promotion) with planted duplicates (seedOf folds every 9th audio id
-    // onto id−3 — byte-DIFFERENT streams via the id-keyed comment chunk,
-    // identical samples): per-window argmax peaks → (pa, pb, dt) hashes →
-    // banded join ON THE HASH (the inverted-index shape, never all-pairs
-    // audio) → modal-offset verify. The 33 planted pairs must surface at
-    // offset 0 with all 18 hashes
-    "mm_audio_match" -> ((s, dir) => {
-      val media = Multimodal.syntheticAudioWav(s, 300,
-        seedOf = i => if (i % 9 == 4) i - 3 else i)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "wav")
-      try Multimodal.constellationMatches(media)
-      finally s.conf.set("spark.graft.mm.codec", prev)
-    }),
-
-    // audio waveform windowing over REAL PCM (round-9 promotion): RIFF
-    // parse → 16-bit samples → fixed windows → per-window sum/peak (the
-    // VAD/loudness shape); the lossless amplitude pattern replays in SQL
-    "mm_audio" -> ((s, dir) => {
-      val media = Multimodal.syntheticAudioWav(s, 300)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "wav")
-      val wv =
-        try Multimodal.sampleWaveform(media, windows = 8, samplesPerWindow = 32)
-        finally s.conf.set("spark.graft.mm.codec", prev)
-      wv.select(col("media_id"), col("window_idx").cast("long").as("window_idx"),
-          round(col("sample_sum"), 4).as("sample_sum"),
-          round(col("peak"), 6).as("peak"))
-        .orderBy(col("media_id"), col("window_idx"))
-    }),
-
-    // energy-threshold VAD segmentation over REAL PCM (round-9 promotion):
-    // active windows (mean amplitude > 0.5) merged into maximal per-media
-    // runs (gaps-and-islands) — the ASR silence-removal pass; the loud/
-    // quiet fixture pattern gives clean 0.28/0.83-mean margins and exact
-    // amplitude sums, so the threshold replays order-free in the oracle
-    "mm_vad" -> ((s, dir) => {
-      val media = Multimodal.syntheticAudioWav(s, 300)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "wav")
-      val segs =
-        try Multimodal.vadSegments(media, windows = 8, samplesPerWindow = 32,
-          threshold = 0.5)
-        finally s.conf.set("spark.graft.mm.codec", prev)
-      segs.orderBy(col("media_id"), col("seg_idx"))
-    }),
-
-    // frame sampling over video-kind media — REAL by default (round-9
-    // promotion): container slice → PNG decode per frame; the oracle
-    // replays the lossless frame pattern in integer SQL
-    "mm_frames" -> ((s, dir) => {
-      val media = Multimodal.syntheticVideoPng(s, 300, frames = 4)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val frames =
-        try Multimodal.sampleFrames(media, n = 4, w = 16, h = 16)
-        finally s.conf.set("spark.graft.mm.codec", prev)
-      frames
-        .select(col("media_id"), col("frame_idx").cast("long").as("frame_idx"),
-          round(aggregate(col("pixels"), lit(0.0d), (a, v) => a + v.cast("double")), 4).as("pixel_sum"))
-        .orderBy(col("media_id"), col("frame_idx"))
-    }),
-
-    // REAL decode → box-filter RESIZE (8×8 → 4×4): destination pixels are
-    // exact level-sum quarters, recovered losslessly for the
-    // position-weighted checksum the oracle replays from the PNG pattern
-    "mm_resize" -> ((s, dir) => {
-      val media = Multimodal.syntheticImagePng(s, 300)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val px =
-        try Multimodal.decodeAndFeaturize(media, w = 8, h = 8)
-        finally s.conf.set("spark.graft.mm.codec", prev)
-      Multimodal.boxResize(px, srcW = 8, srcH = 8, dstW = 4, dstH = 4)
-        .select(col("media_id"),
-          expr("""aggregate(zip_with(pixels, sequence(1, 16),
-                 |  (p, i) -> CAST(i AS BIGINT) * CAST(round(CAST(p AS DOUBLE) * 1020) AS BIGINT)),
-                 |  0L, (acc, v) -> acc + v)""".stripMargin).as("checksum"),
-          size(col("pixels")).cast("long").as("n_px"))
-        .orderBy(col("media_id"))
-    }),
-
-    // the full multimodal→embedding→ANN composition: stub-decode images to
-    // 8×8 pixels, pool 8 blocks of 8 into an EXACT integer embedding
-    // (recovered pixel levels sum losslessly), then brute-force cosine
-    // top-3 — integer dots/norms make every cosine one IEEE op chain, so
-    // ranks are bit-deterministic across engines, swap the stub for a real
-    // CNN and the dataflow is unchanged
-    "mm_embed_knn" -> ((s, dir) => {
-      val media = Multimodal.syntheticImagePng(s, 300)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val decoded =
-        try Multimodal.decodeAndFeaturize(media, w = 8, h = 8)
-        finally s.conf.set("spark.graft.mm.codec", prev)
-      val emb = decoded
-        .select(col("media_id"), expr(
-          """transform(sequence(0, 7), b -> aggregate(slice(pixels, b*8 + 1, 8), 0L,
-            |  (acc, v) -> acc + CAST(round(CAST(v AS DOUBLE) * 255) AS BIGINT)))""".stripMargin)
-          .as("emb"))
-        .withColumn("nrm", sqrt(expr("aggregate(emb, 0L, (a, v) -> a + v*v)").cast("double")))
-      val bSide = emb.select(col("media_id").as("b_id"), col("emb").as("b_emb"), col("nrm").as("b_n"))
-      val pairs = emb.join(broadcast(bSide), col("media_id") =!= col("b_id"))
-        .withColumn("dot",
-          expr("aggregate(zip_with(emb, b_emb, (x, y) -> x*y), 0L, (acc, v) -> acc + v)").cast("double"))
-        .withColumn("cos", col("dot") / (col("nrm") * col("b_n")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("media_id").orderBy(col("cos").desc, col("b_id"))
-      pairs.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
-        .select(col("media_id"), col("rk").cast("long").as("rk"),
-          col("b_id").as("nbr"), round(col("cos"), 6).as("cos"))
-        .orderBy(col("media_id"), col("rk"))
-    }),
-
-    // SimplifyWithDouglasPeucker / Reverse / FilterEqualNorm pipes: tolerance
-    // 500 exceeds any chord deviation on the ±180×±90 lattice, so an open
-    // line always simplifies to its 2 endpoints; a reversed line normalizes
-    // equal to the original
-    "sp_simplify_reverse" -> ((s, dir) =>
-      linesLayer(s, dir).df
-        .select(col("c_nationkey"),
-          st.numPoints(st.simplify(col("geometry"), lit(500.0))).cast("long").as("n_dp"),
-          st.x(st.startPoint(st.reverse(col("geometry")))).as("rev_sx"),
-          st.y(st.startPoint(st.reverse(col("geometry")))).as("rev_sy"),
-          st.equalsNorm(col("geometry"), st.reverse(col("geometry")), lit(0.0)).as("eq_norm_rev"))
-        .orderBy(col("c_nationkey"))),
-
-    // GML/KML writer pipes (GML.java:30-48, KeyholeMarkupLanguage.java:32-55):
-    // coordinate-token counts in the emitted markup must equal the row count
-    "sp_gml_kml" -> ((s, dir) =>
-      linesLayer(s, dir).df
-        .select(col("c_nationkey"),
-          size(split(regexp_extract(st.asKml(col("geometry")),
-            "<coordinates>([^<]*)</coordinates>", 1), " ")).cast("long").as("kml_pts"),
-          size(split(regexp_extract(st.asGml(col("geometry")),
-            "<gml:coordinates>([^<]*)</gml:coordinates>", 1), " ")).cast("long").as("gml_pts"))
-        .orderBy(col("c_nationkey"))),
-
-    // Boundary-lattice predicate matrix: every remaining filter/processing
-    // pipe under one closed-form oracle. Per row: a 1.5×1.5 box
-    // B=[x,x+1.5]×[y,y+1.5] (the half-overhang makes PROPER overlap with the
-    // aligned rectangle actually occur — a unit box would always be covered
-    // or touching), diagonal segment, bowtie (self-intersecting) ring, and a
-    // ±400 big box, against R=[0.5,30.5]×[-10.5,40.5] whose boundary passes
-    // through lattice coordinates — so touch/overlap/cover/cross outcomes
-    // are exact interval arithmetic in DuckDB.
-    // (reference: pipes/filtering/FilterTouch.java:29, FilterOverlap.java:29,
-    // FilterCross.java:29, FilterCover.java:29, FilterCoveredBy.java:29,
-    // FilterDisjoint.java:29, FilterEqualExact.java:30, FilterEqualTopo.java:30,
-    // FilterInvalid.java:29, processing/InteriorPoint.java:29,
-    // SimplifyPreservingTopology.java:31, ExtractGeometries.java:28,
-    // IntersectAll.java:30)
-    "sp_predicate_lattice" -> ((s, dir) => {
-      val rect = lit(GeomCodec.toWkb(GeomCodec.fromWkt(LatticeRectWkt)))
-      val vline = lit(GeomCodec.toWkb(GeomCodec.fromWkt("LINESTRING (10.25 -200, 10.25 200)")))
-      val p0 = lit(GeomCodec.toWkb(GeomCodec.point(10.5, 20.5)))
-      val xs = col("x").cast("string"); val ys = col("y").cast("string")
-      val x1s = (col("x") + 1).cast("string"); val y1s = (col("y") + 1).cast("string")
-      val sp = lit(" "); val cm = lit(", ")
-      pointsLayer(s, dir).df
-        .withColumn("bx", st.makeBox(col("x"), col("y"), col("x") + 1.5, col("y") + 1.5))
-        .withColumn("diag", st.makeLine(col("x"), col("y"), col("x") + 1, col("y") + 1))
-        .withColumn("bowtie", st.geomFromText(concat(
-          lit("POLYGON (("), xs, sp, ys, cm, x1s, sp, y1s, cm,
-          x1s, sp, ys, cm, xs, sp, y1s, cm, xs, sp, ys, lit("))"))))
-        .withColumn("big", st.makeBox(col("x") - 400, col("y") - 400, col("x") + 400, col("y") + 400))
-        .groupBy(col("c_nationkey"))
-        .agg(
-          count(when(st.touches(col("bx"), rect), 1)).as("n_touch"),
-          count(when(st.overlaps(col("bx"), rect), 1)).as("n_overlap"),
-          count(when(st.crosses(col("diag"), vline), 1)).as("n_cross"),
-          count(when(st.covers(rect, col("bx")), 1)).as("n_cover"),
-          count(when(st.coveredBy(col("bx"), rect), 1)).as("n_covby"),
-          count(when(st.disjoint(col("geometry"), rect), 1)).as("n_disj"),
-          count(when(st.equalsExact(col("geometry"), p0, lit(0.0)), 1)).as("n_eq"),
-          count(when(st.equalsTopo(col("geometry"), p0), 1)).as("n_topo"),
-          count(when(st.equalsExact(col("diag"), st.reverse(col("diag")), lit(0.0)), 1)).as("n_xrev"),
-          count(when(st.equalsTopo(col("diag"), st.reverse(col("diag"))), 1)).as("n_trev"),
-          count(when(st.isValid(col("bx")), 1)).as("n_valid"),
-          count(when(!st.isValid(col("bowtie")), 1)).as("n_inval"),
-          sum((st.x(st.interiorPoint(col("bx"))) - col("x")) * 4).cast("long").as("ip4"),
-          count(when(st.numPoints(st.simplifyPreserveTopology(
-            st.densify(col("diag"), lit(0.7)), lit(500.0))) === 2, 1)).as("n_tps"),
-          sum(size(st.extractGeometries(st.symDifference(col("bx"), rect)))).cast("long").as("symp"),
-          SpatialAggs.intersectAgg(col("big")).as("ia"))
-        .select(col("c_nationkey"), col("n_touch"), col("n_overlap"), col("n_cross"),
-          col("n_cover"), col("n_covby"), col("n_disj"), col("n_eq"), col("n_topo"),
-          col("n_xrev"), col("n_trev"), col("n_valid"), col("n_inval"), col("ip4"),
-          col("n_tps"), col("symp"), round(st.area(col("ia")), 6).as("ia_area"))
-        .orderBy(col("c_nationkey"))
-    }),
-
-    // Ingest under the oracle: the OSM XML is GENERATED from the customer
-    // lattice (nodes = points, one tagged way per nation in ck order), then
-    // flows through the REAL import path — StAX parse → staging DFs →
-    // assembleWays → geometry build — and the oracle replays node counts,
-    // way lengths and tag values from `customer` directly. Matches the
-    // reference's golden-data checks (osm tests TestOSMImportBase
-    // .checkOSMLayer:79: index count == feature count).
-    // WARC crawl-archive ingestion (sources/Warc.scala): the fixture is a
-    // real 4-shard WARC/1.1 corpus derived from `documents` (2 plain
-    // shards + 2 record-per-gzip-member .warc.gz shards; response records
-    // carry genuine HTTP messages, every 5th doc adds a request record,
-    // each shard opens with warcinfo), parsed back streaming with one task
-    // per file — the crawl-corpus parallelism model. The oracle derives
-    // the expected stats from `documents` by the generator's formulas, an
-    // independent derivation rather than a parser replay.
-    "warc_ingest_stats" -> ((s, dir) => {
-      val src = stageWarcFixture(s, dir)
-      graft.sources.Warc.read(s, s"$src/*.warc*")
-        .groupBy(col("warcType").as("warc_type"),
-          coalesce(col("httpStatus"), lit(-1L)).as("http_status"))
-        .agg(count(lit(1)).as("n_recs"), sum(col("bodyLen")).as("body_bytes"),
-          countDistinct(col("host")).as("n_hosts"))
-        .orderBy("warc_type", "http_status")
-    }),
-
-    // URL canonicalization over the same corpus: captures whose raw URLs
-    // differ only by case / default port / fragment / tracking params /
-    // query order collapse to one canonical key — the capture-dedup
-    // grouping a crawl pipeline runs before content dedup. The fixture
-    // plants one equivalent-URL pair per (2k, 2k+1) doc pair; the oracle
-    // derives each group straight from doc_id, independent of the
-    // canonicalizer
-    "warc_url_canon" -> ((s, dir) => {
-      val src = stageWarcFixture(s, dir)
-      val canon = udf((u: String) => graft.sources.Warc.canonicalUrl(u))
-      graft.sources.Warc.read(s, s"$src/*.warc*")
-        .filter(col("warcType") === "response")
-        .select(canon(col("url")).as("curl"), col("url").as("u"))
-        .groupBy("curl")
-        .agg(countDistinct("u").as("n_urls"), count(lit(1)).as("n_recs"))
-        .filter(col("n_urls") >= 2)
-        .orderBy("curl")
-    }),
-
-    // crawl politeness: parse per-host robots.txt (RFC 9309 semantics —
-    // group selection, longest-rule precedence, Allow wins ties) and gate
-    // the WARC captures' paths through it — host h blocks /doc/ but
-    // re-allows /doc/<h+1>, so allowed/blocked splits differ per host.
-    // The oracle derives each verdict straight from doc_id arithmetic,
-    // independent of the parser/matcher
-    "warc_robots" -> ((s, dir) => {
-      val src = stageWarcFixture(s, dir)
-      val rulesByHost = (0 until 5).map { h =>
-        val txt = "User-agent: megacrawler\nDisallow: /private/\n\n" +
-          s"User-agent: *\nDisallow: /doc/\nAllow: /doc/${h + 1}\n"
-        (s"www.host$h.example", graft.sources.Robots.parse(txt, "*"))
-      }.toMap
-      val bc = s.sparkContext.broadcast(rulesByHost)
-      val okU = udf((host: String, url: String) =>
-        bc.value.get(host).forall(rs =>
-          graft.sources.Robots.allowed(rs, graft.sources.Warc.pathOf(url))))
-      graft.sources.Warc.read(s, s"$src/*.warc*")
-        .filter(col("warcType") === "response")
-        .select(col("host"), okU(col("host"), col("url")).as("ok"))
-        .groupBy("host").agg(
-          sum(when(col("ok"), 1L).otherwise(0L)).as("n_allowed"),
-          sum(when(!col("ok"), 1L).otherwise(0L)).as("n_blocked"))
-        .orderBy("host")
-    }),
-
-    "osm_ingest_stats" -> ((s, dir) => {
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
-      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
-      rows.foreach { r =>
-        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}' version='1'/>\n"
-      }
-      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
-        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
-        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
-        sb ++= s"    <tag k='highway' v='residential'/>\n    <tag k='name' v='way-$nk'/>\n  </way>\n"
-      }
-      sb ++= "</osm>\n"
-      val tmp = osmIngestTmp
-      java.nio.file.Files.writeString(tmp, sb.toString)
-      graft.osm.OsmImport.importOsm(s, tmp.toString).df
-        .select((col("way_id") - 1000).cast("int").as("c_nationkey"),
-          st.numPoints(col("geometry")).cast("long").as("n_pts"),
-          round(st.length(col("geometry")), 6).as("len"),
-          col("props").getItem("name").as("name"))
-        .orderBy(col("c_nationkey"))
-    }),
-
-    // same corpus through the BINARY format: the fixture is encoded as a
-    // real .osm.pbf (zlib blobs, DenseNodes delta coding, string tables —
-    // graft-written, spec-conformant), then parsed back with one executor
-    // task per blob (OsmPbf.parsePbf). The tiny batch forces many blobs so
-    // the parallel decode path and cross-blob delta restarts are what's
-    // actually measured; stats and oracle identical to the XML leg
-    "pbf_ingest_stats" -> ((s, dir) => {
-      import graft.osm.OsmPbf
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
-      val nodes = rows.map(r => OsmPbf.PbfNode(r.getLong(0), r.getDouble(2), r.getDouble(3))).toSeq
-      val ways = rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map { case (nk, rs) =>
-        OsmPbf.PbfWay(1000L + nk, rs.map(_.getLong(0)).sorted.toSeq,
-          tags = Seq("highway" -> "residential", "name" -> s"way-$nk"))
-      }
-      OsmPbf.writePbf(pbfIngestTmp.toString, nodes, ways, batch = 500)
-      val staging = OsmPbf.parsePbf(s, pbfIngestTmp.toString)
-      graft.osm.OsmImport.assembleWays(staging)
-        .select((col("way_id") - 1000).cast("int").as("c_nationkey"),
-          st.numPoints(col("geometry")).cast("long").as("n_pts"),
-          round(st.length(col("geometry")), 6).as("len"),
-          col("props").getItem("name").as("name"))
-        .orderBy(col("c_nationkey"))
-    }),
-
-    // OSM road-direction decode under the oracle (was unit-only): ways
-    // carry every `oneway` variant the reference decodes
-    // (OSMImporter.getRoadDirection:1607-1618) keyed by nationkey % 6, and
-    // the tag-filtered dynamic layer + decode must reproduce the
-    // closed-form per-direction counts
-    "osm_road_stats" -> ((s, dir) => {
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
-      val oneway = Map(0 -> Some("-1"), 1 -> Some("1"), 2 -> Some("yes"),
-        3 -> Some("TRUE"), 4 -> Some("no"), 5 -> None)
-      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
-      rows.foreach { r =>
-        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}' version='1'/>\n"
-      }
-      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
-        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
-        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
-        sb ++= "    <tag k='highway' v='residential'/>\n"
-        oneway(nk % 6).foreach(v => sb ++= s"    <tag k='oneway' v='$v'/>\n")
-        sb ++= "  </way>\n"
-      }
-      sb ++= "</osm>\n"
-      val tmp = java.nio.file.Files.createTempFile("graft-osm-road", ".osm")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.writeString(tmp, sb.toString)
-      val ways = graft.osm.OsmImport.importOsm(s, tmp.toString).df
-      graft.osm.OsmImport.withRoadDirection(
-          graft.osm.OsmImport.tagFilteredLayer(ways, "highway", "residential"))
-        .groupBy(col("road_direction"))
-        .agg(count(lit(1)).as("n_ways"))
-        .orderBy(col("road_direction"))
-    }),
-
-    // the reference's STORED DynamicLayerConfig JSON graph-step query run
-    // VERBATIM (round-5 verdict Missing #2): the same osm_road_stats
-    // fixture, filtered through the two-step GEOM/TAGS sub-graph match
-    // (DynamicIndexReader.java:46-113) compiled onto the flattened
-    // assembled-way rows — oneway='yes' matches exactly the reference's
-    // string-compare semantics ('1'/'TRUE' variants do NOT match)
-    "osm_dynamic_layer" -> ((s, dir) => {
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
-      val oneway = Map(0 -> Some("-1"), 1 -> Some("1"), 2 -> Some("yes"),
-        3 -> Some("TRUE"), 4 -> Some("no"), 5 -> None)
-      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
-      rows.foreach { r =>
-        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}' version='1'/>\n"
-      }
-      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
-        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
-        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
-        sb ++= "    <tag k='highway' v='residential'/>\n"
-        oneway(nk % 6).foreach(v => sb ++= s"    <tag k='oneway' v='$v'/>\n")
-        sb ++= "  </way>\n"
-      }
-      sb ++= "</osm>\n"
-      val tmp = java.nio.file.Files.createTempFile("graft-osm-dyn", ".osm")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.writeString(tmp, sb.toString)
-      val json = """{"step": {"type": "GEOM", "direction": "INCOMING",
-                    |  "step": {"type": "TAGS", "direction": "OUTGOING",
-                    |    "properties": {"highway": "residential", "oneway": "yes"}}}}""".stripMargin
-      graft.osm.OsmImport.importOsm(s, tmp.toString)
-        .filterDynamic(json)
-        .df.select(col("way_id"), st.numPoints(col("geometry")).cast("long").as("n_pts"))
-        .orderBy(col("way_id"))
-    }),
-
-    // stored-JSON dynamic layer stepping THROUGH THE WAY-NODE CHAIN
-    // (round-6 verdict Missing #4): GEOM → FIRST_NODE → NEXT → NODE walks
-    // way → proxy₀ → proxy₁ → the 2nd OSM node (reference graph:
-    // OSMImporter.java:696-714; walk: DynamicIndexReader.stepAndQuery).
-    // Node-level properties CANNOT compile to same-row predicates — the
-    // chain compiles to a semi-join against the osm_way_nds/osm_nodes
-    // staging tables (OsmImport.filterDynamic). The fixture varies node
-    // `version` with the customer key, so the NODE property test admits
-    // exactly the ways whose second node has version 2 — a predicate the
-    // old silently-over-matching same-row compile could never express
-    "osm_dynamic_node_layer" -> ((s, dir) => {
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
-      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
-      rows.foreach { r =>
-        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}'" +
-          s" version='${1 + r.getLong(0) % 3}'/>\n"
-      }
-      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
-        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
-        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
-        sb ++= "    <tag k='highway' v='residential'/>\n  </way>\n"
-      }
-      sb ++= "</osm>\n"
-      val tmp = java.nio.file.Files.createTempFile("graft-osm-dynnode", ".osm")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.writeString(tmp, sb.toString)
-      val json = """{"step": {"type": "GEOM", "direction": "INCOMING",
-                    |  "step": {"type": "FIRST_NODE", "direction": "OUTGOING",
-                    |    "step": {"type": "NEXT", "direction": "OUTGOING",
-                    |      "step": {"type": "NODE", "direction": "OUTGOING",
-                    |        "properties": {"version": 2}}}}}}""".stripMargin
-      val st8 = graft.osm.OsmImport.parse(s, tmp.toString)
-      val layer = new GeoFrame(graft.osm.OsmImport.assembleWays(st8))
-      graft.osm.OsmImport.filterDynamic(layer, st8, json)
-        .df.select(col("way_id"), st.numPoints(col("geometry")).cast("long").as("n_pts"))
-        .orderBy(col("way_id"))
-    }),
-
-    // OSM changesets layer under the oracle (was parsed-then-unit-only):
-    // per-changeset element counts, contributing user, and node bbox —
-    // the reference's changeset sub-graph as one aggregate (fixture maps
-    // changesets to nations, so the oracle replays from `customer`)
-    "osm_changeset_stats" -> ((s, dir) => {
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
-      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
-      rows.foreach { r =>
-        val nk = r.getInt(1)
-        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}'" +
-          s" version='1' changeset='$nk' uid='${nk + 100}' user='u-$nk'/>\n"
-      }
-      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
-        sb ++= s"  <way id='${1000 + nk}' version='1' changeset='$nk'>\n"
-        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
-        sb ++= "  </way>\n"
-      }
-      sb ++= "</osm>\n"
-      val tmp = java.nio.file.Files.createTempFile("graft-osm-cs", ".osm")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.writeString(tmp, sb.toString)
-      graft.osm.OsmImport.assembleChangesets(
-          graft.osm.OsmImport.parse(s, tmp.toString))
-        .select(col("changeset").cast("int").as("changeset"),
-          col("uid").cast("long").as("uid"), col("user"),
-          col("n_nodes"), col("n_ways"),
-          col("bbox")("minx").as("minx"), col("bbox")("miny").as("miny"),
-          col("bbox")("maxx").as("maxx"), col("bbox")("maxy").as("maxy"))
-        .orderBy(col("changeset"))
-    }),
-
-    // OSM multipolygon RELATION assembly under the oracle (was unit-only):
-    // per nation, an outer-ring way + an inner-hole way + a multipolygon
-    // relation; hole size varies by nation so areas aren't constant, and
-    // half-integer corners make every shoelace term binary-exact — the
-    // real importer's relation path (ring orientation repair, hole
-    // attachment) must reproduce the closed-form areas
-    "osm_relation_stats" -> ((s, dir) => {
-      val nks = T(s, dir, "nation").select(col("n_nationkey"))
-        .orderBy(col("n_nationkey")).collect().map(_.getInt(0))
-      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
-      def node(id: Long, x: Double, y: Double): Unit =
-        sb ++= s"  <node id='$id' lat='$y' lon='$x' version='1'/>\n"
-      nks.foreach { n =>
-        val (x0, x1, y0, y1) = (3.0 * n - 39.5, 3.0 * n - 34.5, 2.0 * n - 29.5, 2.0 * n - 25.5)
-        val (hx0, hy0) = (x0 + 1, y0 + 1)
-        val (hx1, hy1) = (hx0 + 1 + (n % 3), hy0 + 1 + (n % 2))
-        val b = n.toLong * 100
-        node(b + 1, x0, y0); node(b + 2, x1, y0); node(b + 3, x1, y1); node(b + 4, x0, y1)
-        node(b + 5, hx0, hy0); node(b + 6, hx1, hy0); node(b + 7, hx1, hy1); node(b + 8, hx0, hy1)
-        sb ++= s"  <way id='${2000 + n}' version='1'>\n"
-        Seq(1, 2, 3, 4, 1).foreach(i => sb ++= s"    <nd ref='${b + i}'/>\n")
-        sb ++= "  </way>\n"
-        sb ++= s"  <way id='${3000 + n}' version='1'>\n"
-        Seq(5, 6, 7, 8, 5).foreach(i => sb ++= s"    <nd ref='${b + i}'/>\n")
-        sb ++= "  </way>\n"
-        sb ++= s"  <relation id='${4000 + n}' version='1'>\n"
-        sb ++= s"    <member type='way' ref='${2000 + n}' role='outer'/>\n"
-        sb ++= s"    <member type='way' ref='${3000 + n}' role='inner'/>\n"
-        sb ++= s"    <tag k='type' v='multipolygon'/>\n    <tag k='name' v='rel-$n'/>\n  </relation>\n"
-      }
-      sb ++= "</osm>\n"
-      val tmp = java.nio.file.Files.createTempFile("graft-osm-rel", ".osm")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.writeString(tmp, sb.toString)
-      graft.osm.OsmImport.assembleRelations(
-          graft.osm.OsmImport.parse(s, tmp.toString))
-        .select((col("relation_id") - 4000).cast("int").as("nk"),
-          st.area(col("geometry")).as("area"),
-          st.numPoints(col("geometry")).cast("long").as("n_pts"),
-          col("props").getItem("name").as("name"))
-        .orderBy(col("nk"))
-    }),
-
-    // Shapefile writer AND reader under the oracle: per-nation polylines
-    // (with a dbf attribute) are exported through the real ESRI encoder and
-    // re-imported; record numbers, point counts, lengths and the attribute
-    // round-trip are replayed by the oracle from `customer`.
-    // (reference: ShapefileExporter.java:37, ShapefileImporter via
-    // SpatialProcedures.java:788-820)
-    // GeoJSON ingest under the oracle: real export → GeoJSONSeq files →
-    // real line-distributed re-import (sources/GeoJsonSource.scala); same
-    // per-nation line stats contract as the shapefile round trip
-    // JSONL corpus round trip — the wire format a 100 TB text corpus
-    // actually arrives in: write the documents table as line-delimited
-    // JSON (one shard per partition), read it back through an EXPLICIT
-    // schema (no sampling-based inference pass — at scale inference reads
-    // the data twice), and prove losslessness against the parquet oracle
-    // with exact per-lang counts, char totals, and id checksums
-    "jsonl_ingest_stats" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val d = java.nio.file.Files.createTempDirectory("graft-jsonl")
-      d.toFile.deleteOnExit()
-      val p = d.resolve("docs").toString
-      docs.write.json(p)
-      s.read.schema(docs.schema).json(p)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text"))).as("chars"),
-          sum(col("doc_id")).as("id_sum"),
-          sum(col("n_chars")).as("n_chars_sum"))
-        .orderBy("lang")
-    }),
-
-    "geojson_ingest_stats" -> ((s, dir) => {
-      val lines = linesLayer(s, dir).df
-        .withColumn("props", map(
-          lit("fid"), col("c_nationkey").cast("string"),
-          lit("name"), concat(lit("ln-"), col("c_nationkey"))))
-      val d = java.nio.file.Files.createTempDirectory("graft-geojson")
-      d.toFile.deleteOnExit()
-      val p = d.resolve("lines_seq").toString
-      graft.sources.GeoJsonSource.exportGeoJsonSeq(lines, p)
-      graft.sources.GeoJsonSource.readGeoJsonSeq(s, p, idProp = "fid")
-        .select(col("id").cast("long").as("nk"),
-          st.numPoints(col("geometry")).cast("long").as("n_pts"),
-          round(st.length(col("geometry")), 6).as("len"),
-          col("props").getItem("name").as("name"))
-        .orderBy(col("nk"))
-    }),
-
-    "shp_ingest_stats" -> ((s, dir) => {
-      val lines = linesLayer(s, dir).df
-        .withColumn("props", map(lit("name"), concat(lit("ln-"), col("c_nationkey"))))
-        .orderBy(col("c_nationkey"))
-      val base = shpIngestBase
-      graft.sources.Shapefile.exportShapefile(lines, base)
-      graft.sources.Shapefile.importShapefile(s, base + ".shp").df
-        .select(col("id").cast("long").as("rec"),
-          st.numPoints(col("geometry")).cast("long").as("n_pts"),
-          round(st.length(col("geometry")), 6).as("len"),
-          col("props").getItem("name").as("name"))
-        .orderBy(col("rec"))
-    }),
-
-    // the SAME corpus through the DataSource V2 connector
-    // (spark.read.format("shapefile")): shx-sliced multi-partition scan,
-    // dbf attributes by seek — identical stats, identical oracle, so the
-    // splittable executor-side read path is itself hash-gated
-    "shp_scan_v2" -> ((s, dir) => {
-      val lines = linesLayer(s, dir).df
-        .withColumn("props", map(lit("name"), concat(lit("ln-"), col("c_nationkey"))))
-        .orderBy(col("c_nationkey"))
-      val base = shpIngestBase
-      graft.sources.Shapefile.exportShapefile(lines, base)
-      s.read.format("shapefile")
-        .option("maxRecordsPerPartition", "7")   // 25 recs → 4 parallel slices
-        .load(base + ".shp")
-        .select(col("rec_no").cast("long").as("rec"),
-          st.numPoints(col("geometry")).cast("long").as("n_pts"),
-          round(st.length(col("geometry")), 6).as("len"),
-          col("name"))
-        .orderBy(col("rec"))
-    }),
-
-    // ================================= training-pipeline operator additions
-    // exact word-4-gram Jaccard pairs, inverted-index candidates (guaranteed
-    // recall — unlike MinHash LSH this is fully oracle-checkable)
-    "dd_jaccard_pairs" -> ((s, dir) =>
-      Dedup.shingleJaccardPairs(T(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.2, shingleK = 4)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // DIRECTED set-containment pairs |A∩B|/|A| ≥ 0.9 — the doc-inside-doc
-    // detector symmetric Jaccard is blind to (J ≤ |A|/|B|); probe-side-only
-    // prefix filter with guaranteed recall (Dedup.containmentPairs)
-    "dd_containment" -> ((s, dir) =>
-      Dedup.containmentPairs(T(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.9, shingleK = 4)
-        .select(col("id_a"), col("id_b"),
-          round(col("containment"), 6).as("containment"))
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // char-3-gram Jaccard pairs over the full documents table — the last of
-    // the five dedup families under the oracle. Same df-ordered prefix
-    // filter as dd_jaccard (guaranteed recall at any threshold); the oracle
-    // replays the prefix logic so its candidate stage stays tractable, and
-    // since ANY consistent total shingle order preserves recall, the SQL
-    // side may tie-break by gram string where Spark tie-breaks by hash —
-    // the verified pair set is identical
-    "dd_ngram_pairs" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(T(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.9, n = 3)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // the full curation chain as ONE plan: quality gate -> exact dedup ->
-    // per-language stats (the composition the pipeline operators exist for)
-    "tx_curation" -> ((s, dir) =>
-      graft.pipeline.Curation.curationStats(T(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("lang"))),
-
-    // embedding-cosine near-dup pairs, exact variant (recall-guaranteed)
-    "dd_embed_neardup" -> ((s, dir) =>
-      Similarity.exactNearDupPairs(T(s, dir, "embeddings"), "vec_id", "embedding", 0.42)
-        .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // cosine RANGE search (radius query, the sibling of top-k): every
-    // vec_id%100 query pulls all corpus rows with cosine ≥ τ via the
-    // multi-probe SRP bucket equi-join + exact verify; recall is the
-    // deterministic seeded-plane collision set, replayed by the oracle
-    "sim_range" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      Similarity.srpRangeSearch(emb, emb.filter(col("vec_id") % 100 === 0),
-          "vec_id", "embedding", tau = 0.3, dim = 64, bits = 8,
-          probeHamming = 2)
-        .select(col("qid"), col("id"), round(col("cosine"), 6).as("cosine"))
-        .orderBy(col("qid"), col("id"))
-    }),
-
-    // SemDeDup: near-dup search restricted to coarse-quantizer clusters —
-    // Σ|cluster|² work instead of n², co-located by one shuffle on cid
-    "dd_semantic" -> ((s, dir) =>
-      Similarity.semanticNearDupPairs(T(s, dir, "embeddings"), "vec_id", "embedding", 0.42, 16)
-        .select(col("cid").cast("long").as("cid"), col("id_a"), col("id_b"),
-          round(col("cosine"), 6).as("cosine"))
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // PRODUCTION simhash variant beside the 24-bit oracle gate: full 64-bit
-    // FNV-token signature, pigeonhole banding (maxHamming+1 chunks ⇒ 16-bit
-    // keys at r=3, selective at any corpus size). Rows-only at the driver
-    // (FNV-64 per char is impractical to replay in SQL); recall is
-    // unit-verified (Round2Spec pigeonhole test).
-    "dd_simhash64_pairs" -> ((s, dir) =>
-      Dedup.simhashNearDupPairs(T(s, dir, "documents"), "doc_id", "text", maxHamming = 3)
-        .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // PRODUCTION IVF variant: distributed k-means coarse quantizer instead
-    // of the oracle's deterministic first-N centroids; probe/re-rank
-    // dataflow identical. Rows-only; full-probe≡brute-force is unit-verified.
-    "sim_ivf_kmeans" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      Similarity.ivfTopKKMeans(emb, "vec_id", "embedding", q, k = 20,
-          nlist = 16, nprobe = 2, kmeansIters = 3)
-        .select(col("id"), round(col("cosine"), 6).as("cosine"))
-        .orderBy(col("cosine").desc, col("id"))
-    }),
-
-    // IVF ANN: 16 deterministic coarse centroids, probe 2 lists, exact
-    // re-rank inside — the partition-pruned scale path beside brute force
-    "sim_ivf_topk" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      Similarity.ivfTopK(emb, "vec_id", "embedding", q, k = 20, nlist = 16, nprobe = 2)
-        .select(col("id"), round(col("cosine"), 6).as("cosine"))
-        .orderBy(col("cosine").desc, col("id"))
-    }),
-
-    // filtered ANN — the vector-database "metadata filtering" shape: the
-    // label predicate is pushed INTO the probed IVF lists, and because a
-    // selective filter starves a fixed nprobe, the probe width escalates
-    // deterministically (2→4→8→16 lists) until ≥ k filtered candidates are
-    // inside the prefix; the oracle replays assignment, probe ranking, AND
-    // the escalation rule
-    "sim_filtered_topk" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      Similarity.ivfFilteredTopK(emb, "vec_id", "embedding",
-          col("label") === 3, q, k = 20, nlist = 16, nprobe = 2)
-        .select(col("id"), round(col("cosine"), 6).as("cosine"))
-        .orderBy(col("cosine").desc, col("id"))
-    }),
-
-    // PQ/ADC compressed-domain search: 8 subspaces × 16 codes (64-dim →
-    // 8 small ints, 32×), query LUT broadcast, distance = 8 table lookups
-    "sim_pq_adc" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      Similarity.pqAdcTopK(emb, "vec_id", "embedding", q, kTop = 20)
-    }),
-
-    // stored IVF index lifecycle: bootstrap write (list_id partition dirs
-    // + frozen-centroid sidecar), append quantized with the FROZEN
-    // codebook, then a probe whose 2 lists are a partition filter — the
-    // sp_layer_upsert evidence pattern for the ANN store; the oracle
-    // replays frozen-bootstrap assignment over the full (boot + appended)
-    // corpus
-    "sim_ivf_store" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val d = java.nio.file.Files.createTempDirectory("graft-ivf-idx")
-      d.toFile.deleteOnExit()
-      val p = d.resolve("idx").toString
-      Similarity.writeIvfIndex(emb.filter(col("vec_id") % 10 =!= 0),
-        "vec_id", "embedding", p, nlist = 16)
-      Similarity.appendIvfIndex(s, p, emb.filter(col("vec_id") % 10 === 0),
-        "vec_id", "embedding")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      Similarity.probeStoredIvf(s, p, q, k = 20, nprobe = 2)
-    }),
-
-    // stored-index DELETE lifecycle: bootstrap + append as sim_ivf_store,
-    // then tombstone-delete vec_id % 7 == 0 (a metadata-sized sidecar
-    // write — no vector file touched), probe through the tombstone
-    // anti-join, COMPACT (dynamic overwrite of only the affected list
-    // partitions; fully-emptied lists dropped), and probe again — the two
-    // phases must return the identical masked top-k
-    "sim_ivf_delete" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val d = java.nio.file.Files.createTempDirectory("graft-ivf-del")
-      d.toFile.deleteOnExit()
-      val p = d.resolve("idx").toString
-      Similarity.writeIvfIndex(emb.filter(col("vec_id") % 10 =!= 0),
-        "vec_id", "embedding", p, nlist = 16)
-      Similarity.appendIvfIndex(s, p, emb.filter(col("vec_id") % 10 === 0),
-        "vec_id", "embedding")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      // delete-by-id is a driver-side id list by nature (bounded: |corpus|/7
-      // at the gate; production batches arrive as lists anyway)
-      val deleted = emb.filter(col("vec_id") % 7 === 0)
-        .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-      Similarity.deleteFromIvfIndex(s, p, deleted)
-      // materialize the tombstone-phase probe BEFORE compaction replaces
-      // the files its lazy scan already listed
-      val tombPhase = Similarity.probeStoredIvf(s, p, q, k = 20, nprobe = 2)
-        .withColumn("phase", lit("tombstone")).localCheckpoint()
-      Similarity.compactIvfIndex(s, p)
-      val compactPhase = Similarity.probeStoredIvf(s, p, q, k = 20, nprobe = 2)
-        .withColumn("phase", lit("compacted"))
-      compactPhase.unionAll(tombPhase)
-        .orderBy(col("phase"), col("cosine").desc, col("id"))
-    }),
-
-    // IVF-PQ with exact re-rank: coarse-quantizer pruning (2 of 16 lists)
-    // in front of the ADC scan, then the ADC top-60 re-ranked by exact L2
-    // — the canonical FAISS-shaped production index, every stage replayed
-    // by the oracle
-    "sim_ivf_pq" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-      Similarity.ivfPqTopK(emb, "vec_id", "embedding", q, k = 20,
-        nlist = 16, nprobe = 2, m = 8, codeK = 16, refine = 3)
-    }),
-
-    // ---------------------------------------------- corpus governance ops
-    // benchmark decontamination: training docs sharing a word 3-gram with
-    // the eval slice (doc_id % 97 == 0), eval side hashed + broadcast
-    "tx_decontam" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      Corpus.decontaminate(
-          docs.filter(col("doc_id") % 97 =!= 0),
-          docs.filter(col("doc_id") % 97 === 0), "doc_id", "text", k = 3)
-        .orderBy(col("id"))
-    }),
-
-    // Bloom-filter decontamination — constant-memory scale sibling of
-    // tx_decontam: eval k-grams folded into a 1024-long bitset (bit_or),
-    // train side broadcast-joins the 8 KiB filter; no false negatives,
-    // deterministic false positives (same split as tx_decontam so the two
-    // reports are directly comparable)
-    "tx_decontam_bloom" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      Corpus.bloomDecontaminate(
-          docs.filter(col("doc_id") % 97 =!= 0),
-          docs.filter(col("doc_id") % 97 === 0), "doc_id", "text", k = 3)
-        .orderBy(col("id"))
-    }),
-
-    // RAG-prep sliding-window chunking: 64-token windows, stride 48 —
-    // generator inside the projection, zero shuffles
-    "tx_chunks" -> ((s, dir) =>
-      Corpus.chunkDocs(T(s, dir, "documents"), "doc_id", "text",
-        chunkSize = 64, stride = 48).orderBy(col("id"), col("chunk_id"))),
-
-    // Shannon entropy quality signals (char + token, fixed-order sums so
-    // the doubles are reproducible); compiled per-row loop, no shuffle
-    "tx_entropy" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id").as("id"),
-          TextAnalysis.entropySignals(col("text")).as("e"))
-        .select(col("id"), col("e.char_entropy").as("char_entropy"),
-          col("e.n_distinct_chars").as("n_distinct_chars"),
-          col("e.token_entropy").as("token_entropy"),
-          col("e.n_distinct_tokens").as("n_distinct_tokens"))
-        .orderBy(col("id"))),
-
-    // z-score anomalies over hourly per-type counts: integer-exact moment
-    // sums -> bit-reproducible mean/std, per-type stats broadcast
-    "ev_anomaly" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      Events.anomalies(T(s, dir, "events"), z = 2.0)
-        .orderBy(col("event_type"), col("hour_idx"))
-    }),
-
-    // blocklist filter: per-row array scan against a literal/broadcast term
-    // list, no shuffle
-    "tx_badwords" -> ((s, dir) =>
-      Corpus.bannedTermScan(T(s, dir, "documents"), "doc_id", "text",
-        terms = Seq("hash", "scan", "batch")).orderBy(col("id"))),
-
-    // retry-storm duplicate suppression (batch sibling of the streaming
-    // exact dedup): lag rule on (user, type), one shuffle reused by window
-    // and aggregate
-    "ev_dedup_window" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      Events.dedupWindow(T(s, dir, "events"), windowNs = 6L * 3600 * 1000000000L)
-        .orderBy(col("user_id"), col("event_type"))
-    }),
-
-    // Gopher-style repetition signals: token histogram shuffle + per-row
-    // 3-gram array stats
-    "tx_repetition" -> ((s, dir) =>
-      Corpus.repetitionSignals(T(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("id"))),
-
-    // BM25 top-20 for a 3-term query; postings pruned before the shuffle,
-    // df/corpus stats broadcast, TakeOrdered top-k, fold-ordered float sum
-    "tx_bm25" -> ((s, dir) =>
-      Corpus.bm25TopK(T(s, dir, "documents"), "doc_id", "text",
-        terms = Seq("spark", "hash", "window"), topK = 20)),
-
-    // PII scan + redaction over deterministically-injected PII (the corpus
-    // itself is synthetic bag-of-words; the injection IS part of the query
-    // on both sides, so counts and redacted text are fully oracle-checked)
-    "tx_pii" -> ((s, dir) => {
-      val docs = T(s, dir, "documents").withColumn("text",
-        concat(col("text"),
-          when(col("doc_id") % 4 === 0,
-            concat(lit(" contact user"), col("doc_id").cast("string"),
-              lit("@mail.example.com now")))
-          .when(col("doc_id") % 4 === 1,
-            concat(lit(" server 10."), (col("doc_id") % 256).cast("string"),
-              lit(".0."), (col("doc_id") % 100).cast("string"), lit(" up")))
-          .when(col("doc_id") % 4 === 2,
-            concat(lit(" call +1-555-"),
-              lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
-          .otherwise(lit(""))))
-      Corpus.piiScan(docs, "doc_id", "text").orderBy(col("id"))
-    }),
-
-    // inverted-index build: top-100 terms by df with CSV postings heads
-    "tx_inverted" -> ((s, dir) =>
-      Corpus.invertedIndex(T(s, dir, "documents"), "doc_id", "text")),
-
-    // C4/RefinedWeb-style corpus-wide exact line dedup: docs chunked into
-    // 8-word lines, boilerplate lines injected query-side (the tx_pii
-    // pattern — 1 in 4 docs gets a header, 1 in 7 a footer) so real
-    // cross-doc duplicates exist; every occurrence but the globally-first
-    // (by (doc_id, pos)) is removed and the text reassembled
-    "tx_line_dedup" -> ((s, dir) => {
-      val lined = T(s, dir, "documents")
-        .withColumn("ws", split(col("text"), " "))
-        .withColumn("nch", expr("(size(ws) + 7) div 8"))
-        .select(col("doc_id"), concat(
-            when(col("doc_id") % 4 === 1, array(lit(LineDedupHeader)))
-              .otherwise(array().cast("array<string>")),
-            transform(sequence(lit(0), col("nch") - 1),
-              i => array_join(slice(col("ws"), i * 8 + 1, lit(8)), " ")),
-            when(col("doc_id") % 7 === 2, array(lit(LineDedupFooter)))
-              .otherwise(array().cast("array<string>"))
-          ).as("ls"))
-        .select(col("doc_id"), posexplode(col("ls")).as(Seq("pos", "line")))
-      Corpus.reassemble(Corpus.lineDedup(lined))
-        .join(lined.groupBy("doc_id").agg(count(lit(1)).as("n_lines")), "doc_id")
-        .select(col("doc_id"), col("n_lines"), col("n_kept"), col("text_clean"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // DSIR data selection: hashed unigram+bigram log-likelihood-ratio
-    // scores for the raw pool against the doc_id%11 "curated seed" —
-    // broadcast weight table, bucket-ordered float fold
-    "tx_dsir" -> ((s, dir) =>
-      Corpus.dsirTopK(T(s, dir, "documents"), "doc_id", "text",
-        targetPred = col("doc_id") % 11 === 0, buckets = 512, topK = 100)),
-
-    // ExactSubstr-style repeated-span removal: tokens inside any non-first
-    // occurrence of a corpus-duplicated 5-gram are cut; boilerplate tails
-    // injected every 29th doc provide real cross-doc duplicated passages
-    "tx_span_rm" -> ((s, dir) =>
-      Corpus.spanDedup(boilerplateDocs(s, dir), "doc_id", "text", k = 5)
-        .orderBy(col("doc_id"))),
-
-    // reproducible stratified sampling: keep-decision is a pure hash of
-    // (salt, doc_id) against per-language rates — a codegen'd scan filter
-    "tx_sample" -> ((s, dir) =>
-      Corpus.stratifiedSample(T(s, dir, "documents"), "doc_id", "lang",
-          rates = SampleRates, defaultRate = 1.0, salt = "s42:")
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy(col("doc_id"))),
-
-    // cross-corpus near-dedup: even doc_ids (the "new crawl") deduped
-    // against odd doc_ids (the "reference corpus") via bipartite MinHash-LSH
-    "dd_cross_pairs" -> ((s, dir) =>
-      Dedup.minhashCrossCorpusPairs(T(s, dir, "documents"), "doc_id", "text",
-          isRef = col("doc_id") % 2 === 1, threshold = 0.2)
-        .select(col("id_new"), col("id_ref"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy(col("id_new"), col("id_ref"))),
-
-    // GPT-style concat-and-chunk sequence packing: hash-sharded
-    // pseudo-shuffle + per-shard running sum; per-doc (shard, seq, offset,
-    // boundary-split) placement
-    "tx_pack" -> ((s, dir) =>
-      Packing.packPlacements(T(s, dir, "documents"), "doc_id", "text",
-        capacity = 512L, numShards = 8)),
-
-    // weighted reservoir sample without replacement (A-ES, Efraimidis-
-    // Spirakis IPL'06): deterministic hash-uniform -> key ln(u)/w, top-k
-    // by key = inclusion ∝ token count; one scan + TakeOrdered, the
-    // quality-weighted corpus subsample shape
-    "tx_weighted_sample" -> ((s, dir) =>
-      Packing.weightedSample(T(s, dir, "documents"), "doc_id", "text",
-        k = 100, salt = "wrs1:")),
-
-    // stratified A-ES: an independent per-source reservoir (bounded
-    // partitioned windows, never a global sort), rolled up per stratum
-    "tx_stratified_sample" -> ((s, dir) =>
-      Packing.stratifiedSample(T(s, dir, "documents"), "doc_id", "text",
-        "source", perStratum = 50, salt = "wrs2:")),
-
-    // deterministic global shuffle into training shards: scrambled-hash
-    // permutation, ONE shard exchange + per-shard sort (no global sort)
-    "tx_shard" -> ((s, dir) =>
-      Packing.shardAssign(T(s, dir, "documents"), "doc_id", "text",
-        numShards = 16, salt = "shard1:")),
-
-    // incrementally-maintained daily metrics mart: bootstrap the first 70%
-    // of days, then MERGE the rest as the "nightly batch" — only its day
-    // partitions rewrite (dynamic overwrite); the read-back table must
-    // equal the oracle's full recompute
-    "ev_daily_mv" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = T(s, dir, "events")
-      val dayNs = 86400000000000L
-      val mm = ev.agg(min(expr(s"ts div $dayNs")), max(expr(s"ts div $dayNs"))).head()
-      val cut = mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) * 7 / 10
-      val d = java.nio.file.Files.createTempDirectory("graft-mv")
-      d.toFile.deleteOnExit()
-      val p = d.resolve("daily").toString
-      Events.dailyAggMerge(ev.filter(expr(s"ts div $dayNs") < cut), p)
-      Events.dailyAggMerge(ev.filter(expr(s"ts div $dayNs") >= cut), p)
-      s.read.parquet(p)
-        .select(col("day").cast("long").as("day"), col("event_type"),
-          col("n"), col("sum_cents"), col("n_users"))
-        .orderBy(col("day"), col("event_type"))
-    }),
-
-    // two-level HLL rollup: daily register sketches merged by max — the
-    // mergeable-sketch storage pattern; the oracle replays a SINGLE-pass
-    // HLL, so the hash match proves the daily-merge path is lossless
-    "ev_hll_rollup" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val fnv = udf((x: Long) => TextAnalysis.fnv1a64(x.toString))
-      Events.hllRollup(T(s, dir, "events").select(
-          col("event_type").as("g"),
-          expr("ts div 86400000000000").as("day"),
-          fnv(col("user_id")).as("h")))
-        .select(col("g").as("event_type"), col("v_zero"), col("est"),
-          col("n_days"))
-        .orderBy(col("event_type"))
-    }),
-
-    // fixed-bin histogram quantiles: the scale sibling of ev_quantiles —
-    // map-side combine caps the exchange at |types|·1024 rows at ANY corpus
-    // size; integer rank test, binary-exact bin edges
-    "ev_hist_quantiles" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      Events.histQuantiles(T(s, dir, "events"))
-    }),
-
-    // first-order Markov transitions over per-user event sequences: one
-    // user_id exchange for the lag window, pair counts + exact-ratio probs
-    "ev_markov" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      Events.transitions(T(s, dir, "events"))
-    }),
-
-    // explicitly SALTED fact-to-dim enrichment join (dim replicated ×salts,
-    // fact never inflates) — same result as unsalted, pinned by EventsSpec
-    "ev_salted_join" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      Events.saltedUserMaxHits(T(s, dir, "events"), salts = 8)
-    }),
-
-    // join-CONSISTENT sampling: both tables sampled by hashing the JOIN
-    // key, so the sampled child table has ZERO orphans (n_orphan is
-    // computed by a real anti-join, not assumed) — independent row
-    // sampling would orphan ~(1-p) of line items
-    "q7_consistent_sample" -> ((s, dir) => {
-      import graft.pipeline.Profiling.consistentSampleKeep
-      val keep = (c: org.apache.spark.sql.Column) =>
-        consistentSampleKeep(c, "cs1:", ppm = 200000)
-      val ord = T(s, dir, "orders").filter(keep(col("o_orderkey")))
-      val li = T(s, dir, "lineitem").filter(keep(col("l_orderkey")))
-      val orphans = li.join(ord, li("l_orderkey") === ord("o_orderkey"),
-        "left_anti")
-      val nOrd = ord.agg(count(lit(1)).as("n_orders"))
-      val nLi = li.agg(count(lit(1)).as("n_lineitems"))
-      val nOrph = orphans.agg(count(lit(1)).as("n_orphan"))
-      nOrd.crossJoin(nLi).crossJoin(nOrph)
-    }),
-
-    // table profiling: per-column n/null/distinct/heavy-hitter/skew in ONE
-    // unpivot pass + one (column, value) exchange — not C countDistinct
-    // expand branches; the audit that decides where salting is needed
-    "q6_profile" -> ((s, dir) =>
-      graft.pipeline.Profiling.columnProfile(T(s, dir, "lineitem"),
-        Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-          "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-          "l_returnflag", "l_linestatus", "l_shipdate"))),
-
-    // declarative SQL spatial join: plain `JOIN ON st_intersects(...)`
-    // (which vanilla Spark plans as a cartesian product) — StJoinRule, which
-    // the session's `spark.sql.extensions` registers (graft.Sessions),
-    // rewrites it to the grid equi-join; results must equal the oracle's
-    // interval containment (plan shape pinned by StJoinRuleSpec)
-    "sp_sql_join" -> ((s, dir) => {
-      graft.functions.SpatialFunctions.register(s)
-      pointsDf(s, dir).select(col("ck"), col("geometry"))
-        .createOrReplaceTempView("sqlj_pts")
-      natBoxesDf(s, dir)
-        .withColumn("geometry", st.geomFromText(col("wkt")))
-        .select(col("n_nationkey"), col("geometry"))
-        .createOrReplaceTempView("sqlj_boxes")
-      s.sql("""SELECT p.ck AS id, b.n_nationkey AS nk
-              |FROM sqlj_pts p JOIN sqlj_boxes b
-              |ON st_intersects(p.geometry, b.geometry)
-              |ORDER BY id, nk""".stripMargin)
-    }),
-
-    // declarative LEFT OUTER spatial join through the same grid rewrite:
-    // every point keeps its row, unmatched ones with a null nation key
-    // (COALESCEd to -1 on both sides so the sort order is engine-agnostic).
-    // The left-preserving rewrite is the reference's tag-then-keep workflow
-    // shape (SpatialProcedures.java:679-718) expressed in SQL.
-    "sp_sql_left_join" -> ((s, dir) => {
-      graft.functions.SpatialFunctions.register(s)
-      pointsDf(s, dir).select(col("ck"), col("geometry"))
-        .createOrReplaceTempView("sqlj_pts")
-      natBoxesDf(s, dir)
-        .withColumn("geometry", st.geomFromText(col("wkt")))
-        .select(col("n_nationkey"), col("geometry"))
-        .createOrReplaceTempView("sqlj_boxes")
-      s.sql("""SELECT p.ck AS id, coalesce(b.n_nationkey, -1) AS nk
-              |FROM sqlj_pts p LEFT JOIN sqlj_boxes b
-              |ON st_intersects(p.geometry, b.geometry)
-              |ORDER BY id, nk""".stripMargin)
-    }),
-
-    // declarative LEFT SEMI + LEFT ANTI spatial joins (one result: each
-    // point labeled in/out) — the spatial anti-join is the removeNodes
-    // workflow shape; counts pin both sides of the partition
-    "sp_sql_anti_join" -> ((s, dir) => {
-      graft.functions.SpatialFunctions.register(s)
-      pointsDf(s, dir).select(col("ck"), col("geometry"))
-        .createOrReplaceTempView("sqlj_pts")
-      natBoxesDf(s, dir)
-        .withColumn("geometry", st.geomFromText(col("wkt")))
-        .select(col("n_nationkey"), col("geometry"))
-        .createOrReplaceTempView("sqlj_boxes")
-      val semi = s.sql(
-        """SELECT p.ck AS id, 1 AS covered FROM sqlj_pts p LEFT SEMI JOIN sqlj_boxes b
-          |ON st_intersects(p.geometry, b.geometry)""".stripMargin)
-      val anti = s.sql(
-        """SELECT p.ck AS id, 0 AS covered FROM sqlj_pts p LEFT ANTI JOIN sqlj_boxes b
-          |ON st_intersects(p.geometry, b.geometry)""".stripMargin)
-      semi.unionByName(anti).orderBy(col("id"))
-    }),
-
-    // declarative DISTANCE join: `ON st_dwithin(p, b, r)` — the rule dilates
-    // the probe side's envelope by r, so the grid plan serves the distance
-    // predicate too (a cartesian product in stock Spark). Radius 5.75 keeps
-    // the exact point-to-box distance strictly off the threshold on the
-    // half-integer lattice (dx, dy are integers ⇒ dx²+dy² ∈ ℤ vs 33.0625)
-    "sp_sql_dwithin" -> ((s, dir) => {
-      graft.functions.SpatialFunctions.register(s)
-      pointsDf(s, dir).select(col("ck"), col("geometry"))
-        .createOrReplaceTempView("sqlj_pts")
-      natBoxesDf(s, dir)
-        .withColumn("geometry", st.geomFromText(col("wkt")))
-        .select(col("n_nationkey"), col("geometry"))
-        .createOrReplaceTempView("sqlj_boxes")
-      s.sql("""SELECT p.ck AS id, b.n_nationkey AS nk
-              |FROM sqlj_pts p JOIN sqlj_boxes b
-              |ON st_dwithin(p.geometry, b.geometry, CAST(5.75 AS DOUBLE))
-              |ORDER BY id, nk""".stripMargin)
-    }),
-
-    // declarative FULL OUTER spatial join: matched pairs plus BOTH sides'
-    // unmatched rows (ck%3 thins the left side and appended far-north
-    // boxes thin the right, so both unmatched legs are exercised)
-    "sp_sql_full_join" -> ((s, dir) => {
-      graft.functions.SpatialFunctions.register(s)
-      pointsDf(s, dir).filter(col("ck") % 3 === 0)
-        .select(col("ck"), col("geometry"))
-        .createOrReplaceTempView("sqlj_pts3")
-      natBoxesDf(s, dir)
-        .withColumn("geometry", st.geomFromText(col("wkt")))
-        .select(col("n_nationkey"), col("geometry"))
-        .unionByName(T(s, dir, "nation").select(
-          (col("n_nationkey") + 100).as("n_nationkey"),
-          st.geomFromText(concat(lit("POLYGON (("),
-            col("n_nationkey") * 2 - lit(50), lit(" 85, "),
-            col("n_nationkey") * 2 - lit(48), lit(" 85, "),
-            col("n_nationkey") * 2 - lit(48), lit(" 89, "),
-            col("n_nationkey") * 2 - lit(50), lit(" 89, "),
-            col("n_nationkey") * 2 - lit(50), lit(" 85))"))).as("geometry")))
-        .createOrReplaceTempView("sqlj_boxes_f")
-      s.sql("""SELECT coalesce(p.ck, -1) AS id, coalesce(b.n_nationkey, -1) AS nk
-              |FROM sqlj_pts3 p FULL JOIN sqlj_boxes_f b
-              |ON st_intersects(p.geometry, b.geometry)
-              |ORDER BY id, nk""".stripMargin)
-    }),
-
-    // zonal statistics: per 3° grid cell, overlapping-polygon count +
-    // clipped JTS area over the nation boxes — half-integer box corners vs
-    // integer cell edges keep every product a binary-exact quarter, so the
-    // real shoelace area equals the oracle's interval arithmetic exactly
-    "sp_zonal_stats" -> ((s, dir) => {
-      val polys = natBoxesDf(s, dir)
-        .withColumn("geometry", st.geomFromText(col("wkt")))
-        .withColumn("bbox", st.bboxOf(col("geometry")))
-      SpatialAggs.zonalStats(polys, cellDeg = 3.0)
-        .orderBy(col("cell_x"), col("cell_y"))
-    }),
-
-    // generic OLAP data skipping: lineitem clustered on the interleaved
-    // (l_orderkey, l_suppkey) z-key — ONE physical order whose row-group
-    // stats prune range filters on EITHER column (the spatial curve math
-    // applied to plain numeric columns; pruning evidence in ScaleSpec)
-    "q5_zorder_scan" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_quantity"))
-      val mm = li.agg(min("l_orderkey"), max("l_orderkey"),
-        min("l_suppkey"), max("l_suppkey")).head()
-      val (ok0, ok1, sk0, sk1) =
-        (mm.getLong(0), mm.getLong(1), mm.getLong(2), mm.getLong(3))
-      val d = java.nio.file.Files.createTempDirectory("graft-zt-q")
-      d.toFile.deleteOnExit()
-      val p = d.resolve("li_z").toString
-      graft.plans.SpatialLayout.writeZOrderedTable(li, p,
-        "l_orderkey", ok0.toDouble, ok1.toDouble,
-        "l_suppkey", sk0.toDouble, sk1.toDouble)
-      s.read.parquet(p)
-        .filter(col("l_orderkey").between(ok0 + (ok1 - ok0) / 10, ok0 + (ok1 - ok0) / 5) &&
-          col("l_suppkey").between(sk0 + (sk1 - sk0) / 4, sk0 + (sk1 - sk0) / 2))
-        .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("sum_qty"),
-          min(col("l_orderkey")).as("min_ok"), max(col("l_orderkey")).as("max_ok"))
-    }),
-
-    // bucketed CO-LOCATED join: both fact tables written bucketBy(orderkey)
-    // + sortBy, joined with zero Exchange on either input (plan shape
-    // pinned by BucketingSpec) — the pay-once storage layout for repeated
-    // fact-to-fact joins
-    "q4_colocated_join" -> ((s, dir) =>
-      graft.plans.Bucketing.colocatedPriorityVolume(s, dir, buckets = 8)),
-
-    // weighted corpus mixing against a token budget: integer-only targets
-    // and parts-per-million hash cuts per source
-    "tx_mix" -> ((s, dir) =>
-      Packing.mixReport(T(s, dir, "documents"), "doc_id", "text", "source",
-        weights = MixWeights, tokenBudget = 8000L, salt = "mix1:")),
-
-    // per-domain document cap (source = domain): window rank by tokens,
-    // per-domain kept/total/floor stats
-    "tx_domain_cap" -> ((s, dir) =>
-      Packing.domainCapReport(T(s, dir, "documents"), "doc_id", "text",
-        "source", maxPerDomain = 15)),
-
-    // next-fit no-split bin packing (SFT-style): one shuffle + in-shard
-    // sequential scan; the DuckDB oracle replays the fold as a recursive CTE
-    "tx_pack_bins" -> ((s, dir) =>
-      Packing.packBinsNextFit(T(s, dir, "documents"), "doc_id", "text",
-        capacity = 256L, numShards = 8)),
-
-    // near-dup CLUSTERS: MinHash-LSH pairs transitively closed into
-    // connected components; group_id = min member = the dedup survivor
-    // CDC storage-savings: bytes as-is vs bytes stored once per distinct
-    // chunk — the number a dedup-backed store reports
-    "tx_cdc_savings" -> ((s, dir) =>
-      Corpus.cdcSavings(T(s, dir, "documents"), "doc_id", "text")),
-
-    // dedup-savings report: cluster-size histogram (+ singleton line) over
-    // the minhash near-dup components
-    "dd_cluster_hist" -> ((s, dir) =>
-      Groups.clusterSizeHistogram(T(s, dir, "documents"), "doc_id", "text",
-        threshold = 0.2)),
-
-    "dd_neardup_groups" -> ((s, dir) =>
-      Groups.nearDupGroups(T(s, dir, "documents"), "doc_id", "text",
-        threshold = 0.2)
-        // the driver compare hashes scalar cells — ship the member list as
-        // a canonical CSV string on both engines
-        .withColumn("members",
-          array_join(col("members").cast("array<string>"), ","))),
-
-    // corpus snapshot diff — "what changed between crawls": full outer
-    // join on doc id comparing content hashes; the previous snapshot is
-    // derived deterministically (every 7th doc new since, every 5th
-    // edited since, every 11th retired) so all four statuses exist
-    "tx_snapshot_diff" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val cur = docs.select(col("doc_id"), md5(col("text")).as("h"))
-      val prev = docs.filter(col("doc_id") % 7 =!= 0)
-        .select(col("doc_id"),
-          md5(when(col("doc_id") % 5 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text"))).as("h"))
-        .unionByName(docs.filter(col("doc_id") % 11 === 0)
-          .select((col("doc_id") + 10000000L).as("doc_id"),
-            md5(col("text")).as("h")))
-      cur.as("c").join(prev.as("p"),
-          col("c.doc_id") === col("p.doc_id"), "full")
-        .select(when(col("p.doc_id").isNull, "added")
-          .when(col("c.doc_id").isNull, "removed")
-          .when(col("c.h") =!= col("p.h"), "changed")
-          .otherwise("unchanged").as("status"))
-        .groupBy("status").agg(count(lit(1)).as("n"))
-        .orderBy("status")
-    }),
-
-    // canonical-doc selection inside each near-dup cluster: keep the
-    // highest-n_chars member (tie -> smallest id) — the post-clustering
-    // step of a real dedup pipeline, one struct-argmax per group
-    "dd_canonical" -> ((s, dir) =>
-      Groups.canonicalDocs(T(s, dir, "documents"), "doc_id", "text",
-        "n_chars", threshold = 0.2)),
-
-    // leakage-safe train/test split: near-dup CLUSTERS (not documents)
-    // hash to splits, so no test doc has a near-duplicate in train; the
-    // audit row computes the cross-split pair count under the cluster
-    // policy (0) AND under the naive per-doc split (> 0 — the
-    // contamination this operator exists to prevent)
-    "dd_split_leakage" -> ((s, dir) =>
-      Groups.leakageSafeSplit(T(s, dir, "documents"), "doc_id", "text",
-        threshold = 0.2)),
-
-    // exact shared-substring contamination (share any verbatim ≥32-char
-    // run): boilerplate injected BY THE QUERY on both engines (same
-    // pattern as tx_pii) so long verbatim overlaps exist in the synthetic
-    // bag-of-words corpus
-    "dd_substring_pairs" -> ((s, dir) =>
-      Dedup.sharedSubstringPairs(boilerplateDocs(s, dir), "doc_id", "text",
-        minLen = 32)),
-
-    // the SAME contamination contract through the winnowed-fingerprint
-    // scale path — hash-matches the identical oracle, proving the ~25×
-    // cheaper plan exact
-    // gram = 24: on a small-vocabulary corpus short grams recur across
-    // most documents, so window-min fingerprints must be built over grams
-    // long enough to be selective (≈4-word runs) — recall for ≥32-char
-    // matches is guaranteed for ANY gram < minLen
-    "dd_substring_winnow" -> ((s, dir) =>
-      Dedup.winnowedSubstringPairs(boilerplateDocs(s, dir), "doc_id", "text",
-        minLen = 32, gram = 24)),
-
-    // blocking + edit-distance verification (entity-resolution two-phase):
-    // 32-char-prefix blocking key, full Levenshtein verify inside blocks,
-    // sim = 1 − ed/max(|a|,|b|) — the BLOCKING member of the pair family,
-    // beside dd_edit_pairs' guaranteed-recall q-gram banding
-    "dd_block_pairs" -> ((s, dir) =>
-      Dedup.editVerifiedPairs(T(s, dir, "documents"), "doc_id", "text")),
-
-    // BLEU-2 over the same blocking pairs: exact clipped n-gram matches,
-    // token-arithmetic totals, brevity penalty — the MT-grade overlap score
-    "tx_bleu" -> ((s, dir) =>
-      Dedup.bleuPairs(T(s, dir, "documents"), "doc_id", "text")),
-
-    // empirical-Bayes smoothed conversion ranking: beta-binomial shrinkage
-    // toward the global rate (m=20 pseudo-events), top-50 by smoothed rate
-    "ev_bayes" -> ((s, dir) =>
-      Events.ebConversion(T(s, dir, "events"))),
-
-    // language-mix Shannon entropy per source — the "is this source
-    // monolingual or a mixed crawl" curation readout beside tx_kl's
-    // corpus-level drift; ≤|langs| ln terms folded in an ordered
-    // running window per source (the zipfFit summation discipline)
-    "tx_lang_entropy" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("source").orderBy("lang")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
-      val all = org.apache.spark.sql.expressions.Window.partitionBy("source")
-      T(s, dir, "documents")
-        .groupBy("source", "lang").agg(count(lit(1)).as("n"))
-        .withColumn("tot", sum("n").over(all))
-        .withColumn("p", col("n").cast("double") / col("tot").cast("double"))
-        .withColumn("t", -(col("p") * log(col("p"))))
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("source").orderBy("lang")))
-        .withColumn("nl", count(lit(1)).over(all))
-        .withColumn("h", sum("t").over(w))
-        .filter(col("rn") === col("nl"))
-        .select(col("source"), col("nl").cast("long").as("langs"),
-          col("tot").cast("long").as("docs"), round(col("h"), 6).as("entropy"))
-        .orderBy("source")
-    }),
-
-    // composed curation pipeline — the end-to-end shape every stage above
-    // feeds: exact-dedup survivors (min doc_id per identical text) →
-    // token-count quality gate (≥ 5) → per-lang rollup. One gate for the
-    // COMPOSITION: operators must chain without re-reading the corpus
-    // (survivor anti-join and the gate share the single tokenized scan)
-    "tx_curate" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      // survivors keyed on md5(text) (the Dedup.exactGroups discipline —
-      // 16-byte keys cross the wire, the text itself never does)
-      val surv = docs.groupBy(md5(col("text")).as("h"))
-        .agg(min("doc_id").as("doc_id")).select("doc_id")
-      docs.join(surv, "doc_id")
-        .withColumn("toks",
-          size(filter(split(lower(col("text")), "\\s+"), t => t =!= "")))
-        .filter(col("toks") >= 5)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum("toks").as("tokens"),
-          sum("doc_id").as("id_sum"))
-        .orderBy("lang")
-    }),
-
-    // OOV rate of the held-out slice against the training vocabulary — the
-    // coverage number every tokenizer/LM gate tracks; token totals are
-    // arithmetic, unseen tokens come from one vocab anti-join (word-keyed,
-    // never broadcast), per-lang split exact
-    "tx_oov" -> ((s, dir) => {
-      val toksC = filter(split(lower(col("text")), "\\s+"), t => t =!= "")
-      val docs = T(s, dir, "documents")
-      val train = docs.filter(col("doc_id") % 5 =!= 0)
-        .select(explode(toksC).as("w")).distinct()
-      val ev = docs.filter(col("doc_id") % 5 === 0)
-        .select(col("lang"), explode(toksC).as("w"))
-      val oov = ev.join(train, Seq("w"), "left_anti")
-        .groupBy("lang").agg(count(lit(1)).as("oov_tokens"))
-      ev.groupBy("lang").agg(count(lit(1)).as("tokens"))
-        .join(oov, Seq("lang"), "left")
-        .na.fill(0L, Seq("oov_tokens"))
-        .select(col("lang"), col("tokens"), col("oov_tokens"),
-          round(col("oov_tokens").cast("double") / col("tokens").cast("double"), 6)
-            .as("oov_rate"))
-        .orderBy("lang")
-    }),
-
-    // word burstiness (Church & Gale's tf/df clumpiness): words that pile
-    // up inside few documents vs spreading evenly — bursty high-frequency
-    // words are spam/template markers; exact integer tf and df from one
-    // (doc, word) aggregate, top-20 by (ratio, word) as a TakeOrdered
-    "tx_burstiness" -> ((s, dir) => {
-      val dw = T(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(filter(split(lower(col("text")), "\\s+"), t => t =!= ""))
-            .as("w"))
-        .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-      dw.groupBy("w")
-        .agg(sum("c").as("tf"), count(lit(1)).as("df"))
-        .filter(col("tf") >= 50)
-        .withColumn("burst",
-          round(col("tf").cast("double") / col("df").cast("double"), 6))
-        .orderBy(col("burst").desc, col("w")).limit(20)
-        .select(col("w").as("word"), col("tf"), col("df"), col("burst"))
-    }),
-
-    // corpus-level template mining over the boilerplate-injected corpus:
-    // top-20 8-grams by document frequency — WHAT text recurs, the
-    // corpus-wide sibling of the pair-level substring dedup
-    "tx_templates" -> ((s, dir) =>
-      Corpus.templates(boilerplateDocs(s, dir), "doc_id", "text")),
-
-    // BPE tokenizer training: first 6 merges learned over the corpus —
-    // per-round pair counting runs on the (word, freq) vocabulary table,
-    // never the corpus; deterministic argmax tie-break (count DESC, lhs, rhs)
-    "tx_bpe_merges" -> ((s, dir) =>
-      Bpe.bpeMerges(T(s, dir, "documents"), "text", numMerges = 6)),
-
-    // the ENCODE side: tokenize the corpus with the 6 learned merges —
-    // per-doc word count and BPE token count via the vocabulary join
-    "tx_bpe_encode" -> ((s, dir) =>
-      Bpe.bpeTokenCounts(T(s, dir, "documents"), "doc_id", "text",
-        numMerges = 6)),
-
-    // WordPiece (BERT-family) greedy longest-match tokenizer — the third
-    // tokenizer class beside the BPE pair and regex tokens; token
-    // frequency top-25 under the recursive-CTE greedy replay
-    "tx_wordpiece" -> ((s, dir) => {
-      val tok = udf((text: String) =>
-        if (text == null) Seq.empty[String]
-        else text.split(' ').iterator.filter(_.nonEmpty)
-          .flatMap(w => Corpus.wordpiece(w)).toSeq)
-      T(s, dir, "documents").select(explode(tok(col("text"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("token")).limit(25)
-    }),
-
-    // bigram-LM perplexity filter: add-one-smoothed model trained on
-    // doc_id % 5 != 0, scoring the held-out % 5 == 0 slice (unseen bigrams
-    // exercise the smoothing path)
-    "tx_lm_score" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      LanguageModel.bigramScore(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0), "doc_id", "text")
-    }),
-
-    // the same perplexity-filter contract under interpolated Kneser–Ney
-    // smoothing (the KenLM-family estimator a production CCNet filter
-    // ships) — absolute discount 0.75, continuation-probability backoff;
-    // same train/score split, same sort-merge model-join plan shape
-    "tx_kn_score" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      LanguageModel.knBigramScore(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0), "doc_id", "text")
-    }),
-
-    // CCNet-style perplexity bucketing: score EVERY document with the
-    // 4/5-trained bigram LM, cut into 10 ntile buckets by (avg_nll, id) —
-    // the curriculum / head-middle-tail split a perplexity filter feeds;
-    // per-bucket totals exact, boundaries are order statistics
-    "tx_ppl_bucket" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      // NOT persisted (round-10 measured): scored is consumed three times
-      // (count + range sampling + zipWithIndex), but count() on the lazy
-      // frame benefits from column pruning and the recomputes are cheaper
-      // than materializing every column — persist() measured 2.21 → 3.27 s
-      // min-of-3 at sf0.1, so the lazy form stays
-      val scored = LanguageModel.bigramScore(
-        docs.filter(col("doc_id") % 5 =!= 0), docs, "doc_id", "text")
-      // deciles via the distributed globalRank + closed-form ntileFromRank
-      // (bucket-identical to ntile(10) over a global window, without the
-      // move-everything-to-one-partition WindowExec — (avg_nll, id) is a
-      // total order so the rank is deterministic)
-      val n = scored.count()
-      val ranked = Events.globalRank(scored,
-        Seq(col("avg_nll"), col("id")), "_r")
-      ranked.withColumn("bucket",
-          Events.ntileFromRank(col("_r"), lit(n), 10).cast("long"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("docs"), sum("n_bigrams").as("bigrams"),
-          min("avg_nll").as("min_nll"), max("avg_nll").as("max_nll"))
-        .orderBy("bucket")
-    }),
-
-    // multinomial Naive Bayes lang classifier: train on the 4/5 slice,
-    // score the held-out 1/5 — model stays sharded on word keys
-    "tx_classify" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id").as("id"),
-        col("lang").as("label"), col("text"))
-      Classify.naiveBayes(
-        d.filter(col("id") % 5 =!= 0), d.filter(col("id") % 5 === 0))
-    }),
-
-    // per-doc top-3 TF-IDF keyword terms: tf + df aggregates, vocab-KEYED
-    // join (df table is vocabulary-sized — never broadcast), per-doc window
-    // top-k ranking on the rounded score
-    "tx_tfidf" -> ((s, dir) =>
-      Corpus.tfidfTopTerms(T(s, dir, "documents"), "doc_id", "text",
-        topPerDoc = 3).orderBy(col("id"), col("rank"))),
-
-    // distinct-n lexical diversity per source (Li et al. NAACL'16): unique
-    // vs total 1/2/3-grams — n-gram fan-out as a scan-projection generator,
-    // two map-side-combinable aggregates, exact integers
-    "tx_distinct_n" -> ((s, dir) =>
-      Corpus.distinctN(T(s, dir, "documents"), "source", "text")),
-
-    // Zipf rank-frequency OLS over the top-500 words: every float moment
-    // accumulated in ONE ordered running window so both engines fold in
-    // the identical sequence — slope ≈ −1 is healthy, slope → 0 is
-    // boilerplate collapse
-    "tx_zipf" -> ((s, dir) =>
-      Corpus.zipfFit(T(s, dir, "documents"), "text", topN = 500)),
-
-    // KL / Jensen-Shannon / cross-entropy of each language's unigram
-    // distribution vs the corpus — the domain-shift readout; exact integer
-    // counts, ln terms folded in one ordered per-group running window
-    "tx_kl" -> ((s, dir) =>
-      Corpus.divergence(T(s, dir, "documents"), "lang", "text")),
-
-    // PMI bigram collocations (phrase mining): bigram fan-out as a generator
-    // in the scan projection, two count aggregates, TakeOrdered top-20
-    "tx_colloc" -> ((s, dir) =>
-      Corpus.collocations(T(s, dir, "documents"), "doc_id", "text",
-        minCount = 5, topK = 20)),
-
-    // heatmap tile aggregation over the point layer: ONE partial-aggregated
-    // shuffle to per-cell counts + decimal-exact value mass, TakeOrdered
-    // top-20 tiles
-    "sp_grid_heat" -> ((s, dir) =>
-      SpatialAggs.gridHeatmap(pointsDf(s, dir), "c_acctbal", cellDeg = 15.0)
-        .orderBy(col("n_points").desc, col("cell_x"), col("cell_y"))
-        .limit(20)),
-
-    // shot-boundary scene segmentation over REAL decoded video frames
-    // (round-9 promotion): the lag cut rule, running-sum scene ids, and the
-    // per-scene aggregate all share ONE media_id shuffle; the quadratic-k
-    // frame pattern makes |Δfeat| ≈ 0.75–1.0·|Δk|, so cuts and non-cuts
-    // both occur
-    "mm_scenes" -> ((s, dir) => {
-      val media = Multimodal.syntheticVideoPng(s, 300, frames = 12)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val frames =
-        try Multimodal.sampleFrames(media, n = 12)
-        finally s.conf.set("spark.graft.mm.codec", prev)
-      Multimodal.sceneSegments(frames, threshold = 5.5)
-        .orderBy(col("media_id"), col("scene_id"))
-    }),
-
-    // content-defined chunking (FastCDC-style anchors) + chunk-level dedup
-    // stats: boundary scan and chunk fan-out stay in the scan projection,
-    // one hash-keyed aggregate, TakeOrdered top-20 most-shared chunks
-    "tx_cdc" -> ((s, dir) =>
-      Corpus.cdcChunkStats(T(s, dir, "documents"), "doc_id", "text",
-        k = 8, divisor = 64, topK = 20)),
-
-    // batch ANN kNN join: every 25th vector queries the IVF index at once —
-    // corpus assigned once, probe lists exploded per query, list-keyed join
-    // (partition pruning when the corpus is written by list_id), window
-    // top-k on the rounded exact cosine
-    "sim_knn_join" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      Similarity.ivfKnnJoin(emb, emb.filter(col("vec_id") % 25 === 0),
-          "vec_id", "embedding", k = 5, nlist = 16, nprobe = 2)
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // two-level (hierarchical) IVF kNN join — the 100 TB quantizer: flat
-    // assignment is corpus×nlist (N² under nlist∝N, measured 9.5× vs
-    // linear 3.33 at the 100×/30× rungs); parents+children assignment is
-    // ~2√nlist per vector. The oracle replays the exact two-level argmax
-    "sim_knn_hier" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      Similarity.ivfKnnJoinTwoLevel(emb, emb.filter(col("vec_id") % 25 === 0),
-          "vec_id", "embedding", k = 5, nlist = 16, nprobe = 2)
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // log-depth quantizer tree (nlist=64, branch=4 → 4-node top, 16-node
-    // mid, 64 leaves): per-vector assignment is branch·log_branch(nlist)
-    // — the O(log N) scale path where flat is O(N) and two-level O(√N).
-    // The oracle replays every level of the greedy descent and the
-    // width-2 beam probe exactly (same (cosine desc, id) tie order)
-    "sim_knn_tree" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      Similarity.ivfKnnJoinTree(emb, emb.filter(col("vec_id") % 25 === 0),
-          "vec_id", "embedding", k = 5, nlist = 64, nprobe = 2,
-          branch = 4, beam = 2)
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // ANN quality gate: recall@5 of the IVF index vs the exact top-5 over
-    // a sampled query set — retrieval evaluation as an operator; both
-    // sides share the (rounded cosine, id) tie order so recall is exact
-    // embedding-norm hygiene histogram: ‖v‖ distribution in 0.1-wide bins —
-    // the sanity check before any cosine/dot-product index (un-normalized
-    // vectors silently break dot≈cosine shortcuts); the square-sum folds
-    // sequentially inside each vector (aggregate HOF = the oracle's
-    // 0-seeded list_reduce), bins are floor(10·norm) on identical doubles
-    // top principal component by exact integer moments + driver power
-    // iteration (bounded by dim, not corpus) — per-label projection stats
-    // + Rayleigh lambda, bit-identical to the oracle's replayed folds
-    "sim_pca" -> ((s, dir) =>
-      Similarity.pcaLabelStats(T(s, dir, "embeddings"),
-        "embedding", "label", dim = 64)),
-
-    "sim_norm_hist" -> ((s, dir) => {
-      val norm = sqrt(aggregate(
-        transform(col("embedding"), _.cast("double")),
-        lit(0.0), (a, v) => a + v * v))
-      T(s, dir, "embeddings")
-        .withColumn("bin", floor(norm * 10.0).cast("long"))
-        .groupBy("bin")
-        .agg(count(lit(1)).as("vecs"))
-        .orderBy("bin")
-    }),
-
-    "sim_recall" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      Similarity.ivfRecallAtK(emb, emb.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 5, nlist = 16, nprobe = 2)
-    }),
-
-    // NDCG@5 of the same IVF shortlist: position-sensitive retrieval grade
-    // (log2-discounted binary relevance) — finds-them-but-misorders-them
-    // scores below ranks-them-right; per-query DCG and the cross-query mean
-    // both fold in ordered running windows
-    "sim_ndcg" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") % 50 === 0)
-      Similarity.ndcgAtK(
-        Similarity.ivfKnnJoin(emb, qs, "vec_id", "embedding",
-          k = 5, nlist = 16, nprobe = 2),
-        emb, qs, "vec_id", "embedding", k = 5)
-    }),
-
-    // per-language percentile length gate: relative quality threshold per
-    // stratum; ONE stratum shuffle serves window + summary aggregate
-    "tx_quality_gate" -> ((s, dir) =>
-      Corpus.lengthPercentileGate(T(s, dir, "documents"), "doc_id", "text",
-        "lang", minPct = 0.2)),
-
-    // tile pyramid (5°→15°→45°): each coarser level rolls up FROM the finer
-    // AGGREGATE, never from base rows — at 100 TB the base scan happens once
-    // and every later exchange is tile-count-sized. Value mass stays decimal
-    // through every level (double only at the output), so rollup order
-    // can't perturb the sums. Nested 3× levels ⟹ coarse cell = fine div 3.
-    "sp_tile_pyramid" -> ((s, dir) => {
-      val fine = pointsDf(s, dir).groupBy(
-          floor((col("x") + 180.0) / 5.0).cast("long").as("cell_x"),
-          floor((col("y") + 90.0) / 5.0).cast("long").as("cell_y"))
-        .agg(count(lit(1)).as("n"), sum(col("c_acctbal").cast("decimal(18,2)")).as("s"))
-      def up(df: DataFrame) = df.groupBy(
-          expr("cell_x div 3").as("cell_x"), expr("cell_y div 3").as("cell_y"))
-        .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
-      val mid = up(fine); val coarse = up(mid)
-      Seq((fine, 5.0), (mid, 15.0), (coarse, 45.0))
-        .map { case (df, deg) => df.select(lit(deg).as("cell_deg"),
-          col("cell_x"), col("cell_y"), col("n").as("n_points"),
-          col("s").cast("double").as("sum_val")) }
-        .reduce(_ unionByName _)
-        .orderBy(col("cell_deg"), col("cell_x"), col("cell_y"))
-    })
-  )
-
-  /** Documents with query-side boilerplate injected into every 29th row
-    * (three variants), so ≥32-char verbatim overlaps exist in the synthetic
-    * bag-of-words corpus — shared by both dd_substring_* queries.
-    */
-  private def boilerplateDocs(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents").withColumn("text",
-      when(col("doc_id") % 29 === 0,
-        concat(col("text"), lit(" shared boilerplate license header variant "),
-          (col("doc_id") % 3).cast("string"),
-          lit(" retained verbatim across documents")))
-        .otherwise(col("text")))
-
-  /** DuckDB text expression matching [[boilerplateDocs]]. */
-  private val BoilerplateSqlExpr: String =
-    "CASE WHEN doc_id % 29 = 0 THEN text || ' shared boilerplate license header variant ' " +
-      "|| CAST(doc_id % 3 AS VARCHAR) || ' retained verbatim across documents' " +
-      "ELSE text END"
-
-  /** Integer mixture weights for tx_mix — derived from the source suffix so
-    * both engines build the identical literal table.
-    */
-  private val MixWeights: Map[String, Long] =
-    (0 until 20).map(i => s"src$i" -> ((i % 4) + 1).toLong).toMap
-
-  /** Per-language sampling rates for tx_sample (rate·10000 must be integral
-    * so the hash cut is exact on both engines).
-    */
-  private val SampleRates = Map(
-    "en" -> 0.55, "de" -> 0.75, "es" -> 0.65, "fr" -> 0.85, "zh" -> 0.45)
-
-  /** Boilerplate lines injected for tx_line_dedup (the C4 "subscribe…"
-    * fixture) — plain lowercase words so tokenization is trivial.
-    */
-  private val LineDedupHeader = "subscribe to our newsletter for updates today"
-  private val LineDedupFooter = "all rights reserved contact site admin here"
-
-  /** Query rectangle shared by sp_intersects_poly / sp_relate_within /
-    * sp_set_ops — off-lattice bounds so no point ever sits on the boundary.
-    */
-  private val RectWkt =
-    "POLYGON ((0.2 -10.2, 30.2 -10.2, 30.2 40.2, 0.2 40.2, 0.2 -10.2))"
-
-  /** Lattice-ALIGNED rectangle for sp_predicate_lattice: its boundary passes
-    * through point coordinates, so touch/corner cases actually occur.
-    */
-  private val LatticeRectWkt =
-    "POLYGON ((0.5 -10.5, 30.5 -10.5, 30.5 40.5, 0.5 40.5, 0.5 -10.5))"
-
-  /** Exact area of ONE JTS r=0.45 disc buffer (32-gon, quadrantSegments=8),
-    * embedded as a literal in the sp_buffer_union_area oracle.
-    */
-  private lazy val DiscArea: Double =
-    GeomCodec.point(0.0, 0.0).buffer(0.45).getArea
-
-  /** Oracle for both spatial-join strategies: envelope containment is plain
-    * min/max BETWEEN arithmetic on the lattice coordinates.
-    */
-  private val SupJoinSql =
-    """
-      |, sup AS (
-      |  SELECT s_nationkey, min(x) AS minx, min(y) AS miny, max(x) AS maxx, max(y) AS maxy
-      |  FROM (SELECT s_nationkey,
-      |               CAST((s_suppkey % 360) - 180 + 0.5 AS DOUBLE) AS x,
-      |               CAST(((s_suppkey * 7) % 180) - 90 + 0.5 AS DOUBLE) AS y
-      |        FROM supplier)
-      |  GROUP BY 1
-      |)
-      |SELECT s.s_nationkey, count(*) AS n_pts
-      |FROM sup s JOIN pts p
-      |  ON p.x >= s.minx AND p.x <= s.maxx AND p.y >= s.miny AND p.y <= s.maxy
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n, sum(l_quantity) AS sum_qty,
-        |       min(l_shipdate) AS min_ship, max(l_shipdate) AS max_ship
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q2_top_orders" ->
-      """SELECT o_orderkey, o_totalprice, c_name
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q3_nation_volume" ->
-      """SELECT n_name, count(*) AS n_items, sum(l_quantity) AS sum_qty
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q8_market_share" ->
-      """WITH v AS (
-        |  SELECT CAST(year(o_orderdate) AS BIGINT) AS yr, s_nationkey,
-        |         CAST(round(l_extendedprice * 100) AS BIGINT)
-        |           * (100 - CAST(round(l_discount * 100) AS BIGINT)) AS vol
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON c_custkey = o_custkey
-        |  JOIN nation cn ON cn.n_nationkey = c_nationkey AND cn.n_regionkey = 0
-        |  JOIN supplier ON s_suppkey = l_suppkey
-        |)
-        |SELECT yr,
-        |  CAST(sum(CASE WHEN s_nationkey = 7 THEN vol ELSE 0 END) AS BIGINT) AS nation_vol,
-        |  CAST(sum(vol) AS BIGINT) AS total_vol,
-        |  round(sum(CASE WHEN s_nationkey = 7 THEN vol ELSE 0 END)::DOUBLE
-        |      / sum(vol)::DOUBLE, 6) AS share
-        |FROM v GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q5_local_volume" ->
-      """SELECT n_name,
-        |       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |                 * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT)
-        |         AS revenue_scaled
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey AND n_regionkey = 1
-        |WHERE year(o_orderdate) = 1997
-        |GROUP BY 1 ORDER BY 2 DESC, 1""".stripMargin,
-
-    "q13_cust_dist" ->
-      """WITH co AS (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer
-        |  LEFT JOIN orders ON c_custkey = o_custkey
-        |    AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY 1
-        |)
-        |SELECT c_count, count(*) AS custdist
-        |FROM co GROUP BY 1 ORDER BY 2 DESC, 1 DESC""".stripMargin,
-
-    "q18_large_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, CAST(sum(l_quantity) AS BIGINT) AS total_qty
-        |  FROM lineitem GROUP BY 1 HAVING CAST(sum(l_quantity) AS BIGINT) > 300
-        |)
-        |SELECT o_custkey, l_orderkey AS orderkey,
-        |       CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |       total_qty
-        |FROM big JOIN orders ON l_orderkey = o_orderkey
-        |ORDER BY price_cents DESC, orderkey LIMIT 20""".stripMargin,
-
-    "q3_shipping" ->
-      """SELECT l_orderkey,
-        |       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |                 * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT)
-        |         AS revenue_scaled,
-        |       o_orderdate, o_orderpriority
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey AND c_mktsegment = 'BUILDING'
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE o_orderdate < TIMESTAMP '1998-06-01'
-        |  AND l_shipdate > TIMESTAMP '1998-06-01'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue_scaled DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q22_idle_rich" ->
-      """WITH c AS (
-        |  SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nk,
-        |         CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-        |  FROM customer
-        |), t AS (
-        |  SELECT CAST(sum(cents) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS thr
-        |  FROM c WHERE cents > 0
-        |)
-        |SELECT nk, count(*) AS n_cust, CAST(sum(cents) AS BIGINT) AS cents
-        |FROM c CROSS JOIN t
-        |WHERE CAST(cents AS DOUBLE) > t.thr
-        |  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |GROUP BY nk ORDER BY nk""".stripMargin,
-
-    "q19_disjunct" ->
-      """SELECT count(*) AS n_lines,
-        |       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |                 * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT)
-        |         AS revenue_scaled
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-        |         AND l_quantity BETWEEN 1 AND 12)
-        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 25
-        |         AND l_quantity BETWEEN 10 AND 24)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 40
-        |         AND l_quantity BETWEEN 24 AND 36)""".stripMargin,
-
-    "q14_promo" ->
-      """WITH j AS (
-        |  SELECT p_type,
-        |         CAST(round(l_extendedprice * 100) AS BIGINT)
-        |           * (100 - CAST(round(l_discount * 100) AS BIGINT)) AS vol
-        |  FROM lineitem JOIN part ON p_partkey = l_partkey
-        |  WHERE l_shipdate >= TIMESTAMP '1997-03-01'
-        |    AND l_shipdate < TIMESTAMP '1997-04-01'
-        |)
-        |SELECT CAST(sum(CASE WHEN p_type = 'PROMO' THEN vol ELSE 0 END) AS BIGINT)
-        |         AS promo_scaled,
-        |       CAST(sum(vol) AS BIGINT) AS total_scaled,
-        |       round(100.0 * CAST(sum(CASE WHEN p_type = 'PROMO' THEN vol ELSE 0 END) AS DOUBLE)
-        |             / CAST(sum(vol) AS DOUBLE), 6) AS promo_pct
-        |FROM j""".stripMargin,
-
-    "q10_returns" ->
-      """SELECT c_custkey, c_name, n_name,
-        |       CAST(round(c_acctbal * 100) AS BIGINT) AS acctbal_cents,
-        |       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |                 * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT)
-        |         AS revenue_scaled
-        |FROM customer
-        |JOIN nation ON n_nationkey = c_nationkey
-        |JOIN orders ON o_custkey = c_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01'
-        |GROUP BY c_custkey, c_name, n_name, c_acctbal
-        |ORDER BY revenue_scaled DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "ev_top_users" ->
-      "SELECT user_id, count(*) AS n FROM events GROUP BY 1 ORDER BY n DESC, user_id LIMIT 20",
-
-    "ev_cube" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |         CAST(json_extract_string(props, '$.k') AS BIGINT) // 10 AS band,
-        |         CAST(round(value * 100) AS BIGINT) AS cents
-        |  FROM events
-        |)
-        |SELECT GROUPING(event_type, band) AS gid, event_type, band,
-        |       count(*) AS n, CAST(sum(cents) AS BIGINT) AS sum_cents
-        |FROM e GROUP BY CUBE (event_type, band)
-        |ORDER BY gid, coalesce(event_type, ''), coalesce(band, -1)""".stripMargin,
-
-    "ev_hourly" ->
-      """SELECT epoch_ns(ts) // 3600000000000 AS hour_idx, event_type,
-        |       count(*) AS n, min(event_id) AS min_ev, max(event_id) AS max_ev
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "ev_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsn, value FROM events),
-        |g AS (
-        |  SELECT *, CASE WHEN lag(tsn) OVER w IS NULL
-        |                 OR tsn - lag(tsn) OVER w > 14400000000 THEN 1 ELSE 0 END AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsn, event_id)
-        |), s AS (
-        |  SELECT *, CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tsn, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_seq
-        |  FROM g
-        |)
-        |SELECT user_id, sess_seq, count(*) AS n_events,
-        |       min(tsn) AS t_start, max(tsn) AS t_end,
-        |       min(event_id) AS first_ev, round(sum(value), 4) AS sum_value
-        |FROM s GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q17_small_qty" ->
-      """WITH li AS (
-        |  SELECT l_partkey, CAST(l_quantity AS BIGINT) AS qty,
-        |         CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
-        |  FROM lineitem
-        |), per_part AS (
-        |  SELECT l_partkey, sum(qty) AS sq, count(*) AS cq FROM li GROUP BY 1
-        |)
-        |SELECT p_brand, CAST(sum(cents) AS BIGINT) AS rev_cents,
-        |       count(*) AS n_li,
-        |       round(sum(cents) / 700.0, 4) AS avg_yearly
-        |FROM li
-        |JOIN per_part USING (l_partkey)
-        |JOIN part ON l_partkey = p_partkey AND p_size <= 10
-        |WHERE qty * 5 * cq < sq
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-
-    "q21_waiting" ->
-      """WITH l AS (
-        |  SELECT l_orderkey AS ok, l_suppkey AS sk, l_shipdate AS sd
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F'
-        |), per AS (
-        |  SELECT ok, max(sd) AS mx, count(DISTINCT sk) AS nsupp FROM l GROUP BY 1
-        |), lastship AS (
-        |  SELECT DISTINCT l.ok, l.sk
-        |  FROM l JOIN per ON l.ok = per.ok AND l.sd = per.mx
-        |  WHERE per.nsupp > 1
-        |), lone AS (
-        |  SELECT ok, min(sk) AS sk FROM lastship GROUP BY 1 HAVING count(*) = 1
-        |)
-        |SELECT s_name, count(*) AS numwait
-        |FROM lone JOIN supplier ON s_suppkey = sk
-        |GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
-
-    "q4_priority" ->
-      """SELECT o_orderpriority, count(*)::BIGINT AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-04-01'
-        |  AND EXISTS (
-        |    SELECT 1 FROM lineitem
-        |    WHERE l_orderkey = o_orderkey
-        |      AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q7_volume" ->
-      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-        |       CAST(year(l_shipdate) AS BIGINT) AS l_year,
-        |       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |         * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT)
-        |         AS revenue_scaled
-        |FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |  JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |WHERE (s_nationkey = 7 AND c_nationkey = 8)
-        |   OR (s_nationkey = 8 AND c_nationkey = 7)
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    "q6_forecast" ->
-      """SELECT CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |         * CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT)
-        |         AS revenue_scaled,
-        |       count(*)::BIGINT AS n_items
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_quantity < 24
-        |  AND CAST(round(l_discount * 100) AS BIGINT) BETWEEN 5 AND 7""".stripMargin,
-
-    "q9_profit" ->
-      """SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS yr,
-        |       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |           * (100 - CAST(round(l_discount * 100) AS BIGINT))
-        |         - CAST(round(p_retailprice * 100) AS BIGINT) * 60
-        |           * CAST(l_quantity AS BIGINT)) AS BIGINT) AS profit_scaled
-        |FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_name LIKE 'large%'
-        |GROUP BY 1, 2 ORDER BY n_name, yr DESC""".stripMargin,
-
-    "q11_important_parts" ->
-      """WITH v AS (
-        |  SELECT l_partkey,
-        |         CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |           * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT)
-        |           AS value_scaled
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE n_regionkey = 0
-        |  GROUP BY 1
-        |), t AS (SELECT CAST(sum(value_scaled) AS BIGINT) AS tv FROM v)
-        |SELECT l_partkey AS partkey, value_scaled
-        |FROM v CROSS JOIN t
-        |WHERE value_scaled * 1000 > 5 * tv
-        |ORDER BY value_scaled DESC, partkey""".stripMargin,
-
-    "q12_late_priority" ->
-      """SELECT l_returnflag,
-        |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |       CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |         THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |         CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |           * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT)
-        |           AS total_revenue_scaled
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |    AND l_shipdate < TIMESTAMP '1997-07-01'
-        |  GROUP BY 1
-        |)
-        |SELECT s_suppkey, s_name, total_revenue_scaled
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_revenue_scaled = (SELECT max(total_revenue_scaled) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q16_supplier_cnt" ->
-      """WITH pairs AS (
-        |  SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-        |  WHERE l_suppkey NOT IN
-        |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 1000)
-        |)
-        |SELECT p_brand, p_type, p_size,
-        |       count(DISTINCT l_suppkey)::BIGINT AS supplier_cnt
-        |FROM pairs JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#13' AND p_type <> 'PROMO'
-        |  AND p_size IN (1, 4, 9, 14, 19, 24, 29, 34)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-
-    "q20_excess_stock" ->
-      """WITH qual AS (
-        |  SELECT DISTINCT l_suppkey
-        |  FROM (
-        |    SELECT l_partkey, l_suppkey, CAST(sum(CAST(l_quantity AS BIGINT))
-        |      AS BIGINT) AS qty
-        |    FROM lineitem
-        |    WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |      AND l_shipdate < TIMESTAMP '1998-01-01'
-        |      AND l_partkey IN (SELECT p_partkey FROM part
-        |                        WHERE p_name LIKE 'small%')
-        |    GROUP BY 1, 2
-        |    HAVING sum(CAST(l_quantity AS BIGINT)) > 50
-        |  )
-        |)
-        |SELECT s_suppkey, s_name
-        |FROM supplier
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE n_regionkey = 1
-        |  AND s_suppkey IN (SELECT l_suppkey FROM qual)
-        |ORDER BY s_name""".stripMargin,
-
-    "ev_concurrency" -> Events.maxConcurrencyDuckSql(
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsn FROM events),
-        |g AS (
-        |  SELECT *, CASE WHEN lag(tsn) OVER w IS NULL
-        |                 OR tsn - lag(tsn) OVER w > 14400000000 THEN 1 ELSE 0 END AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsn, event_id)
-        |), s AS (
-        |  SELECT *, CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tsn, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_seq
-        |  FROM g
-        |), sess AS (
-        |  SELECT user_id, sess_seq, min(tsn) AS t_start, max(tsn) AS t_end
-        |  FROM s GROUP BY 1, 2
-        |)""".stripMargin),
-
-    "ev_gapfill" -> Events.gapFillLocfDuckSql(
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS tsn, value FROM events
-        |  WHERE user_id % 50 = 0
-        |)""".stripMargin),
-
-    "ev_asof" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsn, event_type, value FROM events)
-        |SELECT x.event_id, x.user_id, x.tsn,
-        |  (SELECT y.event_id FROM e y
-        |   WHERE y.user_id = x.user_id AND y.event_type = 'click'
-        |     AND (y.tsn < x.tsn OR (y.tsn = x.tsn AND y.event_id < x.event_id))
-        |   ORDER BY y.tsn DESC, y.event_id DESC LIMIT 1) AS r_ev,
-        |  round((SELECT y.value FROM e y
-        |   WHERE y.user_id = x.user_id AND y.event_type = 'click'
-        |     AND (y.tsn < x.tsn OR (y.tsn = x.tsn AND y.event_id < x.event_id))
-        |   ORDER BY y.tsn DESC, y.event_id DESC LIMIT 1), 4) AS r_val
-        |FROM e x WHERE x.event_type = 'purchase' ORDER BY x.event_id""".stripMargin,
-
-    "ev_ab_test" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) >= 16
-        |         THEN 1 ELSE 0 END::BIGINT AS c,
-        |    CAST(sum(CASE WHEN event_type = 'purchase'
-        |      THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS rev,
-        |    user_id % 2 AS v
-        |  FROM events GROUP BY user_id
-        |), s AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN v = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |    CAST(sum(CASE WHEN v = 0 THEN c ELSE 0 END) AS BIGINT) AS conv_a,
-        |    CAST(sum(CASE WHEN v = 0 THEN rev ELSE 0 END) AS BIGINT) AS rev_a,
-        |    CAST(sum(CASE WHEN v = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-        |    CAST(sum(CASE WHEN v = 1 THEN c ELSE 0 END) AS BIGINT) AS conv_b,
-        |    CAST(sum(CASE WHEN v = 1 THEN rev ELSE 0 END) AS BIGINT) AS rev_b
-        |  FROM u
-        |)
-        |SELECT *, CASE WHEN conv_a + conv_b > 0 AND conv_a + conv_b < n_a + n_b
-        |  THEN round(
-        |    (conv_a::DOUBLE / n_a::DOUBLE - conv_b::DOUBLE / n_b::DOUBLE) /
-        |    sqrt(((conv_a + conv_b)::DOUBLE / (n_a + n_b)::DOUBLE) *
-        |         (1.0 - (conv_a + conv_b)::DOUBLE / (n_a + n_b)::DOUBLE) *
-        |         (1.0 / n_a::DOUBLE + 1.0 / n_b::DOUBLE)), 6)
-        |  END AS z
-        |FROM s""".stripMargin,
-
-    // the identical exact rank algebra: DuckDB's window cumsum stands in
-    // for the distributed prefix scan (single-node oracle, same integers)
-    "ev_mannwhitney" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    CAST(sum(CASE WHEN event_type = 'purchase'
-        |      THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS m,
-        |    user_id % 2 AS variant
-        |  FROM events GROUP BY user_id
-        |), g AS (
-        |  SELECT m AS v, count(*)::BIGINT AS n_v,
-        |         sum(CASE WHEN variant = 0 THEN 1 ELSE 0 END)::BIGINT AS a_v
-        |  FROM u GROUP BY 1
-        |), c AS (
-        |  SELECT *, (sum(n_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-        |             - n_v)::BIGINT AS cum_before
-        |  FROM g
-        |), s AS (
-        |  SELECT sum(a_v * (2 * cum_before + n_v + 1))::BIGINT AS two_ra,
-        |         sum(a_v)::BIGINT AS n_a,
-        |         sum(n_v - a_v)::BIGINT AS n_b,
-        |         sum(n_v * n_v * n_v - n_v)::BIGINT AS ties
-        |  FROM c
-        |)
-        |SELECT n_a, n_b,
-        |       (two_ra - n_a * (n_a + 1))::BIGINT AS two_u_a, ties,
-        |       CASE WHEN n_a * n_b > 0 AND
-        |         (n_a + n_b + 1)::DOUBLE - ties::DOUBLE /
-        |           ((n_a + n_b) * (n_a + n_b - 1))::DOUBLE > 0
-        |       THEN round(
-        |         ((two_ra - n_a * (n_a + 1))::DOUBLE / 2.0
-        |            - n_a::DOUBLE * n_b::DOUBLE / 2.0) /
-        |         sqrt(n_a::DOUBLE * n_b::DOUBLE / 12.0 *
-        |           ((n_a + n_b + 1)::DOUBLE - ties::DOUBLE /
-        |              ((n_a + n_b) * (n_a + n_b - 1))::DOUBLE)), 6)
-        |       END AS z
-        |FROM s""".stripMargin,
-
-    "ev_ks" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS m,
-        |    user_id % 2 AS variant
-        |  FROM events GROUP BY user_id
-        |), g AS (
-        |  SELECT m AS v,
-        |    sum(CASE WHEN variant = 0 THEN 1 ELSE 0 END)::BIGINT AS a_v,
-        |    sum(CASE WHEN variant <> 0 THEN 1 ELSE 0 END)::BIGINT AS b_v
-        |  FROM u GROUP BY 1
-        |), c AS (
-        |  SELECT (sum(a_v) OVER wo)::BIGINT AS ca,
-        |         (sum(b_v) OVER wo)::BIGINT AS cb
-        |  FROM g WINDOW wo AS (ORDER BY v ROWS UNBOUNDED PRECEDING)
-        |), t AS (
-        |  SELECT sum(a_v)::BIGINT AS n_a, sum(b_v)::BIGINT AS n_b FROM g
-        |), s AS (
-        |  SELECT n_a, n_b, max(abs(ca * n_b - cb * n_a))::BIGINT AS d_num
-        |  FROM c CROSS JOIN t GROUP BY n_a, n_b
-        |)
-        |SELECT n_a, n_b, d_num,
-        |  round(d_num::DOUBLE / (n_a::DOUBLE * n_b::DOUBLE), 6) AS d,
-        |  round(sqrt((n_a * n_b)::DOUBLE / (n_a + n_b)::DOUBLE)
-        |        * (d_num::DOUBLE / (n_a::DOUBLE * n_b::DOUBLE)), 6) AS ks_lambda,
-        |  (sqrt((n_a * n_b)::DOUBLE / (n_a + n_b)::DOUBLE)
-        |   * (d_num::DOUBLE / (n_a::DOUBLE * n_b::DOUBLE)) > 1.358) AS reject_05
-        |FROM s""".stripMargin,
-
-    "ev_bootstrap" ->
-      """WITH u AS (
-        |  SELECT user_id AS uid,
-        |    CAST(sum(CASE WHEN event_type = 'purchase'
-        |      THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS m,
-        |    user_id % 2 AS variant
-        |  FROM events GROUP BY user_id
-        |), x AS (
-        |  SELECT uid, m, variant, r,
-        |    (uid * 1103515245 + r * 12345 + 987654321) % 1000000 AS uu
-        |  FROM u CROSS JOIN (SELECT unnest(range(0, 200)) AS r)
-        |), wt AS (
-        |  SELECT r, variant, m,
-        |    CASE WHEN uu < 367879 THEN 0 WHEN uu < 735759 THEN 1
-        |         WHEN uu < 919699 THEN 2 WHEN uu < 981012 THEN 3
-        |         WHEN uu < 996340 THEN 4 WHEN uu < 999406 THEN 5
-        |         WHEN uu < 999917 THEN 6 ELSE 7 END AS w
-        |  FROM x
-        |), pr AS (
-        |  SELECT r,
-        |    sum(CASE WHEN variant = 0 THEN w * m ELSE 0 END)::BIGINT AS sa,
-        |    sum(CASE WHEN variant = 0 THEN w ELSE 0 END)::BIGINT AS wa,
-        |    sum(CASE WHEN variant <> 0 THEN w * m ELSE 0 END)::BIGINT AS sb,
-        |    sum(CASE WHEN variant <> 0 THEN w ELSE 0 END)::BIGINT AS wb
-        |  FROM wt GROUP BY r
-        |), dfr AS (
-        |  SELECT r, sa::DOUBLE / wa::DOUBLE - sb::DOUBLE / wb::DOUBLE AS diff
-        |  FROM pr WHERE wa > 0 AND wb > 0
-        |), rk AS (
-        |  SELECT diff, CAST(row_number() OVER (ORDER BY diff, r) AS BIGINT) AS rk,
-        |         CAST(count(*) OVER () AS BIGINT) AS n_reps
-        |  FROM dfr
-        |), ci AS (
-        |  SELECT max(n_reps) AS n_reps,
-        |    max(CASE WHEN rk = greatest(1, (n_reps * 25 + 999) // 1000)
-        |        THEN diff END) AS lo_raw,
-        |    max(CASE WHEN rk = (n_reps * 975 + 999) // 1000
-        |        THEN diff END) AS hi_raw
-        |  FROM rk
-        |), pt AS (
-        |  SELECT sum(CASE WHEN variant = 0 THEN m ELSE 0 END)::DOUBLE /
-        |         sum(CASE WHEN variant = 0 THEN 1 ELSE 0 END)::DOUBLE -
-        |         sum(CASE WHEN variant <> 0 THEN m ELSE 0 END)::DOUBLE /
-        |         sum(CASE WHEN variant <> 0 THEN 1 ELSE 0 END)::DOUBLE AS p
-        |  FROM u
-        |)
-        |SELECT CAST(n_reps AS BIGINT) AS n_reps, round(p, 6) AS point_diff,
-        |       round(lo_raw, 6) AS lo, round(hi_raw, 6) AS hi
-        |FROM ci CROSS JOIN pt""".stripMargin,
-
-    "ev_msprt" -> Events.msprtDuckSql(sigma2 = 1.0e9, tau2 = 1.0e6),
-
-    "ev_qte" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |         sum(CASE WHEN event_type = 'purchase'
-        |                  THEN CAST(round(value * 100) AS BIGINT)
-        |                  ELSE 0 END)::BIGINT AS m
-        |  FROM events GROUP BY 1
-        |), vv AS (SELECT user_id % 2 AS v, m FROM u),
-        |qa AS (SELECT quantile_cont(m, 0.25) AS q1, quantile_cont(m, 0.5) AS q2,
-        |              quantile_cont(m, 0.75) AS q3, quantile_cont(m, 0.9) AS q4
-        |       FROM vv WHERE v = 0),
-        |qb AS (SELECT quantile_cont(m, 0.25) AS q1, quantile_cont(m, 0.5) AS q2,
-        |              quantile_cont(m, 0.75) AS q3, quantile_cont(m, 0.9) AS q4
-        |       FROM vv WHERE v = 1)
-        |SELECT * FROM (
-        |  SELECT 'p25' AS q_label, round(qa.q1, 6) AS q_a, round(qb.q1, 6) AS q_b,
-        |         round(qb.q1 - qa.q1, 6) AS qte FROM qa, qb
-        |  UNION ALL
-        |  SELECT 'p50', round(qa.q2, 6), round(qb.q2, 6),
-        |         round(qb.q2 - qa.q2, 6) FROM qa, qb
-        |  UNION ALL
-        |  SELECT 'p75', round(qa.q3, 6), round(qb.q3, 6),
-        |         round(qb.q3 - qa.q3, 6) FROM qa, qb
-        |  UNION ALL
-        |  SELECT 'p90', round(qa.q4, 6), round(qb.q4, 6),
-        |         round(qb.q4 - qa.q4, 6) FROM qa, qb
-        |) ORDER BY q_label""".stripMargin,
-
-    "ev_bh" -> Events.welchBhDuckSql(alpha = 0.1),
-
-    "ev_winsor" -> Events.winsorDuckSql(frac = 0.05),
-
-    "ev_ltv" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) // 86400000000 AS day, event_type,
-        |         CAST(round(value * 100) AS BIGINT) AS cents
-        |  FROM events
-        |), cohort AS (
-        |  SELECT user_id, min(day) AS cohort_day FROM e GROUP BY 1
-        |), g AS (
-        |  SELECT cohort_day, e.day - cohort_day AS age,
-        |         CAST(sum(cents) AS BIGINT) AS cents
-        |  FROM e JOIN cohort USING (user_id)
-        |  WHERE event_type = 'purchase'
-        |  GROUP BY 1, 2
-        |)
-        |SELECT cohort_day, age, cents,
-        |       CAST(sum(cents) OVER (PARTITION BY cohort_day ORDER BY age
-        |         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_cents
-        |FROM g ORDER BY cohort_day, age""".stripMargin,
-
-    "ev_lag_features" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS tsn, event_type,
-        |         CAST(round(value * 100) AS BIGINT) AS cents
-        |  FROM events
-        |), f AS (
-        |  SELECT user_id, event_id, event_type,
-        |    lag(cents, 1) OVER (PARTITION BY user_id ORDER BY tsn, event_id) AS prev_cents,
-        |    CAST(sum(cents) OVER (PARTITION BY user_id ORDER BY tsn, event_id
-        |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS BIGINT) AS roll5_cents,
-        |    count(*) OVER (PARTITION BY user_id ORDER BY tsn
-        |      RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS n_1h
-        |  FROM e
-        |)
-        |SELECT event_id, user_id, prev_cents, roll5_cents, n_1h FROM f
-        |WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin,
-
-    "ev_attribution" -> Events.lastTouchAttributionDuckSql(),
-    "ev_multitouch" -> Events.multiTouchDuckSql(),
-    "ev_mad" -> Events.madAnomaliesDuckSql(),
-    "ev_gini" -> Events.giniDuckSql(),
-    "ev_hop" -> Events.hoppingDuckSql(),
-    "ev_stickiness" -> Events.stickinessDuckSql,
-
-    "ev_rfm" -> Events.rfmSegmentsDuckSql(),
-
-    // the union sketch replays as the sketch of the CONCATENATED stream
-    // (max-merge associativity is exactly that identity)
-    "ev_hll_intersect" -> {
-      s"""WITH raw AS (
-         |  SELECT event_type AS g,
-         |         ${Dedup.fnv64DuckSql("CAST(user_id AS VARCHAR)")} AS h
-         |  FROM events WHERE event_type IN ('click', 'view')
-         |), hashed AS (
-         |  SELECT g, h FROM raw UNION ALL SELECT 'both', h FROM raw
-         |), ${Events.hllDuckSql},
-         |ex AS (
-         |  SELECT count(*)::BIGINT AS n_exact FROM (
-         |    SELECT user_id FROM events WHERE event_type IN ('click', 'view')
-         |    GROUP BY user_id HAVING count(DISTINCT event_type) = 2)
-         |)
-         |SELECT ex.n_exact,
-         |  (SELECT est FROM hll_est WHERE g = 'click') AS est_click,
-         |  (SELECT est FROM hll_est WHERE g = 'view') AS est_view,
-         |  (SELECT est FROM hll_est WHERE g = 'both') AS est_union,
-         |  round((SELECT est FROM hll_est WHERE g = 'click')
-         |      + (SELECT est FROM hll_est WHERE g = 'view')
-         |      - (SELECT est FROM hll_est WHERE g = 'both'), 4) AS est_inter
-         |FROM ex""".stripMargin
-    },
-
-    // naive non-equi replay of the banded plan (DuckDB's IEJoin handles it)
-    "ev_interval_join" ->
-      """WITH e AS (SELECT event_id, epoch_us(ts) AS tsn, event_type, value FROM events),
-        |p AS (SELECT event_id, tsn FROM e WHERE event_type = 'purchase'),
-        |c AS (SELECT tsn, value FROM e WHERE event_type = 'click')
-        |SELECT p.event_id, count(*)::BIGINT AS n_clicks,
-        |       CAST(sum(round(c.value * 100)) AS BIGINT) AS cents
-        |FROM p JOIN c ON abs(c.tsn - p.tsn) <= 60000000
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "ev_kmv" -> Events.kmvDistinctDuckSql(),
-    // the streamed bottom-k equals the batch bottom-k (semilattice merge),
-    // so the streaming gate replays against the identical batch oracle
-    "st_stream_kmv" -> Events.kmvDistinctDuckSql(),
-    "ev_kmv_ops" -> Events.kmvSetOpsDuckSql("view", "click"),
-
-    "ev_hll" -> {
-      def part(keyExpr: String, metric: String) =
-        s"""SELECT * FROM (
-           |  WITH hashed AS (SELECT event_type AS g,
-           |         ${Dedup.fnv64DuckSql(keyExpr)} AS h FROM events),
-           |  ${Events.hllDuckSql}
-           |  SELECT g AS event_type, '$metric' AS metric,
-           |         CAST(v_zero AS BIGINT) AS v_zero, est FROM hll_est)""".stripMargin
-      s"""WITH sk AS (
-         |  ${part("CAST(user_id AS VARCHAR)", "users")}
-         |  UNION ALL
-         |  ${part("CAST(event_id AS VARCHAR)", "events")}
-         |), ex AS (
-         |  SELECT event_type, 'users' AS metric, count(DISTINCT user_id) AS n_exact
-         |  FROM events GROUP BY 1
-         |  UNION ALL
-         |  SELECT event_type, 'events' AS metric, count(DISTINCT event_id) AS n_exact
-         |  FROM events GROUP BY 1
-         |)
-         |SELECT sk.event_type, sk.metric, ex.n_exact, sk.v_zero, sk.est
-         |FROM sk JOIN ex ON sk.event_type = ex.event_type AND sk.metric = ex.metric
-         |ORDER BY 1, 2""".stripMargin
-    },
-
-    // quantile_cont and Spark's `percentile` share the same rank = p·(n−1)
-    // linear interpolation on the sorted values
-    "ev_quantiles" ->
-      """SELECT event_type,
-        |       round(quantile_cont(value, 0.5), 6) AS p50,
-        |       round(quantile_cont(value, 0.9), 6) AS p90,
-        |       round(quantile_cont(value, 0.99), 6) AS p99
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "gr_pagerank" -> PageRank.pageRankDuckSql(iters = 3, damping = 0.85, topK = 25),
-
-    // bounded-depth recursive CTE: UNION dedups (node, hop) pairs globally,
-    // so the working set stays ≤ nodes × (maxHop+1) — min(hop) = BFS distance
-    "gr_hits" -> Graphs.hitsDuckSql(
-      """e AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |)""".stripMargin, iters = 2, k = 20),
-
-    "gr_katz" -> Graphs.katzDuckSql(
-      """eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |)""".stripMargin, iters = 3, k = 25),
-
-    "gr_lpa" -> Graphs.lpaDuckSql(
-      """eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |)""".stripMargin, rounds = 3),
-
-    "gr_kcore" -> Graphs.kcoreDuckSql(
-      """eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e0 AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |)""".stripMargin, k = 25, rounds = 4),
-
-    "gr_degree_hist" -> {
-      val caseLadder = (0 until 20).reverse.foldLeft("20") { (els, k) =>
-        s"CASE WHEN deg < ${1L << (k + 1)} THEN $k ELSE $els END"
-      }
-      s"""WITH eraw AS (
-         |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |), e AS (
-         |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-         |), d AS (
-         |  SELECT src AS node, count(*) AS deg FROM e GROUP BY 1
-         |)
-         |SELECT CAST($caseLadder AS BIGINT) AS bin, count(*) AS nodes,
-         |       CAST(sum(deg) AS BIGINT) AS deg_sum,
-         |       CAST(min(deg) AS BIGINT) AS min_deg,
-         |       CAST(max(deg) AS BIGINT) AS max_deg
-         |FROM d GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    "gr_walks" -> Graphs.hashWalksDuckSql(
-      """eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |)""".stripMargin,
-      "SELECT c_custkey * 2 AS seed, c_custkey * 2 AS cur FROM customer WHERE c_nationkey = 0",
-      steps = 4),
-
-    "gr_bfs" ->
-      """WITH RECURSIVE eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |), walk(node, hop) AS (
-        |  SELECT c_custkey * 2, 0 FROM customer WHERE c_nationkey = 0
-        |  UNION
-        |  SELECT e.dst, w.hop + 1 FROM walk w JOIN e ON e.src = w.node
-        |  WHERE w.hop < 3
-        |)
-        |SELECT CAST(node AS BIGINT) AS node, CAST(min(hop) AS BIGINT) AS hop
-        |FROM walk GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // per-root walk replay: the recursive UNION dedups (root, node, hop)
-    // triples, min(hop) per (root, node) = settle-first BFS; harmonic from
-    // integer hop counts with the identical ((n1 + n2/2) + n3/3) shape
-    "gr_closeness" ->
-      """WITH RECURSIVE eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |), walk(root, node, hop) AS (
-        |  SELECT c_custkey * 2, c_custkey * 2, 0 FROM customer
-        |  WHERE c_custkey % 500 = 1
-        |  UNION
-        |  SELECT w.root, e.dst, w.hop + 1 FROM walk w JOIN e ON e.src = w.node
-        |  WHERE w.hop < 3
-        |), d AS (
-        |  SELECT root, node, min(hop) AS hop FROM walk GROUP BY 1, 2
-        |), c AS (
-        |  SELECT CAST(root AS BIGINT) AS root,
-        |         CAST(sum(CASE WHEN hop = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |         CAST(sum(CASE WHEN hop = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |         CAST(sum(CASE WHEN hop = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n3
-        |  FROM d WHERE hop > 0 GROUP BY 1
-        |)
-        |SELECT root, n1, n2, n3,
-        |       round(n1 + n2 / 2.0 + n3 / 3.0, 6) AS harmonic
-        |FROM c ORDER BY root""".stripMargin,
-
-    // reuses the gr_closeness walk (UNION-dedup per-root BFS, min(hop)
-    // settle), then the identical cumulative-histogram interpolation
-    "gr_effdiam" ->
-      """WITH RECURSIVE eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |), walk(root, node, hop) AS (
-        |  SELECT c_custkey * 2, c_custkey * 2, 0 FROM customer
-        |  WHERE c_custkey % 500 = 1
-        |  UNION
-        |  SELECT w.root, e.dst, w.hop + 1 FROM walk w JOIN e ON e.src = w.node
-        |  WHERE w.hop < 3
-        |), d AS (
-        |  SELECT root, node, min(hop) AS hop FROM walk GROUP BY 1, 2
-        |), hist AS (
-        |  SELECT hop, count(*) AS nh FROM d WHERE hop > 0 GROUP BY 1
-        |), c AS (
-        |  SELECT hop, nh,
-        |         sum(nh) OVER (ORDER BY hop) AS cum,
-        |         sum(nh) OVER () AS total
-        |  FROM hist
-        |), q AS (
-        |  SELECT *, 0.9 * total AS target FROM c
-        |  WHERE cum >= 0.9 * total ORDER BY hop LIMIT 1
-        |)
-        |SELECT CAST(total AS BIGINT) AS n_pairs, CAST(hop AS BIGINT) AS h90,
-        |       round(hop - 1.0 + (target - (cum - nh)) / nh, 6) AS d90
-        |FROM q""".stripMargin,
-
-    "gr_betweenness" -> Graphs.brandesDuckSql(
-      """eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |)""".stripMargin,
-      seedSql = "SELECT c_custkey * 2 AS root, c_custkey * 2 AS node, " +
-        "1::BIGINT AS sigma FROM customer WHERE c_custkey % 500 = 1",
-      maxHop = 3, k = 30),
-
-    "gr_modularity" ->
-      """WITH e AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), com AS (
-        |  SELECT c_custkey * 2 AS node, CAST(c_nationkey AS BIGINT) AS com FROM customer
-        |  UNION ALL
-        |  SELECT s_suppkey * 2 + 1, CAST(s_nationkey AS BIGINT) FROM supplier
-        |), ed AS (
-        |  SELECT sc.com AS sc, dc.com AS dc
-        |  FROM e JOIN com sc ON sc.node = e.src JOIN com dc ON dc.node = e.dst
-        |), m AS (SELECT count(*)::DOUBLE AS m2 FROM ed),
-        |deg AS (
-        |  SELECT com, count(*)::BIGINT AS d_sum
-        |  FROM (SELECT sc AS com FROM ed UNION ALL SELECT dc FROM ed)
-        |  GROUP BY 1
-        |), intra AS (
-        |  SELECT sc AS com, count(*)::BIGINT AS e_in FROM ed WHERE sc = dc GROUP BY 1
-        |)
-        |SELECT deg.com, deg.d_sum, coalesce(intra.e_in, 0) AS e_in,
-        |  round(coalesce(intra.e_in, 0)::DOUBLE / m.m2
-        |      - (deg.d_sum::DOUBLE / (2.0 * m.m2)) * (deg.d_sum::DOUBLE / (2.0 * m.m2)),
-        |    6) AS q_c
-        |FROM deg LEFT JOIN intra ON intra.com = deg.com CROSS JOIN m
-        |ORDER BY deg.com""".stripMargin,
-
-    // chained-CTE Bellman-Ford replay: one relax-union-min block per round,
-    // integer weights so every round hash-matches exactly
-    "gr_sssp" -> {
-      def relax(prev: String, out: String) =
-        s"""$out AS (
-           |  SELECT node, min(dist) AS dist FROM (
-           |    SELECT node, dist FROM $prev
-           |    UNION ALL
-           |    SELECT e.dst AS node, d.dist + e.w AS dist
-           |    FROM $prev d JOIN e ON e.src = d.node) GROUP BY 1
-           |)""".stripMargin
-      s"""WITH eraw AS (
-         |  SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst,
-         |         CAST(min(l_quantity) AS BIGINT) AS w
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |  GROUP BY 1, 2
-         |), e AS (
-         |  SELECT src, dst, w FROM eraw UNION ALL SELECT dst, src, w FROM eraw
-         |), d0 AS (
-         |  SELECT CAST(c_custkey * 2 AS BIGINT) AS node, CAST(0 AS BIGINT) AS dist
-         |  FROM customer WHERE c_nationkey = 0
-         |),
-         |${relax("d0", "d1")},
-         |${relax("d1", "d2")},
-         |${relax("d2", "d3")}
-         |SELECT node, dist FROM d3 ORDER BY node""".stripMargin
-    },
-
-    // Borůvka replay: identical unrolled rounds×jumps schedule
-    "gr_mst" -> Graphs.boruvkaDuckSql(
-      """SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst,
-        |       CAST(l_quantity AS BIGINT) AS w
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey""".stripMargin),
-
-    // stage-k time = min event of that type strictly after stage k−1 and
-    // within the horizon of stage 1 — the join formulation is equivalent to
-    // the Spark chained-running-min windows (proof sketch at Events.funnel:
-    // in (tsn, event_id) order the earliest qualifying predecessor is
-    // always ordered before any row it can qualify)
-    "ev_funnel" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsn, event_type FROM events),
-        |c1 AS (SELECT user_id, min(tsn) AS ts0 FROM e WHERE event_type = 'view' GROUP BY 1),
-        |c2 AS (SELECT e.user_id, min(e.tsn) AS ts1
-        |       FROM e JOIN c1 ON e.user_id = c1.user_id
-        |       WHERE e.event_type = 'click' AND e.tsn > c1.ts0
-        |         AND e.tsn <= c1.ts0 + 172800000000 GROUP BY 1),
-        |c3 AS (SELECT e.user_id, min(e.tsn) AS ts2
-        |       FROM e JOIN c2 ON e.user_id = c2.user_id
-        |            JOIN c1 ON e.user_id = c1.user_id
-        |       WHERE e.event_type = 'purchase' AND e.tsn > c2.ts1
-        |         AND e.tsn <= c1.ts0 + 172800000000 GROUP BY 1)
-        |SELECT 1 AS stage, 'view' AS event_type,
-        |       (SELECT count(*) FROM c1) AS n_users,
-        |       round((SELECT count(*) FROM c1)::DOUBLE / (SELECT count(*) FROM c1), 6) AS conv
-        |UNION ALL
-        |SELECT 2, 'click', (SELECT count(*) FROM c2),
-        |       round((SELECT count(*) FROM c2)::DOUBLE / (SELECT count(*) FROM c1), 6)
-        |UNION ALL
-        |SELECT 3, 'purchase', (SELECT count(*) FROM c3),
-        |       round((SELECT count(*) FROM c3)::DOUBLE / (SELECT count(*) FROM c1), 6)
-        |ORDER BY stage""".stripMargin,
-
-    "ev_retention" ->
-      """WITH e AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
-        |c AS (SELECT user_id, min(day) AS cohort_day FROM e GROUP BY 1)
-        |SELECT c.cohort_day, e.day - c.cohort_day AS day_offset,
-        |       count(DISTINCT e.user_id) AS n_users
-        |FROM e JOIN c ON e.user_id = c.user_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "ev_cms" -> {
-      def cases(k: String) = (0 until CountMin.Depth)
-        .map(r => s"WHEN $r THEN ${CountMin.bucketDuckSql(k, r)}").mkString(" ")
-      s"""WITH ex AS (SELECT user_id, count(*) AS n_exact FROM events GROUP BY 1),
-         |rr AS (SELECT unnest(range(${CountMin.Depth})) AS r),
-         |cells AS (
-         |  SELECT rr.r, CASE rr.r ${cases("user_id")} END AS b, count(*) AS cnt
-         |  FROM events CROSS JOIN rr GROUP BY 1, 2
-         |), est AS (
-         |  SELECT ex.user_id, min(c.cnt) AS cms_est
-         |  FROM ex CROSS JOIN rr
-         |  JOIN cells c ON c.r = rr.r AND c.b = (CASE rr.r ${cases("ex.user_id")} END)
-         |  GROUP BY 1
-         |)
-         |SELECT ex.user_id, ex.n_exact, est.cms_est
-         |FROM ex JOIN est ON ex.user_id = est.user_id
-         |ORDER BY ex.n_exact DESC, ex.user_id LIMIT 20""".stripMargin
-    },
-
-    // triangles enumerated once as u<v<w over the distinct undirected edge
-    // set — equivalent to the Spark degree-ordered orientation (both count
-    // each triangle exactly once; orientation only changes the JOIN ORDER)
-    "gr_triangles" ->
-      """WITH und AS (
-        |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-        |), tri AS (
-        |  SELECT e1.a AS u, e1.b AS v, e2.b AS w
-        |  FROM und e1 JOIN und e2 ON e2.a = e1.b
-        |  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b
-        |)
-        |SELECT node, count(*) AS n_tri FROM (
-        |  SELECT u AS node FROM tri
-        |  UNION ALL SELECT v FROM tri
-        |  UNION ALL SELECT w FROM tri
-        |) GROUP BY 1 ORDER BY n_tri DESC, node LIMIT 25""".stripMargin,
-
-    // the hash-coin sample replayed verbatim, then the same u<v<w triangle
-    // enumeration; estimate = round(tri · (m/keepLt)³) with the identical
-    // IEEE expression tree (p = 0.2 ⇒ keepLt = round(0.2·1000003) = 200001)
-    "gr_triangles_approx" ->
-      """WITH und AS (
-        |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-        |), samp AS (
-        |  SELECT a, b FROM und
-        |  WHERE (a * 2654435761 + b * 40503) % 1000003 < 200001
-        |), tri AS (
-        |  SELECT count(*) AS tri_sampled
-        |  FROM samp e1 JOIN samp e2 ON e2.a = e1.b
-        |  JOIN samp e3 ON e3.a = e1.a AND e3.b = e2.b
-        |)
-        |SELECT (SELECT count(*) FROM samp)::BIGINT AS n_kept_edges,
-        |       tri_sampled::BIGINT AS tri_sampled,
-        |       CAST(round(tri_sampled * power(1000003.0 / 200001.0, 3))
-        |            AS BIGINT) AS tri_est
-        |FROM tri""".stripMargin,
-
-    "gr_ktruss" -> Graphs.trussDuckSql(
-      """e0 AS MATERIALIZED (
-        |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-        |  WHERE x.l_partkey % 4 = 0 AND y.l_partkey % 4 = 0)""".stripMargin,
-      k = 5, rounds = 7),
-
-    "gr_clustering" ->
-      """WITH und AS (
-        |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-        |), deg AS (
-        |  SELECT node, count(*) AS deg FROM (
-        |    SELECT a AS node FROM und UNION ALL SELECT b FROM und
-        |  ) GROUP BY 1
-        |), tri AS (
-        |  SELECT e1.a AS u, e1.b AS v, e2.b AS w
-        |  FROM und e1 JOIN und e2 ON e2.a = e1.b
-        |  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b
-        |), tcount AS (
-        |  SELECT node, count(*) AS n_tri FROM (
-        |    SELECT u AS node FROM tri
-        |    UNION ALL SELECT v FROM tri
-        |    UNION ALL SELECT w FROM tri
-        |  ) GROUP BY 1
-        |)
-        |SELECT d.node, d.deg, coalesce(t.n_tri, 0) AS n_tri,
-        |       round(2.0 * coalesce(t.n_tri, 0) / (d.deg * (d.deg - 1)), 6) AS coeff
-        |FROM deg d LEFT JOIN tcount t ON d.node = t.node
-        |WHERE d.deg >= 2
-        |ORDER BY coeff DESC, d.node LIMIT 25""".stripMargin,
-
-    "sp_bbox_within" -> (PtsCte +
-      """
-        |SELECT ck AS id, x, y FROM pts
-        |WHERE x > 0.25 AND x < 30.25 AND y > -10.25 AND y < 40.25
-        |ORDER BY id""".stripMargin),
-
-    "sp_bbox_intersects" -> (PtsCte +
-      """
-        |SELECT ck AS id, x, y FROM pts
-        |WHERE x >= 0.5 AND x <= 30.5 AND y >= -10.5 AND y <= 40.5
-        |ORDER BY id""".stripMargin),
-
-    // identical window semantics: the curve ranges/prefixes only PRUNE the
-    // scan, the exact window filter decides membership — per layout
-    "sp_window_curve" -> (PtsCte +
-      """
-        |SELECT ck AS id, x, y FROM pts
-        |WHERE x >= 0.5 AND x <= 30.5 AND y >= -10.5 AND y <= 40.5
-        |ORDER BY id""".stripMargin),
-
-    "sp_layer_upsert" -> (PtsCte +
-      """
-        |SELECT ck AS id, x, y FROM pts
-        |WHERE (ck % 2 = 0 OR ck % 20 = 1)
-        |  AND x >= 0.5 AND x <= 30.5 AND y >= -10.5 AND y <= 40.5
-        |ORDER BY id""".stripMargin),
-
-    "gr_cc" ->
-      """WITH g AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS id, c_nationkey,
-        |         floor(c_acctbal / 1000) AS band
-        |  FROM customer
-        |)
-        |SELECT id, min(id) OVER (PARTITION BY c_nationkey, band) AS label
-        |FROM g ORDER BY id""".stripMargin,
-
-    // mutual reachability from the recursive transitive closure: scc(v) =
-    // min(v, min{u : v →* u AND u →* v}) — the n²-feasible definition on
-    // the nation-sized gate graph
-    "gr_scc" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT src, dst FROM (
-        |    SELECT DISTINCT CAST(s_nationkey AS BIGINT) AS src,
-        |           CAST(c_nationkey AS BIGINT) AS dst
-        |    FROM lineitem
-        |      JOIN supplier ON l_suppkey = s_suppkey
-        |      JOIN orders ON l_orderkey = o_orderkey
-        |      JOIN customer ON o_custkey = c_custkey
-        |    WHERE s_nationkey <> c_nationkey
-        |  ) WHERE (src * 31 + dst * 17) % 3 = 0
-        |), r AS (
-        |  SELECT src AS a, dst AS b FROM e
-        |  UNION
-        |  SELECT r.a, e.dst FROM r JOIN e ON r.b = e.src
-        |), m AS (
-        |  SELECT r.a, r.b FROM r
-        |  WHERE EXISTS (SELECT 1 FROM r r2 WHERE r2.a = r.b AND r2.b = r.a)
-        |), v AS (SELECT CAST(n_nationkey AS BIGINT) AS id FROM nation),
-        |sccl AS (
-        |  SELECT v.id, least(v.id, coalesce(min(m.b), v.id)) AS scc
-        |  FROM v LEFT JOIN m ON m.a = v.id
-        |  GROUP BY v.id
-        |)
-        |SELECT scc, count(*)::BIGINT AS n_nodes,
-        |       min(id) AS min_id, max(id) AS max_id
-        |FROM sccl GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "sp_window_zorder" -> (PtsCte +
-      """
-        |SELECT ck AS id, x, y FROM pts
-        |WHERE x >= -60.5 AND x <= -10.5 AND y >= -30.5 AND y <= 20.5
-        |ORDER BY id""".stripMargin),
-
-    "sp_window_geohash" -> (PtsCte +
-      """
-        |SELECT ck AS id, x, y FROM pts
-        |WHERE x >= 100.5 AND x <= 150.5 AND y >= 10.5 AND y <= 60.5
-        |ORDER BY id""".stripMargin),
-
-    // all three polymorphic add paths must agree with the one source table
-    "sp_add_polymorph" -> (PtsCte +
-      """
-        |, a AS (
-        |  SELECT count(*)::BIGINT AS n,
-        |         CAST(sum(CAST(round(x * 2) AS BIGINT)) AS BIGINT) AS sx2,
-        |         CAST(sum(CAST(round(y * 2) AS BIGINT)) AS BIGINT) AS sy2,
-        |         min(x) AS minx, min(y) AS miny,
-        |         max(x) AS maxx, max(y) AS maxy
-        |  FROM pts
-        |)
-        |SELECT l.layer, a.n, a.sx2, a.sy2, a.minx, a.miny, a.maxx, a.maxy
-        |FROM (SELECT unnest(['pm_geom', 'pm_wkt', 'pm_xy']) AS layer) l
-        |CROSS JOIN a ORDER BY layer""".stripMargin),
-
-    "sp_feature_attrs" ->
-      """SELECT 'discovered' AS phase, 'c_acctbal,c_nationkey' AS attrs
-        |UNION ALL SELECT 'persisted', 'c_acctbal'
-        |UNION ALL SELECT 'restricted', 'c_acctbal'
-        |ORDER BY phase""".stripMargin,
-
-    // fixture congruence: one exported way per nation, n_pts = customers
-    "osm_shp_export" ->
-      """WITH per AS (
-        |  SELECT c_nationkey, count(*) AS n FROM customer GROUP BY 1
-        |)
-        |SELECT count(*)::BIGINT AS n_ways, CAST(sum(n) AS BIGINT) AS sum_pts,
-        |       CAST(min(n) AS BIGINT) AS min_pts,
-        |       CAST(max(n) AS BIGINT) AS max_pts
-        |FROM per""".stripMargin,
-
-    // exact coordinate equality on the lattice stride ck ≡ 42 (mod 360)
-    "sp_equal_env" -> (PtsCte +
-      """
-        |SELECT ck AS id, x, y FROM pts
-        |WHERE x = CAST((42 % 360) - 180 + 0.5 AS DOUBLE)
-        |  AND y = CAST(((42 * 7) % 180) - 90 + 0.5 AS DOUBLE)
-        |ORDER BY id""".stripMargin),
-
-    // the z round trip is the identity on the acctbal double; x survives too
-    "sp_pointz" -> (PtsCte +
-      """
-        |SELECT ck AS id, c_acctbal AS z, x AS px FROM pts
-        |ORDER BY id""".stripMargin),
-
-    "sp_layer_types" ->
-      """SELECT * FROM (VALUES
-        |  ('Geohash','point-xy','geohash'), ('Hilbert','point-xy','hilbert'),
-        |  ('NativeGeohash','point-xy','geohash'), ('NativeHilbert','point-xy','hilbert'),
-        |  ('NativePoint','point-xy','bbox'), ('NativePoints','point-xy','bbox'),
-        |  ('NativeZOrder','point-xy','zorder'), ('SimplePoint','point-xy','bbox'),
-        |  ('WKB','wkb','bbox'), ('WKT','wkt','bbox'), ('ZOrder','point-xy','zorder')
-        |) AS t(name, encoder, "index")
-        |ORDER BY name""".stripMargin,
-
-    // edit-history replay: lattice boxes minus removed ids, id 3's box
-    // replaced by the updateWKT literal, the two surviving appended boxes
-    "sp_layer_edits" ->
-      """WITH eb AS (
-        |  SELECT n_nationkey AS id,
-        |         CAST(n_nationkey*3 - 39.5 AS DOUBLE) AS minx,
-        |         CAST(n_nationkey*2 - 29.5 AS DOUBLE) AS miny,
-        |         CAST(n_nationkey*3 - 34.5 AS DOUBLE) AS maxx,
-        |         CAST(n_nationkey*2 - 25.5 AS DOUBLE) AS maxy
-        |  FROM nation
-        |), edited AS (
-        |  SELECT id,
-        |    CASE WHEN id = 3 THEN 50.0 ELSE minx END AS minx,
-        |    CASE WHEN id = 3 THEN 50.0 ELSE miny END AS miny,
-        |    CASE WHEN id = 3 THEN 54.0 ELSE maxx END AS maxx,
-        |    CASE WHEN id = 3 THEN 53.0 ELSE maxy END AS maxy
-        |  FROM eb WHERE id <> 7
-        |  UNION ALL SELECT 25, 200, 40, 202, 42
-        |  UNION ALL SELECT 27, 10, 88, 12, 89.5
-        |)
-        |SELECT id, minx, miny, maxx, maxy FROM edited ORDER BY id""".stripMargin,
-
-    // layer listing replay: cust_pts/cust_hilbert mirror the point lattice;
-    // nation_boxes = 25 lattice boxes + the 3 appended literal boxes (the
-    // dropped `scratch` layer must NOT appear — exactly 3 rows)
-    "sp_catalog_stats" -> (PtsCte +
-      """, nba AS (
-        |  SELECT CAST(n_nationkey*3 - 39.5 AS DOUBLE) AS x0,
-        |         CAST(n_nationkey*2 - 29.5 AS DOUBLE) AS y0,
-        |         CAST(n_nationkey*3 - 34.5 AS DOUBLE) AS x1,
-        |         CAST(n_nationkey*2 - 25.5 AS DOUBLE) AS y1
-        |  FROM nation
-        |  UNION ALL SELECT 200, 40, 202, 42
-        |  UNION ALL SELECT -220, -85, -218, -83
-        |  UNION ALL SELECT 10, 88, 12, 89.5
-        |)
-        |SELECT * FROM (
-        |  SELECT 'cust_hilbert' AS layer, count(*) AS n,
-        |         min(x) AS minx, min(y) AS miny, max(x) AS maxx, max(y) AS maxy
-        |  FROM pts WHERE ck % 5 = 0
-        |  UNION ALL
-        |  SELECT 'cust_pts', count(*), min(x), min(y), max(x), max(y) FROM pts
-        |  UNION ALL
-        |  SELECT 'nation_boxes', count(*), min(x0), min(y0), max(x1), max(y1) FROM nba
-        |)
-        |ORDER BY layer""".stripMargin),
-
-    "sp_within_distance" -> (PtsCte +
-      """
-        |SELECT ck AS id,
-        |       round(acos(least(sin(radians(20.5)) * sin(radians(y))
-        |             + cos(radians(20.5)) * cos(radians(y))
-        |             * cos(radians(x) - radians(10.5)), 1.0)) * 6371, 3) AS dist_km
-        |FROM pts
-        |WHERE acos(least(sin(radians(20.5)) * sin(radians(y))
-        |      + cos(radians(20.5)) * cos(radians(y))
-        |      * cos(radians(x) - radians(10.5)), 1.0)) * 6371 <= 1500.0
-        |ORDER BY dist_km, id""".stripMargin),
-
-    "sp_knn" -> (PtsCte +
-      """
-        |SELECT ck AS id,
-        |       round(acos(least(sin(radians(30.5)) * sin(radians(y))
-        |             + cos(radians(30.5)) * cos(radians(y))
-        |             * cos(radians(x) - radians(-100.5)), 1.0)) * 6371, 3) AS dist_km
-        |FROM pts ORDER BY dist_km, id LIMIT 25""".stripMargin),
-
-    // all-pairs kNN — a valid oracle for the grid+ring plan because knnJoin
-    // is provably exact; lattice arithmetic keeps every d2 an exact double
-    "sp_clark_evans" -> (PtsCte + """
-      |, nn AS (
-      |  SELECT q.ck, q.c_nationkey AS nk,
-      |         sqrt(min((q.x-p.x)*(q.x-p.x) + (q.y-p.y)*(q.y-p.y))) AS dist
-      |  FROM pts q JOIN pts p ON p.ck <> q.ck
-      |  GROUP BY q.ck, q.c_nationkey
-      |), t AS (
-      |  SELECT count(*) AS nt FROM pts
-      |), run AS (
-      |  SELECT nk,
-      |         row_number() OVER (PARTITION BY nk ORDER BY ck) AS rn,
-      |         count(*) OVER (PARTITION BY nk) AS np,
-      |         sum(dist) OVER (PARTITION BY nk ORDER BY ck
-      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sd
-      |  FROM nn
-      |), f AS (
-      |  SELECT r.nk, r.np, r.sd / CAST(r.np AS DOUBLE) AS mean_nn, t.nt
-      |  FROM run r CROSS JOIN t WHERE r.rn = r.np
-      |)
-      |SELECT CAST(nk AS BIGINT) AS nk, CAST(np AS BIGINT) AS n_pts,
-      |       round(mean_nn, 6) AS mean_nn,
-      |       round(mean_nn * 2.0 * sqrt(CAST(nt AS DOUBLE) / 64800.0), 6)
-      |         AS r_index
-      |FROM f ORDER BY nk""".stripMargin),
-
-    "sp_knn_join" -> (PtsCte +
-      """
-        |SELECT qid, pid, d2, rk FROM (
-        |  SELECT q.ck AS qid, p.ck AS pid,
-        |         (q.x-p.x)*(q.x-p.x) + (q.y-p.y)*(q.y-p.y) AS d2,
-        |         row_number() OVER (PARTITION BY q.ck
-        |           ORDER BY (q.x-p.x)*(q.x-p.x) + (q.y-p.y)*(q.y-p.y), p.ck) AS rk
-        |  FROM (SELECT * FROM pts WHERE c_nationkey = 0) q
-        |  CROSS JOIN pts p
-        |  WHERE p.ck <> q.ck
-        |) WHERE rk <= 5 ORDER BY qid, rk""".stripMargin),
-
-    "sp_hausdorff" -> (PtsCte +
-      """
-        |, nn AS (
-        |  SELECT a.ck, min((a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)) AS d2
-        |  FROM (SELECT * FROM pts WHERE c_nationkey = 0) a
-        |  CROSS JOIN (SELECT * FROM pts WHERE c_nationkey = 1) b
-        |  GROUP BY 1
-        |)
-        |SELECT count(*) AS n_a, round(max(sqrt(d2)), 6) AS hausdorff FROM nn""".stripMargin),
-
-    "sp_knn_class" -> (PtsCte +
-      """
-        |, knn AS (
-        |  SELECT qid, pid FROM (
-        |    SELECT q.ck AS qid, p.ck AS pid,
-        |           row_number() OVER (PARTITION BY q.ck
-        |             ORDER BY (q.x-p.x)*(q.x-p.x) + (q.y-p.y)*(q.y-p.y), p.ck) AS rk
-        |    FROM (SELECT * FROM pts WHERE c_nationkey = 0) q
-        |    CROSS JOIN pts p
-        |    WHERE p.ck <> q.ck
-        |  ) WHERE rk <= 5
-        |), votes AS (
-        |  SELECT k.qid, CAST(p.c_nationkey AS BIGINT) AS label, count(*) AS votes
-        |  FROM knn k JOIN pts p ON p.ck = k.pid
-        |  GROUP BY 1, 2
-        |)
-        |SELECT qid, label AS pred, votes FROM (
-        |  SELECT qid, label, votes,
-        |         row_number() OVER (PARTITION BY qid ORDER BY votes DESC, label) AS rk
-        |  FROM votes
-        |) WHERE rk = 1 ORDER BY qid""".stripMargin),
-
-    // STR packing replayed with window functions: the global x-rank and the
-    // within-slab y-rank are deterministic given the (x, y, ck) total order;
-    // rows tied on (x, y) are interchangeable across a page boundary (their
-    // coordinates are identical), so page count/MBRs are order-invariant
-    "sp_str_pack" -> (PtsCte +
-      """
-        |, p AS (
-        |  SELECT x, y, ck, row_number() OVER (ORDER BY x, y, ck) - 1 AS rn FROM pts
-        |), c AS (
-        |  SELECT CAST(ceil(count(*) / 64.0) AS BIGINT) AS pages FROM pts
-        |), sl AS (
-        |  SELECT CAST(ceil(sqrt(CAST(pages AS DOUBLE))) AS BIGINT) AS slabs FROM c
-        |), a AS (
-        |  SELECT p.x, p.y, p.ck, p.rn, p.rn // (sl.slabs * 64) AS slab FROM p, sl
-        |), b AS (
-        |  SELECT a.*, row_number() OVER (PARTITION BY slab ORDER BY y, x, ck) - 1 AS rm
-        |  FROM a
-        |)
-        |SELECT slab, rm // 64 AS tile, count(*) AS cnt,
-        |       min(x) AS xmin, max(x) AS xmax, min(y) AS ymin, max(y) AS ymax
-        |FROM b GROUP BY slab, tile ORDER BY slab, tile""".stripMargin),
-
-    "gr_assortativity" ->
-      """WITH eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |), deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-        |ed AS (
-        |  SELECT d1.deg AS dx, d2.deg AS dy
-        |  FROM e JOIN deg d1 ON d1.src = e.src JOIN deg d2 ON d2.src = e.dst
-        |), m AS (
-        |  SELECT count(*)::BIGINT AS n,
-        |         CAST(sum(dx) AS BIGINT) AS sx, CAST(sum(dy) AS BIGINT) AS sy,
-        |         CAST(sum(dx * dx) AS BIGINT) AS sxx,
-        |         CAST(sum(dy * dy) AS BIGINT) AS syy,
-        |         CAST(sum(dx * dy) AS BIGINT) AS sxy
-        |  FROM ed
-        |)
-        |SELECT n,
-        |       round((n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
-        |         / (sqrt(n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)
-        |            * sqrt(n::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE)), 6)
-        |         AS assortativity
-        |FROM m""".stripMargin,
-
-    "sp_layer_bbox" -> (PtsCte +
-      """
-        |SELECT min(x) AS minx, min(y) AS miny, max(x) AS maxx, max(y) AS maxy FROM pts""".stripMargin),
-
-    "sp_centroid_nation" -> (PtsCte +
-      """
-        |SELECT c_nationkey, avg(x) AS cx, avg(y) AS cy
-        |FROM (SELECT DISTINCT c_nationkey, x, y FROM pts)
-        |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_envelope_area" -> (PtsCte +
-      """
-        |SELECT c_nationkey, (max(x) - min(x)) * (max(y) - min(y)) AS env_area
-        |FROM pts GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_union_npoints" -> (PtsCte +
-      """
-        |SELECT c_nationkey, count(*) AS n_pts
-        |FROM (SELECT DISTINCT c_nationkey, x, y FROM pts)
-        |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_line_length" -> (PtsCte +
-      """
-        |SELECT c_nationkey, round(coalesce(sum(seg), 0), 6) AS len FROM (
-        |  SELECT c_nationkey,
-        |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
-        |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
-        |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-        |) GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_extract_points" -> (PtsCte +
-      """
-        |SELECT c_nationkey, count(*) AS n FROM pts GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_max_acctbal_ties" -> (PtsCte +
-      """
-        |SELECT c_nationkey, ck AS id, c_acctbal FROM (
-        |  SELECT *, max(c_acctbal) OVER (PARTITION BY c_nationkey) AS m FROM pts
-        |) WHERE c_acctbal = m ORDER BY c_nationkey, id""".stripMargin),
-
-    "sp_join_broadcast" -> (PtsCte + SupJoinSql),
-    "sp_join_grid" -> (PtsCte + SupJoinSql),
-
-    "dd_exact_groups" ->
-      """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id, count(*) AS n_dups
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "tx_tokens" ->
-      """SELECT doc_id, len(string_split(text, ' '))::BIGINT AS n_split,
-        |       len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))::BIGINT AS n_bpe,
-        |       length(text)::BIGINT AS n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "tx_quality" -> TxQualitySql,
-
-    "tx_datacard" ->
-      """WITH a AS (
-        |  SELECT count(*)::BIGINT AS n, count(DISTINCT lang)::BIGINT AS nl,
-        |         count(DISTINCT source)::BIGINT AS nsrc,
-        |         sum(n_chars)::BIGINT AS tot, max(n_chars)::BIGINT AS mx,
-        |         quantile_cont(n_chars, 0.5) AS p50,
-        |         quantile_cont(n_chars, 0.9) AS p90
-        |  FROM documents
-        |)
-        |SELECT * FROM (
-        |  SELECT 'avg_chars' AS metric, round(CAST(tot AS DOUBLE) / n, 4) AS value FROM a
-        |  UNION ALL SELECT 'max_chars', CAST(mx AS DOUBLE) FROM a
-        |  UNION ALL SELECT 'n_docs', CAST(n AS DOUBLE) FROM a
-        |  UNION ALL SELECT 'n_langs', CAST(nl AS DOUBLE) FROM a
-        |  UNION ALL SELECT 'n_sources', CAST(nsrc AS DOUBLE) FROM a
-        |  UNION ALL SELECT 'p50_chars', round(p50, 4) FROM a
-        |  UNION ALL SELECT 'p90_chars', round(p90, 4) FROM a
-        |  UNION ALL SELECT 'total_chars', CAST(tot AS DOUBLE) FROM a
-        |) ORDER BY metric""".stripMargin,
-
-    "tx_readability" ->
-      """WITH d AS (
-        |  SELECT lang,
-        |    CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT) AS ns,
-        |    CAST(greatest(len(regexp_extract_all(lower(text), '[a-z]+')), 1) AS BIGINT) AS nw,
-        |    CAST(greatest(len(regexp_extract_all(lower(text), '[aeiouy]+')), 1) AS BIGINT) AS nsyl
-        |  FROM documents
-        |), f AS (
-        |  SELECT lang, ns, nw, nsyl,
-        |    206.835 - 1.015 * (CAST(nw AS DOUBLE) / ns) - 84.6 * (CAST(nsyl AS DOUBLE) / nw) AS fre
-        |  FROM d
-        |)
-        |SELECT lang, CAST(floor(fre / 10) AS BIGINT) AS bucket,
-        |       count(*)::BIGINT AS n_docs, sum(nw)::BIGINT AS words,
-        |       sum(ns)::BIGINT AS sents, sum(nsyl)::BIGINT AS sylls,
-        |       round(min(fre), 4) AS fre_min, round(max(fre), 4) AS fre_max
-        |FROM f GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "tx_mojibake" -> {
-      import graft.pipeline.Corpus.duckChr
-      val moji = s"' th' || ${duckChr("\u00C3\u00A9")} || ' '"
-      val curly = s"' row' || ${duckChr("\u00E2\u20AC\u2122")} || 's '"
-      val clean = s"' th' || ${duckChr("\u00E9")} || ' '"
-      s"""WITH p AS (
-         |  SELECT doc_id, CASE
-         |    WHEN doc_id % 5 = 2 THEN
-         |      replace(replace(text, ' the ', $moji), ' row ', $curly)
-         |    WHEN doc_id % 5 = 4 THEN replace(text, ' the ', $clean)
-         |    ELSE text END AS t
-         |  FROM documents
-         |)
-         |${graft.pipeline.Corpus.mojibakeDuckSql("p")}""".stripMargin
-    },
-
-    "tx_html_extract" -> graft.pipeline.Corpus.htmlExtractDuckSql,
-
-    "tx_normalize" -> {
-      val noisy = "(CASE WHEN doc_id % 3 = 0 THEN 'e' || chr(769) || ' ' " +
-        "WHEN doc_id % 3 = 1 THEN chr(8203) ELSE '' END) || text || " +
-        "'  ' || chr(9) || chr(13) || chr(10) || 'o' || chr(776)"
-      val clean = graft.pipeline.Corpus.normalizeTextDuckSql("noisy")
-      s"""WITH n AS (SELECT doc_id, $noisy AS noisy FROM documents)
-         |SELECT doc_id, length(noisy)::BIGINT AS n_raw,
-         |       length($clean)::BIGINT AS n_clean,
-         |       md5($clean) AS h
-         |FROM n ORDER BY doc_id""".stripMargin
-    },
-
-    "tx_gopher" ->
-      TextAnalysis.gopherRulesDuckSql("documents", "doc_id", "text"),
-
-    "tx_rake" -> TextAnalysis.rakeDuckSql(k = 25),
-
-    "tx_vocab_growth" ->
-      """WITH per AS (SELECT max(doc_id) // 10 + 1 AS p FROM documents),
-        |fs AS (
-        |  SELECT w, min(bucket) AS bucket FROM (
-        |    SELECT doc_id // p AS bucket,
-        |           unnest(list_filter(string_split_regex(lower(text), '\s+'),
-        |                              __w -> length(__w) > 0)) AS w
-        |    FROM documents, per)
-        |  GROUP BY 1
-        |), nb AS (SELECT bucket, count(*) AS new_words FROM fs GROUP BY 1)
-        |SELECT bucket, new_words,
-        |       CAST(sum(new_words) OVER (ORDER BY bucket
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |         AS cum_vocab
-        |FROM nb ORDER BY bucket""".stripMargin,
-
-    "sim_cosine_topk" ->
-      """SELECT e.vec_id AS id,
-        |       round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS cosine
-        |FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-        |ORDER BY cosine DESC, id LIMIT 50""".stripMargin,
-
-    "sim_mrl_topk" ->
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-        |short AS (
-        |  SELECT e.vec_id AS id, e.embedding,
-        |         round(list_cosine_similarity((e.embedding[1:16])::DOUBLE[],
-        |                                      (q.embedding[1:16])::DOUBLE[]), 6) AS pre_cos
-        |  FROM embeddings e, q
-        |  ORDER BY pre_cos DESC, id LIMIT 200
-        |)
-        |SELECT s.id, s.pre_cos,
-        |       round(list_cosine_similarity(s.embedding::DOUBLE[], q.embedding::DOUBLE[]), 6) AS cosine
-        |FROM short s, q
-        |ORDER BY cosine DESC, id LIMIT 20""".stripMargin,
-
-    "sim_sq8" -> Similarity.sq8DuckSql(dim = 64, shortlist = 200, k = 20),
-
-    "gr_linkpred" ->
-      """WITH e AS (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey AS sup
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON c_custkey = o_custkey AND c_nationkey = 0
-        |), deg AS (SELECT c, count(*) AS deg FROM e GROUP BY 1),
-        |w AS (
-        |  SELECT a.c AS c1, b.c AS c2, count(*) AS common
-        |  FROM e a JOIN e b ON a.sup = b.sup AND a.c < b.c
-        |  GROUP BY 1, 2
-        |)
-        |SELECT c1, c2, CAST(common AS BIGINT) AS common,
-        |       round(common::DOUBLE / (d1.deg + d2.deg - common)::DOUBLE, 6) AS jaccard
-        |FROM w JOIN deg d1 ON d1.c = w.c1 JOIN deg d2 ON d2.c = w.c2
-        |ORDER BY jaccard DESC, c1, c2 LIMIT 25""".stripMargin,
-
-    "gr_adamic" ->
-      """WITH e AS (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey AS sup
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON c_custkey = o_custkey AND c_nationkey = 0
-        |), sd AS (SELECT sup, count(*)::BIGINT AS d FROM e GROUP BY 1),
-        |w AS (
-        |  SELECT a.c AS c1, b.c AS c2, count(*)::BIGINT AS common,
-        |         sum(1.0 / ln(d)) AS aa
-        |  FROM e a JOIN e b ON a.sup = b.sup AND a.c < b.c
-        |  JOIN sd ON sd.sup = a.sup
-        |  GROUP BY 1, 2
-        |)
-        |SELECT c1, c2, common, round(aa, 6) AS adamic_adar
-        |FROM w ORDER BY adamic_adar DESC, c1, c2 LIMIT 25""".stripMargin,
-
-    // ------------------------------------------ formerly-rows-only queries
-    "sp_intersects_poly" -> (PtsCte +
-      """
-        |SELECT ck AS id, x, y FROM pts
-        |WHERE x >= 0.2 AND x <= 30.2 AND y >= -10.2 AND y <= 40.2
-        |ORDER BY id""".stripMargin),
-
-    "sp_geojson_roundtrip" -> (PtsCte +
-      """
-        |SELECT c_nationkey, count(*)::BIGINT AS gj_pts, count(*)::BIGINT AS wkt_pts
-        |FROM pts GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_closest_edge" -> ClosestEdgeSql,
-
-    "dd_simhash_pairs" -> SimhashSql,
-
-    // full MinHash-LSH replay: 128 seeded permutation literals, Mersenne
-    // mulmod in HUGEINT, the same FNV band fold and banded self-join — the
-    // probabilistic RECALL is a deterministic function of the seeds, so even
-    // the deliberately-missed pairs match
-    "dd_lsh_plan" -> Dedup.lshPlanDuckSql(
-      Seq((8, 16), (16, 8), (32, 4), (64, 2)), shingleK = 3),
-
-    "dd_minhash_pairs" -> Dedup.minhashPairsDuckSql(threshold = 0.2, shingleK = 3),
-
-    "dd_incremental" -> Dedup.minhashIncrementalDuckSql(threshold = 0.2,
-      shingleK = 3, newPred = "% 3 = 0"),
-
-    "dd_edit_pairs" -> Dedup.editDistanceDuckSql(k = 4, q = 12),
-
-    // production 64-bit simhash replayed end-to-end: FNV per token (HUGEINT
-    // wrap multiply), 64 majority votes, then ALL-PAIRS Hamming — legitimate
-    // as the oracle because the Spark side's pigeonhole banding has
-    // guaranteed recall at maxHamming=3, so banded pairs ≡ all pairs
-    "dd_simhash64_pairs" -> {
-      val toks = """list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"""
-      s"""WITH hs AS (
-         |  SELECT doc_id, list_transform($toks, t -> ${Dedup.fnv64DuckSql("t")}) AS hl
-         |  FROM documents
-         |), sigs AS (
-         |  SELECT doc_id, ${Dedup.simhash64FromHashesDuckSql("hl")} AS sh FROM hs
-         |)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |       CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS hamming
-         |FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.sh, b.sh)) <= 3
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-
-    "tx_langid" ->
-      s"""SELECT doc_id, ${TextAnalysis.languageIdDuckSql("text")} AS lang_guess,
-         |       ${TextAnalysis.polyFingerprintDuckSql("text")} AS fingerprint
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "tx_langid_conf" ->
-      s"""SELECT lang, ${TextAnalysis.languageIdDuckSql("text")} AS guess,
-         |       count(*) AS n
-         |FROM documents GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "mm_exact_dedup" ->
-      """WITH m AS (
-        |  SELECT range AS media_id,
-        |         CASE WHEN range % 9 = 5 THEN range - 4 ELSE range END AS cls,
-        |         CASE WHEN range % 3 = 0 THEN 'image'
-        |              WHEN range % 3 = 1 THEN 'audio' ELSE 'video' END AS kind
-        |  FROM range(0, 600)
-        |)
-        |SELECT min(media_id) AS rep, count(*) AS n,
-        |       count(DISTINCT kind) AS kinds
-        |FROM m GROUP BY cls ORDER BY rep""".stripMargin,
-
-    "mm_decode" -> MmDecodeSql,
-
-    // the BMP round-trip pattern replayed in pure integer arithmetic:
-    // luma = (299R + 587G + 114B) // 1000 over the generator formula
-    "mm_decode_bmp" ->
-      """SELECT i AS media_id, count(*)::BIGINT AS n_px,
-        |       sum((299 * ((x * 3 + i) % 256) + 587 * ((y * 5) % 256)
-        |            + 114 * ((x + y + i) % 256)) // 1000)::BIGINT AS px_sum
-        |FROM range(0, 40) t(i), range(0, 15) xs(x), range(0, 12) ys(y)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the PNG round-trip pattern replayed in pure integer arithmetic
-    "mm_decode_png" ->
-      """SELECT i AS media_id, count(*)::BIGINT AS n_px,
-        |       sum((299 * ((x * 7 + i) % 256) + 587 * ((y * 11) % 256)
-        |            + 114 * ((x * y + i) % 256)) // 1000)::BIGINT AS px_sum
-        |FROM range(0, 40) t(i), range(0, 15) xs(x), range(0, 12) ys(y)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the JPEG gate's block-constant even-valued pattern replayed exactly:
-    // DC-only blocks with q00=16 | 8·(v−128) make the lossy roundtrip the
-    // identity, so plain integer SQL is the full oracle
-    "mm_decode_jpeg" ->
-      """SELECT i AS media_id, count(*)::BIGINT AS n_px,
-        |       sum(2 * ((x // 8 * 31 + y // 8 * 17 + i * 7) % 128))::BIGINT
-        |         AS px_sum
-        |FROM range(0, 40) t(i), range(0, 20) xs(x), range(0, 12) ys(y)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "mm_phash" -> MmPhashSql,
-
-    "sp_density_islands" -> DensityIslandsSql,
-
-    // ------------------------------------------------ §2 coverage oracles
-    "sp_affine_scale" -> (PtsCte +
-      """
-        |SELECT ck AS id, 2.0 * x + 10.0 AS ax, 0.5 * y - 5.0 AS ay
-        |FROM pts ORDER BY id""".stripMargin),
-
-    "sp_relate_within" -> (PtsCte +
-      """
-        |SELECT ck AS id, '0FFFFF212' AS rel FROM pts
-        |WHERE x > 0.2 AND x < 30.2 AND y > -10.2 AND y < 40.2
-        |ORDER BY id""".stripMargin),
-
-    "sp_line_meta" -> (PtsCte +
-      """
-        |SELECT c_nationkey,
-        |  CASE WHEN count(*) = 1 THEN 'Point' ELSE 'LineString' END AS gt,
-        |  CASE WHEN count(*) = 1 THEN 0 ELSE 1 END::BIGINT AS dim,
-        |  count(*)::BIGINT AS n_pts,
-        |  CASE WHEN count(*) = 1 THEN 0
-        |       WHEN (max(ck) - min(ck)) % 360 = 0 THEN 0
-        |       ELSE 2 END::BIGINT AS n_boundary
-        |FROM pts GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_start_end" -> (PtsCte +
-      """
-        |SELECT c_nationkey, arg_min(x, ck) AS sx, arg_min(y, ck) AS sy,
-        |       arg_max(x, ck) AS ex, arg_max(y, ck) AS ey
-        |FROM pts GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_set_ops" -> (PtsCte +
-      """
-        |SELECT c_nationkey,
-        |  count(*) FILTER (WHERE x > 0.2 AND x < 30.2 AND y > -10.2 AND y < 40.2) AS n_in,
-        |  count(*) FILTER (WHERE x > 0.2 AND x < 30.2 AND y > -10.2 AND y < 40.2) AS n_diff_empty,
-        |  count(*) FILTER (WHERE NOT (x > 0.2 AND x < 30.2 AND y > -10.2 AND y < 40.2)) AS n_sym2
-        |FROM pts GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_sort_slice" -> (PtsCte +
-      """
-        |SELECT ck AS id, c_acctbal FROM pts
-        |ORDER BY c_acctbal DESC, ck LIMIT 20 OFFSET 10""".stripMargin),
-
-    "sp_dynamic_cql" -> (PtsCte +
-      """
-        |SELECT c_nationkey, count(*) AS n, max(c_acctbal) AS max_bal
-        |FROM pts WHERE c_acctbal > 5000.0
-        |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // the streamed window(3h, 1h) must equal the closed-form hop expansion:
-    // an event at hour h lands in windows starting h-2..h (epoch-aligned)
-    "st_stream_hop" ->
-      """WITH h AS (
-        |  SELECT event_type, epoch_ns(ts) // 3600000000000 AS hour FROM events
-        |), g AS (
-        |  SELECT event_type, unnest(range(hour - 2, hour + 1)) AS win_start FROM h
-        |)
-        |SELECT event_type, CAST(win_start AS BIGINT) AS win_start, count(*) AS n
-        |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "st_stream_cells" -> (PtsCte +
-      """
-        |SELECT CAST(floor(x / 10.0) AS INTEGER) AS cell_x,
-        |       CAST(floor(y / 10.0) AS INTEGER) AS cell_y,
-        |       count(*) AS n,
-        |       CAST(sum(round(c_acctbal * 100)) AS BIGINT) AS cents
-        |FROM pts
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-
-    "sp_layer_versions" -> (PtsCte +
-      """
-        |SELECT 1::BIGINT AS version, count(*) AS n,
-        |       CAST(sum(round(c_acctbal * 100)) AS BIGINT) AS cents
-        |FROM pts WHERE ck % 2 = 0
-        |UNION ALL
-        |SELECT 2::BIGINT, count(*), CAST(sum(round(c_acctbal * 100)) AS BIGINT)
-        |FROM pts
-        |ORDER BY version""".stripMargin),
-
-    "sp_project" -> (PtsCte +
-      """
-        |, pr AS (
-        |  SELECT ck,
-        |         CAST((ck % 7 + 1) * 250 AS DOUBLE) / 6371.0 AS dlt,
-        |         radians(CAST(ck % 360 AS DOUBLE)) AS th,
-        |         radians(y) AS la1, radians(x) AS lo1
-        |  FROM pts
-        |), d AS (
-        |  SELECT ck, dlt, th, la1, lo1,
-        |         asin(sin(la1) * cos(dlt) + cos(la1) * sin(dlt) * cos(th)) AS la2
-        |  FROM pr
-        |)
-        |SELECT ck,
-        |       round((degrees(lo1 + atan2(sin(th) * sin(dlt) * cos(la1),
-        |                                  cos(dlt) - sin(la1) * sin(la2)))
-        |              + 540.0) % 360.0 - 180.0, 6) AS lon2,
-        |       round(degrees(la2), 6) AS lat2
-        |FROM d ORDER BY ck""".stripMargin),
-
-    "sp_polyfill" -> (PtsCte +
-      """
-        |, env AS (
-        |  SELECT c_nationkey, min(x) AS minx, max(x) AS maxx,
-        |         min(y) AS miny, max(y) AS maxy
-        |  FROM pts GROUP BY 1
-        |), rr AS (
-        |  SELECT c_nationkey, minx, maxx,
-        |         unnest(range(CAST(ceil(miny / 7.5) AS BIGINT),
-        |                      CAST(floor(maxy / 7.5) AS BIGINT) + 1)) AS r
-        |  FROM env
-        |), qq AS (
-        |  SELECT c_nationkey, r,
-        |         unnest(range(CAST(ceil(minx / (5.0 * sqrt(3.0)) - r / 2.0) AS BIGINT),
-        |                      CAST(floor(maxx / (5.0 * sqrt(3.0)) - r / 2.0) AS BIGINT) + 1)) AS q
-        |  FROM rr
-        |)
-        |SELECT c_nationkey, count(*) AS n_cells, min(q) AS min_q, max(q) AS max_q,
-        |       min(r) AS min_r, max(r) AS max_r
-        |FROM qq GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_hexbin" -> {
-      val (hq, hr) = HexBin.cellDuckSql("x", "y", 5.0)
-      PtsCte +
-        s"""
-           |SELECT $hq AS hex_q, $hr AS hex_r, count(*) AS n,
-           |       CAST(sum(round(c_acctbal * 100)) AS BIGINT) AS cents
-           |FROM pts GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
-
-    "st_stream_dedup" ->
-      """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id,
-        |       count(*) AS n_dups
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // dropDuplicatesWithinWatermark replay — the empirically-pinned state
-    // machine: per key, expiry = emitted ets + delay (drops never extend),
-    // alive during batch b iff expiry >= W_{b-1} (end-of-batch eviction ⇒
-    // one batch of watermark lag; W_1 = -inf so batch-2 state always
-    // holds). One staged row per (key, slab) makes the cascade exact;
-    // ntile(4) over (raw ts, event_id) is bucket-identical to slabify.
-    "st_stream_dedupw" ->
-      """WITH ev AS (
-        |  SELECT user_id AS k, event_id, epoch_ns(ts) AS tns,
-        |         epoch_us(ts) - epoch_us(ts) % 60000000 AS ets
-        |  FROM events
-        |), sl AS (
-        |  SELECT k, ets, ntile(4) OVER (ORDER BY tns, event_id) AS slab FROM ev
-        |), ks AS (
-        |  SELECT k, slab, min(ets) AS ets FROM sl GROUP BY 1, 2
-        |), piv AS (
-        |  SELECT k,
-        |         min(CASE WHEN slab = 1 THEN ets END) AS e1,
-        |         min(CASE WHEN slab = 2 THEN ets END) AS e2,
-        |         min(CASE WHEN slab = 3 THEN ets END) AS e3,
-        |         min(CASE WHEN slab = 4 THEN ets END) AS e4
-        |  FROM ks GROUP BY 1
-        |), w AS (
-        |  SELECT (SELECT max(ets) FROM ks WHERE slab <= 1) - 7199999999 AS w2,
-        |         (SELECT max(ets) FROM ks WHERE slab <= 2) - 7199999999 AS w3
-        |), c1 AS (
-        |  SELECT piv.*, w.w2, w.w3,
-        |         CASE WHEN e1 IS NOT NULL THEN e1 + 7199999999 END AS x1
-        |  FROM piv CROSS JOIN w
-        |), c2 AS (
-        |  SELECT *, (e2 IS NOT NULL AND x1 IS NULL) AS m2,
-        |         CASE WHEN e2 IS NOT NULL AND x1 IS NULL
-        |              THEN e2 + 7199999999 ELSE x1 END AS x2
-        |  FROM c1
-        |), c3 AS (
-        |  SELECT *, (e3 IS NOT NULL AND (x2 IS NULL OR x2 < w2)) AS m3,
-        |         CASE WHEN e3 IS NOT NULL AND (x2 IS NULL OR x2 < w2)
-        |              THEN e3 + 7199999999 ELSE x2 END AS x3
-        |  FROM c2
-        |), c4 AS (
-        |  SELECT *, (e4 IS NOT NULL AND (x3 IS NULL OR x3 < w3)) AS m4 FROM c3
-        |)
-        |SELECT k AS user_id, e1 AS ets_us FROM c4 WHERE e1 IS NOT NULL
-        |UNION ALL SELECT k, e2 FROM c4 WHERE m2
-        |UNION ALL SELECT k, e3 FROM c4 WHERE m3
-        |UNION ALL SELECT k, e4 FROM c4 WHERE m4
-        |ORDER BY user_id, ets_us""".stripMargin,
-
-    "st_stream_ann" -> (IvfEvalCtes + """
-        |SELECT a.qid, CAST(a.rank AS BIGINT) AS rank, a.nid, c.cosine
-        |FROM approx a JOIN cand c ON c.qid = a.qid AND c.nid = a.nid
-        |ORDER BY a.qid, a.rank""".stripMargin),
-
-    "st_stream_simdedup" -> {
-      val toks = """list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"""
-      val adm = "len(list_filter(w.sigs, __s -> bit_count(xor(__s, d.sh)) <= 3)) = 0"
-      s"""WITH RECURSIVE hs AS (
-         |  SELECT doc_id, list_transform($toks, t -> ${Dedup.fnv64DuckSql("t")}) AS hl
-         |  FROM documents WHERE doc_id % 5 = 0
-         |), sg AS (
-         |  SELECT doc_id, ${Dedup.simhash64FromHashesDuckSql("hl")} AS sh FROM hs
-         |), banded AS (
-         |  SELECT CAST(t.k AS BIGINT) * 72057594037927936
-         |           + CAST((sg.sh // t.d) % 65536 AS BIGINT) AS band,
-         |         sg.doc_id AS id, sg.sh
-         |  FROM sg CROSS JOIN (VALUES
-         |    (0, CAST(1 AS UBIGINT)), (1, CAST(65536 AS UBIGINT)),
-         |    (2, CAST(4294967296 AS UBIGINT)),
-         |    (3, CAST(281474976710656 AS UBIGINT))) t(k, d)
-         |), docs AS (
-         |  SELECT band, id, sh,
-         |         row_number() OVER (PARTITION BY band ORDER BY id) AS i
-         |  FROM banded
-         |), walk(band, i, sigs, adm) AS (
-         |  SELECT band, 0, CAST([] AS UBIGINT[]), CAST([] AS BIGINT[])
-         |  FROM (SELECT DISTINCT band FROM docs)
-         |  UNION ALL
-         |  SELECT d.band, w.i + 1,
-         |         CASE WHEN $adm THEN list_append(w.sigs, d.sh) ELSE w.sigs END,
-         |         CASE WHEN $adm THEN list_append(w.adm, d.id) ELSE w.adm END
-         |  FROM walk w JOIN docs d ON d.band = w.band AND d.i = w.i + 1
-         |), fin AS (
-         |  SELECT w.band, w.adm FROM walk w
-         |  JOIN (SELECT band, max(i) AS mi FROM walk GROUP BY 1) m
-         |    ON m.band = w.band AND w.i = m.mi
-         |), admitted AS (
-         |  SELECT band, unnest(adm) AS id FROM fin
-         |)
-         |SELECT id, count(*) AS n_adm FROM admitted GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    "st_stream_sessions" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS t,
-        |         CAST(round(value * 100) AS BIGINT) AS cents
-        |  FROM events
-        |), s AS (
-        |  SELECT user_id, t, cents,
-        |         CASE WHEN t - lag(t) OVER w >= 1800000000 THEN 1 ELSE 0 END AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY t)
-        |), g AS (
-        |  SELECT user_id, t, cents,
-        |         sum(brk) OVER (PARTITION BY user_id ORDER BY t
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM s
-        |)
-        |SELECT user_id, min(t) AS t_start_us,
-        |       max(t) + 1800000000 AS t_end_us,
-        |       count(*) AS n_events, CAST(sum(cents) AS BIGINT) AS cents
-        |FROM g GROUP BY user_id, sid
-        |ORDER BY user_id, t_start_us""".stripMargin,
-
-    "st_stream_hourly" ->
-      """SELECT (epoch_ns(ts) // 3600000000000) * 3600 AS hour_start,
-        |       event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY event_type, hour_start""".stripMargin,
-
-    // the foreachBatch-upsert snapshot ≡ the batch rollup (update-mode
-    // deltas carry cumulative counts, so the final merge is the world)
-    "st_stream_mv" ->
-      """SELECT (epoch_ns(ts) // 3600000000000) * 3600 AS hour_start,
-        |       event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY event_type, hour_start""".stripMargin,
-
-    // exactly-once across a crash-restart: replaying the uncommitted batch
-    // against the rolled-back state version must converge to the same
-    // batch rollup a clean run produces — the store snapshot IS the world
-    "st_stream_recover" ->
-      """SELECT (epoch_ns(ts) // 3600000000000) * 3600 AS hour_start,
-        |       event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY event_type, hour_start""".stripMargin,
-
-    // stream-static enrichment ≡ the batch join + rollup (inner join,
-    // complete mode — no watermark semantics to replay)
-    "st_stream_enrich" ->
-      """SELECT (epoch_ns(ts) // 3600000000000) * 3600 AS hour_start,
-        |       c_mktsegment, count(*) AS n
-        |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY 1, 2 ORDER BY c_mktsegment, hour_start""".stripMargin,
-
-    // the watermark contract replayed row-for-row: hourly counts over
-    // everything EXCEPT the planted-late set (first-10-min-of-block rows
-    // whose hour window closed > 2h+1min before the global max) — pure
-    // integer µs arithmetic on both engines
-    "st_stream_late" ->
-      """WITH e AS (
-        |  SELECT epoch_ns(ts) // 1000 AS tus, event_type FROM events
-        |), g AS (
-        |  SELECT min(tus) AS gmin, max(tus) AS gmax,
-        |         greatest((max(tus) - min(tus)) // 6, 1) AS blen
-        |  FROM e
-        |), cls AS (
-        |  SELECT e.tus, e.event_type,
-        |         (e.tus - (g.gmin + least((e.tus - g.gmin) // g.blen, 5) * g.blen)
-        |            < 600000000
-        |          AND ((e.tus // 3600000000) + 1) * 3600000000
-        |            < g.gmax - 7200000000 - 60000000) AS late_planted
-        |  FROM e, g
-        |)
-        |SELECT (tus // 3600000000) * 3600 AS hour_start, event_type,
-        |       count(*) AS n
-        |FROM cls WHERE NOT late_planted
-        |GROUP BY 1, 2 ORDER BY event_type, hour_start""".stripMargin,
-
-    // the streamed pair set must equal the batch trailing-band join
-    "st_stream_join" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS tsn, event_type FROM events
-        |)
-        |SELECT p.event_id AS p_id, c.event_id AS c_id, p.tsn - c.tsn AS dt_us
-        |FROM e p JOIN e c ON p.user_id = c.user_id
-        |WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-        |  AND c.tsn BETWEEN p.tsn - 600000000 AND p.tsn
-        |ORDER BY p_id, c_id""".stripMargin,
-
-    // the streamed LEFT OUTER set must equal the batch band left join —
-    // matched pairs identical to st_stream_join, plus one null-click row
-    // per unmatched purchase (the watermark-flushed outer state)
-    "st_stream_outer" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS tsn, event_type FROM events
-        |), p AS (
-        |  SELECT user_id, event_id, tsn FROM e WHERE event_type = 'purchase'
-        |), c AS (
-        |  SELECT user_id AS cu, event_id AS c_id, tsn AS ct
-        |  FROM e WHERE event_type = 'click'
-        |)
-        |SELECT p.event_id AS p_id, c.c_id,
-        |       CASE WHEN c.c_id IS NOT NULL THEN p.tsn - c.ct END AS dt_us
-        |FROM p LEFT JOIN c ON c.cu = p.user_id
-        |  AND c.ct BETWEEN p.tsn - 600000000 AND p.tsn
-        |ORDER BY p_id, c_id NULLS FIRST""".stripMargin,
-
-    "gr_ppr" -> PageRank.pprDuckSql(iters = 3, damping = 0.85, topK = 25),
-
-    "ev_changepoint" -> Events.changepointsDuckSql(window = 6, up = 1.5, down = 0.5),
-    "ev_forecast" -> Events.holtForecastDuckSql,
-    "ev_holt_winters" -> Events.holtWintersDuckSql,
-    "ev_arima" -> Events.arFitDuckSql,
-    "ev_cusum" -> Events.cusumDuckSql,
-    "ev_pareto" -> Events.paretoDecilesDuckSql,
-    "ev_backtest" -> Events.holtBacktestDuckSql,
-    "ev_cuped" -> Events.cupedDuckSql,
-    "ev_event_study" -> Events.eventStudyDuckSql,
-    "ev_bandit" -> Events.banditReplayDuckSql,
-    "ev_srm" -> Events.srmDuckSql,
-    "ev_power" -> Events.abPowerDuckSql(),
-    "ev_did" -> Events.didDuckSql,
-    "ev_lag_corr" -> Events.lagCorrelationDuckSql(),
-
-    "ev_ttc" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, epoch_ns(ts) // 86400000000000 AS day
-        |  FROM events
-        |), su AS (
-        |  SELECT user_id, min(day) AS ds FROM e WHERE event_type = 'signup' GROUP BY 1
-        |), pu AS (
-        |  SELECT user_id, min(day) AS dp FROM e WHERE event_type = 'purchase' GROUP BY 1
-        |)
-        |SELECT CAST(dp - ds AS BIGINT) AS days_to_convert, count(*) AS users
-        |FROM su JOIN pu USING (user_id)
-        |WHERE dp >= ds
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "ev_new_returning" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_ns(ts) // 86400000000000 AS day FROM events
-        |), f AS (
-        |  SELECT user_id, min(day) AS d0 FROM e GROUP BY 1
-        |), j AS (
-        |  SELECT e.user_id, e.day,
-        |         CASE WHEN e.day = f.d0 THEN 1 ELSE 0 END AS is_new
-        |  FROM e JOIN f ON f.user_id = e.user_id
-        |)
-        |SELECT day,
-        |       count(DISTINCT CASE WHEN is_new = 1 THEN user_id END) AS new_users,
-        |       count(DISTINCT CASE WHEN is_new = 0 THEN user_id END) AS ret_users,
-        |       CAST(sum(is_new) AS BIGINT) AS new_events,
-        |       CAST(sum(1 - is_new) AS BIGINT) AS ret_events
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "ev_user_hist" -> {
-      val caseLadder = (0 until 20).reverse.foldLeft("20") { (els, k) =>
-        s"CASE WHEN n < ${1L << (k + 1)} THEN $k ELSE $els END"
-      }
-      s"""WITH u AS (
-         |  SELECT user_id, count(*) AS n,
-         |         sum(CAST(round(value * 100) AS BIGINT)) AS cents
-         |  FROM events GROUP BY 1
-         |)
-         |SELECT CAST($caseLadder AS BIGINT) AS bin, count(*) AS users,
-         |       CAST(sum(n) AS BIGINT) AS events,
-         |       CAST(sum(cents) AS BIGINT) AS cents,
-         |       CAST(min(n) AS BIGINT) AS min_n, CAST(max(n) AS BIGINT) AS max_n
-         |FROM u GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-    "dd_block_pairs" -> Dedup.editVerifiedDuckSql(),
-    "tx_bleu" -> Dedup.bleuPairsDuckSql(),
-    "tx_templates" -> Corpus.templatesDuckSql(BoilerplateSqlExpr),
-
-    "tx_lang_entropy" ->
-      """WITH c AS (
-        |  SELECT source, lang, count(*) AS n FROM documents GROUP BY 1, 2
-        |), p AS (
-        |  SELECT source, lang, n,
-        |         sum(n) OVER (PARTITION BY source) AS tot,
-        |         count(*) OVER (PARTITION BY source) AS nl,
-        |         row_number() OVER (PARTITION BY source ORDER BY lang) AS rn
-        |  FROM c
-        |), t AS (
-        |  SELECT source, lang, n, tot, nl, rn,
-        |         -((CAST(n AS DOUBLE) / CAST(tot AS DOUBLE))
-        |           * ln(CAST(n AS DOUBLE) / CAST(tot AS DOUBLE))) AS term
-        |  FROM p
-        |), run AS (
-        |  SELECT source, tot, nl, rn,
-        |         sum(term) OVER (PARTITION BY source ORDER BY lang
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS h
-        |  FROM t
-        |)
-        |SELECT source, CAST(nl AS BIGINT) AS langs, CAST(tot AS BIGINT) AS docs,
-        |       round(h, 6) AS entropy
-        |FROM run WHERE rn = nl ORDER BY source""".stripMargin,
-
-    "tx_oov" -> {
-      val toks = """list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"""
-      s"""WITH tr AS (
-         |  SELECT DISTINCT unnest($toks) AS w FROM documents WHERE doc_id % 5 <> 0
-         |), ev AS (
-         |  SELECT lang, unnest($toks) AS w FROM documents WHERE doc_id % 5 = 0
-         |), oov AS (
-         |  SELECT e.lang, count(*) AS oov_tokens
-         |  FROM ev e LEFT JOIN tr ON tr.w = e.w
-         |  WHERE tr.w IS NULL GROUP BY 1
-         |)
-         |SELECT e.lang, count(*) AS tokens,
-         |       CAST(coalesce(any_value(o.oov_tokens), 0) AS BIGINT) AS oov_tokens,
-         |       round(CAST(coalesce(any_value(o.oov_tokens), 0) AS DOUBLE)
-         |             / CAST(count(*) AS DOUBLE), 6) AS oov_rate
-         |FROM ev e LEFT JOIN oov o ON o.lang = e.lang
-         |GROUP BY e.lang ORDER BY e.lang""".stripMargin
-    },
-
-    "gr_rich_club" ->
-      """WITH eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |), d AS (
-        |  SELECT src AS node, count(*) AS deg FROM e GROUP BY 1
-        |), club AS (
-        |  SELECT node FROM d ORDER BY deg DESC, node LIMIT 50
-        |)
-        |SELECT CAST(50 AS BIGINT) AS k, count(*) AS club_edges,
-        |       round(CAST(count(*) AS DOUBLE) / 1225.0, 6) AS phi
-        |FROM eraw
-        |WHERE src IN (SELECT node FROM club) AND dst IN (SELECT node FROM club)""".stripMargin,
-
-    "tx_burstiness" ->
-      """WITH dw AS (
-        |  SELECT doc_id, w, count(*) AS c FROM (
-        |    SELECT doc_id,
-        |           unnest(list_filter(string_split_regex(lower(text), '\s+'),
-        |                              t -> t <> '')) AS w
-        |    FROM documents)
-        |  GROUP BY 1, 2
-        |), agg AS (
-        |  SELECT w, CAST(sum(c) AS BIGINT) AS tf, count(*) AS df FROM dw GROUP BY 1
-        |)
-        |SELECT w AS word, tf, df,
-        |       round(CAST(tf AS DOUBLE) / CAST(df AS DOUBLE), 6) AS burst
-        |FROM agg WHERE tf >= 50
-        |ORDER BY burst DESC, word LIMIT 20""".stripMargin,
-
-    "tx_curate" ->
-      """WITH surv AS (
-        |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY text
-        |), kept AS (
-        |  SELECT d.lang, d.doc_id,
-        |         len(list_filter(string_split_regex(lower(d.text), '\s+'),
-        |                         t -> t <> '')) AS toks
-        |  FROM documents d JOIN surv s ON s.doc_id = d.doc_id
-        |)
-        |SELECT lang, count(*) AS n_docs,
-        |       CAST(sum(toks) AS BIGINT) AS tokens,
-        |       CAST(sum(doc_id) AS BIGINT) AS id_sum
-        |FROM kept WHERE toks >= 5
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "jsonl_ingest_stats" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       CAST(sum(length(text)) AS BIGINT) AS chars,
-        |       CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |       CAST(sum(n_chars) AS BIGINT) AS n_chars_sum
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "ev_bayes" -> Events.ebConversionDuckSql(),
-    "ev_seasonal" -> Events.seasonalDuckSql,
-    "ev_survival" -> Events.kaplanMeierDuckSql(censorDays = 7),
-
-    "ev_wau" ->
-      (s"""WITH hashed AS (
-         |  SELECT epoch_ns(ts) // 86400000000000 AS day,
-         |         ${Dedup.fnv64DuckSql("CAST(user_id AS VARCHAR)")} AS h
-         |  FROM events
-         |), """.stripMargin + Events.rollingDistinctDuckSql(window = 7) +
-        "\nSELECT day, v_zero, est FROM wau_est ORDER BY day"),
-
-    "ev_trigrams" ->
-      """WITH s AS (
-        |  SELECT user_id, event_type,
-        |         lead(event_type, 1) OVER w AS e2,
-        |         lead(event_type, 2) OVER w AS e3
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id)
-        |)
-        |SELECT event_type AS s1, e2 AS s2, e3 AS s3, count(*) AS n
-        |FROM s WHERE e3 IS NOT NULL
-        |GROUP BY 1, 2, 3
-        |ORDER BY n DESC, s1, s2, s3 LIMIT 25""".stripMargin,
-
-    "sp_ecql" -> (PtsCte +
-      """
-        |SELECT c_nationkey, count(*) AS n,
-        |       CAST(sum(round(c_acctbal * 100)) AS BIGINT) AS cents
-        |FROM pts
-        |WHERE x BETWEEN -60.5 AND 60.5 AND y BETWEEN -40.5 AND 40.5
-        |  AND c_acctbal BETWEEN 1000.0 AND 8000.0 AND c_nationkey <> 7
-        |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // static registry — both sides render the same registered surface,
-    // like the reference's procedure registry dump
-    "sp_procedures" -> graft.engine.SpatialProcedures.registry.sortBy(_._1)
-      .map { case (n, k, e) => s"('$n', '$k', '$e')" }
-      .mkString("SELECT * FROM (VALUES ",
-        ", ", ") t(name, kind, entry_point) ORDER BY name"),
-
-    "sp_asmap" -> (PtsCte +
-      """
-        |SELECT ck, 'Point' AS gname, x AS cx, y AS cy
-        |FROM pts ORDER BY ck""".stripMargin),
-
-    "sp_ecql_like" ->
-      """SELECT c_nationkey, count(*) AS n,
-        |       CAST(sum(round(c_acctbal * 100)) AS BIGINT) AS cents
-        |FROM customer
-        |WHERE c_mktsegment LIKE 'BUIL%'
-        |  AND c_nationkey IN (1, 3, 5, 7, 9, 11)
-        |  AND c_acctbal * 2 - 500 > 3000
-        |  AND c_name NOT LIKE '%19%'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // ID filter = ck in the literal id set; RELATE 'T********' on a point
-    // vs the rectangle = strict interior containment (generator x/y sit on
-    // half-degree offsets, never on the boundary); functions replay as
-    // lower/abs/floor
-    "sp_ecql_fn" -> (PtsCte +
-      """
-        |SELECT ck, x, y
-        |FROM pts JOIN customer ON ck = c_custkey
-        |WHERE (ck IN (11, 22, 33) OR
-        |       (lower(c_mktsegment) = 'building' AND
-        |        abs(pts.c_acctbal - 5000) <= 2000 AND
-        |        floor(pts.c_acctbal / 1000) IN (3, 4, 5, 6)) OR
-        |       (c_name LIKE '%1' AND
-        |        substr(c_mktsegment, 1, 4) = 'AUTO' AND
-        |        round(least(pts.c_acctbal, 2000.0)) >= 1999 AND
-        |        strpos(upper(c_name), 'CUSTOMER') - 1 = 0 AND
-        |        pow(2, 3) + pi() > 11))
-        |  AND x > -90 AND x < 90 AND y > -45 AND y < 45
-        |ORDER BY ck""".stripMargin),
-
-    "sp_ecql_temporal" ->
-      """WITH fo AS (
-        |  SELECT o_custkey AS ck, min(o_orderdate) AS first_order
-        |  FROM orders GROUP BY 1
-        |)
-        |SELECT c_nationkey, count(*) AS n,
-        |       CAST(sum(round(c_acctbal * 100)) AS BIGINT) AS cents
-        |FROM customer JOIN fo ON ck = c_custkey
-        |WHERE first_order > TIMESTAMP '1992-12-31 23:59:59'
-        |  AND first_order <= TIMESTAMP '1995-12-31 00:00:00'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // identical ball to sp_within_distance: DWITHIN 1 500 000 meters must
-    // land on the exact same geodesic-kilometer oracle
-    "sp_ecql_dwithin" -> (PtsCte +
-      """
-        |SELECT ck AS id,
-        |       round(acos(least(sin(radians(20.5)) * sin(radians(y))
-        |             + cos(radians(20.5)) * cos(radians(y))
-        |             * cos(radians(x) - radians(10.5)), 1.0)) * 6371, 3) AS dist_km
-        |FROM pts
-        |WHERE acos(least(sin(radians(20.5)) * sin(radians(y))
-        |      + cos(radians(20.5)) * cos(radians(y))
-        |      * cos(radians(x) - radians(10.5)), 1.0)) * 6371 <= 1500.0
-        |ORDER BY dist_km, id""".stripMargin),
-
-    "sp_prop_null" -> (PtsCte +
-      """
-        |, np AS (
-        |  SELECT c_nationkey,
-        |         CASE WHEN c_acctbal < 0 THEN NULL ELSE c_acctbal END AS nbal
-        |  FROM pts
-        |)
-        |SELECT c_nationkey,
-        |       CAST(sum(CASE WHEN nbal IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-        |       CAST(sum(CASE WHEN nbal IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_notnull,
-        |       CAST(sum(CASE WHEN nbal IS NOT NULL THEN round(nbal * 100) END) AS BIGINT) AS cents
-        |FROM np GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_ortho_length" -> (PtsCte +
-      """
-        |, segs AS (
-        |  SELECT c_nationkey,
-        |         lag(x) OVER w AS x1, lag(y) OVER w AS y1, x AS x2, y AS y2
-        |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-        |)
-        |SELECT c_nationkey,
-        |  round(coalesce(sum(acos(least(sin(radians(y1)) * sin(radians(y2))
-        |        + cos(radians(y1)) * cos(radians(y2))
-        |        * cos(radians(x2) - radians(x1)), 1.0)) * 6371), 0), 3) AS len_km
-        |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // Chamberlain-Duquette replay: the four ring segments written in ring
-    // order as one left-associated sum (matches ringTotal's loop exactly)
-    "sp_geodesic_area" ->
-      """WITH nb AS (
-        |  SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey,
-        |         n_nationkey * 3 - 39.5 AS x0, n_nationkey * 3 - 34.5 AS x1,
-        |         n_nationkey * 2 - 29.5 AS y0, n_nationkey * 2 - 25.5 AS y1
-        |  FROM nation
-        |), t AS (
-        |  SELECT n_nationkey, x0, x1, y0, y1,
-        |    (radians(x1) - radians(x0)) * (2 + sin(radians(y0)) + sin(radians(y0)))
-        |  + (radians(x1) - radians(x1)) * (2 + sin(radians(y0)) + sin(radians(y1)))
-        |  + (radians(x0) - radians(x1)) * (2 + sin(radians(y1)) + sin(radians(y1)))
-        |  + (radians(x0) - radians(x0)) * (2 + sin(radians(y1)) + sin(radians(y0))) AS total
-        |  FROM nb
-        |)
-        |SELECT n_nationkey,
-        |  round(abs(total) * 6378137.0 * 6378137.0 / 2 / 1000000.0, 3) AS area_km2,
-        |  round((x1 - x0) * (y1 - y0), 6) AS planar_deg2
-        |FROM t ORDER BY 1""".stripMargin,
-
-    // linear-referencing replay: identical window shapes (running sum in
-    // ROWS order = Spark's sequential pass; cumb via lag, total via
-    // partition max of the SAME running values) and the identical lerp
-    // expression tree, so doubles agree before the round(…, 6)
-    "sp_line_interpolate" -> (PtsCte +
-      """
-        |, seg0 AS (
-        |  SELECT c_nationkey AS nk, ck, x, y,
-        |         lead(x) OVER w AS x2, lead(y) OVER w AS y2
-        |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-        |), seg1 AS (
-        |  SELECT nk, ck, x, y, x2, y2,
-        |         sqrt((x2 - x) * (x2 - x) + (y2 - y) * (y2 - y)) AS seglen
-        |  FROM seg0 WHERE x2 IS NOT NULL
-        |), cum1 AS (
-        |  SELECT nk, ck, x, y, x2, y2, seglen,
-        |         sum(seglen) OVER (PARTITION BY nk ORDER BY ck
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM seg1
-        |), cum2 AS (
-        |  SELECT *, coalesce(lag(cum) OVER (PARTITION BY nk ORDER BY ck), 0.0) AS cumb,
-        |         max(cum) OVER (PARTITION BY nk) AS total
-        |  FROM cum1
-        |), fr AS (SELECT f * 0.25 AS frac FROM range(1, 4) t(f))
-        |SELECT nk, frac,
-        |       round(x + (x2 - x) * ((frac * total - cumb) / seglen), 6) AS px,
-        |       round(y + (y2 - y) * ((frac * total - cumb) / seglen), 6) AS py
-        |FROM cum2, fr
-        |WHERE cumb <= frac * total AND frac * total < cum
-        |ORDER BY nk, frac""".stripMargin),
-
-    // sub-polyline replay on the same window CTEs; the cut-point pivot's
-    // conditional max sees exactly one row per guard so it is order-free
-    "sp_line_substring" -> (PtsCte +
-      """
-        |, seg0 AS (
-        |  SELECT c_nationkey AS nk, ck, x, y,
-        |         lead(x) OVER w AS x2, lead(y) OVER w AS y2
-        |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-        |), seg1 AS (
-        |  SELECT nk, ck, x, y, x2, y2,
-        |         sqrt((x2 - x) * (x2 - x) + (y2 - y) * (y2 - y)) AS seglen
-        |  FROM seg0 WHERE x2 IS NOT NULL
-        |), cum1 AS (
-        |  SELECT nk, ck, x, y, x2, y2, seglen,
-        |         sum(seglen) OVER (PARTITION BY nk ORDER BY ck
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM seg1
-        |), cum2 AS (
-        |  SELECT *, coalesce(lag(cum) OVER (PARTITION BY nk ORDER BY ck), 0.0) AS cumb,
-        |         max(cum) OVER (PARTITION BY nk) AS total
-        |  FROM cum1
-        |), interior AS (
-        |  SELECT nk, count(*) AS n_interior FROM cum2
-        |  WHERE 0.2 * total < cum AND cum < 0.8 * total GROUP BY 1
-        |), fr AS (
-        |  SELECT f * CAST(0.2 AS DOUBLE) AS frac FROM (VALUES (1), (4)) t(f)
-        |), cuts AS (
-        |  SELECT nk, frac,
-        |         round(x + (x2 - x) * ((frac * total - cumb) / seglen), 6) AS px,
-        |         round(y + (y2 - y) * ((frac * total - cumb) / seglen), 6) AS py
-        |  FROM cum2, fr
-        |  WHERE cumb <= frac * total AND frac * total < cum
-        |), piv AS (
-        |  SELECT nk,
-        |         max(CASE WHEN frac < 0.5 THEN px END) AS sx,
-        |         max(CASE WHEN frac < 0.5 THEN py END) AS sy,
-        |         max(CASE WHEN frac > 0.5 THEN px END) AS ex,
-        |         max(CASE WHEN frac > 0.5 THEN py END) AS ey
-        |  FROM cuts GROUP BY 1
-        |)
-        |SELECT p.nk, CAST(coalesce(i.n_interior, 0) + 2 AS BIGINT) AS n_points,
-        |       sx, sy, ex, ey
-        |FROM piv p LEFT JOIN interior i ON i.nk = p.nk ORDER BY p.nk""".stripMargin),
-
-    // IDW replay: same centroid division, same d² tree, same (d2, ck) rank
-    // tie-break, the same 8 pivoted terms added left-to-right
-    "sp_quadrat" -> (PtsCte + """
-      |, cells AS (
-      |  SELECT CAST(floor((x + 180.0) / 10.0) AS BIGINT) AS cx,
-      |         CAST(floor((y + 90.0) / 10.0) AS BIGINT) AS cy,
-      |         count(*) AS n
-      |  FROM pts GROUP BY 1, 2
-      |), m AS (
-      |  SELECT count(*) AS k, CAST(sum(n) AS BIGINT) AS s1,
-      |         CAST(sum(n*n) AS BIGINT) AS s2
-      |  FROM cells
-      |), f AS (
-      |  SELECT k, s1, s2, CAST(s1 AS DOUBLE) / 648.0 AS mu FROM m
-      |)
-      |SELECT CAST(648 AS BIGINT) AS quadrats, k AS occupied, s1 AS n_points,
-      |       round(mu, 6) AS mu,
-      |       round((CAST(s2 AS DOUBLE) - 2.0 * mu * CAST(s1 AS DOUBLE)
-      |              + 648.0 * mu * mu) / mu, 6) AS chi2
-      |FROM f""".stripMargin),
-
-    "sp_gini" -> (PtsCte + """
-      |, cells AS (
-      |  SELECT CAST(floor((x + 180.0) / 10.0) AS BIGINT) AS cx,
-      |         CAST(floor((y + 90.0) / 10.0) AS BIGINT) AS cy,
-      |         count(*) AS n
-      |  FROM pts GROUP BY 1, 2
-      |), r AS (
-      |  SELECT n, CAST(row_number() OVER (ORDER BY n, cx, cy) AS BIGINT) AS i
-      |  FROM cells
-      |), m AS (
-      |  SELECT count(*) AS m, CAST(sum(n) AS BIGINT) AS sx,
-      |         CAST(sum(i * n) AS BIGINT) AS sixi
-      |  FROM r
-      |)
-      |SELECT m AS n_cells, sx AS n_points,
-      |       round((2 * sixi - (m + 1) * sx) / (m * sx), 6) AS gini
-      |FROM m""".stripMargin),
-
-    "sp_ripley" -> (PtsCte + """
-      |, pr AS (
-      |  SELECT (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS d2
-      |  FROM pts a JOIN pts b ON a.ck < b.ck
-      |  WHERE abs(a.x - b.x) <= 8 AND abs(a.y - b.y) <= 8
-      |), cn AS (
-      |  SELECT sum(CASE WHEN d2 <= 1.0 THEN 1 ELSE 0 END) AS p1,
-      |         sum(CASE WHEN d2 <= 4.0 THEN 1 ELSE 0 END) AS p2,
-      |         sum(CASE WHEN d2 <= 16.0 THEN 1 ELSE 0 END) AS p4,
-      |         sum(CASE WHEN d2 <= 64.0 THEN 1 ELSE 0 END) AS p8
-      |  FROM pr
-      |), t AS (
-      |  SELECT count(*) AS np FROM pts
-      |), rows_out AS (
-      |  SELECT 1 AS r, p1 AS pairs FROM cn
-      |  UNION ALL SELECT 2, p2 FROM cn
-      |  UNION ALL SELECT 4, p4 FROM cn
-      |  UNION ALL SELECT 8, p8 FROM cn
-      |)
-      |SELECT CAST(r AS BIGINT) AS r, CAST(pairs AS BIGINT) AS pairs,
-      |       round(CAST(pairs AS DOUBLE) * 2.0 * 64800.0
-      |             / (CAST(np AS DOUBLE) * CAST(np - 1 AS DOUBLE)), 6) AS k_est
-      |FROM rows_out CROSS JOIN t ORDER BY r""".stripMargin),
-
-    "sp_moran" -> (PtsCte + """
-      |, cells AS (
-      |  SELECT CAST(floor((x + 180.0) / 10.0) AS BIGINT) AS cx,
-      |         CAST(floor((y + 90.0) / 10.0) AS BIGINT) AS cy,
-      |         count(*) AS n
-      |  FROM pts GROUP BY 1, 2
-      |), gs AS (
-      |  SELECT count(*) AS nn, sum(n) AS s1, sum(n*n) AS s2 FROM cells
-      |), nbr AS (
-      |  SELECT c.cx + o.dx AS jcx, c.cy + o.dy AS jcy, c.n AS ni
-      |  FROM cells c CROSS JOIN (
-      |    SELECT dx, dy FROM (VALUES (-1), (0), (1)) a(dx),
-      |                       (VALUES (-1), (0), (1)) b(dy)
-      |    WHERE NOT (dx = 0 AND dy = 0)) o
-      |), prs AS (
-      |  SELECT sum(t.ni * e.n) AS p, sum(t.ni + e.n) AS q, count(*) AS w
-      |  FROM nbr t JOIN cells e ON e.cx = t.jcx AND e.cy = t.jcy
-      |), f AS (
-      |  SELECT g.nn, prs.w, prs.p, prs.q, g.s2,
-      |         CAST(g.nn AS DOUBLE) AS nd,
-      |         CAST(g.s1 AS DOUBLE) / CAST(g.nn AS DOUBLE) AS xbar
-      |  FROM prs CROSS JOIN gs g
-      |)
-      |SELECT nn AS n_cells, w AS n_pairs,
-      |       round((nd / CAST(w AS DOUBLE))
-      |             * (CAST(p AS DOUBLE) - xbar * CAST(q AS DOUBLE)
-      |                + xbar * xbar * CAST(w AS DOUBLE))
-      |             / (CAST(s2 AS DOUBLE) - nd * xbar * xbar), 6) AS moran_i,
-      |       round(-1.0 / (nd - 1), 6) AS e_i
-      |FROM f""".stripMargin),
-
-    "sp_hotspot" -> (PtsCte + """
-      |, cells AS (
-      |  SELECT CAST(floor((x + 180.0) / 10.0) AS BIGINT) AS cx,
-      |         CAST(floor((y + 90.0) / 10.0) AS BIGINT) AS cy,
-      |         count(*) AS n
-      |  FROM pts GROUP BY 1, 2
-      |), gstats AS (
-      |  SELECT count(*) AS nn, sum(n) AS s1, sum(n*n) AS s2 FROM cells
-      |), contrib AS (
-      |  SELECT c.cx + o.dx AS ccx, c.cy + o.dy AS ccy, c.n
-      |  FROM cells c CROSS JOIN (
-      |    SELECT dx, dy FROM (VALUES (-1), (0), (1)) a(dx),
-      |                       (VALUES (-1), (0), (1)) b(dy)) o
-      |), hood AS (
-      |  SELECT t.ccx AS cx, t.ccy AS cy, sum(t.n) AS si, count(*) AS wi
-      |  FROM contrib t JOIN cells e ON e.cx = t.ccx AND e.cy = t.ccy
-      |  GROUP BY 1, 2
-      |), f AS (
-      |  SELECT h.cx, h.cy, h.si, h.wi,
-      |         CAST(g.nn AS DOUBLE) AS nd,
-      |         CAST(g.s1 AS DOUBLE) / CAST(g.nn AS DOUBLE) AS xbar,
-      |         sqrt(CAST(g.s2 AS DOUBLE) / CAST(g.nn AS DOUBLE)
-      |              - (CAST(g.s1 AS DOUBLE) / CAST(g.nn AS DOUBLE))
-      |                * (CAST(g.s1 AS DOUBLE) / CAST(g.nn AS DOUBLE))) AS sdev,
-      |         CAST(h.wi AS DOUBLE) AS wid
-      |  FROM hood h CROSS JOIN gstats g
-      |)
-      |SELECT cx, cy, CAST(si AS BIGINT) AS si, wi,
-      |       round((CAST(si AS DOUBLE) - xbar * wid)
-      |             / (sdev * sqrt((nd * wid - wid * wid) / (nd - 1))), 6) AS gi_z
-      |FROM f ORDER BY gi_z DESC, cx, cy LIMIT 15""".stripMargin),
-
-    "sp_skyline" -> (PtsCte + """
-      |, cen AS (
-      |  SELECT c_nationkey AS cnk, sum(x) / count(*) AS cx,
-      |         sum(y) / count(*) AS cy
-      |  FROM pts GROUP BY 1
-      |), d AS (
-      |  SELECT p.c_nationkey AS nk, p.ck,
-      |         CAST(round(p.c_acctbal * 100) AS BIGINT) AS cents,
-      |         (p.x - c.cx) * (p.x - c.cx) + (p.y - c.cy) * (p.y - c.cy) AS d2
-      |  FROM pts p JOIN cen c ON c.cnk = p.c_nationkey
-      |), g AS (
-      |  SELECT nk, d2, max(cents) AS gmax FROM d GROUP BY 1, 2
-      |), gp AS (
-      |  SELECT nk, d2,
-      |         max(gmax) OVER (PARTITION BY nk ORDER BY d2
-      |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-      |  FROM g
-      |)
-      |SELECT CAST(d.nk AS BIGINT) AS nk, d.ck, d.cents, round(d.d2, 6) AS d2
-      |FROM d JOIN gp ON gp.nk = d.nk AND gp.d2 = d.d2
-      |WHERE gp.pmax IS NULL OR d.cents >= gp.pmax
-      |ORDER BY nk, d2, ck""".stripMargin),
-
-    "sp_voronoi" -> (PtsCte + """
-      |, cen AS (
-      |  SELECT c_nationkey AS site, sum(x) / count(*) AS cx,
-      |         sum(y) / count(*) AS cy
-      |  FROM pts GROUP BY 1
-      |), xj AS (
-      |  SELECT p.ck, p.x, p.y,
-      |         CAST(round(p.c_acctbal * 100) AS BIGINT) AS cents, c.site,
-      |         (p.x - c.cx) * (p.x - c.cx) + (p.y - c.cy) * (p.y - c.cy) AS d2
-      |  FROM pts p CROSS JOIN cen c
-      |), asg AS (
-      |  SELECT * FROM xj
-      |  QUALIFY row_number() OVER (PARTITION BY ck ORDER BY d2, site) = 1
-      |)
-      |SELECT site, count(*) AS n_pts, CAST(sum(cents) AS BIGINT) AS cents,
-      |       min(x) AS min_x, max(x) AS max_x, min(y) AS min_y, max(y) AS max_y
-      |FROM asg GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_idw" -> (PtsCte + {
-      def t(c: String, i: Int) =
-        s"coalesce(max(CASE WHEN rn = $i THEN $c END), 0.0)"
-      val sw = (1 to 8).map(t("wt", _)).mkString(" + ")
-      val scw = (1 to 8).map(t("cw", _)).mkString(" + ")
-      s"""
-         |, p AS (
-         |  SELECT c_nationkey AS nk, ck, x, y,
-         |         CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-         |  FROM pts
-         |), cen AS (
-         |  SELECT nk AS cnk, sum(x) / count(*) AS cx, sum(y) / count(*) AS cy
-         |  FROM p GROUP BY 1
-         |), d AS (
-         |  SELECT p.nk, p.ck, p.cents,
-         |         greatest((p.x - c.cx) * (p.x - c.cx)
-         |                  + (p.y - c.cy) * (p.y - c.cy), 1e-12) AS d2
-         |  FROM p JOIN cen c ON p.nk = c.cnk
-         |), r AS (
-         |  SELECT nk, cents, d2,
-         |         row_number() OVER (PARTITION BY nk ORDER BY d2, ck) AS rn
-         |  FROM d
-         |), k8 AS (
-         |  SELECT nk, rn, 1.0 / d2 AS wt, (1.0 / d2) * cents AS cw
-         |  FROM r WHERE rn <= 8
-         |)
-         |SELECT nk, count(*) AS k,
-         |       round(($scw) / ($sw), 4) AS idw_cents
-         |FROM k8 GROUP BY 1 ORDER BY 1""".stripMargin
-    }),
-
-    "sp_bearing" -> (PtsCte +
-      """
-        |, segs AS (
-        |  SELECT c_nationkey, ck,
-        |         lag(x) OVER w AS px, lag(y) OVER w AS py, x, y
-        |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-        |), b AS (
-        |  SELECT c_nationkey, ck,
-        |    fmod(degrees(atan2(
-        |        sin(radians(x) - radians(px)) * cos(radians(y)),
-        |        cos(radians(py)) * sin(radians(y))
-        |          - sin(radians(py)) * cos(radians(y))
-        |            * cos(radians(x) - radians(px)))) + 360.0, 360.0) AS b
-        |  FROM segs WHERE px IS NOT NULL
-        |)
-        |SELECT c_nationkey, count(*)::BIGINT AS n_seg,
-        |       round(arg_min(b, ck), 6) AS b_first,
-        |       round(min(b), 6) AS b_min, round(max(b), 6) AS b_max
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // Andoyer-Lambert replay: same segment windows, half-angles averaged in
-    // degrees then radians (matches Orthodromic.geodesicKm operation order)
-    "sp_geodesic_length" -> (PtsCte +
-      """
-        |, segs AS (
-        |  SELECT c_nationkey,
-        |         lag(x) OVER w AS x1, lag(y) OVER w AS y1, x AS x2, y AS y2
-        |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-        |), trig AS (
-        |  SELECT c_nationkey,
-        |         sin(radians((y1 + y2) / 2)) AS sinf, cos(radians((y1 + y2) / 2)) AS cosf,
-        |         sin(radians((y1 - y2) / 2)) AS sing, cos(radians((y1 - y2) / 2)) AS cosg,
-        |         sin(radians((x1 - x2) / 2)) AS sinl, cos(radians((x1 - x2) / 2)) AS cosl
-        |  FROM segs WHERE x1 IS NOT NULL
-        |), sc AS (
-        |  SELECT c_nationkey, sinf, cosf, sing, cosg,
-        |         sing * sing * cosl * cosl + cosf * cosf * sinl * sinl AS s,
-        |         cosg * cosg * cosl * cosl + sinf * sinf * sinl * sinl AS c
-        |  FROM trig
-        |), seg AS (
-        |  SELECT c_nationkey,
-        |    CASE WHEN s = 0 THEN 0
-        |         WHEN c = 0 THEN 2 * atan2(sqrt(s), sqrt(c)) * 6378.137
-        |         ELSE (2 * atan2(sqrt(s), sqrt(c)) * 6378.137)
-        |              * (1 + (1.0 / 298.257223563) * (
-        |                   ((3 * (sqrt(s * c) / atan2(sqrt(s), sqrt(c))) - 1) / (2 * c))
-        |                     * sinf * sinf * cosg * cosg
-        |                 - ((3 * (sqrt(s * c) / atan2(sqrt(s), sqrt(c))) + 1) / (2 * s))
-        |                     * cosf * cosf * sing * sing))
-        |    END AS d
-        |  FROM sc
-        |)
-        |SELECT c_nationkey, round(coalesce(sum(d), 0), 3) AS len_km
-        |FROM seg GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // quantization replay: on the half-degree lattice the only rounded op
-    // per axis is one division (the *2^15 scaling is an exact exponent
-    // shift), so floors agree bit-for-bit with the Spark side
-    "sp_mvt_bake" -> (PtsCte +
-      """
-        |, q AS (
-        |  SELECT ck, c_nationkey,
-        |         floor((x + 180) / 360 * 32768) AS fgx,
-        |         floor((90 - y) / 180 * 32768) AS fgy
-        |  FROM pts
-        |), t AS (
-        |  SELECT ck, c_nationkey,
-        |         CAST(floor(fgx / 4096) AS BIGINT) AS tx,
-        |         CAST(floor(fgy / 4096) AS BIGINT) AS ty,
-        |         CAST(fgx - 4096 * floor(fgx / 4096) AS BIGINT) AS px,
-        |         CAST(fgy - 4096 * floor(fgy / 4096) AS BIGINT) AS py
-        |  FROM q
-        |)
-        |SELECT tx, ty, count(*)::BIGINT AS n_feat,
-        |       CAST(sum(px) AS BIGINT) AS sum_px, CAST(sum(py) AS BIGINT) AS sum_py,
-        |       CAST(sum(ck) AS BIGINT) AS sum_id, CAST(sum(c_nationkey) AS BIGINT) AS sum_nk
-        |FROM t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-
-    // replays the full lines pipeline: quarter-degree lattice → slippy
-    // mercator quantization (identical float expression tree) → per-nation
-    // run segmentation (lag + running sum) → >=2-vertex run filter →
-    // per-tile feature/vertex/coordinate sums. The Spark side additionally
-    // roundtrips through the binary MVT codec; equal sums prove the
-    // zigzag-delta cursor stream is lossless.
-    "sp_mvt_lines" ->
-      """WITH v AS (
-        |  SELECT c_custkey AS ck, c_nationkey AS nk,
-        |         CAST(c_nationkey % 8 AS DOUBLE) * 45 - 180 + 22.5
-        |           + (CAST(c_custkey % 16 AS DOUBLE) - 7.5) * 0.25 AS x,
-        |         CAST((c_nationkey * 7) % 6 AS DOUBLE) * 20 - 60 + 10
-        |           + (CAST((c_custkey * 3) % 12 AS DOUBLE) - 5.5) * 0.25 AS y
-        |  FROM customer
-        |), q AS (
-        |  SELECT ck, nk,
-        |         CAST(floor((x + 180) / 360 * 16384) AS BIGINT) AS gx,
-        |         CAST(floor((1 - ln(tan(pi() / 4 + radians(y) / 2)) * 6378137
-        |           / 6378137 / pi()) / 2 * 16384) AS BIGINT) AS gy
-        |  FROM v
-        |), t AS (
-        |  SELECT ck, nk, gx // 4096 AS tx, gy // 4096 AS ty,
-        |         gx % 4096 AS px, gy % 4096 AS py
-        |  FROM q
-        |), r AS (
-        |  SELECT ck, nk, tx, ty, px, py,
-        |         CASE WHEN lag(tx) OVER w IS DISTINCT FROM tx
-        |               OR lag(ty) OVER w IS DISTINCT FROM ty THEN 1 ELSE 0 END AS brk
-        |  FROM t WINDOW w AS (PARTITION BY nk ORDER BY ck)
-        |), r2 AS (
-        |  SELECT ck, nk, tx, ty, px, py,
-        |         sum(brk) OVER (PARTITION BY nk ORDER BY ck) AS run
-        |  FROM r
-        |), f AS (
-        |  SELECT nk, run, tx, ty, count(*) AS nv, sum(px) AS spx, sum(py) AS spy,
-        |         nk * 10000 + run AS fid
-        |  FROM r2 GROUP BY nk, run, tx, ty
-        |  HAVING count(*) >= 2
-        |)
-        |SELECT tx, ty, count(*)::BIGINT AS n_feat, CAST(sum(nv) AS BIGINT) AS n_vert,
-        |       CAST(sum(spx) AS BIGINT) AS sum_px, CAST(sum(spy) AS BIGINT) AS sum_py,
-        |       CAST(sum(fid) AS BIGINT) AS sum_id
-        |FROM f GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // replays the polygon bake arithmetic directly on the per-nation pixel
-    // bboxes: area/perimeter/coordinate sums of the 4-corner CW ring the
-    // Spark side recovers from the decoded ClosePath command stream
-    "sp_mvt_poly" ->
-      """WITH v AS (
-        |  SELECT c_custkey AS ck, c_nationkey AS nk,
-        |         CAST(c_nationkey % 8 AS DOUBLE) * 45 - 180 + 22.5
-        |           + (CAST(c_custkey % 16 AS DOUBLE) - 7.5) * 0.25 AS x,
-        |         CAST((c_nationkey * 7) % 6 AS DOUBLE) * 20 - 60 + 10
-        |           + (CAST((c_custkey * 3) % 12 AS DOUBLE) - 5.5) * 0.25 AS y
-        |  FROM customer
-        |), q AS (
-        |  SELECT ck, nk,
-        |         CAST(floor((x + 180) / 360 * 4096) AS BIGINT) AS gx,
-        |         CAST(floor((1 - ln(tan(pi() / 4 + radians(y) / 2)) * 6378137
-        |           / 6378137 / pi()) / 2 * 4096) AS BIGINT) AS gy
-        |  FROM v
-        |), b AS (
-        |  SELECT nk, min(gx) AS x0, max(gx) AS x1, min(gy) AS y0, max(gy) AS y1
-        |  FROM q GROUP BY 1
-        |  HAVING max(gx) > min(gx) AND max(gy) > min(gy)
-        |)
-        |SELECT CAST(nk AS BIGINT) AS nk, 4::BIGINT AS n_vert,
-        |       CAST((x1 - x0) * (y1 - y0) AS BIGINT) AS area,
-        |       CAST(2 * ((x1 - x0) + (y1 - y0)) AS BIGINT) AS perim,
-        |       CAST(2 * (x0 + x1) AS BIGINT) AS sum_px,
-        |       CAST(2 * (y0 + y1) AS BIGINT) AS sum_py
-        |FROM b ORDER BY nk""".stripMargin,
-
-    "sp_mercator_length" -> (PtsCte +
-      """
-        |, m AS (
-        |  SELECT ck, c_nationkey, y,
-        |         radians(x) * 6378137 AS mx,
-        |         ln(tan(pi() / 4 + radians(y) / 2)) * 6378137 AS my
-        |  FROM pts
-        |), segs AS (
-        |  SELECT c_nationkey, y, mx, my,
-        |         lag(mx) OVER w AS px, lag(my) OVER w AS py
-        |  FROM m WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-        |)
-        |SELECT c_nationkey,
-        |  round(sum(sqrt((mx - px) * (mx - px) + (my - py) * (my - py))) / 1000, 2) AS len_km,
-        |  round(max(abs(y - degrees(2 * atan(exp(my / 6378137)) - pi() / 2))), 9) AS max_rt_err_deg
-        |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "mm_frames" -> MmFramesSql,
-
-    // image FNV chain → 2×2 block level-sums → position-weighted checksum
-    "mm_resize" ->
-      """WITH px AS (
-        |  SELECT i AS media_id, p AS pidx,
-        |         CAST((299 * ((p * 3 + i * 7) % 256)
-        |             + 587 * ((p * 5 + i * 11) % 256)
-        |             + 114 * ((p * 7 + i * 13) % 256)) // 1000 AS BIGINT) AS level
-        |  FROM range(300) t(i), range(64) q(p) WHERE i % 3 = 0
-        |), blocks AS (
-        |  SELECT media_id,
-        |         ((pidx // 8) // 2) * 4 + ((pidx % 8) // 2) AS b,
-        |         sum(level) AS s
-        |  FROM px GROUP BY 1, 2
-        |)
-        |SELECT media_id, CAST(sum((b + 1) * s) AS BIGINT) AS checksum,
-        |       CAST(16 AS BIGINT) AS n_px
-        |FROM blocks GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // image-kind FNV chain (64 content bytes, then 64 pixel steps), pixel
-    // LEVELS kept as exact integers → block-sum embedding → integer
-    // dot/norm cosine, rank ties broken by neighbor id
-    "mm_embed_knn" ->
-      """WITH px AS (
-        |  SELECT i AS media_id, p AS pidx,
-        |         CAST((299 * ((p * 3 + i * 7) % 256)
-        |             + 587 * ((p * 5 + i * 11) % 256)
-        |             + 114 * ((p * 7 + i * 13) % 256)) // 1000 AS BIGINT) AS level
-        |  FROM range(300) t(i), range(64) q(p) WHERE i % 3 = 0
-        |), emb AS (
-        |  SELECT media_id, pidx // 8 AS b, sum(level) AS v
-        |  FROM px GROUP BY 1, 2
-        |), nrm AS (
-        |  SELECT media_id, sqrt(CAST(sum(v * v) AS DOUBLE)) AS nrm
-        |  FROM emb GROUP BY 1
-        |), dots AS (
-        |  SELECT ea.media_id AS a_id, eb.media_id AS b_id,
-        |         CAST(sum(ea.v * eb.v) AS DOUBLE) AS dot
-        |  FROM emb ea JOIN emb eb ON ea.b = eb.b AND ea.media_id <> eb.media_id
-        |  GROUP BY 1, 2
-        |), cosb AS (
-        |  SELECT a_id, b_id, dot / (na.nrm * nb.nrm) AS cos
-        |  FROM dots
-        |  JOIN nrm na ON na.media_id = a_id
-        |  JOIN nrm nb ON nb.media_id = b_id
-        |), ranked AS (
-        |  SELECT a_id, b_id, cos,
-        |         row_number() OVER (PARTITION BY a_id ORDER BY cos DESC, b_id) AS rk
-        |  FROM cosb
-        |)
-        |SELECT a_id AS media_id, CAST(rk AS BIGINT) AS rk, b_id AS nbr,
-        |       round(cos, 6) AS cos
-        |FROM ranked WHERE rk <= 3 ORDER BY 1, 2""".stripMargin,
-
-    // the REAL per-frame PNG decode replayed from the lossless frame
-    // pattern (seed remapped i ≡ 8 mod 9 → i-6 to plant duplicates), then
-    // the set-Jaccard assembled relationally (feature-join candidates)
-    "mm_video_dedup" ->
-      """WITH feat0 AS (
-        |  SELECT i AS media_id, f AS frame_idx,
-        |         round(sum(CAST(CAST(
-        |           CASE WHEN p < (s * s * 31 + f * f * 17 + f * s * 5) % 200 + 28
-        |                THEN 255 ELSE (p * 3) % 64 END
-        |           AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE)), 4) AS feat
-        |  FROM (SELECT i, CASE WHEN i % 9 = 8 THEN i - 6 ELSE i END AS s
-        |        FROM range(300) t(i) WHERE i % 3 = 2) m(i, s),
-        |       range(8) u(f), range(256) q(p)
-        |  GROUP BY 1, 2
-        |), feats AS (
-        |  SELECT DISTINCT media_id, feat FROM feat0
-        |), sizes AS (
-        |  SELECT media_id, count(*) AS n FROM feats GROUP BY 1
-        |), shared AS (
-        |  SELECT a.media_id AS id_a, b.media_id AS id_b, count(*) AS shared
-        |  FROM feats a JOIN feats b ON a.feat = b.feat AND a.media_id < b.media_id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT id_a, id_b, CAST(shared AS BIGINT) AS shared,
-        |       round(CAST(shared AS DOUBLE) / (na.n + nb.n - shared), 6) AS jaccard
-        |FROM shared
-        |JOIN sizes na ON id_a = na.media_id
-        |JOIN sizes nb ON id_b = nb.media_id
-        |WHERE round(CAST(shared AS DOUBLE) / (na.n + nb.n - shared), 6) >= 0.5
-        |ORDER BY 1, 2""".stripMargin,
-
-    "mm_audio" -> MmAudioSql,
-
-    "mm_vad" -> MmVadSql,
-    "mm_audio_match" -> MmAudioMatchSql,
-
-    "sp_simplify_reverse" -> (PtsCte +
-      """
-        |SELECT c_nationkey,
-        |  CASE WHEN count(*) = 1 THEN 1 ELSE 2 END::BIGINT AS n_dp,
-        |  arg_max(x, ck) AS rev_sx, arg_max(y, ck) AS rev_sy,
-        |  TRUE AS eq_norm_rev
-        |FROM pts GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_gml_kml" -> (PtsCte +
-      """
-        |SELECT c_nationkey, count(*)::BIGINT AS kml_pts, count(*)::BIGINT AS gml_pts
-        |FROM pts GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_densify_npoints" -> (PtsCte +
-      """
-        |, segs AS (
-        |  SELECT c_nationkey,
-        |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
-        |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
-        |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-        |)
-        |SELECT c_nationkey,
-        |       CAST(1 + coalesce(sum(floor(seg / 0.7) + 1), 0) AS BIGINT) AS n_dense
-        |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // Interval arithmetic on the lattice decides every predicate: wx/wy are
-    // the (possibly negative) overlap widths of the 1.5-box vs the aligned
-    // rectangle; touch ⟺ overlap degenerate, overlap ⟺ positive widths and
-    // not covered, symDifference parts = 2 ⟺ strictly disjoint OR proper
-    // overlap (JTS merges pure edge/corner touches into one polygon but
-    // keeps the two lobes of an overlap separate — pinned by Round3Spec),
-    // intersectAll of the ±400 boxes = [max-400, min+400]² closed-form area.
-    "sp_predicate_lattice" -> (PtsCte +
-      """
-        |, w AS (
-        |  SELECT c_nationkey, x, y,
-        |         least(x + 1.5, 30.5) - greatest(x, 0.5) AS wx,
-        |         least(y + 1.5, 40.5) - greatest(y, -10.5) AS wy,
-        |         (x >= 0.5 AND x + 1.5 <= 30.5 AND y >= -10.5 AND y + 1.5 <= 40.5) AS covered
-        |  FROM pts
-        |)
-        |SELECT c_nationkey,
-        |  count(*) FILTER (WHERE wx >= 0 AND wy >= 0 AND (wx = 0 OR wy = 0)) AS n_touch,
-        |  count(*) FILTER (WHERE wx > 0 AND wy > 0 AND NOT covered) AS n_overlap,
-        |  count(*) FILTER (WHERE x = 9.5) AS n_cross,
-        |  count(*) FILTER (WHERE covered) AS n_cover,
-        |  count(*) FILTER (WHERE covered) AS n_covby,
-        |  count(*) FILTER (WHERE NOT (x >= 0.5 AND x <= 30.5 AND y >= -10.5 AND y <= 40.5)) AS n_disj,
-        |  count(*) FILTER (WHERE x = 10.5 AND y = 20.5) AS n_eq,
-        |  count(*) FILTER (WHERE x = 10.5 AND y = 20.5) AS n_topo,
-        |  0::BIGINT AS n_xrev,
-        |  count(*) AS n_trev,
-        |  count(*) AS n_valid,
-        |  count(*) AS n_inval,
-        |  CAST(3 * count(*) AS BIGINT) AS ip4,
-        |  count(*) AS n_tps,
-        |  CAST(sum(CASE WHEN wx < 0 OR wy < 0
-        |                  OR (wx > 0 AND wy > 0 AND NOT covered)
-        |           THEN 2 ELSE 1 END) AS BIGINT) AS symp,
-        |  round((800 - (max(x) - min(x))) * (800 - (max(y) - min(y))), 6) AS ia_area
-        |FROM w GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // Convex hull replayed in plain SQL: a directed pair (a,b) of distinct
-    // lattice points is a CCW hull edge iff every other point is strictly
-    // left of it or collinear ON the segment (robust on the lattice: all
-    // cross products are exact quarter-integer doubles). Each hull vertex
-    // has exactly one outgoing edge, so vertices = edges and the shoelace
-    // sum over edges is twice the hull area. O(n³) per nation — fine at the
-    // oracle's sf, irrelevant to the Spark plan.
-    "sp_convexhull" -> (PtsCte +
-      """
-        |, d AS (SELECT DISTINCT c_nationkey, x, y FROM pts),
-        |e AS (
-        |  SELECT a.c_nationkey, a.x AS ax, a.y AS ay, b.x AS bx, b.y AS by
-        |  FROM d a JOIN d b
-        |    ON a.c_nationkey = b.c_nationkey AND (a.x <> b.x OR a.y <> b.y)
-        |  WHERE NOT EXISTS (
-        |    SELECT 1 FROM d c
-        |    WHERE c.c_nationkey = a.c_nationkey
-        |      AND NOT (c.x = a.x AND c.y = a.y) AND NOT (c.x = b.x AND c.y = b.y)
-        |      AND NOT (
-        |        (b.x - a.x) * (c.y - a.y) - (b.y - a.y) * (c.x - a.x) > 0
-        |        OR ((b.x - a.x) * (c.y - a.y) - (b.y - a.y) * (c.x - a.x) = 0
-        |            AND c.x BETWEEN least(a.x, b.x) AND greatest(a.x, b.x)
-        |            AND c.y BETWEEN least(a.y, b.y) AND greatest(a.y, b.y))
-        |      )
-        |  )
-        |)
-        |SELECT c_nationkey,
-        |  round(abs(sum(ax * by - bx * ay)) / 2, 6) AS hull_area,
-        |  (count(*) + 1)::BIGINT AS hull_pts
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "sp_buffer_union_area" -> (PtsCte +
-      s"""
-        |SELECT round(count(DISTINCT (x, y)) * $DiscArea, 4) AS area,
-        |       count(DISTINCT (x, y))::BIGINT AS n_parts
-        |FROM pts WHERE c_nationkey = 0""".stripMargin),
-
-    "warc_robots" ->
-      """WITH d AS (SELECT doc_id // 2 AS p FROM documents),
-        |e AS (
-        |  SELECT p, (p % 5) AS h,
-        |         CASE WHEN starts_with(CAST(p AS VARCHAR),
-        |                               CAST((p % 5) + 1 AS VARCHAR))
-        |              THEN 1 ELSE 0 END AS ok
-        |  FROM d
-        |)
-        |SELECT 'www.host' || h || '.example' AS host,
-        |       sum(ok)::BIGINT AS n_allowed,
-        |       (count(*) - sum(ok))::BIGINT AS n_blocked
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "warc_ingest_stats" -> graft.sources.Warc.ingestStatsDuckSql,
-
-    "warc_url_canon" -> graft.sources.Warc.urlCanonDuckSql,
-
-    "osm_ingest_stats" -> (PtsCte +
-      """
-        |, segs AS (
-        |  SELECT c_nationkey,
-        |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
-        |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
-        |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-        |)
-        |SELECT c_nationkey, count(*)::BIGINT AS n_pts,
-        |       round(coalesce(sum(seg), 0), 6) AS len,
-        |       'way-' || c_nationkey AS name
-        |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // the PBF leg re-derives the SAME stats (the binary encode/decode must
-    // be coordinate-exact: nano-precision lattice points round-trip the
-    // granularity math bit-for-bit)
-    "pbf_ingest_stats" -> (PtsCte +
-      """
-        |, segs AS (
-        |  SELECT c_nationkey,
-        |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
-        |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
-        |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-        |)
-        |SELECT c_nationkey, count(*)::BIGINT AS n_pts,
-        |       round(coalesce(sum(seg), 0), 6) AS len,
-        |       'way-' || c_nationkey AS name
-        |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "osm_road_stats" ->
-      """WITH nk AS (SELECT DISTINCT c_nationkey AS n FROM customer),
-        |d AS (
-        |  SELECT n, CASE n % 6 WHEN 0 THEN 'BACKWARD'
-        |                       WHEN 1 THEN 'FORWARD' WHEN 2 THEN 'FORWARD'
-        |                       WHEN 3 THEN 'FORWARD' ELSE 'BOTH' END AS road_direction
-        |  FROM nk
-        |)
-        |SELECT road_direction, count(*) AS n_ways
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the stored-JSON dynamic layer admits exactly the oneway='yes' nations
-    // (nk % 6 = 2 in the fixture congruence); n_pts replays the per-nation
-    // node count the way geometry carries
-    "osm_dynamic_layer" ->
-      """SELECT CAST(1000 + c_nationkey AS BIGINT) AS way_id,
-        |       count(*)::BIGINT AS n_pts
-        |FROM customer WHERE c_nationkey % 6 = 2
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // chain replay: a way matches iff its SECOND node (custkey order
-    // within the nation) carries version 2 = 1 + ck % 3 ⇒ ck % 3 = 1
-    "osm_dynamic_node_layer" ->
-      """WITH ranked AS (
-        |  SELECT c_custkey AS ck, c_nationkey,
-        |         row_number() OVER (PARTITION BY c_nationkey
-        |                            ORDER BY c_custkey) AS rn,
-        |         count(*) OVER (PARTITION BY c_nationkey) AS n
-        |  FROM customer
-        |)
-        |SELECT CAST(1000 + c_nationkey AS BIGINT) AS way_id,
-        |       CAST(n AS BIGINT) AS n_pts
-        |FROM ranked WHERE rn = 2 AND ck % 3 = 1
-        |ORDER BY 1""".stripMargin,
-
-    "osm_changeset_stats" -> (PtsCte +
-      """
-        |SELECT c_nationkey AS changeset,
-        |       CAST(c_nationkey + 100 AS BIGINT) AS uid,
-        |       'u-' || c_nationkey AS "user",
-        |       count(*) AS n_nodes, CAST(1 AS BIGINT) AS n_ways,
-        |       min(x) AS minx, min(y) AS miny, max(x) AS maxx, max(y) AS maxy
-        |FROM pts GROUP BY c_nationkey ORDER BY changeset""".stripMargin),
-
-    "osm_relation_stats" ->
-      """SELECT n_nationkey AS nk,
-        |       5.0 * 4.0 - (1 + n_nationkey % 3) * (1 + n_nationkey % 2) AS area,
-        |       CAST(10 AS BIGINT) AS n_pts,
-        |       'rel-' || n_nationkey AS name
-        |FROM nation ORDER BY nk""".stripMargin,
-
-    "geojson_ingest_stats" -> (PtsCte +
-      """
-        |, segs AS (
-        |  SELECT c_nationkey,
-        |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
-        |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
-        |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-        |)
-        |SELECT c_nationkey::BIGINT AS nk, count(*)::BIGINT AS n_pts,
-        |       round(coalesce(sum(seg), 0), 6) AS len,
-        |       'ln-' || c_nationkey AS name
-        |FROM segs GROUP BY c_nationkey ORDER BY nk""".stripMargin),
-
-    "shp_ingest_stats" -> (PtsCte +
-      """
-        |, segs AS (
-        |  SELECT c_nationkey,
-        |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
-        |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
-        |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-        |), agg AS (
-        |  SELECT c_nationkey, count(*)::BIGINT AS n_pts,
-        |         round(coalesce(sum(seg), 0), 6) AS len
-        |  FROM segs GROUP BY 1
-        |)
-        |SELECT row_number() OVER (ORDER BY c_nationkey)::BIGINT AS rec,
-        |       n_pts, len, 'ln-' || c_nationkey AS name
-        |FROM agg ORDER BY rec""".stripMargin),
-
-    "shp_scan_v2" -> (PtsCte +
-      """
-        |, segs AS (
-        |  SELECT c_nationkey,
-        |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
-        |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
-        |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-        |), agg AS (
-        |  SELECT c_nationkey, count(*)::BIGINT AS n_pts,
-        |         round(coalesce(sum(seg), 0), 6) AS len
-        |  FROM segs GROUP BY 1
-        |)
-        |SELECT row_number() OVER (ORDER BY c_nationkey)::BIGINT AS rec,
-        |       n_pts, len, 'ln-' || c_nationkey AS name
-        |FROM agg ORDER BY rec""".stripMargin),
-
-    // ------------------------------------------- training-pipeline oracles
-    "tx_curation" -> {
-      val nToks = """len(list_filter(string_split_regex(trim(text), '\s+'), t -> t <> ''))"""
-      s"""WITH q AS (
-         |  SELECT doc_id, text, $nToks AS n_toks,
-         |    CASE WHEN length(text) > 0
-         |      THEN (length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')))::DOUBLE
-         |           / length(text)
-         |      ELSE 0 END AS punct_ratio
-         |  FROM documents
-         |), g AS (
-         |  SELECT doc_id, text, n_toks FROM q
-         |  WHERE n_toks >= 5 AND punct_ratio <= 0.1
-         |), d AS (
-         |  SELECT doc_id, text, n_toks,
-         |         row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-         |  FROM g
-         |)
-         |SELECT ${TextAnalysis.languageIdDuckSql("text")} AS lang,
-         |       count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS sum_tokens
-         |FROM d WHERE rn = 1 GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    "dd_jaccard_pairs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS ts
-        |  FROM documents
-        |), sets AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(len(ts) - 3), i ->
-        |    array_to_string(ts[i+1:i+4], ' '))) AS ss
-        |  FROM toks
-        |), sh AS (SELECT doc_id, unnest(ss) AS s FROM sets),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |), j AS (
-        |  SELECT id_a, id_b,
-        |    len(list_intersect(x.ss, y.ss))::DOUBLE
-        |      / (len(x.ss) + len(y.ss) - len(list_intersect(x.ss, y.ss))) AS jac
-        |  FROM cand JOIN sets x ON x.doc_id = id_a JOIN sets y ON y.doc_id = id_b
-        |)
-        |SELECT id_a, id_b, round(jac, 6) AS jaccard FROM j
-        |WHERE jac >= 0.2 ORDER BY id_a, id_b""".stripMargin,
-
-    // directed pairs; the oracle needs no prefix logic — the final pair set
-    // equals the plain shared-shingle plan's (recall is guaranteed)
-    "dd_containment" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS ts
-        |  FROM documents
-        |), sets AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(len(ts) - 3), i ->
-        |    array_to_string(ts[i+1:i+4], ' '))) AS ss
-        |  FROM toks
-        |), sh AS (SELECT doc_id, unnest(ss) AS s FROM sets),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id <> b.doc_id
-        |), c AS (
-        |  SELECT id_a, id_b,
-        |    len(list_intersect(x.ss, y.ss))::DOUBLE / len(x.ss) AS cont
-        |  FROM cand JOIN sets x ON x.doc_id = id_a JOIN sets y ON y.doc_id = id_b
-        |  WHERE len(x.ss) > 0
-        |)
-        |SELECT id_a, id_b, round(cont, 6) AS containment FROM c
-        |WHERE cont >= 0.9 ORDER BY id_a, id_b""".stripMargin,
-
-    "dd_ngram_pairs" ->
-      """WITH norm AS (
-        |  SELECT doc_id, regexp_replace(lower(text), '\s+', ' ', 'g') AS t FROM documents
-        |), grams AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1:i+3])) AS ss
-        |  FROM norm WHERE len(t) >= 3
-        |), inv AS (SELECT doc_id, len(ss) AS n_sh, unnest(ss) AS s FROM grams),
-        |dfreq AS (SELECT s, count(*) AS df FROM inv GROUP BY s),
-        |ordered AS (
-        |  SELECT doc_id, n_sh, i.s,
-        |         row_number() OVER (PARTITION BY doc_id ORDER BY df, i.s) AS rn
-        |  FROM inv i JOIN dfreq USING (s)
-        |), prefix AS (
-        |  SELECT doc_id, n_sh, rn, s FROM ordered WHERE rn <= n_sh - ceil(0.9 * n_sh) + 1
-        |), cand AS (
-        |  -- PPJoin length + positional filters (both sound for J >= t)
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM prefix a JOIN prefix b ON a.s = b.s AND a.doc_id < b.doc_id
-        |   AND least(a.n_sh, b.n_sh) >= ceil(0.9 * greatest(a.n_sh, b.n_sh))
-        |   AND 1 + least(a.n_sh - a.rn, b.n_sh - b.rn)
-        |       >= ceil(0.9 / 1.9 * (a.n_sh + b.n_sh) - 1e-9)
-        |), j AS (
-        |  SELECT id_a, id_b,
-        |    len(list_intersect(x.ss, y.ss))::DOUBLE
-        |      / (len(x.ss) + len(y.ss) - len(list_intersect(x.ss, y.ss))) AS jac
-        |  FROM cand JOIN grams x ON x.doc_id = id_a JOIN grams y ON y.doc_id = id_b
-        |)
-        |SELECT id_a, id_b, round(jac, 6) AS jaccard FROM j
-        |WHERE jac >= 0.9 ORDER BY id_a, id_b""".stripMargin,
-
-    "dd_embed_neardup" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |       round(list_cosine_similarity(a.v, b.v), 6) AS cosine
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.v, b.v) >= 0.42
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // range-search replay: same seeded SRP planes, same multi-probe set
-    // (bucket XOR all masks of Hamming weight ≤ 2), same exact-cosine τ
-    "sim_range" -> {
-      val sig = Similarity.srpBucketDuckSql("v", dim = 64, bits = 8)
-      val flips = Similarity.probeMasks(bits = 8, probeHamming = 2).mkString(", ")
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |b AS (SELECT vec_id, v, $sig AS bucket FROM e),
-         |q AS (SELECT vec_id AS qid, v AS qv, bucket AS qb FROM b
-         |      WHERE vec_id % 100 = 0),
-         |probes AS (
-         |  SELECT q.qid, q.qv, xor(q.qb, f.f) AS probe
-         |  FROM q CROSS JOIN (SELECT unnest([$flips]) AS f) f
-         |)
-         |SELECT DISTINCT p.qid, c.vec_id AS id,
-         |       round(list_cosine_similarity(p.qv, c.v), 6) AS cosine
-         |FROM probes p JOIN b c ON c.bucket = p.probe
-         |WHERE c.vec_id <> p.qid
-         |  AND list_cosine_similarity(p.qv, c.v) >= 0.3
-         |ORDER BY qid, id""".stripMargin
-    },
-
-    // same quantizer CTEs as sim_ivf_topk, pair join within cluster
-    "dd_semantic" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |sims AS (
-        |  SELECT e.vec_id AS id, e.v, c.cid, list_cosine_similarity(e.v, c.cv) AS s
-        |  FROM e CROSS JOIN c
-        |), assign AS (
-        |  SELECT id, v, cid FROM (
-        |    SELECT id, v, cid, row_number() OVER (PARTITION BY id ORDER BY s DESC, cid) AS rn
-        |    FROM sims) WHERE rn = 1
-        |)
-        |SELECT a.cid, a.id AS id_a, b.id AS id_b,
-        |       round(list_cosine_similarity(a.v, b.v), 6) AS cosine
-        |FROM assign a JOIN assign b ON a.cid = b.cid AND a.id < b.id
-        |WHERE list_cosine_similarity(a.v, b.v) >= 0.42
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // SRP multi-probe replayed: plane matrix as literals, explicit
-    // left-to-right dot sums (bit-identical signs), probe set = buckets
-    // within Hamming 1 of the query's bucket
-    "sim_srp_topk" -> {
-      val bucket = graft.pipeline.Similarity.srpBucketDuckSql("v", dim = 64, bits = 12)
-      val qbucket = graft.pipeline.Similarity.srpBucketDuckSql("qv", dim = 64, bits = 12)
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-         |qs AS (SELECT $qbucket AS qb FROM q),
-         |sigs AS (SELECT vec_id, v, $bucket AS bucket FROM e)
-         |SELECT s.vec_id AS id, round(list_cosine_similarity(s.v, q.qv), 6) AS cosine
-         |FROM sigs s, q, qs
-         |WHERE bit_count(xor(s.bucket, qs.qb)) <= 1
-         |ORDER BY cosine DESC, id LIMIT 20""".stripMargin
-    },
-
-    // k-means IVF replayed: 3 Lloyd iterations in chained CTEs — assignment
-    // by argmax cosine (ties -> lowest cid, same as the Scala loop),
-    // centroids as element-wise per-cluster means (dims unrolled via a
-    // range cross join), empty clusters keep the previous centroid.
-    // fp summation-order noise (~1e-16) cannot flip an argmax at real
-    // decision margins, so the discrete assignments agree with Spark's.
-    // BQ replay: the 64-term sign-bit CASE sum is generated by the same
-    // Scala code that builds the Spark Column, so the signatures agree
-    // bit-for-bit; shortlist sort (hamming, id) and final sort (rounded
-    // cosine desc, id) are both tie-stable
-    "sim_bq_topk" -> {
-      val sig = graft.pipeline.Similarity.bqSigDuckSql("s.v", dim = 64)
-      val qsig = graft.pipeline.Similarity.bqSigDuckSql("qv", dim = 64)
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-         |qs AS (SELECT $qsig AS qb FROM q),
-         |sigs AS (SELECT s.vec_id, s.v, $sig AS sig FROM e s),
-         |short AS (
-         |  SELECT s.vec_id AS id, s.v,
-         |         CAST(bit_count(xor(s.sig, qs.qb)) AS INT) AS hamming
-         |  FROM sigs s, qs ORDER BY hamming, id LIMIT 60)
-         |SELECT sh.id, sh.hamming,
-         |       round(list_cosine_similarity(sh.v, q.qv), 6) AS cosine
-         |FROM short sh, q ORDER BY cosine DESC, id LIMIT 15""".stripMargin
-    },
-
-    "sim_hard_negatives" -> Similarity.hardNegativesDuckSql(nAnchors = 20),
-    "sim_rq" -> Similarity.rqDuckSql(k = 15),
-
-    "sim_mmr" -> Similarity.mmrDuckSql(
-      embSql = "SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings",
-      qSql = "SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0",
-      k = 10, lambda = 0.7, shortlist = 40),
-
-    "sim_ivf_kmeans" -> {
-      def assign(cents: String, out: String) =
-        s"""$out AS (
-           |  SELECT vec_id, v, cid FROM (
-           |    SELECT e.vec_id, e.v, c.cid,
-           |           row_number() OVER (PARTITION BY e.vec_id
-           |             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-           |    FROM e CROSS JOIN $cents c) WHERE rn = 1
-           |)""".stripMargin
-      def recenter(assigned: String, prev: String, out: String) =
-        s"""$out AS (
-           |  SELECT p.cid, coalesce(m.cv, p.cv) AS cv
-           |  FROM $prev p LEFT JOIN (
-           |    SELECT cid, list(mv ORDER BY dim) AS cv FROM (
-           |      SELECT a.cid, t.dim, avg(a.v[t.dim]) AS mv
-           |      FROM $assigned a CROSS JOIN range(1, 65) t(dim)
-           |      GROUP BY a.cid, t.dim) GROUP BY cid
-           |  ) m ON m.cid = p.cid
-           |)""".stripMargin
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-         |${assign("c0", "a1")}, ${recenter("a1", "c0", "c1")},
-         |${assign("c1", "a2")}, ${recenter("a2", "c1", "c2")},
-         |${assign("c2", "a3")}, ${recenter("a3", "c2", "c3")},
-         |${assign("c3", "af")},
-         |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-         |probes AS (
-         |  SELECT cid FROM (
-         |    SELECT c.cid, row_number() OVER (
-         |      ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid) AS rn
-         |    FROM c3 c CROSS JOIN q) WHERE rn <= 2
-         |)
-         |SELECT a.vec_id AS id, round(list_cosine_similarity(a.v, q.qv), 6) AS cosine
-         |FROM af a JOIN probes p ON a.cid = p.cid CROSS JOIN q
-         |ORDER BY cosine DESC, id LIMIT 20""".stripMargin
-    },
-
-    "sim_ivf_topk" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |sims AS (
-        |  SELECT e.vec_id AS id, e.v, c.cid, list_cosine_similarity(e.v, c.cv) AS s
-        |  FROM e CROSS JOIN c
-        |), assign AS (
-        |  SELECT id, v, cid FROM (
-        |    SELECT id, v, cid, row_number() OVER (PARTITION BY id ORDER BY s DESC, cid) AS rn
-        |    FROM sims) WHERE rn = 1
-        |), probes AS (
-        |  SELECT cid FROM (
-        |    SELECT c.cid, row_number() OVER (ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid) AS rn
-        |    FROM c CROSS JOIN q) WHERE rn <= 2
-        |)
-        |SELECT a.id, round(list_cosine_similarity(a.v, q.qv), 6) AS cosine
-        |FROM assign a JOIN probes p ON a.cid = p.cid CROSS JOIN q
-        |ORDER BY cosine DESC, id LIMIT 20""".stripMargin,
-
-    // filtered-ANN replay: same assignment + probe ranking as sim_ivf_topk,
-    // plus the label pre-filter and the deterministic nprobe escalation
-    // (smallest width in {2,4,8,16} whose probed prefix holds >= 20
-    // filtered candidates, else all 16 lists)
-    "sim_filtered_topk" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |assign AS (
-        |  SELECT id, v, label, cid FROM (
-        |    SELECT e.vec_id AS id, e.v, e.label, c.cid,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-        |    FROM e CROSS JOIN c) WHERE rn = 1
-        |), prank AS (
-        |  SELECT cid, row_number() OVER (ORDER BY s DESC, cid) - 1 AS pr
-        |  FROM (SELECT c.cid, list_cosine_similarity(q.qv, c.cv) AS s
-        |        FROM c CROSS JOIN q)
-        |), cand AS (
-        |  SELECT a.id, a.v, p.pr FROM assign a JOIN prank p ON a.cid = p.cid
-        |  WHERE a.label = 3
-        |), width AS (
-        |  SELECT coalesce(min(step), 16) AS w
-        |  FROM (VALUES (2), (4), (8), (16)) s(step)
-        |  WHERE (SELECT count(*) FROM cand WHERE pr < s.step) >= 20
-        |)
-        |SELECT cand.id, round(list_cosine_similarity(cand.v, q.qv), 6) AS cosine
-        |FROM cand CROSS JOIN q WHERE cand.pr < (SELECT w FROM width)
-        |ORDER BY cosine DESC, id LIMIT 20""".stripMargin,
-
-    // full PQ replay: codebook = subvectors of vec_id < 16, encode = argmin
-    // of the 9-rounded subspace L2², ADC = sum of LUT lookups — the rounding
-    // before argmin/sum is what makes the float path engine-reproducible
-    "sim_pq_adc" ->
-      """WITH cb AS (
-        |  SELECT ms.mi, e.vec_id AS j,
-        |         list_transform(range(8), i -> e.embedding[ms.mi*8 + i + 1]::DOUBLE) AS c
-        |  FROM (SELECT unnest(range(8)) AS mi) ms CROSS JOIN embeddings e
-        |  WHERE e.vec_id < 16
-        |), enc AS (
-        |  SELECT e.vec_id AS id, cb.mi, cb.j,
-        |         round(list_sum(list_transform(range(8),
-        |           i -> (e.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1])
-        |              * (e.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1]))), 9) AS d2
-        |  FROM embeddings e CROSS JOIN cb
-        |), codes AS (
-        |  SELECT id, mi, j AS code FROM (
-        |    SELECT id, mi, j, row_number() OVER (PARTITION BY id, mi ORDER BY d2, j) AS rn
-        |    FROM enc) WHERE rn = 1
-        |), lut AS (
-        |  SELECT cb.mi, cb.j,
-        |         round(list_sum(list_transform(range(8),
-        |           i -> (q.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1])
-        |              * (q.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1]))), 9) AS qd2
-        |  FROM cb CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-        |)
-        |SELECT c.id, round(sum(l.qd2), 6) AS adc
-        |FROM codes c JOIN lut l ON l.mi = c.mi AND l.j = c.code
-        |GROUP BY c.id
-        |ORDER BY adc, id LIMIT 20""".stripMargin,
-
-    "sim_ivf_store" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |boot AS (SELECT vec_id, v FROM e WHERE vec_id % 10 <> 0),
-        |c AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
-        |  FROM boot ORDER BY vec_id LIMIT 16
-        |), q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |probes AS (
-        |  SELECT cid FROM (
-        |    SELECT c.cid,
-        |           row_number() OVER (
-        |             ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid) AS rn
-        |    FROM c CROSS JOIN q) WHERE rn <= 2
-        |), assigned AS (
-        |  -- EVERY vector (bootstrap + appended) quantized with the FROZEN
-        |  -- bootstrap codebook, exactly like appendIvfIndex
-        |  SELECT id, v, cid FROM (
-        |    SELECT e.vec_id AS id, e.v, c.cid,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-        |    FROM e CROSS JOIN c) WHERE rn = 1
-        |)
-        |SELECT a.id, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
-        |FROM assigned a JOIN probes p ON p.cid = a.cid CROSS JOIN q
-        |ORDER BY cosine DESC, id LIMIT 20""".stripMargin,
-
-    // delete lifecycle: the sim_ivf_store replay minus the tombstoned ids,
-    // emitted once per phase (tombstone-masked probe ≡ post-compaction probe)
-    "sim_ivf_delete" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |boot AS (SELECT vec_id, v FROM e WHERE vec_id % 10 <> 0),
-        |c AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
-        |  FROM boot ORDER BY vec_id LIMIT 16
-        |), q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |probes AS (
-        |  SELECT cid FROM (
-        |    SELECT c.cid,
-        |           row_number() OVER (
-        |             ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid) AS rn
-        |    FROM c CROSS JOIN q) WHERE rn <= 2
-        |), assigned AS (
-        |  SELECT id, v, cid FROM (
-        |    SELECT e.vec_id AS id, e.v, c.cid,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-        |    FROM e CROSS JOIN c) WHERE rn = 1
-        |), hits AS (
-        |  SELECT a.id, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
-        |  FROM assigned a JOIN probes p ON p.cid = a.cid CROSS JOIN q
-        |  WHERE a.id % 7 <> 0
-        |  ORDER BY cosine DESC, id LIMIT 20
-        |)
-        |SELECT id, cosine, 'compacted' AS phase FROM hits
-        |UNION ALL
-        |SELECT id, cosine, 'tombstone' AS phase FROM hits
-        |ORDER BY phase, cosine DESC, id""".stripMargin,
-
-    "sim_ivf_pq" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |cl AS (SELECT vec_id AS clid, v AS clv FROM e WHERE vec_id < 16),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |assigned AS (
-        |  SELECT id, clid FROM (
-        |    SELECT e.vec_id AS id, cl.clid,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_cosine_similarity(e.v, cl.clv) DESC, cl.clid) AS rn
-        |    FROM e CROSS JOIN cl) WHERE rn = 1
-        |), pr AS (
-        |  SELECT clid FROM (
-        |    SELECT cl.clid,
-        |           row_number() OVER (
-        |             ORDER BY list_cosine_similarity(q.qv, cl.clv) DESC, cl.clid) AS rn
-        |    FROM cl CROSS JOIN q) WHERE rn <= 2
-        |), cand AS (
-        |  SELECT a.id FROM assigned a JOIN pr ON pr.clid = a.clid
-        |), cb AS (
-        |  SELECT ms.mi, e2.vec_id AS j,
-        |         list_transform(range(8), i -> e2.embedding[ms.mi*8 + i + 1]::DOUBLE) AS c
-        |  FROM (SELECT unnest(range(8)) AS mi) ms CROSS JOIN embeddings e2
-        |  WHERE e2.vec_id < 16
-        |), enc AS (
-        |  SELECT e3.vec_id AS id, cb.mi, cb.j,
-        |         round(list_sum(list_transform(range(8),
-        |           i -> (e3.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1])
-        |              * (e3.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1]))), 9) AS d2
-        |  FROM embeddings e3 JOIN cand ON cand.id = e3.vec_id CROSS JOIN cb
-        |), codes AS (
-        |  SELECT id, mi, j AS code FROM (
-        |    SELECT id, mi, j, row_number() OVER (PARTITION BY id, mi ORDER BY d2, j) AS rn
-        |    FROM enc) WHERE rn = 1
-        |), lut AS (
-        |  SELECT cb.mi, cb.j,
-        |         round(list_sum(list_transform(range(8),
-        |           i -> (qe.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1])
-        |              * (qe.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1]))), 9) AS qd2
-        |  FROM cb CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) qe
-        |), shortlist AS (
-        |  SELECT c.id, round(sum(l.qd2), 6) AS adc
-        |  FROM codes c JOIN lut l ON l.mi = c.mi AND l.j = c.code
-        |  GROUP BY c.id
-        |  ORDER BY adc, id LIMIT 60
-        |)
-        |SELECT s.id, s.adc,
-        |       round(list_sum(list_transform(range(64),
-        |         i -> (ev.v[i+1] - q.qv[i+1]) * (ev.v[i+1] - q.qv[i+1]))), 6) AS d2
-        |FROM shortlist s JOIN e ev ON ev.vec_id = s.id CROSS JOIN q
-        |ORDER BY d2, id LIMIT 20""".stripMargin,
-
-    // ---------------------------------------------- corpus governance ops
-    "tx_decontam" ->
-      Corpus.decontaminateDuckSql("doc_id % 97 <> 0", "doc_id % 97 = 0", k = 3),
-
-    "tx_decontam_bloom" ->
-      Corpus.bloomDecontaminateDuckSql("doc_id % 97 <> 0", "doc_id % 97 = 0", k = 3),
-
-    "tx_chunks" -> Corpus.chunkDocsDuckSql(chunkSize = 64, stride = 48),
-
-    "tx_entropy" ->
-      s"""SELECT doc_id AS id,
-         |${TextAnalysis.entropySignalsDuckSql("text")}
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "ev_anomaly" -> Events.anomaliesDuckSql(z = 2.0),
-
-    "ev_dedup_window" -> Events.dedupWindowDuckSql(6L * 3600 * 1000000000L),
-
-    "tx_badwords" -> Corpus.bannedTermScanDuckSql(Seq("hash", "scan", "batch")),
-
-    "tx_repetition" -> Corpus.repetitionDuckSql,
-
-    "tx_bm25" -> Corpus.bm25DuckSql(Seq("spark", "hash", "window"), topK = 20),
-
-    "tx_pii" -> Corpus.piiDuckSql(
-      """(text || CASE
-        |  WHEN doc_id % 4 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@mail.example.com now'
-        |  WHEN doc_id % 4 = 1 THEN ' server 10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.' || CAST(doc_id % 100 AS VARCHAR) || ' up'
-        |  WHEN doc_id % 4 = 2 THEN ' call +1-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-        |  ELSE '' END)""".stripMargin.replace("\n", " ")),
-
-    "tx_sample" ->
-      s"""SELECT doc_id, lang, source FROM documents
-         |WHERE ${Corpus.stratifiedSampleDuckSql("doc_id", "lang", SampleRates, 1.0, "s42:")}
-         |ORDER BY doc_id""".stripMargin,
-
-    "tx_inverted" -> Corpus.invertedIndexDuckSql(),
-
-    // same chunking (8-word lines, 1-based clamped slices), same injected
-    // boilerplate, min packed (doc_id·2²⁰ + pos) keeper, reassembly in pos
-    // order — byte-identical to Corpus.lineDedup + reassemble
-    "tx_line_dedup" ->
-      s"""WITH words AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         |ch AS (SELECT doc_id, ws, unnest(range((len(ws) + 7) // 8)) AS cpos FROM words),
-         |chunks AS (
-         |  SELECT doc_id, cpos,
-         |         array_to_string(ws[cpos*8+1 : cpos*8+8], ' ') AS line
-         |  FROM ch
-         |), lines AS (
-         |  SELECT doc_id,
-         |         CASE WHEN doc_id % 4 = 1 THEN cpos + 1 ELSE cpos END AS pos, line
-         |  FROM chunks
-         |  UNION ALL
-         |  SELECT doc_id, 0 AS pos, '$LineDedupHeader' FROM documents WHERE doc_id % 4 = 1
-         |  UNION ALL
-         |  SELECT w.doc_id,
-         |         (CASE WHEN w.doc_id % 4 = 1 THEN 1 ELSE 0 END) + (len(w.ws) + 7) // 8,
-         |         '$LineDedupFooter'
-         |  FROM words w WHERE w.doc_id % 7 = 2
-         |), k AS (
-         |  SELECT line, min(doc_id * 1048576 + pos) AS keep FROM lines GROUP BY 1
-         |), surv AS (
-         |  SELECT l.doc_id, l.pos, l.line FROM lines l
-         |  JOIN k ON l.line = k.line AND l.doc_id * 1048576 + l.pos = k.keep
-         |), nl AS (SELECT doc_id, count(*) AS n_lines FROM lines GROUP BY 1)
-         |SELECT s.doc_id, nl.n_lines, count(*) AS n_kept,
-         |       string_agg(s.line, ' ' ORDER BY s.pos) AS text_clean
-         |FROM surv s JOIN nl ON s.doc_id = nl.doc_id
-         |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-
-    "tx_dsir" -> Corpus.dsirDuckSql("doc_id % 11 = 0", buckets = 512, topK = 100),
-
-    "tx_span_rm" -> Corpus.spanDedupDuckSql(BoilerplateSqlExpr, k = 5),
-
-    "dd_cross_pairs" ->
-      Dedup.minhashBipartiteDuckSql(threshold = 0.2, shingleK = 3,
-        newPred = "% 2 = 0", refPred = "% 2 = 1"),
-
-    "tx_pack" -> Packing.packDuckSql(capacity = 512L, numShards = 8),
-    "tx_weighted_sample" -> Packing.weightedSampleDuckSql(k = 100, salt = "wrs1:"),
-    "tx_stratified_sample" ->
-      Packing.stratifiedSampleDuckSql(perStratum = 50, salt = "wrs2:"),
-
-    "tx_shard" -> Packing.shardAssignDuckSql(numShards = 16, salt = "shard1:"),
-
-    "ev_markov" -> Events.transitionsDuckSql,
-
-    "ev_hist_quantiles" -> Events.histQuantilesDuckSql(),
-
-    "ev_daily_mv" ->
-      """SELECT epoch_ns(ts) // 86400000000000 AS day, event_type,
-        |       count(*) AS n,
-        |       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-        |       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "ev_hll_rollup" ->
-      s"""WITH hashed AS (
-         |  SELECT event_type AS g, ${Dedup.fnv64DuckSql("CAST(user_id AS VARCHAR)")} AS h
-         |  FROM events
-         |), ${Events.hllDuckSql},
-         |days AS (
-         |  SELECT event_type AS g,
-         |         count(DISTINCT epoch_ns(ts) // 86400000000000) AS n_days
-         |  FROM events GROUP BY 1
-         |)
-         |SELECT g AS event_type, CAST(v_zero AS BIGINT) AS v_zero, est,
-         |       CAST(n_days AS BIGINT) AS n_days
-         |FROM hll_est JOIN days USING (g) ORDER BY 1""".stripMargin,
-
-    "ev_salted_join" -> Events.saltedUserMaxHitsDuckSql,
-
-    "q4_colocated_join" -> graft.plans.Bucketing.colocatedPriorityVolumeDuckSql,
-
-    "q7_consistent_sample" -> {
-      import graft.pipeline.Profiling.consistentSampleKeepDuckSql
-      s"""WITH so AS (
-         |  SELECT o_orderkey FROM orders
-         |  WHERE ${consistentSampleKeepDuckSql("o_orderkey", "cs1:", 200000)}
-         |), sl AS (
-         |  SELECT l_orderkey FROM lineitem
-         |  WHERE ${consistentSampleKeepDuckSql("l_orderkey", "cs1:", 200000)}
-         |)
-         |SELECT (SELECT count(*) FROM so) AS n_orders,
-         |       (SELECT count(*) FROM sl) AS n_lineitems,
-         |       (SELECT count(*) FROM sl
-         |        WHERE l_orderkey NOT IN (SELECT o_orderkey FROM so)) AS n_orphan""".stripMargin
-    },
-
-    "q6_profile" -> graft.pipeline.Profiling.columnProfileDuckSql("lineitem",
-      Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")),
-
-    "sp_sql_join" -> (PtsCte +
-      """
-        |, nb AS (
-        |  SELECT n_nationkey,
-        |         n_nationkey * 3 - 39.5 AS x0, n_nationkey * 3 - 34.5 AS x1,
-        |         n_nationkey * 2 - 29.5 AS y0, n_nationkey * 2 - 25.5 AS y1
-        |  FROM nation
-        |)
-        |SELECT ck AS id, n_nationkey AS nk
-        |FROM pts, nb
-        |WHERE x BETWEEN x0 AND x1 AND y BETWEEN y0 AND y1
-        |ORDER BY 1, 2""".stripMargin),
-
-    "sp_sql_left_join" -> (PtsCte +
-      """
-        |, nb AS (
-        |  SELECT n_nationkey,
-        |         n_nationkey * 3 - 39.5 AS x0, n_nationkey * 3 - 34.5 AS x1,
-        |         n_nationkey * 2 - 29.5 AS y0, n_nationkey * 2 - 25.5 AS y1
-        |  FROM nation
-        |)
-        |SELECT ck AS id, coalesce(n_nationkey, -1) AS nk
-        |FROM pts LEFT JOIN nb
-        |ON x BETWEEN x0 AND x1 AND y BETWEEN y0 AND y1
-        |ORDER BY 1, 2""".stripMargin),
-
-    "sp_sql_full_join" -> (PtsCte +
-      """
-        |, p3 AS (SELECT * FROM pts WHERE ck % 3 = 0)
-        |, nb AS (
-        |  SELECT n_nationkey,
-        |         n_nationkey * 3 - 39.5 AS x0, n_nationkey * 3 - 34.5 AS x1,
-        |         n_nationkey * 2 - 29.5 AS y0, n_nationkey * 2 - 25.5 AS y1
-        |  FROM nation
-        |  UNION ALL
-        |  SELECT n_nationkey + 100,
-        |         n_nationkey * 2 - 50, n_nationkey * 2 - 48,
-        |         85, 89
-        |  FROM nation
-        |)
-        |SELECT coalesce(ck, -1) AS id, coalesce(n_nationkey, -1) AS nk
-        |FROM p3 FULL JOIN nb
-        |ON x BETWEEN x0 AND x1 AND y BETWEEN y0 AND y1
-        |ORDER BY 1, 2""".stripMargin),
-
-    "sp_sql_anti_join" -> (PtsCte +
-      """
-        |, nb AS (
-        |  SELECT n_nationkey,
-        |         n_nationkey * 3 - 39.5 AS x0, n_nationkey * 3 - 34.5 AS x1,
-        |         n_nationkey * 2 - 29.5 AS y0, n_nationkey * 2 - 25.5 AS y1
-        |  FROM nation
-        |)
-        |SELECT ck AS id,
-        |       CASE WHEN EXISTS (SELECT 1 FROM nb
-        |                         WHERE x BETWEEN x0 AND x1 AND y BETWEEN y0 AND y1)
-        |            THEN 1 ELSE 0 END AS covered
-        |FROM pts
-        |ORDER BY 1""".stripMargin),
-
-    // point-to-rectangle distance is closed-form: per-axis overshoot
-    // (0 inside the box), then the hypotenuse against the radius
-    "sp_sql_dwithin" -> (PtsCte +
-      """
-        |, nb AS (
-        |  SELECT n_nationkey,
-        |         n_nationkey * 3 - 39.5 AS x0, n_nationkey * 3 - 34.5 AS x1,
-        |         n_nationkey * 2 - 29.5 AS y0, n_nationkey * 2 - 25.5 AS y1
-        |  FROM nation
-        |), d AS (
-        |  SELECT ck, n_nationkey,
-        |         greatest(x0 - x, x - x1, 0) AS dx,
-        |         greatest(y0 - y, y - y1, 0) AS dy
-        |  FROM pts, nb
-        |)
-        |SELECT ck AS id, n_nationkey AS nk
-        |FROM d WHERE dx * dx + dy * dy <= 5.75 * 5.75
-        |ORDER BY 1, 2""".stripMargin),
-
-    "sp_zonal_stats" ->
-      """WITH nb AS (
-        |  SELECT n_nationkey AS id,
-        |         n_nationkey * 3 - 39.5 AS x0, n_nationkey * 3 - 34.5 AS x1,
-        |         n_nationkey * 2 - 29.5 AS y0, n_nationkey * 2 - 25.5 AS y1
-        |  FROM nation
-        |), cx AS (
-        |  SELECT id, x0, x1, y0, y1,
-        |         unnest(range(CAST(floor((x0 + 180) / 3) AS BIGINT),
-        |                      CAST(floor((x1 + 180) / 3) AS BIGINT) + 1)) AS cell_x
-        |  FROM nb
-        |), cells AS (
-        |  SELECT id, x0, x1, y0, y1, cell_x,
-        |         unnest(range(CAST(floor((y0 + 90) / 3) AS BIGINT),
-        |                      CAST(floor((y1 + 90) / 3) AS BIGINT) + 1)) AS cell_y
-        |  FROM cx
-        |), clipped AS (
-        |  SELECT cell_x, cell_y,
-        |         (least(x1, -180 + 3 * (cell_x + 1)) - greatest(x0, -180 + 3 * cell_x))
-        |       * (least(y1, -90 + 3 * (cell_y + 1)) - greatest(y0, -90 + 3 * cell_y)) AS area
-        |  FROM cells
-        |)
-        |SELECT cell_x, cell_y, count(*) AS n_polys, sum(area) AS area
-        |FROM clipped WHERE area > 0
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q5_zorder_scan" ->
-      """WITH mm AS (
-        |  SELECT min(l_orderkey) AS ok0, max(l_orderkey) AS ok1,
-        |         min(l_suppkey) AS sk0, max(l_suppkey) AS sk1
-        |  FROM lineitem
-        |)
-        |SELECT count(*) AS n, sum(l_quantity) AS sum_qty,
-        |       min(l_orderkey) AS min_ok, max(l_orderkey) AS max_ok
-        |FROM lineitem, mm
-        |WHERE l_orderkey BETWEEN ok0 + (ok1 - ok0) // 10 AND ok0 + (ok1 - ok0) // 5
-        |  AND l_suppkey BETWEEN sk0 + (sk1 - sk0) // 4 AND sk0 + (sk1 - sk0) // 2""".stripMargin,
-
-    "tx_mix" -> Packing.mixDuckSql(MixWeights, tokenBudget = 8000L,
-      salt = "mix1:"),
-
-    "tx_domain_cap" -> Packing.domainCapDuckSql(maxPerDomain = 15),
-
-    "tx_pack_bins" -> Packing.packBinsDuckSql(capacity = 256L, numShards = 8),
-
-    "dd_neardup_groups" -> Groups.nearDupGroupsDuckSql(threshold = 0.2),
-    "dd_canonical" -> Groups.canonicalDocsDuckSql("d.n_chars", threshold = 0.2),
-    "dd_split_leakage" -> Groups.leakageSafeSplitDuckSql(threshold = 0.2),
-    "tx_snapshot_diff" ->
-      """WITH cur AS (SELECT doc_id, md5(text) AS h FROM documents),
-        |prev AS (
-        |  SELECT doc_id,
-        |         md5(CASE WHEN doc_id % 5 = 0 THEN text || ' v2'
-        |                  ELSE text END) AS h
-        |  FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 10000000, md5(text) FROM documents
-        |  WHERE doc_id % 11 = 0
-        |)
-        |SELECT status, count(*) AS n FROM (
-        |  SELECT CASE WHEN p.doc_id IS NULL THEN 'added'
-        |              WHEN c.doc_id IS NULL THEN 'removed'
-        |              WHEN c.h <> p.h THEN 'changed'
-        |              ELSE 'unchanged' END AS status
-        |  FROM cur c FULL OUTER JOIN prev p ON c.doc_id = p.doc_id
-        |) GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "dd_cluster_hist" -> Groups.clusterHistDuckSql(threshold = 0.2),
-
-    "tx_cdc_savings" -> Corpus.cdcSavingsDuckSql(),
-
-    "dd_substring_pairs" -> Dedup.sharedSubstringDuckSql(BoilerplateSqlExpr, minLen = 32),
-
-    "dd_substring_winnow" -> Dedup.sharedSubstringDuckSql(BoilerplateSqlExpr, minLen = 32),
-
-    "tx_bpe_merges" -> Bpe.bpeMergesDuckSql(numMerges = 6),
-
-    "tx_bpe_encode" -> Bpe.bpeTokenCountsDuckSql(numMerges = 6),
-
-    "tx_wordpiece" -> Corpus.wordpieceDuckSql(topK = 25),
-
-    "tx_lm_score" ->
-      LanguageModel.bigramScoreDuckSql("doc_id % 5 <> 0", "doc_id % 5 = 0"),
-
-    "tx_kn_score" ->
-      LanguageModel.knBigramScoreDuckSql("doc_id % 5 <> 0", "doc_id % 5 = 0"),
-
-    "tx_ppl_bucket" -> s"""
-      |SELECT bucket, count(*) AS docs,
-      |       CAST(sum(n_bigrams) AS BIGINT) AS bigrams,
-      |       min(avg_nll) AS min_nll, max(avg_nll) AS max_nll
-      |FROM (
-      |  SELECT CAST(ntile(10) OVER (ORDER BY avg_nll, id) AS BIGINT) AS bucket,
-      |         n_bigrams, avg_nll
-      |  FROM (${LanguageModel.bigramScoreDuckSql("doc_id % 5 <> 0", "TRUE")}) s
-      |) b
-      |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "tx_classify" ->
-      Classify.naiveBayesDuckSql("id % 5 <> 0", "id % 5 = 0"),
-
-    "tx_tfidf" -> Corpus.tfidfDuckSql(topPerDoc = 3),
-    "tx_distinct_n" -> Corpus.distinctNDuckSql,
-    "tx_zipf" -> Corpus.zipfDuckSql(topN = 500),
-    "tx_kl" -> Corpus.divergenceDuckSql("lang"),
-
-    "tx_colloc" -> Corpus.collocationsDuckSql(minCount = 5, topK = 20),
-
-    "sp_grid_heat" -> (PtsCte +
-      """
-        |SELECT CAST(floor((x + 180.0) / 15.0) AS BIGINT) AS cell_x,
-        |       CAST(floor((y + 90.0) / 15.0) AS BIGINT) AS cell_y,
-        |       count(*) AS n_points,
-        |       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_val
-        |FROM pts GROUP BY 1, 2
-        |ORDER BY n_points DESC, cell_x, cell_y LIMIT 20""".stripMargin),
-
-    "mm_scenes" -> MmScenesSql,
-
-    "tx_cdc" -> Corpus.cdcChunkStatsDuckSql(k = 8, divisor = 64, topK = 20),
-
-    "tx_quality_gate" -> Corpus.lengthPercentileGateDuckSql(minPct = 0.2),
-
-    // same assignment/probe/re-rank replay as sim_ivf_topk, generalized to
-    // the query SET with per-query windows
-    "sim_knn_join" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |sims AS (
-        |  SELECT e.vec_id AS id, e.v, c.cid, list_cosine_similarity(e.v, c.cv) AS s
-        |  FROM e CROSS JOIN c
-        |), assign AS (
-        |  SELECT id, v, cid FROM (
-        |    SELECT id, v, cid, row_number() OVER (PARTITION BY id ORDER BY s DESC, cid) AS rn
-        |    FROM sims) WHERE rn = 1
-        |), q AS (
-        |  SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id % 25 = 0
-        |), probes AS (
-        |  SELECT qid, cid FROM (
-        |    SELECT q.qid, c.cid,
-        |           row_number() OVER (PARTITION BY q.qid
-        |             ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid) AS rn
-        |    FROM q CROSS JOIN c) WHERE rn <= 2
-        |), cand AS (
-        |  SELECT q.qid, a.id AS nid, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
-        |  FROM q JOIN probes p ON q.qid = p.qid JOIN assign a ON a.cid = p.cid
-        |  WHERE a.id <> q.qid
-        |), ranked AS (
-        |  SELECT qid, nid, cosine,
-        |         CAST(row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS BIGINT) AS rank
-        |  FROM cand
-        |)
-        |SELECT qid, rank, nid, cosine FROM ranked WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin,
-
-    "sim_knn_hier" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |par AS (SELECT cid AS pid, cv AS pv FROM c WHERE cid < 4),
-        |grp AS (
-        |  SELECT cid, cv, pid FROM (
-        |    SELECT c.cid, c.cv, par.pid,
-        |           row_number() OVER (PARTITION BY c.cid
-        |             ORDER BY list_cosine_similarity(c.cv, par.pv) DESC, par.pid) AS rn
-        |    FROM c CROSS JOIN par) WHERE rn = 1
-        |), vp AS (
-        |  SELECT id, v, pid FROM (
-        |    SELECT e.vec_id AS id, e.v, par.pid,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_cosine_similarity(e.v, par.pv) DESC, par.pid) AS rn
-        |    FROM e CROSS JOIN par) WHERE rn = 1
-        |), assign AS (
-        |  SELECT id, v, cid FROM (
-        |    SELECT vp.id, vp.v, g.cid,
-        |           row_number() OVER (PARTITION BY vp.id
-        |             ORDER BY list_cosine_similarity(vp.v, g.cv) DESC, g.cid) AS rn
-        |    FROM vp JOIN grp g ON g.pid = vp.pid) WHERE rn = 1
-        |), q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id % 25 = 0),
-        |qp AS (
-        |  SELECT qid, qv, pid FROM (
-        |    SELECT q.qid, q.qv, par.pid,
-        |           row_number() OVER (PARTITION BY q.qid
-        |             ORDER BY list_cosine_similarity(q.qv, par.pv) DESC, par.pid) AS rn
-        |    FROM q CROSS JOIN par) WHERE rn <= 2
-        |), probes AS (
-        |  SELECT qid, cid FROM (
-        |    SELECT qp.qid, g.cid,
-        |           row_number() OVER (PARTITION BY qp.qid
-        |             ORDER BY list_cosine_similarity(qp.qv, g.cv) DESC, g.cid) AS rn
-        |    FROM qp JOIN grp g ON g.pid = qp.pid) WHERE rn <= 2
-        |), cand AS (
-        |  SELECT q.qid, a.id AS nid, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
-        |  FROM q JOIN probes p ON q.qid = p.qid JOIN assign a ON a.cid = p.cid
-        |  WHERE a.id <> q.qid
-        |), ranked AS (
-        |  SELECT qid, nid, cosine,
-        |         CAST(row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS BIGINT) AS rank
-        |  FROM cand)
-        |SELECT qid, rank, nid, cosine FROM ranked WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin,
-
-    "sim_knn_tree" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 64),
-        |p16 AS (SELECT cid AS pid, cv AS pv FROM c WHERE cid < 16),
-        |p4 AS (SELECT cid AS tid, cv AS tv FROM c WHERE cid < 4),
-        |g16 AS (
-        |  SELECT pid, tid FROM (
-        |    SELECT p16.pid, p4.tid,
-        |           row_number() OVER (PARTITION BY p16.pid
-        |             ORDER BY list_cosine_similarity(p16.pv, p4.tv) DESC, p4.tid) AS rn
-        |    FROM p16 CROSS JOIN p4) WHERE rn = 1
-        |), g64 AS (
-        |  SELECT cid, pid FROM (
-        |    SELECT c.cid, p16.pid,
-        |           row_number() OVER (PARTITION BY c.cid
-        |             ORDER BY list_cosine_similarity(c.cv, p16.pv) DESC, p16.pid) AS rn
-        |    FROM c CROSS JOIN p16) WHERE rn = 1
-        |), a4 AS (
-        |  SELECT id, v, tid FROM (
-        |    SELECT e.vec_id AS id, e.v, p4.tid,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_cosine_similarity(e.v, p4.tv) DESC, p4.tid) AS rn
-        |    FROM e CROSS JOIN p4) WHERE rn = 1
-        |), a16 AS (
-        |  SELECT id, v, pid FROM (
-        |    SELECT a4.id, a4.v, g16.pid,
-        |           row_number() OVER (PARTITION BY a4.id
-        |             ORDER BY list_cosine_similarity(a4.v, p16.pv) DESC, g16.pid) AS rn
-        |    FROM a4 JOIN g16 ON g16.tid = a4.tid JOIN p16 ON p16.pid = g16.pid)
-        |  WHERE rn = 1
-        |), assign AS (
-        |  SELECT id, v, cid FROM (
-        |    SELECT a16.id, a16.v, g64.cid,
-        |           row_number() OVER (PARTITION BY a16.id
-        |             ORDER BY list_cosine_similarity(a16.v, c.cv) DESC, g64.cid) AS rn
-        |    FROM a16 JOIN g64 ON g64.pid = a16.pid JOIN c ON c.cid = g64.cid)
-        |  WHERE rn = 1
-        |), q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id % 25 = 0),
-        |q4 AS (
-        |  SELECT qid, qv, tid FROM (
-        |    SELECT q.qid, q.qv, p4.tid,
-        |           row_number() OVER (PARTITION BY q.qid
-        |             ORDER BY list_cosine_similarity(q.qv, p4.tv) DESC, p4.tid) AS rn
-        |    FROM q CROSS JOIN p4) WHERE rn <= 2
-        |), q16 AS (
-        |  -- children of the two chosen top nodes are DISJOINT pid sets
-        |  -- (each pid has exactly one parent), so a plain join suffices
-        |  SELECT qid, qv, pid FROM (
-        |    SELECT q4.qid, q4.qv, g16.pid,
-        |           row_number() OVER (PARTITION BY q4.qid
-        |             ORDER BY list_cosine_similarity(q4.qv, p16.pv) DESC, g16.pid) AS rn
-        |    FROM q4 JOIN g16 ON g16.tid = q4.tid JOIN p16 ON p16.pid = g16.pid)
-        |  WHERE rn <= 2
-        |), probes AS (
-        |  SELECT qid, cid FROM (
-        |    SELECT q16.qid, g64.cid,
-        |           row_number() OVER (PARTITION BY q16.qid
-        |             ORDER BY list_cosine_similarity(q16.qv, c.cv) DESC, g64.cid) AS rn
-        |    FROM q16 JOIN g64 ON g64.pid = q16.pid JOIN c ON c.cid = g64.cid)
-        |  WHERE rn <= 2
-        |), cand AS (
-        |  SELECT q.qid, a.id AS nid, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
-        |  FROM q JOIN probes p ON q.qid = p.qid JOIN assign a ON a.cid = p.cid
-        |  WHERE a.id <> q.qid
-        |), ranked AS (
-        |  SELECT qid, nid, cosine,
-        |         CAST(row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS BIGINT) AS rank
-        |  FROM cand)
-        |SELECT qid, rank, nid, cosine FROM ranked WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin,
-
-    "sim_recall" -> (IvfEvalCtes + """
-        |, hits AS (
-        |  SELECT exact.qid, count(*) AS h
-        |  FROM exact JOIN approx ON exact.qid = approx.qid AND exact.nid = approx.nid
-        |  GROUP BY 1
-        |), perq AS (
-        |  SELECT qq.qid, coalesce(h, 0) AS h
-        |  FROM (SELECT DISTINCT qid FROM q) qq LEFT JOIN hits ON qq.qid = hits.qid
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n_queries,
-        |       round(CAST(sum(h) AS DOUBLE) / (5 * count(*)), 6) AS avg_recall,
-        |       round(CAST(min(h) AS DOUBLE) / 5, 6) AS min_recall
-        |FROM perq""".stripMargin),
-
-    "sim_pca" -> graft.pipeline.Similarity.pcaLabelStatsDuckSql(
-      "embedding", "label", "embeddings", dim = 64),
-
-    "sim_norm_hist" ->
-      """WITH n AS (
-        |  SELECT CAST(floor(sqrt(list_reduce(
-        |           list_prepend(CAST(0.0 AS DOUBLE),
-        |             list_transform(embedding::DOUBLE[], x -> x * x)),
-        |           (a, b) -> a + b)) * 10.0) AS BIGINT) AS bin
-        |  FROM embeddings
-        |)
-        |SELECT bin, count(*) AS vecs FROM n GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "sim_ndcg" -> (IvfEvalCtes + """
-        |, g AS (
-        |  SELECT a.qid, a.rank,
-        |         CASE WHEN e.nid IS NOT NULL
-        |              THEN 1.0 / log2(CAST(a.rank AS DOUBLE) + 1) ELSE 0.0
-        |         END AS g
-        |  FROM approx a LEFT JOIN exact e ON e.qid = a.qid AND e.nid = a.nid
-        |), dcg AS (
-        |  SELECT qid, dcg FROM (
-        |    SELECT qid, row_number() OVER (PARTITION BY qid ORDER BY rank) AS rn,
-        |           count(*) OVER (PARTITION BY qid) AS nr,
-        |           sum(g) OVER (PARTITION BY qid ORDER BY rank
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS dcg
-        |    FROM g) WHERE rn = nr
-        |), scored AS (
-        |  SELECT qq.qid, coalesce(d.dcg, 0.0)
-        |         / (1.0/log2(2.0) + 1.0/log2(3.0) + 1.0/log2(4.0)
-        |            + 1.0/log2(5.0) + 1.0/log2(6.0)) AS ndcg
-        |  FROM (SELECT DISTINCT qid FROM q) qq LEFT JOIN dcg d ON d.qid = qq.qid
-        |), fin AS (
-        |  SELECT qid, ndcg,
-        |         row_number() OVER (ORDER BY qid) AS rn,
-        |         count(*) OVER () AS nq,
-        |         sum(ndcg) OVER (ORDER BY qid
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s,
-        |         min(ndcg) OVER () AS mn
-        |  FROM scored
-        |)
-        |SELECT CAST(nq AS BIGINT) AS n_queries,
-        |       round(s / CAST(nq AS DOUBLE), 6) AS avg_ndcg,
-        |       round(mn, 6) AS min_ndcg
-        |FROM fin WHERE rn = nq""".stripMargin),
-
-    "sp_tile_pyramid" -> (PtsCte +
-      """
-        |, fine AS (
-        |  SELECT CAST(floor((x + 180.0) / 5.0) AS BIGINT) AS cell_x,
-        |         CAST(floor((y + 90.0) / 5.0) AS BIGINT) AS cell_y,
-        |         count(*) AS n, sum(CAST(c_acctbal AS DECIMAL(18,2))) AS s
-        |  FROM pts GROUP BY 1, 2
-        |), mid AS (
-        |  SELECT cell_x // 3 AS cell_x, cell_y // 3 AS cell_y,
-        |         CAST(sum(n) AS BIGINT) AS n, sum(s) AS s
-        |  FROM fine GROUP BY 1, 2
-        |), coarse AS (
-        |  SELECT cell_x // 3 AS cell_x, cell_y // 3 AS cell_y,
-        |         CAST(sum(n) AS BIGINT) AS n, sum(s) AS s
-        |  FROM mid GROUP BY 1, 2
-        |)
-        |SELECT cell_deg, cell_x, cell_y, n AS n_points, CAST(s AS DOUBLE) AS sum_val
-        |FROM (
-        |  SELECT CAST(5.0 AS DOUBLE) AS cell_deg, * FROM fine
-        |  UNION ALL SELECT CAST(15.0 AS DOUBLE), * FROM mid
-        |  UNION ALL SELECT CAST(45.0 AS DOUBLE), * FROM coarse
-        |)
-        |ORDER BY cell_deg, cell_x, cell_y""".stripMargin)
-  )
-
-  // ------------------------------------------------- generated oracle SQL
-
-  /** tx_quality oracle: the textQuality struct fields recomputed in DuckDB.
-    * ASCII documents ⇒ Java `\p{Punct}` ≡ POSIX `[[:punct:]]`; the stopword
-    * vocabulary comes from TextAnalysis.stopwordList so both sides share it.
-    */
-  private val TxQualitySql: String = {
-    val stops = TextAnalysis.stopwordList.map(w => s"'$w'").mkString(", ")
-    val toks = """list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"""
-    val nToks = s"len(list_filter(string_split_regex(trim(text), '\\s+'), t -> t <> ''))"
-    s"""SELECT doc_id,
-       |  length(text)::DOUBLE AS n_chars,
-       |  $nToks::DOUBLE AS n_tokens,
-       |  round(CASE WHEN $nToks > 0 THEN length(text)::DOUBLE / $nToks ELSE 0 END, 6) AS mean_token_len,
-       |  round((length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')))::DOUBLE
-       |        / length(text), 6) AS punct_ratio,
-       |  round((length(text) - length(regexp_replace(text, '[0-9]', '', 'g')))::DOUBLE
-       |        / length(text), 6) AS digit_ratio,
-       |  round((length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')))::DOUBLE
-       |        / length(text), 6) AS upper_ratio,
-       |  round(CASE WHEN len($toks) > 0
-       |        THEN len(list_filter($toks, t -> t IN ($stops)))::DOUBLE / len($toks)
-       |        ELSE 0 END, 6) AS stopword_ratio
-       |FROM documents ORDER BY doc_id""".stripMargin
-  }
-
-  /** spatial.closest oracle: nearest point on each nation polyline via the
-    * exact JTS projection algebra (LineSegment.projectionFactor + pointAlong;
-    * reference: SpatialTopologyUtils.java:95-140) written as plain SQL —
-    * identical IEEE double ops, so round(6) is bit-stable.
-    */
-  private val ClosestEdgeSql: String = {
-    val (px, py) = ("10.5", "20.5")
-    val r = s"((($px - x1) * dx + ($py - y1) * dy) / (dx * dx + dy * dy))"
-    val seg =
-      s"""CASE
-         |  WHEN dx * dx + dy * dy = 0 THEN sqrt(($px - x1) * ($px - x1) + ($py - y1) * ($py - y1))
-         |  WHEN $r <= 0 THEN sqrt(($px - x1) * ($px - x1) + ($py - y1) * ($py - y1))
-         |  WHEN $r >= 1 THEN sqrt(($px - x2) * ($px - x2) + ($py - y2) * ($py - y2))
-         |  ELSE sqrt(($px - (x1 + $r * dx)) * ($px - (x1 + $r * dx))
-         |          + ($py - (y1 + $r * dy)) * ($py - (y1 + $r * dy)))
-         |END""".stripMargin
-    PtsCte +
-      s"""
-         |, segs AS (
-         |  SELECT c_nationkey,
-         |         lag(x) OVER w AS x1, lag(y) OVER w AS y1,
-         |         x - lag(x) OVER w AS dx, y - lag(y) OVER w AS dy,
-         |         x AS x2, y AS y2
-         |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-         |), d AS (
-         |  SELECT c_nationkey, min($seg) AS sd
-         |  FROM segs WHERE x1 IS NOT NULL GROUP BY 1
-         |)
-         |SELECT c_nationkey, round(sd, 6) AS snap_dist FROM d
-         |WHERE sd <= 50.0
-         |ORDER BY snap_dist, c_nationkey""".stripMargin
-  }
-
-  /** dd_simhash_pairs oracle: the same 24-bit polynomial simhash computed in
-    * DuckDB (generator kept beside the Spark expression — Dedup.polySimhash),
-    * O(n²) Hamming self-join (fine at oracle scale).
-    */
-  private val SimhashSql: String = {
-    val bits = 24
-    val hamming = (0 until bits).map { j =>
-      val p = 1L << j
-      s"(CASE WHEN (a.sh // $p) % 2 <> (b.sh // $p) % 2 THEN 1 ELSE 0 END)"
-    }.mkString(" + ")
-    s"""WITH sh AS (
-       |  SELECT doc_id, ${Dedup.polySimhashDuckSql("text", bits)} AS sh FROM documents
-       |), p AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, ($hamming) AS hamming
-       |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-       |)
-       |SELECT id_a, id_b, CAST(hamming AS BIGINT) AS hamming FROM p
-       |WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin
-  }
-
-  /** mm_decode oracle: the REAL 8×8 PNG decode replayed from the lossless
-    * image pattern in pure integer SQL (luma, then the same float/255
-    * division the identity box-mean applies).
-    */
-  private val MmDecodeSql: String =
-    """SELECT i AS media_id,
-      |       round(sum(CAST(CAST(
-      |         (299 * ((p * 3 + i * 7) % 256)
-      |          + 587 * ((p * 5 + i * 11) % 256)
-      |          + 114 * ((p * 7 + i * 13) % 256)) // 1000
-      |         AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE)), 4) AS pixel_sum
-      |FROM range(300) t(i), range(64) q(p) WHERE i % 3 = 0
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** mm_phash oracle: the REAL 8×8 PNG decode replayed from the lossless
-    * image pattern (seed remapped to id−3 for every 9th id — planted
-    * byte-different pixel-duplicates), then the mean-threshold signature
-    * and an all-pairs Hamming join — valid against the Spark banded plan
-    * because pigeonhole banding at (maxHamming+1) chunks has total recall.
-    * The 64-pixel mean is EXACT in any summation order (float values cast
-    * to double need < 40 mantissa bits), so the `px > mean` bits agree.
-    */
-  private val MmPhashSql: String =
-    """WITH px AS (
-      |  SELECT i AS media_id, j,
-      |         CAST(CAST(
-      |           (299 * ((j * 3 + s * 7) % 256)
-      |            + 587 * ((j * 5 + s * 11) % 256)
-      |            + 114 * ((j * 7 + s * 13) % 256)) // 1000
-      |           AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE) AS px
-      |  FROM (SELECT i, CASE WHEN i % 9 = 3 THEN i - 3 ELSE i END AS s
-      |        FROM range(300) t(i) WHERE i % 3 = 0) m(i, s),
-      |       range(64) p(j)
-      |), mn AS (
-      |  SELECT media_id, avg(px) AS mean FROM px GROUP BY 1
-      |), sigs AS (
-      |  SELECT p.media_id,
-      |         CAST(sum(CASE WHEN p.px > m.mean
-      |                       THEN CAST(power(2, p.j) AS HUGEINT) ELSE 0 END) AS UBIGINT) AS sig
-      |  FROM px p JOIN mn m ON p.media_id = m.media_id
-      |  GROUP BY 1
-      |)
-      |SELECT a.media_id AS id_a, b.media_id AS id_b,
-      |       CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
-      |FROM sigs a JOIN sigs b ON a.media_id < b.media_id
-      |WHERE bit_count(xor(a.sig, b.sig)) <= 3
-      |ORDER BY id_a, id_b""".stripMargin
-
-  /** mm_audio oracle: sampleWaveform's stub decode replayed for audio-kind
-    * rows (i % 3 = 1) — the SAME chain as MmDecodeSql; sample index
-    * step-65 buckets into 32-wide windows, float division replicated before
-    * the double aggregation.
-    */
-  /** mm_audio oracle: the REAL WAV decode replayed from the lossless
-    * loud/quiet amplitude pattern (pattern·257 − 32768 PCM shorts decode
-    * to exactly pattern/255f — 65535 = 255·257).
-    */
-  private val MmAudioSql: String =
-    """WITH px AS (
-      |  SELECT i AS media_id, j // 32 AS w,
-      |         CAST(CAST(
-      |           (CASE WHEN ((j // 32) + i) % 3 <> 0 THEN 180 ELSE 40 END
-      |            + (j * 7 + i * 11) % 64)
-      |           AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE) AS px
-      |  FROM range(300) t(i), range(256) u(j) WHERE i % 3 = 1
-      |)
-      |SELECT media_id, CAST(w AS BIGINT) AS window_idx,
-      |       round(sum(px), 4) AS sample_sum,
-      |       round(max(px), 6) AS peak
-      |FROM px GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  /** mm_vad oracle: the MmAudioSql chain, unrounded per-window sums, the
-    * 0.5 mean-amplitude gate, and the identical gaps-and-islands merge.
-    */
-  private val MmVadSql: String =
-    """WITH wv AS (
-      |  SELECT i AS media_id, CAST(j // 32 AS BIGINT) AS window_idx,
-      |         sum(CAST(CAST(
-      |           (CASE WHEN ((j // 32) + i) % 3 <> 0 THEN 180 ELSE 40 END
-      |            + (j * 7 + i * 11) % 64)
-      |           AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE)) AS sample_sum
-      |  FROM range(300) t(i), range(256) u(j) WHERE i % 3 = 1
-      |  GROUP BY 1, 2
-      |), act AS (
-      |  SELECT media_id, window_idx, sample_sum,
-      |         window_idx - row_number() OVER (
-      |           PARTITION BY media_id ORDER BY window_idx) AS island
-      |  FROM wv WHERE sample_sum / 32 > 0.5
-      |), seg AS (
-      |  SELECT media_id, min(window_idx) AS seg_start, max(window_idx) AS seg_end,
-      |         count(*)::BIGINT AS n_windows, round(sum(sample_sum), 4) AS energy
-      |  FROM act GROUP BY media_id, island
-      |)
-      |SELECT media_id,
-      |       row_number() OVER (PARTITION BY media_id ORDER BY seg_start) AS seg_idx,
-      |       seg_start, seg_end, n_windows, energy
-      |FROM seg ORDER BY media_id, seg_idx""".stripMargin
-
-  /** mm_audio_match oracle: the REAL WAV decode replayed from the lossless
-    * amplitude pattern with the duplicate-planting seed fold (media_id % 9
-    * = 4 → media_id − 3), then the identical peak-pick / hash-pair /
-    * banded-match / modal-offset pipeline.
-    */
-  private val MmAudioMatchSql: String =
-    """WITH px AS (
-      |  SELECT i AS media_id, j AS s,
-      |         CAST(CAST(
-      |           (CASE WHEN ((j // 32) + sd) % 3 <> 0 THEN 180 ELSE 40 END
-      |            + (j * 7 + sd * 11) % 64)
-      |           AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE) AS px
-      |  FROM (SELECT i, CASE WHEN i % 9 = 4 THEN i - 3 ELSE i END AS sd
-      |        FROM range(300) t(i) WHERE i % 3 = 1) m(i, sd),
-      |       range(256) u(j)
-      |), pk AS (
-      |  SELECT media_id, s // 32 AS w, s % 32 AS p,
-      |         row_number() OVER (PARTITION BY media_id, s // 32
-      |                            ORDER BY px DESC, s % 32) AS rn
-      |  FROM px
-      |), peaks AS (
-      |  SELECT media_id, w, p FROM pk WHERE rn = 1
-      |), h AS (
-      |  SELECT a.media_id AS mid, a.p AS pa, b.p AS pb, b.w - a.w AS dt, a.w AS wa
-      |  FROM peaks a JOIN peaks b
-      |    ON a.media_id = b.media_id AND b.w > a.w AND b.w <= a.w + 3
-      |), m AS (
-      |  SELECT x.mid AS id_a, y.mid AS id_b, x.wa - y.wa AS off
-      |  FROM h x JOIN h y
-      |    ON x.pa = y.pa AND x.pb = y.pb AND x.dt = y.dt AND x.mid < y.mid
-      |), byoff AS (
-      |  SELECT id_a, id_b, off, count(*) AS n FROM m GROUP BY 1, 2, 3
-      |), best AS (
-      |  SELECT *, row_number() OVER (PARTITION BY id_a, id_b
-      |                               ORDER BY n DESC, off) AS rn,
-      |         sum(n) OVER (PARTITION BY id_a, id_b) AS n_match
-      |  FROM byoff
-      |)
-      |SELECT id_a, id_b, CAST(n_match AS BIGINT) AS n_match,
-      |       CAST(off AS BIGINT) AS best_offset
-      |FROM best WHERE rn = 1 AND n_match >= 4
-      |ORDER BY 1, 2""".stripMargin
-
-  /** mm_frames oracle: the REAL per-frame PNG decode replayed from the
-    * lossless 16×16 frame pattern in pure integer SQL (luma then the same
-    * float/255 division the box-mean identity applies).
-    */
-  private val MmFramesSql: String =
-    """SELECT i AS media_id, f AS frame_idx,
-      |       round(sum(CAST(CAST(
-      |         CASE WHEN p < (i * i * 31 + f * f * 17 + f * i * 5) % 200 + 28
-      |              THEN 255 ELSE (p * 3) % 64 END
-      |         AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE)), 4) AS pixel_sum
-      |FROM range(300) t(i), range(4) u(f), range(256) q(p)
-      |WHERE i % 3 = 2
-      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  /** mm_scenes oracle: the REAL 12-frame PNG container decode replayed
-    * from the lossless quadratic-k frame pattern, then the identical
-    * lag-cut / running-sum / per-scene aggregate.
-    */
-  private val MmScenesSql: String =
-    """WITH feat AS (
-      |  SELECT i AS media_id, f AS frame_idx,
-      |         round(sum(CAST(CAST(
-      |           CASE WHEN p < (i * i * 31 + f * f * 17 + f * i * 5) % 200 + 28
-      |                THEN 255 ELSE (p * 3) % 64 END
-      |           AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE)), 4) AS feat
-      |  FROM range(300) t(i), range(12) u(f), range(256) q(p)
-      |  WHERE i % 3 = 2
-      |  GROUP BY 1, 2
-      |), cuts AS (
-      |  SELECT media_id, frame_idx, feat,
-      |         lag(feat) OVER (PARTITION BY media_id ORDER BY frame_idx) AS prev
-      |  FROM feat
-      |), flagged AS (
-      |  SELECT media_id, frame_idx,
-      |         CASE WHEN prev IS NOT NULL AND abs(feat - prev) > 5.5
-      |              THEN 1 ELSE 0 END AS is_cut
-      |  FROM cuts
-      |), scenes AS (
-      |  SELECT media_id, frame_idx,
-      |         CAST(sum(is_cut) OVER (PARTITION BY media_id ORDER BY frame_idx
-      |                                ROWS UNBOUNDED PRECEDING) AS BIGINT) AS scene_id
-      |  FROM flagged
-      |)
-      |SELECT media_id, scene_id, count(*) AS n_frames,
-      |       min(frame_idx) AS start_frame, max(frame_idx) AS end_frame
-      |FROM scenes GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  /** sp_density_islands oracle: single-link connected components over the
-    * nation-0 point graph (edges = pairs within density 25) via a recursive
-    * transitive-closure CTE; island key = lexicographic min member id, the
-    * same canonicalization as densityIslandsScalable.
-    */
-  private val DensityIslandsSql: String =
-    PtsCte.replace("WITH pts", "WITH RECURSIVE pts") +
-      """
-        |, p0 AS (SELECT CAST(ck AS VARCHAR) AS id, x, y FROM pts WHERE c_nationkey = 0),
-        |e AS (
-        |  SELECT a.id AS src, b.id AS dst FROM p0 a JOIN p0 b
-        |  ON a.id <> b.id
-        |  AND sqrt((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)) <= 25.0
-        |), reach(id, label) AS (
-        |  SELECT id, id FROM p0
-        |  UNION
-        |  SELECT e.src, r.label FROM e JOIN reach r ON e.dst = r.id
-        |), comp AS (SELECT id, min(label) AS label FROM reach GROUP BY id)
-        |SELECT label AS island_key, count(*) AS n_members
-        |FROM comp GROUP BY 1 ORDER BY 1""".stripMargin
 }

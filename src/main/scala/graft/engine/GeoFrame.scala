@@ -270,7 +270,7 @@ class GeoFrame(val df: DataFrame, val meta: Option[LayerMeta] = None) {
   def knnCandidates(lon: Double, lat: Double, k: Int, slackKm: Double = 0.001,
       initialSide: Double = 0.0): GeoFrame = {
     // `initialSide` > 0 skips the size estimate. It matters only for frames
-    // that do not come from the catalog (SparkEntry sp_knn, BenchScale):
+    // that do not come from the catalog (the sp_knn query, BenchScale):
     // those would otherwise pay the extent/count aggregate. The estimate
     // only affects how many doubling rounds run, never correctness (the
     // verification bound does that), so a rough caller hint is safe.

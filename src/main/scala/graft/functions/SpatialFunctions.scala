@@ -14,7 +14,13 @@ import graft.geom.{GeomCodec, GeoOutput, Orthodromic}
   */
 object SpatialFunctions {
 
+  /** Registers every function on `spark`; returns at once when the session
+    * already holds them (`st_reverse` is registered last), so a second call
+    * replaces nothing. [[graft.Sessions.local]] calls it on every session it
+    * builds.
+    */
   def register(spark: SparkSession): Unit = {
+    if (spark.catalog.functionExists("st_reverse")) return
     val r = spark.udf
 
     def dec(wkb: Array[Byte]): Geometry = GeomCodec.fromWkb(wkb)

@@ -12,6 +12,25 @@ import org.apache.spark.sql.functions._
   */
 object Events {
 
+  /** Normalize `events.ts` to LONG NANOS — the contract every event operator
+    * downstream assumes. Driver generations have shipped the column both as
+    * parquet TIMESTAMP(NANOS) (readable only as long via the legacy
+    * `nanosAsLong` conf, already long here) and as TIMESTAMP(MICROS)
+    * (arriving as TIMESTAMP_NTZ). The NTZ micros are extracted with
+    * `timestampdiff` against the epoch — pure integer arithmetic on the
+    * stored micros, no session-timezone math — so Spark's ns and the DuckDB
+    * oracle's `epoch_ns(ts)` see the identical naive instant.
+    */
+  private[graft] def normalizeEventTs(df: DataFrame): DataFrame =
+    df.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType => df
+      case _: org.apache.spark.sql.types.TimestampNTZType =>
+        df.withColumn("ts",
+          expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts) * 1000"))
+      case _ => // TIMESTAMP (tz-adjusted read path): micros since epoch UTC
+        df.withColumn("ts", expr("unix_micros(ts) * 1000"))
+    }
+
   /** Gap-based sessionization: events more than `gapNs` apart (per user)
     * start a new session. The classic two-window plan — `lag` marks breaks,
     * a running sum numbers sessions — then one aggregate per session.

@@ -1,0 +1,656 @@
+package graft.queries
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+
+import graft.engine.GeoFrame
+import graft.functions.st
+import graft.queries.Shared._
+
+/** Ingest queries: OSM XML and PBF, WARC, shapefile, JSON-lines and GeoJSON
+  * readers over fixtures staged from the sf tables.
+  */
+object IoQueries {
+
+  // one reusable temp path per JVM for each ingest fixture (overwritten per
+  // invocation, cleaned at exit) — repeated bench/verify runs must not leak
+  // a new driver temp file per query invocation
+  private lazy val osmIngestTmp: java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempFile("graft-osm-ingest", ".osm")
+    p.toFile.deleteOnExit()
+    p
+  }
+
+  private lazy val pbfIngestTmp: java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempFile("graft-pbf-ingest", ".osm.pbf")
+    p.toFile.deleteOnExit()
+    p
+  }
+
+  private lazy val warcIngestTmp: java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory("graft-warc-ingest")
+    (0 until 4).foreach { f =>
+      val ext = if (f < 2) "warc" else "warc.gz"
+      d.resolve(s"shard-$f.$ext").toFile.deleteOnExit()
+    }
+    d.toFile.deleteOnExit()
+    d
+  }
+
+  /** Stage the 4-shard WARC fixture for the current sf dir (fixture
+    * generation only — bounded by the documents table; files are
+    * overwritten per call so SF switches see fresh content). Shards 0-1
+    * are plain `.warc`, shards 2-3 record-per-gzip-member `.warc.gz`.
+    */
+  private def stageWarcFixture(s: SparkSession, dir: String): String = {
+    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+    val rows = T(s, dir, "documents").select(col("doc_id"), col("text"))
+      .orderBy("doc_id").collect()  // fixture generation only
+    val shards = Array.fill(4)(new java.io.ByteArrayOutputStream())
+    def record(warcType: String, url: Option[String], ct: String,
+        payload: Array[Byte]): Array[Byte] = {
+      val b = new java.io.ByteArrayOutputStream()
+      graft.sources.Warc.writeRecord(b, warcType, url, ct, payload)
+      b.toByteArray
+    }
+    def emit(f: Int, bytes: Array[Byte]): Unit =
+      if (f < 2) shards(f).write(bytes)
+      else shards(f).write(graft.sources.Warc.gzipMember(bytes))
+    (0 until 4).foreach(f => emit(f, record("warcinfo", None,
+      "application/warc-fields", graft.sources.Warc.InfoPayload)))
+    rows.foreach { r =>
+      val d = r.getLong(0); val text = r.getString(1)
+      val p = d / 2
+      val host = s"www.host${p % 5}.example"
+      val raw =
+        if (d % 2 == 0)
+          s"https://WWW.Host${p % 5}.EXAMPLE/doc/$p?utm_source=feed&x=1#top"
+        else s"https://www.host${p % 5}.example:443/doc/$p?x=1"
+      val f = (d % 4).toInt
+      val body =
+        if (d % 10 == 7) "not found".getBytes(UTF_8) else text.getBytes(UTF_8)
+      val status = if (d % 10 == 7) "404 Not Found" else "200 OK"
+      val http = (s"HTTP/1.1 $status\r\n" +
+        "Content-Type: text/plain; charset=utf-8\r\n" +
+        s"Content-Length: ${body.length}\r\n\r\n").getBytes(ISO_8859_1) ++ body
+      emit(f, record("response", Some(raw),
+        "application/http;msgtype=response", http))
+      if (d % 5 == 0)
+        emit(f, record("request", Some(raw),
+          "application/http;msgtype=request",
+          s"GET /doc/$p?x=1 HTTP/1.1\r\nHost: $host\r\n\r\n".getBytes(ISO_8859_1)))
+    }
+    (0 until 4).foreach { f =>
+      val ext = if (f < 2) "warc" else "warc.gz"
+      java.nio.file.Files.write(warcIngestTmp.resolve(s"shard-$f.$ext"),
+        shards(f).toByteArray)
+    }
+    warcIngestTmp.toString
+  }
+
+  private lazy val shpIngestBase: String = {
+    val d = java.nio.file.Files.createTempDirectory("graft-shp-ingest")
+    val base = d.resolve("nations")
+    for (ext <- Seq(".shp", ".shx", ".dbf"))
+      d.resolve("nations" + ext).toFile.deleteOnExit()
+    d.toFile.deleteOnExit()   // registered after children: deletion runs LIFO
+    base.toString
+  }
+
+  private[graft] val all: Seq[QuerySpec] = Seq(
+    // OSM → shapefile export helper under the oracle (was unit-only; the
+    // cli-tools OSMLayerToShapefileExporter surface): tag-filtered ways
+    // export to .shp/.dbf/.shx, re-import through the reader, and the
+    // roundtripped per-way vertex counts must replay from the fixture
+    // congruence (one way per nation, n_pts = customers in the nation)
+    QuerySpec("osm_shp_export", (s, dir) => {
+      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
+        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
+      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
+      rows.foreach { r =>
+        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}' version='1'/>\n"
+      }
+      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
+        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
+        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
+        sb ++= "    <tag k='highway' v='residential'/>\n"
+        sb ++= "  </way>\n"
+      }
+      sb ++= "</osm>\n"
+      val tmp = java.nio.file.Files.createTempFile("graft-osm-exp", ".osm")
+      tmp.toFile.deleteOnExit()
+      java.nio.file.Files.writeString(tmp, sb.toString)
+      val d = java.nio.file.Files.createTempDirectory("graft-shpexp")
+      d.toFile.deleteOnExit()
+      val out = d.resolve("roads").toString
+      val wh = java.nio.file.Files.createTempDirectory("graft-wh-exp")
+      wh.toFile.deleteOnExit()
+      val procs = new graft.engine.SpatialProcedures(s, wh.toString)
+      procs.exportOsmToShapefile(tmp.toString, "highway", "residential", out)
+      graft.sources.Shapefile.importShapefile(s, out + ".shp").df
+        .agg(count(lit(1)).as("n_ways"),
+          sum(st.numPoints(col("geometry")).cast("long")).as("sum_pts"),
+          min(st.numPoints(col("geometry")).cast("long")).as("min_pts"),
+          max(st.numPoints(col("geometry")).cast("long")).as("max_pts"))
+    },
+      // fixture congruence: one exported way per nation, n_pts = customers
+      """WITH per AS (
+        |  SELECT c_nationkey, count(*) AS n FROM customer GROUP BY 1
+        |)
+        |SELECT count(*)::BIGINT AS n_ways, CAST(sum(n) AS BIGINT) AS sum_pts,
+        |       CAST(min(n) AS BIGINT) AS min_pts,
+        |       CAST(max(n) AS BIGINT) AS max_pts
+        |FROM per""".stripMargin),
+
+    // Ingest under the oracle: the OSM XML is GENERATED from the customer
+    // lattice (nodes = points, one tagged way per nation in ck order), then
+    // flows through the REAL import path — StAX parse → staging DFs →
+    // assembleWays → geometry build — and the oracle replays node counts,
+    // way lengths and tag values from `customer` directly. Matches the
+    // reference's golden-data checks (osm tests TestOSMImportBase
+    // .checkOSMLayer:79: index count == feature count).
+    // WARC crawl-archive ingestion (sources/Warc.scala): the fixture is a
+    // real 4-shard WARC/1.1 corpus derived from `documents` (2 plain
+    // shards + 2 record-per-gzip-member .warc.gz shards; response records
+    // carry genuine HTTP messages, every 5th doc adds a request record,
+    // each shard opens with warcinfo), parsed back streaming with one task
+    // per file — the crawl-corpus parallelism model. The oracle derives
+    // the expected stats from `documents` by the generator's formulas, an
+    // independent derivation rather than a parser replay.
+    QuerySpec("warc_ingest_stats", (s, dir) => {
+      val src = stageWarcFixture(s, dir)
+      graft.sources.Warc.read(s, s"$src/*.warc*")
+        .groupBy(col("warcType").as("warc_type"),
+          coalesce(col("httpStatus"), lit(-1L)).as("http_status"))
+        .agg(count(lit(1)).as("n_recs"), sum(col("bodyLen")).as("body_bytes"),
+          countDistinct(col("host")).as("n_hosts"))
+        .orderBy("warc_type", "http_status")
+    },
+      graft.sources.Warc.ingestStatsDuckSql),
+
+    // URL canonicalization over the same corpus: captures whose raw URLs
+    // differ only by case / default port / fragment / tracking params /
+    // query order collapse to one canonical key — the capture-dedup
+    // grouping a crawl pipeline runs before content dedup. The fixture
+    // plants one equivalent-URL pair per (2k, 2k+1) doc pair; the oracle
+    // derives each group straight from doc_id, independent of the
+    // canonicalizer
+    QuerySpec("warc_url_canon", (s, dir) => {
+      val src = stageWarcFixture(s, dir)
+      val canon = udf((u: String) => graft.sources.Warc.canonicalUrl(u))
+      graft.sources.Warc.read(s, s"$src/*.warc*")
+        .filter(col("warcType") === "response")
+        .select(canon(col("url")).as("curl"), col("url").as("u"))
+        .groupBy("curl")
+        .agg(countDistinct("u").as("n_urls"), count(lit(1)).as("n_recs"))
+        .filter(col("n_urls") >= 2)
+        .orderBy("curl")
+    },
+      graft.sources.Warc.urlCanonDuckSql),
+
+    // crawl politeness: parse per-host robots.txt (RFC 9309 semantics —
+    // group selection, longest-rule precedence, Allow wins ties) and gate
+    // the WARC captures' paths through it — host h blocks /doc/ but
+    // re-allows /doc/<h+1>, so allowed/blocked splits differ per host.
+    // The oracle derives each verdict straight from doc_id arithmetic,
+    // independent of the parser/matcher
+    QuerySpec("warc_robots", (s, dir) => {
+      val src = stageWarcFixture(s, dir)
+      val rulesByHost = (0 until 5).map { h =>
+        val txt = "User-agent: megacrawler\nDisallow: /private/\n\n" +
+          s"User-agent: *\nDisallow: /doc/\nAllow: /doc/${h + 1}\n"
+        (s"www.host$h.example", graft.sources.Robots.parse(txt, "*"))
+      }.toMap
+      val bc = s.sparkContext.broadcast(rulesByHost)
+      val okU = udf((host: String, url: String) =>
+        bc.value.get(host).forall(rs =>
+          graft.sources.Robots.allowed(rs, graft.sources.Warc.pathOf(url))))
+      graft.sources.Warc.read(s, s"$src/*.warc*")
+        .filter(col("warcType") === "response")
+        .select(col("host"), okU(col("host"), col("url")).as("ok"))
+        .groupBy("host").agg(
+          sum(when(col("ok"), 1L).otherwise(0L)).as("n_allowed"),
+          sum(when(!col("ok"), 1L).otherwise(0L)).as("n_blocked"))
+        .orderBy("host")
+    },
+      """WITH d AS (SELECT doc_id // 2 AS p FROM documents),
+        |e AS (
+        |  SELECT p, (p % 5) AS h,
+        |         CASE WHEN starts_with(CAST(p AS VARCHAR),
+        |                               CAST((p % 5) + 1 AS VARCHAR))
+        |              THEN 1 ELSE 0 END AS ok
+        |  FROM d
+        |)
+        |SELECT 'www.host' || h || '.example' AS host,
+        |       sum(ok)::BIGINT AS n_allowed,
+        |       (count(*) - sum(ok))::BIGINT AS n_blocked
+        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    QuerySpec("osm_ingest_stats", (s, dir) => {
+      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
+        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
+      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
+      rows.foreach { r =>
+        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}' version='1'/>\n"
+      }
+      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
+        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
+        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
+        sb ++= s"    <tag k='highway' v='residential'/>\n    <tag k='name' v='way-$nk'/>\n  </way>\n"
+      }
+      sb ++= "</osm>\n"
+      val tmp = osmIngestTmp
+      java.nio.file.Files.writeString(tmp, sb.toString)
+      graft.osm.OsmImport.importOsm(s, tmp.toString).df
+        .select((col("way_id") - 1000).cast("int").as("c_nationkey"),
+          st.numPoints(col("geometry")).cast("long").as("n_pts"),
+          round(st.length(col("geometry")), 6).as("len"),
+          col("props").getItem("name").as("name"))
+        .orderBy(col("c_nationkey"))
+    },
+      (PtsCte +
+        """
+          |, segs AS (
+          |  SELECT c_nationkey,
+          |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
+          |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
+          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
+          |)
+          |SELECT c_nationkey, count(*)::BIGINT AS n_pts,
+          |       round(coalesce(sum(seg), 0), 6) AS len,
+          |       'way-' || c_nationkey AS name
+          |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    // same corpus through the BINARY format: the fixture is encoded as a
+    // real .osm.pbf (zlib blobs, DenseNodes delta coding, string tables —
+    // graft-written, spec-conformant), then parsed back with one executor
+    // task per blob (OsmPbf.parsePbf). The tiny batch forces many blobs so
+    // the parallel decode path and cross-blob delta restarts are what's
+    // actually measured; stats and oracle identical to the XML leg
+    QuerySpec("pbf_ingest_stats", (s, dir) => {
+      import graft.osm.OsmPbf
+      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
+        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
+      val nodes = rows.map(r => OsmPbf.PbfNode(r.getLong(0), r.getDouble(2), r.getDouble(3))).toSeq
+      val ways = rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map { case (nk, rs) =>
+        OsmPbf.PbfWay(1000L + nk, rs.map(_.getLong(0)).sorted.toSeq,
+          tags = Seq("highway" -> "residential", "name" -> s"way-$nk"))
+      }
+      OsmPbf.writePbf(pbfIngestTmp.toString, nodes, ways, batch = 500)
+      val staging = OsmPbf.parsePbf(s, pbfIngestTmp.toString)
+      graft.osm.OsmImport.assembleWays(staging)
+        .select((col("way_id") - 1000).cast("int").as("c_nationkey"),
+          st.numPoints(col("geometry")).cast("long").as("n_pts"),
+          round(st.length(col("geometry")), 6).as("len"),
+          col("props").getItem("name").as("name"))
+        .orderBy(col("c_nationkey"))
+    },
+      // the PBF leg re-derives the SAME stats (the binary encode/decode must
+      // be coordinate-exact: nano-precision lattice points round-trip the
+      // granularity math bit-for-bit)
+      (PtsCte +
+        """
+          |, segs AS (
+          |  SELECT c_nationkey,
+          |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
+          |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
+          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
+          |)
+          |SELECT c_nationkey, count(*)::BIGINT AS n_pts,
+          |       round(coalesce(sum(seg), 0), 6) AS len,
+          |       'way-' || c_nationkey AS name
+          |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    // OSM road-direction decode under the oracle (was unit-only): ways
+    // carry every `oneway` variant the reference decodes
+    // (OSMImporter.getRoadDirection:1607-1618) keyed by nationkey % 6, and
+    // the tag-filtered dynamic layer + decode must reproduce the
+    // closed-form per-direction counts
+    QuerySpec("osm_road_stats", (s, dir) => {
+      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
+        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
+      val oneway = Map(0 -> Some("-1"), 1 -> Some("1"), 2 -> Some("yes"),
+        3 -> Some("TRUE"), 4 -> Some("no"), 5 -> None)
+      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
+      rows.foreach { r =>
+        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}' version='1'/>\n"
+      }
+      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
+        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
+        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
+        sb ++= "    <tag k='highway' v='residential'/>\n"
+        oneway(nk % 6).foreach(v => sb ++= s"    <tag k='oneway' v='$v'/>\n")
+        sb ++= "  </way>\n"
+      }
+      sb ++= "</osm>\n"
+      val tmp = java.nio.file.Files.createTempFile("graft-osm-road", ".osm")
+      tmp.toFile.deleteOnExit()
+      java.nio.file.Files.writeString(tmp, sb.toString)
+      val ways = graft.osm.OsmImport.importOsm(s, tmp.toString).df
+      graft.osm.OsmImport.withRoadDirection(
+          graft.osm.OsmImport.tagFilteredLayer(ways, "highway", "residential"))
+        .groupBy(col("road_direction"))
+        .agg(count(lit(1)).as("n_ways"))
+        .orderBy(col("road_direction"))
+    },
+      """WITH nk AS (SELECT DISTINCT c_nationkey AS n FROM customer),
+        |d AS (
+        |  SELECT n, CASE n % 6 WHEN 0 THEN 'BACKWARD'
+        |                       WHEN 1 THEN 'FORWARD' WHEN 2 THEN 'FORWARD'
+        |                       WHEN 3 THEN 'FORWARD' ELSE 'BOTH' END AS road_direction
+        |  FROM nk
+        |)
+        |SELECT road_direction, count(*) AS n_ways
+        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // the reference's STORED DynamicLayerConfig JSON graph-step query run
+    // VERBATIM: the same osm_road_stats
+    // fixture, filtered through the two-step GEOM/TAGS sub-graph match
+    // (DynamicIndexReader.java:46-113) compiled onto the flattened
+    // assembled-way rows — oneway='yes' matches exactly the reference's
+    // string-compare semantics ('1'/'TRUE' variants do NOT match)
+    QuerySpec("osm_dynamic_layer", (s, dir) => {
+      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
+        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
+      val oneway = Map(0 -> Some("-1"), 1 -> Some("1"), 2 -> Some("yes"),
+        3 -> Some("TRUE"), 4 -> Some("no"), 5 -> None)
+      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
+      rows.foreach { r =>
+        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}' version='1'/>\n"
+      }
+      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
+        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
+        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
+        sb ++= "    <tag k='highway' v='residential'/>\n"
+        oneway(nk % 6).foreach(v => sb ++= s"    <tag k='oneway' v='$v'/>\n")
+        sb ++= "  </way>\n"
+      }
+      sb ++= "</osm>\n"
+      val tmp = java.nio.file.Files.createTempFile("graft-osm-dyn", ".osm")
+      tmp.toFile.deleteOnExit()
+      java.nio.file.Files.writeString(tmp, sb.toString)
+      val json = """{"step": {"type": "GEOM", "direction": "INCOMING",
+                    |  "step": {"type": "TAGS", "direction": "OUTGOING",
+                    |    "properties": {"highway": "residential", "oneway": "yes"}}}}""".stripMargin
+      graft.osm.OsmImport.importOsm(s, tmp.toString)
+        .filterDynamic(json)
+        .df.select(col("way_id"), st.numPoints(col("geometry")).cast("long").as("n_pts"))
+        .orderBy(col("way_id"))
+    },
+      // the stored-JSON dynamic layer admits exactly the oneway='yes' nations
+      // (nk % 6 = 2 in the fixture congruence); n_pts replays the per-nation
+      // node count the way geometry carries
+      """SELECT CAST(1000 + c_nationkey AS BIGINT) AS way_id,
+        |       count(*)::BIGINT AS n_pts
+        |FROM customer WHERE c_nationkey % 6 = 2
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // stored-JSON dynamic layer stepping THROUGH THE WAY-NODE CHAIN:
+    // GEOM → FIRST_NODE → NEXT → NODE walks
+    // way → proxy₀ → proxy₁ → the 2nd OSM node (reference graph:
+    // OSMImporter.java:696-714; walk: DynamicIndexReader.stepAndQuery).
+    // Node-level properties CANNOT compile to same-row predicates — the
+    // chain compiles to a semi-join against the osm_way_nds/osm_nodes
+    // staging tables (OsmImport.filterDynamic). The fixture varies node
+    // `version` with the customer key, so the NODE property test admits
+    // exactly the ways whose second node has version 2 — a predicate the
+    // old silently-over-matching same-row compile could never express
+    QuerySpec("osm_dynamic_node_layer", (s, dir) => {
+      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
+        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
+      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
+      rows.foreach { r =>
+        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}'" +
+          s" version='${1 + r.getLong(0) % 3}'/>\n"
+      }
+      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
+        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
+        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
+        sb ++= "    <tag k='highway' v='residential'/>\n  </way>\n"
+      }
+      sb ++= "</osm>\n"
+      val tmp = java.nio.file.Files.createTempFile("graft-osm-dynnode", ".osm")
+      tmp.toFile.deleteOnExit()
+      java.nio.file.Files.writeString(tmp, sb.toString)
+      val json = """{"step": {"type": "GEOM", "direction": "INCOMING",
+                    |  "step": {"type": "FIRST_NODE", "direction": "OUTGOING",
+                    |    "step": {"type": "NEXT", "direction": "OUTGOING",
+                    |      "step": {"type": "NODE", "direction": "OUTGOING",
+                    |        "properties": {"version": 2}}}}}}""".stripMargin
+      val st8 = graft.osm.OsmImport.parse(s, tmp.toString)
+      val layer = new GeoFrame(graft.osm.OsmImport.assembleWays(st8))
+      graft.osm.OsmImport.filterDynamic(layer, st8, json)
+        .df.select(col("way_id"), st.numPoints(col("geometry")).cast("long").as("n_pts"))
+        .orderBy(col("way_id"))
+    },
+      // chain replay: a way matches iff its SECOND node (custkey order
+      // within the nation) carries version 2 = 1 + ck % 3 ⇒ ck % 3 = 1
+      """WITH ranked AS (
+        |  SELECT c_custkey AS ck, c_nationkey,
+        |         row_number() OVER (PARTITION BY c_nationkey
+        |                            ORDER BY c_custkey) AS rn,
+        |         count(*) OVER (PARTITION BY c_nationkey) AS n
+        |  FROM customer
+        |)
+        |SELECT CAST(1000 + c_nationkey AS BIGINT) AS way_id,
+        |       CAST(n AS BIGINT) AS n_pts
+        |FROM ranked WHERE rn = 2 AND ck % 3 = 1
+        |ORDER BY 1""".stripMargin),
+
+    // OSM changesets layer under the oracle (was parsed-then-unit-only):
+    // per-changeset element counts, contributing user, and node bbox —
+    // the reference's changeset sub-graph as one aggregate (fixture maps
+    // changesets to nations, so the oracle replays from `customer`)
+    QuerySpec("osm_changeset_stats", (s, dir) => {
+      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
+        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
+      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
+      rows.foreach { r =>
+        val nk = r.getInt(1)
+        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}'" +
+          s" version='1' changeset='$nk' uid='${nk + 100}' user='u-$nk'/>\n"
+      }
+      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
+        sb ++= s"  <way id='${1000 + nk}' version='1' changeset='$nk'>\n"
+        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
+        sb ++= "  </way>\n"
+      }
+      sb ++= "</osm>\n"
+      val tmp = java.nio.file.Files.createTempFile("graft-osm-cs", ".osm")
+      tmp.toFile.deleteOnExit()
+      java.nio.file.Files.writeString(tmp, sb.toString)
+      graft.osm.OsmImport.assembleChangesets(
+          graft.osm.OsmImport.parse(s, tmp.toString))
+        .select(col("changeset").cast("int").as("changeset"),
+          col("uid").cast("long").as("uid"), col("user"),
+          col("n_nodes"), col("n_ways"),
+          col("bbox")("minx").as("minx"), col("bbox")("miny").as("miny"),
+          col("bbox")("maxx").as("maxx"), col("bbox")("maxy").as("maxy"))
+        .orderBy(col("changeset"))
+    },
+      (PtsCte +
+        """
+          |SELECT c_nationkey AS changeset,
+          |       CAST(c_nationkey + 100 AS BIGINT) AS uid,
+          |       'u-' || c_nationkey AS "user",
+          |       count(*) AS n_nodes, CAST(1 AS BIGINT) AS n_ways,
+          |       min(x) AS minx, min(y) AS miny, max(x) AS maxx, max(y) AS maxy
+          |FROM pts GROUP BY c_nationkey ORDER BY changeset""".stripMargin)),
+
+    // OSM multipolygon RELATION assembly under the oracle (was unit-only):
+    // per nation, an outer-ring way + an inner-hole way + a multipolygon
+    // relation; hole size varies by nation so areas aren't constant, and
+    // half-integer corners make every shoelace term binary-exact — the
+    // real importer's relation path (ring orientation repair, hole
+    // attachment) must reproduce the closed-form areas
+    QuerySpec("osm_relation_stats", (s, dir) => {
+      val nks = T(s, dir, "nation").select(col("n_nationkey"))
+        .orderBy(col("n_nationkey")).collect().map(_.getInt(0))
+      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
+      def node(id: Long, x: Double, y: Double): Unit =
+        sb ++= s"  <node id='$id' lat='$y' lon='$x' version='1'/>\n"
+      nks.foreach { n =>
+        val (x0, x1, y0, y1) = (3.0 * n - 39.5, 3.0 * n - 34.5, 2.0 * n - 29.5, 2.0 * n - 25.5)
+        val (hx0, hy0) = (x0 + 1, y0 + 1)
+        val (hx1, hy1) = (hx0 + 1 + (n % 3), hy0 + 1 + (n % 2))
+        val b = n.toLong * 100
+        node(b + 1, x0, y0); node(b + 2, x1, y0); node(b + 3, x1, y1); node(b + 4, x0, y1)
+        node(b + 5, hx0, hy0); node(b + 6, hx1, hy0); node(b + 7, hx1, hy1); node(b + 8, hx0, hy1)
+        sb ++= s"  <way id='${2000 + n}' version='1'>\n"
+        Seq(1, 2, 3, 4, 1).foreach(i => sb ++= s"    <nd ref='${b + i}'/>\n")
+        sb ++= "  </way>\n"
+        sb ++= s"  <way id='${3000 + n}' version='1'>\n"
+        Seq(5, 6, 7, 8, 5).foreach(i => sb ++= s"    <nd ref='${b + i}'/>\n")
+        sb ++= "  </way>\n"
+        sb ++= s"  <relation id='${4000 + n}' version='1'>\n"
+        sb ++= s"    <member type='way' ref='${2000 + n}' role='outer'/>\n"
+        sb ++= s"    <member type='way' ref='${3000 + n}' role='inner'/>\n"
+        sb ++= s"    <tag k='type' v='multipolygon'/>\n    <tag k='name' v='rel-$n'/>\n  </relation>\n"
+      }
+      sb ++= "</osm>\n"
+      val tmp = java.nio.file.Files.createTempFile("graft-osm-rel", ".osm")
+      tmp.toFile.deleteOnExit()
+      java.nio.file.Files.writeString(tmp, sb.toString)
+      graft.osm.OsmImport.assembleRelations(
+          graft.osm.OsmImport.parse(s, tmp.toString))
+        .select((col("relation_id") - 4000).cast("int").as("nk"),
+          st.area(col("geometry")).as("area"),
+          st.numPoints(col("geometry")).cast("long").as("n_pts"),
+          col("props").getItem("name").as("name"))
+        .orderBy(col("nk"))
+    },
+      """SELECT n_nationkey AS nk,
+        |       5.0 * 4.0 - (1 + n_nationkey % 3) * (1 + n_nationkey % 2) AS area,
+        |       CAST(10 AS BIGINT) AS n_pts,
+        |       'rel-' || n_nationkey AS name
+        |FROM nation ORDER BY nk""".stripMargin),
+
+    // Shapefile writer AND reader under the oracle: per-nation polylines
+    // (with a dbf attribute) are exported through the real ESRI encoder and
+    // re-imported; record numbers, point counts, lengths and the attribute
+    // round-trip are replayed by the oracle from `customer`.
+    // (reference: ShapefileExporter.java:37, ShapefileImporter via
+    // SpatialProcedures.java:788-820)
+    // GeoJSON ingest under the oracle: real export → GeoJSONSeq files →
+    // real line-distributed re-import (sources/GeoJsonSource.scala); same
+    // per-nation line stats contract as the shapefile round trip
+    // JSONL corpus round trip — the wire format a 100 TB text corpus
+    // actually arrives in: write the documents table as line-delimited
+    // JSON (one shard per partition), read it back through an EXPLICIT
+    // schema (no sampling-based inference pass — at scale inference reads
+    // the data twice), and prove losslessness against the parquet oracle
+    // with exact per-lang counts, char totals, and id checksums
+    QuerySpec("jsonl_ingest_stats", (s, dir) => {
+      val docs = T(s, dir, "documents")
+      val d = java.nio.file.Files.createTempDirectory("graft-jsonl")
+      d.toFile.deleteOnExit()
+      val p = d.resolve("docs").toString
+      docs.write.json(p)
+      s.read.schema(docs.schema).json(p)
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(length(col("text"))).as("chars"),
+          sum(col("doc_id")).as("id_sum"),
+          sum(col("n_chars")).as("n_chars_sum"))
+        .orderBy("lang")
+    },
+      """SELECT lang, count(*) AS n_docs,
+        |       CAST(sum(length(text)) AS BIGINT) AS chars,
+        |       CAST(sum(doc_id) AS BIGINT) AS id_sum,
+        |       CAST(sum(n_chars) AS BIGINT) AS n_chars_sum
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    QuerySpec("geojson_ingest_stats", (s, dir) => {
+      val lines = linesLayer(s, dir).df
+        .withColumn("props", map(
+          lit("fid"), col("c_nationkey").cast("string"),
+          lit("name"), concat(lit("ln-"), col("c_nationkey"))))
+      val d = java.nio.file.Files.createTempDirectory("graft-geojson")
+      d.toFile.deleteOnExit()
+      val p = d.resolve("lines_seq").toString
+      graft.sources.GeoJsonSource.exportGeoJsonSeq(lines, p)
+      graft.sources.GeoJsonSource.readGeoJsonSeq(s, p, idProp = "fid")
+        .select(col("id").cast("long").as("nk"),
+          st.numPoints(col("geometry")).cast("long").as("n_pts"),
+          round(st.length(col("geometry")), 6).as("len"),
+          col("props").getItem("name").as("name"))
+        .orderBy(col("nk"))
+    },
+      (PtsCte +
+        """
+          |, segs AS (
+          |  SELECT c_nationkey,
+          |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
+          |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
+          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
+          |)
+          |SELECT c_nationkey::BIGINT AS nk, count(*)::BIGINT AS n_pts,
+          |       round(coalesce(sum(seg), 0), 6) AS len,
+          |       'ln-' || c_nationkey AS name
+          |FROM segs GROUP BY c_nationkey ORDER BY nk""".stripMargin)),
+
+    QuerySpec("shp_ingest_stats", (s, dir) => {
+      val lines = linesLayer(s, dir).df
+        .withColumn("props", map(lit("name"), concat(lit("ln-"), col("c_nationkey"))))
+        .orderBy(col("c_nationkey"))
+      val base = shpIngestBase
+      graft.sources.Shapefile.exportShapefile(lines, base)
+      graft.sources.Shapefile.importShapefile(s, base + ".shp").df
+        .select(col("id").cast("long").as("rec"),
+          st.numPoints(col("geometry")).cast("long").as("n_pts"),
+          round(st.length(col("geometry")), 6).as("len"),
+          col("props").getItem("name").as("name"))
+        .orderBy(col("rec"))
+    },
+      (PtsCte +
+        """
+          |, segs AS (
+          |  SELECT c_nationkey,
+          |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
+          |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
+          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
+          |), agg AS (
+          |  SELECT c_nationkey, count(*)::BIGINT AS n_pts,
+          |         round(coalesce(sum(seg), 0), 6) AS len
+          |  FROM segs GROUP BY 1
+          |)
+          |SELECT row_number() OVER (ORDER BY c_nationkey)::BIGINT AS rec,
+          |       n_pts, len, 'ln-' || c_nationkey AS name
+          |FROM agg ORDER BY rec""".stripMargin)),
+
+    // the SAME corpus through the DataSource V2 connector
+    // (spark.read.format("shapefile")): shx-sliced multi-partition scan,
+    // dbf attributes by seek — identical stats, identical oracle, so the
+    // splittable executor-side read path is itself hash-gated
+    QuerySpec("shp_scan_v2", (s, dir) => {
+      val lines = linesLayer(s, dir).df
+        .withColumn("props", map(lit("name"), concat(lit("ln-"), col("c_nationkey"))))
+        .orderBy(col("c_nationkey"))
+      val base = shpIngestBase
+      graft.sources.Shapefile.exportShapefile(lines, base)
+      s.read.format("shapefile")
+        .option("maxRecordsPerPartition", "7")   // 25 recs → 4 parallel slices
+        .load(base + ".shp")
+        .select(col("rec_no").cast("long").as("rec"),
+          st.numPoints(col("geometry")).cast("long").as("n_pts"),
+          round(st.length(col("geometry")), 6).as("len"),
+          col("name"))
+        .orderBy(col("rec"))
+    },
+      (PtsCte +
+        """
+          |, segs AS (
+          |  SELECT c_nationkey,
+          |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
+          |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
+          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
+          |), agg AS (
+          |  SELECT c_nationkey, count(*)::BIGINT AS n_pts,
+          |         round(coalesce(sum(seg), 0), 6) AS len
+          |  FROM segs GROUP BY 1
+          |)
+          |SELECT row_number() OVER (ORDER BY c_nationkey)::BIGINT AS rec,
+          |       n_pts, len, 'ln-' || c_nationkey AS name
+          |FROM agg ORDER BY rec""".stripMargin))
+  )
+}

@@ -146,7 +146,7 @@ object BenchScale {
 
     // events at N×: copies offset user/event ids, keep timestamps — each
     // copy's session structure repeats, so sessions grow exactly N×
-    val ev1 = graft.SparkEntry.normalizeEventTs(spark.read.parquet(s"$sfDir/events.parquet"))
+    val ev1 = graft.pipeline.Events.normalizeEventTs(spark.read.parquet(s"$sfDir/events.parquet"))
       .select(col("user_id"), col("event_id"), expr("ts div 1000").as("tsn"), col("value"))
     def evPath(n: Int) = s"$scaleDir/events${n}x.parquet"
     rungs.foreach { n =>

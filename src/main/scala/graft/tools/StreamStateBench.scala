@@ -40,7 +40,7 @@ object StreamStateBench {
 
     // normalizeEventTs absorbs the driver's per-generation ts precision
     // (TIMESTAMP(NANOS)-as-long vs TIMESTAMP_NTZ) into long nanos
-    val ev1 = graft.SparkEntry.normalizeEventTs(
+    val ev1 = graft.pipeline.Events.normalizeEventTs(
         spark.read.parquet(s"$sfDir/events.parquet"))
       .select(col("user_id"),
         timestamp_micros(expr("ts div 1000")).as("ets"),

@@ -154,9 +154,11 @@ class ExtensionsSpec extends SparkSpec {
     assert(spark.experimental.extraOptimizations.isEmpty)
   }
 
-  test("every named query has an oracle, and every oracle a query") {
-    // tools/crosscheck.py checks a query without an oracle by its row count alone
-    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+  test("every named query has a distinct name and a non-blank oracle") {
+    // each QuerySpec carries its oracle; a repeated name would silently
+    // drop a query when the name-keyed maps are built
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.diff(names.distinct).isEmpty)
     assert(SparkEntry.oracleSql.collect { case (n, sql) if sql.isBlank => n }.isEmpty)
   }
 

@@ -181,7 +181,6 @@ class Round3Spec extends SparkSpec {
 
   test("BboxConjunctRule injects an expanded-envelope conjunct for distance ranges") {
     import graft.functions.st
-    graft.functions.SpatialFunctions.register(spark)
     val dir = Files.createTempDirectory("bboxrule-dist").toString
     (1 to 100).map { i =>
       val x = (i % 20).toDouble; val y = (i / 20).toDouble
@@ -351,7 +350,6 @@ class Round3Spec extends SparkSpec {
   }
 
   test("new SQL registrations: st_makebox/st_makeline/st_z/st_reverse") {
-    graft.functions.SpatialFunctions.register(spark)
     val r = spark.sql(
       """SELECT st_area(st_makebox(0.0D, 0.0D, 2.0D, 3.0D)) AS a,
         |       st_numpoints(st_makeline(0.0D, 0.0D, 1.0D, 1.0D)) AS n,

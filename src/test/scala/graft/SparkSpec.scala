@@ -90,7 +90,6 @@ object SparkSpec {
     // every deliberately-unpartitioned window site runs its
     // BoundedWindow count guard under the test session
     s.conf.set("spark.graft.assertBoundedWindows", "true")
-    graft.functions.SpatialFunctions.register(s)
     s
   }
 }

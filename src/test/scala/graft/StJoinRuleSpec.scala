@@ -234,7 +234,6 @@ class StJoinRuleSpec extends SparkSpec {
 
   test("ST_DWithin join: dilated-envelope grid plan, exact JTS answers") {
     spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")  // pin the grid plan
-    graft.functions.SpatialFunctions.register(spark)
     ptsDf.createOrReplaceTempView("sj_pts")
     boxesDf.createOrReplaceTempView("sj_boxes")
     // radius larger than the 10° cell to prove dilation crosses cell
@@ -265,7 +264,6 @@ class StJoinRuleSpec extends SparkSpec {
   }
 
   test("stats-first pick: tiny probe side broadcasts instead of gridding") {
-    graft.functions.SpatialFunctions.register(spark)
     ptsDf.createOrReplaceTempView("sj_pts")
     boxesDf.createOrReplaceTempView("sj_boxes")
     try {

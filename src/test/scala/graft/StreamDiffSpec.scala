@@ -69,7 +69,7 @@ class StreamDiffSpec extends SparkSpec {
     val srcDir = s"$dir/in"
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val events = SparkEntry.normalizeEventTs(
+    val events = graft.pipeline.Events.normalizeEventTs(
         spark.read.parquet(s"$sfDir/events.parquet"))
       .select(col("event_id"),
         timestamp_seconds(expr("ts div 1000000000")).as("ets"),
