@@ -1,7 +1,7 @@
 package graft.pipeline
 
 /** Minimal pure-JVM WAV/PCM codec — the REAL decoder behind the audio side
-  * of the multimodal seam (`spark.graft.mm.codec=wav`, round-9 promotion of
+  * of the multimodal seam (selected by `RIFF`…`WAVE`, round-9 promotion of
   * the mm_audio family). Scope: RIFF/WAVE, PCM (format 1), 16-bit mono;
   * any chunk order with unknown chunks skipped (incl. the RIFF odd-length
   * pad byte), which is what real exporter output looks like (LIST/INFO,

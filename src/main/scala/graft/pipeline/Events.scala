@@ -675,7 +675,6 @@ object Events {
     * Expects `ts` long nanos. Returns the affected day count.
     */
   def dailyAggMerge(batch: DataFrame, path: String): Long = {
-    val spark = batch.sparkSession
     val dayUs = 86400000000000L
     val agg = batch
       .withColumn("day", expr(s"ts div $dayUs"))
@@ -684,13 +683,8 @@ object Events {
         sum(round(col("value") * 100).cast("long")).as("sum_cents"),
         countDistinct(col("user_id")).as("n_users"))
       .localCheckpoint(true)
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try agg.write.mode("overwrite").partitionBy("day").parquet(path)
-    finally prevMode match {
-      case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    agg.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day").parquet(path)
     agg.select("day").distinct().count()
   }
 

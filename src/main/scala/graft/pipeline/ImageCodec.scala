@@ -1,9 +1,9 @@
 package graft.pipeline
 
 /** Minimal pure-JVM BMP codec — the REAL decoder behind the multimodal
-  * decode seam ([[Multimodal.decodeAndFeaturize]] selects it with
-  * `spark.graft.mm.codec=bmp`; the FNV stub stays the default where no
-  * codec library exists). Supports the uncompressed BITMAPINFOHEADER
+  * decode seam ([[Multimodal.decodeAndFeaturize]] selects it for bytes
+  * that start `BM` with zero reserved bytes 6–9; bytes of no known format
+  * take the FNV stub). Supports the uncompressed BITMAPINFOHEADER
   * layouts every generator emits: 24/32-bit, bottom-up (positive height)
   * and top-down (negative height), 4-byte-padded rows. Decode output is
   * integer luma (299·R + 587·G + 114·B) / 1000 per pixel, row-major
@@ -105,7 +105,7 @@ object ImageCodec {
   /** Decode an 8-bit-depth truecolor PNG (color type 2 RGB or 6 RGBA,
     * interlace 0, any row filters 0-4, any IDAT chunking) to (width,
     * height, row-major top-down integer luma) — the second REAL format
-    * behind the multimodal decode seam (`spark.graft.mm.codec=png`).
+    * behind the multimodal decode seam (selected by the PNG signature).
     * Pure JVM: chunk walk + java.util.zip.Inflater + the five PNG row
     * unfilters (None/Sub/Up/Average/Paeth, RFC 2083 §6). Same integer
     * luma as the BMP path so oracles replay values exactly. Fails loudly

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 /** Minimal pure-JVM baseline JPEG codec — the THIRD real format behind the
-  * multimodal decode seam (`spark.graft.mm.codec=jpeg`), and the one a
+  * multimodal decode seam (selected by `FF D8 FF`), and the one a
   * web-crawl pipeline actually meets ~90% of the time. Scope: baseline
   * sequential DCT (SOF0), 8-bit, grayscale (1 component) or YCbCr 4:4:4
   * (3 components, sampling factors 1×1), optional restart intervals —

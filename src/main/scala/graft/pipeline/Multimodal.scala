@@ -7,19 +7,17 @@ import org.apache.spark.sql.types._
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
   * with typed metadata structs, processed in batch-shaped partition passes.
   *
-  * IMAGE decode is REAL under `spark.graft.mm.codec=bmp` (pure-JVM
-  * uncompressed-BMP codec, [[ImageCodec]]), `=png` (8-bit truecolor PNG:
-  * zlib inflate + all five row unfilters) or `=jpeg` (baseline sequential
-  * [[JpegCodec]]: huffman + dequant + reference IDCT) — each
-  * cross-checked against javax.imageio and gated by its mm_decode_*
-  * oracle. Since round 9 the PRODUCTION mm queries run real decodes by
-  * default: mm_phash / mm_video_dedup / mm_frames decode genuine PNG
-  * bytes ([[syntheticImagePng]] / [[syntheticVideoPng]] fixtures), and
-  * mm_exact_dedup hashes genuine PNG image bytes; the FNV stub is the
-  * no-codec fallback for the remaining synthetic gates and tests. Audio
-  * kernels stay stubbed (no PCM fixtures yet) — everything Spark-side is
-  * real either way: schemas, partition sizing, batch iteration, output
-  * shapes.
+  * Decode is chosen by WHAT THE BYTES ARE, row by row: a PNG, baseline
+  * JPEG or uncompressed BMP stream decodes for real (pure-JVM
+  * [[ImageCodec]] / [[JpegCodec]], each cross-checked against
+  * javax.imageio and gated by its mm_decode_* oracle), a RIFF/WAVE stream
+  * through [[AudioCodec]], a length-prefixed PNG-frame container through
+  * [[sampleFrames]]'s slicer; bytes that match no signature take the
+  * deterministic FNV stub ([[syntheticMedia]]'s rows in tests and
+  * BenchScale). The production mm queries run on genuine PNG/WAV fixtures
+  * ([[syntheticImagePng]] / [[syntheticAudioWav]] / [[syntheticVideoPng]]).
+  * Everything Spark-side is real either way: schemas, partition sizing,
+  * batch iteration, output shapes.
   */
 object Multimodal {
 
@@ -54,42 +52,61 @@ object Multimodal {
     out
   }
 
+  private object Format extends Enumeration {
+    val Png, Jpeg, Bmp, Wav, Frames, Stub = Value
+  }
+
+  /** The decoder a byte stream asks for, by its FULL signature: PNG's 8
+    * bytes, JPEG's `FF D8 FF`, `BM` with the reserved bytes 6–9 zero,
+    * `RIFF` + `WAVE` at 8, or a frame container (4-byte BE length, then
+    * `\x89PNG`). Bytes matching none take the FNV stub — no seed of
+    * [[syntheticMedia]]'s generator matches a full signature
+    * (MediaDispatchSpec pins seeds 0–99 999). A matched stream its decoder then rejects fails
+    * loudly: a silent stub fallback would fake a decode.
+    */
+  private def formatOf(b: Array[Byte]): Format.Value = {
+    def at(o: Int, sig: Int*) = b.length >= o + sig.length &&
+      sig.indices.forall(i => (b(o + i) & 0xFF) == sig(i))
+    if (at(0, 0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)) Format.Png
+    else if (at(0, 0xFF, 0xD8, 0xFF)) Format.Jpeg
+    else if (at(0, 'B', 'M') && at(6, 0, 0, 0, 0)) Format.Bmp
+    else if (at(0, 'R', 'I', 'F', 'F') && at(8, 'W', 'A', 'V', 'E')) Format.Wav
+    else if (at(4, 0x89, 'P', 'N', 'G')) Format.Frames
+    else Format.Stub
+  }
+
+  /** One image stream's luma box-meaned to (w, h), decoder by signature. */
+  private def imagePixels(id: Long, bytes: Array[Byte], w: Int, h: Int): Array[Float] = {
+    def boxed(d: (Int, Int, Array[Int])) = ImageCodec.boxMean(d._1, d._2, d._3, w, h)
+    formatOf(bytes) match {
+      case Format.Png => boxed(ImageCodec.decodePngLuma(bytes))
+      case Format.Jpeg => boxed(JpegCodec.decodeJpegLuma(bytes))
+      case Format.Bmp => boxed(ImageCodec.decodeBmpLuma(bytes))
+      case Format.Stub => fakeDecode(bytes, w, h)
+      case f => throw new IllegalArgumentException(s"media $id: a $f stream is not an image")
+    }
+  }
+
   /** Decode + resize to (w×h) feature vectors, one batch-shaped partition
     * pass (the Scala analog of a Pandas mapInPandas batch UDF: per-partition
     * iterator, amortized setup, bounded memory per batch).
     *
-    * The decoder is SELECTED BY CONFIG (`spark.graft.mm.codec`, read once
-    * at plan build): `stub` (default) keeps the deterministic FNV fake;
-    * `bmp` decodes REAL uncompressed 24/32-bit BMP bytes via the pure-JVM
-    * [[ImageCodec]] — native luma pixels box-meaned to the requested
-    * (w, h) — so byte-different encodings of the same pixels (row order,
-    * padding) decode identically, which the FNV stub cannot do; `png`
-    * does the same through the pure-JVM PNG path (zlib inflate + row
-    * unfilters). Wrong-format bytes under a real codec fail loudly; a
-    * silent stub fallback would fake a decode. The quartet's dataflow is
-    * codec-agnostic either way.
+    * Each row's decoder is chosen by its bytes' signature: PNG, JPEG
+    * and BMP decode for real — native luma pixels box-meaned to the
+    * requested (w, h) — so byte-different encodings of the same pixels
+    * (row order, padding, row filters) decode identically, which the FNV
+    * stub cannot do; bytes of no known format take the stub, and a
+    * non-image signature fails loudly. One call may mix formats.
     */
   def decodeAndFeaturize(df: DataFrame, w: Int = 32, h: Int = 32): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val codec = spark.conf.get("spark.graft.mm.codec", "stub")
-    require(codec == "stub" || codec == "bmp" || codec == "png" ||
-      codec == "jpeg",
-      s"spark.graft.mm.codec must be stub|bmp|png|jpeg, got $codec")
     df.select(col("media_id"), col("bytes")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         // per-partition setup would init a stateful codec once here
         it.map { case (id, bytes) =>
-          val px =
-            if (bytes == null) new Array[Float](w * h)
-            else if (codec == "bmp" || codec == "png" || codec == "jpeg") {
-              val (sw, sh, luma) = codec match {
-                case "bmp"  => ImageCodec.decodeBmpLuma(bytes)
-                case "png"  => ImageCodec.decodePngLuma(bytes)
-                case "jpeg" => JpegCodec.decodeJpegLuma(bytes)
-              }
-              ImageCodec.boxMean(sw, sh, luma, w, h)
-            } else fakeDecode(bytes, w, h)
+          val px = if (bytes == null) new Array[Float](w * h)
+            else imagePixels(id, bytes, w, h)
           (id, px, w, h)
         }
       }
@@ -141,26 +158,22 @@ object Multimodal {
   }
 
   /** Frame sampling for video-kind rows: emits `n` evenly spaced frames per
-    * media row (the explode shape of a real frame sampler). Under
-    * `spark.graft.mm.codec=png` the decode is REAL: bytes are a
-    * length-prefixed PNG-frame container ([[syntheticVideoPng]]'s layout —
-    * or any producer's), each sampled frame is sliced, PNG-decoded and
-    * box-meaned to (w, h); the default FNV stub remains the no-codec
-    * fallback. Same config-at-plan-build discipline as
-    * [[decodeAndFeaturize]].
+    * media row (the explode shape of a real frame sampler). A row whose
+    * bytes are a length-prefixed frame container ([[syntheticVideoPng]]'s
+    * layout — or any producer's) is sliced, and each sampled frame goes
+    * through the same signature dispatch as [[decodeAndFeaturize]]; bytes
+    * of no known format feed the FNV stub per frame. A torn container or
+    * any other signature fails loudly.
     */
   def sampleFrames(df: DataFrame, n: Int = 4, w: Int = 16, h: Int = 16): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val codec = spark.conf.get("spark.graft.mm.codec", "stub")
-    require(codec == "stub" || codec == "png",
-      s"sampleFrames supports stub|png containers, got $codec")
     df.filter(col("kind") === "video")
       .select(col("media_id"), col("bytes")).as[(Long, Array[Byte])]
       .flatMap { case (id, bytes) =>
-        if (codec == "png") {
-          require(bytes != null, s"media $id: null video container")
-          // slice the container: [4-byte BE length][PNG] repeated
+        val format = if (bytes == null) Format.Stub else formatOf(bytes)
+        if (format == Format.Frames) {
+          // slice the container: [4-byte BE length][frame] repeated
           val frames = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
           var o = 0
           while (o < bytes.length) {
@@ -174,58 +187,50 @@ object Multimodal {
           }
           require(frames.length >= n,
             s"media $id: ${frames.length} frames < sample size $n")
-          (0 until n).map { k =>
-            val (sw, sh, luma) =
-              ImageCodec.decodePngLuma(frames(k * frames.length / n))
-            (id, k, ImageCodec.boxMean(sw, sh, luma, w, h))
+          (0 until n).map(k => (id, k, imagePixels(id, frames(k * frames.length / n), w, h)))
+        } else {
+          require(format == Format.Stub, s"media $id: a $format stream is not a frame container")
+          (0 until n).map { f =>
+            val seed = if (bytes == null) Array[Byte](f.toByte)
+              else bytes :+ f.toByte
+            (id, f, fakeDecode(seed, w, h))
           }
-        } else (0 until n).map { f =>
-          val seed = if (bytes == null) Array[Byte](f.toByte)
-            else bytes :+ f.toByte
-          (id, f, fakeDecode(seed, w, h))
         }
       }
       .toDF("media_id", "frame_idx", "pixels")
   }
 
-  /** Waveform windowing for audio-kind rows: decode to a pseudo-sample
-    * stream, split into `windows` fixed-size windows, emit per-window
-    * amplitude stats — the 1→N explode + window-stat shape of a real audio
-    * feature extractor (VAD, loudness normalization), with the stub decode
-    * replayable by the DuckDB oracle. Swap `fakeDecode` for a PCM decode
-    * without touching the dataflow.
+  /** Shared audio sample decode, chosen by the bytes: a RIFF/WAVE stream
+    * decodes REAL PCM ([[AudioCodec]]) to the engine's [0, 1] float
+    * amplitude grid — (s + 32768)/65535f; bytes of no known format take
+    * the FNV stub; any other signature, and short or non-PCM WAV streams,
+    * fail loudly.
     */
-  /** Shared audio sample decode honoring `spark.graft.mm.codec` (read once
-    * at plan build): `wav` decodes REAL RIFF/PCM bytes ([[AudioCodec]]) to
-    * the engine's [0, 1] float amplitude grid — (s + 32768)/65535f; the
-    * FNV stub remains the no-codec fallback. Fails loudly on short or
-    * non-PCM streams.
-    */
-  private def decodeSamples(codec: String, id: Long, bytes: Array[Byte],
+  private def decodeSamples(id: Long, bytes: Array[Byte],
       n: Int, samplesPerWindow: Int, windows: Int): Array[Float] =
     if (bytes == null) new Array[Float](n)
-    else if (codec == "wav") {
-      val (_, pcm) = AudioCodec.decodeWavPcm16(bytes)
-      require(pcm.length >= n,
-        s"media $id: ${pcm.length} PCM samples < required $n")
-      Array.tabulate(n)(i => (pcm(i) + 32768) / 65535.0f)
-    } else fakeDecode(bytes, samplesPerWindow, windows)
+    else formatOf(bytes) match {
+      case Format.Wav =>
+        val (_, pcm) = AudioCodec.decodeWavPcm16(bytes)
+        require(pcm.length >= n,
+          s"media $id: ${pcm.length} PCM samples < required $n")
+        Array.tabulate(n)(i => (pcm(i) + 32768) / 65535.0f)
+      case Format.Stub => fakeDecode(bytes, samplesPerWindow, windows)
+      case f => throw new IllegalArgumentException(s"media $id: a $f stream is not audio")
+    }
 
-  private def audioCodecOf(spark: SparkSession): String = {
-    val codec = spark.conf.get("spark.graft.mm.codec", "stub")
-    require(codec == "stub" || codec == "wav",
-      s"audio kernels support stub|wav, got $codec")
-    codec
-  }
-
+  /** Waveform windowing for audio-kind rows: decode to a sample stream,
+    * split into `windows` fixed-size windows, emit per-window amplitude
+    * stats — the 1→N explode + window-stat shape of a real audio feature
+    * extractor (VAD, loudness normalization).
+    */
   def sampleWaveform(df: DataFrame, windows: Int = 8, samplesPerWindow: Int = 32): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val codec = audioCodecOf(spark)
     df.filter(col("kind") === "audio")
       .select(col("media_id"), col("bytes")).as[(Long, Array[Byte])]
       .flatMap { case (id, bytes) =>
-        val samples = decodeSamples(codec, id, bytes,
+        val samples = decodeSamples(id, bytes,
           windows * samplesPerWindow, samplesPerWindow, windows)
         (0 until windows).map { wi =>
           var sum = 0.0
@@ -283,11 +288,10 @@ object Multimodal {
       samplesPerWindow: Int = 32): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val codec = audioCodecOf(spark)
     df.filter(col("kind") === "audio")
       .select(col("media_id"), col("bytes")).as[(Long, Array[Byte])]
       .flatMap { case (id, bytes) =>
-        val s = decodeSamples(codec, id, bytes,
+        val s = decodeSamples(id, bytes,
           windows * samplesPerWindow, samplesPerWindow, windows)
         s.indices.map(i =>
           (id, i / samplesPerWindow, i % samplesPerWindow, s(i).toDouble))
@@ -345,12 +349,11 @@ object Multimodal {
 
   /** Perceptual-hash signature per image row: decode to an 8×8 pixel grid,
     * bit j = pixel j above the image mean — the mean-threshold aHash
-    * variant of pHash. Under a real codec (`spark.graft.mm.codec=bmp|png|
-    * jpeg` — the mm_phash gate's default since round 9) byte-different
-    * encodings of the same pixels collide and visually-similar images map
-    * to nearby signatures (Round8Spec pins the collision); under the
-    * test-only FNV stub only byte-identical media collide (FNV
-    * avalanches).
+    * variant of pHash. On PNG, JPEG or BMP bytes the decode is real, so
+    * byte-different encodings of the same pixels collide and
+    * visually-similar images map to nearby signatures (Round8Spec pins the
+    * collision); on bytes of no known format the FNV stub decodes and only
+    * byte-identical media collide (FNV avalanches).
     * The mean is exact in both engines: 64 pixel values are floats cast to
     * double (24-bit mantissas, ≤ 8 bits of exponent spread), so the sum
     * needs < 40 mantissa bits — no rounding in any summation order.

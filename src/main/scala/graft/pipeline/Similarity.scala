@@ -1468,17 +1468,19 @@ object Similarity {
     * r0 = the 7-dp-quantized shortlist with maxsim 0, then per step a
     * 1-row argmax CTE (same score tree, id tie-break) and a remainder CTE
     * updating maxsim via greatest(). `embSql` must yield (id BIGINT,
-    * v DOUBLE[]); `qSql` a single-row (qv DOUBLE[]).
+    * v DOUBLE[]); `qSql` a single-row (qv DOUBLE[]). Every step CTE is
+    * MATERIALIZED: w_i and r_i both read r_{i-1}, so an inlined chain
+    * re-evaluates ~2^k times.
     */
   def mmrDuckSql(embSql: String, qSql: String, k: Int, lambda: Double,
       shortlist: Int): String = {
     val lam = lambda.toString
     val oneMinus = (1.0 - lambda).toString
     val steps = (1 to k).map { i =>
-      s"""w$i AS (
+      s"""w$i AS MATERIALIZED (
          |  SELECT id, rel, $lam * rel - $oneMinus * maxsim AS score
          |  FROM r${i - 1} ORDER BY score DESC, id LIMIT 1
-         |), r$i AS (
+         |), r$i AS MATERIALIZED (
          |  SELECT r.id, r.rel,
          |         greatest(r.maxsim, coalesce(p.s, 0.0)) AS maxsim
          |  FROM r${i - 1} r
@@ -1491,11 +1493,11 @@ object Similarity {
       .mkString("\n  UNION ALL ")
     s"""WITH emb AS ($embSql),
        |q AS ($qSql),
-       |r0 AS (
+       |r0 AS MATERIALIZED (
        |  SELECT e.id, e.v, round(list_cosine_similarity(e.v, q.qv), 7) AS rel,
        |         0.0 AS maxsim
        |  FROM emb e, q ORDER BY rel DESC, id LIMIT $shortlist
-       |), sims AS (
+       |), sims AS MATERIALIZED (
        |  SELECT l.id AS a, r.id AS b,
        |         round(list_cosine_similarity(l.v, r.v), 7) AS s
        |  FROM r0 l JOIN r0 r ON l.id <> r.id

@@ -347,14 +347,9 @@ object SpatialLayout {
         // materialize before the write: the dynamic overwrite deletes the
         // very partitions this plan reads at commit time
         .localCheckpoint(true)
-      val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try merged.repartition(col("__bucket")).sortWithinPartitions("__sfc")
-        .write.mode("overwrite").partitionBy("__bucket").parquet(path)
-      finally prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      merged.repartition(col("__bucket")).sortWithinPartitions("__sfc")
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__bucket").parquet(path)
       "partial"
     }
   }
@@ -406,25 +401,19 @@ object SpatialLayout {
     val before = existing.filter(col("__bucket").isin(touched: _*)).count()
     val keptBuckets = kept.select("__bucket").distinct()
       .collect().map(_.getInt(0)).toSet
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      if (keptBuckets.nonEmpty)
-        kept.repartition(col("__bucket")).sortWithinPartitions("__sfc")
-          .write.mode("overwrite").partitionBy("__bucket").parquet(path)
-      // dynamic overwrite only replaces partitions PRESENT in the written
-      // data — a bucket whose rows were ALL deleted must be dropped directly
-      val emptied = touched.filterNot(keptBuckets)
-      if (emptied.nonEmpty) {
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-        emptied.foreach { b =>
-          fs.delete(new org.apache.hadoop.fs.Path(path, s"__bucket=$b"), true)
-        }
+    if (keptBuckets.nonEmpty)
+      kept.repartition(col("__bucket")).sortWithinPartitions("__sfc")
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__bucket").parquet(path)
+    // dynamic overwrite only replaces partitions PRESENT in the written
+    // data — a bucket whose rows were ALL deleted must be dropped directly
+    val emptied = touched.filterNot(keptBuckets)
+    if (emptied.nonEmpty) {
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+      emptied.foreach { b =>
+        fs.delete(new org.apache.hadoop.fs.Path(path, s"__bucket=$b"), true)
       }
-    } finally prevMode match {
-      case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
     before - kept.count()
   }
@@ -485,14 +474,9 @@ object SpatialLayout {
         .filter(col("__bucket").isin(frag: _*))
         .withColumn("__bucket", col("__bucket").cast("int"))
         .localCheckpoint(true)
-      val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try rows.repartition(col("__bucket")).sortWithinPartitions("__sfc")
-        .write.mode("overwrite").partitionBy("__bucket").parquet(path)
-      finally prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      rows.repartition(col("__bucket")).sortWithinPartitions("__sfc")
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__bucket").parquet(path)
       frag.size
     }
   }

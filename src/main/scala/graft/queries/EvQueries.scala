@@ -15,7 +15,6 @@ object EvQueries {
     // two-level prefix sum (per-hour offsets + within-hour running sum) —
     // no global-order window anywhere in the plan
     QuerySpec("ev_concurrency", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
         expr("ts div 1000").as("tsn"), col("value"))
       Events.maxConcurrency(Events.sessionize(ev, 4L * 3600L * 1000000L))
@@ -39,7 +38,6 @@ object EvQueries {
     // per-user extents (output-proportional, no calendar cross join), one
     // user shuffle serves the join and the carry-forward window
     QuerySpec("ev_gapfill", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = T(s, dir, "events").filter(col("user_id") % 50 === 0)
         .select(col("user_id"), expr("ts div 1000").as("tsn"), col("value"))
       Events.gapFillLocf(ev)
@@ -51,9 +49,6 @@ object EvQueries {
           |)""".stripMargin)),
 
     QuerySpec("ev_top_users", (s, dir) => {
-      // events.ts is parquet TIMESTAMP(NANOS) which Spark 4 rejects by
-      // default; read it as long nanos (we don't use ts here)
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       T(s, dir, "events").groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("user_id"))
@@ -89,8 +84,7 @@ object EvQueries {
         |ORDER BY gid, coalesce(event_type, ''), coalesce(band, -1)""".stripMargin),
 
     QuerySpec("ev_hourly", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ts arrives as long nanos (see ev_top_users); integer `div` keeps the
+      // ts arrives as long nanos (the T reader); integer `div` keeps the
       // bucket arithmetic exact (a double division would lose precision at
       // 1e18-scale nanos)
       T(s, dir, "events")
@@ -107,7 +101,6 @@ object EvQueries {
     // gap sessionization (4 h): one shuffle on user_id, windows + session
     // aggregate all inside that partitioning — see Events.sessionize
     QuerySpec("ev_sessions", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // µs granularity (`div 1000`): DuckDB truncates the NANOS timestamp
       // to TIMESTAMP (µs) on read, so the oracle can only see epoch_us
       val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
@@ -133,7 +126,6 @@ object EvQueries {
     // as-of join: each purchase ← latest strictly-prior click of the same
     // user, as ONE window over the union (no join) — see Events.asofJoin
     QuerySpec("ev_asof", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // µs granularity — see ev_sessions
       val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
         expr("ts div 1000").as("tsn"), col("event_type"), col("value"))
@@ -160,7 +152,6 @@ object EvQueries {
     // so both engines compute bit-identical doubles; NULL when the pooled
     // rate degenerates to 0 or 1). One user rollup, one tiny agg
     QuerySpec("ev_ab_test", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = T(s, dir, "events").select(col("user_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("cents"))
       val users = ev.groupBy("user_id").agg(
@@ -222,7 +213,6 @@ object EvQueries {
     // global window), 2·R_A and 2·U_A stay integers, and the tie-corrected
     // z is one closed form over them (bit-identical cross-engine)
     QuerySpec("ev_mannwhitney", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val perUser = T(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -274,7 +264,6 @@ object EvQueries {
     // the CDF gap is maximised as an exact integer cross-product over one
     // multi-column prefix-sum pass (never a global window)
     QuerySpec("ev_ks", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val perUser = T(s, dir, "events")
         .select(col("user_id"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -315,7 +304,6 @@ object EvQueries {
     // combinable flat-map expansion, distributed rank for the percentile
     // bounds; the interval the ev_ab_test point estimate ships with
     QuerySpec("ev_bootstrap", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val perUser = T(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -380,7 +368,6 @@ object EvQueries {
     // platform ships beside the fixed-horizon ev_ab_test; day-level
     // aggregate first, running sums only over the bounded day table
     QuerySpec("ev_msprt", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val obs = T(s, dir, "events")
         .filter(col("event_type") === "purchase")
         .select(expr("(ts div 1000) div 86400000000").as("day"),
@@ -396,7 +383,6 @@ object EvQueries {
     // moved mass, not just the mean (exact percentile over the per-user
     // table, the same interpolation contract ev_quantiles pinned)
     QuerySpec("ev_qte", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val users = T(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -450,7 +436,6 @@ object EvQueries {
     // reads out many metrics; p via the A&S erfc polynomial, identical
     // text in both engines (Events.welchBh)
     QuerySpec("ev_bh", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val obs = T(s, dir, "events")
         .select(col("event_type"), (col("user_id") % 2).cast("long").as("v"),
           round(col("value") * 100).cast("long").as("x"))
@@ -463,7 +448,6 @@ object EvQueries {
     // readout; rank-based order statistics (integer cents, exact sums),
     // distributed ranks, no per-variant global window
     QuerySpec("ev_winsor", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val users = T(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -479,7 +463,6 @@ object EvQueries {
     // age-in-days), plus the running LTV curve — integer cumsum per cohort,
     // one user shuffle for the cohort min then day-level aggregates only
     QuerySpec("ev_ltv", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = T(s, dir, "events").select(col("user_id"),
         expr("(ts div 1000) div 86400000000").as("day"), col("event_type"),
         round(col("value") * 100).cast("long").as("cents"))
@@ -519,7 +502,6 @@ object EvQueries {
     // time window) over ONE user-keyed shuffle, exact integer cents; this is
     // the training-feature extraction pass of a behavioral model pipeline
     QuerySpec("ev_lag_features", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
         expr("ts div 1000").as("tsn"), col("event_type"),
         round(col("value") * 100).cast("long").as("cents"))
@@ -559,7 +541,6 @@ object EvQueries {
     // (-1 = unattributed) — the classic marketing-attribution rollup as one
     // user-keyed window pass, exact integer cents (Events.lastTouchAttribution)
     QuerySpec("ev_attribution", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
         expr("ts div 1000").as("tsn"), col("event_type"), col("value"))
       Events.lastTouchAttribution(ev)
@@ -570,7 +551,6 @@ object EvQueries {
     // splits (no float credit): per-user band join pairs clicks with
     // purchases in the 7-day lookback; every aggregate stays integer
     QuerySpec("ev_multitouch", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
         expr("ts div 1000").as("tsn"), col("event_type"), col("value"))
       Events.multiTouchAttribution(ev)
@@ -607,7 +587,6 @@ object EvQueries {
     // a deterministic ntile total order, then segment populations — the
     // windows run over the USER rollup (events-volume never re-shuffles)
     QuerySpec("ev_rfm", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
         expr("ts div 1000").as("tsn"), col("event_type"), col("value"))
       Events.rfmSegments(ev)
@@ -619,7 +598,6 @@ object EvQueries {
     // cartesian product; Events.intervalJoin runs it as the 1-D grid plan
     // (cell equi-join, ≤3-cell fan-out). Cent-sums keep the aggregate exact
     QuerySpec("ev_interval_join", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = T(s, dir, "events").select(col("event_id"),
         expr("ts div 1000").as("tsn"), col("event_type"), col("value"))
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -645,7 +623,6 @@ object EvQueries {
     // set-algebra-capable sibling of ev_hll (HLL unions but cannot
     // intersect); rank-cut window = WindowGroupLimit per-partition top-k
     QuerySpec("ev_kmv", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       Events.kmvDistinct(T(s, dir, "events"))
     },
       Events.kmvDistinctDuckSql()),
@@ -654,13 +631,11 @@ object EvQueries {
     // view and click user sets from the two k-row sketches (the merge
     // input is 2k constant rows — bounded at any corpus size)
     QuerySpec("ev_kmv_ops", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       Events.kmvSetOps(T(s, dir, "events"), "view", "click")
     },
       Events.kmvSetOpsDuckSql("view", "click")),
 
     QuerySpec("ev_hll", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val fnv = udf((x: Long) => TextAnalysis.fnv1a64(x.toString))
       val ev = T(s, dir, "events")
       def sketch(c: String, metric: String) =
@@ -708,7 +683,6 @@ object EvQueries {
     // questions — the mergeable-sketch reason HLL is the 100 TB shape
     QuerySpec("ev_hll_intersect", (s, dir) => {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val fnv = udf((x: Long) => TextAnalysis.fnv1a64(x.toString))
       val ev = T(s, dir, "events").filter(col("event_type").isin("click", "view"))
       val hashed = ev.select(col("event_type").as("g"), fnv(col("user_id")).as("h"))
@@ -760,7 +734,6 @@ object EvQueries {
     // oracle-checkable variant; at 100 TB swap in approx_percentile (KLL
     // sketch, same call shape) since exact percentile buffers each group
     QuerySpec("ev_quantiles", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       T(s, dir, "events").groupBy(col("event_type"))
         .agg(expr("percentile(value, array(0.5D, 0.9D, 0.99D))").as("q"))
         .select(col("event_type"),
@@ -1023,7 +996,6 @@ object EvQueries {
     // ordered funnel view → click → purchase within 48 h of the first
     // view — chained running-min windows, one shuffle (Events.funnel)
     QuerySpec("ev_funnel", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = T(s, dir, "events").select(col("user_id"), col("event_id"),
         expr("ts div 1000").as("tsn"), col("event_type"))
       Events.funnel(ev, Seq("view", "click", "purchase"), 48L * 3600L * 1000000L)
@@ -1059,7 +1031,6 @@ object EvQueries {
     // cohort retention: first-active-day cohorts × day offset — the
     // user-growth matrix every analytics stack reports (Events.retention)
     QuerySpec("ev_retention", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = T(s, dir, "events").select(col("user_id"),
         expr("ts div 1000").as("tsn"))
       Events.retention(ev).orderBy(col("cohort_day"), col("day_offset"))
@@ -1075,7 +1046,6 @@ object EvQueries {
     // estimated from a fixed 4×512 counter grid (est ≥ exact always; the
     // sketch build is map-side combinable — the 100 TB frequency story)
     QuerySpec("ev_cms", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = T(s, dir, "events")
       val sk = CountMin.sketch(ev, "user_id")
       val exact = ev.groupBy("user_id").agg(count(lit(1)).as("n_exact"))
@@ -1106,7 +1076,6 @@ object EvQueries {
     // z-score anomalies over hourly per-type counts: integer-exact moment
     // sums -> bit-reproducible mean/std, per-type stats broadcast
     QuerySpec("ev_anomaly", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       Events.anomalies(T(s, dir, "events"), z = 2.0)
         .orderBy(col("event_type"), col("hour_idx"))
     },
@@ -1116,7 +1085,6 @@ object EvQueries {
     // exact dedup): lag rule on (user, type), one shuffle reused by window
     // and aggregate
     QuerySpec("ev_dedup_window", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       Events.dedupWindow(T(s, dir, "events"), windowNs = 6L * 3600 * 1000000000L)
         .orderBy(col("user_id"), col("event_type"))
     },
@@ -1127,7 +1095,6 @@ object EvQueries {
     // partitions rewrite (dynamic overwrite); the read-back table must
     // equal the oracle's full recompute
     QuerySpec("ev_daily_mv", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = T(s, dir, "events")
       val dayNs = 86400000000000L
       val mm = ev.agg(min(expr(s"ts div $dayNs")), max(expr(s"ts div $dayNs"))).head()
@@ -1152,7 +1119,6 @@ object EvQueries {
     // mergeable-sketch storage pattern; the oracle replays a SINGLE-pass
     // HLL, so the hash match proves the daily-merge path is lossless
     QuerySpec("ev_hll_rollup", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val fnv = udf((x: Long) => TextAnalysis.fnv1a64(x.toString))
       Events.hllRollup(T(s, dir, "events").select(
           col("event_type").as("g"),
@@ -1179,7 +1145,6 @@ object EvQueries {
     // map-side combine caps the exchange at |types|·1024 rows at ANY corpus
     // size; integer rank test, binary-exact bin edges
     QuerySpec("ev_hist_quantiles", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       Events.histQuantiles(T(s, dir, "events"))
     },
       Events.histQuantilesDuckSql()),
@@ -1187,7 +1152,6 @@ object EvQueries {
     // first-order Markov transitions over per-user event sequences: one
     // user_id exchange for the lag window, pair counts + exact-ratio probs
     QuerySpec("ev_markov", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       Events.transitions(T(s, dir, "events"))
     },
       Events.transitionsDuckSql),
@@ -1195,7 +1159,6 @@ object EvQueries {
     // explicitly SALTED fact-to-dim enrichment join (dim replicated ×salts,
     // fact never inflates) — same result as unsalted, pinned by EventsSpec
     QuerySpec("ev_salted_join", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       Events.saltedUserMaxHits(T(s, dir, "events"), salts = 8)
     },
       Events.saltedUserMaxHitsDuckSql),

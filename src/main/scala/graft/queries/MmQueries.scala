@@ -58,11 +58,6 @@ object MmQueries {
       |WHERE bit_count(xor(a.sig, b.sig)) <= 3
       |ORDER BY id_a, id_b""".stripMargin
 
-  /** mm_audio oracle: sampleWaveform's stub decode replayed for audio-kind
-    * rows (i % 3 = 1) — the SAME chain as MmDecodeSql; sample index
-    * step-65 buckets into 32-wide windows, float division replicated before
-    * the double aggregation.
-    */
   /** mm_audio oracle: the REAL WAV decode replayed from the lossless
     * loud/quiet amplitude pattern (pattern·257 − 32768 PCM shorts decode
     * to exactly pattern/255f — 65535 = 255·257).
@@ -234,11 +229,7 @@ object MmQueries {
     // native-dims decode, lossless pattern replayed by the oracle
     QuerySpec("mm_decode", (s, dir) => {
       val media = Multimodal.syntheticImagePng(s, 300)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val decoded =
-        try Multimodal.decodeAndFeaturize(media, 8, 8)
-        finally s.conf.set("spark.graft.mm.codec", prev)
+      val decoded = Multimodal.decodeAndFeaturize(media, 8, 8)
       decoded.select(col("media_id"),
           round(aggregate(col("pixels"), lit(0.0d), (a, v) => a + v.cast("double")), 4).as("pixel_sum"))
         .orderBy(col("media_id"))
@@ -249,8 +240,8 @@ object MmQueries {
     // RGB patterns are ENCODED as genuine uncompressed 24-bit BMP byte
     // streams (odd ids top-down/negative-height, even ids bottom-up, row
     // stride 4-byte padded — all three layout quirks exercised), then
-    // DECODED back through the pure-JVM BMP codec selected by
-    // spark.graft.mm.codec=bmp. Pixel luma is integer arithmetic
+    // DECODED back through the pure-JVM BMP codec their signature
+    // selects. Pixel luma is integer arithmetic
     // end-to-end, so the oracle replays the exact per-image luma sums
     // WITHOUT parsing bytes — equality proves encode→decode is the
     // identity on the pattern, i.e. the decoder really reads BMP
@@ -275,12 +266,7 @@ object MmQueries {
       })
       val media = s.range(0, 40).select(col("id").as("media_id"),
         enc(col("id")).as("bytes"))
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "bmp")
-      // the codec choice is captured at plan build — restore right after
-      val decoded =
-        try Multimodal.decodeAndFeaturize(media, 15, 12)
-        finally s.conf.set("spark.graft.mm.codec", prev)
+      val decoded = Multimodal.decodeAndFeaturize(media, 15, 12)
       decoded.select(col("media_id"), size(col("pixels")).cast("long").as("n_px"),
           aggregate(col("pixels"), lit(0L),
             (a, v) => a + round(v.cast("double") * 255).cast("long")).as("px_sum"))
@@ -294,11 +280,11 @@ object MmQueries {
         |FROM range(0, 40) t(i), range(0, 15) xs(x), range(0, 12) ys(y)
         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    // REAL PNG decode (the second real format behind the codec seam): 40
+    // REAL PNG decode (the second real format behind the decode seam): 40
     // deterministic 15×12 RGB patterns ENCODED as genuine zlib-deflated
     // truecolor PNGs — row filter i%5 (all five unfilter paths exercised),
     // odd ids RGBA color type 6 / even ids RGB color type 2 — then DECODED
-    // through the pure-JVM PNG codec (spark.graft.mm.codec=png). Integer
+    // through the pure-JVM PNG codec their signature selects. Integer
     // luma end-to-end, so the oracle replays per-image sums from the
     // pattern formula without parsing bytes; equality proves the inflate +
     // unfilter + luma path really reads PNG
@@ -323,12 +309,7 @@ object MmQueries {
       })
       val media = s.range(0, 40).select(col("id").as("media_id"),
         enc(col("id")).as("bytes"))
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      // the codec choice is captured at plan build — restore right after
-      val decoded =
-        try Multimodal.decodeAndFeaturize(media, 15, 12)
-        finally s.conf.set("spark.graft.mm.codec", prev)
+      val decoded = Multimodal.decodeAndFeaturize(media, 15, 12)
       decoded.select(col("media_id"), size(col("pixels")).cast("long").as("n_px"),
           aggregate(col("pixels"), lit(0L),
             (a, v) => a + round(v.cast("double") * 255).cast("long")).as("px_sum"))
@@ -370,12 +351,7 @@ object MmQueries {
       })
       val media = s.range(0, 40).select(col("id").as("media_id"),
         enc(col("id")).as("bytes"))
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "jpeg")
-      // the codec choice is captured at plan build — restore right after
-      val decoded =
-        try Multimodal.decodeAndFeaturize(media, 20, 12)
-        finally s.conf.set("spark.graft.mm.codec", prev)
+      val decoded = Multimodal.decodeAndFeaturize(media, 20, 12)
       decoded.select(col("media_id"), size(col("pixels")).cast("long").as("n_px"),
           aggregate(col("pixels"), lit(0L),
             (a, v) => a + round(v.cast("double") * 255).cast("long")).as("px_sum"))
@@ -397,18 +373,14 @@ object MmQueries {
     // video-kind duplicates (i ≡ 8 mod 9 shares the seed of i-6, both
     // video-kind since 8 ≡ 2 ≡ (8-6) mod 3)
     QuerySpec("mm_video_dedup", (s, dir) => {
-      // REAL frame decode by default: videos are
+      // REAL frame decode: videos are
       // length-prefixed containers of genuine 16×16 PNG frames; the
       // planted duplicates (i ≡ 8 mod 9 share i−6's seed) have
       // byte-different per-frame encodings (filter keyed on the id) of
       // identical pixels — frame-set Jaccard 1 only under a real decode
       val media = Multimodal.syntheticVideoPng(s, 300,
         i => if (i % 9 == 8) i - 6 else i, frames = 8)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val frames =
-        try Multimodal.sampleFrames(media, n = 8, w = 16, h = 16)
-        finally s.conf.set("spark.graft.mm.codec", prev)
+      val frames = Multimodal.sampleFrames(media, n = 8, w = 16, h = 16)
       Multimodal.videoNearDupPairs(frames, threshold = 0.5)
         .orderBy(col("id_a"), col("id_b"))
     },
@@ -443,18 +415,14 @@ object MmQueries {
         |ORDER BY 1, 2""".stripMargin),
 
     QuerySpec("mm_phash", (s, dir) => {
-      // REAL decode by default: genuine 8×8 PNGs, the
+      // REAL decode: genuine 8×8 PNGs, the
       // planted duplicates (i ≡ 3 mod 9 → i−3) are byte-DIFFERENT
       // encodings (row filter keyed on the original id) of IDENTICAL
       // pixels — only a real decode collides them; the retired FNV stub
       // could not (it avalanches on bytes)
       val media = Multimodal.syntheticImagePng(s, 300,
         i => if (i % 9 == 3) i - 3 else i)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val pairs =
-        try Multimodal.phashNearDupPairs(media, maxHamming = 3)
-        finally s.conf.set("spark.graft.mm.codec", prev)
+      val pairs = Multimodal.phashNearDupPairs(media, maxHamming = 3)
       pairs.orderBy(col("id_a"), col("id_b"))
     },
       MmPhashSql),
@@ -469,10 +437,7 @@ object MmQueries {
     QuerySpec("mm_audio_match", (s, dir) => {
       val media = Multimodal.syntheticAudioWav(s, 300,
         seedOf = i => if (i % 9 == 4) i - 3 else i)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "wav")
-      try Multimodal.constellationMatches(media)
-      finally s.conf.set("spark.graft.mm.codec", prev)
+      Multimodal.constellationMatches(media)
     },
       MmAudioMatchSql),
 
@@ -481,11 +446,7 @@ object MmQueries {
     // VAD/loudness shape); the lossless amplitude pattern replays in SQL
     QuerySpec("mm_audio", (s, dir) => {
       val media = Multimodal.syntheticAudioWav(s, 300)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "wav")
-      val wv =
-        try Multimodal.sampleWaveform(media, windows = 8, samplesPerWindow = 32)
-        finally s.conf.set("spark.graft.mm.codec", prev)
+      val wv = Multimodal.sampleWaveform(media, windows = 8, samplesPerWindow = 32)
       wv.select(col("media_id"), col("window_idx").cast("long").as("window_idx"),
           round(col("sample_sum"), 4).as("sample_sum"),
           round(col("peak"), 6).as("peak"))
@@ -500,26 +461,18 @@ object MmQueries {
     // amplitude sums, so the threshold replays order-free in the oracle
     QuerySpec("mm_vad", (s, dir) => {
       val media = Multimodal.syntheticAudioWav(s, 300)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "wav")
-      val segs =
-        try Multimodal.vadSegments(media, windows = 8, samplesPerWindow = 32,
-          threshold = 0.5)
-        finally s.conf.set("spark.graft.mm.codec", prev)
+      val segs = Multimodal.vadSegments(media, windows = 8, samplesPerWindow = 32,
+        threshold = 0.5)
       segs.orderBy(col("media_id"), col("seg_idx"))
     },
       MmVadSql),
 
-    // frame sampling over video-kind media — REAL by default:
+    // frame sampling over video-kind media — REAL decode:
     // container slice → PNG decode per frame; the oracle
     // replays the lossless frame pattern in integer SQL
     QuerySpec("mm_frames", (s, dir) => {
       val media = Multimodal.syntheticVideoPng(s, 300, frames = 4)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val frames =
-        try Multimodal.sampleFrames(media, n = 4, w = 16, h = 16)
-        finally s.conf.set("spark.graft.mm.codec", prev)
+      val frames = Multimodal.sampleFrames(media, n = 4, w = 16, h = 16)
       frames
         .select(col("media_id"), col("frame_idx").cast("long").as("frame_idx"),
           round(aggregate(col("pixels"), lit(0.0d), (a, v) => a + v.cast("double")), 4).as("pixel_sum"))
@@ -532,11 +485,7 @@ object MmQueries {
     // position-weighted checksum the oracle replays from the PNG pattern
     QuerySpec("mm_resize", (s, dir) => {
       val media = Multimodal.syntheticImagePng(s, 300)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val px =
-        try Multimodal.decodeAndFeaturize(media, w = 8, h = 8)
-        finally s.conf.set("spark.graft.mm.codec", prev)
+      val px = Multimodal.decodeAndFeaturize(media, w = 8, h = 8)
       Multimodal.boxResize(px, srcW = 8, srcH = 8, dstW = 4, dstH = 4)
         .select(col("media_id"),
           expr("""aggregate(zip_with(pixels, sequence(1, 16),
@@ -562,19 +511,15 @@ object MmQueries {
         |       CAST(16 AS BIGINT) AS n_px
         |FROM blocks GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    // the full multimodal→embedding→ANN composition: stub-decode images to
+    // the full multimodal→embedding→ANN composition: PNG-decode images to
     // 8×8 pixels, pool 8 blocks of 8 into an EXACT integer embedding
     // (recovered pixel levels sum losslessly), then brute-force cosine
     // top-3 — integer dots/norms make every cosine one IEEE op chain, so
-    // ranks are bit-deterministic across engines, swap the stub for a real
+    // ranks are bit-deterministic across engines, swap the pooling for a real
     // CNN and the dataflow is unchanged
     QuerySpec("mm_embed_knn", (s, dir) => {
       val media = Multimodal.syntheticImagePng(s, 300)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val decoded =
-        try Multimodal.decodeAndFeaturize(media, w = 8, h = 8)
-        finally s.conf.set("spark.graft.mm.codec", prev)
+      val decoded = Multimodal.decodeAndFeaturize(media, w = 8, h = 8)
       val emb = decoded
         .select(col("media_id"), expr(
           """transform(sequence(0, 7), b -> aggregate(slice(pixels, b*8 + 1, 8), 0L,
@@ -634,11 +579,7 @@ object MmQueries {
     // both occur
     QuerySpec("mm_scenes", (s, dir) => {
       val media = Multimodal.syntheticVideoPng(s, 300, frames = 12)
-      val prev = s.conf.get("spark.graft.mm.codec", "stub")
-      s.conf.set("spark.graft.mm.codec", "png")
-      val frames =
-        try Multimodal.sampleFrames(media, n = 12)
-        finally s.conf.set("spark.graft.mm.codec", prev)
+      val frames = Multimodal.sampleFrames(media, n = 12)
       Multimodal.sceneSegments(frames, threshold = 5.5)
         .orderBy(col("media_id"), col("scene_id"))
     },

@@ -167,10 +167,7 @@ class Round8Spec extends SparkSpec {
       graft.pipeline.ImageCodec.encodeBmp(16, 16, rgb, topDown))
     val media = spark.range(0, 2).select(col("id").as("media_id"),
       lit("image").as("kind"), enc(col("id") === 1).as("bytes"))
-    spark.conf.set("spark.graft.mm.codec", "bmp")
-    val sigs =
-      try graft.pipeline.Multimodal.phash64(media).collect()
-      finally spark.conf.set("spark.graft.mm.codec", "stub")
+    val sigs = graft.pipeline.Multimodal.phash64(media).collect()
     assert(sigs.length == 2)
     val bySig = sigs.map(r => r.getAs[Long]("sig")).distinct
     // the FNV stub CANNOT do this: the two byte streams differ (row order)
@@ -311,10 +308,7 @@ class Round8Spec extends SparkSpec {
     val enc = udf((ft: Int) => graft.pipeline.ImageCodec.encodePng(16, 16, rgb, ft))
     val media = spark.range(0, 5).select(col("id").as("media_id"),
       lit("image").as("kind"), enc(col("id").cast("int")).as("bytes"))
-    spark.conf.set("spark.graft.mm.codec", "png")
-    val sigs =
-      try graft.pipeline.Multimodal.phash64(media).collect()
-      finally spark.conf.set("spark.graft.mm.codec", "stub")
+    val sigs = graft.pipeline.Multimodal.phash64(media).collect()
     assert(sigs.length == 5)
     val bySig = sigs.map(r => r.getAs[Long]("sig")).distinct
     // five byte-different streams (one per filter type), one pixel grid

@@ -260,31 +260,27 @@ class Round9Spec extends SparkSpec {
     import graft.pipeline.Multimodal
     val media = Multimodal.syntheticVideoPng(spark, 9, frames = 3)
     assert(media.select("media_id").as[Long].collect().toSet == Set(2L, 5L, 8L))
-    val prev = spark.conf.get("spark.graft.mm.codec", "stub")
-    spark.conf.set("spark.graft.mm.codec", "png")
-    try {
-      val fr = Multimodal.sampleFrames(media, n = 3, w = 16, h = 16)
-        .select(col("media_id"), col("frame_idx"), col("pixels"))
-        .as[(Long, Int, Seq[Float])].collect()
-      assert(fr.length == 9)
-      // frame (s=2, f=1) must equal the lossless pattern's luma/255f
-      val got = fr.find(r => r._1 == 2L && r._2 == 1).get._3
-      val k = ((2L * 2 * 31 + 1 * 1 * 17 + 1 * 2 * 5) % 200 + 28).toInt
-      val want = (0 until 256).map { p =>
-        (if (p < k) 255 else (p * 3) % 64).toFloat / 255.0f
-      }
-      assert(got == want, "real container decode diverged from the pattern")
-      // n < total: evenly spaced sampling still decodes (frame 0 for n=1)
-      val one = Multimodal.sampleFrames(media, n = 1, w = 16, h = 16)
-      assert(one.count() == 3)
-      // torn container fails loudly, never a silent stub fallback
-      val torn = media.select(col("media_id"), col("kind"),
-        expr("substring(bytes, 1, 10)").as("bytes"))
-      val e = intercept[Exception] {
-        Multimodal.sampleFrames(torn, n = 1, w = 16, h = 16).collect()
-      }
-      assert(e.getMessage != null)
-    } finally spark.conf.set("spark.graft.mm.codec", prev)
+    val fr = Multimodal.sampleFrames(media, n = 3, w = 16, h = 16)
+      .select(col("media_id"), col("frame_idx"), col("pixels"))
+      .as[(Long, Int, Seq[Float])].collect()
+    assert(fr.length == 9)
+    // frame (s=2, f=1) must equal the lossless pattern's luma/255f
+    val got = fr.find(r => r._1 == 2L && r._2 == 1).get._3
+    val k = ((2L * 2 * 31 + 1 * 1 * 17 + 1 * 2 * 5) % 200 + 28).toInt
+    val want = (0 until 256).map { p =>
+      (if (p < k) 255 else (p * 3) % 64).toFloat / 255.0f
+    }
+    assert(got == want, "real container decode diverged from the pattern")
+    // n < total: evenly spaced sampling still decodes (frame 0 for n=1)
+    val one = Multimodal.sampleFrames(media, n = 1, w = 16, h = 16)
+    assert(one.count() == 3)
+    // torn container fails loudly, never a silent stub fallback
+    val torn = media.select(col("media_id"), col("kind"),
+      expr("substring(bytes, 1, 10)").as("bytes"))
+    val e = intercept[Exception] {
+      Multimodal.sampleFrames(torn, n = 1, w = 16, h = 16).collect()
+    }
+    assert(e.getMessage.contains("torn frame"), e.getMessage)
   }
 
   test("ksTest overflow guard fires via division (no wrapping product)") {

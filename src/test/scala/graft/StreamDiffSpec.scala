@@ -68,7 +68,6 @@ class StreamDiffSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-sdiff-cells").toString
     val srcDir = s"$dir/in"
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val events = graft.pipeline.Events.normalizeEventTs(
         spark.read.parquet(s"$sfDir/events.parquet"))
       .select(col("event_id"),
