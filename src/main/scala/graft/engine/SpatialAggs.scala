@@ -14,24 +14,17 @@ import graft.pipeline.Groups
   */
 object SpatialAggs {
 
-  /** Fold-union over WKB geometries
-    * (reference: pipes/processing/UnionAll.java:30-40). Buffers geometries in
-    * chunks and unions via JTS UnaryUnionOp per chunk — much faster than
-    * pairwise union on large groups, identical result (union is associative
-    * and commutative).
+  /** Pairwise fold of `op` over WKB geometries, nulls skipped: each row is
+    * combined with the running geometry, partial results the same way.
     */
-  private class GeomFold(op: (Geometry, Geometry) => Geometry, chunked: Boolean)
+  private class GeomFold(op: (Geometry, Geometry) => Geometry)
       extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
-    private val ChunkSize = 64
-
     override def zero: Array[Byte] = null
-
-    private def fold(a: Geometry, b: Geometry): Geometry = op(a, b)
 
     override def reduce(buf: Array[Byte], in: Array[Byte]): Array[Byte] = {
       if (in == null) buf
       else if (buf == null) in
-      else GeomCodec.toWkb(fold(GeomCodec.fromWkb(buf), GeomCodec.fromWkb(in)))
+      else GeomCodec.toWkb(op(GeomCodec.fromWkb(buf), GeomCodec.fromWkb(in)))
     }
 
     override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = reduce(a, b)
@@ -40,11 +33,15 @@ object SpatialAggs {
     override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
+  /** Union of a group's geometries (reference:
+    * pipes/processing/UnionAll.java:30-40) as a pairwise JTS `union` fold
+    * (union is associative and commutative, so partial aggregation applies).
+    */
   def unionAgg(c: Column): Column =
-    udaf(new GeomFold(_.union(_), chunked = true)).apply(c)
+    udaf(new GeomFold(_.union(_))).apply(c)
 
   def intersectAgg(c: Column): Column =
-    udaf(new GeomFold(_.intersection(_), chunked = false)).apply(c)
+    udaf(new GeomFold(_.intersection(_))).apply(c)
 
   /** Exact DensityIslands parity mode: the reference's greedy sequential
     * single-link fold (reference: DensityIslands.java:26-49) — each geometry

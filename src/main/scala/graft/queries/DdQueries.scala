@@ -10,6 +10,19 @@ import graft.queries.Shared._
   */
 object DdQueries {
 
+  /** Oracle CTEs of the word-4-gram shingling: tokens `toks`, each
+    * document's distinct shingles `sets` and one row per shingle `sh`.
+    */
+  private val ShingleSetsCtes =
+    """WITH toks AS (
+      |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS ts
+      |  FROM documents
+      |), sets AS (
+      |  SELECT doc_id, list_distinct(list_transform(range(len(ts) - 3), i ->
+      |    array_to_string(ts[i+1:i+4], ' '))) AS ss
+      |  FROM toks
+      |), sh AS (SELECT doc_id, unnest(ss) AS s FROM sets)""".stripMargin
+
   /** dd_simhash_pairs oracle: the same 24-bit polynomial simhash computed in
     * DuckDB (generator kept beside the Spark expression — Dedup.polySimhash),
     * O(n²) Hamming self-join (fine at oracle scale).
@@ -105,14 +118,7 @@ object DdQueries {
           threshold = 0.2, shingleK = 4)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy(col("id_a"), col("id_b")),
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS ts
-        |  FROM documents
-        |), sets AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(len(ts) - 3), i ->
-        |    array_to_string(ts[i+1:i+4], ' '))) AS ss
-        |  FROM toks
-        |), sh AS (SELECT doc_id, unnest(ss) AS s FROM sets),
+      ShingleSetsCtes + """,
         |cand AS (
         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
@@ -136,14 +142,7 @@ object DdQueries {
         .orderBy(col("id_a"), col("id_b")),
       // directed pairs; the oracle needs no prefix logic — the final pair set
       // equals the plain shared-shingle plan's (recall is guaranteed)
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS ts
-        |  FROM documents
-        |), sets AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(len(ts) - 3), i ->
-        |    array_to_string(ts[i+1:i+4], ' '))) AS ss
-        |  FROM toks
-        |), sh AS (SELECT doc_id, unnest(ss) AS s FROM sets),
+      ShingleSetsCtes + """,
         |cand AS (
         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id <> b.doc_id
@@ -217,16 +216,7 @@ object DdQueries {
           round(col("cosine"), 6).as("cosine"))
         .orderBy(col("id_a"), col("id_b")),
       // same quantizer CTEs as sim_ivf_topk, pair join within cluster
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |sims AS (
-        |  SELECT e.vec_id AS id, e.v, c.cid, list_cosine_similarity(e.v, c.cv) AS s
-        |  FROM e CROSS JOIN c
-        |), assign AS (
-        |  SELECT id, v, cid FROM (
-        |    SELECT id, v, cid, row_number() OVER (PARTITION BY id ORDER BY s DESC, cid) AS rn
-        |    FROM sims) WHERE rn = 1
-        |)
+      IvfAssignCtes + """
         |SELECT a.cid, a.id AS id_a, b.id AS id_b,
         |       round(list_cosine_similarity(a.v, b.v), 6) AS cosine
         |FROM assign a JOIN assign b ON a.cid = b.cid AND a.id < b.id

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{CountMin, Dedup, Events, TextAnalysis}
@@ -9,6 +10,39 @@ import graft.queries.Shared._
   * rank statistics and time-series operators.
   */
 object EvQueries {
+
+  /** Per-user purchase cents `m` (0 for a user who never bought). */
+  private def purchaseCents(s: SparkSession, dir: String): DataFrame =
+    T(s, dir, "events")
+      .select(col("user_id"), col("event_type"),
+        round(col("value") * 100).cast("long").as("cents"))
+      .groupBy("user_id").agg(
+        sum(when(col("event_type") === "purchase", col("cents"))
+          .otherwise(0L)).as("m"))
+
+  /** Oracle select-list tail and FROM of [[purchaseCents]] per user, with
+    * the user's A/B `variant` (user_id parity).
+    */
+  private val PurchaseCentsSql =
+    """    CAST(sum(CASE WHEN event_type = 'purchase'
+      |      THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS m,
+      |    user_id % 2 AS variant
+      |  FROM events GROUP BY user_id
+      |)""".stripMargin
+
+  /** Oracle CTEs of `Events.sessionize` at a 4 h gap over `e` (user_id,
+    * event_id, tsn in µs): break flags `g`, then session numbers `s`.
+    */
+  private val SessionSeqCtes =
+    """g AS (
+      |  SELECT *, CASE WHEN lag(tsn) OVER w IS NULL
+      |                 OR tsn - lag(tsn) OVER w > 14400000000 THEN 1 ELSE 0 END AS brk
+      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsn, event_id)
+      |), s AS (
+      |  SELECT *, CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tsn, event_id
+      |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_seq
+      |  FROM g
+      |)""".stripMargin
 
   private[graft] val all: Seq[QuerySpec] = Seq(
     // max concurrent sessions per hour: sweep line as a distributed
@@ -20,16 +54,8 @@ object EvQueries {
       Events.maxConcurrency(Events.sessionize(ev, 4L * 3600L * 1000000L))
     },
       Events.maxConcurrencyDuckSql(
-        """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsn FROM events),
-          |g AS (
-          |  SELECT *, CASE WHEN lag(tsn) OVER w IS NULL
-          |                 OR tsn - lag(tsn) OVER w > 14400000000 THEN 1 ELSE 0 END AS brk
-          |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsn, event_id)
-          |), s AS (
-          |  SELECT *, CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tsn, event_id
-          |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_seq
-          |  FROM g
-          |), sess AS (
+        "WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsn FROM events),\n" +
+          SessionSeqCtes + """, sess AS (
           |  SELECT user_id, sess_seq, min(tsn) AS t_start, max(tsn) AS t_end
           |  FROM s GROUP BY 1, 2
           |)""".stripMargin)),
@@ -108,16 +134,8 @@ object EvQueries {
       Events.sessionize(ev, 4L * 3600L * 1000000L)
         .orderBy(col("user_id"), col("sess_seq"))
     },
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsn, value FROM events),
-        |g AS (
-        |  SELECT *, CASE WHEN lag(tsn) OVER w IS NULL
-        |                 OR tsn - lag(tsn) OVER w > 14400000000 THEN 1 ELSE 0 END AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsn, event_id)
-        |), s AS (
-        |  SELECT *, CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tsn, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_seq
-        |  FROM g
-        |)
+      "WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsn, value FROM events),\n" +
+        SessionSeqCtes + """
         |SELECT user_id, sess_seq, count(*) AS n_events,
         |       min(tsn) AS t_start, max(tsn) AS t_end,
         |       min(event_id) AS first_ev, round(sum(value), 4) AS sum_value
@@ -213,24 +231,13 @@ object EvQueries {
     // global window), 2·R_A and 2·U_A stay integers, and the tie-corrected
     // z is one closed form over them (bit-identical cross-engine)
     QuerySpec("ev_mannwhitney", (s, dir) => {
-      val perUser = T(s, dir, "events")
-        .select(col("user_id"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .groupBy("user_id").agg(
-          sum(when(col("event_type") === "purchase", col("cents"))
-            .otherwise(0L)).as("m"))
+      val perUser = purchaseCents(s, dir)
         .withColumn("variant", (col("user_id") % 2).cast("long"))
       Events.mannWhitney(perUser, "m", "variant")
     },
       // the identical exact rank algebra: DuckDB's window cumsum stands in
       // for the distributed prefix scan (single-node oracle, same integers)
-      """WITH u AS (
-        |  SELECT user_id,
-        |    CAST(sum(CASE WHEN event_type = 'purchase'
-        |      THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS m,
-        |    user_id % 2 AS variant
-        |  FROM events GROUP BY user_id
-        |), g AS (
+      "WITH u AS (\n  SELECT user_id,\n" + PurchaseCentsSql + """, g AS (
         |  SELECT m AS v, count(*)::BIGINT AS n_v,
         |         sum(CASE WHEN variant = 0 THEN 1 ELSE 0 END)::BIGINT AS a_v
         |  FROM u GROUP BY 1
@@ -304,22 +311,11 @@ object EvQueries {
     // combinable flat-map expansion, distributed rank for the percentile
     // bounds; the interval the ev_ab_test point estimate ships with
     QuerySpec("ev_bootstrap", (s, dir) => {
-      val perUser = T(s, dir, "events")
-        .select(col("user_id"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .groupBy("user_id").agg(
-          sum(when(col("event_type") === "purchase", col("cents"))
-            .otherwise(0L)).as("m"))
+      val perUser = purchaseCents(s, dir)
         .withColumn("variant", (col("user_id") % 2).cast("long"))
       Events.bootstrapDiff(perUser, "user_id", "m", "variant", reps = 200)
     },
-      """WITH u AS (
-        |  SELECT user_id AS uid,
-        |    CAST(sum(CASE WHEN event_type = 'purchase'
-        |      THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS m,
-        |    user_id % 2 AS variant
-        |  FROM events GROUP BY user_id
-        |), x AS (
+      "WITH u AS (\n  SELECT user_id AS uid,\n" + PurchaseCentsSql + """, x AS (
         |  SELECT uid, m, variant, r,
         |    (uid * 1103515245 + r * 12345 + 987654321) % 1000000 AS uu
         |  FROM u CROSS JOIN (SELECT unnest(range(0, 200)) AS r)
@@ -383,12 +379,7 @@ object EvQueries {
     // moved mass, not just the mean (exact percentile over the per-user
     // table, the same interpolation contract ev_quantiles pinned)
     QuerySpec("ev_qte", (s, dir) => {
-      val users = T(s, dir, "events")
-        .select(col("user_id"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .groupBy("user_id").agg(
-          sum(when(col("event_type") === "purchase", col("cents"))
-            .otherwise(0L)).as("m"))
+      val users = purchaseCents(s, dir)
         .withColumn("v", (col("user_id") % 2).cast("long"))
       val q = users.groupBy("v")
         .agg(expr("percentile(m, array(0.25D, 0.5D, 0.75D, 0.9D))").as("q"))
@@ -448,12 +439,7 @@ object EvQueries {
     // readout; rank-based order statistics (integer cents, exact sums),
     // distributed ranks, no per-variant global window
     QuerySpec("ev_winsor", (s, dir) => {
-      val users = T(s, dir, "events")
-        .select(col("user_id"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .groupBy("user_id").agg(
-          sum(when(col("event_type") === "purchase", col("cents"))
-            .otherwise(0L)).as("m"))
+      val users = purchaseCents(s, dir)
         .withColumn("v", (col("user_id") % 2).cast("long"))
       Events.winsorMeans(users, "user_id", "m", "v", frac = 0.05)
     },

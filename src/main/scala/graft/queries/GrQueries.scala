@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{Graphs, Groups, PageRank}
@@ -10,16 +11,111 @@ import graft.queries.Shared._
   */
 object GrQueries {
 
+  /** The customer→supplier trade graph: distinct (customer, supplier)
+    * pairs of lineitem⋈orders, node ids parity-disambiguated (customers
+    * even, suppliers odd).
+    */
+  private def tradePairs(s: SparkSession, dir: String): DataFrame =
+    T(s, dir, "lineitem")
+      .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
+      .distinct()
+
+  /** Oracle CTE `eraw` of [[tradePairs]]. */
+  private val TradePairsCte =
+    """eraw AS (
+      |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+      |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      |)""".stripMargin
+
+  /** An edge list and its reverse: the undirected graph as directed edges. */
+  private def bothWays(e: DataFrame): DataFrame =
+    e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+
+  /** Oracle CTEs `eraw`, `e` of `bothWays(tradePairs)`. */
+  private val TradeEdgesCte = TradePairsCte +
+    """, e AS (
+      |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
+      |)""".stripMargin
+
+  /** Seed nodes: the nation-0 customers. */
+  private def nation0Seeds(s: SparkSession, dir: String): DataFrame =
+    T(s, dir, "customer").filter(col("c_nationkey") === 0)
+      .select((col("c_custkey") * 2).as("node"))
+
+  /** Seed nodes: the landmark batch, every 500th customer. */
+  private def landmarkSeeds(s: SparkSession, dir: String): DataFrame =
+    T(s, dir, "customer").filter(col("c_custkey") % 500 === 1)
+      .select((col("c_custkey") * 2).as("node"))
+
+  /** Oracle of `Graphs.bfsPerSource(bothWays(tradePairs), landmarkSeeds,
+    * maxHop = 3)`: the recursive walk from every landmark, then `d(root,
+    * node, hop)` = the settle-first (minimum) hop per pair.
+    */
+  private val LandmarkHopsCtes = "WITH RECURSIVE " + TradeEdgesCte +
+    """, walk(root, node, hop) AS (
+      |  SELECT c_custkey * 2, c_custkey * 2, 0 FROM customer
+      |  WHERE c_custkey % 500 = 1
+      |  UNION
+      |  SELECT w.root, e.dst, w.hop + 1 FROM walk w JOIN e ON e.src = w.node
+      |  WHERE w.hop < 3
+      |), d AS (
+      |  SELECT root, node, min(hop) AS hop FROM walk GROUP BY 1, 2
+      |)""".stripMargin
+
+  /** The part co-order graph over `li` (a lineitem selection): one
+    * (src < dst) edge per pair of parts on the same order, once per order.
+    */
+  private def coOrderEdges(li: DataFrame): DataFrame = {
+    val p = li.select(col("l_orderkey"), col("l_partkey"))
+    p.as("x").join(p.as("y"),
+        col("x.l_orderkey") === col("y.l_orderkey") &&
+        col("x.l_partkey") < col("y.l_partkey"))
+      .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
+  }
+
+  /** Oracle CTE `und` of `coOrderEdges(lineitem)`, deduplicated. */
+  private val CoOrderCte =
+    """und AS (
+      |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
+      |  FROM lineitem x JOIN lineitem y
+      |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
+      |)""".stripMargin
+
+  /** Oracle CTE `tri`: every triangle of `und` once, as u < v < w. */
+  private val TrianglesCte =
+    """, tri AS (
+      |  SELECT e1.a AS u, e1.b AS v, e2.b AS w
+      |  FROM und e1 JOIN und e2 ON e2.a = e1.b
+      |  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b
+      |)""".stripMargin
+
+  /** The nation-0 customers' distinct (customer `c`, supplier `sup`) pairs. */
+  private def nation0Suppliers(s: SparkSession, dir: String): DataFrame = {
+    val cust0 = T(s, dir, "customer").filter(col("c_nationkey") === 0)
+      .select(col("c_custkey"))
+    T(s, dir, "lineitem")
+      .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(cust0, col("o_custkey") === col("c_custkey"))
+      .select(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
+      .distinct()
+  }
+
+  /** Oracle CTE `e` of [[nation0Suppliers]]. */
+  private val Nation0SuppliersCte =
+    """e AS (
+      |  SELECT DISTINCT o_custkey AS c, l_suppkey AS sup
+      |  FROM lineitem
+      |  JOIN orders ON l_orderkey = o_orderkey
+      |  JOIN customer ON c_custkey = o_custkey AND c_nationkey = 0
+      |)""".stripMargin
+
   private[graft] val all: Seq[QuerySpec] = Seq(
     // PageRank over the customer↔supplier trade graph (distinct pairs from
     // lineitem⋈orders, both directions, parity-disambiguated node ids) —
     // see pipeline/PageRank.scala for the per-iteration plan shape
     QuerySpec("gr_pagerank", (s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
+      val edges = bothWays(tradePairs(s, dir))
       PageRank.pageRank(edges, iters = 3, damping = 0.85)
         .orderBy(col("rank").desc, col("node")).limit(25)
     },
@@ -31,35 +127,18 @@ object GrQueries {
     // synchronous label propagation over the customer–supplier trade graph:
     // 3 rounds, frequency argmax with min-label ties — exact integer state
     QuerySpec("gr_lpa", (s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
+      val edges = bothWays(tradePairs(s, dir))
       Graphs.labelPropagation(edges, rounds = 3)
     },
-      Graphs.lpaDuckSql(
-        """eraw AS (
-          |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |), e AS (
-          |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-          |)""".stripMargin, rounds = 3)),
+      Graphs.lpaDuckSql(TradeEdgesCte, rounds = 3)),
 
     QuerySpec("gr_kcore", (s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
+      val edges = bothWays(tradePairs(s, dir))
       Graphs.kcorePeel(edges, k = 25, rounds = 4)
         .orderBy(col("node"))
     },
       Graphs.kcoreDuckSql(
-        """eraw AS (
-          |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |), e0 AS (
+        TradePairsCte + """, e0 AS (
           |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
           |)""".stripMargin, k = 25, rounds = 4)),
 
@@ -67,13 +146,8 @@ object GrQueries {
     // teleport over the seeds only (topic-sensitive PageRank, Haveliwala
     // 2002) — proximity-to-community scores, positive ranks top-25
     QuerySpec("gr_ppr", (s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-        .select((col("c_custkey") * 2).as("node"))
+      val edges = bothWays(tradePairs(s, dir))
+      val seeds = nation0Seeds(s, dir)
       PageRank.personalizedPageRank(edges, seeds, iters = 3, damping = 0.85)
         .filter(col("rank") > 0)
         .orderBy(col("rank").desc, col("node")).limit(25)
@@ -85,10 +159,7 @@ object GrQueries {
     // display-only max ratio — big buyers = hubs, widely-bought-from
     // suppliers = authorities
     QuerySpec("gr_hits", (s, dir) => {
-      val e = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
+      val e = tradePairs(s, dir)
       Graphs.hits(e, iters = 2, k = 20)
         .orderBy(col("side"), col("score_raw").desc, col("node"))
     },
@@ -105,22 +176,10 @@ object GrQueries {
     // beta=1/4 scaled by 4^3 — the walk-count centrality beside PageRank
     // (random-walk) and HITS (mutual reinforcement)
     QuerySpec("gr_katz", (s, dir) => {
-      val pairs = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val e = pairs.unionByName(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
-      Graphs.katz(e, iters = 3, k = 25)
+      Graphs.katz(bothWays(tradePairs(s, dir)), iters = 3, k = 25)
         .orderBy(col("score_raw").desc, col("node"))
     },
-      Graphs.katzDuckSql(
-        """eraw AS (
-          |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |), e AS (
-          |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-          |)""".stripMargin, iters = 3, k = 25)),
+      Graphs.katzDuckSql(TradeEdgesCte, iters = 3, k = 25)),
 
     // degree assortativity of the trade graph: Pearson correlation of
     // endpoint degrees over the symmetric edge list, computed from six
@@ -128,12 +187,7 @@ object GrQueries {
     // as the only float math — the classic "do hubs link to hubs" network
     // statistic (strongly negative on a bipartite hub-spoke graph)
     QuerySpec("gr_assortativity", (s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-        .persist()
+      val edges = bothWays(tradePairs(s, dir)).persist()
       val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       val ed = edges
         .join(deg.select(col("src"), col("deg").as("dx")), "src")
@@ -149,12 +203,7 @@ object GrQueries {
           / (sqrt(d("n") * d("sxx") - d("sx") * d("sx"))
             * sqrt(d("n") * d("syy") - d("sy") * d("sy"))), 6).as("assortativity"))
     },
-      """WITH eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |), deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
+      "WITH " + TradeEdgesCte + """, deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
         |ed AS (
         |  SELECT d1.deg AS dx, d2.deg AS dy
         |  FROM e JOIN deg d1 ON d1.src = e.src JOIN deg d2 ON d2.src = e.dst
@@ -181,11 +230,8 @@ object GrQueries {
     // the club / C(k,2) — exact integers (degree ties broken by node id);
     // the club is a 50-row broadcast, the edge probe two semi-joins
     QuerySpec("gr_rich_club", (s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
+      val eraw = tradePairs(s, dir)
+      val edges = bothWays(eraw)
       val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       val club = deg
         .orderBy(col("deg").desc, col("node")).limit(50)
@@ -198,12 +244,7 @@ object GrQueries {
           round(col("club_edges").cast("double") /
             lit((50L * 49L / 2).toDouble), 6).as("phi"))
     },
-      """WITH eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |), d AS (
+      "WITH " + TradeEdgesCte + """, d AS (
         |  SELECT src AS node, count(*) AS deg FROM e GROUP BY 1
         |), club AS (
         |  SELECT node FROM d ORDER BY deg DESC, node LIMIT 50
@@ -219,11 +260,7 @@ object GrQueries {
     // exact integer CASE ladder (no float log at bin edges), one degree
     // aggregate + one tiny bin aggregate
     QuerySpec("gr_degree_hist", (s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
+      val edges = bothWays(tradePairs(s, dir))
       val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       val bin = (0 until 20).foldRight(lit(20L)) { (k, els) =>
         when(col("deg") < (1L << (k + 1)), k.toLong).otherwise(els)
@@ -238,12 +275,7 @@ object GrQueries {
         val caseLadder = (0 until 20).reverse.foldLeft("20") { (els, k) =>
           s"CASE WHEN deg < ${1L << (k + 1)} THEN $k ELSE $els END"
         }
-        s"""WITH eraw AS (
-           |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           |), e AS (
-           |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-           |), d AS (
+        s"""WITH $TradeEdgesCte, d AS (
            |  SELECT src AS node, count(*) AS deg FROM e GROUP BY 1
            |)
            |SELECT CAST($caseLadder AS BIGINT) AS bin, count(*) AS nodes,
@@ -257,43 +289,23 @@ object GrQueries {
     // DeepWalk corpus-prep step with a hash argmin standing in for the RNG
     // draw, so the walk corpus is bit-reproducible across engines and runs
     QuerySpec("gr_walks", (s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-        .select((col("c_custkey") * 2).as("node"))
+      val edges = bothWays(tradePairs(s, dir))
+      val seeds = nation0Seeds(s, dir)
       Graphs.hashWalks(edges, seeds, steps = 4)
     },
       Graphs.hashWalksDuckSql(
-        """eraw AS (
-          |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |), e AS (
-          |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-          |)""".stripMargin,
+        TradeEdgesCte,
         "SELECT c_custkey * 2 AS seed, c_custkey * 2 AS cur FROM customer WHERE c_nationkey = 0",
         steps = 4)),
 
     QuerySpec("gr_bfs", (s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-        .select((col("c_custkey") * 2).as("node"))
+      val edges = bothWays(tradePairs(s, dir))
+      val seeds = nation0Seeds(s, dir)
       Graphs.bfs(edges, seeds, maxHop = 3)
         .select(col("node"), col("hop").cast("long").as("hop"))
         .orderBy(col("node"))
     },
-      """WITH RECURSIVE eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |), walk(node, hop) AS (
+      "WITH RECURSIVE " + TradeEdgesCte + """, walk(node, hop) AS (
         |  SELECT c_custkey * 2, 0 FROM customer WHERE c_nationkey = 0
         |  UNION
         |  SELECT e.dst, w.hop + 1 FROM walk w JOIN e ON e.src = w.node
@@ -308,13 +320,8 @@ object GrQueries {
     // per-hop counts, so the only float ops are two divisions and two adds
     // replayed identically by the oracle
     QuerySpec("gr_closeness", (s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_custkey") % 500 === 1)
-        .select((col("c_custkey") * 2).as("node"))
+      val edges = bothWays(tradePairs(s, dir))
+      val seeds = landmarkSeeds(s, dir)
       def nh(h: Int) = sum(when(col("hop") === h, 1L).otherwise(0L)).as(s"n$h")
       Graphs.bfsPerSource(edges, seeds, maxHop = 3)
         .filter(col("hop") > 0)
@@ -327,20 +334,7 @@ object GrQueries {
       // per-root walk replay: the recursive UNION dedups (root, node, hop)
       // triples, min(hop) per (root, node) = settle-first BFS; harmonic from
       // integer hop counts with the identical ((n1 + n2/2) + n3/3) shape
-      """WITH RECURSIVE eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |), walk(root, node, hop) AS (
-        |  SELECT c_custkey * 2, c_custkey * 2, 0 FROM customer
-        |  WHERE c_custkey % 500 = 1
-        |  UNION
-        |  SELECT w.root, e.dst, w.hop + 1 FROM walk w JOIN e ON e.src = w.node
-        |  WHERE w.hop < 3
-        |), d AS (
-        |  SELECT root, node, min(hop) AS hop FROM walk GROUP BY 1, 2
-        |), c AS (
+      LandmarkHopsCtes + """, c AS (
         |  SELECT CAST(root AS BIGINT) AS root,
         |         CAST(sum(CASE WHEN hop = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
         |         CAST(sum(CASE WHEN hop = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
@@ -357,13 +351,8 @@ object GrQueries {
     // count crosses 0.9·total — the 3-row window after the BFS is the
     // only non-distributed step
     QuerySpec("gr_effdiam", (s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_custkey") % 500 === 1)
-        .select((col("c_custkey") * 2).as("node"))
+      val edges = bothWays(tradePairs(s, dir))
+      val seeds = landmarkSeeds(s, dir)
       val W = org.apache.spark.sql.expressions.Window
       val hist = Graphs.bfsPerSource(edges, seeds, maxHop = 3)
         .filter(col("hop") > 0)
@@ -382,20 +371,7 @@ object GrQueries {
     },
       // reuses the gr_closeness walk (UNION-dedup per-root BFS, min(hop)
       // settle), then the identical cumulative-histogram interpolation
-      """WITH RECURSIVE eraw AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |), e AS (
-        |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-        |), walk(root, node, hop) AS (
-        |  SELECT c_custkey * 2, c_custkey * 2, 0 FROM customer
-        |  WHERE c_custkey % 500 = 1
-        |  UNION
-        |  SELECT w.root, e.dst, w.hop + 1 FROM walk w JOIN e ON e.src = w.node
-        |  WHERE w.hop < 3
-        |), d AS (
-        |  SELECT root, node, min(hop) AS hop FROM walk GROUP BY 1, 2
-        |), hist AS (
+      LandmarkHopsCtes + """, hist AS (
         |  SELECT hop, count(*) AS nh FROM d WHERE hop > 0 GROUP BY 1
         |), c AS (
         |  SELECT hop, nh,
@@ -415,22 +391,12 @@ object GrQueries {
     // (root, node), the backward pass walks the BFS DAG with
     // δ(v) = Σ σv/σw·(1+δw) — nothing broadcast, state ≤ |seeds|·|V| rows
     QuerySpec("gr_betweenness", (s, dir) => {
-      val eraw = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-      val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "customer").filter(col("c_custkey") % 500 === 1)
-        .select((col("c_custkey") * 2).as("node"))
+      val edges = bothWays(tradePairs(s, dir))
+      val seeds = landmarkSeeds(s, dir)
       Graphs.brandesBetweenness(edges, seeds, maxHop = 3, k = 30)
     },
       Graphs.brandesDuckSql(
-        """eraw AS (
-          |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |), e AS (
-          |  SELECT src, dst FROM eraw UNION ALL SELECT dst, src FROM eraw
-          |)""".stripMargin,
+        TradeEdgesCte,
         seedSql = "SELECT c_custkey * 2 AS root, c_custkey * 2 AS node, " +
           "1::BIGINT AS sigma FROM customer WHERE c_custkey % 500 = 1",
         maxHop = 3, k = 30)),
@@ -442,10 +408,7 @@ object GrQueries {
     // count aggregates — the evaluation half of any community-detection
     // loop, as a standalone oracle-gated operator
     QuerySpec("gr_modularity", (s, dir) => {
-      val e = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
+      val e = tradePairs(s, dir)
       val com = T(s, dir, "customer")
         .select((col("c_custkey") * 2).as("node"), col("c_nationkey").cast("long").as("com"))
         .unionByName(T(s, dir, "supplier")
@@ -502,8 +465,7 @@ object GrQueries {
         .groupBy((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
         .agg(min(col("l_quantity")).cast("long").as("w"))
       val edges = eraw.union(eraw.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      val seeds = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-        .select((col("c_custkey") * 2).as("node"))
+      val seeds = nation0Seeds(s, dir)
       Graphs.sssp(edges, seeds, rounds = 3)
         .orderBy(col("node"))
     },
@@ -556,26 +518,14 @@ object GrQueries {
     // triangle counts over the part co-order graph (parts appearing in the
     // same order) via degree-ordered orientation — see pipeline/Graphs
     QuerySpec("gr_triangles", (s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
+      val edges = coOrderEdges(T(s, dir, "lineitem"))
       Graphs.triangleCounts(edges)
         .orderBy(col("n_tri").desc, col("node")).limit(25)
     },
       // triangles enumerated once as u<v<w over the distinct undirected edge
       // set — equivalent to the Spark degree-ordered orientation (both count
       // each triangle exactly once; orientation only changes the JOIN ORDER)
-      """WITH und AS (
-        |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-        |), tri AS (
-        |  SELECT e1.a AS u, e1.b AS v, e2.b AS w
-        |  FROM und e1 JOIN und e2 ON e2.a = e1.b
-        |  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b
-        |)
+      "WITH " + CoOrderCte + TrianglesCte + """
         |SELECT node, count(*) AS n_tri FROM (
         |  SELECT u AS node FROM tri
         |  UNION ALL SELECT v FROM tri
@@ -588,21 +538,13 @@ object GrQueries {
     // replayable coin makes the sampled subgraph (and thus the estimate)
     // oracle-checkable; wedge work drops ∝ p² vs the exact count
     QuerySpec("gr_triangles_approx", (s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
+      val edges = coOrderEdges(T(s, dir, "lineitem"))
       Graphs.triangleCountApprox(edges, p = 0.2)
     },
       // the hash-coin sample replayed verbatim, then the same u<v<w triangle
       // enumeration; estimate = round(tri · (m/keepLt)³) with the identical
       // IEEE expression tree (p = 0.2 ⇒ keepLt = round(0.2·1000003) = 200001)
-      """WITH und AS (
-        |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-        |), samp AS (
+      "WITH " + CoOrderCte + """, samp AS (
         |  SELECT a, b FROM und
         |  WHERE (a * 2654435761 + b * 40503) % 1000003 < 200001
         |), tri AS (
@@ -621,12 +563,7 @@ object GrQueries {
     // triangles to the fixpoint subgraph — the edge-wise k-core
     // strengthening; surviving edges reported with their final support
     QuerySpec("gr_ktruss", (s, dir) => {
-      val li = T(s, dir, "lineitem").filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
+      val edges = coOrderEdges(T(s, dir, "lineitem").filter(col("l_partkey") % 4 === 0))
       Graphs.trussPeel(edges, k = 5, rounds = 7)
         .orderBy(col("a"), col("b"))
     },
@@ -641,27 +578,15 @@ object GrQueries {
     // local clustering coefficients over the same co-order graph: exact
     // triangles + degrees, one IEEE division of exact ints per node
     QuerySpec("gr_clustering", (s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
+      val edges = coOrderEdges(T(s, dir, "lineitem"))
       Graphs.clusteringCoefficients(edges)
         .orderBy(col("coeff").desc, col("node")).limit(25)
     },
-      """WITH und AS (
-        |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-        |), deg AS (
+      "WITH " + CoOrderCte + """, deg AS (
         |  SELECT node, count(*) AS deg FROM (
         |    SELECT a AS node FROM und UNION ALL SELECT b FROM und
         |  ) GROUP BY 1
-        |), tri AS (
-        |  SELECT e1.a AS u, e1.b AS v, e2.b AS w
-        |  FROM und e1 JOIN und e2 ON e2.a = e1.b
-        |  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b
-        |), tcount AS (
+        |)""".stripMargin + TrianglesCte + """, tcount AS (
         |  SELECT node, count(*) AS n_tri FROM (
         |    SELECT u AS node FROM tri
         |    UNION ALL SELECT v FROM tri
@@ -763,13 +688,7 @@ object GrQueries {
     // suppliers + neighborhood Jaccard per customer pair — integer counts
     // and one division, replayed exactly
     QuerySpec("gr_linkpred", (s, dir) => {
-      val cust0 = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-        .select(col("c_custkey"))
-      val e = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(cust0, col("o_custkey") === col("c_custkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
-        .distinct().persist()
+      val e = nation0Suppliers(s, dir).persist()
       val deg = e.groupBy("c").agg(count(lit(1)).as("deg"))
       val wedges = e.as("a").join(e.as("b"),
           col("a.sup") === col("b.sup") && col("a.c") < col("b.c"))
@@ -783,12 +702,7 @@ object GrQueries {
             / (col("d1") + col("d2") - col("common")).cast("double"), 6).as("jaccard"))
         .orderBy(col("jaccard").desc, col("c1"), col("c2")).limit(25)
     },
-      """WITH e AS (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey AS sup
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON c_custkey = o_custkey AND c_nationkey = 0
-        |), deg AS (SELECT c, count(*) AS deg FROM e GROUP BY 1),
+      "WITH " + Nation0SuppliersCte + """, deg AS (SELECT c, count(*) AS deg FROM e GROUP BY 1),
         |w AS (
         |  SELECT a.c AS c1, b.c AS c2, count(*) AS common
         |  FROM e a JOIN e b ON a.sup = b.sup AND a.c < b.c
@@ -804,13 +718,7 @@ object GrQueries {
     // more than hubs (Adamic & Adar 2003); ordering on the ROUNDED score
     // so both engines agree at the top-k boundary
     QuerySpec("gr_adamic", (s, dir) => {
-      val cust0 = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-        .select(col("c_custkey"))
-      val e = T(s, dir, "lineitem")
-        .join(T(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(cust0, col("o_custkey") === col("c_custkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
-        .distinct().persist()
+      val e = nation0Suppliers(s, dir).persist()
       val sdeg = e.groupBy("sup").agg(count(lit(1)).as("d"))
         .withColumnRenamed("sup", "s2")
       e.as("a").join(e.as("b"),
@@ -823,12 +731,7 @@ object GrQueries {
           round(col("aa"), 6).as("adamic_adar"))
         .orderBy(col("adamic_adar").desc, col("c1"), col("c2")).limit(25)
     },
-      """WITH e AS (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey AS sup
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON c_custkey = o_custkey AND c_nationkey = 0
-        |), sd AS (SELECT sup, count(*)::BIGINT AS d FROM e GROUP BY 1),
+      "WITH " + Nation0SuppliersCte + """, sd AS (SELECT sup, count(*)::BIGINT AS d FROM e GROUP BY 1),
         |w AS (
         |  SELECT a.c AS c1, b.c AS c2, count(*)::BIGINT AS common,
         |         sum(1.0 / ln(d)) AS aa

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.GeoFrame
@@ -97,6 +97,90 @@ object IoQueries {
     base.toString
   }
 
+  /** The customer lattice rows (ck, c_nationkey, x, y) in way order. */
+  private def wayRows(s: SparkSession, dir: String): Array[Row] =
+    pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
+      .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
+
+  private val HighwayTag = "    <tag k='highway' v='residential'/>\n"
+
+  /** Way tags keyed by nation: highway plus every `oneway` variant the
+    * reference decodes (OSMImporter.getRoadDirection:1607-1618), by k % 6.
+    */
+  private def roadTags(nk: Int): String = {
+    val oneway = Map(0 -> Some("-1"), 1 -> Some("1"), 2 -> Some("yes"),
+      3 -> Some("TRUE"), 4 -> Some("no"), 5 -> None)
+    HighwayTag + oneway(nk % 6).fold("")(v => s"    <tag k='oneway' v='$v'/>\n")
+  }
+
+  /** The customer lattice as OSM XML: one node per customer (version
+    * `nodeVersion(custkey)`), and way 1000 + k through nation k's customers
+    * in custkey order, carrying the tag lines `wayTags(k)`.
+    */
+  private def osmXml(s: SparkSession, dir: String, nodeVersion: Long => Long,
+      wayTags: Int => String): String = {
+    val rows = wayRows(s, dir)
+    val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
+    rows.foreach { r =>
+      sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}'" +
+        s" version='${nodeVersion(r.getLong(0))}'/>\n"
+    }
+    rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
+      sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
+      rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
+      sb ++= wayTags(nk)
+      sb ++= "  </way>\n"
+    }
+    sb ++= "</osm>\n"
+    sb.toString
+  }
+
+  /** `xml` in a fresh temp `.osm` file, deleted at exit. */
+  private def osmFile(prefix: String, xml: String): java.nio.file.Path = {
+    val tmp = java.nio.file.Files.createTempFile(prefix, ".osm")
+    tmp.toFile.deleteOnExit()
+    java.nio.file.Files.writeString(tmp, xml)
+  }
+
+  /** Per imported way: its nation, vertex count, planar length and name. */
+  private def wayStats(ways: DataFrame): DataFrame =
+    ways.select((col("way_id") - 1000).cast("int").as("c_nationkey"),
+        st.numPoints(col("geometry")).cast("long").as("n_pts"),
+        round(st.length(col("geometry")), 6).as("len"),
+        col("props").getItem("name").as("name"))
+      .orderBy(col("c_nationkey"))
+
+  /** Oracle of [[wayStats]] over the ways of `osmXml` named way-k. */
+  private val WayStatsOracle = SegLengthsCtes +
+    """
+      |SELECT c_nationkey, count(*)::BIGINT AS n_pts,
+      |       round(coalesce(sum(seg), 0), 6) AS len,
+      |       'way-' || c_nationkey AS name
+      |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin
+
+  /** The nation polylines named ln-k, exported as a shapefile in nation
+    * order; returns its base path.
+    */
+  private def exportLines(s: SparkSession, dir: String): String = {
+    val lines = linesLayer(s, dir).df
+      .withColumn("props", map(lit("name"), concat(lit("ln-"), col("c_nationkey"))))
+      .orderBy(col("c_nationkey"))
+    val base = shpIngestBase
+    graft.sources.Shapefile.exportShapefile(lines, base)
+    base
+  }
+
+  /** Oracle of the per-record stats of [[exportLines]] read back. */
+  private val ShpStatsOracle = SegLengthsCtes +
+    """, agg AS (
+      |  SELECT c_nationkey, count(*)::BIGINT AS n_pts,
+      |         round(coalesce(sum(seg), 0), 6) AS len
+      |  FROM segs GROUP BY 1
+      |)
+      |SELECT row_number() OVER (ORDER BY c_nationkey)::BIGINT AS rec,
+      |       n_pts, len, 'ln-' || c_nationkey AS name
+      |FROM agg ORDER BY rec""".stripMargin
+
   private[graft] val all: Seq[QuerySpec] = Seq(
     // OSM → shapefile export helper under the oracle (was unit-only; the
     // cli-tools OSMLayerToShapefileExporter surface): tag-filtered ways
@@ -104,22 +188,7 @@ object IoQueries {
     // roundtripped per-way vertex counts must replay from the fixture
     // congruence (one way per nation, n_pts = customers in the nation)
     QuerySpec("osm_shp_export", (s, dir) => {
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
-      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
-      rows.foreach { r =>
-        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}' version='1'/>\n"
-      }
-      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
-        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
-        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
-        sb ++= "    <tag k='highway' v='residential'/>\n"
-        sb ++= "  </way>\n"
-      }
-      sb ++= "</osm>\n"
-      val tmp = java.nio.file.Files.createTempFile("graft-osm-exp", ".osm")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.writeString(tmp, sb.toString)
+      val tmp = osmFile("graft-osm-exp", osmXml(s, dir, _ => 1L, _ => HighwayTag))
       val d = java.nio.file.Files.createTempDirectory("graft-shpexp")
       d.toFile.deleteOnExit()
       val out = d.resolve("roads").toString
@@ -227,39 +296,13 @@ object IoQueries {
         |FROM e GROUP BY 1 ORDER BY 1""".stripMargin),
 
     QuerySpec("osm_ingest_stats", (s, dir) => {
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
-      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
-      rows.foreach { r =>
-        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}' version='1'/>\n"
-      }
-      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
-        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
-        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
-        sb ++= s"    <tag k='highway' v='residential'/>\n    <tag k='name' v='way-$nk'/>\n  </way>\n"
-      }
-      sb ++= "</osm>\n"
       val tmp = osmIngestTmp
-      java.nio.file.Files.writeString(tmp, sb.toString)
+      java.nio.file.Files.writeString(tmp,
+        osmXml(s, dir, _ => 1L, nk => HighwayTag + s"    <tag k='name' v='way-$nk'/>\n"))
       graft.osm.OsmImport.importOsm(s, tmp.toString).df
-        .select((col("way_id") - 1000).cast("int").as("c_nationkey"),
-          st.numPoints(col("geometry")).cast("long").as("n_pts"),
-          round(st.length(col("geometry")), 6).as("len"),
-          col("props").getItem("name").as("name"))
-        .orderBy(col("c_nationkey"))
+        .transform(wayStats)
     },
-      (PtsCte +
-        """
-          |, segs AS (
-          |  SELECT c_nationkey,
-          |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
-          |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
-          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-          |)
-          |SELECT c_nationkey, count(*)::BIGINT AS n_pts,
-          |       round(coalesce(sum(seg), 0), 6) AS len,
-          |       'way-' || c_nationkey AS name
-          |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin)),
+      WayStatsOracle),
 
     // same corpus through the BINARY format: the fixture is encoded as a
     // real .osm.pbf (zlib blobs, DenseNodes delta coding, string tables —
@@ -269,8 +312,7 @@ object IoQueries {
     // actually measured; stats and oracle identical to the XML leg
     QuerySpec("pbf_ingest_stats", (s, dir) => {
       import graft.osm.OsmPbf
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
+      val rows = wayRows(s, dir)
       val nodes = rows.map(r => OsmPbf.PbfNode(r.getLong(0), r.getDouble(2), r.getDouble(3))).toSeq
       val ways = rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map { case (nk, rs) =>
         OsmPbf.PbfWay(1000L + nk, rs.map(_.getLong(0)).sorted.toSeq,
@@ -279,27 +321,12 @@ object IoQueries {
       OsmPbf.writePbf(pbfIngestTmp.toString, nodes, ways, batch = 500)
       val staging = OsmPbf.parsePbf(s, pbfIngestTmp.toString)
       graft.osm.OsmImport.assembleWays(staging)
-        .select((col("way_id") - 1000).cast("int").as("c_nationkey"),
-          st.numPoints(col("geometry")).cast("long").as("n_pts"),
-          round(st.length(col("geometry")), 6).as("len"),
-          col("props").getItem("name").as("name"))
-        .orderBy(col("c_nationkey"))
+        .transform(wayStats)
     },
       // the PBF leg re-derives the SAME stats (the binary encode/decode must
       // be coordinate-exact: nano-precision lattice points round-trip the
       // granularity math bit-for-bit)
-      (PtsCte +
-        """
-          |, segs AS (
-          |  SELECT c_nationkey,
-          |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
-          |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
-          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-          |)
-          |SELECT c_nationkey, count(*)::BIGINT AS n_pts,
-          |       round(coalesce(sum(seg), 0), 6) AS len,
-          |       'way-' || c_nationkey AS name
-          |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin)),
+      WayStatsOracle),
 
     // OSM road-direction decode under the oracle (was unit-only): ways
     // carry every `oneway` variant the reference decodes
@@ -307,25 +334,7 @@ object IoQueries {
     // the tag-filtered dynamic layer + decode must reproduce the
     // closed-form per-direction counts
     QuerySpec("osm_road_stats", (s, dir) => {
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
-      val oneway = Map(0 -> Some("-1"), 1 -> Some("1"), 2 -> Some("yes"),
-        3 -> Some("TRUE"), 4 -> Some("no"), 5 -> None)
-      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
-      rows.foreach { r =>
-        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}' version='1'/>\n"
-      }
-      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
-        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
-        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
-        sb ++= "    <tag k='highway' v='residential'/>\n"
-        oneway(nk % 6).foreach(v => sb ++= s"    <tag k='oneway' v='$v'/>\n")
-        sb ++= "  </way>\n"
-      }
-      sb ++= "</osm>\n"
-      val tmp = java.nio.file.Files.createTempFile("graft-osm-road", ".osm")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.writeString(tmp, sb.toString)
+      val tmp = osmFile("graft-osm-road", osmXml(s, dir, _ => 1L, roadTags))
       val ways = graft.osm.OsmImport.importOsm(s, tmp.toString).df
       graft.osm.OsmImport.withRoadDirection(
           graft.osm.OsmImport.tagFilteredLayer(ways, "highway", "residential"))
@@ -350,25 +359,7 @@ object IoQueries {
     // assembled-way rows — oneway='yes' matches exactly the reference's
     // string-compare semantics ('1'/'TRUE' variants do NOT match)
     QuerySpec("osm_dynamic_layer", (s, dir) => {
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
-      val oneway = Map(0 -> Some("-1"), 1 -> Some("1"), 2 -> Some("yes"),
-        3 -> Some("TRUE"), 4 -> Some("no"), 5 -> None)
-      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
-      rows.foreach { r =>
-        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}' version='1'/>\n"
-      }
-      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
-        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
-        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
-        sb ++= "    <tag k='highway' v='residential'/>\n"
-        oneway(nk % 6).foreach(v => sb ++= s"    <tag k='oneway' v='$v'/>\n")
-        sb ++= "  </way>\n"
-      }
-      sb ++= "</osm>\n"
-      val tmp = java.nio.file.Files.createTempFile("graft-osm-dyn", ".osm")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.writeString(tmp, sb.toString)
+      val tmp = osmFile("graft-osm-dyn", osmXml(s, dir, _ => 1L, roadTags))
       val json = """{"step": {"type": "GEOM", "direction": "INCOMING",
                     |  "step": {"type": "TAGS", "direction": "OUTGOING",
                     |    "properties": {"highway": "residential", "oneway": "yes"}}}}""".stripMargin
@@ -396,22 +387,8 @@ object IoQueries {
     // exactly the ways whose second node has version 2 — a predicate the
     // old silently-over-matching same-row compile could never express
     QuerySpec("osm_dynamic_node_layer", (s, dir) => {
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
-      val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
-      rows.foreach { r =>
-        sb ++= s"  <node id='${r.getLong(0)}' lat='${r.getDouble(3)}' lon='${r.getDouble(2)}'" +
-          s" version='${1 + r.getLong(0) % 3}'/>\n"
-      }
-      rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach { case (nk, rs) =>
-        sb ++= s"  <way id='${1000 + nk}' version='1'>\n"
-        rs.sortBy(_.getLong(0)).foreach(r => sb ++= s"    <nd ref='${r.getLong(0)}'/>\n")
-        sb ++= "    <tag k='highway' v='residential'/>\n  </way>\n"
-      }
-      sb ++= "</osm>\n"
-      val tmp = java.nio.file.Files.createTempFile("graft-osm-dynnode", ".osm")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.writeString(tmp, sb.toString)
+      val tmp = osmFile("graft-osm-dynnode",
+        osmXml(s, dir, ck => 1 + ck % 3, _ => HighwayTag))
       val json = """{"step": {"type": "GEOM", "direction": "INCOMING",
                     |  "step": {"type": "FIRST_NODE", "direction": "OUTGOING",
                     |    "step": {"type": "NEXT", "direction": "OUTGOING",
@@ -442,8 +419,7 @@ object IoQueries {
     // the reference's changeset sub-graph as one aggregate (fixture maps
     // changesets to nations, so the oracle replays from `customer`)
     QuerySpec("osm_changeset_stats", (s, dir) => {
-      val rows = pointsDf(s, dir).select(col("ck"), col("c_nationkey"), col("x"), col("y"))
-        .orderBy(col("c_nationkey"), col("ck")).collect()  // fixture generation only
+      val rows = wayRows(s, dir)
       val sb = new StringBuilder("<?xml version='1.0'?>\n<osm version='0.6'>\n")
       rows.foreach { r =>
         val nk = r.getInt(1)
@@ -456,9 +432,7 @@ object IoQueries {
         sb ++= "  </way>\n"
       }
       sb ++= "</osm>\n"
-      val tmp = java.nio.file.Files.createTempFile("graft-osm-cs", ".osm")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.writeString(tmp, sb.toString)
+      val tmp = osmFile("graft-osm-cs", sb.toString)
       graft.osm.OsmImport.assembleChangesets(
           graft.osm.OsmImport.parse(s, tmp.toString))
         .select(col("changeset").cast("int").as("changeset"),
@@ -508,9 +482,7 @@ object IoQueries {
         sb ++= s"    <tag k='type' v='multipolygon'/>\n    <tag k='name' v='rel-$n'/>\n  </relation>\n"
       }
       sb ++= "</osm>\n"
-      val tmp = java.nio.file.Files.createTempFile("graft-osm-rel", ".osm")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.writeString(tmp, sb.toString)
+      val tmp = osmFile("graft-osm-rel", sb.toString)
       graft.osm.OsmImport.assembleRelations(
           graft.osm.OsmImport.parse(s, tmp.toString))
         .select((col("relation_id") - 4000).cast("int").as("nk"),
@@ -576,25 +548,15 @@ object IoQueries {
           col("props").getItem("name").as("name"))
         .orderBy(col("nk"))
     },
-      (PtsCte +
+      (SegLengthsCtes +
         """
-          |, segs AS (
-          |  SELECT c_nationkey,
-          |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
-          |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
-          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-          |)
           |SELECT c_nationkey::BIGINT AS nk, count(*)::BIGINT AS n_pts,
           |       round(coalesce(sum(seg), 0), 6) AS len,
           |       'ln-' || c_nationkey AS name
           |FROM segs GROUP BY c_nationkey ORDER BY nk""".stripMargin)),
 
     QuerySpec("shp_ingest_stats", (s, dir) => {
-      val lines = linesLayer(s, dir).df
-        .withColumn("props", map(lit("name"), concat(lit("ln-"), col("c_nationkey"))))
-        .orderBy(col("c_nationkey"))
-      val base = shpIngestBase
-      graft.sources.Shapefile.exportShapefile(lines, base)
+      val base = exportLines(s, dir)
       graft.sources.Shapefile.importShapefile(s, base + ".shp").df
         .select(col("id").cast("long").as("rec"),
           st.numPoints(col("geometry")).cast("long").as("n_pts"),
@@ -602,32 +564,14 @@ object IoQueries {
           col("props").getItem("name").as("name"))
         .orderBy(col("rec"))
     },
-      (PtsCte +
-        """
-          |, segs AS (
-          |  SELECT c_nationkey,
-          |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
-          |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
-          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-          |), agg AS (
-          |  SELECT c_nationkey, count(*)::BIGINT AS n_pts,
-          |         round(coalesce(sum(seg), 0), 6) AS len
-          |  FROM segs GROUP BY 1
-          |)
-          |SELECT row_number() OVER (ORDER BY c_nationkey)::BIGINT AS rec,
-          |       n_pts, len, 'ln-' || c_nationkey AS name
-          |FROM agg ORDER BY rec""".stripMargin)),
+      ShpStatsOracle),
 
     // the SAME corpus through the DataSource V2 connector
     // (spark.read.format("shapefile")): shx-sliced multi-partition scan,
     // dbf attributes by seek — identical stats, identical oracle, so the
     // splittable executor-side read path is itself hash-gated
     QuerySpec("shp_scan_v2", (s, dir) => {
-      val lines = linesLayer(s, dir).df
-        .withColumn("props", map(lit("name"), concat(lit("ln-"), col("c_nationkey"))))
-        .orderBy(col("c_nationkey"))
-      val base = shpIngestBase
-      graft.sources.Shapefile.exportShapefile(lines, base)
+      val base = exportLines(s, dir)
       s.read.format("shapefile")
         .option("maxRecordsPerPartition", "7")   // 25 recs → 4 parallel slices
         .load(base + ".shp")
@@ -637,20 +581,6 @@ object IoQueries {
           col("name"))
         .orderBy(col("rec"))
     },
-      (PtsCte +
-        """
-          |, segs AS (
-          |  SELECT c_nationkey,
-          |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
-          |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
-          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-          |), agg AS (
-          |  SELECT c_nationkey, count(*)::BIGINT AS n_pts,
-          |         round(coalesce(sum(seg), 0), 6) AS len
-          |  FROM segs GROUP BY 1
-          |)
-          |SELECT row_number() OVER (ORDER BY c_nationkey)::BIGINT AS rec,
-          |       n_pts, len, 'ln-' || c_nationkey AS name
-          |FROM agg ORDER BY rec""".stripMargin))
+      ShpStatsOracle)
   )
 }

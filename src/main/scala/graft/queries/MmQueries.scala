@@ -1,5 +1,7 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Multimodal
@@ -193,6 +195,33 @@ object MmQueries {
       |       min(frame_idx) AS start_frame, max(frame_idx) AS end_frame
       |FROM scenes GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
+  /** Media 0–39 encoded by `enc(id)` as w×h images, decoded through the
+    * format their bytes carry: per image the pixel count `n_px` and the
+    * integer luma sum `px_sum`.
+    */
+  private def lumaSums(s: SparkSession, enc: UserDefinedFunction, w: Int,
+      h: Int): DataFrame = {
+    val media = s.range(0, 40).select(col("id").as("media_id"),
+      enc(col("id")).as("bytes"))
+    Multimodal.decodeAndFeaturize(media, w, h)
+      .select(col("media_id"), size(col("pixels")).cast("long").as("n_px"),
+        aggregate(col("pixels"), lit(0L),
+          (a, v) => a + round(v.cast("double") * 255).cast("long")).as("px_sum"))
+      .orderBy(col("media_id"))
+  }
+
+  /** Oracle CTE `px`: the integer luma `level` of every pixel `pidx` of the
+    * 8×8 images of `Multimodal.syntheticImagePng(s, 300)` (ids ≡ 0 mod 3).
+    */
+  private val PngLevelsCte =
+    """WITH px AS (
+      |  SELECT i AS media_id, p AS pidx,
+      |         CAST((299 * ((p * 3 + i * 7) % 256)
+      |             + 587 * ((p * 5 + i * 11) % 256)
+      |             + 114 * ((p * 7 + i * 13) % 256)) // 1000 AS BIGINT) AS level
+      |  FROM range(300) t(i), range(64) q(p) WHERE i % 3 = 0
+      |)""".stripMargin
+
   private[graft] val all: Seq[QuerySpec] = Seq(
     // exact media dedup by CONTENT hash — the first pass of any multimodal
     // dedup stack: group on md5(bytes) (a 16-byte shuffle key, never the
@@ -264,13 +293,7 @@ object MmQueries {
         }
         graft.pipeline.ImageCodec.encodeBmp(w, h, rgb, topDown = i % 2 == 1)
       })
-      val media = s.range(0, 40).select(col("id").as("media_id"),
-        enc(col("id")).as("bytes"))
-      val decoded = Multimodal.decodeAndFeaturize(media, 15, 12)
-      decoded.select(col("media_id"), size(col("pixels")).cast("long").as("n_px"),
-          aggregate(col("pixels"), lit(0L),
-            (a, v) => a + round(v.cast("double") * 255).cast("long")).as("px_sum"))
-        .orderBy(col("media_id"))
+      lumaSums(s, enc, w = 15, h = 12)
     },
       // the BMP round-trip pattern replayed in pure integer arithmetic:
       // luma = (299R + 587G + 114B) // 1000 over the generator formula
@@ -307,13 +330,7 @@ object MmQueries {
         graft.pipeline.ImageCodec.encodePng(w, h, rgb,
           filterType = (i % 5).toInt, alpha = i % 2 == 1)
       })
-      val media = s.range(0, 40).select(col("id").as("media_id"),
-        enc(col("id")).as("bytes"))
-      val decoded = Multimodal.decodeAndFeaturize(media, 15, 12)
-      decoded.select(col("media_id"), size(col("pixels")).cast("long").as("n_px"),
-          aggregate(col("pixels"), lit(0L),
-            (a, v) => a + round(v.cast("double") * 255).cast("long")).as("px_sum"))
-        .orderBy(col("media_id"))
+      lumaSums(s, enc, w = 15, h = 12)
     },
       // the PNG round-trip pattern replayed in pure integer arithmetic
       """SELECT i AS media_id, count(*)::BIGINT AS n_px,
@@ -349,13 +366,7 @@ object MmQueries {
         graft.pipeline.JpegCodec.encodeJpegGray(w, h, luma,
           restartInterval = if (i % 2 == 1) 2 else 0)
       })
-      val media = s.range(0, 40).select(col("id").as("media_id"),
-        enc(col("id")).as("bytes"))
-      val decoded = Multimodal.decodeAndFeaturize(media, 20, 12)
-      decoded.select(col("media_id"), size(col("pixels")).cast("long").as("n_px"),
-          aggregate(col("pixels"), lit(0L),
-            (a, v) => a + round(v.cast("double") * 255).cast("long")).as("px_sum"))
-        .orderBy(col("media_id"))
+      lumaSums(s, enc, w = 20, h = 12)
     },
       // the JPEG gate's block-constant even-valued pattern replayed exactly:
       // DC-only blocks with q00=16 | 8·(v−128) make the lossy roundtrip the
@@ -495,13 +506,7 @@ object MmQueries {
         .orderBy(col("media_id"))
     },
       // image FNV chain → 2×2 block level-sums → position-weighted checksum
-      """WITH px AS (
-        |  SELECT i AS media_id, p AS pidx,
-        |         CAST((299 * ((p * 3 + i * 7) % 256)
-        |             + 587 * ((p * 5 + i * 11) % 256)
-        |             + 114 * ((p * 7 + i * 13) % 256)) // 1000 AS BIGINT) AS level
-        |  FROM range(300) t(i), range(64) q(p) WHERE i % 3 = 0
-        |), blocks AS (
+      PngLevelsCte + """, blocks AS (
         |  SELECT media_id,
         |         ((pidx // 8) // 2) * 4 + ((pidx % 8) // 2) AS b,
         |         sum(level) AS s
@@ -541,13 +546,7 @@ object MmQueries {
       // image-kind FNV chain (64 content bytes, then 64 pixel steps), pixel
       // LEVELS kept as exact integers → block-sum embedding → integer
       // dot/norm cosine, rank ties broken by neighbor id
-      """WITH px AS (
-        |  SELECT i AS media_id, p AS pidx,
-        |         CAST((299 * ((p * 3 + i * 7) % 256)
-        |             + 587 * ((p * 5 + i * 11) % 256)
-        |             + 114 * ((p * 7 + i * 13) % 256)) // 1000 AS BIGINT) AS level
-        |  FROM range(300) t(i), range(64) q(p) WHERE i % 3 = 0
-        |), emb AS (
+      PngLevelsCte + """, emb AS (
         |  SELECT media_id, pidx // 8 AS b, sum(level) AS v
         |  FROM px GROUP BY 1, 2
         |), nrm AS (

@@ -50,11 +50,23 @@ object Shared {
       |  FROM customer
       |)""".stripMargin
 
-  /** Shared IVF-eval oracle CTEs (through `approx` ranked ≤5 and `exact`
-    * top-5): the DuckDB replay of the flat IVF index + probe protocol used
-    * by sim_recall and sim_ndcg.
+  /** Oracle CTE `segs`: each nation polyline's planar segment lengths
+    * `seg` in custkey order (null on the first point), beside `pts`.
     */
-  private[graft] val IvfEvalCtes =
+  private[graft] val SegLengthsCtes = PtsCte +
+    """
+      |, segs AS (
+      |  SELECT c_nationkey,
+      |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
+      |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
+      |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
+      |)""".stripMargin
+
+  /** Oracle CTEs of the flat IVF index's list assignment: the vectors
+    * with vec_id < 16 as centroids `c`, each vector's nearest list by
+    * cosine (ties to the lower cid) in `assign`.
+    */
+  private[graft] val IvfAssignCtes =
     """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
       |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
       |sims AS (
@@ -64,19 +76,34 @@ object Shared {
       |  SELECT id, v, cid FROM (
       |    SELECT id, v, cid, row_number() OVER (PARTITION BY id ORDER BY s DESC, cid) AS rn
       |    FROM sims) WHERE rn = 1
-      |), q AS (
-      |  SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id % 50 = 0
-      |), probes AS (
-      |  SELECT qid, cid FROM (
-      |    SELECT q.qid, c.cid,
-      |           row_number() OVER (PARTITION BY q.qid
-      |             ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid) AS rn
-      |    FROM q CROSS JOIN c) WHERE rn <= 2
-      |), cand AS (
-      |  SELECT q.qid, a.id AS nid, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
-      |  FROM q JOIN probes p ON q.qid = p.qid JOIN assign a ON a.cid = p.cid
-      |  WHERE a.id <> q.qid
-      |), approx AS (
+      |)""".stripMargin
+
+  /** Oracle CTEs of the flat IVF index (the vectors with vec_id < 16 as
+    * centroids) probed by every `every`-th vector: assignment `assign`,
+    * queries `q`, their 2 nearest lists `probes` and the candidate
+    * neighbours `cand` with rounded cosine, the query itself excluded.
+    */
+  private[graft] def ivfCandCtes(every: Int): String = IvfAssignCtes +
+    s""", q AS (
+       |  SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id % $every = 0
+       |), probes AS (
+       |  SELECT qid, cid FROM (
+       |    SELECT q.qid, c.cid,
+       |           row_number() OVER (PARTITION BY q.qid
+       |             ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid) AS rn
+       |    FROM q CROSS JOIN c) WHERE rn <= 2
+       |), cand AS (
+       |  SELECT q.qid, a.id AS nid, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
+       |  FROM q JOIN probes p ON q.qid = p.qid JOIN assign a ON a.cid = p.cid
+       |  WHERE a.id <> q.qid
+       |)""".stripMargin
+
+  /** Shared IVF-eval oracle CTEs (through `approx` ranked ≤5 and `exact`
+    * top-5): the DuckDB replay of the flat IVF index + probe protocol used
+    * by sim_recall and sim_ndcg.
+    */
+  private[graft] val IvfEvalCtes = ivfCandCtes(every = 50) +
+    """, approx AS (
       |  SELECT qid, nid, rank FROM (
       |    SELECT qid, nid,
       |           row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rank

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Similarity
@@ -10,11 +11,85 @@ import graft.queries.Shared._
   */
 object SimQueries {
 
+  /** Embedding 0, the query vector of the single-query searches. */
+  private def queryVec(emb: DataFrame): Array[Double] =
+    emb.filter(col("vec_id") === 0)
+      .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+
+  /** A stored IVF index in a fresh temp dir (deleted at exit): bootstrapped
+    * with 16 lists from the vectors with vec_id % 10 ≠ 0, then the rest
+    * appended under the frozen codebook; returns its path.
+    */
+  private def storedIvf(s: SparkSession, emb: DataFrame, prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    d.toFile.deleteOnExit()
+    val p = d.resolve("idx").toString
+    Similarity.writeIvfIndex(emb.filter(col("vec_id") % 10 =!= 0),
+      "vec_id", "embedding", p, nlist = 16)
+    Similarity.appendIvfIndex(s, p, emb.filter(col("vec_id") % 10 === 0),
+      "vec_id", "embedding")
+    p
+  }
+
+  /** Oracle CTEs of [[storedIvf]] probed by vector 0: the bootstrap `boot`,
+    * its first 16 vectors as centroids `c`, the query `q` and its 2 nearest
+    * lists `probes`.
+    */
+  private val StoredIvfProbeCtes =
+    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      |boot AS (SELECT vec_id, v FROM e WHERE vec_id % 10 <> 0),
+      |c AS (
+      |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
+      |  FROM boot ORDER BY vec_id LIMIT 16
+      |), q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+      |probes AS (
+      |  SELECT cid FROM (
+      |    SELECT c.cid,
+      |           row_number() OVER (
+      |             ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid) AS rn
+      |    FROM c CROSS JOIN q) WHERE rn <= 2
+      |)""".stripMargin
+
+  /** Body of the oracle CTE `assigned`: every vector's (id, v, cid) under
+    * the frozen centroids `c`.
+    */
+  private val FrozenAssignSql =
+    """  SELECT id, v, cid FROM (
+      |    SELECT e.vec_id AS id, e.v, c.cid,
+      |           row_number() OVER (PARTITION BY e.vec_id
+      |             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
+      |    FROM e CROSS JOIN c) WHERE rn = 1
+      |)""".stripMargin
+
+  /** Oracle CTE `codes`: each vector's PQ code per subspace, the argmin of
+    * its rounded distances `enc` (ties to the lower code).
+    */
+  private val PqCodesCte =
+    """, codes AS (
+      |  SELECT id, mi, j AS code FROM (
+      |    SELECT id, mi, j, row_number() OVER (PARTITION BY id, mi ORDER BY d2, j) AS rn
+      |    FROM enc) WHERE rn = 1
+      |)""".stripMargin
+
+  /** Oracle tail of the kNN joins: each query's candidates `cand` from its
+    * probed lists `probes` of `assign`, top 5 by (rounded cosine desc, id).
+    */
+  private val Top5Sql =
+    """, cand AS (
+      |  SELECT q.qid, a.id AS nid, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
+      |  FROM q JOIN probes p ON q.qid = p.qid JOIN assign a ON a.cid = p.cid
+      |  WHERE a.id <> q.qid
+      |), ranked AS (
+      |  SELECT qid, nid, cosine,
+      |         CAST(row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS BIGINT) AS rank
+      |  FROM cand)
+      |SELECT qid, rank, nid, cosine FROM ranked WHERE rank <= 5
+      |ORDER BY qid, rank""".stripMargin
+
   private[graft] val all: Seq[QuerySpec] = Seq(
     QuerySpec("sim_cosine_topk", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val q = queryVec(emb)
       Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 50)
         .select(col("id"), round(col("cosine"), 6).as("cosine"))
         .orderBy(col("cosine").desc, col("id"))
@@ -29,8 +104,7 @@ object SimQueries {
     // dimension-truncation sibling of IVF/PQ shortlisting
     QuerySpec("sim_mrl_topk", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val q = queryVec(emb)
       Similarity.mrlTopK(emb, "vec_id", "embedding", q,
           prefixDim = 16, shortlist = 200, k = 20)
         .orderBy(col("cosine").desc, col("id"))
@@ -52,8 +126,7 @@ object SimQueries {
     // min/max, asymmetric-estimator shortlist, exact full-precision re-rank
     QuerySpec("sim_sq8", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val q = queryVec(emb)
       Similarity.sq8TopK(emb, "vec_id", "embedding", q, shortlist = 200, k = 20)
         .orderBy(col("cosine").desc, col("id"))
     },
@@ -61,8 +134,7 @@ object SimQueries {
 
     QuerySpec("sim_srp_topk", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val q = queryVec(emb)
       Similarity.srpTopK(emb, "vec_id", "embedding", q, 20, dim = 64)
         .select(col("id"), round(col("cosine"), 6).as("cosine"))
     },
@@ -87,8 +159,7 @@ object SimQueries {
     // shortlist only — the rescored-BQ shape modern vector stores ship
     QuerySpec("sim_bq_topk", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val q = queryVec(emb)
       Similarity.bqTopK(emb, "vec_id", "embedding", q, k = 15, dim = 64,
         shortlist = 60)
     },
@@ -124,8 +195,7 @@ object SimQueries {
     // 64-entry decode table joined BY CODE, exact re-rank of the shortlist
     QuerySpec("sim_rq", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val q = queryVec(emb)
       Similarity.rqTopK(emb, "vec_id", "embedding", q, k = 15)
     },
       Similarity.rqDuckSql(k = 15)),
@@ -144,8 +214,7 @@ object SimQueries {
     // shortlist-bounded, never corpus-bounded
     QuerySpec("sim_mmr", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val q = queryVec(emb)
       Similarity.mmrTopK(emb, "vec_id", "embedding", q, k = 10,
         lambda = 0.7, shortlist = 40)
     },
@@ -192,8 +261,7 @@ object SimQueries {
     // dataflow identical. Rows-only; full-probe≡brute-force is unit-verified.
     QuerySpec("sim_ivf_kmeans", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val q = queryVec(emb)
       Similarity.ivfTopKKMeans(emb, "vec_id", "embedding", q, k = 20,
           nlist = 16, nprobe = 2, kmeansIters = 3)
         .select(col("id"), round(col("cosine"), 6).as("cosine"))
@@ -240,8 +308,7 @@ object SimQueries {
     // re-rank inside — the partition-pruned scale path beside brute force
     QuerySpec("sim_ivf_topk", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val q = queryVec(emb)
       Similarity.ivfTopK(emb, "vec_id", "embedding", q, k = 20, nlist = 16, nprobe = 2)
         .select(col("id"), round(col("cosine"), 6).as("cosine"))
         .orderBy(col("cosine").desc, col("id"))
@@ -273,8 +340,7 @@ object SimQueries {
     // the escalation rule
     QuerySpec("sim_filtered_topk", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val q = queryVec(emb)
       Similarity.ivfFilteredTopK(emb, "vec_id", "embedding",
           col("label") === 3, q, k = 20, nlist = 16, nprobe = 2)
         .select(col("id"), round(col("cosine"), 6).as("cosine"))
@@ -313,8 +379,7 @@ object SimQueries {
     // 8 small ints, 32×), query LUT broadcast, distance = 8 table lookups
     QuerySpec("sim_pq_adc", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val q = queryVec(emb)
       Similarity.pqAdcTopK(emb, "vec_id", "embedding", q, kTop = 20)
     },
       // full PQ replay: codebook = subvectors of vec_id < 16, encode = argmin
@@ -331,11 +396,7 @@ object SimQueries {
         |           i -> (e.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1])
         |              * (e.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1]))), 9) AS d2
         |  FROM embeddings e CROSS JOIN cb
-        |), codes AS (
-        |  SELECT id, mi, j AS code FROM (
-        |    SELECT id, mi, j, row_number() OVER (PARTITION BY id, mi ORDER BY d2, j) AS rn
-        |    FROM enc) WHERE rn = 1
-        |), lut AS (
+        |)""".stripMargin + PqCodesCte + """, lut AS (
         |  SELECT cb.mi, cb.j,
         |         round(list_sum(list_transform(range(8),
         |           i -> (q.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1])
@@ -355,38 +416,14 @@ object SimQueries {
     // corpus
     QuerySpec("sim_ivf_store", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val d = java.nio.file.Files.createTempDirectory("graft-ivf-idx")
-      d.toFile.deleteOnExit()
-      val p = d.resolve("idx").toString
-      Similarity.writeIvfIndex(emb.filter(col("vec_id") % 10 =!= 0),
-        "vec_id", "embedding", p, nlist = 16)
-      Similarity.appendIvfIndex(s, p, emb.filter(col("vec_id") % 10 === 0),
-        "vec_id", "embedding")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val p = storedIvf(s, emb, "graft-ivf-idx")
+      val q = queryVec(emb)
       Similarity.probeStoredIvf(s, p, q, k = 20, nprobe = 2)
     },
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |boot AS (SELECT vec_id, v FROM e WHERE vec_id % 10 <> 0),
-        |c AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
-        |  FROM boot ORDER BY vec_id LIMIT 16
-        |), q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |probes AS (
-        |  SELECT cid FROM (
-        |    SELECT c.cid,
-        |           row_number() OVER (
-        |             ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid) AS rn
-        |    FROM c CROSS JOIN q) WHERE rn <= 2
-        |), assigned AS (
+      StoredIvfProbeCtes + """, assigned AS (
         |  -- EVERY vector (bootstrap + appended) quantized with the FROZEN
         |  -- bootstrap codebook, exactly like appendIvfIndex
-        |  SELECT id, v, cid FROM (
-        |    SELECT e.vec_id AS id, e.v, c.cid,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-        |    FROM e CROSS JOIN c) WHERE rn = 1
-        |)
+        |""".stripMargin + FrozenAssignSql + """
         |SELECT a.id, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
         |FROM assigned a JOIN probes p ON p.cid = a.cid CROSS JOIN q
         |ORDER BY cosine DESC, id LIMIT 20""".stripMargin),
@@ -399,15 +436,8 @@ object SimQueries {
     // phases must return the identical masked top-k
     QuerySpec("sim_ivf_delete", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val d = java.nio.file.Files.createTempDirectory("graft-ivf-del")
-      d.toFile.deleteOnExit()
-      val p = d.resolve("idx").toString
-      Similarity.writeIvfIndex(emb.filter(col("vec_id") % 10 =!= 0),
-        "vec_id", "embedding", p, nlist = 16)
-      Similarity.appendIvfIndex(s, p, emb.filter(col("vec_id") % 10 === 0),
-        "vec_id", "embedding")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val p = storedIvf(s, emb, "graft-ivf-del")
+      val q = queryVec(emb)
       // delete-by-id is a driver-side id list by nature (bounded: |corpus|/7
       // at the gate; production batches arrive as lists anyway)
       val deleted = emb.filter(col("vec_id") % 7 === 0)
@@ -425,25 +455,7 @@ object SimQueries {
     },
       // delete lifecycle: the sim_ivf_store replay minus the tombstoned ids,
       // emitted once per phase (tombstone-masked probe ≡ post-compaction probe)
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |boot AS (SELECT vec_id, v FROM e WHERE vec_id % 10 <> 0),
-        |c AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
-        |  FROM boot ORDER BY vec_id LIMIT 16
-        |), q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |probes AS (
-        |  SELECT cid FROM (
-        |    SELECT c.cid,
-        |           row_number() OVER (
-        |             ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid) AS rn
-        |    FROM c CROSS JOIN q) WHERE rn <= 2
-        |), assigned AS (
-        |  SELECT id, v, cid FROM (
-        |    SELECT e.vec_id AS id, e.v, c.cid,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-        |    FROM e CROSS JOIN c) WHERE rn = 1
-        |), hits AS (
+      StoredIvfProbeCtes + ", assigned AS (\n" + FrozenAssignSql + """, hits AS (
         |  SELECT a.id, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
         |  FROM assigned a JOIN probes p ON p.cid = a.cid CROSS JOIN q
         |  WHERE a.id % 7 <> 0
@@ -460,8 +472,7 @@ object SimQueries {
     // by the oracle
     QuerySpec("sim_ivf_pq", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      val q = queryVec(emb)
       Similarity.ivfPqTopK(emb, "vec_id", "embedding", q, k = 20,
         nlist = 16, nprobe = 2, m = 8, codeK = 16, refine = 3)
     },
@@ -493,11 +504,7 @@ object SimQueries {
         |           i -> (e3.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1])
         |              * (e3.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1]))), 9) AS d2
         |  FROM embeddings e3 JOIN cand ON cand.id = e3.vec_id CROSS JOIN cb
-        |), codes AS (
-        |  SELECT id, mi, j AS code FROM (
-        |    SELECT id, mi, j, row_number() OVER (PARTITION BY id, mi ORDER BY d2, j) AS rn
-        |    FROM enc) WHERE rn = 1
-        |), lut AS (
+        |)""".stripMargin + PqCodesCte + """, lut AS (
         |  SELECT cb.mi, cb.j,
         |         round(list_sum(list_transform(range(8),
         |           i -> (qe.embedding[cb.mi*8 + i + 1]::DOUBLE - cb.c[i+1])
@@ -527,28 +534,7 @@ object SimQueries {
     },
       // same assignment/probe/re-rank replay as sim_ivf_topk, generalized to
       // the query SET with per-query windows
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |sims AS (
-        |  SELECT e.vec_id AS id, e.v, c.cid, list_cosine_similarity(e.v, c.cv) AS s
-        |  FROM e CROSS JOIN c
-        |), assign AS (
-        |  SELECT id, v, cid FROM (
-        |    SELECT id, v, cid, row_number() OVER (PARTITION BY id ORDER BY s DESC, cid) AS rn
-        |    FROM sims) WHERE rn = 1
-        |), q AS (
-        |  SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id % 25 = 0
-        |), probes AS (
-        |  SELECT qid, cid FROM (
-        |    SELECT q.qid, c.cid,
-        |           row_number() OVER (PARTITION BY q.qid
-        |             ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid) AS rn
-        |    FROM q CROSS JOIN c) WHERE rn <= 2
-        |), cand AS (
-        |  SELECT q.qid, a.id AS nid, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
-        |  FROM q JOIN probes p ON q.qid = p.qid JOIN assign a ON a.cid = p.cid
-        |  WHERE a.id <> q.qid
-        |), ranked AS (
+      ivfCandCtes(every = 25) + """, ranked AS (
         |  SELECT qid, nid, cosine,
         |         CAST(row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS BIGINT) AS rank
         |  FROM cand
@@ -600,16 +586,7 @@ object SimQueries {
         |           row_number() OVER (PARTITION BY qp.qid
         |             ORDER BY list_cosine_similarity(qp.qv, g.cv) DESC, g.cid) AS rn
         |    FROM qp JOIN grp g ON g.pid = qp.pid) WHERE rn <= 2
-        |), cand AS (
-        |  SELECT q.qid, a.id AS nid, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
-        |  FROM q JOIN probes p ON q.qid = p.qid JOIN assign a ON a.cid = p.cid
-        |  WHERE a.id <> q.qid
-        |), ranked AS (
-        |  SELECT qid, nid, cosine,
-        |         CAST(row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS BIGINT) AS rank
-        |  FROM cand)
-        |SELECT qid, rank, nid, cosine FROM ranked WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin),
+        |)""".stripMargin + Top5Sql),
 
     // log-depth quantizer tree (nlist=64, branch=4 → 4-node top, 16-node
     // mid, 64 leaves): per-vector assignment is branch·log_branch(nlist)
@@ -682,16 +659,7 @@ object SimQueries {
         |             ORDER BY list_cosine_similarity(q16.qv, c.cv) DESC, g64.cid) AS rn
         |    FROM q16 JOIN g64 ON g64.pid = q16.pid JOIN c ON c.cid = g64.cid)
         |  WHERE rn <= 2
-        |), cand AS (
-        |  SELECT q.qid, a.id AS nid, round(list_cosine_similarity(q.qv, a.v), 6) AS cosine
-        |  FROM q JOIN probes p ON q.qid = p.qid JOIN assign a ON a.cid = p.cid
-        |  WHERE a.id <> q.qid
-        |), ranked AS (
-        |  SELECT qid, nid, cosine,
-        |         CAST(row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS BIGINT) AS rank
-        |  FROM cand)
-        |SELECT qid, rank, nid, cosine FROM ranked WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin),
+        |)""".stripMargin + Top5Sql),
 
     // ANN quality gate: recall@5 of the IVF index vs the exact top-5 over
     // a sampled query set — retrieval evaluation as an operator; both

@@ -219,6 +219,189 @@ object SpQueries {
         |SELECT label AS island_key, count(*) AS n_members
         |FROM comp GROUP BY 1 ORDER BY 1""".stripMargin
 
+  /** Window-query oracle: the points in [0.5, 30.5] × [−10.5, 40.5],
+    * boundary inclusive.
+    */
+  private val WindowOracle = PtsCte +
+    """
+      |SELECT ck AS id, x, y FROM pts
+      |WHERE x >= 0.5 AND x <= 30.5 AND y >= -10.5 AND y <= 40.5
+      |ORDER BY id""".stripMargin
+
+  /** Distance-query oracle: the points within 1500 km (orthodromic, R =
+    * 6371) of (10.5, 20.5), with `dist_km` rounded to metres.
+    */
+  private val BallOracle = PtsCte +
+    """
+      |SELECT ck AS id,
+      |       round(acos(least(sin(radians(20.5)) * sin(radians(y))
+      |             + cos(radians(20.5)) * cos(radians(y))
+      |             * cos(radians(x) - radians(10.5)), 1.0)) * 6371, 3) AS dist_km
+      |FROM pts
+      |WHERE acos(least(sin(radians(20.5)) * sin(radians(y))
+      |      + cos(radians(20.5)) * cos(radians(y))
+      |      * cos(radians(x) - radians(10.5)), 1.0)) * 6371 <= 1500.0
+      |ORDER BY dist_km, id""".stripMargin
+
+  /** Each nation's points folded into one geometry `g`. */
+  private def nationUnions(s: SparkSession, dir: String): DataFrame =
+    pointsLayer(s, dir).df
+      .groupBy(col("c_nationkey"))
+      .agg(SpatialAggs.unionAgg(col("geometry")).as("g"))
+
+  /** Per-nation row count and balance in exact integer cents. */
+  private def nationCents(df: DataFrame): DataFrame =
+    df.groupBy(col("c_nationkey"))
+      .agg(count(lit(1)).as("n"),
+        sum(round(col("c_acctbal") * 100).cast("long")).as("cents"))
+      .orderBy(col("c_nationkey"))
+
+  /** Oracle CTE `segs`: each nation polyline's segments (x1, y1) → (x2,
+    * y2) in custkey order, the first point's row with a null start.
+    */
+  private val PolylineSegsCtes = PtsCte +
+    """
+      |, segs AS (
+      |  SELECT c_nationkey,
+      |         lag(x) OVER w AS x1, lag(y) OVER w AS y1, x AS x2, y AS y2
+      |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
+      |)""".stripMargin
+
+  /** Each nation polyline's segments (x, y) → (x2, y2) in custkey order
+    * with their planar length `seglen`, the running length through the
+    * segment `cum` (one sequential pass), the length before it `cumb` (lag
+    * of `cum`, never cum − seglen, which would round differently) and the
+    * polyline's `total`.
+    */
+  private def nationSegments(s: SparkSession, dir: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("nk").orderBy("ck")
+    pointsDf(s, dir)
+      .select(col("c_nationkey").as("nk"), col("ck"), col("x"), col("y"))
+      .withColumn("x2", lead("x", 1).over(w))
+      .withColumn("y2", lead("y", 1).over(w))
+      .filter(col("x2").isNotNull)
+      .withColumn("seglen",
+        sqrt((col("x2") - col("x")) * (col("x2") - col("x"))
+          + (col("y2") - col("y")) * (col("y2") - col("y"))))
+      .withColumn("cum", sum("seglen").over(
+        w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.currentRow)))
+      .withColumn("cumb", lag("cum", 1, 0.0).over(w))
+      .withColumn("total", max("cum").over(
+        org.apache.spark.sql.expressions.Window.partitionBy("nk")))
+  }
+
+  /** Oracle CTEs `seg0` … `cum2` of [[nationSegments]] (same window
+    * shapes, so the running doubles agree).
+    */
+  private val NationSegmentsCtes = PtsCte +
+    """
+      |, seg0 AS (
+      |  SELECT c_nationkey AS nk, ck, x, y,
+      |         lead(x) OVER w AS x2, lead(y) OVER w AS y2
+      |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
+      |), seg1 AS (
+      |  SELECT nk, ck, x, y, x2, y2,
+      |         sqrt((x2 - x) * (x2 - x) + (y2 - y) * (y2 - y)) AS seglen
+      |  FROM seg0 WHERE x2 IS NOT NULL
+      |), cum1 AS (
+      |  SELECT nk, ck, x, y, x2, y2, seglen,
+      |         sum(seglen) OVER (PARTITION BY nk ORDER BY ck
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+      |  FROM seg1
+      |), cum2 AS (
+      |  SELECT *, coalesce(lag(cum) OVER (PARTITION BY nk ORDER BY ck), 0.0) AS cumb,
+      |         max(cum) OVER (PARTITION BY nk) AS total
+      |  FROM cum1
+      |)""".stripMargin
+
+  /** The point at each fraction `frac` (rows of `fr`) of each polyline of
+    * `seg` ([[nationSegments]]): the segment with cumb ≤ frac·total < cum,
+    * then one lerp, rounded to 6 places.
+    */
+  private def cutPoints(seg: DataFrame, fr: DataFrame): DataFrame =
+    seg.join(fr)
+      .filter(col("cumb") <= col("frac") * col("total")
+        && col("frac") * col("total") < col("cum"))
+      .select(col("nk"), col("frac"),
+        round(col("x") + (col("x2") - col("x"))
+          * ((col("frac") * col("total") - col("cumb")) / col("seglen")), 6).as("px"),
+        round(col("y") + (col("y2") - col("y"))
+          * ((col("frac") * col("total") - col("cumb")) / col("seglen")), 6).as("py"))
+
+  /** Point counts `n` of the occupied cells (cx, cy) of the 10° grid. */
+  private def gridCells(s: SparkSession, dir: String): DataFrame =
+    pointsDf(s, dir).groupBy(
+        floor((col("x") + 180.0) / 10.0).cast("long").as("cx"),
+        floor((col("y") + 90.0) / 10.0).cast("long").as("cy"))
+      .agg(count(lit(1)).as("n"))
+
+  /** Oracle CTE `cells` of [[gridCells]]. */
+  private val GridCellsCtes = PtsCte +
+    """
+      |, cells AS (
+      |  SELECT CAST(floor((x + 180.0) / 10.0) AS BIGINT) AS cx,
+      |         CAST(floor((y + 90.0) / 10.0) AS BIGINT) AS cy,
+      |         count(*) AS n
+      |  FROM pts GROUP BY 1, 2
+      |)""".stripMargin
+
+  /** The MVT queries' vertices: each nation's customers on a quarter-degree
+    * lattice around a nation center (within ±52°, so no mercator clip),
+    * quantized to slippy-map pixels `gx`, `gy` at `scale` pixels per axis.
+    */
+  private def mvtPixels(s: SparkSession, dir: String, scale: Int): DataFrame = {
+    val radius = graft.geom.Mercator.RadiusM
+    T(s, dir, "customer").select(
+        col("c_custkey").as("ck"), col("c_nationkey").as("nk"))
+      .withColumn("x", (col("nk") % 8).cast("double") * 45.0 - 180.0 + 22.5
+        + ((col("ck") % 16).cast("double") - 7.5) * 0.25)
+      .withColumn("y", ((col("nk") * 7) % 6).cast("double") * 20.0 - 60.0 + 10.0
+        + (((col("ck") * 3) % 12).cast("double") - 5.5) * 0.25)
+      .withColumn("gx", floor((col("x") + 180.0) / 360.0 * scale))
+      .withColumn("yn", st.mercatorY(col("y")) / lit(radius) / lit(math.Pi))
+      .withColumn("gy", floor((lit(1.0) - col("yn")) / 2.0 * scale))
+  }
+
+  /** Oracle CTE `v`: the lattice vertices of [[mvtPixels]] before
+    * quantization.
+    */
+  private val MvtVertsCte =
+    """WITH v AS (
+      |  SELECT c_custkey AS ck, c_nationkey AS nk,
+      |         CAST(c_nationkey % 8 AS DOUBLE) * 45 - 180 + 22.5
+      |           + (CAST(c_custkey % 16 AS DOUBLE) - 7.5) * 0.25 AS x,
+      |         CAST((c_nationkey * 7) % 6 AS DOUBLE) * 20 - 60 + 10
+      |           + (CAST((c_custkey * 3) % 12 AS DOUBLE) - 5.5) * 0.25 AS y
+      |  FROM customer
+      |)""".stripMargin
+
+  /** [[natBoxesDf]] with each box parsed into `geometry`. */
+  private def natBoxGeoms(s: SparkSession, dir: String): DataFrame =
+    natBoxesDf(s, dir)
+      .withColumn("geometry", st.geomFromText(col("wkt")))
+      .select(col("n_nationkey"), col("geometry"))
+
+  /** Registers the declarative-join inputs: the point layer as `sqlj_pts`
+    * (ck, geometry) and [[natBoxGeoms]] as `sqlj_boxes`.
+    */
+  private def sqlJoinViews(s: SparkSession, dir: String): Unit = {
+    pointsDf(s, dir).select(col("ck"), col("geometry"))
+      .createOrReplaceTempView("sqlj_pts")
+    natBoxGeoms(s, dir).createOrReplaceTempView("sqlj_boxes")
+  }
+
+  /** Oracle rows of [[natBoxesDf]]: each nation box as interval bounds. */
+  private val NationBoxRows =
+    """  SELECT n_nationkey,
+      |         n_nationkey * 3 - 39.5 AS x0, n_nationkey * 3 - 34.5 AS x1,
+      |         n_nationkey * 2 - 29.5 AS y0, n_nationkey * 2 - 25.5 AS y1
+      |  FROM nation""".stripMargin
+
+  /** Oracle CTE `nb` of [[natBoxGeoms]] beside `pts`. */
+  private val NationBoxesCtes = PtsCte + "\n, nb AS (\n" + NationBoxRows + "\n)"
+
   private[graft] val all: Seq[QuerySpec] = Seq(
     // spatial.bbox quirk: WITHIN semantics (SpatialProcedures.java:822-836)
     QuerySpec("sp_bbox_within", (s, dir) =>
@@ -234,11 +417,7 @@ object SpQueries {
     QuerySpec("sp_bbox_intersects", (s, dir) =>
       pointsLayer(s, dir).intersectsWindow(0.5, -10.5, 30.5, 40.5)
         .df.select(col("ck").as("id"), col("x"), col("y")).orderBy(col("id")),
-      (PtsCte +
-        """
-          |SELECT ck AS id, x, y FROM pts
-          |WHERE x >= 0.5 AND x <= 30.5 AND y >= -10.5 AND y <= 40.5
-          |ORDER BY id""".stripMargin)),
+      WindowOracle),
 
     // the space-filling-curve READ paths under the oracle: window → __sfc
     // range/prefix predicates over a curve-clustered stored layer (the
@@ -250,11 +429,7 @@ object SpQueries {
       curveWindowQuery(s, dir, "hilbert", 0.5, -10.5, 30.5, 40.5),
       // identical window semantics: the curve ranges/prefixes only PRUNE the
       // scan, the exact window filter decides membership — per layout
-      (PtsCte +
-        """
-          |SELECT ck AS id, x, y FROM pts
-          |WHERE x >= 0.5 AND x <= 30.5 AND y >= -10.5 AND y <= 40.5
-          |ORDER BY id""".stripMargin)),
+      WindowOracle),
 
     // incremental bucketed layer: write the even-custkey half, PARTIAL-upsert
     // a 5% slice (only the touched curve-bucket directories are rewritten —
@@ -500,17 +675,7 @@ object SpQueries {
       pointsLayer(s, dir).withinDistanceKm(10.5, 20.5, 1500.0)
         .df.select(col("ck").as("id"), round(col("distance"), 3).as("dist_km"))
         .orderBy(col("dist_km"), col("id")),
-      (PtsCte +
-        """
-          |SELECT ck AS id,
-          |       round(acos(least(sin(radians(20.5)) * sin(radians(y))
-          |             + cos(radians(20.5)) * cos(radians(y))
-          |             * cos(radians(x) - radians(10.5)), 1.0)) * 6371, 3) AS dist_km
-          |FROM pts
-          |WHERE acos(least(sin(radians(20.5)) * sin(radians(y))
-          |      + cos(radians(20.5)) * cos(radians(y))
-          |      * cos(radians(x) - radians(10.5)), 1.0)) * 6371 <= 1500.0
-          |ORDER BY dist_km, id""".stripMargin)),
+      BallOracle),
 
     // window-pruned EXACT k-NN (GeoFrame.knnCandidates proves the pruned
     // scan contains the full-scan top-k incl. round-ties) — the oracle stays
@@ -722,9 +887,7 @@ object SpQueries {
           |SELECT min(x) AS minx, min(y) AS miny, max(x) AS maxx, max(y) AS maxy FROM pts""".stripMargin)),
 
     QuerySpec("sp_centroid_nation", (s, dir) =>
-      pointsLayer(s, dir).df
-        .groupBy(col("c_nationkey"))
-        .agg(SpatialAggs.unionAgg(col("geometry")).as("g"))
+      nationUnions(s, dir)
         .select(col("c_nationkey"),
           st.x(st.centroid(col("g"))).as("cx"),
           st.y(st.centroid(col("g"))).as("cy"))
@@ -736,9 +899,7 @@ object SpQueries {
           |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     QuerySpec("sp_envelope_area", (s, dir) =>
-      pointsLayer(s, dir).df
-        .groupBy(col("c_nationkey"))
-        .agg(SpatialAggs.unionAgg(col("geometry")).as("g"))
+      nationUnions(s, dir)
         .select(col("c_nationkey"), st.area(st.envelope(col("g"))).as("env_area"))
         .orderBy(col("c_nationkey")),
       (PtsCte +
@@ -747,9 +908,7 @@ object SpQueries {
           |FROM pts GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     QuerySpec("sp_union_npoints", (s, dir) =>
-      pointsLayer(s, dir).df
-        .groupBy(col("c_nationkey"))
-        .agg(SpatialAggs.unionAgg(col("geometry")).as("g"))
+      nationUnions(s, dir)
         .select(col("c_nationkey"), st.numGeometries(col("g")).cast("long").as("n_pts"))
         .orderBy(col("c_nationkey")),
       (PtsCte +
@@ -834,9 +993,7 @@ object SpQueries {
           |FROM pts WHERE c_nationkey = 0""".stripMargin)),
 
     QuerySpec("sp_convexhull", (s, dir) =>
-      pointsLayer(s, dir).df
-        .groupBy(col("c_nationkey"))
-        .agg(SpatialAggs.unionAgg(col("geometry")).as("g"))
+      nationUnions(s, dir)
         .select(col("c_nationkey"),
           round(st.area(st.convexHull(col("g"))), 6).as("hull_area"),
           st.numPoints(st.convexHull(col("g"))).cast("long").as("hull_pts"))
@@ -1133,10 +1290,7 @@ object SpQueries {
         .filterEcql("BBOX(the_geom, -60.5, -40.5, 60.5, 40.5) AND " +
           "c_acctbal BETWEEN 1000.0 AND 8000.0 AND " +
           "geometryType(the_geom) = 'Point' AND NOT c_nationkey = 7")
-        .df.groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("c_acctbal") * 100).cast("long")).as("cents"))
-        .orderBy(col("c_nationkey")),
+        .df.transform(nationCents),
       (PtsCte +
         """
           |SELECT c_nationkey, count(*) AS n,
@@ -1194,10 +1348,7 @@ object SpQueries {
           "c_nationkey IN (1, 3, 5, 7, 9, 11) AND " +
           "c_acctbal * 2 - 500 > 3000 AND " +
           "c_name NOT LIKE '%19%'")
-        .df.groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("c_acctbal") * 100).cast("long")).as("cents"))
-        .orderBy(col("c_nationkey")),
+        .df.transform(nationCents),
       """SELECT c_nationkey, count(*) AS n,
         |       CAST(sum(round(c_acctbal * 100)) AS BIGINT) AS cents
         |FROM customer
@@ -1262,10 +1413,7 @@ object SpQueries {
         .filterEcql("first_order AFTER 1992-12-31T23:59:59Z AND " +
           "first_order BEFORE OR DURING " +
           "1995-01-01T00:00:00Z/1995-12-31T00:00:00Z")
-        .df.groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("c_acctbal") * 100).cast("long")).as("cents"))
-        .orderBy(col("c_nationkey")),
+        .df.transform(nationCents),
       """WITH fo AS (
         |  SELECT o_custkey AS ck, min(o_orderdate) AS first_order
         |  FROM orders GROUP BY 1
@@ -1291,17 +1439,7 @@ object SpQueries {
         .orderBy(col("dist_km"), col("id")),
       // identical ball to sp_within_distance: DWITHIN 1 500 000 meters must
       // land on the exact same geodesic-kilometer oracle
-      (PtsCte +
-        """
-          |SELECT ck AS id,
-          |       round(acos(least(sin(radians(20.5)) * sin(radians(y))
-          |             + cos(radians(20.5)) * cos(radians(y))
-          |             * cos(radians(x) - radians(10.5)), 1.0)) * 6371, 3) AS dist_km
-          |FROM pts
-          |WHERE acos(least(sin(radians(20.5)) * sin(radians(y))
-          |      + cos(radians(20.5)) * cos(radians(y))
-          |      * cos(radians(x) - radians(10.5)), 1.0)) * 6371 <= 1500.0
-          |ORDER BY dist_km, id""".stripMargin)),
+      BallOracle),
 
     // FilterPropertyNull / FilterPropertyNotNull pipes (reference:
     // FilterPropertyNull.java:28, FilterPropertyNotNull.java:29) — a
@@ -1343,14 +1481,8 @@ object SpQueries {
         .select(col("c_nationkey"),
           st.numPoints(st.densify(col("geometry"), lit(0.7))).cast("long").as("n_dense"))
         .orderBy(col("c_nationkey")),
-      (PtsCte +
+      (SegLengthsCtes +
         """
-          |, segs AS (
-          |  SELECT c_nationkey,
-          |         sqrt((x - lag(x) OVER w) * (x - lag(x) OVER w)
-          |            + (y - lag(y) OVER w) * (y - lag(y) OVER w)) AS seg
-          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-          |)
           |SELECT c_nationkey,
           |       CAST(1 + coalesce(sum(floor(seg / 0.7) + 1), 0) AS BIGINT) AS n_dense
           |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin)),
@@ -1362,13 +1494,8 @@ object SpQueries {
         .select(col("c_nationkey"),
           round(st.orthodromicLengthKm(col("geometry")), 3).as("len_km"))
         .orderBy(col("c_nationkey")),
-      (PtsCte +
+      (PolylineSegsCtes +
         """
-          |, segs AS (
-          |  SELECT c_nationkey,
-          |         lag(x) OVER w AS x1, lag(y) OVER w AS y1, x AS x2, y AS y2
-          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-          |)
           |SELECT c_nationkey,
           |  round(coalesce(sum(acos(least(sin(radians(y1)) * sin(radians(y2))
           |        + cos(radians(y1)) * cos(radians(y2))
@@ -1413,57 +1540,17 @@ object SpQueries {
     // object is ever materialized, so a 100 TB line table interpolates in
     // one windowed scan + a 3-row broadcast of the fraction table
     QuerySpec("sp_line_interpolate", (s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("nk").orderBy("ck")
-      val seg = pointsDf(s, dir)
-        .select(col("c_nationkey").as("nk"), col("ck"), col("x"), col("y"))
-        .withColumn("x2", lead("x", 1).over(w))
-        .withColumn("y2", lead("y", 1).over(w))
-        .filter(col("x2").isNotNull)
-        .withColumn("seglen",
-          sqrt((col("x2") - col("x")) * (col("x2") - col("x"))
-            + (col("y2") - col("y")) * (col("y2") - col("y"))))
-        .withColumn("cum", sum("seglen").over(
-          w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)))
-        .withColumn("cumb", lag("cum", 1, 0.0).over(w))
-        .withColumn("total", max("cum").over(
-          org.apache.spark.sql.expressions.Window.partitionBy("nk")))
+      val seg = nationSegments(s, dir)
       val fr = s.range(1, 4).select((col("id") * 0.25).as("frac"))
-      seg.join(fr)
-        .filter(col("cumb") <= col("frac") * col("total")
-          && col("frac") * col("total") < col("cum"))
-        .select(col("nk"), col("frac"),
-          round(col("x") + (col("x2") - col("x"))
-            * ((col("frac") * col("total") - col("cumb")) / col("seglen")), 6).as("px"),
-          round(col("y") + (col("y2") - col("y"))
-            * ((col("frac") * col("total") - col("cumb")) / col("seglen")), 6).as("py"))
+      cutPoints(seg, fr)
         .orderBy(col("nk"), col("frac"))
     },
       // linear-referencing replay: identical window shapes (running sum in
       // ROWS order = Spark's sequential pass; cumb via lag, total via
       // partition max of the SAME running values) and the identical lerp
       // expression tree, so doubles agree before the round(…, 6)
-      (PtsCte +
-        """
-          |, seg0 AS (
-          |  SELECT c_nationkey AS nk, ck, x, y,
-          |         lead(x) OVER w AS x2, lead(y) OVER w AS y2
-          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-          |), seg1 AS (
-          |  SELECT nk, ck, x, y, x2, y2,
-          |         sqrt((x2 - x) * (x2 - x) + (y2 - y) * (y2 - y)) AS seglen
-          |  FROM seg0 WHERE x2 IS NOT NULL
-          |), cum1 AS (
-          |  SELECT nk, ck, x, y, x2, y2, seglen,
-          |         sum(seglen) OVER (PARTITION BY nk ORDER BY ck
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          |  FROM seg1
-          |), cum2 AS (
-          |  SELECT *, coalesce(lag(cum) OVER (PARTITION BY nk ORDER BY ck), 0.0) AS cumb,
-          |         max(cum) OVER (PARTITION BY nk) AS total
-          |  FROM cum1
-          |), fr AS (SELECT f * 0.25 AS frac FROM range(1, 4) t(f))
+      (NationSegmentsCtes +
+        """, fr AS (SELECT f * 0.25 AS frac FROM range(1, 4) t(f))
           |SELECT nk, frac,
           |       round(x + (x2 - x) * ((frac * total - cumb) / seglen), 6) AS px,
           |       round(y + (y2 - y) * ((frac * total - cumb) / seglen), 6) AS py
@@ -1477,35 +1564,13 @@ object SpQueries {
     // plus the two interpolated cut points, pivoted by conditional max
     // (each guard selects exactly one row, so the aggregate is order-free)
     QuerySpec("sp_line_substring", (s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("nk").orderBy("ck")
-      val seg = pointsDf(s, dir)
-        .select(col("c_nationkey").as("nk"), col("ck"), col("x"), col("y"))
-        .withColumn("x2", lead("x", 1).over(w))
-        .withColumn("y2", lead("y", 1).over(w))
-        .filter(col("x2").isNotNull)
-        .withColumn("seglen",
-          sqrt((col("x2") - col("x")) * (col("x2") - col("x"))
-            + (col("y2") - col("y")) * (col("y2") - col("y"))))
-        .withColumn("cum", sum("seglen").over(
-          w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)))
-        .withColumn("cumb", lag("cum", 1, 0.0).over(w))
-        .withColumn("total", max("cum").over(
-          org.apache.spark.sql.expressions.Window.partitionBy("nk")))
+      val seg = nationSegments(s, dir)
       val interior = seg
         .filter(lit(0.2) * col("total") < col("cum")
           && col("cum") < lit(0.8) * col("total"))
         .groupBy("nk").agg(count(lit(1)).as("n_interior"))
       val fr = s.range(1, 5, 3).select((col("id") * 0.2).as("frac"))
-      val cuts = seg.join(fr)
-        .filter(col("cumb") <= col("frac") * col("total")
-          && col("frac") * col("total") < col("cum"))
-        .select(col("nk"), col("frac"),
-          round(col("x") + (col("x2") - col("x"))
-            * ((col("frac") * col("total") - col("cumb")) / col("seglen")), 6).as("px"),
-          round(col("y") + (col("y2") - col("y"))
-            * ((col("frac") * col("total") - col("cumb")) / col("seglen")), 6).as("py"))
+      val cuts = cutPoints(seg, fr)
         .groupBy("nk").agg(
           max(when(col("frac") < 0.5, col("px"))).as("sx"),
           max(when(col("frac") < 0.5, col("py"))).as("sy"),
@@ -1519,26 +1584,8 @@ object SpQueries {
     },
       // sub-polyline replay on the same window CTEs; the cut-point pivot's
       // conditional max sees exactly one row per guard so it is order-free
-      (PtsCte +
-        """
-          |, seg0 AS (
-          |  SELECT c_nationkey AS nk, ck, x, y,
-          |         lead(x) OVER w AS x2, lead(y) OVER w AS y2
-          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-          |), seg1 AS (
-          |  SELECT nk, ck, x, y, x2, y2,
-          |         sqrt((x2 - x) * (x2 - x) + (y2 - y) * (y2 - y)) AS seglen
-          |  FROM seg0 WHERE x2 IS NOT NULL
-          |), cum1 AS (
-          |  SELECT nk, ck, x, y, x2, y2, seglen,
-          |         sum(seglen) OVER (PARTITION BY nk ORDER BY ck
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          |  FROM seg1
-          |), cum2 AS (
-          |  SELECT *, coalesce(lag(cum) OVER (PARTITION BY nk ORDER BY ck), 0.0) AS cumb,
-          |         max(cum) OVER (PARTITION BY nk) AS total
-          |  FROM cum1
-          |), interior AS (
+      (NationSegmentsCtes +
+        """, interior AS (
           |  SELECT nk, count(*) AS n_interior FROM cum2
           |  WHERE 0.2 * total < cum AND cum < 0.8 * total GROUP BY 1
           |), fr AS (
@@ -1576,10 +1623,7 @@ object SpQueries {
     // to Σn² − 2μΣn + Qμ² over exact integer moments (only the occupied
     // cells are ever materialized — the (Q−k)·μ² empty mass is algebra)
     QuerySpec("sp_quadrat", (s, dir) => {
-      val cells = pointsDf(s, dir).groupBy(
-          floor((col("x") + 180.0) / 10.0).cast("long").as("cx"),
-          floor((col("y") + 90.0) / 10.0).cast("long").as("cy"))
-        .agg(count(lit(1)).as("n"))
+      val cells = gridCells(s, dir)
       val q = 36L * 18L
       cells.agg(count(lit(1)).as("k"), sum("n").as("s1"),
           sum(col("n") * col("n")).as("s2"))
@@ -1593,13 +1637,7 @@ object SpQueries {
     },
       // IDW replay: same centroid division, same d² tree, same (d2, ck) rank
       // tie-break, the same 8 pivoted terms added left-to-right
-      (PtsCte + """
-        |, cells AS (
-        |  SELECT CAST(floor((x + 180.0) / 10.0) AS BIGINT) AS cx,
-        |         CAST(floor((y + 90.0) / 10.0) AS BIGINT) AS cy,
-        |         count(*) AS n
-        |  FROM pts GROUP BY 1, 2
-        |), m AS (
+      (GridCellsCtes + """, m AS (
         |  SELECT count(*) AS k, CAST(sum(n) AS BIGINT) AS s1,
         |         CAST(sum(n*n) AS BIGINT) AS s2
         |  FROM cells
@@ -1617,10 +1655,7 @@ object SpQueries {
     // over ascending cell counts, both moments exact integers (the
     // ev_gini discipline applied to the spatial lattice)
     QuerySpec("sp_gini", (s, dir) => {
-      val cells = pointsDf(s, dir).groupBy(
-          floor((col("x") + 180.0) / 10.0).cast("long").as("cx"),
-          floor((col("y") + 90.0) / 10.0).cast("long").as("cy"))
-        .agg(count(lit(1)).as("n"))
+      val cells = gridCells(s, dir)
       val ranked = cells.withColumn("i",
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("n"), col("cx"), col("cy"))).cast("long"))
@@ -1630,13 +1665,7 @@ object SpQueries {
           round((lit(2L) * col("sixi") - (col("m") + lit(1L)) * col("sx"))
             / (col("m") * col("sx")), 6).as("gini"))
     },
-      (PtsCte + """
-        |, cells AS (
-        |  SELECT CAST(floor((x + 180.0) / 10.0) AS BIGINT) AS cx,
-        |         CAST(floor((y + 90.0) / 10.0) AS BIGINT) AS cy,
-        |         count(*) AS n
-        |  FROM pts GROUP BY 1, 2
-        |), r AS (
+      (GridCellsCtes + """, r AS (
         |  SELECT n, CAST(row_number() OVER (ORDER BY n, cx, cy) AS BIGINT) AS i
         |  FROM cells
         |), m AS (
@@ -1724,10 +1753,7 @@ object SpQueries {
     // any order-dependent sum — I = (N/W)·(P − x̄Q + x̄²W)/(S2 − N·x̄²).
     // One 8-offset keyed self-join, one scalar row out (I and E[I])
     QuerySpec("sp_moran", (s, dir) => {
-      val cells = pointsDf(s, dir).groupBy(
-          floor((col("x") + 180.0) / 10.0).cast("long").as("cx"),
-          floor((col("y") + 90.0) / 10.0).cast("long").as("cy"))
-        .agg(count(lit(1)).as("n"))
+      val cells = gridCells(s, dir)
       val gs = cells.agg(count(lit(1)).as("nn"),
         sum("n").as("s1"), sum(col("n") * col("n")).as("s2"))
       val offs = for { dx <- Seq(-1L, 0L, 1L); dy <- Seq(-1L, 0L, 1L)
@@ -1751,13 +1777,7 @@ object SpQueries {
             (col("s2").cast("double") - nd * xbar * xbar), 6).as("moran_i"),
           round(lit(-1.0) / (nd - 1), 6).as("e_i"))
     },
-      (PtsCte + """
-        |, cells AS (
-        |  SELECT CAST(floor((x + 180.0) / 10.0) AS BIGINT) AS cx,
-        |         CAST(floor((y + 90.0) / 10.0) AS BIGINT) AS cy,
-        |         count(*) AS n
-        |  FROM pts GROUP BY 1, 2
-        |), gs AS (
+      (GridCellsCtes + """, gs AS (
         |  SELECT count(*) AS nn, sum(n) AS s1, sum(n*n) AS s2 FROM cells
         |), nbr AS (
         |  SELECT c.cx + o.dx AS jcx, c.cy + o.dy AS jcy, c.n AS ni
@@ -1791,10 +1811,7 @@ object SpQueries {
     // combine, the neighborhood sum is a 9-way offset explode + keyed
     // self-join (never a spatial cross join), top-15 is a TakeOrdered
     QuerySpec("sp_hotspot", (s, dir) => {
-      val cells = pointsDf(s, dir).groupBy(
-          floor((col("x") + 180.0) / 10.0).cast("long").as("cx"),
-          floor((col("y") + 90.0) / 10.0).cast("long").as("cy"))
-        .agg(count(lit(1)).as("n"))
+      val cells = gridCells(s, dir)
       val glob = cells.agg(count(lit(1)).as("nn"),
         sum("n").as("s1"), sum(col("n") * col("n")).as("s2"))
       val offs = Seq(-1L, 0L, 1L)
@@ -1819,13 +1836,7 @@ object SpQueries {
           round(col("z"), 6).as("gi_z"))
         .orderBy(col("gi_z").desc, col("cx"), col("cy")).limit(15)
     },
-      (PtsCte + """
-        |, cells AS (
-        |  SELECT CAST(floor((x + 180.0) / 10.0) AS BIGINT) AS cx,
-        |         CAST(floor((y + 90.0) / 10.0) AS BIGINT) AS cy,
-        |         count(*) AS n
-        |  FROM pts GROUP BY 1, 2
-        |), gstats AS (
+      (GridCellsCtes + """, gstats AS (
         |  SELECT count(*) AS nn, sum(n) AS s1, sum(n*n) AS s2 FROM cells
         |), contrib AS (
         |  SELECT c.cx + o.dx AS ccx, c.cy + o.dy AS ccy, c.n
@@ -2055,13 +2066,8 @@ object SpQueries {
         .orderBy(col("c_nationkey")),
       // Andoyer-Lambert replay: same segment windows, half-angles averaged in
       // degrees then radians (matches Orthodromic.geodesicKm operation order)
-      (PtsCte +
-        """
-          |, segs AS (
-          |  SELECT c_nationkey,
-          |         lag(x) OVER w AS x1, lag(y) OVER w AS y1, x AS x2, y AS y2
-          |  FROM pts WINDOW w AS (PARTITION BY c_nationkey ORDER BY ck)
-          |), trig AS (
+      (PolylineSegsCtes +
+        """, trig AS (
           |  SELECT c_nationkey,
           |         sin(radians((y1 + y2) / 2)) AS sinf, cos(radians((y1 + y2) / 2)) AS cosf,
           |         sin(radians((y1 - y2) / 2)) AS sing, cos(radians((y1 - y2) / 2)) AS cosg,
@@ -2165,19 +2171,9 @@ object SpQueries {
       import graft.sources.Mvt
       val z = 2
       val scale = (1 << z) * Mvt.Extent      // 16384 global pixels per axis
-      val radius = graft.geom.Mercator.RadiusM
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("nk").orderBy("ck")
-      val verts = T(s, dir, "customer").select(
-          col("c_custkey").as("ck"), col("c_nationkey").as("nk"))
-        .withColumn("x", (col("nk") % 8).cast("double") * 45.0 - 180.0 + 22.5
-          + ((col("ck") % 16).cast("double") - 7.5) * 0.25)
-        .withColumn("y", ((col("nk") * 7) % 6).cast("double") * 20.0 - 60.0 + 10.0
-          + (((col("ck") * 3) % 12).cast("double") - 5.5) * 0.25)
-      val quant = verts
-        .withColumn("gx", floor((col("x") + 180.0) / 360.0 * scale))
-        .withColumn("yn", st.mercatorY(col("y")) / lit(radius) / lit(math.Pi))
-        .withColumn("gy", floor((lit(1.0) - col("yn")) / 2.0 * scale))
+      val quant = mvtPixels(s, dir, scale)
         .select(col("ck"), col("nk"),
           expr(s"gx DIV ${Mvt.Extent}").as("tx"),
           expr(s"gy DIV ${Mvt.Extent}").as("ty"),
@@ -2225,14 +2221,7 @@ object SpQueries {
       // per-tile feature/vertex/coordinate sums. The Spark side additionally
       // roundtrips through the binary MVT codec; equal sums prove the
       // zigzag-delta cursor stream is lossless.
-      """WITH v AS (
-        |  SELECT c_custkey AS ck, c_nationkey AS nk,
-        |         CAST(c_nationkey % 8 AS DOUBLE) * 45 - 180 + 22.5
-        |           + (CAST(c_custkey % 16 AS DOUBLE) - 7.5) * 0.25 AS x,
-        |         CAST((c_nationkey * 7) % 6 AS DOUBLE) * 20 - 60 + 10
-        |           + (CAST((c_custkey * 3) % 12 AS DOUBLE) - 5.5) * 0.25 AS y
-        |  FROM customer
-        |), q AS (
+      MvtVertsCte + """, q AS (
         |  SELECT ck, nk,
         |         CAST(floor((x + 180) / 360 * 16384) AS BIGINT) AS gx,
         |         CAST(floor((1 - ln(tan(pi() / 4 + radians(y) / 2)) * 6378137
@@ -2273,17 +2262,7 @@ object SpQueries {
       import s.implicits._
       import graft.sources.Mvt
       val scale = Mvt.Extent
-      val radius = graft.geom.Mercator.RadiusM
-      val verts = T(s, dir, "customer").select(
-          col("c_custkey").as("ck"), col("c_nationkey").as("nk"))
-        .withColumn("x", (col("nk") % 8).cast("double") * 45.0 - 180.0 + 22.5
-          + ((col("ck") % 16).cast("double") - 7.5) * 0.25)
-        .withColumn("y", ((col("nk") * 7) % 6).cast("double") * 20.0 - 60.0 + 10.0
-          + (((col("ck") * 3) % 12).cast("double") - 5.5) * 0.25)
-      val quant = verts
-        .withColumn("gx", floor((col("x") + 180.0) / 360.0 * scale))
-        .withColumn("yn", st.mercatorY(col("y")) / lit(radius) / lit(math.Pi))
-        .withColumn("gy", floor((lit(1.0) - col("yn")) / 2.0 * scale))
+      val quant = mvtPixels(s, dir, scale)
       val boxes = quant.groupBy(col("nk"))
         .agg(min(col("gx")).as("x0"), max(col("gx")).as("x1"),
           min(col("gy")).as("y0"), max(col("gy")).as("y1"))
@@ -2324,14 +2303,7 @@ object SpQueries {
       // replays the polygon bake arithmetic directly on the per-nation pixel
       // bboxes: area/perimeter/coordinate sums of the 4-corner CW ring the
       // Spark side recovers from the decoded ClosePath command stream
-      """WITH v AS (
-        |  SELECT c_custkey AS ck, c_nationkey AS nk,
-        |         CAST(c_nationkey % 8 AS DOUBLE) * 45 - 180 + 22.5
-        |           + (CAST(c_custkey % 16 AS DOUBLE) - 7.5) * 0.25 AS x,
-        |         CAST((c_nationkey * 7) % 6 AS DOUBLE) * 20 - 60 + 10
-        |           + (CAST((c_custkey * 3) % 12 AS DOUBLE) - 5.5) * 0.25 AS y
-        |  FROM customer
-        |), q AS (
+      MvtVertsCte + """, q AS (
         |  SELECT ck, nk,
         |         CAST(floor((x + 180) / 360 * 4096) AS BIGINT) AS gx,
         |         CAST(floor((1 - ln(tan(pi() / 4 + radians(y) / 2)) * 6378137
@@ -2518,25 +2490,14 @@ object SpQueries {
     // rewrites it to the grid equi-join; results must equal the oracle's
     // interval containment (plan shape pinned by StJoinRuleSpec)
     QuerySpec("sp_sql_join", (s, dir) => {
-      pointsDf(s, dir).select(col("ck"), col("geometry"))
-        .createOrReplaceTempView("sqlj_pts")
-      natBoxesDf(s, dir)
-        .withColumn("geometry", st.geomFromText(col("wkt")))
-        .select(col("n_nationkey"), col("geometry"))
-        .createOrReplaceTempView("sqlj_boxes")
+      sqlJoinViews(s, dir)
       s.sql("""SELECT p.ck AS id, b.n_nationkey AS nk
               |FROM sqlj_pts p JOIN sqlj_boxes b
               |ON st_intersects(p.geometry, b.geometry)
               |ORDER BY id, nk""".stripMargin)
     },
-      (PtsCte +
+      (NationBoxesCtes +
         """
-          |, nb AS (
-          |  SELECT n_nationkey,
-          |         n_nationkey * 3 - 39.5 AS x0, n_nationkey * 3 - 34.5 AS x1,
-          |         n_nationkey * 2 - 29.5 AS y0, n_nationkey * 2 - 25.5 AS y1
-          |  FROM nation
-          |)
           |SELECT ck AS id, n_nationkey AS nk
           |FROM pts, nb
           |WHERE x BETWEEN x0 AND x1 AND y BETWEEN y0 AND y1
@@ -2548,25 +2509,14 @@ object SpQueries {
     // The left-preserving rewrite is the reference's tag-then-keep workflow
     // shape (SpatialProcedures.java:679-718) expressed in SQL.
     QuerySpec("sp_sql_left_join", (s, dir) => {
-      pointsDf(s, dir).select(col("ck"), col("geometry"))
-        .createOrReplaceTempView("sqlj_pts")
-      natBoxesDf(s, dir)
-        .withColumn("geometry", st.geomFromText(col("wkt")))
-        .select(col("n_nationkey"), col("geometry"))
-        .createOrReplaceTempView("sqlj_boxes")
+      sqlJoinViews(s, dir)
       s.sql("""SELECT p.ck AS id, coalesce(b.n_nationkey, -1) AS nk
               |FROM sqlj_pts p LEFT JOIN sqlj_boxes b
               |ON st_intersects(p.geometry, b.geometry)
               |ORDER BY id, nk""".stripMargin)
     },
-      (PtsCte +
+      (NationBoxesCtes +
         """
-          |, nb AS (
-          |  SELECT n_nationkey,
-          |         n_nationkey * 3 - 39.5 AS x0, n_nationkey * 3 - 34.5 AS x1,
-          |         n_nationkey * 2 - 29.5 AS y0, n_nationkey * 2 - 25.5 AS y1
-          |  FROM nation
-          |)
           |SELECT ck AS id, coalesce(n_nationkey, -1) AS nk
           |FROM pts LEFT JOIN nb
           |ON x BETWEEN x0 AND x1 AND y BETWEEN y0 AND y1
@@ -2576,12 +2526,7 @@ object SpQueries {
     // point labeled in/out) — the spatial anti-join is the removeNodes
     // workflow shape; counts pin both sides of the partition
     QuerySpec("sp_sql_anti_join", (s, dir) => {
-      pointsDf(s, dir).select(col("ck"), col("geometry"))
-        .createOrReplaceTempView("sqlj_pts")
-      natBoxesDf(s, dir)
-        .withColumn("geometry", st.geomFromText(col("wkt")))
-        .select(col("n_nationkey"), col("geometry"))
-        .createOrReplaceTempView("sqlj_boxes")
+      sqlJoinViews(s, dir)
       val semi = s.sql(
         """SELECT p.ck AS id, 1 AS covered FROM sqlj_pts p LEFT SEMI JOIN sqlj_boxes b
           |ON st_intersects(p.geometry, b.geometry)""".stripMargin)
@@ -2590,14 +2535,8 @@ object SpQueries {
           |ON st_intersects(p.geometry, b.geometry)""".stripMargin)
       semi.unionByName(anti).orderBy(col("id"))
     },
-      (PtsCte +
+      (NationBoxesCtes +
         """
-          |, nb AS (
-          |  SELECT n_nationkey,
-          |         n_nationkey * 3 - 39.5 AS x0, n_nationkey * 3 - 34.5 AS x1,
-          |         n_nationkey * 2 - 29.5 AS y0, n_nationkey * 2 - 25.5 AS y1
-          |  FROM nation
-          |)
           |SELECT ck AS id,
           |       CASE WHEN EXISTS (SELECT 1 FROM nb
           |                         WHERE x BETWEEN x0 AND x1 AND y BETWEEN y0 AND y1)
@@ -2611,12 +2550,7 @@ object SpQueries {
     // the exact point-to-box distance strictly off the threshold on the
     // half-integer lattice (dx, dy are integers ⇒ dx²+dy² ∈ ℤ vs 33.0625)
     QuerySpec("sp_sql_dwithin", (s, dir) => {
-      pointsDf(s, dir).select(col("ck"), col("geometry"))
-        .createOrReplaceTempView("sqlj_pts")
-      natBoxesDf(s, dir)
-        .withColumn("geometry", st.geomFromText(col("wkt")))
-        .select(col("n_nationkey"), col("geometry"))
-        .createOrReplaceTempView("sqlj_boxes")
+      sqlJoinViews(s, dir)
       s.sql("""SELECT p.ck AS id, b.n_nationkey AS nk
               |FROM sqlj_pts p JOIN sqlj_boxes b
               |ON st_dwithin(p.geometry, b.geometry, CAST(5.75 AS DOUBLE))
@@ -2624,14 +2558,8 @@ object SpQueries {
     },
       // point-to-rectangle distance is closed-form: per-axis overshoot
       // (0 inside the box), then the hypotenuse against the radius
-      (PtsCte +
-        """
-          |, nb AS (
-          |  SELECT n_nationkey,
-          |         n_nationkey * 3 - 39.5 AS x0, n_nationkey * 3 - 34.5 AS x1,
-          |         n_nationkey * 2 - 29.5 AS y0, n_nationkey * 2 - 25.5 AS y1
-          |  FROM nation
-          |), d AS (
+      (NationBoxesCtes +
+        """, d AS (
           |  SELECT ck, n_nationkey,
           |         greatest(x0 - x, x - x1, 0) AS dx,
           |         greatest(y0 - y, y - y1, 0) AS dy
@@ -2648,9 +2576,7 @@ object SpQueries {
       pointsDf(s, dir).filter(col("ck") % 3 === 0)
         .select(col("ck"), col("geometry"))
         .createOrReplaceTempView("sqlj_pts3")
-      natBoxesDf(s, dir)
-        .withColumn("geometry", st.geomFromText(col("wkt")))
-        .select(col("n_nationkey"), col("geometry"))
+      natBoxGeoms(s, dir)
         .unionByName(T(s, dir, "nation").select(
           (col("n_nationkey") + 100).as("n_nationkey"),
           st.geomFromText(concat(lit("POLYGON (("),
@@ -2669,10 +2595,7 @@ object SpQueries {
         """
           |, p3 AS (SELECT * FROM pts WHERE ck % 3 = 0)
           |, nb AS (
-          |  SELECT n_nationkey,
-          |         n_nationkey * 3 - 39.5 AS x0, n_nationkey * 3 - 34.5 AS x1,
-          |         n_nationkey * 2 - 29.5 AS y0, n_nationkey * 2 - 25.5 AS y1
-          |  FROM nation
+          |""".stripMargin + NationBoxRows + """
           |  UNION ALL
           |  SELECT n_nationkey + 100,
           |         n_nationkey * 2 - 50, n_nationkey * 2 - 48,

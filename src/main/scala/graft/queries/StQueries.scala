@@ -138,6 +138,78 @@ object StQueries {
     ()
   }
 
+  /** A fresh gate directory, deleted at exit: the paths of its staged
+    * slab files, its stream checkpoint and its materialized-view store.
+    */
+  private def gateDirs(prefix: String): (String, String, String) = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    d.toFile.deleteOnExit()
+    (d.resolve("in").toString, d.resolve("ckpt").toString, d.resolve("store").toString)
+  }
+
+  /** The slab files under `src` as a file stream, one file per micro-batch
+    * (in staging order), with the schema the staged files carry.
+    */
+  private def replay(s: SparkSession, src: String): DataFrame =
+    s.readStream.schema(s.read.parquet(src).schema)
+      .option("maxFilesPerTrigger", "1").parquet(src)
+
+  /** Starts `out` into the memory table `table` in `mode`, checkpointed at
+    * `ckpt`, until the staged files are consumed.
+    */
+  private def toMemory(out: DataFrame, table: String, mode: String,
+      ckpt: String): org.apache.spark.sql.streaming.StreamingQuery =
+    out.writeStream.format("memory").queryName(table)
+      .outputMode(mode)
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+
+  /** Starts `agg`'s update-mode deltas into the [[mvUpsert]] store `store`,
+    * checkpointed at `ckpt`, until the staged files are consumed.
+    */
+  private def toStore(agg: DataFrame, ckpt: String,
+      store: String): org.apache.spark.sql.streaming.StreamingQuery =
+    agg.writeStream
+      .outputMode("update")
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        mvUpsert(batch, store)
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+
+  /** One side of the stream-stream join gates: the replayed `tpe` events
+    * as (`pre`_user, `pre`_id, `pre`_tev), watermarked `delay` behind.
+    */
+  private def joinSide(s: SparkSession, src: String, tpe: String, pre: String,
+      delay: String): DataFrame =
+    replay(s, src)
+      .filter(col("event_type") === tpe)
+      .select(col("user_id").as(s"${pre}_user"),
+        col("event_id").as(s"${pre}_id"), col("tev").as(s"${pre}_tev"))
+      .withWatermark(s"${pre}_tev", delay)
+
+  /** `events` with `ts` as a microsecond timestamp `tev`, beside `cols`. */
+  private def eventsTev(s: SparkSession, dir: String, cols: String*): DataFrame =
+    T(s, dir, "events")
+      .select(timestamp_micros(expr("ts div 1000")).as("tev") +: cols.map(col): _*)
+
+  /** Event counts `n` per 1-hour window of `t` (its start in epoch seconds,
+    * `hour_start`) and `key`.
+    */
+  private def hourlyCounts(events: DataFrame, t: org.apache.spark.sql.Column,
+      key: String): DataFrame =
+    events.groupBy(window(t, "1 hour"), col(key))
+      .agg(count(lit(1)).as("n"))
+      .select(col("window.start").cast("long").as("hour_start"), col(key), col("n"))
+
+  /** Oracle of `hourlyCounts(events, ts, "event_type")`. */
+  private val HourlyCountsOracle =
+    """SELECT (epoch_ns(ts) // 3600000000000) * 3600 AS hour_start,
+      |       event_type, count(*) AS n
+      |FROM events GROUP BY 1, 2 ORDER BY event_type, hour_start""".stripMargin
+
   private[graft] val all: Seq[QuerySpec] = Seq(
     // deterministic HyperLogLog distinct sketch (p=8) per event_type, both
     // grains (150 distinct users → linear-counting branch; ~2k event ids →
@@ -150,28 +222,18 @@ object StQueries {
     // reuses the BATCH oracle verbatim (Events.kmvDistinctDuckSql)
     QuerySpec("st_stream_kmv", (s, dir) => {
       import s.implicits._
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-kmv")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
+      val (src, ckpt, _) = gateDirs("graft-stream-kmv")
       val ev = T(s, dir, "events")
         .select(col("event_type").as("g"),
           Events.kmvHash(col("user_id")).as("h"))
       val staged0 = stageSlabs(ev, Seq(col("g"), col("h")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+      val stream = replay(s, src)
       val k = 256
-      runGate(s, staged0) {
+      runGate(s, staged0)(toMemory(
         graft.streaming.StreamSketch.kmvStream(
             stream.as[graft.streaming.StreamSketch.KmvRow], k)
-          .toDF()
-          .writeStream.format("memory").queryName("st_stream_kmv_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+          .toDF(),
+        "st_stream_kmv_mem", "append", ckpt))
       s.table("st_stream_kmv_mem")
         .groupBy(col("g"))
         .agg(max(struct(col("ver"), col("n_kept"), col("hk"))).as("m"))
@@ -199,28 +261,16 @@ object StQueries {
     // the event-time sliding window from differential-only to a
     // CORRECTNESS row (the streamed twin of ev_hop)
     QuerySpec("st_stream_hop", (s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-hop")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
+      val (src, ckpt, _) = gateDirs("graft-stream-hop")
       val ev = T(s, dir, "events").select(col("event_type"),
         timestamp_micros(expr("ts div 1000")).as("ets"))
       val staged0 = stageSlabs(ev, Seq(col("ets"), col("event_type")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+      val stream = replay(s, src)
       val agg = stream
         .groupBy(col("event_type"),
           window(col("ets"), "3 hours", "1 hour").as("w"))
         .agg(count(lit(1)).as("n"))
-      runGate(s, staged0) {
-        agg.writeStream
-          .format("memory").queryName("st_stream_hop_mem")
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+      runGate(s, staged0)(toMemory(agg, "st_stream_hop_mem", "complete", ckpt))
       s.table("st_stream_hop_mem")
         .select(col("event_type"),
           expr("unix_timestamp(w.start) div 3600").as("win_start"), col("n"))
@@ -237,28 +287,16 @@ object StQueries {
         |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     QuerySpec("st_stream_cells", (s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-cells")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
+      val (src, ckpt, _) = gateDirs("graft-stream-cells")
       val pts = pointsDf(s, dir).select(col("ck"), col("x"), col("y"), col("c_acctbal"))
       val staged0 = stageSlabs(pts, Seq(col("ck")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+      val stream = replay(s, src)
       val agg = stream
         .groupBy(floor(col("x") / 10.0).cast("int").as("cell_x"),
           floor(col("y") / 10.0).cast("int").as("cell_y"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("c_acctbal") * 100).cast("long")).as("cents"))
-      runGate(s, staged0) {
-        agg.writeStream
-          .format("memory").queryName("st_stream_cells_mem")
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+      runGate(s, staged0)(toMemory(agg, "st_stream_cells_mem", "complete", ckpt))
       s.table("st_stream_cells_mem")
         .orderBy(col("cell_x"), col("cell_y"))
     },
@@ -277,26 +315,14 @@ object StQueries {
     // min(doc_id) and count are merge-order independent, so the microbatch
     // partial states converge to the batch answer by construction
     QuerySpec("st_stream_dedup", (s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-dedup")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
+      val (src, ckpt, _) = gateDirs("graft-stream-dedup")
       val staged0 = stageSlabs(T(s, dir, "documents").select(col("doc_id"), col("text")),
         Seq(col("doc_id")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+      val stream = replay(s, src)
       val agg = stream
         .groupBy(md5(col("text")).as("text_hash"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_dups"))
-      runGate(s, staged0) {
-        agg.writeStream
-          .format("memory").queryName("st_stream_dedup_mem")
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+      runGate(s, staged0)(toMemory(agg, "st_stream_dedup_mem", "complete", ckpt))
       s.table("st_stream_dedup_mem").orderBy(col("text_hash"))
     },
       """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id,
@@ -312,33 +338,14 @@ object StQueries {
     // the delay to bound state (that path is differential-tested in
     // StreamJoinSpec) — same plan, smaller retention
     QuerySpec("st_stream_join", (s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-join")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val staged0 = stageSlabs(T(s, dir, "events")
-          .select(timestamp_micros(expr("ts div 1000")).as("tev"),
-            col("user_id"), col("event_id"), col("event_type")),
+      val (src, ckpt, _) = gateDirs("graft-stream-join")
+      val staged0 = stageSlabs(eventsTev(s, dir, "user_id", "event_id", "event_type"),
         Seq(col("tev"), col("event_id")), 4, src)
-      val staged = s.read.parquet(src)
-      def side(tpe: String, pre: String) =
-        s.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .filter(col("event_type") === tpe)
-          .select(col("user_id").as(s"${pre}_user"),
-            col("event_id").as(s"${pre}_id"), col("tev").as(s"${pre}_tev"))
-          .withWatermark(s"${pre}_tev", "40 days")
+      def side(tpe: String, pre: String) = joinSide(s, src, tpe, pre, "40 days")
       val joined = side("purchase", "p").join(side("click", "c"),
         expr("c_user = p_user AND " +
           "c_tev BETWEEN p_tev - INTERVAL 10 MINUTES AND p_tev"))
-      runGate(s, staged0) {
-        joined.writeStream
-          .format("memory").queryName("st_stream_join_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+      runGate(s, staged0)(toMemory(joined, "st_stream_join_mem", "append", ckpt))
       s.table("st_stream_join_mem")
         .select(col("p_id"), col("c_id"),
           (unix_micros(col("p_tev")) - unix_micros(col("c_tev"))).as("dt_us"))
@@ -367,39 +374,20 @@ object StQueries {
     // BOTH sides' watermarks past every real row, flushing the pending
     // null-side state through the end-of-stream no-data batch.
     QuerySpec("st_stream_outer", (s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-outer")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val base = T(s, dir, "events")
-        .select(timestamp_micros(expr("ts div 1000")).as("tev"),
-          col("user_id"), col("event_id"), col("event_type"))
+      val (src, ckpt, _) = gateDirs("graft-stream-outer")
+      val base = eventsTev(s, dir, "user_id", "event_id", "event_type")
       val sentinels = s.range(0, 2).select(
         timestamp_micros(lit(4102444800000000L)).as("tev"), // 2100-01-01 UTC
         lit(-1L).as("user_id"), (col("id") - 2).as("event_id"),
         when(col("id") === 0, "purchase").otherwise("click").as("event_type"))
       val staged0 = stageSlabs(base.unionByName(sentinels),
         Seq(col("tev"), col("event_id")), 5, src)
-      val staged = s.read.parquet(src)
-      def side(tpe: String, pre: String) =
-        s.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-          .filter(col("event_type") === tpe)
-          .select(col("user_id").as(s"${pre}_user"),
-            col("event_id").as(s"${pre}_id"), col("tev").as(s"${pre}_tev"))
-          .withWatermark(s"${pre}_tev", "10 minutes")
+      def side(tpe: String, pre: String) = joinSide(s, src, tpe, pre, "10 minutes")
       val joined = side("purchase", "p").join(side("click", "c"),
         expr("c_user = p_user AND " +
           "c_tev BETWEEN p_tev - INTERVAL 10 MINUTES AND p_tev"),
         "leftOuter")
-      runGate(s, staged0) {
-        joined.writeStream
-          .format("memory").queryName("st_stream_outer_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+      runGate(s, staged0)(toMemory(joined, "st_stream_outer_mem", "append", ckpt))
       s.table("st_stream_outer_mem")
         .filter(col("p_user") >= 0) // drop the sentinel pair
         .select(col("p_id"), col("c_id"),
@@ -437,10 +425,7 @@ object StQueries {
     // times are minute-quantized against an odd 7199999999 µs delay so no
     // comparison can land on a boundary.
     QuerySpec("st_stream_dedupw", (s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-ddw")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
+      val (src, ckpt, _) = gateDirs("graft-stream-ddw")
       val ev = T(s, dir, "events").select(col("user_id").as("k"),
         col("event_id"), col("ts"),
         timestamp_micros(
@@ -454,18 +439,11 @@ object StQueries {
       val staged0 =
         try { writeSlabFiles(slabs, 1 to 4, src); slabs.count() }
         finally { slabs.unpersist(); () }
-      val staged = s.read.parquet(src)
-      runGate(s, staged0) {
-        s.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
+      runGate(s, staged0)(toMemory(
+        replay(s, src)
           .withWatermark("ets", "7199999999 microseconds")
-          .dropDuplicatesWithinWatermark("k")
-          .writeStream.format("memory").queryName("st_stream_dedupw_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+          .dropDuplicatesWithinWatermark("k"),
+        "st_stream_dedupw_mem", "append", ckpt))
       s.table("st_stream_dedupw_mem")
         .select(col("k").as("user_id"), unix_micros(col("ets")).as("ets_us"))
         .orderBy(col("user_id"), col("ets_us"))
@@ -530,10 +508,7 @@ object StQueries {
     // All queries carry one fixed event time, a far-future sentinel closes
     // the window
     QuerySpec("st_stream_ann", (s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-ann")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
+      val (src, ckpt, _) = gateDirs("graft-stream-ann")
       val emb = T(s, dir, "embeddings")
       val qs = emb.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id"), col("embedding"),
@@ -542,19 +517,12 @@ object StQueries {
       emb.limit(1).select(lit(-1L).as("vec_id"), col("embedding"),
           to_timestamp(lit("2026-01-03 00:00:00")).as("ets"))
         .repartition(1).write.mode("append").parquet(src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      runGate(s, staged0) {
+      val stream = replay(s, src)
+      runGate(s, staged0)(toMemory(
         graft.streaming.StreamAnn
           .annEnrichStream(stream, emb, "vec_id", "embedding", "ets",
-            k = 5, nlist = 16, nprobe = 2)
-          .writeStream.format("memory").queryName("st_stream_ann_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+            k = 5, nlist = 16, nprobe = 2),
+        "st_stream_ann_mem", "append", ckpt))
       s.table("st_stream_ann_mem")
         .filter(col("qid") >= 0)
         .select(col("qid"), col("rank"), col("nid"), col("cosine"))
@@ -574,10 +542,7 @@ object StQueries {
     // admitted-signature LIST. Output: per-doc admission count across its
     // 4 bands (4 ⇒ global survivor)
     QuerySpec("st_stream_simdedup", (s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-simdedup")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
+      val (src, ckpt, _) = gateDirs("graft-stream-simdedup")
       // every-5th-doc subset: the gate checks stateful admission SEMANTICS,
       // and the oracle's sequential greedy walk (a recursive CTE carrying
       // each band's admitted list) is O(band depth²) — the subset keeps the
@@ -586,24 +551,17 @@ object StQueries {
         .filter(col("doc_id") % 5 === 0)
         .select(col("doc_id"), col("text"))
       val staged0 = stageSlabs(docs, Seq(col("doc_id")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+      val stream = replay(s, src)
       val banded = graft.streaming.StreamDedup
         .bandedDocs(stream, "doc_id", "text", maxHamming = 3)
       // idleTimeoutMs = 0 ⇒ NoTimeout: a registered processing-time
       // timeout would keep this AvailableNow replay spinning empty
       // timeout batches forever (see StreamDedup.simhashDedupStream)
-      runGate(s, staged0) {
+      runGate(s, staged0)(toMemory(
         graft.streaming.StreamDedup
           .simhashDedupStream(banded, maxHamming = 3, idleTimeoutMs = 0)
-          .toDF()
-          .writeStream.format("memory").queryName("st_stream_simdedup_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+          .toDF(),
+        "st_stream_simdedup_mem", "append", ckpt))
       s.table("st_stream_simdedup_mem")
         .groupBy(col("id")).agg(count(lit(1)).as("n_adm"))
         .orderBy("id")
@@ -654,10 +612,7 @@ object StQueries {
     // is to advance the final watermark past every real session; values are
     // integer cents in a double so the state-store sums stay exact
     QuerySpec("st_stream_sessions", (s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-sess")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
+      val (src, ckpt, _) = gateDirs("graft-stream-sess")
       val ev = T(s, dir, "events").select(col("user_id"),
         timestamp_micros(expr("ts div 1000")).as("ets"),
         round(col("value") * 100).cast("double").as("value"))
@@ -666,18 +621,11 @@ object StQueries {
         .select(lit(-1L).as("user_id"),
           (col("m") + expr("INTERVAL 2 DAYS")).as("ets"), lit(0.0).as("value"))
       sentinel.repartition(1).write.mode("append").parquet(src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      runGate(s, staged0) {
+      val stream = replay(s, src)
+      runGate(s, staged0)(toMemory(
         graft.streaming.StreamSessions
-          .sessionStream(stream, "user_id", "ets")
-          .writeStream.format("memory").queryName("st_stream_sessions_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+          .sessionStream(stream, "user_id", "ets"),
+        "st_stream_sessions_mem", "append", ckpt))
       s.table("st_stream_sessions_mem")
         .filter(col("user_id") >= 0)
         .select(col("user_id"), unix_micros(col("t_start")).as("t_start_us"),
@@ -706,35 +654,15 @@ object StQueries {
         |ORDER BY user_id, t_start_us""".stripMargin),
 
     QuerySpec("st_stream_hourly", (s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-hourly")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val staged0 = stageSlabs(T(s, dir, "events")
-          .select(timestamp_micros(expr("ts div 1000")).as("tev"),
-            col("event_type")),
+      val (src, ckpt, _) = gateDirs("graft-stream-hourly")
+      val staged0 = stageSlabs(eventsTev(s, dir, "event_type"),
         Seq(col("tev"), col("event_type")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val agg = stream
-        .groupBy(window(col("tev"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").cast("long").as("hour_start"),
-          col("event_type"), col("n"))
-      runGate(s, staged0) {
-        agg.writeStream
-          .format("memory").queryName("st_stream_hourly_mem")
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+      val stream = replay(s, src)
+      val agg = hourlyCounts(stream, col("tev"), "event_type")
+      runGate(s, staged0)(toMemory(agg, "st_stream_hourly_mem", "complete", ckpt))
       s.table("st_stream_hourly_mem").orderBy(col("event_type"), col("hour_start"))
     },
-      """SELECT (epoch_ns(ts) // 3600000000000) * 3600 AS hour_start,
-        |       event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY event_type, hour_start""".stripMargin),
+      HourlyCountsOracle),
 
     // twelfth streaming gate — STREAM-STATIC enrichment join, the one
     // micro-batch execution path no other gate covers: every batch of the
@@ -744,32 +672,15 @@ object StQueries {
     // per-segment counts. Inner join ∧ complete mode ⇒ the batch oracle is
     // the verbatim join + rollup — no watermark bookkeeping to replay.
     QuerySpec("st_stream_enrich", (s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-enrich")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val staged0 = stageSlabs(T(s, dir, "events")
-          .select(timestamp_micros(expr("ts div 1000")).as("tev"),
-            col("user_id")),
+      val (src, ckpt, _) = gateDirs("graft-stream-enrich")
+      val staged0 = stageSlabs(eventsTev(s, dir, "user_id"),
         Seq(col("tev"), col("user_id")), 4, src)
-      val staged = s.read.parquet(src)
       val dim = T(s, dir, "customer")
         .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val agg = stream.join(broadcast(dim), Seq("user_id"))
-        .groupBy(window(col("tev"), "1 hour"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").cast("long").as("hour_start"),
-          col("c_mktsegment"), col("n"))
-      runGate(s, staged0) {
-        agg.writeStream
-          .format("memory").queryName("st_stream_enrich_mem")
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+      val stream = replay(s, src)
+      val agg = hourlyCounts(stream.join(broadcast(dim), Seq("user_id")),
+        col("tev"), "c_mktsegment")
+      runGate(s, staged0)(toMemory(agg, "st_stream_enrich_mem", "complete", ckpt))
       s.table("st_stream_enrich_mem")
         .orderBy(col("c_mktsegment"), col("hour_start"))
     },
@@ -792,42 +703,19 @@ object StQueries {
     // counts. The final snapshot must equal the batch rollup verbatim.
     QuerySpec("st_stream_mv", (s, dir) => {
       import graft.plans.VersionedLayer
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-mv")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val store = d.resolve("store").toString
-      val staged0 = stageSlabs(T(s, dir, "events")
-          .select(timestamp_micros(expr("ts div 1000")).as("tev"),
-            col("event_type")),
+      val (src, ckpt, store) = gateDirs("graft-stream-mv")
+      val staged0 = stageSlabs(eventsTev(s, dir, "event_type"),
         Seq(col("tev"), col("event_type")), 4, src)
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val agg = stream
-        .groupBy(window(col("tev"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").cast("long").as("hour_start"),
-          col("event_type"), col("n"))
-      runGate(s, staged0) {
-        agg.writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            mvUpsert(batch, store)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+      val stream = replay(s, src)
+      val agg = hourlyCounts(stream, col("tev"), "event_type")
+      runGate(s, staged0)(toStore(agg, ckpt, store))
       VersionedLayer.read(s, store, None)
         .select(col("hour_start"), col("event_type"), col("n"))
         .orderBy(col("event_type"), col("hour_start"))
     },
       // the foreachBatch-upsert snapshot ≡ the batch rollup (update-mode
       // deltas carry cumulative counts, so the final merge is the world)
-      """SELECT (epoch_ns(ts) // 3600000000000) * 3600 AS hour_start,
-        |       event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY event_type, hour_start""".stripMargin),
+      HourlyCountsOracle),
 
     // fourteenth streaming gate — CRASH RECOVERY / exactly-once across a
     // restart: the hourly stateful rollup runs
@@ -845,11 +733,7 @@ object StQueries {
     // can only come from checkpointed state — not a recount.
     QuerySpec("st_stream_recover", (s, dir) => {
       import graft.plans.VersionedLayer
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-rec")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
-      val store = d.resolve("store").toString
+      val (src, ckpt, store) = gateDirs("graft-stream-rec")
       val ev = T(s, dir, "events")
         .select(expr("ts div 1000").as("tus"), col("event_type"), col("event_id"))
       val slabs = slabify(ev, Seq(col("tus"), col("event_id")), 6)
@@ -878,27 +762,13 @@ object StQueries {
       def stage(range: Range): Unit =
         writeSlabFiles(slabs.select("tus", "event_type", "slab"), range, src)
       def run(): Unit = {
-        val staged = s.read.parquet(src)
-        val stream = s.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-        val agg = stream
-          .groupBy(window(timestamp_micros(col("tus")), "1 hour"),
-            col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(col("window.start").cast("long").as("hour_start"),
-            col("event_type"), col("n"))
+        val stream = replay(s, src)
+        val agg = hourlyCounts(stream, timestamp_micros(col("tus")), "event_type")
         // both phases resize identically (state width is pinned in the
         // checkpoint at first start; recover must restart at the same one)
         var q0: org.apache.spark.sql.streaming.StreamingQuery = null
         runGate(s, evRows) {
-          q0 = agg.writeStream
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              mvUpsert(batch, store)
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          q0 = toStore(agg, ckpt, store)
           q0
         }
         // deregister fully before the restart run re-opens the checkpoint
@@ -931,9 +801,7 @@ object StQueries {
       // exactly-once across a crash-restart: replaying the uncommitted batch
       // against the rolled-back state version must converge to the same
       // batch rollup a clean run produces — the store snapshot IS the world
-      """SELECT (epoch_ns(ts) // 3600000000000) * 3600 AS hour_start,
-        |       event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY event_type, hour_start""".stripMargin),
+      HourlyCountsOracle),
 
     // tenth streaming gate — LATE / OUT-OF-ORDER arrivals under a REAL
     // watermark (every other gate replays
@@ -948,10 +816,7 @@ object StQueries {
     // the watermark contract, replayed row-for-row by the oracle. A
     // far-future sentinel in the final slab flushes the last windows.
     QuerySpec("st_stream_late", (s, dir) => {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-late")
-      d.toFile.deleteOnExit()
-      val src = d.resolve("in").toString
-      val ckpt = d.resolve("ckpt").toString
+      val (src, ckpt, _) = gateDirs("graft-stream-late")
       val ev = T(s, dir, "events")
         .select(expr("ts div 1000").as("tus"), col("event_type"))
       val mm = ev.agg(min("tus"), max("tus")).head()
@@ -977,24 +842,11 @@ object StQueries {
         .repartition(1).write.mode("append").parquet(src)
       val staged0 = classified.count()
       classified.unpersist()
-      val staged = s.read.parquet(src)
-      val stream = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+      val stream = replay(s, src)
         .select(timestamp_micros(col("tus")).as("tev"), col("event_type"))
         .withWatermark("tev", "2 hours")
-      val agg = stream
-        .groupBy(window(col("tev"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").cast("long").as("hour_start"),
-          col("event_type"), col("n"))
-      runGate(s, staged0, budgetMs = 240000) {
-        agg.writeStream
-          .format("memory").queryName("st_stream_late_mem")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+      val agg = hourlyCounts(stream, col("tev"), "event_type")
+      runGate(s, staged0, budgetMs = 240000)(toMemory(agg, "st_stream_late_mem", "append", ckpt))
       s.table("st_stream_late_mem")
         .filter(col("event_type") =!= "__sentinel")
         .orderBy(col("event_type"), col("hour_start"))

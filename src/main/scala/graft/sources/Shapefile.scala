@@ -109,7 +109,9 @@ object Shapefile {
   }
 
   /** dBase III .dbf: header + fixed-width text fields, all values as strings
-    * (trimmed); deleted rows (0x2A flag) skipped.
+    * (trimmed), one row per record in record order (row i is record i + 1);
+    * a deleted row (0x2A flag) comes back as empty strings, as
+    * `ShapefileV2.readDbfRange` returns it.
     */
   def readDbf(path: String): (Seq[String], Seq[Seq[String]]) = {
     val bytes = Files.readAllBytes(Paths.get(path))
@@ -131,10 +133,11 @@ object Shapefile {
     var rec = 0
     while (rec < numRecords) {
       val recOff = headerLen + rec * recordLen
-      if (recOff + recordLen <= bytes.length && bytes(recOff) != 0x2A) {
+      if (recOff + recordLen <= bytes.length) {
+        val deleted = bytes(recOff) == 0x2A
         var fOff = recOff + 1
         val vals = names.indices.map { i =>
-          val v = new String(bytes, fOff, lengths(i), "ISO-8859-1").trim
+          val v = if (deleted) "" else new String(bytes, fOff, lengths(i), "ISO-8859-1").trim
           fOff += lengths(i)
           v
         }
@@ -156,9 +159,11 @@ object Shapefile {
       val dbf = Paths.get(base + ".dbf")
       if (Files.exists(dbf)) readDbf(dbf.toString) else (Nil, Nil)
     }
-    val data = shapes.zipWithIndex.map { case (r, i) =>
-      val props: Map[String, String] =
-        if (i < rows.size) fieldNames.zip(rows(i)).toMap else Map.empty
+    // pair by record number: readShp drops null shapes, so list
+    // positions drift after one
+    val data = shapes.map { r =>
+      val props = rows.lift(r.recNo - 1).fold(Map.empty[String, String])(
+        vals => fieldNames.zip(vals).toMap)
       (r.recNo.toString, GeomCodec.toWkb(r.geometry), props)
     }
     import spark.implicits._

@@ -26,9 +26,7 @@ class BucketingSpec extends SparkSpec {
     Bucketing.writeBucketed(left, "bspec_left", s"$base/l", 4, "k")
     Bucketing.writeBucketed(right, "bspec_right", s"$base/r", 4, "k2")
 
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       def joined = spark.table("bspec_left")
         .join(spark.table("bspec_right"), col("k") === col("k2"))
       val plan = finalPlan(joined)
@@ -38,9 +36,8 @@ class BucketingSpec extends SparkSpec {
       // Spark 3+ drops the per-bucket sort order from bucketed scans unless
       // the single-file-per-bucket legacy contract is asserted; with it (and
       // writeBucketed's one-file-per-bucket layout) the Sorts vanish too
-      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      val planOrdered = finalPlan(joined)
-      spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
+      val planOrdered = withConf(
+        "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")(finalPlan(joined))
       assert(!planOrdered.contains("Exchange"), s"still shuffles:\n$planOrdered")
       assert(!planOrdered.contains("Sort ["), s"bucketed join still sorts:\n$planOrdered")
       // and the answer is the plain join's
@@ -48,7 +45,6 @@ class BucketingSpec extends SparkSpec {
       val want = (1L to 500L).filter(_ * 4 <= 2000).map(k => (k * 4, s"g${k % 3}")).toSet
       assert(got == want)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.sql("DROP TABLE IF EXISTS bspec_left")
       spark.sql("DROP TABLE IF EXISTS bspec_right")
     }

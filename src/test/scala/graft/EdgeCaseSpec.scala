@@ -82,12 +82,11 @@ class EdgeCaseSpec extends SparkSpec {
     def run() = Dedup.shingleJaccardPairs(docs, "doc_id", "text", 0.3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val viaBroadcast = run()
-    spark.conf.set("spark.graft.dedup.broadcastBytes", "1")
-    try {
+    withConf("spark.graft.dedup.broadcastBytes" -> "1") {
       val viaJoin = run()
       assert(viaJoin == viaBroadcast)
       assert(viaJoin.nonEmpty, "fixture should produce near-dup pairs")
-    } finally spark.conf.unset("spark.graft.dedup.broadcastBytes")
+    }
   }
 
   test("text analysis is null-safe") {

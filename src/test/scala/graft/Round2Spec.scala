@@ -79,9 +79,8 @@ class Round2Spec extends SparkSpec {
     // cover
     pts.createOrReplaceTempView("cap_pts")
     boxes.createOrReplaceTempView("cap_boxes")
-    spark.conf.set("spark.graft.sqlJoin.cellSize", "1.0")
-    spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")
-    try {
+    withConf("spark.graft.sqlJoin.cellSize" -> "1.0",
+        "spark.graft.sqlJoin.broadcastBytes" -> "0") {
       def viaSql(joinType: String) = {
         val q = spark.sql(
           s"""SELECT p.id, b.id FROM cap_pts p $joinType JOIN cap_boxes b
@@ -98,9 +97,6 @@ class Round2Spec extends SparkSpec {
       }
       assert(viaSql("") == viaGrid)
       assert(viaSql("LEFT") == viaGrid + (("p3", null)))
-    } finally {
-      spark.conf.unset("spark.graft.sqlJoin.cellSize")
-      spark.conf.unset("spark.graft.sqlJoin.broadcastBytes")
     }
   }
 

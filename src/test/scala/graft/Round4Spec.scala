@@ -261,9 +261,7 @@ class Round4Spec extends SparkSpec {
   test("STPredicate generates code (no interpreted fallback) and matches interpreted eval") {
     // codegen.fallback=false turns any generated-code compilation failure
     // into a hard error instead of a silent interpreted retry
-    val prev = spark.conf.get("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    withConf("spark.sql.codegen.fallback" -> "false") {
       val poly = graft.geom.GeomCodec.fromWkt("POLYGON((0 0, 10 0, 10 10, 0 10, 0 0))")
       val pts = (0 until 100).map(i => (i.toLong, i % 20 - 5, i % 15 - 3))
         .toDF("id", "px", "py")
@@ -280,6 +278,6 @@ class Round4Spec extends SparkSpec {
         .map(_.getLong(0)).toSet
       assert(viaCodegen == viaDriver)
       assert(viaCodegen.nonEmpty)
-    } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+    }
   }
 }

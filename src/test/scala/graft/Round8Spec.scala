@@ -249,9 +249,9 @@ class Round8Spec extends SparkSpec {
     }
     assert(ex.getMessage.contains("test-over"))
     // guard off => free pass-through even over bound
-    spark.conf.set("spark.graft.assertBoundedWindows", "false")
-    try assert(BoundedWindow(df, 1, "prod-path").count() == 100)
-    finally spark.conf.set("spark.graft.assertBoundedWindows", "true")
+    withConf("spark.graft.assertBoundedWindows" -> "false") {
+      assert(BoundedWindow(df, 1, "prod-path").count() == 100)
+    }
   }
 
   test("PNG encode->decode identity for all five row filters, RGB and RGBA") {

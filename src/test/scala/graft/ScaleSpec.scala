@@ -58,13 +58,11 @@ class ScaleSpec extends SparkSpec {
     // write at 64 files so scan granularity resembles a real table's many
     // row groups (at 4 files a single file IS 25% of the table and pruning
     // evidence is unmeasurable)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "64")
-    try {
+    withConf("spark.sql.shuffle.partitions" -> "64") {
       for (idx <- Seq("hilbert", "zorder", "geohash")) {
         cat.createPointLayer(s"pts_cr_$idx", src, "k", "x", "y", indexType = idx)
       }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     for (idx <- Seq("hilbert", "zorder", "geohash")) {
       val layer = cat.getLayer(s"pts_cr_$idx")
       assert(layer.df.columns.contains("__sfc"), s"$idx: __sfc key must be stored")
@@ -250,8 +248,7 @@ class ScaleSpec extends SparkSpec {
     val cs = SpatialJoin.suggestCellSize(left, boxes)
     assert(cs > 0 && cs <= 100, s"cell size $cs out of range")
     // a right side this small broadcasts: pin the grid
-    spark.conf.set("spark.graft.sqlJoin.broadcastBytes", "0")
-    try {
+    withConf("spark.graft.sqlJoin.broadcastBytes" -> "0") {
       val autoDf = SpatialJoin.join(left, boxes, "intersects")
       val auto = autoDf.collect().map(r => (r.getAs[String]("l_id"), r.getAs[String]("r_id"))).toSet
       // the plan that ran: the grid's nested loops for rows over the cell
@@ -265,7 +262,7 @@ class ScaleSpec extends SparkSpec {
       val bcast = SpatialJoin.broadcastJoin(left, boxes, "intersects")
         .select("l_id", "r_id").as[(String, String)].collect().toSet
       assert(auto.nonEmpty && auto == bcast)
-    } finally spark.conf.unset("spark.graft.sqlJoin.broadcastBytes")
+    }
   }
 
   test("grid join: one oversized row per side among many small ones stays a bounded join") {
@@ -602,14 +599,11 @@ class ScaleSpec extends SparkSpec {
     spark.range(3000).select((col("id") * 100).cast("long").as("k2"),
         (col("id") % 10).as("grp"))
       .write.parquet(s"$dir/dim")
-    val confs = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10GB",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10GB",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val fact = spark.read.parquet(s"$dir/fact")
       val dim = spark.read.parquet(s"$dir/dim").filter(col("grp") === 3)
       val joined = fact.join(dim, col("k") === col("k2"))
@@ -619,9 +613,6 @@ class ScaleSpec extends SparkSpec {
         s"no runtime bloom filter injected:\n$plan")
       // and it is semantically invisible
       assert(rows.length == 300)   // k2 = 100*id, id%10==3, 100*id < 300000
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -1,12 +1,44 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session base: one local SparkSession per suite (lazy). */
-trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSpec.session
+/** Shared session base: one local SparkSession per suite (lazy). A suite
+  * that used it must leave its conf as [[SparkSpec.session]] made it: every
+  * later suite in the JVM plans with the same conf. A suite that does not
+  * fails, and the conf is put back, so the next suite is judged on its own.
+  */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+  private var usedSession = false
+  lazy val spark: SparkSession = { usedSession = true; SparkSpec.session }
   def sqlc = spark
+
+  override def afterAll(): Unit =
+    try {
+      if (usedSession) {
+        val start = SparkSpec.sessionConf
+        val now = spark.conf.getAll
+        val changed = (now.keySet ++ start.keySet).filter(k => now.get(k) != start.get(k))
+        changed.foreach(k => start.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
+        assert(changed.isEmpty,
+          s"${getClass.getSimpleName} left the session conf changed: " +
+            changed.toSeq.sorted.map(k => s"$k = ${now.getOrElse(k, "<unset>")}").mkString(", "))
+      }
+    } finally super.afterAll()
+
+  /** Runs `body` with each key set to its value on the shared session, then
+    * puts every key back as it was: its previous value, or unset if the
+    * session had none.
+    */
+  def withConf[T](settings: (String, String)*)(body: => T): T = {
+    val before = spark.conf.getAll
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally settings.foreach { case (k, _) =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 
   /** Await a streaming query, then guarantee it is FULLY terminated before
     * the test returns: a query still winding down when the JVM/session
@@ -83,13 +115,18 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
+  private lazy val started: (SparkSession, Map[String, String]) = {
     // 4 cores whatever SPARK_GRAFT_CPUS says: the tests' partitioning
     // does not follow the host
     val s = Sessions.local(4)
     // every deliberately-unpartitioned window site runs its
     // BoundedWindow count guard under the test session
     s.conf.set("spark.graft.assertBoundedWindows", "true")
-    s
+    (s, s.conf.getAll)
   }
+
+  lazy val session: SparkSession = started._1
+
+  /** The conf [[session]] starts with. */
+  lazy val sessionConf: Map[String, String] = started._2
 }
